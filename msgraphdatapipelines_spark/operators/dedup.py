@@ -586,49 +586,6 @@ def simhash(
     return sums.select(id_col, F.concat(*bit_strs).alias("simhash"))
 
 
-def simhash_arrays(
-    docs: DataFrame, id_col: str, tokens_col: str, num_bits: int = 16
-) -> DataFrame:
-    """``simhash`` computed ARRAY-NATIVE (r17, r16 VERDICT item 6; guide
-    §2.4 remove shuffles outright): when the per-doc token MULTISET already
-    lives in one array cell (a raw ``split`` — duplicates kept, since
-    SimHash is frequency-weighted), each per-bit signed sum is an
-    ``aggregate`` over the array — a narrow map with ZERO explode and zero
-    doc-keyed shuffle, versus the exploded path's n·tokens-row explode +
-    groupBy.
-
-    The md5 is evaluated ONCE per token into an intermediate md5-hex array
-    (one ``transform``); the 16 per-bit aggregates then only index hex
-    digits of that array's elements.  This sidesteps the md5-CSE concern
-    the r16 disposition recorded: a naive per-bit ``transform`` would
-    re-hash every token 16×, and codegen CSE does not reach across
-    separate aggregate lambdas.
-
-    Bit-identical output: integer sums over the same token multiset in any
-    order, then the identical sign → bit-string construction.
-
-    Precondition (same as ``minhash_signatures_arrays``): ``tokens_col``
-    must be NON-NULL — the exploded path emits no row for a null array."""
-    md5arr = F.transform(F.col(tokens_col), lambda t: F.md5(t))
-    with_md5 = docs.select(F.col(id_col), md5arr.alias("__md5arr"))
-
-    def _bit_sum(b: int):
-        def step(acc, h):
-            hexval = F.instr(F.lit("0123456789abcdef"), F.substring(h, b + 1, 1)) - 1
-            return acc + F.when(hexval % 2 == 1, F.lit(1)).otherwise(F.lit(-1))
-
-        return F.aggregate("__md5arr", F.lit(0), step)
-
-    sums = with_md5.select(
-        F.col(id_col), *[_bit_sum(b).alias(f"s{b}") for b in range(num_bits)]
-    )
-    bit_strs = [
-        F.when(F.col(f"s{b}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for b in range(num_bits)
-    ]
-    return sums.select(id_col, F.concat(*bit_strs).alias("simhash"))
-
-
 _CEIL_EPS = 1e-9  # subtracted before every ceil of a τ·size product: when
 # the exact value is an integer k the IEEE product can land at k+2⁻ⁿ and
 # ceil to k+1 — shortening prefixes / over-tightening bounds and silently

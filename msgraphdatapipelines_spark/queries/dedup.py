@@ -1181,11 +1181,26 @@ def _setsim_max_df() -> int | None:
     9.7e9 at 100× — PERF.md r17 sweep notes), so a deployment sets
     SPARK_GRAFT_SETSIM_MAX_DF to bound the join lane; recall is exact
     either way (the capped lane is oracle-equality-proven on the
-    bigram_capped row)."""
+    bigram_capped row).
+
+    The value is stripped; empty or ≤ 0 means unset (a cap of 0 would
+    route every gram through the fallback), and a non-integer raises a
+    ValueError naming the variable.  On the incremental serve the cap
+    reads the artifact's FROZEN ``__pdf``: grams first seen after the
+    vocab freeze carry df=0 and stay in the join lane until compact."""
     import os
 
-    v = os.environ.get("SPARK_GRAFT_SETSIM_MAX_DF")
-    return int(v) if v else None
+    v = os.environ.get("SPARK_GRAFT_SETSIM_MAX_DF", "").strip()
+    if not v:
+        return None
+    try:
+        cap = int(v)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_SETSIM_MAX_DF must be an integer, got {v!r}"
+        ) from None
+    return cap if cap > 0 else None
+
 
 def _read_forgotten_docs(spark: SparkSession, root: str) -> DataFrame | None:
     """The store's durable erasure manifest — every compact applies it,

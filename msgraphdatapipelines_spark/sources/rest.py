@@ -9,9 +9,12 @@ the run (`:150-162`).
 Spark-first shape: the *cursor walk is inherently sequential*, so the driver
 follows the chain cheaply (fetching only page bodies, or in the DataSource
 variant just discovering page addresses), then hands the heavy work —
-JSON parse, flatten, type conversion — to executors via ``spark.read.json``
-/ ``from_json`` on distributed page payloads.  Fetchers are injectable so
-tests run on local fixture files; the HTTP fetcher covers the live case.
+JSON parse, flatten, type conversion — to executors.  Page bodies the
+driver holds or has spilled to files decode on the JVM with ``from_json``
+(``parse_odata_envelope``); only pages that executors must fetch
+themselves go through the Python ``odata`` DataSource.  Fetchers are
+injectable so tests run on local fixture files; the HTTP fetcher covers
+the live case.
 
 Pushdown contract: ``select``/``filter`` become OData query options exactly
 like the reference (P1/P2) when the server honors them; the engine re-applies
@@ -643,26 +646,30 @@ def read_odata_delta(
 
     Scale switch (r5 VERDICT item 3): an *initial* sync walks the FULL
     collection — the reference's whole-snapshot loop — so past
-    ``datasource_page_threshold`` pages the read routes through the
-    ``odata`` DataSource (``delta=true``): pages ship to executors as
-    partitions, at most one body held per task, never a driver-side list.
-    The driver still walks the remaining chain body-at-a-time (constant
-    memory) to learn the ``@odata.deltaLink`` — the token lives only on
-    the last page.  With ``spill_dir`` set (MUST be cluster-visible
-    storage on a real cluster), each body is spilled to a file during
-    that single walk and the DataSource reads the resulting manifest —
-    every page is fetched exactly ONCE.  Without it, discovery discards
-    the bodies and the DataSource re-walks the chain (every page fetched
-    twice) — fine for fixture files, wasteful for a live 10M-row API.
-    Steady-state delta rounds fit under the threshold and pay neither.
-    The switch requires the default ``file_fetcher`` (an injected fetcher
-    can't ship through DataSource options).
+    ``datasource_page_threshold`` pages the driver stops collecting bodies
+    and walks the remaining chain body-at-a-time (constant memory) to
+    learn the ``@odata.deltaLink`` — the token lives only on the last
+    page.  With ``spill_dir`` set (MUST be cluster-visible storage on a
+    real cluster), each body is spilled to a file during that single walk
+    and the files are read back with ``spark.read.text(wholetext=True)``
+    — every page is fetched exactly ONCE and decoded on the JVM by the
+    same ``parse_odata_envelope`` as the small-sync lane, so a page
+    decodes identically whichever lane it lands on (a mistyped value is
+    NULL in that field, the rest of the record kept).  Without it,
+    discovery discards the bodies and the ``odata`` DataSource
+    (``delta=true``) re-walks the chain, one page per partition (every
+    page fetched twice) — fine for fixture files, wasteful for a live
+    10M-row API; that lane decodes with pyarrow and raises on a mistyped
+    value (see ``ODataReader.read``).  Steady-state delta rounds fit under
+    the threshold and pay neither.  The switch requires the default
+    ``file_fetcher`` (an injected fetcher can't ship through DataSource
+    options).
 
-    Parsing runs on executors on both paths — page bodies parallelize,
-    ``from_json`` (driver path) or the DataSource's Arrow batches decode
-    against the envelope schema extended with the ``@removed`` marker; the
-    cursor walk stays driver-side (the link chain is sequential by
-    protocol).
+    Parsing runs on executors on every lane — ``from_json`` against the
+    envelope schema extended with the ``@removed`` marker (driver-held
+    bodies and spilled files), or the DataSource's Arrow batches (no
+    ``spill_dir``); the cursor walk stays driver-side (the link chain is
+    sequential by protocol).
     """
     start_url = (load_delta_state(state_path) if state_path else None) or first_url
     retry = retry or RetryPolicy()
@@ -677,12 +684,16 @@ def read_odata_delta(
         import os
 
         spilled: list[str] = []
+
+        def spill(body: str) -> None:
+            p = os.path.join(spill_dir, f"delta-page-{len(spilled)}.json")
+            with open(p, "w", encoding="utf-8") as f:
+                f.write(body)
+            spilled.append(p)
+
         if spill_dir:
-            for i, body in enumerate(pages):
-                p = os.path.join(spill_dir, f"delta-page-{i}.json")
-                with open(p, "w", encoding="utf-8") as f:
-                    f.write(body)
-                spilled.append(p)
+            for body in pages:
+                spill(body)
         url: str | None = last_next
         while url:
             body = retry.run(lambda u=url: fetcher(u), sleeper)
@@ -690,21 +701,14 @@ def read_odata_delta(
             delta_link = doc.get(DELTA_LINK, delta_link)
             url = doc.get(NEXT_LINK)
             if spill_dir:
-                p = os.path.join(spill_dir, f"delta-page-{len(spilled)}.json")
-                with open(p, "w", encoding="utf-8") as f:
-                    f.write(body)
-                spilled.append(p)
+                spill(body)
+        if spill_dir:
+            raw = spark.read.text(spilled, wholetext=True).withColumnRenamed("value", "body")
+            return parse_odata_envelope(raw, schema, removed_col), delta_link
         register_odata_source(spark)
         plus = T.StructType(list(schema.fields) + [T.StructField(removed_col, T.BooleanType())])
-        reader = (
-            spark.read.format("odata").schema(plus).option("path", start_url).option("delta", "true")
-        )
-        if spill_dir:
-            manifest = os.path.join(spill_dir, "delta-pages.manifest")
-            with open(manifest, "w", encoding="utf-8") as f:
-                f.write("\n".join(spilled))
-            reader = reader.option("pages_manifest", manifest)
-        return reader.load(), delta_link
+        reader = spark.read.format("odata").schema(plus).option("path", start_url)
+        return reader.option("delta", "true").load(), delta_link
     if last_next is not None:  # custom fetcher or no DataSource API: finish driver-side
         more, dl2 = fetch_delta_pages(last_next, fetcher, retry, sleeper)
         pages += more
@@ -763,8 +767,11 @@ def read_odata_page_stream(
     per micro-batch — page-boundary-faithful, and the knob to slow a
     backfill replay down to production cadence.  In this replay model
     file DISCOVERY is the pagination: the nextLink chain ordered the
-    files at staging time (``read_odata_delta``'s ``spill_dir`` writes
-    exactly this layout), so the link fields themselves are not re-walked.
+    files at staging time, so the link fields themselves are not
+    re-walked.  ``read_odata_delta``'s ``spill_dir`` holds exactly this
+    layout (one ``delta-page-<i>.json`` body per page, written in chain
+    order on the scale lane), and that lane's batch read-back decodes the
+    files with the same ``parse_odata_envelope`` this stream uses.
 
     Returns a streaming DataFrame (schema = entity fields + tombstone
     flag) composable with any downstream streaming operator — watermarked
@@ -1007,14 +1014,6 @@ try:  # pragma: no cover - exercised in tests when the API exists
             self.options = options
 
         def partitions(self):
-            manifest = self.options.get("pages_manifest")
-            if manifest:
-                # pre-fetched spill files (read_odata_delta's single-fetch
-                # walk): one partition per page file, zero fetches here.
-                # The manifest and its files must be cluster-visible.
-                with open(manifest, encoding="utf-8") as f:
-                    paths = [ln for ln in f.read().splitlines() if ln]
-                return [_PagePartition(p, path=p) for p in paths]
             # r11 (r10 VERDICT item 9): PAGE-RANGE PLANNER — when the
             # endpoint supports skip paging ($skip/$top, expressed as a
             # URL template with {skip}/{top} holes) the driver does ONE
@@ -1112,9 +1111,14 @@ try:  # pragma: no cover - exercised in tests when the API exists
             """Yield one ``pyarrow.RecordBatch`` per page (Spark 4 Arrow
             path — the batch crosses into the JVM without per-row pickling,
             removing the last row-at-a-time Python from ingest; r5 VERDICT
-            item 4).  Falls back to per-row tuples only when the page's
-            JSON values don't coerce to the declared Arrow schema (e.g. a
-            type the server sent doesn't match), keeping behavior identical.
+            item 4).  Falls back to per-row tuples when the page's JSON
+            values don't coerce to the declared Arrow schema.  That
+            fallback does NOT match the ``from_json`` lanes: a mistyped
+            value (``"yes"`` for a BooleanType field) is NULL in that field
+            under ``parse_odata_envelope``, but here it raises in the
+            Python worker and fails the read.  A known divergence of the
+            no-``spill_dir`` scale lane of ``read_odata_delta`` and of
+            ``read_odata``'s DataSource lanes.
 
             ``delta=true`` (r5 VERDICT item 3): the LAST schema field is a
             boolean tombstone flag populated from the record's ``@removed``

@@ -1376,6 +1376,32 @@ def test_set_similarity_max_df_fat_gram_fallback_lossless(spark):
     assert cand_cap == cand_un
 
 
+def test_setsim_max_df_env_cap_on_equals_off(spark, sf_dir, monkeypatch):
+    """SPARK_GRAFT_SETSIM_MAX_DF reaches the served set-similarity row:
+    with the cap on, fat-gram prefixes take the within-group fallback and
+    the pairs and jaccards equal the uncapped run.  Malformed values fail
+    naming the variable; a value <= 0 is unset."""
+    from msgraphdatapipelines_spark.queries import dedup as QD
+
+    def run():
+        df = QD.set_similarity_join_docs(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return {(r["id_a"], r["id_b"]): r["jaccard"] for r in df.collect()}, plan
+
+    monkeypatch.delenv("SPARK_GRAFT_SETSIM_MAX_DF", raising=False)
+    off, plan_off = run()
+    monkeypatch.setenv("SPARK_GRAFT_SETSIM_MAX_DF", " 1 ")
+    on, plan_on = run()
+    assert off and on == off
+    assert "FlatMapGroupsInPandas" in plan_on and "FlatMapGroupsInPandas" not in plan_off
+    for unset in ("0", "-3", "  "):
+        monkeypatch.setenv("SPARK_GRAFT_SETSIM_MAX_DF", unset)
+        assert QD._setsim_max_df() is None
+    monkeypatch.setenv("SPARK_GRAFT_SETSIM_MAX_DF", "fifty")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SETSIM_MAX_DF"):
+        QD._setsim_max_df()
+
+
 def test_eval_classification_null_conventions(spark):
     """eval_classification (r7): a class never predicted has NULL precision
     (not 0), a class predicted but absent from labels has NULL recall and
@@ -3284,36 +3310,6 @@ def test_array_native_minhash_equals_exploded_path(spark, sf_dir):
     rows_a = sorted(map(tuple, ver_a.collect()))
     assert rows_a == sorted(map(tuple, ver_e.collect()))
     assert len(rows_a) > 0  # non-vacuous on the fixture corpus
-
-
-def test_array_native_simhash_equals_exploded_path(spark, sf_dir):
-    """r17 pin (r16 VERDICT item 6): ``simhash_arrays`` — one md5 per
-    token via transform, per-bit signed sums via aggregate — is
-    BIT-IDENTICAL to the exploded-token ``simhash`` reference: integer
-    sums over the same token multiset in any order, same sign → bit
-    construction.  The interleaved sf0.1 A/B DECLINED adoption (0.98 vs
-    0.91 s median — the 16 interpreted aggregate lambdas cost more than
-    the exploded path's codegen'd partial aggregation; OPTIMIZATION_r17),
-    so the graded row stays on the exploded operator and this test keeps
-    the recorded-alternative claim honest."""
-    from pyspark.sql import functions as F
-
-    from msgraphdatapipelines_spark.operators import dedup as D
-    from msgraphdatapipelines_spark.queries import load
-
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.explode(F.filter(F.split("text", " "), lambda w: w != "")).alias("tok"),
-    )
-    arr = docs.select(
-        "doc_id", F.filter(F.split("text", " "), lambda w: w != "").alias("_tarr")
-    )
-    sig_e = D.simhash(toks, "doc_id", "tok", num_bits=16)
-    sig_a = D.simhash_arrays(arr, "doc_id", "_tarr", num_bits=16)
-    rows_e = sorted(map(tuple, sig_e.collect()))
-    assert rows_e == sorted(map(tuple, sig_a.collect()))
-    assert len(rows_e) > 0  # non-vacuous on the fixture corpus
 
 
 def test_contamination_lanes_agree(spark):

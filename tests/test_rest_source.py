@@ -629,6 +629,102 @@ def test_delta_scale_path_single_fetch_with_spill_dir(spark, tmp_path, monkeypat
     assert sorted(calls) == sorted(str(p) for p in paths)
 
 
+DEVICE = T.StructType(
+    [
+        T.StructField("id", T.StringType()),
+        T.StructField("azureADRegistered", T.BooleanType()),
+        T.StructField("errorCount", T.LongType()),
+        T.StructField(
+            "hardwareInformation",
+            T.StructType(
+                [
+                    T.StructField("serialNumber", T.StringType()),
+                    T.StructField("totalStorageSpaceInBytes", T.LongType()),
+                ]
+            ),
+        ),
+        T.StructField(
+            "deviceActionResults",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("actionName", T.StringType()),
+                        T.StructField("actionState", T.StringType()),
+                    ]
+                )
+            ),
+        ),
+    ]
+)
+
+
+def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
+    """A page decodes the same way whichever lane of ``read_odata_delta``
+    it lands on: the spilled-file scale lane (past the page threshold,
+    ``spill_dir`` set) and the driver lane both run ``from_json``, so
+    tombstones, nested structs, arrays of structs, undeclared and missing
+    properties, empty pages and mistyped values (NULL in that field, the
+    rest of the record kept) come out as the same rows."""
+    hw = {"serialNumber": "SN1", "totalStorageSpaceInBytes": 512}
+    actions = [{"actionName": "sync", "actionState": "done", "extra": 1}]
+    page_values = [
+        [
+            {"id": "d1", "azureADRegistered": True, "errorCount": 0,
+             "hardwareInformation": hw, "deviceActionResults": actions},
+            # undeclared property dropped, missing properties NULL
+            {"id": "d2", "azureADRegistered": False, "undeclared": "x"},
+        ],
+        [],  # an empty page
+        [
+            {"id": "gone", "@removed": {"reason": "deleted"}},
+            {"id": "d3", "azureADRegistered": "yes", "errorCount": 3},
+        ],
+        [{"id": "d4", "azureADRegistered": True, "errorCount": "seven",
+          "hardwareInformation": {"serialNumber": "SN4"}}],
+        [{"id": "d5", "deviceActionResults": []}],
+    ]
+    paths = [tmp_path / f"dev{i}.json" for i in range(len(page_values))]
+    for i, (p, value) in enumerate(zip(paths, page_values)):
+        body = {"value": value}
+        if i < len(paths) - 1:
+            body["@odata.nextLink"] = str(paths[i + 1])
+        else:
+            body["@odata.deltaLink"] = "tok-devices"
+        p.write_text(json.dumps(body))
+    expected = {
+        "d1": ("d1", True, 0, {"serialNumber": "SN1", "totalStorageSpaceInBytes": 512},
+               [{"actionName": "sync", "actionState": "done"}], False),
+        "d2": ("d2", False, None, None, None, False),
+        "gone": ("gone", None, None, None, None, True),
+        "d3": ("d3", None, 3, None, None, False),
+        "d4": ("d4", True, None, {"serialNumber": "SN4", "totalStorageSpaceInBytes": None},
+               None, False),
+        "d5": ("d5", None, None, None, [], False),
+    }
+    names = [f.name for f in DEVICE.fields] + ["_removed"]
+
+    def rows(df):
+        out = {}
+        for r in df.collect():
+            d = r.asDict(recursive=True)
+            out[d["id"]] = tuple(d[n] for n in names)
+        return out
+
+    spill = tmp_path / "spill"
+    spill.mkdir()
+    spilled, link = rest.read_odata_delta(
+        spark, str(paths[0]), DEVICE, datasource_page_threshold=2, spill_dir=str(spill)
+    )
+    plan = spilled._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan text" in plan and "BatchScan odata" not in plan
+    assert rows(spilled) == expected and link == "tok-devices"
+
+    held, link2 = rest.read_odata_delta(
+        spark, str(paths[0]), DEVICE, datasource_page_threshold=100
+    )
+    assert rows(held) == expected and link2 == "tok-devices"
+
+
 def test_429_honors_retry_after_hint():
     """r6: a ThrottledError carrying the server's Retry-After sleeps that
     many seconds (capped) instead of the fixed policy interval; hint-less
