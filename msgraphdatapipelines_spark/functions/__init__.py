@@ -6,27 +6,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity of two float-array columns, JVM-side.
-
-    ``zip_with`` + ``aggregate`` keeps the whole computation in codegen —
-    no Arrow transfer, no Python — so a 100 TB cross-score is bounded by
-    scan + shuffle, not serde.
-    """
-    a, b = F.col(a) if isinstance(a, str) else a, F.col(b) if isinstance(b, str) else b
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
-def l2_normalize(vec: Column | str) -> Column:
-    """Normalize a float-array column to unit L2 norm (NULL-safe)."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    return F.transform(v, lambda x: x / norm)
-
-
 def char_shingles(text: Column | str, k: int = 5) -> Column:
     """Distinct character k-shingles of a string column, as an array.
 
@@ -37,8 +16,3 @@ def char_shingles(text: Column | str, k: int = 5) -> Column:
     n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
     return F.array_distinct(F.transform(F.sequence(F.lit(1), n), lambda i: t.substr(i, F.lit(k))))
 
-
-def word_tokens(text: Column | str) -> Column:
-    """Whitespace tokenization with empty-token removal."""
-    t = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(t, r"\s+"), lambda w: w != "")

@@ -18,10 +18,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-
-
 def num_exchanges(df: DataFrame) -> int:
     """Count shuffle boundaries (Exchange operators, minus reused ones)."""
     plan = physical_plan(df)
@@ -47,11 +43,6 @@ def scan_columns(df: DataFrame) -> list[list[str]]:
         cols = [c.split("#")[0].strip() for c in m.group(1).split(",") if c.strip()]
         scans.append(cols)
     return scans
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Distinct whole-stage-codegen spans (wider is better — fewer breaks)."""
-    return len(set(re.findall(r"\*\((\d+)\)", physical_plan(df))))
 
 
 def _walk(node):

@@ -172,20 +172,26 @@ def load_spread(
     import os as _os
 
     df = load(spark, sf_dir, name)
+    path = _os.path.join(sf_dir, f"{name}.parquet")
     try:
-        sz = _os.path.getsize(_os.path.join(sf_dir, f"{name}.parquet"))
+        st = _os.stat(path)
     except OSError:
         return df  # non-local fixture layout: let the scan decide
     max_pb = int(
         spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     )
     par = spark.sparkContext.defaultParallelism
-    if -(-sz // max_pb) >= par:
+    if -(-st.st_size // max_pb) >= par:
         return df
     # r17: the repartition plan is memoized alongside the scan (same
     # contract as _SCAN_MEMO above); max_pb/par key the entry so a conf
-    # change re-decides the floor (the plan pin test flips maxPartitionBytes)
-    memo_key = ("spread", _app_id(spark), _os.path.abspath(sf_dir), name, key, max_pb, par)
+    # change re-decides the floor (the plan pin test flips maxPartitionBytes),
+    # and the file identity `load` keys on makes a replaced file re-plan
+    # instead of serving the old scan's reused shuffle output
+    memo_key = (
+        "spread", _app_id(spark), _os.path.abspath(path), st.st_size, st.st_mtime_ns,
+        key, max_pb, par,
+    )
     return _memo_scan(memo_key, lambda: df.repartition(par, key))
 
 

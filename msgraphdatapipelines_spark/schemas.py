@@ -226,21 +226,3 @@ LATEST_EVENT_TARGET = T.StructType(
         T.StructField("k", T.LongType()),
     ]
 )
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_tables(spark, sf_dir: str, names=TESTDATA_TABLES):
-    """Load the driver parquet tables as a dict of DataFrames."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -68,11 +68,6 @@ def get_spark(
     return b.getOrCreate()
 
 
-def testdata_dir(sf: str = "0.001") -> str:
-    """Path of the driver-generated parquet tables for a scale factor."""
-    return os.environ.get("SPARK_GRAFT_SF_DIR", f"/root/testdata/sf{sf}")
-
-
 def scale_conf(
     input_bytes: int,
     executor_mem_bytes: int = 8 << 30,

@@ -7,14 +7,14 @@ a sleep budget (`:138-148`), and skip a failing endpoint without aborting
 the run (`:150-162`).
 
 Spark-first shape: the *cursor walk is inherently sequential*, so the driver
-follows the chain cheaply (fetching only page bodies, or in the DataSource
-variant just discovering page addresses), then hands the heavy work —
-JSON parse, flatten, type conversion — to executors.  Page bodies the
-driver holds or has spilled to files decode on the JVM with ``from_json``
-(``parse_odata_envelope``); only pages that executors must fetch
-themselves go through the Python ``odata`` DataSource.  Fetchers are
-injectable so tests run on local fixture files; the HTTP fetcher covers
-the live case.
+follows the chain (fetching only page bodies), then hands the heavy work —
+JSON parse, flatten, type conversion — to executors.  Every page body,
+whether the driver holds it, spilled it to a file, or an executor fetched
+it, decodes on the JVM with the one ``from_json`` decode,
+``parse_odata_envelope``.  The Python ``odata`` DataSource does only what
+the driver cannot: fetch skip-paged page ranges in parallel on executors.
+Fetchers are injectable so tests run on local fixture files; the HTTP
+fetcher covers the live case.
 
 Pushdown contract: ``select``/``filter`` become OData query options exactly
 like the reference (P1/P2) when the server honors them; the engine re-applies
@@ -24,12 +24,13 @@ correct results (same superset-tolerance as the reference's DataTable copy).
 
 from __future__ import annotations
 
+import itertools
 import json
 import re
 import time
 import urllib.parse
 import urllib.request
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -406,6 +407,23 @@ class TokenProvider:
         self._token = None
 
 
+def _walk_pages(
+    first_url: str,
+    fetcher: Callable[[str], str],
+    retry: RetryPolicy | None,
+    sleeper: Callable[[float], None],
+):
+    """Follow the ``@odata.nextLink`` chain from ``first_url``, yielding
+    ``(body, parsed body)`` per page, each fetched once under ``retry``."""
+    retry = retry or RetryPolicy()
+    url: str | None = first_url
+    while url:
+        body = retry.run(lambda u=url: fetcher(u), sleeper)
+        doc = json.loads(body)
+        yield body, doc
+        url = doc.get(NEXT_LINK)
+
+
 def fetch_pages(
     first_url: str,
     fetcher: Callable[[str], str] = file_fetcher,
@@ -415,14 +433,8 @@ def fetch_pages(
 ) -> list[str]:
     """Walk the ``@odata.nextLink`` cursor chain (S2), returning raw page
     bodies.  Sequential by protocol design; each body is small (one page)."""
-    retry = retry or RetryPolicy()
-    pages: list[str] = []
-    url: str | None = first_url
-    while url and len(pages) < max_pages:
-        body = retry.run(lambda u=url: fetcher(u), sleeper)
-        pages.append(body)
-        url = json.loads(body).get(NEXT_LINK)
-    return pages
+    walk = _walk_pages(first_url, fetcher, retry, sleeper)
+    return [body for body, _ in itertools.islice(walk, max_pages)]
 
 
 def read_odata(
@@ -434,7 +446,6 @@ def read_odata(
     fetcher: Callable[[str], str] = file_fetcher,
     retry: RetryPolicy | None = None,
     sleeper: Callable[[float], None] = time.sleep,
-    datasource_page_threshold: int = 64,
     expand: str | None = None,
     orderby: str | None = None,
     top: int | None = None,
@@ -452,8 +463,12 @@ def read_odata(
     ready for dot-access or explode downstream.
 
     Driver walks the cursor (S2, with S4 retry); executors parse: page
-    bodies are parallelized and decoded with ``from_json`` against the
-    envelope schema (S3), then the ``value`` array explodes to records.
+    bodies are parallelized and decoded by ``parse_odata_envelope`` (S3,
+    ``from_json``: a mistyped value is NULL in that field), then the
+    ``value`` array explodes to records.  With ``skip_url_template`` and
+    ``page_size`` (and the default fetcher) the driver walks nothing:
+    the ``odata`` DataSource plans page ranges from one count probe and
+    executors fetch them in parallel, feeding the same decode.
     ``select``/``filter_expr`` are applied as real Column ops — when the
     source honored the OData options they are no-ops Catalyst prunes.
     ``orderby``/``top`` follow the same contract: emitted as $orderby/$top
@@ -462,17 +477,11 @@ def read_odata(
     global sort materialization), so a server that ignored the options
     still yields the right rows at scan cost.
 
-    Driver-memory bound: this path materializes every page body in a
+    Driver-memory bound: the cursor walk holds every page body in a
     driver-side list before ``createDataFrame`` — fine for reference-scale
-    collections (thousands of rows), wrong for a 10M-row collection.  When
-    the walk exceeds ``datasource_page_threshold`` pages and the runtime
-    has the Python DataSource API, the read switches to the ``odata``
-    DataSource (the scale path: pages ship to executors as partitions,
-    at most one body held per task).  The switch requires the default
-    ``file_fetcher`` (an injected fetcher can't be shipped through
-    DataSource options); custom fetchers keep the driver path.
+    collections (thousands of rows).  Collections too large for that need
+    the skip-paged range fetch.
     """
-    url = build_url(first_url, select, filter_expr, expand, orderby, top)
     if (
         fetcher is file_fetcher
         and HAS_PYTHON_DATASOURCE
@@ -485,8 +494,6 @@ def read_odata(
         register_odata_source(spark)
         reader = (
             spark.read.format("odata")
-            .schema(schema)
-            .option("path", first_url)
             .option("skip_url_template", skip_url_template)
             .option("page_size", str(page_size))
         )
@@ -505,35 +512,19 @@ def read_odata(
             reader = reader.option("max_concurrent_fetch", str(max_concurrent_fetch))
         if throttle_dir:
             reader = reader.option("throttle_dir", throttle_dir)
-        return _apply_client_side(reader.load(), select, filter_expr, expand, orderby, top)
-    if fetcher is file_fetcher and HAS_PYTHON_DATASOURCE:
-        probe = fetch_pages(url, fetcher, retry, sleeper, max_pages=datasource_page_threshold)
-        last_next = json.loads(probe[-1]).get(NEXT_LINK) if probe else None
-        if last_next is not None:  # more pages than the threshold → scale path
-            register_odata_source(spark)
-            reader = spark.read.format("odata").schema(schema).option("path", first_url)
-            if select:
-                reader = reader.option("select", ",".join(select))
-            if filter_expr:
-                reader = reader.option("filter", filter_expr)
-            if expand:  # P3 rides the scale path too (r2 VERDICT item 3)
-                reader = reader.option("expand", expand)
-            if orderby:
-                reader = reader.option("orderby", orderby)
-            if top is not None:
-                reader = reader.option("top", str(top))
-            return _apply_client_side(reader.load(), select, filter_expr, expand, orderby, top)
-        pages = probe
+        bodies = reader.load()
     else:
-        pages = fetch_pages(url, fetcher, retry, sleeper)
-    envelope = T.StructType([T.StructField(VALUE, T.ArrayType(schema))])
-    df = (
-        spark.createDataFrame([(p,) for p in pages], "body string")
-        .repartition(max(1, min(len(pages), spark.sparkContext.defaultParallelism)))
-        .select(F.explode(F.from_json("body", envelope).getField(VALUE)).alias("rec"))
-        .select("rec.*")
-    )
+        url = build_url(first_url, select, filter_expr, expand, orderby, top)
+        bodies = _driver_bodies(spark, fetch_pages(url, fetcher, retry, sleeper))
+    df = parse_odata_envelope(bodies, schema).drop("_removed")
     return _apply_client_side(df, select, filter_expr, expand, orderby, top)
+
+
+def _driver_bodies(spark: SparkSession, pages: list[str]) -> DataFrame:
+    """Driver-held page bodies as a ``body`` column spread over the slots."""
+    return spark.createDataFrame([(p,) for p in pages], "body string").repartition(
+        max(1, min(len(pages), spark.sparkContext.defaultParallelism))
+    )
 
 
 def _apply_client_side(
@@ -569,16 +560,12 @@ def fetch_delta_pages(
     """Walk a delta-query cursor chain: like ``fetch_pages`` but the final
     page carries ``@odata.deltaLink`` — the resume token for the NEXT sync
     round — instead of a nextLink.  Returns (page bodies, delta link)."""
-    retry = retry or RetryPolicy()
     pages: list[str] = []
-    url: str | None = first_url
     delta_link: str | None = None
-    while url and len(pages) < max_pages:
-        body = retry.run(lambda u=url: fetcher(u), sleeper)
+    walk = _walk_pages(first_url, fetcher, retry, sleeper)
+    for body, doc in itertools.islice(walk, max_pages):
         pages.append(body)
-        doc = json.loads(body)
         delta_link = doc.get(DELTA_LINK, delta_link)
-        url = doc.get(NEXT_LINK)
     return pages, delta_link
 
 
@@ -645,82 +632,49 @@ def read_odata_delta(
     (``streaming.delta_sync_stream`` sequences this correctly).
 
     Scale switch (r5 VERDICT item 3): an *initial* sync walks the FULL
-    collection — the reference's whole-snapshot loop — so past
-    ``datasource_page_threshold`` pages the driver stops collecting bodies
-    and walks the remaining chain body-at-a-time (constant memory) to
-    learn the ``@odata.deltaLink`` — the token lives only on the last
-    page.  With ``spill_dir`` set (MUST be cluster-visible storage on a
-    real cluster), each body is spilled to a file during that single walk
-    and the files are read back with ``spark.read.text(wholetext=True)``
-    — every page is fetched exactly ONCE and decoded on the JVM by the
-    same ``parse_odata_envelope`` as the small-sync lane, so a page
-    decodes identically whichever lane it lands on (a mistyped value is
-    NULL in that field, the rest of the record kept).  Without it,
-    discovery discards the bodies and the ``odata`` DataSource
-    (``delta=true``) re-walks the chain, one page per partition (every
-    page fetched twice) — fine for fixture files, wasteful for a live
-    10M-row API; that lane decodes with pyarrow and raises on a mistyped
-    value (see ``ODataReader.read``).  Steady-state delta rounds fit under
-    the threshold and pay neither.  The switch requires the default
-    ``file_fetcher`` (an injected fetcher can't ship through DataSource
-    options).
+    collection — the reference's whole-snapshot loop — and the
+    ``@odata.deltaLink`` lives only on the last page, so the walk always
+    runs to the end, fetching every page exactly ONCE.  The page
+    threshold is the only switch between lanes: up to
+    ``datasource_page_threshold`` pages the driver holds the bodies and
+    parallelizes them; past it, with ``spill_dir`` set (MUST be
+    cluster-visible storage on a real cluster), every body — the held
+    ones first — is spilled to one ``delta-page-<i>.json`` file during
+    the walk and the files are read back with
+    ``spark.read.text(wholetext=True)``, so the driver holds at most one
+    page.  Without a ``spill_dir`` the walk finishes on the driver.  Both
+    lanes work with any fetcher.  Steady-state delta rounds fit under the
+    threshold.
 
-    Parsing runs on executors on every lane — ``from_json`` against the
-    envelope schema extended with the ``@removed`` marker (driver-held
-    bodies and spilled files), or the DataSource's Arrow batches (no
-    ``spill_dir``); the cursor walk stays driver-side (the link chain is
+    Parsing runs on executors on every lane — ``parse_odata_envelope``
+    (``from_json`` against the envelope schema extended with the
+    ``@removed`` marker), so a page decodes identically whichever lane it
+    lands on (a mistyped value is NULL in that field, the rest of the
+    record kept); the cursor walk stays driver-side (the link chain is
     sequential by protocol).
     """
+    import os
+
     start_url = (load_delta_state(state_path) if state_path else None) or first_url
-    retry = retry or RetryPolicy()
-    pages, delta_link = fetch_delta_pages(
-        start_url, fetcher, retry, sleeper, max_pages=datasource_page_threshold
-    )
-    last_next = json.loads(pages[-1]).get(NEXT_LINK) if pages else None
-    if last_next is not None and fetcher is file_fetcher and HAS_PYTHON_DATASOURCE:
-        # scale path: finish the chain walk body-at-a-time for the deltaLink,
-        # spilling every body (probe pages included) when a spill_dir allows
-        # single-fetch ingest
-        import os
-
-        spilled: list[str] = []
-
-        def spill(body: str) -> None:
-            p = os.path.join(spill_dir, f"delta-page-{len(spilled)}.json")
-            with open(p, "w", encoding="utf-8") as f:
-                f.write(body)
-            spilled.append(p)
-
-        if spill_dir:
-            for body in pages:
-                spill(body)
-        url: str | None = last_next
-        while url:
-            body = retry.run(lambda u=url: fetcher(u), sleeper)
-            doc = json.loads(body)
-            delta_link = doc.get(DELTA_LINK, delta_link)
-            url = doc.get(NEXT_LINK)
-            if spill_dir:
-                spill(body)
-        if spill_dir:
-            raw = spark.read.text(spilled, wholetext=True).withColumnRenamed("value", "body")
-            return parse_odata_envelope(raw, schema, removed_col), delta_link
-        register_odata_source(spark)
-        plus = T.StructType(list(schema.fields) + [T.StructField(removed_col, T.BooleanType())])
-        reader = spark.read.format("odata").schema(plus).option("path", start_url)
-        return reader.option("delta", "true").load(), delta_link
-    if last_next is not None:  # custom fetcher or no DataSource API: finish driver-side
-        more, dl2 = fetch_delta_pages(last_next, fetcher, retry, sleeper)
-        pages += more
-        delta_link = dl2 or delta_link
-    df = parse_odata_envelope(
-        spark.createDataFrame([(p,) for p in pages], "body string").repartition(
-            max(1, min(len(pages), spark.sparkContext.defaultParallelism))
-        ),
-        schema,
-        removed_col,
-    )
-    return df, delta_link
+    pages: list[str] = []
+    spilled: list[str] = []
+    delta_link: str | None = None
+    for body, doc in _walk_pages(start_url, fetcher, retry, sleeper):
+        delta_link = doc.get(DELTA_LINK, delta_link)
+        pages.append(body)
+        # past the threshold: spill the held pages, then each later page
+        if spill_dir and (spilled or len(pages) > datasource_page_threshold):
+            for held in pages:
+                path = os.path.join(spill_dir, f"delta-page-{len(spilled)}.json")
+                with open(path, "w", encoding="utf-8") as f:
+                    f.write(held)
+                spilled.append(path)
+            pages.clear()
+    if spilled:
+        bodies = spark.read.text(spilled, wholetext=True).withColumnRenamed("value", "body")
+    else:
+        bodies = _driver_bodies(spark, pages)
+    return parse_odata_envelope(bodies, schema, removed_col), delta_link
 
 
 def parse_odata_envelope(
@@ -952,23 +906,13 @@ def _comparison_to_column(comp: str):
 
 
 # ---------------------------------------------------------------------------
-# Spark 4 Python DataSource variant: spark.read.format("odata")
+# Spark 4 Python DataSource: spark.read.format("odata"), skip-paged ranges
 # ---------------------------------------------------------------------------
 try:  # pragma: no cover - exercised in tests when the API exists
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
     class _PagePartition(InputPartition):
-        def __init__(
-            self,
-            url: str,
-            body: str | None = None,
-            path: str | None = None,
-            urls: list[str] | None = None,
-            fence_until: float | None = None,
-        ):
-            self.url = url
-            self.body = body  # embedded page body (small pages)
-            self.path = path  # spill-file path (when spill_dir is set)
+        def __init__(self, urls: list[str], fence_until: float | None = None):
             # r12: a CHUNK of page urls fetched sequentially by one task —
             # how the planner bounds concurrent fetches structurally
             # (partition count == concurrency budget; no cross-executor
@@ -981,21 +925,18 @@ try:  # pragma: no cover - exercised in tests when the API exists
             self.fence_until = fence_until
 
     class ODataDataSource(DataSource):
-        """``spark.read.format("odata").schema(s).option("path", first_page)``
+        """``spark.read.format("odata").option("skip_url_template", t)
+        .option("page_size", n)`` — the parallel skip-paged range fetch,
+        the one ingest job only executors can do.
 
-        The reader walks the cursor chain driver-side (the @odata.nextLink
-        protocol is inherently sequential), then each page becomes an
-        InputPartition parsed on executors: the DSv2 shape SURVEY.md §4
-        calls for, with per-page parallelism the reference lacks.
-
-        Each page body is fetched exactly once.  Discovery must read the
-        body anyway (the next link lives inside it), so instead of
-        discarding it the reader either embeds it in the partition
-        (pages ≤ ``embed_max_bytes``, default 1 MiB — partitions are
-        pickled to executors, so this ships the body with the task) or,
-        when ``spill_dir`` is set (must be cluster-visible storage on a
-        real cluster), writes it there and ships only the path.  Oversized
-        pages with no spill_dir fall back to a documented second fetch.
+        The driver makes one count probe and plans the page ranges; each
+        executor task fetches its pages and yields one ``body`` string row
+        per page.  Decoding is left to ``parse_odata_envelope`` (what
+        ``read_odata``'s skip-paging branch does), so these pages decode
+        exactly like every other lane.  Options: ``skip_url_template`` and
+        ``page_size`` (required), ``count_url``, ``top_cap``,
+        ``max_concurrent_fetch``, ``throttle_dir``, and the test hooks
+        ``fetch_trace_dir`` / ``fetch_trace_rendezvous_s``.
         """
 
         @classmethod
@@ -1003,26 +944,24 @@ try:  # pragma: no cover - exercised in tests when the API exists
             return "odata"
 
         def schema(self):
-            raise NotImplementedError("odata source requires an explicit schema")
+            return "body string"
 
         def reader(self, schema) -> "ODataReader":
-            return ODataReader(schema, self.options)
+            return ODataReader(self.options)
 
     class ODataReader(DataSourceReader):
-        def __init__(self, schema, options):
-            self.user_schema = schema
+        def __init__(self, options):
             self.options = options
 
         def partitions(self):
-            # r11 (r10 VERDICT item 9): PAGE-RANGE PLANNER — when the
-            # endpoint supports skip paging ($skip/$top, expressed as a
-            # URL template with {skip}/{top} holes) the driver does ONE
+            # r11 (r10 VERDICT item 9): PAGE-RANGE PLANNER — the endpoint
+            # supports skip paging ($skip/$top, expressed as a URL
+            # template with {skip}/{top} holes), so the driver does ONE
             # count probe and emits ceil(count / page_size) partitions
             # that executors fetch IN PARALLEL, instead of walking the
-            # inherently-sequential @odata.nextLink cursor driver-side.
-            # Cursor paging stays the default (Graph's delta endpoints
-            # are cursor-only); range paging is the throughput path for
-            # the plain collection reads the reference loops over.
+            # inherently-sequential @odata.nextLink cursor driver-side
+            # (Graph's delta endpoints are cursor-only; those walks stay
+            # in read_odata / read_odata_delta).
             # Skip-paging snapshot caveat (r12, ADVICE): the planned ranges
             # assume a STABLE collection ordering between the count probe
             # and the page fetches — rows inserted or deleted in between
@@ -1032,98 +971,56 @@ try:  # pragma: no cover - exercised in tests when the API exists
             # throughput path for static/snapshot reads.
             template = self.options.get("skip_url_template")
             page_size = int(self.options.get("page_size", "0") or 0)
-            if template and page_size > 0:
-                throttle_dir = self.options.get("throttle_dir")
-                count_url = self.options.get("count_url")
-                if count_url:
-                    # Graph's /$count returns a bare integer body
-                    total = int(
-                        fetch_with_shared_throttle(
-                            count_url, throttle_dir=throttle_dir
-                        ).strip()
-                    )
-                else:
-                    # $count=true rides the first page as @odata.count
-                    first = fetch_with_shared_throttle(
-                        template.format(skip=0, top=page_size),
-                        throttle_dir=throttle_dir,
-                    )
-                    total = int(json.loads(first)["@odata.count"])
-                # r12 (ADVICE): don't plan the FULL collection when the
-                # caller asked for $top — read_odata forwards the cap only
-                # when no client-side $filter/$orderby reorders or thins
-                # the rows (capping the unfiltered prefix would then
-                # return the wrong set)
-                top_cap = int(self.options.get("top_cap", "0") or 0)
-                if top_cap > 0:
-                    total = min(total, top_cap)
-                urls = [
-                    template.format(skip=skip, top=page_size)
-                    for skip in range(0, max(total, 1), page_size)
-                ]
-                # concurrency budget: at most max_concurrent_fetch tasks
-                # ever fetch simultaneously, because each task owns a
-                # contiguous chunk it walks sequentially
-                # r13: snapshot the fence at PLANNING time (the count
-                # probe itself may just have raised it) into every
-                # partition — on an object-store throttle_dir this is the
-                # only channel that reaches executor workers
-                fence_until = _fence_read(throttle_dir) if throttle_dir else None
-                budget = int(self.options.get("max_concurrent_fetch", "0") or 0)
-                if budget > 0 and len(urls) > budget:
-                    per = -(-len(urls) // budget)  # ceil
-                    return [
-                        _PagePartition(chunk[0], urls=chunk, fence_until=fence_until)
-                        for chunk in (
-                            urls[i : i + per] for i in range(0, len(urls), per)
-                        )
-                    ]
-                return [_PagePartition(u, fence_until=fence_until) for u in urls]
-            top = self.options.get("top")
-            url = build_url(
-                self.options["path"],
-                [s for s in self.options.get("select", "").split(",") if s] or None,
-                self.options.get("filter") or None,
-                self.options.get("expand") or None,
-                self.options.get("orderby") or None,
-                int(top) if top else None,
-            )
-            embed_max = int(self.options.get("embed_max_bytes", str(1 << 20)))
-            spill_dir = self.options.get("spill_dir")
-            parts: list[_PagePartition] = []
-            while url and len(parts) < 100_000:
-                body = RetryPolicy().run(lambda u=url: file_fetcher(u))
-                if len(body) <= embed_max:
-                    parts.append(_PagePartition(url, body=body))
-                elif spill_dir:
-                    import os
-
-                    spill_path = os.path.join(spill_dir, f"odata-page-{len(parts)}.json")
-                    with open(spill_path, "w", encoding="utf-8") as f:
-                        f.write(body)
-                    parts.append(_PagePartition(url, path=spill_path))
-                else:  # oversized, nowhere to spill: executor re-fetches this page
-                    parts.append(_PagePartition(url))
-                url = json.loads(body).get(NEXT_LINK)
-            return parts
+            if not template or page_size <= 0:
+                raise ValueError(
+                    "the odata source needs the skip_url_template option and "
+                    "a positive page_size option"
+                )
+            throttle_dir = self.options.get("throttle_dir")
+            count_url = self.options.get("count_url")
+            if count_url:
+                # Graph's /$count returns a bare integer body
+                total = int(
+                    fetch_with_shared_throttle(count_url, throttle_dir=throttle_dir).strip()
+                )
+            else:
+                # $count=true rides the first page as @odata.count
+                first = fetch_with_shared_throttle(
+                    template.format(skip=0, top=page_size),
+                    throttle_dir=throttle_dir,
+                )
+                total = int(json.loads(first)["@odata.count"])
+            # r12 (ADVICE): don't plan the FULL collection when the
+            # caller asked for $top — read_odata forwards the cap only
+            # when no client-side $filter/$orderby reorders or thins
+            # the rows (capping the unfiltered prefix would then
+            # return the wrong set)
+            top_cap = int(self.options.get("top_cap", "0") or 0)
+            if top_cap > 0:
+                total = min(total, top_cap)
+            urls = [
+                template.format(skip=skip, top=page_size)
+                for skip in range(0, max(total, 1), page_size)
+            ]
+            # r13: snapshot the fence at PLANNING time (the count
+            # probe itself may just have raised it) into every
+            # partition — on an object-store throttle_dir this is the
+            # only channel that reaches executor workers
+            fence_until = _fence_read(throttle_dir) if throttle_dir else None
+            # concurrency budget: at most max_concurrent_fetch tasks
+            # ever fetch simultaneously, because each task owns a
+            # contiguous chunk it walks sequentially
+            budget = int(self.options.get("max_concurrent_fetch", "0") or 0)
+            per = -(-len(urls) // budget) if 0 < budget < len(urls) else 1  # ceil
+            return [
+                _PagePartition(urls[i : i + per], fence_until=fence_until)
+                for i in range(0, len(urls), per)
+            ]
 
         def read(self, partition):
-            """Yield one ``pyarrow.RecordBatch`` per page (Spark 4 Arrow
-            path — the batch crosses into the JVM without per-row pickling,
-            removing the last row-at-a-time Python from ingest; r5 VERDICT
-            item 4).  Falls back to per-row tuples when the page's JSON
-            values don't coerce to the declared Arrow schema.  That
-            fallback does NOT match the ``from_json`` lanes: a mistyped
-            value (``"yes"`` for a BooleanType field) is NULL in that field
-            under ``parse_odata_envelope``, but here it raises in the
-            Python worker and fails the read.  A known divergence of the
-            no-``spill_dir`` scale lane of ``read_odata_delta`` and of
-            ``read_odata``'s DataSource lanes.
-
-            ``delta=true`` (r5 VERDICT item 3): the LAST schema field is a
-            boolean tombstone flag populated from the record's ``@removed``
-            marker; the other fields of a tombstone stay the NULLs Graph
-            sends — the ``read_odata_delta`` envelope contract."""
+            """Fetch the partition's pages in order — one body held at a
+            time, every fetch under the shared Retry-After fence — and
+            yield one ``(body,)`` row per page."""
             trace = self.options.get("fetch_trace_dir")
             if trace:
                 # fetch tracing (and the concurrency proof the tests use):
@@ -1150,57 +1047,13 @@ try:  # pragma: no cover - exercised in tests when the API exists
             throttle_dir = self.options.get("throttle_dir")
             # r13: honor the planner's fence snapshot before the first
             # fetch — the object-store-fence channel into this worker
-            until = getattr(partition, "fence_until", None)
+            until = partition.fence_until
             if until is not None:
                 delay = until - time.time()
                 if delay > 0:
                     time.sleep(delay)
-            if partition.body is not None:
-                bodies = iter([partition.body])
-            elif partition.path is not None:
-                with open(partition.path, encoding="utf-8") as f:
-                    bodies = iter([f.read()])
-            elif partition.urls:
-                # r12 chunked range fetch: sequential within the task (the
-                # concurrency budget), one body held at a time, every
-                # fetch under the shared Retry-After fence
-                bodies = (
-                    fetch_with_shared_throttle(u, throttle_dir=throttle_dir)
-                    for u in partition.urls
-                )
-            else:
-                bodies = iter(
-                    [
-                        fetch_with_shared_throttle(
-                            partition.url, throttle_dir=throttle_dir
-                        )
-                    ]
-                )
-            delta = self.options.get("delta", "").lower() == "true"
-            fields = [f.name for f in self.user_schema.fields]
-            names = fields[:-1] if delta else fields
-            for body in bodies:
-                recs = json.loads(body).get(VALUE, [])
-                batch = None
-                try:
-                    import pyarrow as pa
-                    from pyspark.sql.pandas.types import to_arrow_schema
-
-                    rows = [{n: rec.get(n) for n in names} for rec in recs]
-                    if delta:
-                        for row, rec in zip(rows, recs):
-                            row[fields[-1]] = rec.get(REMOVED) is not None
-                    batch = pa.RecordBatch.from_pylist(
-                        rows, schema=to_arrow_schema(self.user_schema)
-                    )
-                except Exception:  # noqa: BLE001 — coercion failed: row fallback
-                    batch = None
-                if batch is not None:
-                    yield batch
-                    continue
-                for rec in recs:
-                    t = tuple(rec.get(n) for n in names)
-                    yield t + (rec.get(REMOVED) is not None,) if delta else t
+            for url in partition.urls:
+                yield (fetch_with_shared_throttle(url, throttle_dir=throttle_dir),)
 
     HAS_PYTHON_DATASOURCE = True
 except ImportError:  # pragma: no cover

@@ -37,8 +37,8 @@ true→false in that window (the replica finds its own cluster already
 registered) — benign, cluster identities never change.
 
 Scale: every step is the underlying batch operator inside foreachBatch,
-so their 100 TB notes apply unchanged (delta pages via the DataSource
-past the page threshold, one bucket-keyed join for dedup with state
+so their 100 TB notes apply unchanged (delta pages decoded by
+``parse_odata_envelope``, one bucket-keyed join for dedup with state
 O(buckets), O(dims) sketch rows per round, one keyed anti-join for the
 snapshot fold).  The tick stream carries no data — it is the schedule.
 """

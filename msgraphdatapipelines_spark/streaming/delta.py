@@ -48,8 +48,8 @@ def delta_sync_stream(
     ``maxFilesPerTrigger=1`` keeps rounds sequential).  Each round:
 
     1. ``read_odata_delta`` — resumes from ``state_path`` (first round =
-       full initial sync, auto-routing through the DataSource past the
-       page threshold);
+       full initial sync, walked to the end on the driver — the stream
+       passes no ``spill_dir``);
     2. ``apply_delta`` onto the snapshot-versioned table at
        ``snapshot_path`` (bootstrap: empty snapshot with the declared
        schema, detected by an explicit ``snapshot_versions`` probe).  The

@@ -206,3 +206,27 @@ def test_scale_conf_arithmetic():
     tiny = scale_conf(1 << 30)
     assert int(tiny["spark.sql.shuffle.partitions"]) == 200  # floor holds
     assert int(c["spark.sql.adaptive.advisoryPartitionSizeInBytes"]) == 128 << 20
+
+
+def test_load_spread_rekeys_a_replaced_file(spark, tmp_path):
+    """The load_spread memo keys on the file identity (size, mtime_ns) that
+    load's scan memo keys on: after the parquet file is replaced, the
+    floored scan re-plans instead of serving the old file's rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from msgraphdatapipelines_spark.queries import load, load_spread
+
+    root = str(tmp_path)
+    pq.write_table(pa.table({"id": [1, 2, 3]}), tmp_path / "docs.parquet")
+    spread = load_spread(spark, root, "docs", "id")
+    assert "hashpartitioning(id" in spread._jdf.queryExecution().executedPlan().toString()
+    assert sorted(r["id"] for r in spread.collect()) == [1, 2, 3]
+
+    pq.write_table(pa.table({"id": list(range(100, 160))}), tmp_path / "next.parquet")
+    os.replace(tmp_path / "next.parquet", tmp_path / "docs.parquet")
+    want = list(range(100, 160))
+    assert sorted(r["id"] for r in load(spark, root, "docs").collect()) == want
+    assert sorted(r["id"] for r in load_spread(spark, root, "docs", "id").collect()) == want

@@ -117,163 +117,6 @@ def test_odata_filter_grammar(spark, pages):
     assert ids == [0, 1, 4, 6, 8]
 
 
-def test_python_datasource_reads_pages(spark, pages):
-    first, recs = pages
-    if not rest.register_odata_source(spark):
-        pytest.skip("Python DataSource API unavailable")
-    df = (
-        spark.read.format("odata")
-        .schema(SCHEMA)
-        .option("path", first)
-        .option("select", "id,operatingSystem,osVersion,errorCode")
-        .load()
-    )
-    assert sorted(r["id"] for r in df.collect()) == sorted(r["id"] for r in recs)
-    # one partition per page — the parallelism unit the reference lacks
-    assert df.rdd.getNumPartitions() == 3
-
-
-def test_datasource_fetches_each_page_once(pages, monkeypatch):
-    """Discovery must not double-fetch: page bodies ride along in partitions
-    (or spill files), so executors never re-fetch what the driver read."""
-    first, _ = pages
-    if not rest.HAS_PYTHON_DATASOURCE:
-        pytest.skip("Python DataSource API unavailable")
-    calls: list[str] = []
-    real = rest.file_fetcher
-
-    def counting(url: str) -> str:
-        calls.append(url)
-        return real(url)
-
-    monkeypatch.setattr(rest, "file_fetcher", counting)
-    reader = rest.ODataReader(SCHEMA, {"path": first})
-    parts = reader.partitions()
-    assert len(parts) == 3 and len(calls) == 3  # fetch count == page count
-    assert all(p.body is not None for p in parts)
-
-    def refuses(url: str) -> str:
-        raise AssertionError(f"executor re-fetched {url}")
-
-    monkeypatch.setattr(rest, "file_fetcher", refuses)
-    out = [r for p in parts for r in reader.read(p)]
-    assert _total_rows(out) == 9
-
-
-def _total_rows(yielded: list) -> int:
-    """Count records whether the reader yielded Arrow batches (the fast
-    path) or per-row tuples (the coercion fallback)."""
-    return sum(getattr(r, "num_rows", None) or 1 for r in yielded)
-
-
-def test_datasource_read_yields_arrow_batches(pages):
-    """r5 VERDICT item 4: the DataSource read path must hand Spark ONE
-    pyarrow.RecordBatch per page — no per-row Python tuples in ingest."""
-    import pyarrow as pa
-
-    first, _ = pages
-    if not rest.HAS_PYTHON_DATASOURCE:
-        pytest.skip("Python DataSource API unavailable")
-    reader = rest.ODataReader(SCHEMA, {"path": first})
-    parts = reader.partitions()
-    out = [r for p in parts for r in reader.read(p)]
-    assert len(out) == 3 and all(isinstance(b, pa.RecordBatch) for b in out)
-    assert sum(b.num_rows for b in out) == 9
-    assert out[0].schema.names == [f.name for f in SCHEMA.fields]
-
-
-def test_datasource_spills_oversized_pages(pages, monkeypatch, tmp_path):
-    first, _ = pages
-    if not rest.HAS_PYTHON_DATASOURCE:
-        pytest.skip("Python DataSource API unavailable")
-    spill = tmp_path / "spill"
-    spill.mkdir()
-    reader = rest.ODataReader(
-        SCHEMA, {"path": first, "embed_max_bytes": "0", "spill_dir": str(spill)}
-    )
-    parts = reader.partitions()
-    assert all(p.body is None and p.path is not None for p in parts)
-    monkeypatch.setattr(
-        rest, "file_fetcher", lambda u: (_ for _ in ()).throw(AssertionError("re-fetch"))
-    )
-    out = [r for p in parts for r in reader.read(p)]
-    assert _total_rows(out) == 9
-
-
-def test_read_odata_autoswitches_to_datasource(spark, tmp_path):
-    """Above the page threshold, read_odata must take the DataSource scale
-    path instead of materializing the collection driver-side."""
-    if not rest.HAS_PYTHON_DATASOURCE:
-        pytest.skip("Python DataSource API unavailable")
-    paths = [tmp_path / f"big{i}.json" for i in range(5)]
-    for i, p in enumerate(paths):
-        body = {"value": [{"id": f"r{i}", "operatingSystem": "Windows",
-                           "osVersion": "11", "errorCode": i}]}
-        if i < 4:
-            body["@odata.nextLink"] = str(paths[i + 1])
-        p.write_text(json.dumps(body))
-    df = rest.read_odata(spark, str(paths[0]), SCHEMA, datasource_page_threshold=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan odata" in plan  # the DataSource path, not ExistingRDD
-    assert sorted(r["id"] for r in df.collect()) == [f"r{i}" for i in range(5)]
-    # below the threshold: stays on the driver path
-    df_small = rest.read_odata(spark, str(paths[0]), SCHEMA, datasource_page_threshold=10)
-    assert "BatchScan odata" not in df_small._jdf.queryExecution().executedPlan().toString()
-    assert df_small.count() == 5
-
-
-def test_expand_survives_datasource_autoswitch(spark, tmp_path):
-    """r2 VERDICT item 3: $expand must ride the DataSource scale path too —
-    above the page threshold the read auto-switches, and the expanded
-    nested collection still arrives intact and consumable."""
-    if not rest.HAS_PYTHON_DATASOURCE:
-        pytest.skip("Python DataSource API unavailable")
-    schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("displayName", T.StringType()),
-            T.StructField(
-                "members",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("userId", T.StringType()),
-                            T.StructField("userPrincipalName", T.StringType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-    paths = [tmp_path / f"grp{i}.json" for i in range(4)]
-    for i, p in enumerate(paths):
-        body = {
-            "value": [
-                {
-                    "id": f"g{i}",
-                    "displayName": f"Group{i}",
-                    "members": [{"userId": f"u{i}", "userPrincipalName": f"u{i}@x"}],
-                }
-            ]
-        }
-        if i < 3:
-            body["@odata.nextLink"] = str(paths[i + 1])
-        p.write_text(json.dumps(body))
-    df = rest.read_odata(
-        spark,
-        str(paths[0]),
-        schema,
-        select=["id", "displayName"],
-        expand="members",
-        datasource_page_threshold=2,
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan odata" in plan  # the scale path, not driver materialization
-    assert set(df.columns) == {"id", "displayName", "members"}
-    rows = {(r["id"], r["members"][0]["userId"]) for r in df.collect()}
-    assert rows == {(f"g{i}", f"u{i}") for i in range(4)}
-
-
 def test_orderby_top_pushdown_and_client_reapply(spark, pages):
     """$orderby/$top: emitted in the URL for the server, re-applied
     client-side as sort().limit() — a TakeOrderedAndProject top-k, so a
@@ -478,46 +321,6 @@ def test_delta_resume_parses_tombstones_and_applies(spark, delta_pages, tmp_path
     assert rest.load_delta_state(state) == link
 
 
-def test_delta_initial_sync_autoswitches_to_datasource(spark, tmp_path):
-    """r5 VERDICT item 3: an initial delta sync walks the FULL collection
-    (the reference's whole-snapshot loop) — past the page threshold it must
-    route through the DataSource (one page per partition, no driver-side
-    page list), tombstones must survive the scale path, and the deltaLink
-    from the final page must still come back."""
-    if not rest.HAS_PYTHON_DATASOURCE:
-        pytest.skip("Python DataSource API unavailable")
-    paths = [tmp_path / f"big{i}.json" for i in range(5)]
-    for i, p in enumerate(paths):
-        body = {
-            "value": [
-                {"id": f"r{i}", "operatingSystem": "Windows", "osVersion": "11", "errorCode": i}
-            ]
-        }
-        if i == 2:  # a tombstone mid-collection must ride the scale path too
-            body["value"].append({"id": "gone", "@removed": {"reason": "deleted"}})
-        if i < 4:
-            body["@odata.nextLink"] = str(paths[i + 1])
-        else:
-            body["@odata.deltaLink"] = str(paths[4]) + "?token=next"
-        p.write_text(json.dumps(body))
-    df, link = rest.read_odata_delta(
-        spark, str(paths[0]), SCHEMA, datasource_page_threshold=2
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchScan odata" in plan  # the scale path, not driver materialization
-    rows = {r["id"]: r for r in df.collect()}
-    assert sorted(rows) == ["gone", "r0", "r1", "r2", "r3", "r4"]
-    assert rows["gone"]["_removed"] is True and rows["gone"]["osVersion"] is None
-    assert all(not rows[f"r{i}"]["_removed"] for i in range(5))
-    assert link == str(paths[4]) + "?token=next"
-    # below the threshold: stays on the driver path
-    df2, link2 = rest.read_odata_delta(
-        spark, str(paths[0]), SCHEMA, datasource_page_threshold=10
-    )
-    assert "BatchScan odata" not in df2._jdf.queryExecution().executedPlan().toString()
-    assert df2.count() == 6 and link2 == link
-
-
 def test_delta_sync_stream_two_rounds(spark, delta_pages, tmp_path):
     """r5 VERDICT item 8: continuous incremental sync — a real stream whose
     micro-batches each pull one delta round, apply it to the parquet
@@ -592,41 +395,46 @@ def test_delta_sync_stream_failed_round_does_not_advance_token(
     assert rest.load_delta_state(state) is None  # token never advanced
 
 
-def test_delta_scale_path_single_fetch_with_spill_dir(spark, tmp_path, monkeypatch):
+def test_delta_scale_path_single_fetch_with_spill_dir(spark, tmp_path):
     """With a spill_dir, the >threshold delta sync fetches every page
-    exactly ONCE: the deltaLink discovery walk spills bodies, and the
-    DataSource reads the manifest instead of re-walking the chain."""
-    if not rest.HAS_PYTHON_DATASOURCE:
-        pytest.skip("Python DataSource API unavailable")
-    paths = [tmp_path / f"pg{i}.json" for i in range(5)]
-    for i, p in enumerate(paths):
-        body = {"value": [{"id": f"r{i}", "operatingSystem": "linux",
-                           "osVersion": "6", "errorCode": i}]}
+    exactly ONCE: the deltaLink walk spills each body and the spilled
+    files are read back on the JVM instead of re-walking the chain.  The
+    lane needs neither the default fetcher nor the DataSource API, so an
+    injected (non-file) fetcher takes it too."""
+    base = "https://graph.example/v1.0/deviceManagement/managedDevices/delta"
+    urls = [base] + [f"{base}?$skiptoken=t{i}" for i in range(1, 5)]
+    served = {}
+    for i, u in enumerate(urls):
+        body = {"value": [{"id": f"r{i}", "operatingSystem": "Windows",
+                           "osVersion": "11", "errorCode": i}]}
+        if i == 2:
+            body["value"].append({"id": "gone", "@removed": {"reason": "deleted"}})
         if i < 4:
-            body["@odata.nextLink"] = str(paths[i + 1])
+            body["@odata.nextLink"] = urls[i + 1]
         else:
-            body["@odata.deltaLink"] = "tok-final"
-        p.write_text(json.dumps(body))
+            body["@odata.deltaLink"] = f"{base}?$deltatoken=next"
+        served[u] = json.dumps(body)
+    calls: list[str] = []
+
+    def fetch(url: str) -> str:
+        calls.append(url)
+        return served[url]
+
     spill = tmp_path / "spill"
     spill.mkdir()
-    calls: list[str] = []
-    real = rest.file_fetcher
-
-    def counting(url: str) -> str:
-        calls.append(url.split("?", 1)[0])
-        return real(url)
-
-    monkeypatch.setattr(rest, "file_fetcher", counting)
-    # pass the fetcher explicitly too: the `fetcher is file_fetcher` scale
-    # gate compares against the (patched) module global
     df, link = rest.read_odata_delta(
-        spark, str(paths[0]), SCHEMA, fetcher=counting,
-        datasource_page_threshold=2, spill_dir=str(spill),
+        spark, base, SCHEMA, fetcher=fetch, datasource_page_threshold=2,
+        spill_dir=str(spill),
     )
-    assert link == "tok-final"
-    assert sorted(r["id"] for r in df.collect()) == [f"r{i}" for i in range(5)]
-    # one fetch per page, monkeypatched across driver AND DataSource code
-    assert sorted(calls) == sorted(str(p) for p in paths)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan text" in plan and "BatchScan odata" not in plan
+    assert calls == urls  # every page fetched exactly once, in chain order
+    assert len(list(spill.glob("delta-page-*.json"))) == 5
+    rows = {r["id"]: r for r in df.collect()}
+    assert sorted(rows) == ["gone", "r0", "r1", "r2", "r3", "r4"]
+    assert rows["gone"]["_removed"] is True and rows["gone"]["osVersion"] is None
+    assert not any(rows[f"r{i}"]["_removed"] for i in range(5))
+    assert link == f"{base}?$deltatoken=next"
 
 
 DEVICE = T.StructType(
@@ -661,7 +469,8 @@ DEVICE = T.StructType(
 def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
     """A page decodes the same way whichever lane of ``read_odata_delta``
     it lands on: the spilled-file scale lane (past the page threshold,
-    ``spill_dir`` set) and the driver lane both run ``from_json``, so
+    ``spill_dir`` set), the driver lane, and a walk past the threshold
+    with no ``spill_dir`` all run ``from_json``, so
     tombstones, nested structs, arrays of structs, undeclared and missing
     properties, empty pages and mistyped values (NULL in that field, the
     rest of the record kept) come out as the same rows."""
@@ -723,6 +532,14 @@ def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
         spark, str(paths[0]), DEVICE, datasource_page_threshold=100
     )
     assert rows(held) == expected and link2 == "tok-devices"
+
+    # past the threshold with no spill_dir: the walk finishes on the driver
+    walked, link3 = rest.read_odata_delta(
+        spark, str(paths[0]), DEVICE, datasource_page_threshold=2
+    )
+    plan = walked._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan odata" not in plan and "FileScan text" not in plan
+    assert rows(walked) == expected and link3 == "tok-devices"
 
 
 def test_429_honors_retry_after_hint():
@@ -891,22 +708,20 @@ def test_page_range_planner_parallel_equals_sequential(spark, range_pages, tmp_p
     if not rest.register_odata_source(spark):
         pytest.skip("Python DataSource API unavailable")
 
-    # driver-side planning: one count fetch, range partitions, no bodies
+    # driver-side planning: one count fetch, one range url per partition
     reader = rest.ODataReader(
-        SCHEMA,
-        {"path": template, "skip_url_template": template, "page_size": "20",
-         "count_url": count_url},
+        {"skip_url_template": template, "page_size": "20", "count_url": count_url}
     )
     parts = reader.partitions()
     assert len(parts) == 6
-    assert all(p.body is None and p.path is None for p in parts)
+    assert [p.urls for p in parts] == [
+        [template.format(skip=s, top=20)] for s in range(0, 120, 20)
+    ]
 
     trace = tmp_path / "trace"
     t0 = time.monotonic()
-    df = (
+    bodies = (
         spark.read.format("odata")
-        .schema(SCHEMA)
-        .option("path", template)
         .option("skip_url_template", template)
         .option("page_size", "20")
         .option("count_url", count_url)
@@ -914,6 +729,7 @@ def test_page_range_planner_parallel_equals_sequential(spark, range_pages, tmp_p
         .option("fetch_trace_rendezvous_s", "10")
         .load()
     )
+    df = rest.parse_odata_envelope(bodies, SCHEMA)
     got = sorted((r["id"], r["errorCode"]) for r in df.collect())
     wall = time.monotonic() - t0
     assert df.rdd.getNumPartitions() == 6
@@ -940,6 +756,44 @@ def test_read_odata_auto_switches_to_range_planner(spark, range_pages):
     assert df.rdd.getNumPartitions() == 6
     assert sorted(r["id"] for r in df.collect()) == sorted(r["id"] for r in recs)
 
+
+def test_range_planner_decodes_like_cursor_lane(spark, tmp_path):
+    """Skip-paged pages go through the same ``from_json`` decode as a
+    cursor walk: a mistyped value (``"yes"`` for a BooleanType field) is
+    NULL in that field and the rest of that record and its page survive."""
+    if not rest.HAS_PYTHON_DATASOURCE:
+        pytest.skip("Python DataSource API unavailable")
+    schema = T.StructType(
+        [
+            T.StructField("id", T.StringType()),
+            T.StructField("azureADRegistered", T.BooleanType()),
+            T.StructField("errorCount", T.LongType()),
+        ]
+    )
+    values = [
+        [{"id": "d0", "azureADRegistered": True, "errorCount": 0},
+         {"id": "d1", "azureADRegistered": "yes", "errorCount": 1}],
+        [{"id": "d2", "azureADRegistered": False, "errorCount": "two"},
+         {"id": "d3"}],
+    ]
+    for i, value in enumerate(values):
+        (tmp_path / f"skip{i * 2}.json").write_text(json.dumps({"value": value}))
+    (tmp_path / "count.txt").write_text("4")
+    df = rest.read_odata(
+        spark, str(tmp_path / "skip0.json"), schema,
+        skip_url_template=str(tmp_path / "skip{skip}.json"), page_size=2,
+        count_url=str(tmp_path / "count.txt"),
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan odata" in plan
+    assert df.columns == ["id", "azureADRegistered", "errorCount"]
+    assert sorted(tuple(r) for r in df.collect()) == [
+        ("d0", True, 0), ("d1", None, 1), ("d2", False, None), ("d3", None, None),
+    ]
+    # the planner names the options it cannot plan without
+    with pytest.raises(ValueError, match="skip_url_template.*page_size"):
+        rest.ODataReader({"count_url": str(tmp_path / "count.txt")}).partitions()
+
 # --- r12 (r11 VERDICT item 3): throttle governance for the range planner ------
 
 
@@ -954,8 +808,7 @@ def test_page_range_concurrency_budget_bounds_parallel_fetches(
     if not rest.register_odata_source(spark):
         pytest.skip("Python DataSource API unavailable")
     reader = rest.ODataReader(
-        SCHEMA,
-        {"path": template, "skip_url_template": template, "page_size": "20",
+        {"skip_url_template": template, "page_size": "20",
          "count_url": count_url, "max_concurrent_fetch": "2"},
     )
     parts = reader.partitions()
@@ -984,8 +837,7 @@ def test_page_range_top_cap_prunes_plan_only_when_safe(spark, range_pages):
     # (the client-side limit() then collapses the RDD view, so assert on
     # the reader's own planning)
     reader = rest.ODataReader(
-        SCHEMA,
-        {"path": template, "skip_url_template": template, "page_size": "20",
+        {"skip_url_template": template, "page_size": "20",
          "count_url": count_url, "top_cap": "50"},
     )
     assert len(reader.partitions()) == 3
