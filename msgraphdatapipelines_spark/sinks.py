@@ -233,7 +233,10 @@ def apply_delta(
     same single anti-join that the upserts already needed, so a delete
     costs nothing beyond its key: one key-shuffle of both sides total,
     the same plan shape as ``upsert_snapshot`` (with the warehouse
-    bucketed on the key, the snapshot side's shuffle disappears).  This
+    bucketed on the key, the snapshot side's shuffle disappears).  A
+    steady-state round from ``read_odata_delta``'s driver lane is a local
+    relation of known size, so under the broadcast threshold the join
+    broadcasts the delta keys and shuffles nothing.  This
     is the reference's DELETE+INSERT full refresh
     (`Prepare-SQLDatabase.sql:104-178`) reduced to changed keys only.
     """

@@ -462,11 +462,12 @@ def read_odata(
     nested struct/array fields of ``schema`` and survive ingestion intact,
     ready for dot-access or explode downstream.
 
-    Driver walks the cursor (S2, with S4 retry); executors parse: page
-    bodies are parallelized and decoded by ``parse_odata_envelope`` (S3,
-    ``from_json``: a mistyped value is NULL in that field), then the
-    ``value`` array explodes to records.  With ``skip_url_template`` and
-    ``page_size`` (and the default fetcher) the driver walks nothing:
+    Driver walks the cursor (S2, with S4 retry); executors parse: the
+    page bodies become a JVM local relation (``_driver_bodies``) decoded
+    by ``parse_odata_envelope`` (S3, ``from_json``: a mistyped value is
+    NULL in that field), then the ``value`` array explodes to records.
+    With ``skip_url_template`` and ``page_size`` (and the default
+    fetcher) the driver walks nothing:
     the ``odata`` DataSource plans page ranges from one count probe and
     executors fetch them in parallel, feeding the same decode.
     ``select``/``filter_expr`` are applied as real Column ops — when the
@@ -478,9 +479,10 @@ def read_odata(
     still yields the right rows at scan cost.
 
     Driver-memory bound: the cursor walk holds every page body in a
-    driver-side list before ``createDataFrame`` — fine for reference-scale
-    collections (thousands of rows).  Collections too large for that need
-    the skip-paged range fetch.
+    driver-side list, then copies it into the driver JVM as a local
+    relation (``_driver_bodies``) — fine for reference-scale collections
+    (thousands of rows).  Collections too large for that need the
+    skip-paged range fetch.
     """
     if (
         fetcher is file_fetcher
@@ -521,10 +523,14 @@ def read_odata(
 
 
 def _driver_bodies(spark: SparkSession, pages: list[str]) -> DataFrame:
-    """Driver-held page bodies as a ``body`` column spread over the slots."""
-    return spark.createDataFrame([(p,) for p in pages], "body string").repartition(
-        max(1, min(len(pages), spark.sparkContext.defaultParallelism))
-    )
+    """Driver-held page bodies as a ``body`` column: a JVM local relation
+    (``createDataset`` with the string encoder), so no Python worker ever
+    sees them.  ``LocalTableScan`` spreads the rows over
+    ``min(pages, defaultParallelism)`` slots without a shuffle, and the
+    relation's exact size lets a join against it broadcast."""
+    encoder = spark._jvm.org.apache.spark.sql.Encoders.STRING()
+    local = spark._jsparkSession.createDataset(pages, encoder).toDF()
+    return DataFrame(local, spark).withColumnRenamed("value", "body")
 
 
 def _apply_client_side(
@@ -637,7 +643,9 @@ def read_odata_delta(
     runs to the end, fetching every page exactly ONCE.  The page
     threshold is the only switch between lanes: up to
     ``datasource_page_threshold`` pages the driver holds the bodies and
-    parallelizes them; past it, with ``spill_dir`` set (MUST be
+    hands them to the JVM as a local relation (no Python worker, no
+    shuffle; its exact size lets ``sinks.apply_delta`` broadcast the
+    batch); past it, with ``spill_dir`` set (MUST be
     cluster-visible storage on a real cluster), every body — the held
     ones first — is spilled to one ``delta-page-<i>.json`` file during
     the walk and the files are read back with

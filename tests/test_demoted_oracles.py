@@ -23,17 +23,31 @@ TABLES = (
 _ensure_loaded()
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
+def _connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     # bound the oracle engine (r8): a planner blow-up in one generated
     # oracle must fail ITS row, not exhaust process memory and poison
     # every later query sharing the connection
     con.execute("SET memory_limit='16GB'")
-    con.execute("SET threads=8")
+    # One oracle thread.  With several worker threads DuckDB's bundled
+    # allocator splits the address space of THIS process into tens of
+    # thousands of small anonymous mappings (measured on a 4-core host:
+    # one ann_* oracle at threads=8 took the pytest process from ~700 to
+    # ~65k mappings, threads=2 to ~50k; threads=1 stays under 800 over
+    # all 122 oracles).  At vm.max_map_count (65530) every allocation
+    # fails — a "bad allocation" OutOfMemoryException on a row that
+    # passes alone, then a segfault that ends the whole suite.  The
+    # oracles run on sf0.001, where one thread is also the fastest.
+    con.execute("SET threads=1")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = _connect(sf_dir)
     yield con
     con.close()
 
@@ -113,16 +127,8 @@ def test_demoted_query_matches_oracle(name, spark, sf_dir, duck):
         # seconds).  A FRESH connection retry separates that
         # accumulation artifact from a genuinely oversized oracle —
         # which would OOM again and still fail the row.
-        retry = duckdb.connect()
+        retry = _connect(sf_dir)
         try:
-            retry.execute("SET TimeZone='UTC'")
-            retry.execute("SET memory_limit='16GB'")
-            retry.execute("SET threads=8")
-            for t in TABLES:
-                retry.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{t}.parquet')"
-                )
             want = retry.execute(q.oracle).fetchdf()
         finally:
             retry.close()

@@ -473,9 +473,15 @@ def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
     with no ``spill_dir`` all run ``from_json``, so
     tombstones, nested structs, arrays of structs, undeclared and missing
     properties, empty pages and mistyped values (NULL in that field, the
-    rest of the record kept) come out as the same rows."""
+    rest of the record kept) come out as the same rows.  Bodies are written
+    unescaped and indented, so the driver lane's bodies carry raw newlines,
+    backslashes, quotes and a non-BMP character across py4j byte-exact.
+    The driver lane is a JVM local relation: no shuffle, no Python RDD."""
     hw = {"serialNumber": "SN1", "totalStorageSpaceInBytes": 512}
     actions = [{"actionName": "sync", "actionState": "done", "extra": 1}]
+    # string values py4j must carry byte-exact: newline, tab, backslash,
+    # quote, a BMP and a non-BMP character
+    tricky = "a\nb\tc\\d \"q\" \u00e9 \U0001F600"
     page_values = [
         [
             {"id": "d1", "azureADRegistered": True, "errorCount": 0,
@@ -491,6 +497,8 @@ def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
         [{"id": "d4", "azureADRegistered": True, "errorCount": "seven",
           "hardwareInformation": {"serialNumber": "SN4"}}],
         [{"id": "d5", "deviceActionResults": []}],
+        [{"id": "d6", "hardwareInformation": {"serialNumber": tricky},
+          "deviceActionResults": [{"actionName": "\\\\srv\\share", "actionState": tricky}]}],
     ]
     paths = [tmp_path / f"dev{i}.json" for i in range(len(page_values))]
     for i, (p, value) in enumerate(zip(paths, page_values)):
@@ -499,7 +507,7 @@ def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
             body["@odata.nextLink"] = str(paths[i + 1])
         else:
             body["@odata.deltaLink"] = "tok-devices"
-        p.write_text(json.dumps(body))
+        p.write_text(json.dumps(body, ensure_ascii=False, indent=1), encoding="utf-8")
     expected = {
         "d1": ("d1", True, 0, {"serialNumber": "SN1", "totalStorageSpaceInBytes": 512},
                [{"actionName": "sync", "actionState": "done"}], False),
@@ -509,6 +517,8 @@ def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
         "d4": ("d4", True, None, {"serialNumber": "SN4", "totalStorageSpaceInBytes": None},
                None, False),
         "d5": ("d5", None, None, None, [], False),
+        "d6": ("d6", None, None, {"serialNumber": tricky, "totalStorageSpaceInBytes": None},
+               [{"actionName": "\\\\srv\\share", "actionState": tricky}], False),
     }
     names = [f.name for f in DEVICE.fields] + ["_removed"]
 
@@ -531,6 +541,10 @@ def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
     held, link2 = rest.read_odata_delta(
         spark, str(paths[0]), DEVICE, datasource_page_threshold=100
     )
+    plan = held._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "Exchange" not in plan
+    lineage = held._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
     assert rows(held) == expected and link2 == "tok-devices"
 
     # past the threshold with no spill_dir: the walk finishes on the driver

@@ -4,6 +4,8 @@ partition expiry, audit stamp, surrogate keys."""
 from __future__ import annotations
 
 import datetime as dt
+import json
+import re
 
 import pytest
 
@@ -141,6 +143,39 @@ def test_upsert_snapshot_scd1(spark):
     assert got[2]["v"] == "NEW-b"  # matched key replaced
     assert got[1]["v"] == "old-a"  # unmatched history preserved
     assert got[4]["v"] == "NEW-d"  # new key inserted
+
+
+def test_apply_delta_broadcasts_driver_lane_delta(spark, tmp_path):
+    """A delta round read on the driver lane of ``read_odata_delta`` is a
+    local relation of exact size, so ``apply_delta``'s anti-join plans as
+    a broadcast at the session's default threshold: the parquet snapshot
+    is never shuffled.  Upsert, insert and tombstone merge as written."""
+    from pyspark.sql import types as T
+
+    from msgraphdatapipelines_spark.sources import rest
+
+    schema = T.StructType(
+        [T.StructField("id", T.StringType()), T.StructField("v", T.StringType())]
+    )
+    snap = str(tmp_path / "snap")
+    rows = [("a", "old-a"), ("b", "old-b"), ("c", "old-c")]
+    spark.createDataFrame(rows, schema).write.parquet(snap)
+    page = tmp_path / "delta0.json"
+    page.write_text(json.dumps({
+        "value": [
+            {"id": "b", "v": "NEW-b"},
+            {"id": "d", "v": "NEW-d"},
+            {"id": "a", "@removed": {"reason": "deleted"}},
+        ],
+        "@odata.deltaLink": "tok",
+    }))
+    delta, _ = rest.read_odata_delta(spark, str(page), schema)
+    merged = sinks.apply_delta(spark.read.parquet(snap), delta, ["id"])
+    got = sorted(tuple(r) for r in merged.collect())
+    assert got == [("b", "NEW-b"), ("c", "old-c"), ("d", "NEW-d")]
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"BroadcastHashJoin \[id#\d+\], \[id#\d+\], LeftAnti", plan), plan
+    assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_apply_scd2_two_batches_chain_integrity(spark):
