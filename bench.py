@@ -2,7 +2,7 @@
 
 Prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": ...}
+     "queries": {"q1": sec, ...}, "sf": ..., "control_sec": <host control>}
 
 Per BASELINE.md: median of 3 warm runs per query, local[$SPARK_GRAFT_CPUS],
 AQE on.  Each timing forces the full plan with a count-ish action
@@ -36,6 +36,52 @@ def _input_bytes(sf_dir: str) -> int:
     return total
 
 
+def host_control_s() -> float:
+    """BASELINE.md's host control: the 20M-iteration pure-Python loop,
+    run at a tenth of its length and scaled (perfbench's
+    ``host_control_s``).  A reading well above ~1 s means a slow or
+    throttled host, so compare suites only at similar controls."""
+    iters = 2_000_000
+    t0 = time.perf_counter()
+    x = 0
+    for i in range(iters):
+        x += i
+    return (time.perf_counter() - t0) * (20_000_000 / iters)
+
+
+def release_stale_pins(spark) -> None:
+    """Drop the persisted RDDs a finished row left behind (r17, suite
+    session hygiene): the eager localCheckpoint pins some query fns
+    create (LSH signature table, per-round closure labels) are
+    per-invocation, but they linger until the JVM context cleaner runs,
+    so executor storage pressure accumulated ACROSS rows and in-suite
+    numbers drifted from isolated ones (r16: canonical 15.25 s in-suite
+    vs 6.3 s isolated).  Called BETWEEN rows only, never inside a timed
+    region.
+
+    Checkpointed RDDs are skipped: a localCheckpoint's data IS the
+    persisted blocks of its RDD, so unpersisting it would leave any
+    frame still holding the checkpoint unreadable.  Those pins go
+    through the context cleaner instead: a Python and a JVM garbage
+    collection let it drop every checkpoint no frame references any
+    more.  A failing sweep prints one line to stderr instead of passing
+    silently."""
+    import gc
+
+    try:
+        sc = spark.sparkContext
+        it = sc._jsc.sc().getPersistentRDDs().iterator()
+        while it.hasNext():
+            rdd = it.next()._2()
+            if not rdd.isCheckpointed():
+                rdd.unpersist(False)
+        gc.collect()
+        sc._jvm.System.gc()
+    except Exception as e:  # noqa: BLE001 — hygiene only; never fail the bench
+        first = (str(e).strip().splitlines() or [""])[0]
+        print(f"# release_stale_pins: sweep failed: {type(e).__name__}: {first}", file=sys.stderr)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -47,6 +93,7 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_SCALE_CONF"):
         extra = scale_conf(_input_bytes(sf_dir))
         print(f"# scale_conf({_input_bytes(sf_dir)}): {extra}", file=sys.stderr)
+    control = host_control_s()
     spark = get_spark("bench", extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -61,28 +108,6 @@ def main() -> None:
     if os.environ.get("BENCH_INCLUDE_DEMOTED"):
         rows.update(DEMOTED)
 
-    def _release_stale_pins() -> None:
-        """r17 OPT (r16 VERDICT item 7, suite session hygiene): the eager
-        localCheckpoint pins some query fns create (LSH signature table,
-        per-round closure labels) are per-invocation — after a row's last
-        timed run its blocks are garbage, but they linger until the JVM
-        context cleaner runs, so executor storage pressure accumulates
-        ACROSS rows and in-suite numbers drift from isolated ones
-        (measured r16: canonical 15.25 s in-suite vs 6.3 s isolated at
-        session start).  Dropping every persisted RDD BETWEEN rows (never
-        inside the timed region — each timed run re-executes q.fn and
-        re-pins its own blocks) makes each row start from the same clean
-        storage state an isolated run sees.  Nothing long-lived persists
-        RDDs across rows: standing artifacts are parquet, the serve-plan
-        memo holds unexecuted plans."""
-        try:
-            jsc = spark.sparkContext._jsc.sc()
-            it = jsc.getPersistentRDDs().iterator()
-            while it.hasNext():
-                it.next()._2().unpersist(False)
-        except Exception:  # noqa: BLE001 — hygiene only; never fail the bench
-            pass
-
     timings: dict[str, float] = {}
     for name, q in rows.items():
         if name in skip or (only and name not in only):
@@ -95,7 +120,7 @@ def main() -> None:
             q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             samples.append(time.monotonic() - t0)
         timings[name] = round(statistics.median(samples), 3)
-        _release_stale_pins()
+        release_stale_pins(spark)
 
     total = round(sum(timings.values()), 3)
     print(
@@ -106,6 +131,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": sf,
+                "control_sec": round(control, 3),
             }
         )
     )

@@ -123,7 +123,7 @@ def serve_cached(
     contains the ``msgdp_rc_`` path and none of the source tables).  The
     rename-committed marker makes a torn write invisible: no marker, no
     hit, rebuild."""
-    from .sinks import _fs_for
+    from .sinks import _fs_for, _hpath
 
     import uuid
 
@@ -132,7 +132,7 @@ def serve_cached(
     marker = os.path.join(root, "_rc_ready")
     data = os.path.join(root, "data")
     fs, _, jvm = _fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = _hpath(jvm)
     if not fs.exists(hpath(marker)):
         # Concurrent-builder safety: never write into the final `data`
         # directory.  Each builder materializes under a private
@@ -216,7 +216,7 @@ def result_cache_forget(
     steady state this function exists to reach)."""
     import json
 
-    from .sinks import _fs_for
+    from .sinks import _fs_for, _hpath
 
     base = base_dir or tempfile.gettempdir()
     # canonicalize BOTH sides through makeQualified (r16, ADVICE): an
@@ -225,7 +225,7 @@ def result_cache_forget(
     # missed erasure here is a compliance failure, not a cache miss
     target = _canon_input(spark, input_path)
     fs, bp, jvm = _fs_for(spark, base)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = _hpath(jvm)
     removed, kept = [], []
     if not fs.exists(bp):
         return {"removed": removed, "kept": kept}

@@ -61,11 +61,10 @@ def _harden(spark: SparkSession) -> None:
     driver latency repeated hundreds of times per bench suite.  The pins
     are static per process (two constants + two env-derived values), so a
     per-session marker makes repeats free."""
-    import os as _os
+    from ..session import stream_checksum_conf
 
-    mark = "_msgdp_hardened_" + (
-        "1" if _os.environ.get("SPARK_GRAFT_STREAM_CHECKSUM") else "0"
-    )
+    checksum = stream_checksum_conf()
+    mark = "_msgdp_hardened_" + checksum
     if getattr(spark, mark, False):
         return
     for k, v in (
@@ -78,10 +77,7 @@ def _harden(spark: SparkSession) -> None:
         # files at scale); measured 2× on the streaming rows' bench
         # medians.  Read at stream start, so setting it here covers
         # driver-handed sessions too.
-        (
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            "true" if _os.environ.get("SPARK_GRAFT_STREAM_CHECKSUM") else "false",
-        ),
+        ("spark.sql.streaming.checkpoint.fileChecksum.enabled", checksum),
     ):
         try:
             spark.conf.set(k, v)

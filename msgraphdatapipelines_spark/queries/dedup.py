@@ -815,7 +815,7 @@ def prefix_index_current_gen(spark: SparkSession, root: str) -> str | None:
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    return _gs.current_gen(fs, jvm.org.apache.hadoop.fs.Path, root)
+    return _gs.current_gen(fs, sinks._hpath(jvm), root)
 
 
 def _live_leases(fs, hpath, root: str) -> list[str]:
@@ -855,7 +855,7 @@ def prefix_index_build(
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     gens = _committed_gens(fs, hpath, root)
     if not gens:
         grams = docs.select(
@@ -984,7 +984,7 @@ def prefix_index_append(
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     bid = bid or uuid.uuid4().hex[:12]
     for _ in range(6):
         gen = prefix_index_current_gen(spark, root)
@@ -1123,7 +1123,7 @@ def _ensure_incremental_prefix_index(
 
     root = prefix_index_root(sf_dir, 3, 0.5, variant="inc")
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     marker = f"{root}/_inc_ready"
     if not fs.exists(hpath(marker)):
         docs = load(spark, sf_dir, "documents")
@@ -1209,7 +1209,7 @@ def _read_forgotten_docs(spark: SparkSession, root: str) -> DataFrame | None:
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     if not fs.exists(hpath(f"{root}/_forgotten")):
         return None
     return spark.read.option("recursiveFileLookup", "true").parquet(
@@ -1287,7 +1287,7 @@ def prefix_index_compact(
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     # lease + heartbeat discipline via the shared protocol module (r13):
     # a LIVE compact renews the lease mtime every TTL/4 (a long fold must
     # not release waiting appenders into the lost-batch window); a
@@ -1469,7 +1469,7 @@ def _ensure_compacted_prefix_index(spark: SparkSession, sf_dir: str) -> str:
 
     root = prefix_index_root(sf_dir, 3, 0.5, variant="inccompact")
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     marker = f"{root}/_cmp_ready"
     if not fs.exists(hpath(marker)):
         docs = load(spark, sf_dir, "documents")
@@ -1541,7 +1541,7 @@ def read_prefix_index_bucketed(
     if gen is None:
         raise FileNotFoundError(f"no committed prefix-gram generation under {root}")
     fs, _, jvm = sinks._fs_for(spark, gen)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     bids = sorted(
         st.getPath().getName()
         for st in fs.listStatus(hpath(f"{gen}/prefixes"))
@@ -1577,7 +1577,7 @@ def _ensure_forgotten_prefix_index(spark: SparkSession, sf_dir: str) -> str:
 
     root = prefix_index_root(sf_dir, 3, 0.5, variant="forgotten")
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     marker = f"{root}/_fgt_ready"
     if not fs.exists(hpath(marker)):
         docs = load(spark, sf_dir, "documents")

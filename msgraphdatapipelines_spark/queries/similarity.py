@@ -1339,7 +1339,7 @@ def _load_models_for(spark: SparkSession, root: str, version: int) -> dict:
     st = _plan_cache_state(spark, root, version)
     if "models" not in st:
         fs, _, jvm = sinks._fs_for(spark, root)
-        hpath = jvm.org.apache.hadoop.fs.Path
+        hpath = sinks._hpath(jvm)
         p = f"{root}/models.v{version}.json"
         if fs.exists(hpath(p)):
             st["models"] = _read_json_fs(fs, hpath, p)
@@ -1392,7 +1392,7 @@ def ann_index_forget(spark: SparkSession, root: str, ids: list) -> int:
     )
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     with _gs.compaction_lease(fs, hpath, root):
         recover_batches(spark, root)
         ids_df = spark.createDataFrame([(int(i),) for i in ids], "cid: long")
@@ -1552,7 +1552,7 @@ def ann_rebalance_if_skewed(
     )
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     recover_batches(spark, root)
     # r15 (ADVICE): capture the batch-dir listing at ENTRY — the
     # earliest instant this function can vouch the caller's corpus
@@ -2555,7 +2555,7 @@ def _load_label_lists(
 
     root = standing_index_root(sf_dir)
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     if version is None:
         version = sinks._read_latest_version(spark, f"{root}/snapshot")
     # v1 = the initial build's unversioned layout; rebalances publish
@@ -2597,7 +2597,7 @@ def _load_range_lists(
 
     root = standing_index_root(sf_dir)
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     if version is None:
         version = sinks._read_latest_version(spark, f"{root}/snapshot")
     st = _plan_cache_state(spark, root, version)
@@ -2794,7 +2794,7 @@ def _ensure_forgotten_ann_index(spark: SparkSession, sf_dir: str) -> str:
 
     root = standing_index_root(sf_dir, variant="forgotten")
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     marker = f"{root}/_fgt_ready"
     if not fs.exists(hpath(marker)):
         emb = load(spark, sf_dir, "embeddings")

@@ -1490,7 +1490,7 @@ def lexicon_append_batch(
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     existing = _lex_batch_ids(spark, root)
     k = bid if bid is not None else ((existing[-1] + 1) if existing else 0)
     dst_tf = hpath(f"{root}/batches/tf/batch_id={k}")
@@ -1564,7 +1564,7 @@ def lexicon_compact(
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     with _gs.compaction_lease(fs, hpath, root, ttl_s=_LEASE_TTL_S):
         bids = _lex_full_bids(spark, root)
         if not bids:
@@ -1686,7 +1686,7 @@ def read_lexicon(spark: SparkSession, root: str):
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     gen = _gs.current_gen(fs, hpath, root)
     if gen is None:
         raise FileNotFoundError(f"no committed lexicon generation under {root}")
@@ -1711,7 +1711,7 @@ def ensure_standing_lexicon(spark: SparkSession, sf_dir: str, docs: DataFrame | 
 
     root = lexicon_root(sf_dir)
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     if _gs.current_gen(fs, hpath, root) is None:
         if docs is None:
             docs = load_spread(spark, sf_dir, "documents", "doc_id")
@@ -1777,7 +1777,7 @@ def _bm25_from_lexicon(
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     gen = _gs.current_gen(fs, hpath, root)
     if gen is None:
         raise FileNotFoundError(f"no committed lexicon generation under {root}")
@@ -1866,7 +1866,7 @@ def _ensure_forgotten_lexicon(spark: SparkSession, sf_dir: str) -> str:
 
     root = lexicon_root(sf_dir, variant="forgotten")
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     marker = f"{root}/_fgt_ready"
     if not fs.exists(hpath(marker)):
         docs = load_spread(spark, sf_dir, "documents", "doc_id")
@@ -1958,7 +1958,7 @@ def hybrid_search_rrf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     version = sinks._read_latest_version(spark, f"{ann_root}/snapshot")
     lroot = lexicon_root(sf_dir)
     fs, _, jvm = sinks._fs_for(spark, lroot)
-    gen = _gs.current_gen(fs, jvm.org.apache.hadoop.fs.Path, lroot)
+    gen = _gs.current_gen(fs, sinks._hpath(jvm), lroot)
 
     def _build():
         docs = load(spark, sf_dir, "documents")

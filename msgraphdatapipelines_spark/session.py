@@ -18,6 +18,12 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def stream_checksum_conf() -> str:
+    """``spark.sql.streaming.checkpoint.fileChecksum.enabled``: off unless
+    ``SPARK_GRAFT_STREAM_CHECKSUM`` is set (why: see :func:`get_spark`)."""
+    return "true" if os.environ.get("SPARK_GRAFT_STREAM_CHECKSUM") else "false"
+
+
 def get_spark(
     app_name: str = "msgraphdatapipelines-spark",
     cpus: int | None = None,
@@ -56,10 +62,7 @@ def get_spark(
         # 1.9 → 1.5 s).  Corruption detection for checkpoint files falls
         # back to the filesystem's own integrity (local-FS CRC / object
         # store etags); set SPARK_GRAFT_STREAM_CHECKSUM=1 to re-enable.
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            "true" if os.environ.get("SPARK_GRAFT_STREAM_CHECKSUM") else "false",
-        )
+        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", stream_checksum_conf())
     )
     if SparkSession.getActiveSession() is None:
         b = b.master(f"local[{n}]")

@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 
 LOAD_STAMP = "timeGenerated"
 LOAD_DATE = "loadDate"
+# target size of one written data file: write_snapshot's sizing rule and
+# compact_parquet / compact_snapshot's default
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+# hidden per-version schema sidecar (Spark's file index skips ``_`` names)
+SCHEMA_FILE = "_schema.json"
 
 
 def stamp(df: DataFrame, at: _dt.datetime | None = None) -> DataFrame:
@@ -182,7 +187,7 @@ def expire_old_partitions(
     (`Prepare-SQLDatabase.sql:110`) at partition granularity.
     """
     sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001 — py4j bridge
+    hpath = _hpath(sc._jvm)(path)  # noqa: SLF001 — py4j bridge
     fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
     if not fs.exists(hpath):
         return []
@@ -454,7 +459,7 @@ def ensure_bucketed_table(
     import uuid
 
     fs, _, jvm = _fs_for(spark, path)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = _hpath(jvm)
     marker = f"{path}/_bucketed_ready"
     if not fs.exists(hpath(marker)):
         stage = f"{path}.stage.{uuid.uuid4().hex[:12]}"
@@ -609,7 +614,7 @@ def compact_parquet(
     spark: SparkSession,
     path: str,
     out_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
 ) -> dict:
     """Small-file compaction — the table-maintenance pass every streaming /
     incremental sink eventually needs (micro-batch appends and per-delta
@@ -632,8 +637,9 @@ def compact_parquet(
     Returns ``{"in_files", "in_bytes", "out_files"}``.
     """
     jvm = spark.sparkContext._jvm
+    hp = _hpath(jvm)
     jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    hpath = hp(path)
     fs = hpath.getFileSystem(jsc.hadoopConfiguration())
     in_files = in_bytes = 0
     it = fs.listFiles(hpath, True)
@@ -651,7 +657,7 @@ def compact_parquet(
     n_out = max(1, -(-in_bytes // target_file_bytes))  # ceil
     df = spark.read.parquet(path)
     df.repartition(n_out).write.mode("overwrite").parquet(out_path)
-    opath = jvm.org.apache.hadoop.fs.Path(out_path)
+    opath = hp(out_path)
     ofs = opath.getFileSystem(jsc.hadoopConfiguration())
     out_files = 0
     oit = ofs.listFiles(opath, True)
@@ -663,9 +669,17 @@ def compact_parquet(
     return {"in_files": in_files, "in_bytes": in_bytes, "out_files": out_files}
 
 
+def _hpath(jvm):
+    """The Hadoop ``Path`` class in one py4j round trip.  The attribute
+    walk ``jvm.org.apache.hadoop.fs.Path`` costs five reflection calls,
+    four of them failed class loads (``org``, ``org.apache``, …) that
+    scan the whole classpath before py4j falls back to a package."""
+    return getattr(jvm, "org.apache.hadoop.fs.Path")
+
+
 def _fs_for(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = _hpath(jvm)(path)
     return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p, jvm
 
 
@@ -730,6 +744,7 @@ def ensure_versioned_layout(spark: SparkSession, root: str) -> int | None:
     snapshot, moved even if a crashed earlier migration already created
     ``v=1`` (the resume case)."""
     fs, p, jvm = _fs_for(spark, root)
+    hp = _hpath(jvm)
     if not fs.exists(p):
         return None
     if _resolve_latest(fs, jvm, root) is not None:
@@ -741,10 +756,10 @@ def ensure_versioned_layout(spark: SparkSession, root: str) -> int | None:
     ]
     if not any(fp.getName().endswith(".parquet") for fp in flat):
         return None
-    vdir = jvm.org.apache.hadoop.fs.Path(f"{root}/v=1")
+    vdir = hp(f"{root}/v=1")
     fs.mkdirs(vdir)
     for fp in flat:
-        fs.rename(fp, jvm.org.apache.hadoop.fs.Path(f"{root}/v=1/{fp.getName()}"))
+        fs.rename(fp, hp(f"{root}/v=1/{fp.getName()}"))
     _flip_latest(spark, root, 1)
     return 1
 
@@ -804,6 +819,20 @@ def write_snapshot(
     :func:`read_snapshot_bloom_pruned` equality skipping on columns the
     layout is not clustered by.
 
+    FILE SIZING: the frame is coalesced to ``ceil(estimated bytes /
+    TARGET_FILE_BYTES)`` partitions (128 MiB), the estimate being the
+    optimized plan's ``sizeInBytes``, so a small entity publishes one
+    data file instead of one per upstream partition.  Two exceptions
+    keep the caller's partitioning: ``zonemap_cols`` / ``bloom_cols``
+    (their manifests index file boundaries, so the layout is the
+    caller's choice), and a frame the optimizer cannot size (estimate
+    ≥ ``spark.sql.defaultSizeInBytes``, e.g. an RDD-backed frame).
+
+    SCHEMA SIDECAR: the frame's ``schema.json()`` is written to the
+    hidden ``_schema.json`` in the stage before the claim, so it is part
+    of the claim manifest like every data file; :func:`read_snapshot`
+    reads it instead of running a parquet schema-inference job.
+
     Returns the new version number.
     """
     import uuid
@@ -812,7 +841,11 @@ def write_snapshot(
     uid = uuid.uuid4().hex[:8]
     stage_name = f"v.stage.{uid}"
     stage = f"{root}/{stage_name}"
-    df.write.mode("overwrite").parquet(stage)
+    fs, _, jvm = _fs_for(spark, root)
+    hp = _hpath(jvm)
+    out = df if zonemap_cols or bloom_cols else _right_sized(df)
+    out.write.mode("overwrite").parquet(stage)
+    _write_schema(fs, hp, stage, df.schema)
     # manifests are built INSIDE the staged dir and travel with the
     # claim-rename; recorded paths relocate, which the pruned readers'
     # table-relative identity (_table_suffix) already resolves
@@ -820,26 +853,64 @@ def write_snapshot(
         build_zonemap(spark, stage, zonemap_cols)
     if bloom_cols:
         build_bloom_manifest(spark, stage, bloom_cols)
-    fs, _, jvm = _fs_for(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path
-    new_v = _claim_publish(spark, root, stage, stage_name, uid)
+    new_v, versions = _claim_publish(spark, root, stage, stage_name, uid)
     _flip_latest(spark, root, new_v)
     if keep_last is not None:
-        for v in snapshot_versions(spark, root)[:-keep_last]:
-            if v != new_v:
-                fs.delete(hp(f"{root}/v={v}"), True)
+        for v in versions[:-keep_last]:
+            fs.delete(hp(f"{root}/v={v}"), True)
     return new_v
+
+
+def _right_sized(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to ``ceil(estimated bytes / TARGET_FILE_BYTES)``
+    partitions, or unchanged when the plan's size is unknown."""
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if est >= df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes():
+        return df
+    # coalesce never adds partitions, so the int cap cannot change the plan
+    return df.coalesce(min(max(1, -(-est // TARGET_FILE_BYTES)), 2**31 - 1))
+
+
+def _write_schema(fs, hp, vdir: str, schema) -> None:
+    """Write ``schema`` as the version directory's ``_schema.json``."""
+    out = fs.create(hp(f"{vdir}/{SCHEMA_FILE}"), True)
+    out.write(bytearray(schema.json().encode("utf-8")))
+    out.close()
+
+
+def _read_schema(spark: SparkSession, vdir: str):
+    """The version's ``_schema.json`` as a ``StructType``, or None for a
+    version published without one."""
+    import json
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.types import StructType
+
+    fs, p, _ = _fs_for(spark, f"{vdir}/{SCHEMA_FILE}")
+    try:
+        stream = fs.open(p)
+    except Py4JJavaError as e:
+        if "FileNotFoundException" in str(e):
+            return None
+        raise
+    try:
+        return StructType.fromJson(json.loads(bytes(stream.readAllBytes())))
+    finally:
+        stream.close()
 
 
 def _claim_publish(
     spark: SparkSession, root: str, stage: str, stage_name: str, uid: str
-) -> int:
+) -> tuple[int, list[int]]:
     """The CLAIM-RENAME version publish shared by every snapshot writer
     (r15: factored out of write_snapshot so compact_snapshot retires the
     last direct-to-``v=N`` write path).  ``stage`` must be a complete
     staged version dir named ``{root}/{stage_name}``; returns the
-    version number the stage landed on.  The pointer is NOT flipped —
-    that stays the caller's commit.
+    version number the stage landed on, and the sorted versions listing
+    the claim started from plus that version (``write_snapshot``'s
+    ``keep_last`` expires from it rather than listing again; versions
+    a racer claimed meanwhile are absent, so expiry only under-deletes).
+    The pointer is NOT flipped — that stays the caller's commit.
 
     The sentinel carries the stage's FULL relative file manifest (r15,
     ADVICE posture item): on an atomic-rename store the claim's
@@ -854,7 +925,7 @@ def _claim_publish(
     nesting — two racers could interleave into one dir); on copy-rename
     stores run a single publisher per root."""
     fs, _, jvm = _fs_for(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path
+    hp = _hpath(jvm)
     manifest = _rel_files(fs, hp, stage)
     out = fs.create(hp(f"{stage}/_PUB_{uid}"), True)
     out.write(bytearray("\n".join(manifest).encode("utf-8")))
@@ -889,7 +960,7 @@ def _claim_publish(
                     f"orphan and re-publish (single-publisher only on "
                     f"copy-rename stores)"
                 )
-            return new_v  # v=new_v is OURS and complete
+            return new_v, sorted(set(versions) | {new_v})  # v=new_v is OURS and complete
         nested = f"{dst}/{stage_name}"
         if fs.exists(hp(f"{nested}/_PUB_{uid}")):
             # a racer owns new_v and Hadoop nested our stage inside its
@@ -961,7 +1032,7 @@ def _latest_markers(fs, jvm, root: str) -> list[int]:
         import re
 
         _LATEST_MARKER_RE = re.compile(r"^_LATEST\.v(\d+)$")
-    p = jvm.org.apache.hadoop.fs.Path(root)
+    p = _hpath(jvm)(root)
     if not fs.exists(p):
         return []
     out = []
@@ -978,7 +1049,7 @@ def _resolve_latest(fs, jvm, root: str) -> int | None:
     marks = _latest_markers(fs, jvm, root)
     if marks:
         return marks[-1]
-    latest = jvm.org.apache.hadoop.fs.Path(f"{root}/_LATEST")
+    latest = _hpath(jvm)(f"{root}/_LATEST")
     if not fs.exists(latest):
         return None
     try:
@@ -1011,7 +1082,7 @@ def _flip_latest(spark: SparkSession, root: str, new_v: int) -> None:
     A crash before (1)'s rename leaves the previous pointer fully live;
     a crash after it IS the commit."""
     fs, _, jvm = _fs_for(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path
+    hp = _hpath(jvm)
     import uuid
 
     marker = f"{root}/_LATEST.v{new_v}"
@@ -1047,7 +1118,7 @@ def _flip_latest(spark: SparkSession, root: str, new_v: int) -> None:
 def compact_snapshot(
     spark: SparkSession,
     root: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     zonemap_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
 ) -> dict:
@@ -1073,6 +1144,12 @@ def compact_snapshot(
     ``write_snapshot``'s ``keep_last`` on the next publish or
     ``vacuum_snapshots`` outside one.
 
+    The output is sized by ``target_file_bytes`` over the on-disk bytes
+    (default ``TARGET_FILE_BYTES``, the target ``write_snapshot`` sizes
+    its estimate by).  The new version gets the ``_schema.json``
+    sidecar like a ``write_snapshot`` version, holding the source
+    version's schema (its sidecar, or inferred when it has none).
+
     Returns ``compact_parquet``'s stats plus ``{"from_version", "version"}``.
     """
     versions = snapshot_versions(spark, root)
@@ -1091,6 +1168,8 @@ def compact_snapshot(
     stage_name = f"v.stage.{uid}"
     stage = f"{root}/{stage_name}"
     stats = compact_parquet(spark, f"{root}/v={cur_v}", stage, target_file_bytes)
+    fs, _, jvm = _fs_for(spark, root)
+    _write_schema(fs, _hpath(jvm), stage, read_snapshot(spark, root, cur_v).schema)
     # manifests refreshed at commit (r10): compaction changes the file set,
     # so zone maps AND Bloom filters must be rebuilt on the NEW version
     # before the flip — this is also how a Bloom table streaming-appended
@@ -1100,17 +1179,25 @@ def compact_snapshot(
         build_zonemap(spark, stage, zonemap_cols)
     if bloom_cols:
         build_bloom_manifest(spark, stage, bloom_cols)
-    new_v = _claim_publish(spark, root, stage, stage_name, uid)
+    new_v, _ = _claim_publish(spark, root, stage, stage_name, uid)
     _flip_latest(spark, root, new_v)
     return {**stats, "from_version": cur_v, "version": new_v}
 
 
 def read_snapshot(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
     """Read a snapshot table: the ``_LATEST``-pointed version by default,
-    or an explicit historical ``version``."""
+    or an explicit historical ``version``.
+
+    The schema comes from the version's ``_schema.json`` sidecar
+    (written by :func:`write_snapshot` / :func:`compact_snapshot`), so
+    the read submits no Spark job; a version without the sidecar falls
+    back to parquet schema inference.  Either way the columns come back
+    nullable, as Spark's file sources return them."""
     if version is None:
         version = _read_latest_version(spark, root)
-    return spark.read.parquet(f"{root}/v={version}")
+    vdir = f"{root}/v={version}"
+    schema = _read_schema(spark, vdir)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(vdir)
 
 
 def read_snapshot_pruned(
@@ -1131,9 +1218,7 @@ def read_snapshot_pruned(
     vdir = f"{root}/v={version}"
     rows = _zonemap_rows_cached(spark, vdir)  # immutable version dir
     if rows is None:
-        from pyspark.sql import functions as F
-
-        return spark.read.parquet(vdir).filter(F.col(col).between(lo, hi))
+        return read_snapshot(spark, root, version).filter(F.col(col).between(lo, hi))
     return scan_pruned(spark, vdir, col, lo, hi, _manifest_rows=rows)
 
 
@@ -1153,10 +1238,8 @@ def read_snapshot_bloom_pruned(
         version = _read_latest_version(spark, root)
     vdir = f"{root}/v={version}"
     fs, _, jvm = _fs_for(spark, vdir)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{vdir}/_bloom_{col}")):
-        from pyspark.sql import functions as F
-
-        return spark.read.parquet(vdir).filter(F.col(col) == value)
+    if not fs.exists(_hpath(jvm)(f"{vdir}/_bloom_{col}")):
+        return read_snapshot(spark, root, version).filter(F.col(col) == value)
     return scan_bloom_pruned(spark, vdir, col, value)
 
 
@@ -1181,7 +1264,7 @@ def _read_latest_version(spark: SparkSession, root: str) -> int:
         # UNCOMMITTED crash scar (partial part files from the old
         # direct-to-v=N protocol); serving that silently would trade a
         # loud FileNotFoundError for possibly-incomplete data.
-        hp = jvm.org.apache.hadoop.fs.Path
+        hp = _hpath(jvm)
         for v in reversed(versions):
             vdir = f"{root}/v={v}"
             committed = fs.exists(hp(f"{vdir}/_SUCCESS")) or any(
@@ -1243,7 +1326,7 @@ def vacuum_snapshots(
     import time as _time
 
     fs, _, jvm = _fs_for(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path
+    hp = _hpath(jvm)
     removed_stages: list[str] = []
     now_ms = None
     if fs.exists(hp(root)):
@@ -1278,7 +1361,7 @@ def vacuum_snapshots(
     keep = set(committed[-max(keep_last, 1):]) | {cur}
     expired = [v for v in committed if v not in keep]
     for v in orphans + expired:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/v={v}"), True)
+        fs.delete(hp(f"{root}/v={v}"), True)
     return {
         "removed_orphans": orphans,
         "removed_expired": expired,
@@ -1428,6 +1511,7 @@ def scd2_store_begin_round(spark: SparkSession, root: str, schema) -> tuple[Data
     meta = _scd2_meta_schema(schema)
     cur_root = f"{root}/current"
     fs, _, jvm = _fs_for(spark, root)
+    hp = _hpath(jvm)
     if not snapshot_exists(spark, cur_root):
         legacy = None
         if snapshot_exists(spark, root):  # r8 whole-history versioned layout
@@ -1446,10 +1530,10 @@ def scd2_store_begin_round(spark: SparkSession, root: str, schema) -> tuple[Data
         ptr = _read_latest_version(spark, cur_root)
         for v in _list_numbered_dirs(spark, cur_root, "v="):
             if v > ptr:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{cur_root}/v={v}"), True)
+                fs.delete(hp(f"{cur_root}/v={v}"), True)
         for r in _list_numbered_dirs(spark, f"{root}/closed", "r="):
             if r > ptr:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/closed/r={r}"), True)
+                fs.delete(hp(f"{root}/closed/r={r}"), True)
         return read_snapshot(spark, cur_root), ptr + 1
     return spark.createDataFrame([], meta), 1
 
@@ -1479,7 +1563,7 @@ def scd2_store_commit_round(
         fs, _, jvm = _fs_for(spark, root)
         for v in snapshot_versions(spark, cur_root)[:-keep_last]:
             if v != new_v:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{cur_root}/v={v}"), True)
+                fs.delete(_hpath(jvm)(f"{cur_root}/v={v}"), True)
     return {"version": new_v, "closed_rows_written": n_closed}
 
 
@@ -1551,7 +1635,7 @@ def forget_keys(
         fs, _, jvm = _fs_for(spark, root)
         for v in snapshot_versions(spark, root):
             if v != new_v:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{root}/v={v}"), True)
+                fs.delete(_hpath(jvm)(f"{root}/v={v}"), True)
                 erased.append(v)
     # r16: an erasure must also drop retained planning state — cached
     # zonemap manifests under this root carry per-file min/max of the
@@ -1597,18 +1681,17 @@ def scd2_forget_keys(
     """
     cur_root = f"{root}/current"
     fs, _, jvm = _fs_for(spark, root)
+    hp = _hpath(jvm)
     pk = F.broadcast(keys_df.select(*key_cols).distinct())
 
     # recovery: complete any crashed previous forget's tmp swaps
     closed_root = f"{root}/closed"
-    cp = jvm.org.apache.hadoop.fs.Path(closed_root)
+    cp = hp(closed_root)
     if fs.exists(cp):
         for st in fs.listStatus(cp):
             name = st.getPath().getName()
             if name.startswith(".forget_tmp_r="):
-                final = jvm.org.apache.hadoop.fs.Path(
-                    f"{closed_root}/{name[len('.forget_tmp_'):]}"
-                )
+                final = hp(f"{closed_root}/{name[len('.forget_tmp_'):]}")
                 if fs.exists(final):
                     fs.delete(st.getPath(), True)  # step-1 crash: discard
                 else:
@@ -1622,7 +1705,7 @@ def scd2_forget_keys(
     n_after = read_snapshot(spark, cur_root).count()
     for v in snapshot_versions(spark, cur_root):
         if v != new_v:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{cur_root}/v={v}"), True)
+            fs.delete(hp(f"{cur_root}/v={v}"), True)
 
     # scrub every closed increment that holds a forgotten key
     reader_schema = _scd2_meta_schema(schema) if schema is not None else cur.schema
@@ -1634,11 +1717,8 @@ def scd2_forget_keys(
             continue
         tmp = f"{closed_root}/.forget_tmp_r={r}"
         inc.join(pk, key_cols, "left_anti").write.mode("overwrite").parquet(tmp)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(inc_path), True)
-        fs.rename(
-            jvm.org.apache.hadoop.fs.Path(tmp),
-            jvm.org.apache.hadoop.fs.Path(inc_path),
-        )
+        fs.delete(hp(inc_path), True)
+        fs.rename(hp(tmp), hp(inc_path))
         rewritten.append(r)
     return {
         "current_version": new_v,
@@ -1808,7 +1888,7 @@ def refresh_zonemap(spark: SparkSession, path: str, cols: list[str]) -> dict:
         stage_name = f"_zonemap.stage.{uid}"
         zm_stage = f"{path}/{stage_name}"
         merged.coalesce(1).write.mode("overwrite").parquet(zm_stage)
-        hp = jvm.org.apache.hadoop.fs.Path
+        hp = _hpath(jvm)
         sent = fs.create(hp(f"{zm_stage}/_SWAP_{uid}"), True)
         sent.write(b"1")
         sent.close()
@@ -1862,7 +1942,7 @@ def _restore_zonemap_aside(spark: SparkSession, path: str) -> bool:
     and delete the rest.  Returns True iff a manifest was restored."""
     zm_path = f"{path}/_zonemap"
     fs, _, jvm = _fs_for(spark, path)
-    hp = jvm.org.apache.hadoop.fs.Path
+    hp = _hpath(jvm)
     if fs.exists(hp(zm_path)):
         return False
     asides = sorted(
@@ -1982,7 +2062,7 @@ def _zonemap_rows_cached(spark: SparkSession, vdir: str) -> list | None:
     if key in _ZM_CACHE:
         return _ZM_CACHE[key]
     fs, _, jvm = _fs_for(spark, vdir)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{vdir}/_zonemap")):
+    if not fs.exists(_hpath(jvm)(f"{vdir}/_zonemap")):
         return None
     rows = [r.asDict() for r in spark.read.parquet(f"{vdir}/_zonemap").collect()]
     while len(_ZM_CACHE) >= _ZM_CACHE_MAX:
@@ -2027,7 +2107,7 @@ def scan_pruned(
         # filtered scan exactly like read_snapshot_pruned_in does
         # rather than raising.
         fs, _, jvm = _fs_for(spark, path)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_zonemap")):
+        if not fs.exists(_hpath(jvm)(f"{path}/_zonemap")):
             if not _restore_zonemap_aside(spark, path):
                 _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
                 return base.filter(F.col(col).between(lo, hi))
@@ -2094,7 +2174,7 @@ def scan_pruned_in(
         # a crashed refresher must degrade pruned reads to full scans,
         # not break them.
         fs, _, jvm = _fs_for(spark, path)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_zonemap")):
+        if not fs.exists(_hpath(jvm)(f"{path}/_zonemap")):
             if not _restore_zonemap_aside(spark, path):
                 _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
                 return base.filter(F.col(col).isin(vals))
@@ -2215,7 +2295,7 @@ def build_bloom_manifest(
     df = spark.read.parquet(path)
     out = {}
     fs, _, jvm = _fs_for(spark, path)
-    hp = jvm.org.apache.hadoop.fs.Path
+    hp = _hpath(jvm)
     for c in cols:
         root = f"{path}/_bloom_{c}"
         # a REBUILD retires refresh deltas (r14): stale words_delta_*
@@ -2364,7 +2444,7 @@ def scan_bloom_pruned(spark: SparkSession, path: str, col: str, value) -> DataFr
     # pruning is an optimization, never a requirement (matches
     # scan_pruned/scan_pruned_in and read_snapshot_bloom_pruned).
     fs, _, jvm = _fs_for(spark, path)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_bloom_{col}/meta")):
+    if not fs.exists(_hpath(jvm)(f"{path}/_bloom_{col}/meta")):
         _warn_stale(
             StaleManifestError(f"no _bloom_{col} manifest under {path}")
         )

@@ -126,8 +126,9 @@ def _hadoop_fence(throttle_dir: str):
         spark = SparkSession.getActiveSession()
         if spark is None:
             return None
-        jvm = spark._jvm
-        hp = jvm.org.apache.hadoop.fs.Path
+        from ..sinks import _hpath
+
+        hp = _hpath(spark._jvm)
         p = hp(f"{throttle_dir.rstrip('/')}/retry_after_fence")
         fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
         return fs, hp, p

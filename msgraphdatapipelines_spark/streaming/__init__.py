@@ -100,10 +100,9 @@ def suggest_state_partitions(
     """
     import fnmatch
 
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(directory)
-    fs = p.getFileSystem(hconf)
+    from ..sinks import _fs_for
+
+    fs, p, _ = _fs_for(spark, directory)
     total = 0
     for st in fs.listStatus(p):
         name = st.getPath().getName()

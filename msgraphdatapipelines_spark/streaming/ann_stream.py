@@ -89,7 +89,7 @@ def init_ann_stream_root(
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     final = hpath(f"{root}/models.json")
     if fs.exists(final):
         return
@@ -144,7 +144,7 @@ def write_batches_models(spark: SparkSession, batches_dir: str, models: dict) ->
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, batches_dir)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     _write_json_path_atomic(fs, hpath, f"{batches_dir}/_MODELS", models)
 
 
@@ -166,7 +166,7 @@ def resolve_batches_models(spark: SparkSession, root: str) -> dict:
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     stamp = f"{root}/batches/_MODELS"
     if fs.exists(hpath(stamp)):
         return _read_json_path(fs, hpath, stamp)
@@ -237,7 +237,7 @@ def recover_batches(spark: SparkSession, root: str) -> bool:
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     dst = hpath(f"{root}/batches")
     if not fs.exists(hpath(root)):
         return False
@@ -394,7 +394,7 @@ def compact_ann_index(
     from .. import sinks
 
     fs, _, jvm = sinks._fs_for(spark, snapshot_root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    hpath = sinks._hpath(jvm)
     stamp = f"{index_dir}/_MODELS"
     if models_root is None and fs.exists(hpath(stamp)):
         models_root = snapshot_root.rstrip("/").rsplit("/", 1)[0]

@@ -370,8 +370,11 @@ def test_compact_snapshot_transactional(spark, sf_dir, tmp_path, monkeypatch):
 
     root = str(tmp_path / "snap")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    # publish a deliberately fragmented v1 (the streaming-appends shape)
-    assert write_snapshot(orders.repartition(40), root) == 1
+    # publish a deliberately fragmented v1 (the streaming-appends shape):
+    # an RDD-backed frame has no size estimate, so write_snapshot keeps
+    # its 40 partitions instead of right-sizing them to one file
+    fragmented = spark.createDataFrame(orders.rdd, orders.schema).repartition(40)
+    assert write_snapshot(fragmented, root) == 1
 
     stats = compact_snapshot(spark, root, target_file_bytes=1 << 40)
     assert stats["from_version"] == 1 and stats["version"] == 2
@@ -1948,3 +1951,137 @@ def test_zonemap_manifest_cache_reuse_and_erasure_purge(spark, tmp_path):
     )
     assert got == [5, 6, 7, 8, 9]
     assert set(sinks._ZM_CACHE) == before, "mutable paths must not cache"
+
+
+# --- right-sized, self-describing snapshot publish ----------------------------
+
+
+def _part_files(vdir: str) -> list[str]:
+    import os
+
+    return sorted(n for n in os.listdir(vdir) if n.startswith("part-") and n.endswith(".parquet"))
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; return (result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_snapshot_small_frame_one_data_file(spark, tmp_path):
+    """A small frame publishes one data file whatever its partitioning:
+    write_snapshot coalesces to ceil(estimated bytes / 128 MiB)."""
+    root = str(tmp_path / "snap")
+    df = spark.range(100).repartition(6)
+    assert sinks.write_snapshot(df, root) == 1
+    assert len(_part_files(f"{root}/v=1")) == 1
+    assert sorted(r["id"] for r in sinks.read_snapshot(spark, root).collect()) == list(range(100))
+
+
+def test_write_snapshot_keeps_partitioning_when_size_unknown_or_indexed(spark, tmp_path):
+    """The two sizing exceptions: an RDD-backed frame (no size estimate)
+    and a zonemap publish (its manifest indexes file boundaries) keep the
+    caller's partition count."""
+    unknown = spark.createDataFrame(spark.range(60).rdd, "id long").repartition(5)
+    sinks.write_snapshot(unknown, str(tmp_path / "rdd"))
+    assert len(_part_files(str(tmp_path / "rdd" / "v=1"))) == 5
+
+    zroot = str(tmp_path / "zm")
+    sinks.write_snapshot(spark.range(100).repartition(4), zroot, zonemap_cols=["id"])
+    assert len(_part_files(f"{zroot}/v=1")) == 4
+    assert spark.read.parquet(f"{zroot}/v=1/_zonemap").count() == 4
+
+
+def test_read_snapshot_uses_schema_sidecar_without_a_job(spark, tmp_path):
+    """write_snapshot stores the frame's schema as ``_schema.json``;
+    read_snapshot builds its reader from it and submits no Spark job,
+    with the same schema schema inference gives; compact_snapshot's
+    version carries the sidecar too."""
+    import os
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField(
+                "s",
+                T.StructType([T.StructField("a", T.IntegerType(), False), T.StructField("b", T.StringType())]),
+            ),
+            T.StructField("arr", T.ArrayType(T.StructType([T.StructField("x", T.DoubleType(), False)]), False)),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    rows = [
+        (1, (2, "b"), [(1.5,), (2.5,)], dt.datetime(2024, 1, 1, 12, 30)),
+        (2, (3, None), [], None),
+    ]
+    root = str(tmp_path / "snap")
+    sinks.write_snapshot(spark.createDataFrame(rows, schema), root)
+    vdir = f"{root}/v=1"
+    assert T.StructType.fromJson(json.loads(open(f"{vdir}/_schema.json").read())) == schema
+
+    got, jobs = _jobs_in_group(spark, "read_snapshot", lambda: sinks.read_snapshot(spark, root))
+    assert jobs == [], f"read_snapshot submitted jobs {jobs}"
+    inferred, jobs = _jobs_in_group(spark, "inference", lambda: spark.read.parquet(vdir).schema)
+    assert jobs, "parquet schema inference runs a job (the one the sidecar saves)"
+    assert got.schema == inferred
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, spark.createDataFrame(rows, schema).collect()))
+
+    assert sinks.compact_snapshot(spark, root)["version"] == 2
+    assert os.path.exists(f"{root}/v=2/_schema.json")
+    got2, jobs = _jobs_in_group(spark, "read_compacted", lambda: sinks.read_snapshot(spark, root))
+    assert jobs == [] and got2.schema == inferred
+
+
+def test_read_snapshot_without_schema_sidecar_infers(spark, tmp_path):
+    """A version published before the sidecar existed still reads,
+    through parquet schema inference."""
+    import os
+
+    root = str(tmp_path / "snap")
+    df = spark.range(10).withColumn("v", F.col("id") * 2)
+    sinks.write_snapshot(df, root)
+    for name in os.listdir(f"{root}/v=1"):
+        if "_schema.json" in name:
+            os.remove(f"{root}/v=1/{name}")
+    got = sinks.read_snapshot(spark, root)
+    assert got.schema == spark.read.parquet(f"{root}/v=1").schema
+    assert sorted((r["id"], r["v"]) for r in got.collect()) == [(i, 2 * i) for i in range(10)]
+
+
+def test_snapshot_publish_py4j_round_trips(spark, tmp_path, monkeypatch):
+    """The py4j traffic of one tiny publish-and-read cycle
+    (write_snapshot + snapshot_exists + read_snapshot) stays bounded, and
+    no Hadoop ``Path`` is resolved by walking the ``org.apache…``
+    package tree (four failed class loads per walk)."""
+    from py4j.clientserver import ClientServerConnection
+
+    df = spark.range(5)
+    root = str(tmp_path / "snap")
+    sinks.write_snapshot(df, root)  # warm: first-use class loads are not the subject
+    sent: list[str] = []
+    real = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent.append(command)
+        return real(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    sinks.write_snapshot(df, root)
+    assert sinks.snapshot_exists(spark, root)
+    sinks.read_snapshot(spark, root)
+    monkeypatch.undo()
+    walks = [c for c in sent if c.startswith(("r\nu\norg\n", "r\nu\norg.apache\n"))]
+    assert walks == [], f"{len(walks)} package-walk lookups"
+    # memory commands release Python-side proxies whenever the GC runs;
+    # the rest are the calls this code makes (232 when this bound was set)
+    calls = [c for c in sent if not c.startswith("m\n")]
+    assert len(calls) <= 250, f"{len(calls)} py4j round trips"
+

@@ -121,7 +121,7 @@ def main() -> int:
         # oracle must fail ITS row, not exhaust process memory and poison
         # every later query sharing the connection
         c.execute("SET memory_limit='16GB'")
-        c.execute("SET threads=8")
+        c.execute("SET threads=1")
         for t in TABLES:
             c.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
