@@ -1350,9 +1350,9 @@ def _load_models_for(spark: SparkSession, root: str, version: int) -> dict:
                 # file — safe to pin
                 st["models"] = boot
             else:
-                # version > 1 with no versioned file: either a legacy
-                # root or compact's defensive re-key window — serve the
-                # fallback but DON'T cache it, so a late-landing
+                # version > 1 with no versioned file: compact's
+                # defensive re-key window — serve the fallback but
+                # DON'T cache it, so a late-landing
                 # models.v{version}.json isn't shadowed forever
                 return boot
     return st["models"]
@@ -1547,7 +1547,6 @@ def ann_rebalance_if_skewed(
         compact_ann_index,
         read_ann_index,
         recover_batches,
-        resolve_batches_models,
         write_batches_models,
     )
 
@@ -1661,30 +1660,6 @@ def ann_rebalance_if_skewed(
         # so any stage/old dir is a crashed sibling's leftovers — a
         # mid-swap crash is completed first (recover), the rest deleted
         recover_batches(spark, root)
-        # r16 (ADVICE): before sweeping a crashed sibling's STAGE
-        # debris, stamp the surviving batches dir with the models it
-        # resolves to right now (with debris present the resolver keeps
-        # the crash-window answer — bootstrap).  Without this, sweeping
-        # the debris and then dying pre-publish leaves (unstamped
-        # batches + models.v{N}.json + NO debris) — exactly the
-        # legacy-root signature, and the next resolve would mispair the
-        # retrained models onto bootstrap-encoded rows.  Stamped, an
-        # unstamped dir beside versioned models can only mean a genuine
-        # pre-r14 root.
-        if fs.exists(hpath(f"{root}/batches")) and not fs.exists(
-            hpath(f"{root}/batches/_MODELS")
-        ):
-            if any(
-                st.isDirectory()
-                and st.getPath().getName().startswith("batches.stage.")
-                for st in fs.listStatus(hpath(root))
-            ):
-                _write_json_path_atomic(
-                    fs,
-                    hpath,
-                    f"{root}/batches/_MODELS",
-                    resolve_batches_models(spark, root),
-                )
         for st in fs.listStatus(hpath(root)):
             nm = st.getPath().getName()
             if st.isDirectory() and (

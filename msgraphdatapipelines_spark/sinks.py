@@ -720,50 +720,6 @@ def snapshot_versions(spark: SparkSession, root: str) -> list[int]:
     return _list_numbered_dirs(spark, root, "v=")
 
 
-def ensure_versioned_layout(spark: SparkSession, root: str) -> int | None:
-    """Migration guard for pre-versioning snapshot tables (r9, ADVICE):
-    a table written by the OLD flat layout (parquet files directly under
-    ``root``, no ``v=N`` subdirectories) would make
-    ``snapshot_versions() == []`` look like "first round ever", silently
-    resetting sync state and orphaning the prior snapshot's data — the
-    exact restart hazard the versioned layout exists to prevent.
-
-    Called by the sync streams before their bootstrap probe: when ``root``
-    holds top-level parquet files and NO version directories, the files
-    are MOVED (renamed — metadata-only on any sane filesystem, no data
-    copy) into ``v=1`` and the ``_LATEST`` pointer is written, upgrading
-    the table in place.  Crash-safe: a crash mid-move leaves a mixed dir
-    that the next call finishes migrating (renames are idempotent-ish —
-    already-moved files are gone from the top level); the pointer is
-    written LAST.  Returns the migrated version (1), or None when there
-    was nothing to migrate (already versioned, or genuinely empty).
-
-    The commit marker is the ``_LATEST`` pointer itself: a table with a
-    pointer is already versioned (stray top-level files are foreign —
-    untouched); without one, top-level parquet files are the legacy
-    snapshot, moved even if a crashed earlier migration already created
-    ``v=1`` (the resume case)."""
-    fs, p, jvm = _fs_for(spark, root)
-    hp = _hpath(jvm)
-    if not fs.exists(p):
-        return None
-    if _resolve_latest(fs, jvm, root) is not None:
-        return None
-    flat = [
-        st.getPath()
-        for st in fs.listStatus(p)
-        if not st.isDirectory() and not st.getPath().getName().startswith("_LATEST")
-    ]
-    if not any(fp.getName().endswith(".parquet") for fp in flat):
-        return None
-    vdir = hp(f"{root}/v=1")
-    fs.mkdirs(vdir)
-    for fp in flat:
-        fs.rename(fp, hp(f"{root}/v=1/{fp.getName()}"))
-    _flip_latest(spark, root, 1)
-    return 1
-
-
 def write_snapshot(
     df: DataFrame,
     root: str,
@@ -774,12 +730,14 @@ def write_snapshot(
     """Versioned full refresh — the reference's drop-and-reload
     (`Invoke-GraphDataPipelineToAzureSQLDatabase.ps1` truncate+insert;
     SURVEY.md L2) upgraded with HISTORY: every publish writes a NEW
-    ``v=N`` directory and then flips the ``_LATEST`` pointer file, so
+    ``v=N`` directory and then commits it by creating the pointer marker
+    ``_LATEST.v{N}`` (:func:`_flip_latest`), so
 
     - readers never see a half-written table (they resolve the pointer,
-      which only ever names a fully-committed version — the pointer flip
-      is a tiny file replace, the closest a plain filesystem gets to the
-      metastore pointer swap);
+      ``max(_LATEST.v*)``, which only ever names a fully-committed
+      version — the marker is a tiny file created by rename, the closest
+      a plain filesystem gets to the metastore pointer swap; there is no
+      single ``_LATEST`` file);
     - CONCURRENT PUBLISHERS are safe (r14, the `-m race` lane's
       snapshot mode): the table is written to a uid-suffixed staging dir
       and publishes via a CLAIM-RENAME loop — rename the stage onto
@@ -1044,22 +1002,9 @@ def _latest_markers(fs, jvm, root: str) -> list[int]:
 
 
 def _resolve_latest(fs, jvm, root: str) -> int | None:
-    """The committed pointer: max ``_LATEST.v{N}`` marker, else the
-    legacy ``_LATEST`` file's content, else None."""
+    """The committed pointer: the max ``_LATEST.v{N}`` marker, or None."""
     marks = _latest_markers(fs, jvm, root)
-    if marks:
-        return marks[-1]
-    latest = _hpath(jvm)(f"{root}/_LATEST")
-    if not fs.exists(latest):
-        return None
-    try:
-        stream = fs.open(latest)
-        try:
-            return int(bytes(stream.readAllBytes()).decode("ascii").strip())
-        finally:
-            stream.close()
-    except Exception:  # noqa: BLE001 — torn legacy pointer: treat as absent
-        return None
+    return marks[-1] if marks else None
 
 
 def _flip_latest(spark: SparkSession, root: str, new_v: int) -> None:
@@ -1071,13 +1016,12 @@ def _flip_latest(spark: SparkSession, root: str, new_v: int) -> None:
        replace race at all) — readers resolve ``max(_LATEST.v*)``, which
        is monotonic BY CONSTRUCTION: a slower racer's marker can never
        hide a faster one's, the residue the replace design had;
-    2. best-effort refresh of the legacy ``_LATEST`` file to the current
-       max (kept for human inspection and external readers; engine
-       correctness no longer rides on it — a lost legacy update is
-       invisible to ``_resolve_latest``);
-    3. GC markers below the max, keeping the top 2 (the max is created
+    2. GC markers below the max, keeping the top 2 (the max is created
        before anything is deleted, so a concurrent reader's listing
        always contains it).
+
+    There is no single ``_LATEST`` file: a reader outside the engine
+    resolves ``max(_LATEST.v*)`` exactly as ``_resolve_latest`` does.
 
     A crash before (1)'s rename leaves the previous pointer fully live;
     a crash after it IS the commit."""
@@ -1093,22 +1037,7 @@ def _flip_latest(spark: SparkSession, root: str, new_v: int) -> None:
     if not fs.rename(tmp, hp(marker)) and not fs.exists(hp(marker)):
         fs.delete(tmp, False)
         raise OSError(f"could not commit pointer marker {marker}")
-    marks = _latest_markers(fs, jvm, root)
-    cur_max = marks[-1] if marks else new_v
-    # legacy mirror (best-effort replace; never load-bearing)
-    try:
-        ltmp = hp(f"{root}/_LATESTtmp.{uuid.uuid4().hex[:6]}")
-        lout = fs.create(ltmp, True)
-        lout.write(str(cur_max).encode("ascii"))
-        lout.close()
-        legacy = hp(f"{root}/_LATEST")
-        if fs.exists(legacy):
-            fs.delete(legacy, False)
-        if not fs.rename(ltmp, legacy):
-            fs.delete(ltmp, False)
-    except Exception:  # noqa: BLE001 — mirror only
-        pass
-    for v in marks[:-2]:
+    for v in _latest_markers(fs, jvm, root)[:-2]:
         try:
             fs.delete(hp(f"{root}/_LATEST.v{v}"), False)
         except Exception:  # noqa: BLE001 — GC is advisory
@@ -1130,7 +1059,7 @@ def compact_snapshot(
     maintenance window.
 
     Protocol (r15: unified onto the claim-rename publish — this was the
-    last direct-to-``v=N`` writer): resolve the ``_LATEST`` version,
+    last direct-to-``v=N`` writer): resolve the pointed version,
     compact its files into a uid-suffixed ``v.stage.*`` dir (a rewrite
     of the same rows into size-targeted files — no logical change),
     claim a version through :func:`_claim_publish` (racing publishers
@@ -1185,8 +1114,10 @@ def compact_snapshot(
 
 
 def read_snapshot(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
-    """Read a snapshot table: the ``_LATEST``-pointed version by default,
-    or an explicit historical ``version``.
+    """Read a snapshot table: the pointed version (max ``_LATEST.v{N}``
+    marker) by default, or an explicit historical ``version``.  A root
+    without a marker has no committed version and raises
+    ``FileNotFoundError``.
 
     The schema comes from the version's ``_schema.json`` sidecar
     (written by :func:`write_snapshot` / :func:`compact_snapshot`), so
@@ -1205,7 +1136,7 @@ def read_snapshot_pruned(
 ) -> DataFrame:
     """Range scan of a snapshot-versioned table THROUGH its committed
     zone-map manifest (r10, r9 VERDICT item 9 — file pruning as the
-    warehouse default, not a side demo): resolve the ``_LATEST`` pointer
+    warehouse default, not a side demo): resolve the pointer
     (or an explicit ``version``), then :func:`scan_pruned` the version
     directory — only files whose [min, max] overlaps [lo, hi] are opened,
     with the residual filter preserving exact semantics.  Requires the
@@ -1244,47 +1175,15 @@ def read_snapshot_bloom_pruned(
 
 
 def _read_latest_version(spark: SparkSession, root: str) -> int:
+    """The committed version at ``root``; ``FileNotFoundError`` when no
+    pointer marker exists (``v=N`` dirs without one never committed)."""
     fs, _, jvm = _fs_for(spark, root)
     got = _resolve_latest(fs, jvm, root)
-    if got is not None:
-        return got
-    # r14: a legacy table whose replace-window crash lost the pointer.
-    # Under the claim-rename publish every v= dir is complete the
-    # instant it exists, so the max version is a safe (possibly
-    # slightly-early-visible) resolution — but a table with versions
-    # and NO pointer is still a crash scar worth surfacing.
-    versions = snapshot_versions(spark, root)
-    if versions:
-        import warnings
-
-        # r15 (ADVICE): gate the fallback on evidence the dir was
-        # actually COMMITTED — a claim-rename publish always carries a
-        # `_PUB_*` sentinel, a legacy direct write that finished carries
-        # Spark's `_SUCCESS`.  A legacy root's max v= can be an
-        # UNCOMMITTED crash scar (partial part files from the old
-        # direct-to-v=N protocol); serving that silently would trade a
-        # loud FileNotFoundError for possibly-incomplete data.
-        hp = _hpath(jvm)
-        for v in reversed(versions):
-            vdir = f"{root}/v={v}"
-            committed = fs.exists(hp(f"{vdir}/_SUCCESS")) or any(
-                st.getPath().getName().startswith("_PUB_")
-                for st in fs.listStatus(hp(vdir))
-            )
-            if committed:
-                warnings.warn(
-                    f"{root} has no _LATEST pointer (crashed replace?) — "
-                    f"resolving to max committed version v={v}",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                return v
+    if got is None:
         raise FileNotFoundError(
-            f"{root} has version dirs but no pointer and no commit "
-            f"evidence (_PUB_*/_SUCCESS) in any of them — refusing to "
-            f"serve possible crash debris"
+            f"no committed snapshot (no _LATEST.v* marker) under {root}"
         )
-    raise FileNotFoundError(f"no snapshot pointer or versions under {root}")
+    return got
 
 
 def vacuum_snapshots(
@@ -1294,16 +1193,20 @@ def vacuum_snapshots(
     r7 VERDICT item 4 — previously compact_snapshot's docstring left
     orphan collection as a manual step):
 
-    - ORPHANS: ``v=N`` directories with N greater than the ``_LATEST``
-      pointer are writes that never committed (a crash between the
-      version write and the pointer flip — write_snapshot, compact
-      _snapshot, or the sync streams) — deleted;
+    - ORPHANS: ``v=N`` directories with N greater than the pointer
+      (max ``_LATEST.v{N}`` marker) are writes that never committed (a
+      crash between the version write and the pointer flip —
+      write_snapshot, compact_snapshot, or the sync streams) — deleted;
     - EXPIRED: committed versions older than the newest ``keep_last``
       (the pointer-resolved version always survives, whatever
       ``keep_last`` says) — deleted.
 
+    A root with ``v=N`` directories but no marker never committed: it
+    raises ``FileNotFoundError`` before deleting anything (the next
+    ``write_snapshot`` claims the next free version past the debris).
+
     Safe against concurrent READERS by the same argument as the pointer
-    flip: a reader resolves ``_LATEST`` to a committed version that
+    flip: a reader resolves the pointer to a committed version that
     vacuum never touches (expiry keeps the pointed version
     unconditionally; orphans were never pointer-visible).  Explicit
     time-travel readers of an expired version can error — expiry is the
@@ -1327,6 +1230,8 @@ def vacuum_snapshots(
 
     fs, _, jvm = _fs_for(spark, root)
     hp = _hpath(jvm)
+    versions = snapshot_versions(spark, root)
+    cur = _read_latest_version(spark, root) if versions else None
     removed_stages: list[str] = []
     now_ms = None
     if fs.exists(hp(root)):
@@ -1347,7 +1252,6 @@ def vacuum_snapshots(
                 if now_ms - st.getModificationTime() > stage_ttl_s * 1000.0:
                     fs.delete(st.getPath(), True)
                     removed_stages.append(st.getPath().toString())
-    versions = snapshot_versions(spark, root)
     if not versions:
         return {
             "removed_orphans": [],
@@ -1355,7 +1259,6 @@ def vacuum_snapshots(
             "kept": [],
             "removed_stages": removed_stages,
         }
-    cur = _read_latest_version(spark, root)
     committed = [v for v in versions if v <= cur]
     orphans = [v for v in versions if v > cur]
     keep = set(committed[-max(keep_last, 1):]) | {cur}
@@ -1371,11 +1274,11 @@ def vacuum_snapshots(
 
 
 def snapshot_exists(spark: SparkSession, root: str) -> bool:
-    """True iff a COMMITTED snapshot exists at ``root`` — a pointer
-    (``_LATEST.v{N}`` marker or legacy ``_LATEST`` file) is the commit
-    marker (a ``v=N`` directory without one is a crashed, never-committed
-    first write: bootstrapping over it is safe and ``write_snapshot``
-    will pick the next free version)."""
+    """True iff a COMMITTED snapshot exists at ``root`` — a
+    ``_LATEST.v{N}`` pointer marker is the commit marker (a ``v=N``
+    directory without one is a crashed, never-committed first write:
+    bootstrapping over it is safe and ``write_snapshot`` will pick the
+    next free version)."""
     fs, _, jvm = _fs_for(spark, root)
     return _resolve_latest(fs, jvm, root) is not None
 
@@ -1463,7 +1366,7 @@ def vacuum_standing_artifacts(
 # rows stay on disk untouched:
 #
 #   {root}/current/v=N/...   — snapshot-versioned CURRENT slice (small:
-#                              one row per live key), atomic _LATEST flip
+#                              one row per live key), atomic pointer flip
 #   {root}/closed/r=N/...    — append-only per-round increments of rows
 #                              CLOSED in round N; never rewritten
 #
@@ -1496,46 +1399,26 @@ def _scd2_meta_schema(schema):
 
 
 def scd2_store_begin_round(spark: SparkSession, root: str, schema) -> tuple[DataFrame, int]:
-    """Open an SCD2 round on the partitioned store: vacuum crash orphans,
-    migrate any pre-partitioned layout, and return ``(current_slice,
-    new_version)``.  ``schema`` is the ATTRIBUTE schema (keys + tracked
-    columns, no validity metadata) — used for the empty bootstrap frame
-    and the explicit-schema closed reads.
-
-    Migration (one-time, commit-markered by ``current/_LATEST``): an r8
-    whole-history versioned table at ``root`` (``v=N`` dirs) or a pre-r8
-    flat parquet dir is split into the partitioned layout — current rows
-    to ``current/v=1``, closed rows to ``closed/r=1`` — so no prior
-    history is ever mistaken for "first round" (the ADVICE r8 hazard).
+    """Open an SCD2 round on the partitioned store: vacuum crash orphans
+    and return ``(current_slice, new_version)``.  ``schema`` is the
+    ATTRIBUTE schema (keys + tracked columns, no validity metadata) —
+    used for the empty bootstrap frame and the explicit-schema closed
+    reads.  A store without a committed ``current/`` pointer starts at
+    round 1.
     """
-    meta = _scd2_meta_schema(schema)
     cur_root = f"{root}/current"
     fs, _, jvm = _fs_for(spark, root)
     hp = _hpath(jvm)
-    if not snapshot_exists(spark, cur_root):
-        legacy = None
-        if snapshot_exists(spark, root):  # r8 whole-history versioned layout
-            legacy = read_snapshot(spark, root)
-        elif ensure_versioned_layout(spark, root) is not None:  # pre-r8 flat
-            legacy = read_snapshot(spark, root)
-        if legacy is not None:
-            legacy.filter(~F.col("is_current")).write.mode("overwrite").parquet(
-                f"{root}/closed/r=1"
-            )
-            legacy.filter(F.col("is_current")).write.mode("overwrite").parquet(
-                f"{cur_root}/v=1"
-            )
-            _flip_latest(spark, cur_root, 1)
-    if snapshot_exists(spark, cur_root):
-        ptr = _read_latest_version(spark, cur_root)
+    ptr = _resolve_latest(fs, jvm, cur_root)
+    if ptr is not None:
         for v in _list_numbered_dirs(spark, cur_root, "v="):
             if v > ptr:
                 fs.delete(hp(f"{cur_root}/v={v}"), True)
         for r in _list_numbered_dirs(spark, f"{root}/closed", "r="):
             if r > ptr:
                 fs.delete(hp(f"{root}/closed/r={r}"), True)
-        return read_snapshot(spark, cur_root), ptr + 1
-    return spark.createDataFrame([], meta), 1
+        return read_snapshot(spark, cur_root, ptr), ptr + 1
+    return spark.createDataFrame([], _scd2_meta_schema(schema)), 1
 
 
 def scd2_store_commit_round(
@@ -1568,17 +1451,14 @@ def scd2_store_commit_round(
 
 
 def read_scd2_history(spark: SparkSession, root: str, schema=None) -> DataFrame:
-    """Full validity-interval history from an SCD2 store: the partitioned
-    layout (current slice ∪ committed closed increments, ``r <=``
-    pointer) when present, else the legacy whole-history snapshot at
-    ``root``.  ``schema`` (attribute schema) makes empty closed
-    increments readable (a round that closed nothing writes a
-    zero-row directory)."""
+    """Full validity-interval history from an SCD2 store: the current
+    slice ∪ the committed closed increments (``r <=`` pointer).
+    ``schema`` (attribute schema) makes empty closed increments readable
+    (a round that closed nothing writes a zero-row directory).  A store
+    with no committed ``current/`` pointer raises ``FileNotFoundError``."""
     cur_root = f"{root}/current"
-    if not snapshot_exists(spark, cur_root):
-        return read_snapshot(spark, root)  # legacy whole-history layout
-    cur = read_snapshot(spark, cur_root)
     ptr = _read_latest_version(spark, cur_root)
+    cur = read_snapshot(spark, cur_root, ptr)
     rounds = [r for r in _list_numbered_dirs(spark, f"{root}/closed", "r=") if r <= ptr]
     if not rounds:
         return cur

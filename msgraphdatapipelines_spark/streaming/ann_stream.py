@@ -155,7 +155,7 @@ def resolve_batches_models(spark: SparkSession, root: str) -> dict:
     dir without a stamp is bootstrap-encoded by construction).
 
     This is the APPEND-side resolution and it deliberately ignores the
-    snapshot ``_LATEST`` pointer (r14, ADVICE: keying appends off the
+    snapshot pointer (r14, ADVICE: keying appends off the
     snapshot version let a crash between the rebalance's snapshot flip
     and its batches swap pair NEW models with the OLD batches dir —
     appends then mixed two quantizers in one directory, which the next
@@ -170,40 +170,6 @@ def resolve_batches_models(spark: SparkSession, root: str) -> dict:
     stamp = f"{root}/batches/_MODELS"
     if fs.exists(hpath(stamp)):
         return _read_json_path(fs, hpath, stamp)
-    # r15 (ADVICE): "no stamp ⇒ bootstrap-encoded" only holds for roots
-    # whose batches dir was written by r14+ code.  A root rebalanced by
-    # PRE-r14 code has retrained-encoded batch rows and only
-    # ``models.v{N}.json`` files — pairing those rows with the bootstrap
-    # quantizer reintroduces exactly the silent-mispairing class the
-    # stamp was built to kill, for in-place upgrades.  When versioned
-    # models exist, the highest version IS what the legacy rebalance
-    # left the batches dir encoded under (its swap and models publish
-    # were one protocol); migrate it into a ``_MODELS`` stamp on first
-    # touch so every later resolution takes the fast path.
-    #
-    # GUARD: an r14+ rebalance crashed post-flip pre-swap ALSO shows
-    # (unstamped batches + models.v{V}.json) — but there the batches
-    # dir is still the bootstrap generation and the retrained stage is
-    # sitting beside it as ``batches.stage.*`` debris.  Stage debris ⇒
-    # crash window, keep the r14 answer (bootstrap); no stage ⇒ legacy
-    # upgrade, take the versioned file.
-    import re as _re
-
-    versions = []
-    stage_debris = False
-    if fs.exists(hpath(root)):
-        for st in fs.listStatus(hpath(root)):
-            nm = st.getPath().getName()
-            m = _re.fullmatch(r"models\.v(\d+)\.json", nm)
-            if m:
-                versions.append(int(m.group(1)))
-            elif nm.startswith("batches.stage."):
-                stage_debris = True
-    if versions and not stage_debris:
-        models = _read_json_path(fs, hpath, f"{root}/models.v{max(versions)}.json")
-        if fs.exists(hpath(f"{root}/batches")):
-            _write_json_path_atomic(fs, hpath, stamp, models)
-        return models
     return _read_json_path(fs, hpath, f"{root}/models.json")
 
 

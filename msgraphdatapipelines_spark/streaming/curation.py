@@ -181,10 +181,7 @@ def curation_pipeline_stream(
         sigs = D.minhash_signatures(grams, id_col, "g", num_hashes=num_hashes)
         # explicit existence probes (r7 ADVICE item 2): a read failure on
         # EXISTING state fails the round (token unmoved, replayed on
-        # restart) instead of silently restarting from empty state; a
-        # pre-versioning flat-layout state dir migrates in place first
-        # (r9 — never mistaken for "first round")
-        sinks.ensure_versioned_layout(spark, dedup_state_path)
+        # restart) instead of silently restarting from empty state
         if sinks.snapshot_exists(spark, dedup_state_path):
             dstate = sinks.read_snapshot(spark, dedup_state_path)
         else:
@@ -227,9 +224,8 @@ def curation_pipeline_stream(
             )
 
         # (3) state folds — both idempotent under same-window replay, both
-        # published as NEW snapshot versions with an atomic _LATEST flip
+        # published as NEW snapshot versions with an atomic pointer flip
         # (crash mid-write keeps the previous complete state)
-        sinks.ensure_versioned_layout(spark, snapshot_path)
         if sinks.snapshot_exists(spark, snapshot_path):
             snapshot = sinks.read_snapshot(spark, snapshot_path)
         else:

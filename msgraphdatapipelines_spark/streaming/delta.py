@@ -52,9 +52,9 @@ def delta_sync_stream(
        passes no ``spill_dir``);
     2. ``apply_delta`` onto the snapshot-versioned table at
        ``snapshot_path`` (bootstrap: empty snapshot with the declared
-       schema, detected by an explicit ``snapshot_versions`` probe).  The
+       schema, detected by an explicit ``snapshot_exists`` probe).  The
        merged result publishes as a NEW ``v=N`` directory with an atomic
-       ``_LATEST`` pointer flip (``sinks.write_snapshot``) — a crash
+       ``_LATEST.v{N}`` pointer flip (``sinks.write_snapshot``) — a crash
        mid-write cannot destroy the previous round's data (r7 ADVICE
        item 2); ``keep_last`` bounds retained history;
     3. ``save_delta_state`` — ONLY after the write succeeded (commit
@@ -75,12 +75,8 @@ def delta_sync_stream(
             spark, first_url, schema, state_path=state_path,
             fetcher=fetcher, removed_col=removed_col,
         )
-        # A pre-versioning flat-layout snapshot migrates in place (r9,
-        # ADVICE r8): without this, flat parquet under snapshot_path would
-        # probe as "first round" and silently orphan the prior data.
-        sinks.ensure_versioned_layout(spark, snapshot_path)
         # First-round detection is an EXPLICIT existence probe (the
-        # committed _LATEST pointer) — a read failure on an existing
+        # committed pointer marker) — a read failure on an existing
         # snapshot must fail the round (token not advanced, stream
         # restarts and replays), never be mistaken for "no snapshot yet"
         # (r7 ADVICE item 2).
@@ -90,7 +86,7 @@ def delta_sync_stream(
             snapshot = spark.createDataFrame([], schema)
         merged = sinks.apply_delta(snapshot, delta, keys, removed_col=removed_col)
         # Versioned publish: the new round lands in a NEW v=N directory and
-        # the _LATEST pointer flips only after the write committed — a
+        # the pointer flips only after the write committed — a
         # crash mid-write leaves the pointer on the previous complete
         # version (orphans collected by vacuum_snapshots), so the sole
         # copy of the snapshot is never destroyed in place.
@@ -141,15 +137,13 @@ def scd2_sync_stream(
     history stays on disk untouched — a round's I/O is O(current + delta)
     instead of O(full history) (the r8 all-rewrite layout's dominant cost
     at a 100 TB dimension with hourly deltas).  The current slice is
-    snapshot-versioned with the atomic ``_LATEST`` flip as the round's
+    snapshot-versioned with the atomic pointer flip as the round's
     commit point; crash orphans (an un-pointed version or closed
     increment) are vacuumed at round start, so replays are deterministic
     (``sinks.scd2_store_begin_round`` / ``scd2_store_commit_round``).
-    Pre-existing r8 whole-history or pre-r8 flat layouts migrate in place
-    on first touch — never mistaken for "no history yet".  Read with
-    ``sinks.read_scd2_history(spark, history_path)``; ``keep_last``
-    bounds retained CURRENT versions (closed increments are the
-    permanent history).
+    Read with ``sinks.read_scd2_history(spark, history_path)``;
+    ``keep_last`` bounds retained CURRENT versions (closed increments are
+    the permanent history).
     """
     import datetime as _dt
 

@@ -2212,6 +2212,7 @@ def test_standing_sketch_store_serves_join_verdicts(spark, sf_dir):
     freshly-built sketches — the FK pre-flight's planning artifact."""
     import os
 
+    from msgraphdatapipelines_spark import sinks
     from msgraphdatapipelines_spark.operators.sketches import (
         build_cm_sketch,
         choose_join_strategy,
@@ -2221,10 +2222,12 @@ def test_standing_sketch_store_serves_join_verdicts(spark, sf_dir):
 
     child = ensure_standing_sketch(spark, sf_dir, "orders", "o_custkey")
     parent = ensure_standing_sketch(spark, sf_dir, "customer", "c_custkey")
-    root = sketch_store_root(sf_dir, "orders", "o_custkey")
-    mt = os.path.getmtime(f"{root}/cells/_LATEST")
+    cells = f"{sketch_store_root(sf_dir, 'orders', 'o_custkey')}/cells"
+    v = sinks._read_latest_version(spark, cells)
+    mt = os.path.getmtime(f"{cells}/_LATEST.v{v}")
     child2 = ensure_standing_sketch(spark, sf_dir, "orders", "o_custkey")
-    assert os.path.getmtime(f"{root}/cells/_LATEST") == mt  # served, not rebuilt
+    assert sinks._read_latest_version(spark, cells) == v
+    assert os.path.getmtime(f"{cells}/_LATEST.v{v}") == mt  # served, not rebuilt
 
     served = choose_join_strategy(child2, parent)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")

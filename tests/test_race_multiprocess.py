@@ -77,7 +77,7 @@ def _entries(artdir: str, prefix: str) -> list[str]:
     return sorted(d for d in os.listdir(artdir) if d.startswith(prefix))
 
 
-def test_race_two_processes_ann_standing_index(tmp_path):
+def test_race_two_processes_ann_standing_index(tmp_path, spark):
     """ensure_standing_index: staged-rename one-shot publish + debris
     recovery must hold across real processes."""
     sf = tmp_path / "sf"
@@ -93,7 +93,9 @@ def test_race_two_processes_ann_standing_index(tmp_path):
     assert leftovers == [], f"race left staging/debris: {leftovers}"
     root = os.path.join(artdir, committed[0])
     assert os.path.exists(f"{root}/models.json")
-    assert os.path.exists(f"{root}/snapshot/_LATEST")
+    from msgraphdatapipelines_spark import sinks
+
+    assert sinks.snapshot_exists(spark, f"{root}/snapshot")
 
 
 def test_race_two_processes_prefix_gram_index(tmp_path):
@@ -228,8 +230,9 @@ def test_race_two_processes_rebalance(tmp_path, monkeypatch, spark):
     assert os.path.exists(f"{root}/snapshot/v=2")
     assert not os.path.exists(f"{root}/snapshot/v=3")
     assert os.path.exists(f"{root}/models.v2.json")
-    with open(f"{root}/snapshot/_LATEST") as fh:
-        assert fh.read().strip() == "2"
+    from msgraphdatapipelines_spark import sinks
+
+    assert sinks._read_latest_version(spark, f"{root}/snapshot") == 2
     debris = [
         d for d in os.listdir(root)
         if d.startswith(("batches.stage.", "batches.old."))
@@ -273,13 +276,12 @@ def test_race_two_processes_snapshot_publish(tmp_path, spark):
     stages = [d for d in inside if d.startswith("v.stage.")]
     assert sorted(vdirs) == ["v=1", "v=2"], inside
     assert stages == [], f"race left staging dirs: {stages}"
-    assert "_LATEST" in inside
-    ptr = int(open(f"{root}/_LATEST").read().strip())
-    assert ptr in (1, 2)
-    # every committed version is COMPLETE and content-identical (same
-    # input), and each carries exactly one publisher sentinel
+    # both publishes committed: the pointer resolves to the max marker
     from msgraphdatapipelines_spark import sinks
 
+    assert sinks._read_latest_version(spark, root) == 2
+    # every committed version is COMPLETE and content-identical (same
+    # input), and each carries exactly one publisher sentinel
     key = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
     v1 = key(sinks.read_snapshot(spark, root, version=1))
     v2 = key(sinks.read_snapshot(spark, root, version=2))

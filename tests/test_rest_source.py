@@ -712,12 +712,13 @@ def range_pages(tmp_path):
 def test_page_range_planner_parallel_equals_sequential(spark, range_pages, tmp_path):
     """The planner must (a) do ONE driver-side count probe and emit one
     partition per range with NO body prefetch, (b) fetch ranges on
-    executors CONCURRENTLY (rendezvous proof: each fetch waits up to 10 s
-    for a second in-flight fetch — a sequential executor would pay the
-    full wait per partition, so a fast wall proves >1 concurrent fetch),
-    and (c) equal the sequential cursor read order-insensitively."""
-    import time
-
+    executors CONCURRENTLY (rendezvous proof: each fetch writes a
+    ``start-*`` marker holding ``time.monotonic()`` — system-wide on
+    Linux — and waits up to 10 s for a second in-flight fetch; a
+    sequential executor cannot start a second fetch until the first
+    one's wait expires, so two starts < 8 s apart prove >1 concurrent
+    fetch, independent of Python-worker start-up before the first), and
+    (c) equal the sequential cursor read order-insensitively."""
     template, count_url, seq_first, recs = range_pages
     if not rest.register_odata_source(spark):
         pytest.skip("Python DataSource API unavailable")
@@ -733,7 +734,6 @@ def test_page_range_planner_parallel_equals_sequential(spark, range_pages, tmp_p
     ]
 
     trace = tmp_path / "trace"
-    t0 = time.monotonic()
     bodies = (
         spark.read.format("odata")
         .option("skip_url_template", template)
@@ -745,11 +745,12 @@ def test_page_range_planner_parallel_equals_sequential(spark, range_pages, tmp_p
     )
     df = rest.parse_odata_envelope(bodies, SCHEMA)
     got = sorted((r["id"], r["errorCode"]) for r in df.collect())
-    wall = time.monotonic() - t0
     assert df.rdd.getNumPartitions() == 6
-    assert len(list(trace.glob("start-*"))) == 6
-    # sequential execution would pay ≥ 10 s rendezvous on the first fetch
-    assert wall < 8, f"range fetches ran sequentially (wall={wall:.1f}s)"
+    starts = sorted(float(m.read_text()) for m in trace.glob("start-*"))
+    assert len(starts) == 6
+    # sequential execution starts the second fetch ≥ 10 s after the first
+    gap = starts[1] - starts[0]
+    assert gap < 8, f"range fetches ran sequentially (second start +{gap:.1f}s)"
 
     seq_df = rest.read_odata(spark, seq_first, SCHEMA)
     want = sorted((r["id"], r["errorCode"]) for r in seq_df.collect())

@@ -1523,14 +1523,12 @@ def test_ann_rebalance_salvages_concurrent_append(spark, sf_dir, tmp_path):
 
 
 def test_resolve_batches_models_legacy_versioned_fallback(spark, tmp_path):
-    """r15 (ADVICE medium): a root rebalanced by PRE-r14 code has
-    retrained-encoded batch rows, no ``_MODELS`` stamp, and only
-    ``models.v{N}.json`` files — the r14 fallback to the bootstrap
-    ``models.json`` silently mispaired it.  Now: highest versioned
-    models file wins and is migrated into a ``_MODELS`` stamp on first
-    touch.  GUARD: when ``batches.stage.*`` debris shows the root is in
-    an r14+ post-flip pre-swap crash window, the batches dir is still
-    bootstrap-encoded and the bootstrap answer must stand."""
+    """A batches dir without a ``_MODELS`` stamp is bootstrap-encoded:
+    the resolver answers ``models.json`` even when ``models.v{N}.json``
+    files sit beside it.  That is the r14+ rebalance crash window
+    (post-flip, pre-swap), with its ``batches.stage.*`` debris or after
+    a later sweep removed it; the versioned files are never taken as a
+    fallback, and resolving writes no stamp."""
     import json
     import os
 
@@ -1538,39 +1536,22 @@ def test_resolve_batches_models_legacy_versioned_fallback(spark, tmp_path):
         resolve_batches_models,
     )
 
-    root = str(tmp_path / "legacy_root")
-    os.makedirs(f"{root}/batches/batch_id=0")
     boot = {"centroids": [[0, [1.0, 0.0]]], "codebooks": [[[1.0, 0.0]]]}
-    v1 = {"centroids": [[0, [0.5, 0.5]], [1, [0.0, 1.0]]],
-          "codebooks": [[[1.0, 0.0]]], "retrained": True}
     v2 = {"centroids": [[0, [0.9, 0.1]], [1, [0.1, 0.9]], [2, [0.5, 0.5]]],
           "codebooks": [[[1.0, 0.0]]], "retrained": True}
-    for name, obj in [("models.json", boot), ("models.v1.json", v1),
-                      ("models.v2.json", v2)]:
-        with open(f"{root}/{name}", "w") as fh:
-            json.dump(obj, fh)
-
-    got = resolve_batches_models(spark, root)
-    assert len(got["centroids"]) == 3, "must take the HIGHEST versioned models"
-    assert os.path.exists(f"{root}/batches/_MODELS"), (
-        "first touch must migrate the legacy answer into a stamp"
-    )
-    # stamped now: the fast path serves the same answer
-    assert len(resolve_batches_models(spark, root)["centroids"]) == 3
-
-    # crash-window guard: stage debris beside an UNSTAMPED batches dir
-    # means r14+ mid-commit — bootstrap must stand
-    root2 = str(tmp_path / "crash_window_root")
-    os.makedirs(f"{root2}/batches/batch_id=0")
-    os.makedirs(f"{root2}/batches.stage.deadbeef")
-    for name, obj in [("models.json", boot), ("models.v2.json", v2)]:
-        with open(f"{root2}/{name}", "w") as fh:
-            json.dump(obj, fh)
-    got2 = resolve_batches_models(spark, root2)
-    assert len(got2["centroids"]) == 1, (
-        "stage debris ⇒ crash window ⇒ the batches dir is bootstrap-encoded"
-    )
-    assert not os.path.exists(f"{root2}/batches/_MODELS")
+    for debris in (True, False):
+        root = str(tmp_path / f"crash_window_root_{debris}")
+        os.makedirs(f"{root}/batches/batch_id=0")
+        if debris:
+            os.makedirs(f"{root}/batches.stage.deadbeef")
+        for name, obj in [("models.json", boot), ("models.v2.json", v2)]:
+            with open(f"{root}/{name}", "w") as fh:
+                json.dump(obj, fh)
+        got = resolve_batches_models(spark, root)
+        assert len(got["centroids"]) == 1, (
+            "an unstamped batches dir is bootstrap-encoded"
+        )
+        assert not os.path.exists(f"{root}/batches/_MODELS")
 
 
 @pytest.mark.heavy
@@ -1723,13 +1704,11 @@ def test_ann_rebalance_cid_salvage_for_stale_caller_frame(spark, sf_dir, tmp_pat
 
 def test_rebalance_debris_sweep_stamps_before_delete(spark, sf_dir, tmp_path):
     """r16 (ADVICE): a rebalance that sweeps a crashed sibling's
-    ``batches.stage.*`` debris and then itself dies pre-publish used to
-    leave (unstamped bootstrap batches + models.v{N}.json + NO debris) —
-    the legacy-root signature, so the next resolve mispaired retrained
-    models onto bootstrap rows.  The sweep now stamps the surviving dir
-    with its currently-resolved (bootstrap) models BEFORE deleting the
-    debris, so an unstamped dir beside versioned models can only mean a
-    genuine pre-r14 root."""
+    ``batches.stage.*`` debris and then itself dies pre-publish leaves
+    (unstamped bootstrap batches + models.v{N}.json + NO debris).  The
+    next resolve must still pair the bootstrap models with those rows:
+    an unstamped batches dir always resolves to ``models.json``, so no
+    stamp is needed before the sweep."""
     import json
     import os
 
@@ -1769,9 +1748,8 @@ def test_rebalance_debris_sweep_stamps_before_delete(spark, sf_dir, tmp_path):
     assert not any(
         n.startswith("batches.stage.") for n in os.listdir(root)
     ), "sweep should have collected the sibling's stage debris"
-    # the killed window: no debris, versioned models present — the stamp
-    # written by the sweep must keep the resolver on the bootstrap answer
-    assert os.path.exists(f"{root}/batches/_MODELS")
+    # the killed window: no debris, versioned models present — the
+    # resolver must stay on the bootstrap answer
     got = resolve_batches_models(spark, root)
     assert len(got["centroids"]) == len(boot["centroids"]), (
         "resolver mispaired the crashed sibling's versioned models onto "

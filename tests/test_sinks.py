@@ -332,7 +332,7 @@ def test_compact_parquet_sizes_from_disk_bytes(spark, sf_dir, tmp_path):
 
 
 def test_snapshot_versioning_flow(spark, tmp_path):
-    """Versioned full refresh: publish v1, v2 -> _LATEST reads v2, v1 stays
+    """Versioned full refresh: publish v1, v2 -> the pointer reads v2, v1 stays
     queryable; keep_last expires the oldest but never the just-published;
     a fresh root starts at v1."""
     from msgraphdatapipelines_spark.sinks import (
@@ -357,7 +357,7 @@ def test_snapshot_versioning_flow(spark, tmp_path):
 
 def test_compact_snapshot_transactional(spark, sf_dir, tmp_path, monkeypatch):
     """r7: compact_snapshot composes compact_parquet with the snapshot
-    pointer flip — the compacted table lands as v=N+1, _LATEST moves only
+    pointer flip — the compacted table lands as v=N+1, the pointer moves only
     after the rewrite completes, rows are unchanged, and a crash before
     the flip leaves readers on the old version."""
     from msgraphdatapipelines_spark import sinks
@@ -446,9 +446,9 @@ def test_diff_snapshots_time_travel_cdc(spark, tmp_path):
 def test_vacuum_snapshots_collects_orphans_keeps_window(spark, tmp_path, monkeypatch):
     """r8 (r7 VERDICT item 4): vacuum_snapshots removes (a) the orphan
     uncommitted version a crashed compact_snapshot left behind and (b)
-    committed versions beyond keep_last — while the _LATEST-pointed
-    version and the keep_last window survive and a concurrent
-    _LATEST-reader keeps working throughout."""
+    committed versions beyond keep_last — while the pointed version and
+    the keep_last window survive and a concurrent pointer-resolving
+    reader keeps working throughout."""
     from msgraphdatapipelines_spark import sinks
     from msgraphdatapipelines_spark.sinks import (
         compact_snapshot,
@@ -494,6 +494,48 @@ def test_vacuum_snapshots_collects_orphans_keeps_window(spark, tmp_path, monkeyp
     assert snapshot_versions(spark, root) == [4]
 
 
+def test_uncommitted_first_publish_is_not_a_snapshot(spark, tmp_path, monkeypatch):
+    """The pointer marker is the only commit: a first publish that
+    crashed between its claim and its flip leaves a complete ``v=1`` but
+    no ``_LATEST.v*`` marker.  That root holds no snapshot — readers get
+    ``FileNotFoundError`` (never the unpointed version), vacuum refuses
+    before deleting anything, and the next publish claims ``v=2`` and
+    serves it."""
+    import os
+
+    import pytest
+
+    from msgraphdatapipelines_spark import sinks
+
+    root = str(tmp_path / "snap")
+    first = spark.createDataFrame([(1, "crashed")], "id long, s string")
+
+    def boom(spark_, root_, v_):
+        raise RuntimeError("crash before flip")
+
+    monkeypatch.setattr(sinks, "_flip_latest", boom)
+    with pytest.raises(RuntimeError, match="crash before flip"):
+        sinks.write_snapshot(first, root)
+    monkeypatch.undo()
+    assert sinks.snapshot_versions(spark, root) == [1]
+    listing = (sorted(os.listdir(root)), sorted(os.listdir(f"{root}/v=1")))
+
+    assert not sinks.snapshot_exists(spark, root)
+    with pytest.raises(FileNotFoundError):
+        sinks.read_snapshot(spark, root)
+    with pytest.raises(FileNotFoundError):
+        sinks.vacuum_snapshots(spark, root, keep_last=1, stage_ttl_s=0.0)
+    assert (sorted(os.listdir(root)), sorted(os.listdir(f"{root}/v=1"))) == listing
+
+    second = spark.createDataFrame([(2, "published")], "id long, s string")
+    assert sinks.write_snapshot(second, root) == 2
+    assert sinks.snapshot_exists(spark, root)
+    assert sinks._read_latest_version(spark, root) == 2
+    assert [tuple(r) for r in sinks.read_snapshot(spark, root).collect()] == [
+        (2, "published")
+    ]
+
+
 def test_refresh_agg_incremental_rounds_equal_rebuild(spark):
     """r8 refresh_agg_incremental: across two delta rounds (insert,
     update, delete — including a group fully emptied) the incrementally
@@ -529,30 +571,6 @@ def test_refresh_agg_incremental_rounds_equal_rebuild(spark):
     agg = refresh_agg_incremental(snap2, agg, spark.createDataFrame([("b",)], ["k"]), ["k"], build)
     want2 = {(r["k"], r["n"], r["s"]) for r in build(snap2).collect()}
     assert {(r["k"], r["n"], r["s"]) for r in agg.collect()} == want2
-
-
-def test_ensure_versioned_layout_migrates_flat_dir(spark, tmp_path):
-    """r9 (ADVICE r8): a pre-versioning FLAT parquet snapshot dir is
-    migrated in place (files renamed into v=1 + pointer written), never
-    probed as 'first round ever'.  Versioned tables and empty dirs are
-    untouched; the call is idempotent."""
-    from msgraphdatapipelines_spark import sinks
-
-    root = str(tmp_path / "flat_snap")
-    df = spark.range(10).withColumnRenamed("id", "k")
-    df.write.parquet(root)  # the old flat layout
-    assert sinks.snapshot_versions(spark, root) == []
-    assert sinks.ensure_versioned_layout(spark, root) == 1
-    assert sinks.snapshot_exists(spark, root)
-    assert sinks.snapshot_versions(spark, root) == [1]
-    got = sorted(r["k"] for r in sinks.read_snapshot(spark, root).collect())
-    assert got == list(range(10))
-    # idempotent: second call is a no-op
-    assert sinks.ensure_versioned_layout(spark, root) is None
-    # a normally-versioned table is never rearranged
-    root2 = str(tmp_path / "versioned")
-    sinks.write_snapshot(df, root2)
-    assert sinks.ensure_versioned_layout(spark, root2) is None
 
 
 def test_scd2_partitioned_store_round_and_replay(spark, tmp_path):
@@ -634,39 +652,6 @@ def test_scd2_partitioned_store_round_and_replay(spark, tmp_path):
         (r["id"], r["val"], r["valid_to"] is None, r["is_current"])
         for r in hist2.collect()
     ) == got
-
-
-def test_scd2_store_migrates_whole_history_layout(spark, tmp_path):
-    """r9: an r8-style whole-history versioned table (and the crash-orphan
-    case) migrates into the partitioned layout on first touch — prior
-    closed history lands in closed/r=1 and is never mistaken for a first
-    round."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark import sinks
-
-    schema = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("val", T.StringType())]
-    )
-    t1, t2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 6, 1)
-    legacy = spark.createDataFrame(
-        [("a", "1", t1, t2, False), ("a", "2", t2, None, True), ("b", "1", t1, None, True)],
-        sinks._scd2_meta_schema(schema),
-    )
-    root = str(tmp_path / "hist_r8")
-    sinks.write_snapshot(legacy, root)  # the r8 all-in-one layout
-
-    cur, v = sinks.scd2_store_begin_round(spark, root, schema)
-    assert v == 2  # migration committed as current/v=1
-    assert cur.count() == 2  # only the current slice is read per round
-    # the full history survives the migration byte-for-byte in content
-    hist = sinks.read_scd2_history(spark, root, schema)
-    assert sorted((r["id"], r["val"]) for r in hist.collect()) == [
-        ("a", "1"), ("a", "2"), ("b", "1")
-    ]
 
 
 def test_zonemap_prunes_files_and_preserves_semantics(spark, sf_dir, tmp_path):
@@ -1530,8 +1515,8 @@ def test_latest_pointer_cas_never_lags_commits(spark, tmp_path):
     max-resolve — the one interleaving the replace design could lose
     (a slower publisher's flip running AFTER a faster one's) now cannot
     even transiently lag: flipping v2 AFTER v3 leaves resolution at 3.
-    Legacy ``_LATEST`` stays mirrored for external readers, and the
-    marker GC keeps the top two."""
+    An external reader's ``max(_LATEST.v*)`` listing agrees (there is no
+    single ``_LATEST`` file), and the marker GC keeps the top two."""
     import os
 
     from msgraphdatapipelines_spark import sinks
@@ -1550,10 +1535,12 @@ def test_latest_pointer_cas_never_lags_commits(spark, tmp_path):
         "a late flip must never lower the resolved pointer"
     )
     assert sinks.read_snapshot(spark, root).count() == 5
-    # legacy mirror exists and never reads below the max either
-    assert int(open(f"{root}/_LATEST").read().strip()) == 3
-    # marker GC bounded the set
+    # an external reader resolving max(_LATEST.v*) never reads below the
+    # max either; no single-file pointer is written
     marks = [f for f in os.listdir(root) if f.startswith("_LATEST.v")]
+    assert max(int(f[len("_LATEST.v"):]) for f in marks) == 3
+    assert "_LATEST" not in os.listdir(root)
+    # marker GC bounded the set
     assert 1 <= len(marks) <= 2, marks
     # a fresh publish advances everything
     v = sinks.write_snapshot(df, root)
@@ -1647,40 +1634,6 @@ def test_vacuum_snapshots_sweeps_stage_debris(spark, tmp_path):
     assert not os.path.exists(f"{root}/v.stage.crashed1")
     assert not os.path.exists(f"{root}/v=1/v.stage.nested2")
     assert sinks.read_snapshot(spark, root).count() == 7
-
-
-def test_latest_fallback_refuses_uncommitted_scar(spark, tmp_path):
-    """r15 (ADVICE low): the no-pointer fallback resolved max(v=) even
-    when that dir was an uncommitted crash scar from the legacy
-    direct-to-v=N protocol (partial part files, no _SUCCESS/_PUB_*) —
-    serving possibly-incomplete data under a mere warning.  Now the
-    fallback requires commit evidence and walks DOWN to the newest dir
-    that has it; with no evidence anywhere it stays loud."""
-    import os
-
-    import pytest
-
-    from msgraphdatapipelines_spark import sinks
-
-    root = str(tmp_path / "legacy")
-    df = spark.range(9).toDF("n")
-    # v=1: legacy direct write, completed (has _SUCCESS)
-    df.write.parquet(f"{root}/v=1")
-    # v=2: crash scar — partial part file, no commit marker
-    os.makedirs(f"{root}/v=2")
-    df.write.parquet(f"{root}/_tmp_scar")
-    part = next(
-        f for f in os.listdir(f"{root}/_tmp_scar") if f.startswith("part-")
-    )
-    os.rename(f"{root}/_tmp_scar/{part}", f"{root}/v=2/{part}")
-
-    with pytest.warns(RuntimeWarning, match="max committed version v=1"):
-        assert sinks._read_latest_version(spark, root) == 1
-
-    # no commit evidence anywhere: loud, never serves debris
-    os.remove(f"{root}/v=1/_SUCCESS")
-    with pytest.raises(FileNotFoundError, match="no commit"):
-        sinks._read_latest_version(spark, root)
 
 
 def test_bloom_pruned_missing_manifest_falls_back(spark, tmp_path):
@@ -2081,7 +2034,8 @@ def test_snapshot_publish_py4j_round_trips(spark, tmp_path, monkeypatch):
     walks = [c for c in sent if c.startswith(("r\nu\norg\n", "r\nu\norg.apache\n"))]
     assert walks == [], f"{len(walks)} package-walk lookups"
     # memory commands release Python-side proxies whenever the GC runs;
-    # the rest are the calls this code makes (232 when this bound was set)
+    # the rest are the calls this code makes (207 when this bound was
+    # set; a single-file pointer mirror would add ~25)
     calls = [c for c in sent if not c.startswith("m\n")]
-    assert len(calls) <= 250, f"{len(calls)} py4j round trips"
+    assert len(calls) <= 215, f"{len(calls)} py4j round trips"
 
