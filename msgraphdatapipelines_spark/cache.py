@@ -18,8 +18,8 @@ Correctness is structural, not temporal:
   — changes the plan text and therefore the key.  Expression IDs
   (``#123``) are session-assigned noise and are stripped before
   hashing.
-- The fingerprint also hashes every input file's (name, size, mtime) —
-  the same identity the standing layouts key on.  Touching an input
+- The fingerprint also hashes every input file's (name, size, mtime)
+  from the Hadoop listing (see :func:`_input_signature`).  Touching an input
   changes the key, so a stale entry is never SERVED; it is merely
   stranded, and the ``msgdp_rc_`` prefix is registered with
   :func:`~msgraphdatapipelines_spark.sinks.vacuum_standing_artifacts`
@@ -32,6 +32,11 @@ Scale: a hit reads the (result-sized) artifact — zero corpus-sized
 work; a miss costs the query plus one write of its result.  Result sets
 cached here are aggregate/report-sized; this is NOT a CACHE TABLE
 replacement for hot fact data.
+
+The module also holds the two small pieces every other cache in the
+package shares: :func:`file_identity` / :func:`standing_root` (the local
+input identity that standing-artifact roots and scan memos key on) and
+:class:`BoundedMemo` (the one in-process FIFO memo).
 """
 
 from __future__ import annotations
@@ -40,8 +45,82 @@ import hashlib
 import os
 import re
 import tempfile
+import threading
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def file_identity(path: str) -> tuple:
+    """``(name, size, mtime_ns, ino, ctime_ns)`` of every leaf file of the
+    local input ``path`` (the file itself, or every file under the
+    directory, by relative name), sorted.  Size and mtime alone miss a
+    same-size replacement whose mtime was restored: ``os.replace`` of a
+    new file changes the inode, and a rewrite in place changes the ctime
+    (which no user call can set back).  Raises ``OSError`` when ``path``
+    is not local."""
+
+    def ident(full: str, name: str) -> tuple:
+        st = os.stat(full)
+        return (name, st.st_size, st.st_mtime_ns, st.st_ino, st.st_ctime_ns)
+
+    if not os.path.isdir(path):
+        return (ident(path, os.path.basename(path)),)
+    return tuple(sorted(
+        ident(os.path.join(d, f), os.path.relpath(os.path.join(d, f), path))
+        for d, _, files in os.walk(path)
+        for f in files
+    ))
+
+
+def standing_root(prefix: str, sf_dir: str, inputs: tuple[str, ...], *params) -> str:
+    """Root of a standing artifact built from the ``inputs`` files of
+    ``sf_dir``: ``msgdp_<prefix>_`` plus the md5 of the corpus path, the
+    inputs' :func:`file_identity` and the caller's parameters, under the
+    temp dir.  A regenerated input or a changed parameter gets a fresh
+    root, so a stale artifact is never served."""
+    ident = [file_identity(os.path.join(sf_dir, name)) for name in inputs]
+    key = "|".join(str(x) for x in (os.path.abspath(sf_dir), *ident, *params))
+    h = hashlib.md5(key.encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"msgdp_{prefix}_{h}")
+
+
+class BoundedMemo(Mapping):
+    """In-process memo bounded to ``capacity`` entries, evicting the
+    oldest insert first.  ``get_or_build`` caches whatever ``build``
+    returns except ``None`` (a missing artifact is re-probed next time);
+    ``forget`` drops every key a predicate matches.  Read-only as a
+    mapping, so the bound has one writer."""
+
+    def __init__(self, capacity: int) -> None:
+        self.capacity = capacity
+        self._d: dict = {}
+        self._lock = threading.Lock()
+
+    def __getitem__(self, key):
+        return self._d[key]
+
+    def __iter__(self):
+        return iter(list(self._d))
+
+    def __len__(self) -> int:
+        return len(self._d)
+
+    def get_or_build(self, key, build):
+        value = self._d.get(key)
+        if value is None:
+            value = build()
+            if value is not None:
+                with self._lock:
+                    while len(self._d) >= self.capacity:
+                        self._d.pop(next(iter(self._d)))
+                    self._d[key] = value
+        return value
+
+    def forget(self, predicate) -> None:
+        with self._lock:
+            for k in [k for k in self._d if predicate(k)]:
+                del self._d[k]
 
 
 def _input_signature(spark: SparkSession, inputs: list[str]) -> str:
@@ -50,7 +129,11 @@ def _input_signature(spark: SparkSession, inputs: list[str]) -> str:
     entries on S3A/ABFS are synthetic with mtime 0, so directory mtimes
     carry no information; only leaf-file identities do) and
     nesting-safe (a file rewritten two partition levels deep changes
-    its own (len, mtime), which a one-level listing would miss)."""
+    its own (len, mtime), which a one-level listing would miss).
+
+    This stays on the Hadoop listing rather than :func:`file_identity`
+    because result-cache inputs may be remote, and a Hadoop
+    ``FileStatus`` carries no inode or ctime."""
     from .sinks import _fs_for
 
     parts = []

@@ -8,7 +8,7 @@ Scale design (100 TB corpus):
 - exact dedup = one hash-partitioned aggregation on the dedup key; Spark's
   partial aggregation collapses duplicates map-side before the shuffle.
 - MinHash+LSH is *the* scale path for fuzzy dedup: per-doc signatures are a
-  narrow map after one explode+agg; candidate generation joins only docs
+  narrow map over each doc's gram array; candidate generation joins only docs
   sharing a band bucket (shuffle keyed on (band, hash) — tiny compared to
   the all-pairs cross join the naive n-gram approach needs), and the
   expensive Jaccard verification runs only on candidates.
@@ -70,44 +70,19 @@ def _hash_hex(col: Column, seed: int, fn: str) -> Column:
 def minhash_signatures(
     df: DataFrame,
     id_col: str,
-    gram_col: str,
-    num_hashes: int = 8,
-    hash_fn: str = "md5",
-) -> DataFrame:
-    """Per-document MinHash signature over an exploded gram set.
-
-    ``df`` must have one row per (id, gram).  Output: id + ``mh0..mh{k-1}``
-    columns (min of the seeded hash per doc) — one aggregation, map-side
-    partial mins, shuffle keyed on the doc id.
-    """
-    aggs = [
-        F.min(_hash_hex(F.col(gram_col), s, hash_fn)).alias(f"mh{s}") for s in range(num_hashes)
-    ]
-    return df.groupBy(id_col).agg(*aggs)
-
-
-def minhash_signatures_arrays(
-    df: DataFrame,
-    id_col: str,
     arr_col: str,
     num_hashes: int = 8,
     hash_fn: str = "md5",
 ) -> DataFrame:
-    """``minhash_signatures`` computed ARRAY-NATIVE (r16 OPT; guide §2.4
-    remove shuffles outright): when the per-doc gram set already lives in
-    one array cell (``word_ngrams`` returns the DISTINCT grams), the
-    per-seed minimum is ``array_min(transform(...))`` — a narrow map with
-    ZERO shuffle and zero explode, versus the exploded path's n·grams-row
-    explode + groupBy shuffle.  Bit-identical output: min over exploded
-    distinct rows == array_min over the same distinct array, and the
-    per-seed hash is the same ``_hash_hex`` construction.
+    """Per-document MinHash signature over the DISTINCT gram set held in
+    one array cell (``word_ngrams``).  Output: id + ``mh0..mh{k-1}``
+    columns, each ``array_min(transform(...))`` of the seeded hash — a
+    narrow map with no explode and no shuffle (r16 OPT; guide §2.4).
 
-    Precondition (r16 ADVICE): ``arr_col`` must be NON-NULL — a null
-    gram array emits a row with null mh columns here, where the exploded
-    path emits no row at all (and downstream banding would hash every
-    null-array doc into the same md5('') buckets).  ``word_ngrams`` never
-    returns null for non-null text; callers with nullable text must
-    filter first."""
+    A null ``arr_col`` yields null mh columns, and downstream banding
+    would hash every such doc into the same md5('') buckets, so callers
+    with nullable text filter first (``word_ngrams`` of non-null text is
+    never null)."""
     def _seeded(s: int):
         # NB: must be a ONE-parameter lambda — F.transform interprets a
         # second parameter (even a defaulted one) as the array INDEX and
@@ -121,30 +96,34 @@ def minhash_signatures_arrays(
     return df.select(F.col(id_col), *aggs)
 
 
-def jaccard_verify_arrays(
+def jaccard_verify(
     docsets: DataFrame,
     pairs: DataFrame,
     id_col: str,
     arr_col: str,
     threshold: float,
 ) -> DataFrame:
-    """``jaccard_verify`` served from per-doc DISTINCT gram arrays (r16
-    OPT): intersection = ``size(array_intersect)``, union by inclusion-
-    exclusion — exactly the counts the exploded equi-join path produces
-    (both sides are distinct sets), without the three corpus-sized gram
-    evaluations that path pays (ga/gb joins + the sizes aggregation each
-    re-ran the explode subtree; profiled at sf0.1 as ~35 s of task time
-    per evaluation of the verified-pair table).  The candidate pairs are
-    explicitly repartitioned before the arrays attach — same AQE-
-    coalescing rationale as ``_attach_gram_arrays``.
+    """Exact Jaccard over candidate pairs — the one verify step after
+    LSH banding and after prefix filtering — served from per-doc DISTINCT
+    gram arrays: intersection = ``size(array_intersect)``, union by
+    inclusion-exclusion, an exact integer ratio cast to double
+    (cross-engine deterministic).  The arrays attach by two hash joins
+    against the doc-count-sized ``docsets`` AFTER the candidate distinct,
+    so they never ride the candidate shuffle.
 
-    The ``__inter > 0`` filter (r16 ADVICE) makes the output match the
-    exploded path EXACTLY at any threshold: the equi-join formulation
-    can never produce a zero-intersection pair, and it also discards
-    null-array candidates (``size(null) = -1`` under legacy sizeOfNull
-    would otherwise score -1/-1 = 1.0)."""
+    r16 OPT: the verify is CPU-bound per pair while the candidate-id rows
+    are tiny, so AQE's byte-based coalescing would funnel it onto 1-2
+    cores (profiled at sf0.1: a 2-task 3.7 s-tasktime final stage was the
+    served rows' entire wall).  An EXPLICIT numbered repartition on the
+    pair key is exempt from AQE coalescing (the ``_fat_gram_pairs``
+    rationale) and shuffles only the narrow id rows.
+
+    Only pairs sharing at least one gram are kept (``__inter > 0``), at
+    any threshold; that also discards null-array candidates
+    (``size(null) = -1`` under legacy sizeOfNull would otherwise score
+    -1/-1 = 1.0)."""
     n_par = pairs.sparkSession.sparkContext.defaultParallelism
-    ids = pairs.repartition(n_par, "id_a", "id_b")
+    ids = pairs.select("id_a", "id_b").repartition(n_par, "id_a", "id_b")
     ga = docsets.select(
         F.col(id_col).alias("id_a"),
         F.col(arr_col).alias("__ga"),
@@ -515,43 +494,6 @@ def lsh_incremental_assign(
     return assignments, updated
 
 
-def jaccard_verify(
-    grams: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    gram_col: str,
-    threshold: float,
-) -> DataFrame:
-    """Exact Jaccard over candidate pairs (the verify step after LSH).
-
-    ``grams``: one row per (id, gram).  Joins gram sets only for candidate
-    pairs; intersection via equi-join, union by inclusion-exclusion.
-    Jaccard is computed as an exact integer ratio cast to double —
-    cross-engine deterministic.
-    """
-    sizes = grams.groupBy(id_col).agg(F.count("*").alias("sz"))
-    ga = grams.select(F.col(id_col).alias("id_a"), F.col(gram_col).alias("g"))
-    gb = grams.select(F.col(id_col).alias("id_b"), F.col(gram_col).alias("g"))
-    inter = (
-        pairs.join(ga, "id_a")
-        .join(gb, ["id_b", "g"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
-
-
 def simhash_bits(token_col: Column | str, num_bits: int = 16) -> list[Column]:
     """Per-token ±1 contributions for each SimHash bit.
 
@@ -663,16 +605,15 @@ def set_similarity_candidates_prefix(
     r11 plan note: the core now runs NARROW (see
     ``set_similarity_candidate_ids``) — prefix rows and the pair-distinct
     shuffle carry only (id, size, position, gram); the sorted gram
-    ARRAYS live in a doc-count-sized side table and are joined onto the
-    pruned, deduplicated pairs at the very end.  At τ=0.5 the old shape
+    ARRAYS live in a doc-count-sized side table, joined onto the pruned,
+    deduplicated pairs only by the verify (``jaccard_verify``).  At τ=0.5 the old shape
     pushed every document's full array through ~|s|/2 prefix rows AND
     the pair shuffle — O(|s|²/2) bytes per document; the narrow shape is
     O(|s|) both places.  This is also what makes the prefix tables
     PERSISTABLE as a standing artifact (queries.dedup.ensure_prefix_gram_index).
     """
-    sets, prefixes = set_similarity_prefix_tables(grams, id_col, gram_col, threshold)
-    ids = set_similarity_candidate_ids(prefixes, id_col, threshold, max_df=max_df)
-    return _attach_gram_arrays(ids, sets, id_col)
+    _, prefixes = set_similarity_prefix_tables(grams, id_col, gram_col, threshold)
+    return set_similarity_candidate_ids(prefixes, id_col, threshold, max_df=max_df)
 
 
 def set_similarity_prefix_tables(
@@ -789,28 +730,6 @@ def set_similarity_candidate_ids(
     return pairs.distinct()
 
 
-def _attach_gram_arrays(ids: DataFrame, sets: DataFrame, id_col: str) -> DataFrame:
-    """Join the per-doc sorted gram arrays onto the pruned candidate
-    pairs — two hash joins against the doc-count-sized ``sets`` table
-    AFTER the distinct, so arrays never ride the candidate shuffle.
-
-    r16 OPT: the verify that consumes this output is CPU-bound per pair
-    (array_intersect over the full gram arrays) while the candidate-id
-    rows are tiny, so AQE's byte-based coalescing funnels the whole
-    verify onto 1-2 cores (profiled at sf0.1: a 2-task 3.7 s-tasktime
-    final stage was the served rows' entire wall).  An EXPLICIT numbered
-    repartition on the pair key is exempt from AQE coalescing — same
-    rationale as the _fat_gram_pairs repartition above — and it shuffles
-    only the narrow id rows; the arrays still attach after."""
-    n_par = ids.sparkSession.sparkContext.defaultParallelism
-    ids = ids.repartition(n_par, "id_a", "id_b")
-    ga = sets.select(F.col(id_col).alias("id_a"), F.col("__garr").alias("__garr_a"))
-    gb = sets.select(F.col(id_col).alias("id_b"), F.col("__garr").alias("__garr_b"))
-    return ids.join(ga, "id_a").join(gb, "id_b").select(
-        "id_a", "id_b", "__sza", "__szb", "__garr_a", "__garr_b"
-    )
-
-
 def _fat_gram_pairs(fat: DataFrame, id_col: str, t: float) -> DataFrame:
     """Exact within-group pair generation for prefix occurrences of fat
     (df > max_df) grams: grouped by the gram, the length + positional
@@ -867,12 +786,12 @@ def set_similarity_join(
 ) -> DataFrame:
     """Exact set-similarity self-join: all pairs with Jaccard ≥ threshold,
     with EXACT recall — prefix-filter + positional-bound candidates
-    (loss-less, see ``set_similarity_candidates_prefix``), then a
-    JOIN-FREE verify: the candidate rows already carry both sorted gram
-    arrays, so the intersection is one codegen ``array_intersect`` per
-    pair — no pair⋈grams re-join (the r7 rewrite: the join-based
-    ``jaccard_verify`` was 4× the candidate cost at sf0.1; arrays of
-    tens of grams are cheaper to carry than to re-join).
+    (loss-less, see ``set_similarity_candidates_prefix``), then
+    ``jaccard_verify``: both sorted gram arrays attach to the narrow
+    candidate pairs and the intersection is one codegen
+    ``array_intersect`` per pair — no pair⋈grams re-join (the r7
+    rewrite: the exploded equi-join verify was 4× the candidate cost at
+    sf0.1; arrays of tens of grams are cheaper to carry than to re-join).
 
     This completes the dedup blocking ladder: LSH bands (probabilistic,
     tunable recall) for the 100 TB default; prefix filtering when the
@@ -881,20 +800,9 @@ def set_similarity_join(
     counts (operator docstring caveat; ``max_df`` routes fat-gram prefixes
     through the exact within-group fallback instead of the df² join).
     """
-    cands = set_similarity_candidates_prefix(
-        grams, id_col, gram_col, threshold, max_df=max_df
-    )
-    inter = F.size(F.array_intersect("__garr_a", "__garr_b"))
-    return (
-        cands.withColumn("__inter", inter)
-        .withColumn(
-            "jaccard",
-            F.col("__inter").cast("double")
-            / (F.col("__sza") + F.col("__szb") - F.col("__inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    sets, prefixes = set_similarity_prefix_tables(grams, id_col, gram_col, threshold)
+    return set_similarity_join_from_tables(sets, prefixes, id_col, threshold, max_df=max_df)
+
 
 def set_similarity_join_from_tables(
     sets: DataFrame,
@@ -912,15 +820,4 @@ def set_similarity_join_from_tables(
     verify.  Exact same output as the direct path (same bounds, same
     epsilon-guarded ceils)."""
     ids = set_similarity_candidate_ids(prefixes, id_col, threshold, max_df=max_df)
-    cands = _attach_gram_arrays(ids, sets, id_col)
-    inter = F.size(F.array_intersect("__garr_a", "__garr_b"))
-    return (
-        cands.withColumn("__inter", inter)
-        .withColumn(
-            "jaccard",
-            F.col("__inter").cast("double")
-            / (F.col("__sza") + F.col("__szb") - F.col("__inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+    return jaccard_verify(sets, ids, id_col, "__garr", threshold)

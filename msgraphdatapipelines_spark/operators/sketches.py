@@ -289,24 +289,9 @@ def sketch_store_root(sf_dir: str, table: str, key: str) -> str:
     column): fingerprint-keyed like the ANN index / lexicon roots, so a
     regenerated table can never serve stale counts.  Prefix msgdp_cm_ is
     registered with sinks.vacuum_standing_artifacts."""
-    import hashlib
-    import os
-    import tempfile
+    from ..cache import standing_root
 
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    parts = []
-    if os.path.isdir(p):
-        for root_, _, files in sorted(os.walk(p)):
-            for fn in sorted(files):
-                st = os.stat(os.path.join(root_, fn))
-                parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(p)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    h = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{table}|{key}|{'|'.join(parts)}|cm|v1".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"msgdp_cm_{h}")
+    return standing_root("cm", sf_dir, (f"{table}.parquet",), table, key, "v1")
 
 
 def ensure_standing_sketch(

@@ -13,10 +13,13 @@ hashing.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..cache import BoundedMemo, file_identity
 
 
 @dataclass
@@ -96,13 +99,13 @@ def _harden(spark: SparkSession) -> None:
 # each query fn four times with 1-3 table loads each — pure repeated
 # driver latency.  The memo holds an UNEXECUTED scan plan: every action
 # still reads the parquet bytes (nothing about results is cached — the
-# same contract as similarity._memo_serve_plan, r16).  Keyed on the file's
-# (size, mtime_ns) so a replaced fixture busts the entry; non-local
-# layouts (no os.stat) skip the memo entirely.  At 100 TB the identical
-# lever is Spark's own filesourcePartitionFileCacheSize — this extends it
-# to the plan object so repeated serves skip relisting too.
-_SCAN_MEMO: dict[tuple, DataFrame] = {}
-_SCAN_MEMO_MAX = 64
+# same contract as similarity._memo_serve_plan, r16).  Keyed on
+# ``cache.file_identity`` (size, mtime, inode, ctime of every leaf file),
+# so a replaced fixture busts the entry even when its size and mtime
+# match; non-local layouts (no os.stat) skip the memo entirely.  At
+# 100 TB the identical lever is Spark's own filesourcePartitionFileCacheSize
+# — this extends it to the plan object so repeated serves skip relisting too.
+_SCAN_MEMO = BoundedMemo(64)
 
 
 def _app_id(spark: SparkSession) -> str:
@@ -116,26 +119,21 @@ def _app_id(spark: SparkSession) -> str:
     return aid
 
 
-def _memo_scan(key: tuple, build):
-    df = _SCAN_MEMO.get(key)
-    if df is None:
-        while len(_SCAN_MEMO) >= _SCAN_MEMO_MAX:
-            _SCAN_MEMO.pop(next(iter(_SCAN_MEMO)))
-        df = _SCAN_MEMO[key] = build()
-    return df
+def _local_identity(path: str) -> tuple | None:
+    try:
+        return file_identity(path)
+    except OSError:
+        return None
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import os as _os
-
     _harden(spark)
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        st = _os.stat(path)
-    except OSError:
+    ident = _local_identity(path)
+    if ident is None:
         return spark.read.parquet(path)
-    key = (_app_id(spark), _os.path.abspath(path), st.st_size, st.st_mtime_ns)
-    return _memo_scan(key, lambda: spark.read.parquet(path))
+    key = (_app_id(spark), os.path.abspath(path), ident)
+    return _SCAN_MEMO.get_or_build(key, lambda: spark.read.parquet(path))
 
 
 def load_spread(
@@ -165,30 +163,24 @@ def load_spread(
     3.1 → 0.83 s, dedup_minhash_lsh 4.0 → 1.7 s,
     dedup_connected_components 4.57 → 2.90 s.
     """
-    import os as _os
-
     df = load(spark, sf_dir, name)
-    path = _os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = _os.stat(path)
-    except OSError:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    ident = _local_identity(path)
+    if ident is None:
         return df  # non-local fixture layout: let the scan decide
     max_pb = int(
         spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     )
     par = spark.sparkContext.defaultParallelism
-    if -(-st.st_size // max_pb) >= par:
+    if -(-sum(f[1] for f in ident) // max_pb) >= par:
         return df
     # r17: the repartition plan is memoized alongside the scan (same
     # contract as _SCAN_MEMO above); max_pb/par key the entry so a conf
     # change re-decides the floor (the plan pin test flips maxPartitionBytes),
     # and the file identity `load` keys on makes a replaced file re-plan
     # instead of serving the old scan's reused shuffle output
-    memo_key = (
-        "spread", _app_id(spark), _os.path.abspath(path), st.st_size, st.st_mtime_ns,
-        key, max_pb, par,
-    )
-    return _memo_scan(memo_key, lambda: df.repartition(par, key))
+    memo_key = ("spread", _app_id(spark), os.path.abspath(path), ident, key, max_pb, par)
+    return _SCAN_MEMO.get_or_build(memo_key, lambda: df.repartition(par, key))
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

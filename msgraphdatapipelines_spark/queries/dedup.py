@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import standing_root
 from ..operators import dedup as D
 from . import load, load_spread, register
 
@@ -31,41 +32,27 @@ grams AS (
 """
 
 
-def _doc_grams(spark: SparkSession, sf_dir: str, pin: bool = False) -> DataFrame:
-    """One row per (doc_id, distinct word-3gram).
-
-    ``pin=True`` eagerly localCheckpoints the exploded gram table.  r6
-    finding: DON'T, in single-action queries — it A/B'd ~10% faster warm
-    at sf0.1 for the 4-consumer pair pipeline, but at 100× the pinned
-    variant ran >40 min where the unpinned pipeline finishes in ~8 —
-    a checkpointed input is an ExistingRDD with NO column pruning, NO
-    stats, and the source's partitioning frozen, so the verify join loses
-    its planned shape exactly when the table is big.  Within ONE action
-    Catalyst/Spark already avoid the worst duplication (identical
-    aggregation subtrees reuse exchanges), and parquet re-scans are cheap
-    relative to materializing n·grams wide string rows.  Pinning small
-    MULTI-JOB intermediates is still right (lsh_dedup_clusters pins its
-    signature table: 186 → 93 s at 100×) — the lever is table size ×
-    job count, not consumer count alone.  Kept as an explicit flag so the
-    finding stays executable.
-    """
-    # r16 OPT: scan-parallelism floor (load_spread) — the single-row-group
-    # fixture file otherwise pins the gram explode + 8×md5 signature work
-    # to ONE task (profiled: four ~3.4 s single-task subtree evaluations
-    # in dedup_minhash_lsh; interleaved A/B medians: minhash 4.0 → 1.7 s,
-    # connected_components 4.57 → 2.90 s).  No-op once the input splits.
-    docs = load_spread(spark, sf_dir, "documents", "doc_id")
-    grams = docs.select("doc_id", F.explode(D.word_ngrams("text", 3)).alias("g"))
-    return grams.localCheckpoint(eager=True) if pin else grams
-
-
 def _doc_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per doc with its DISTINCT word-3gram set in one ARRAY cell
     (r16 OPT) — word_ngrams already returns the distinct set, so the
     LSH family's per-doc quantities never need the explode at all:
     signatures are array_min(transform(...)) narrow maps and the Jaccard
     verify is size(array_intersect) — zero gram-keyed shuffles, zero
-    n·grams-row explodes in the whole pipeline (guide §2.4)."""
+    n·grams-row explodes in the whole pipeline (guide §2.4).
+
+    r16 OPT: scan-parallelism floor (load_spread) — the single-row-group
+    fixture file otherwise pins the 8×md5 signature work to ONE task
+    (interleaved A/B medians: minhash 4.0 → 1.7 s, connected_components
+    4.57 → 2.90 s).  No-op once the input splits.
+
+    r6 finding: never pin the gram PAYLOAD (arrays or exploded rows) with
+    a localCheckpoint.  It A/B'd ~10% faster warm at sf0.1, but at 100×
+    the pinned variant ran >40 min where the unpinned pipeline finishes
+    in ~8 — a checkpointed input has no column pruning, no stats and a
+    frozen partitioning, so the verify join loses its planned shape
+    exactly when the table is big.  Pinning small MULTI-JOB
+    intermediates (the signature table, below) is still right — the
+    lever is table size × job count, not consumer count alone."""
     docs = load_spread(spark, sf_dir, "documents", "doc_id")
     return docs.select("doc_id", D.word_ngrams("text", 3).alias("_garr"))
 
@@ -85,9 +72,9 @@ def _pinned_minhash_sigs(docsets: DataFrame) -> DataFrame:
     precedent as lsh_dedup_clusters's signature pin (186 → 93 s at the
     100× sweep).  This is the SMALL-table pin the r6 finding allows —
     pinning the gram payload (exploded rows or arrays) stays banned (see
-    _doc_grams).  Interleaved A/B at sf0.1 of the pin alone (pre-array-
+    _doc_sets).  Interleaved A/B at sf0.1 of the pin alone (pre-array-
     native), 7 reps: dedup_minhash_lsh median 2.92 → 2.11 s."""
-    sigs = D.minhash_signatures_arrays(
+    sigs = D.minhash_signatures(
         docsets, "doc_id", "_garr", num_hashes=8, hash_fn="md5"
     )
     return sigs.localCheckpoint(eager=True)
@@ -141,7 +128,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection join only meets docs sharing a gram, so cost is driven by
     gram frequency, not n² (the exact-verification building block that
     LSH narrows further)."""
-    grams = _doc_grams(spark, sf_dir)
+    grams = _doc_sets(spark, sf_dir).select("doc_id", F.explode("_garr").alias("g"))
     ga = grams.select(F.col("doc_id").alias("id_a"), "g")
     gb = grams.select(F.col("doc_id").alias("id_b"), "g")
     pairs = (
@@ -228,7 +215,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docsets = _doc_sets(spark, sf_dir)  # r16 OPT: array-native, see _doc_sets
     sigs = _pinned_minhash_sigs(docsets)
     cand = D.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=4)
-    return D.jaccard_verify_arrays(docsets, cand, "doc_id", "_garr", threshold=0.5)
+    return D.jaccard_verify(docsets, cand, "doc_id", "_garr", threshold=0.5)
 
 
 def _minhash_representatives_oracle(num_hashes: int = 8, bands: int = 4) -> str:
@@ -279,11 +266,8 @@ def dedup_minhash_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     min id, then per-doc min over its buckets; keep iff own representative.
     Two map-combinable hash shuffles regardless of duplication regime
     (operators.dedup.lsh_dedup_representatives; 100× measurement in
-    PERF.md).  r17 (r16 VERDICT item 9): signatures via the array-native
-    operator like the graded family — the exploded reference operator
-    stays the equivalence baseline under
-    test_array_native_minhash_equals_exploded_path."""
-    sigs = D.minhash_signatures_arrays(
+    PERF.md)."""
+    sigs = D.minhash_signatures(
         _doc_sets(spark, sf_dir), "doc_id", "_garr", num_hashes=8, hash_fn="md5"
     )
     return D.lsh_dedup_representatives(sigs, "doc_id", num_hashes=8, bands=4)
@@ -339,7 +323,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docsets = _doc_sets(spark, sf_dir)  # r16 OPT: array-native, see _doc_sets
     sigs = _pinned_minhash_sigs(docsets)
     cand = D.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=4)
-    verified = D.jaccard_verify_arrays(docsets, cand, "doc_id", "_garr", threshold=0.5)
+    verified = D.jaccard_verify(docsets, cand, "doc_id", "_garr", threshold=0.5)
     docs = load(spark, sf_dir, "documents").select("doc_id")
     comp = D.connected_components(
         docs, verified.select("id_a", "id_b"), id_col="doc_id"
@@ -408,10 +392,8 @@ def dedup_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Θ(m²) per cluster (driver-graded dedup_connected_components documents
     that cost).  Same fixpoint semantics: chained bucket-sharing docs
     collapse into one cluster.  Demoted-oracle row (recursive CTE over the
-    star edges); the verified-pair closure carries the driver grade.
-    r17 (r16 VERDICT item 9): array-native signatures like the graded
-    family; the exploded operator stays the pinned equivalence baseline."""
-    sigs = D.minhash_signatures_arrays(
+    star edges); the verified-pair closure carries the driver grade."""
+    sigs = D.minhash_signatures(
         _doc_sets(spark, sf_dir), "doc_id", "_garr", num_hashes=8, hash_fn="md5"
     )
     return D.lsh_dedup_clusters(sigs, "doc_id", num_hashes=8, bands=4)
@@ -739,28 +721,20 @@ def _contamination_from_docs(docs: DataFrame, one_pass: bool) -> DataFrame:
 
 
 def prefix_index_root(sf_dir: str, n: int, threshold: float, variant: str = "full") -> str:
-    """Deterministic artifact location keyed on corpus identity (path +
-    documents.parquet size/mtime fingerprint) + the gram/threshold
+    """Deterministic artifact location keyed on corpus identity
+    (``cache.standing_root`` over documents.parquet) + the gram/threshold
     parameters — a regenerated corpus or different τ can never serve a
     stale table."""
-    import hashlib
-    import os
-    import tempfile
+    return standing_root(
+        "ppj", sf_dir, ("documents.parquet",), f"n={n}", f"t={threshold}", variant, "v3"
+    )
 
-    p = os.path.join(sf_dir, "documents.parquet")
-    parts = []
-    if os.path.isdir(p):
-        for root_, _, files in sorted(os.walk(p)):
-            for fn in sorted(files):
-                st = os.stat(os.path.join(root_, fn))
-                parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(p)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{'|'.join(parts)}|ppj|n={n}|t={threshold}|{variant}|v3".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"msgdp_ppj_{key}")
+
+def _lower_gram_rows(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, g): one row per distinct lower-cased word n-gram — the
+    exploded feed the prefix-filter operators take."""
+    grams = D.word_ngrams(F.lower(F.col("text")), n)
+    return docs.select("doc_id", F.explode(grams).alias("g"))
 
 
 # ---------------------------------------------------------------------------
@@ -858,11 +832,8 @@ def prefix_index_build(
     hpath = sinks._hpath(jvm)
     gens = _committed_gens(fs, hpath, root)
     if not gens:
-        grams = docs.select(
-            "doc_id", F.explode(D.word_ngrams(F.lower(F.col("text")), n)).alias("g")
-        )
         stage = f"{root}/stage.{uuid.uuid4().hex[:8]}"
-        _write_gen_tables(spark, grams, threshold, stage)
+        _write_gen_tables(spark, _lower_gram_rows(docs, n), threshold, stage)
         fs.mkdirs(hpath(f"{stage}/_folded"))
         if _committed_gens(fs, hpath, root):
             fs.delete(hpath(stage), True)  # race loser: discard staging
@@ -930,11 +901,8 @@ def _publish_batch(
     if fs.exists(dst_sets) and fs.exists(dst_pref):
         return  # replay of a fully-published batch
     vocab = spark.read.parquet(f"{gen}/vocab")
-    grams = docs.select(
-        "doc_id", F.explode(D.word_ngrams(F.lower(F.col("text")), n)).alias("g")
-    )
     sets, prefixes = D.set_similarity_prefix_tables(
-        grams, "doc_id", "g", threshold, vocab=vocab
+        _lower_gram_rows(docs, n), "doc_id", "g", threshold, vocab=vocab
     )
     stage = f"{root}/stage.{uuid.uuid4().hex[:8]}.{bid}"
     sets.write.parquet(f"{stage}/sets")
@@ -1432,7 +1400,7 @@ def dedup_canonical_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docsets = _doc_sets(spark, sf_dir)  # r16 OPT: array-native, see _doc_sets
     sigs = _pinned_minhash_sigs(docsets)
     cand = D.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=4)
-    verified = D.jaccard_verify_arrays(docsets, cand, "doc_id", "_garr", threshold=0.5)
+    verified = D.jaccard_verify(docsets, cand, "doc_id", "_garr", threshold=0.5)
     # r16 OPT: spread so the tokenize+distinct quality scan parallelizes
     # (the closure universe below prunes to doc_id, so its branch shuffles
     # only ids); no-op at real input sizes

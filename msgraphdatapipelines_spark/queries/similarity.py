@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import BoundedMemo, standing_root
 from ..operators import similarity as S
 from . import load, register
 
@@ -1069,46 +1070,19 @@ def _indexed_models(emb: DataFrame):
     return cents, books
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Cheap corpus-identity fingerprint: byte size + mtime of every file
-    under ``embeddings.parquet`` (the local analog of a table snapshot
-    version).  Metadata-only — no data scan — and it changes whenever the
-    fixture is regenerated, even at an identical row count, so a stale
-    standing index can never silently serve old encodings."""
-    import os
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    parts = []
-    if os.path.isdir(p):
-        for root_, _, files in sorted(os.walk(p)):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root_, f))
-                parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(p)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
-
-
 def standing_index_root(
     sf_dir: str, n_centroids: int = N_CENTROIDS, variant: str = "full"
 ) -> str:
     """Deterministic on-disk location of the standing IVF+PQ artifact for
-    a corpus: keyed by corpus identity (absolute path + parquet
-    size/mtime fingerprint) and every model parameter, so a corpus or
+    a corpus: keyed by corpus identity (``cache.standing_root`` over
+    ``embeddings.parquet``) and every model parameter, so a corpus or
     config change gets a FRESH artifact instead of silently serving
     stale encodings.  ``variant`` isolates lifecycle rehearsal roots
     (e.g. the erasure row) from the shared serving artifact."""
-    import hashlib
-    import os
-    import tempfile
-
-    vtag = "" if variant == "full" else f"|{variant}"
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{_corpus_fingerprint(sf_dir)}"
-        f"|{n_centroids}|{_PQ_M}|{_PQ_KS}|{DIM}{vtag}|v3".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"msgdp_ivfpq_{key}")
+    return standing_root(
+        "ivfpq", sf_dir, ("embeddings.parquet",),
+        n_centroids, _PQ_M, _PQ_KS, DIM, variant, "v3",
+    )
 
 
 def ensure_standing_index(
@@ -1278,18 +1252,12 @@ def _write_json_atomic(fs, hpath, path: str, obj: dict) -> None:
 # served old-version planning state immediately).  Entries are
 # model-sized (k centroids, m×ks codewords, ≤|labels|·k summary rows);
 # the cache is bounded FIFO.
-_PLAN_CACHE: dict[tuple, dict] = {}
-_PLAN_CACHE_MAX = 16
+_PLAN_CACHE = BoundedMemo(16)
 
 
 def _plan_cache_state(spark: SparkSession, root: str, version: int) -> dict:
     key = (spark.sparkContext.applicationId, root, int(version))
-    st = _PLAN_CACHE.get(key)
-    if st is None:
-        while len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-            _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-        st = _PLAN_CACHE[key] = {}
-    return st
+    return _PLAN_CACHE.get_or_build(key, dict)
 
 
 def _memo_serve_plan(spark, root: str, version: int, tag: str, build):
@@ -1324,8 +1292,7 @@ def plan_cache_invalidate(root: str) -> None:
     manifest is never stale, but erased state should not linger)."""
     from .. import sinks
 
-    for k in [k for k in _PLAN_CACHE if k[1] == root]:
-        _PLAN_CACHE.pop(k, None)
+    _PLAN_CACHE.forget(lambda k: k[1] == root)
     sinks.zonemap_cache_forget(root)
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import streaming as ST
+from ..cache import standing_root
 from . import load_events, register
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -396,20 +397,14 @@ def _ensure_sentineled_events(sf_dir: str) -> str:
     pushes the type filters below the watermark operators: only rows
     that PASS a filter advance that side's watermark (a type-less
     sentinel advances nothing — measured, not theorized)."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}|sentinel|v2".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), f"msgdp_sent_{key}")
+    root = standing_root("sent", sf_dir, ("events.parquet",), "v2")
     marker = os.path.join(root, "_ready")
     if not os.path.exists(marker):
         os.makedirs(root, exist_ok=True)

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import standing_root
 from ..operators import text as X
 from . import load, load_spread, register
 from .similarity import _cos as _vec_cos
@@ -1425,35 +1426,18 @@ def dedup_remove_spans_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lexicon_root(sf_dir: str, variant: str = "full") -> str:
-    """Deterministic artifact location, keyed on corpus identity (path +
-    documents.parquet size/mtime fingerprint) — a regenerated corpus can
-    never silently serve stale postings.  ``variant`` isolates lifecycle
-    rehearsal roots (e.g. the erasure row) from the shared serving
-    artifact, the prefix_index_root discipline."""
-    import hashlib
-    import os
-    import tempfile
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    parts = []
-    if os.path.isdir(p):
-        for root_, _, files in sorted(os.walk(p)):
-            for fn in sorted(files):
-                st = os.stat(os.path.join(root_, fn))
-                parts.append(f"{fn}:{st.st_size}:{st.st_mtime_ns}")
-    else:
-        st = os.stat(p)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.md5(
-        # v3 (r13): generational layout — bumping the key retires v2
-        # meta.json-commit artifacts instead of carrying a legacy reader.
-        # v4 (r17): range-partitioned + zonemapped postings — old hash-
-        # partitioned artifacts rebuild rather than serving unprunable
-        # layouts (the serve falls back gracefully, but a fresh root keeps
-        # the fleet uniform)
-        f"{os.path.abspath(sf_dir)}|{'|'.join(parts)}|lex|{variant}|v4".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"msgdp_lex_{key}")
+    """Deterministic artifact location, keyed on corpus identity
+    (``cache.standing_root`` over documents.parquet) — a regenerated
+    corpus can never silently serve stale postings.  ``variant`` isolates
+    lifecycle rehearsal roots (e.g. the erasure row) from the shared
+    serving artifact, the prefix_index_root discipline."""
+    # v3 (r13): generational layout — bumping the key retires v2
+    # meta.json-commit artifacts instead of carrying a legacy reader.
+    # v4 (r17): range-partitioned + zonemapped postings — old hash-
+    # partitioned artifacts rebuild rather than serving unprunable
+    # layouts (the serve falls back gracefully, but a fresh root keeps
+    # the fleet uniform)
+    return standing_root("lex", sf_dir, ("documents.parquet",), variant, "v4")
 
 
 def _lex_batch_ids(spark: SparkSession, root: str, table: str = "tf") -> list[int]:

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import standing_root
 from . import load, load_spread, register
 
 
@@ -990,19 +991,13 @@ def ensure_colocated_facts(
 
 
 def _colocated_names(sf_dir: str, num_buckets: int) -> tuple[str, str, str]:
-    import hashlib
-    import os
-    import tempfile
-
     # Fingerprint BOTH source files: regenerating lineitem alone must
     # rotate the key too, or a metastore-backed deployment would keep
     # serving the stale bucketed lineitem copy.
-    stats = [os.stat(os.path.join(sf_dir, f"{t}.parquet")) for t in ("orders", "lineitem")]
-    sig = "|".join(f"{s.st_size}:{s.st_mtime_ns}" for s in stats)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{sig}|{num_buckets}|bkt".encode()
-    ).hexdigest()[:10]
-    root = os.path.join(tempfile.gettempdir(), f"msgdp_bkt_{key}")
+    root = standing_root(
+        "bkt", sf_dir, ("orders.parquet", "lineitem.parquet"), num_buckets
+    )
+    key = root.rsplit("_", 1)[1]
     return f"orders_bkt_{key}", f"lineitem_bkt_{key}", root
 
 

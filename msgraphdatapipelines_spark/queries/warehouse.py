@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import standing_root
 from . import load, register
 
 _T0 = "2024-01-01 00:00:00"
@@ -346,22 +347,15 @@ def orders_agg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ensure_standing_layout(spark: SparkSession, sf_dir: str) -> str:
     """Build-at-most-once Z-ordered + zonemapped copy of ``events`` (r9):
     the clustered, manifest-carrying layout a 100 TB warehouse keeps as
-    its table format.  Keyed on the source parquet's size/mtime
-    fingerprint (the standing-artifact discipline); ``_zm_ready`` marker
+    its table format.  Keyed on the source parquet's file identity
+    (``cache.standing_root``, the standing-artifact discipline); ``_zm_ready`` marker
     written last via atomic rename is the commit point."""
-    import hashlib
     import os
-    import tempfile
 
     from .. import sinks
     from . import load_events
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}|zm|v1".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), f"msgdp_zm_{key}")
+    root = standing_root("zm", sf_dir, ("events.parquet",), "v1")
     marker = f"{root}/_zm_ready"
     if not os.path.exists(marker):
         ev = load_events(spark, sf_dir)
@@ -452,19 +446,12 @@ def ensure_bloom_layout(spark: SparkSession, sf_dir: str) -> str:
     discipline as :func:`ensure_standing_layout`: keyed on the source
     fingerprint, ``_bloom_ready`` marker committed last by atomic
     rename."""
-    import hashlib
     import os
-    import tempfile
 
     from .. import sinks
     from . import load
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}|bloom|v1".encode()
-    ).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), f"msgdp_bloom_{key}")
+    root = standing_root("bloom", sf_dir, ("orders.parquet",), "v1")
     marker = f"{root}/_bloom_ready"
     if not os.path.exists(marker):
         o = load(spark, sf_dir, "orders")

@@ -22,6 +22,8 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import BoundedMemo
+
 LOAD_STAMP = "timeGenerated"
 LOAD_DATE = "loadDate"
 # target size of one written data file: write_snapshot's sizing rule and
@@ -1930,31 +1932,26 @@ def _current_paths(base: DataFrame, files: list[str], path: str) -> list[str]:
 # place on compaction and always re-read.  `zonemap_cache_forget`
 # drops a root's entries (GDPR posture: called alongside the
 # queries-level plan_cache_invalidate).
-_ZM_CACHE: dict[tuple, list] = {}
-_ZM_CACHE_MAX = 32
+_ZM_CACHE = BoundedMemo(32)
 
 
 def _zonemap_rows_cached(spark: SparkSession, vdir: str) -> list | None:
     """Collected `_zonemap` rows for an IMMUTABLE version dir, cached;
     None when the dir carries no manifest (not cached — a later
     aside-restore may bring it back)."""
-    key = (spark.sparkContext.applicationId, vdir)
-    if key in _ZM_CACHE:
-        return _ZM_CACHE[key]
-    fs, _, jvm = _fs_for(spark, vdir)
-    if not fs.exists(_hpath(jvm)(f"{vdir}/_zonemap")):
-        return None
-    rows = [r.asDict() for r in spark.read.parquet(f"{vdir}/_zonemap").collect()]
-    while len(_ZM_CACHE) >= _ZM_CACHE_MAX:
-        _ZM_CACHE.pop(next(iter(_ZM_CACHE)))
-    _ZM_CACHE[key] = rows
-    return rows
+
+    def build():
+        fs, _, jvm = _fs_for(spark, vdir)
+        if not fs.exists(_hpath(jvm)(f"{vdir}/_zonemap")):
+            return None
+        return [r.asDict() for r in spark.read.parquet(f"{vdir}/_zonemap").collect()]
+
+    return _ZM_CACHE.get_or_build((spark.sparkContext.applicationId, vdir), build)
 
 
 def zonemap_cache_forget(root: str) -> None:
     """Drop every cached manifest under ``root`` (all versions)."""
-    for k in [k for k in _ZM_CACHE if k[1].startswith(root.rstrip("/"))]:
-        _ZM_CACHE.pop(k, None)
+    _ZM_CACHE.forget(lambda k: k[1].startswith(root.rstrip("/")))
 
 
 def scan_pruned(

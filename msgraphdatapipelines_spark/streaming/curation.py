@@ -53,9 +53,9 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from .. import sinks
-from ..operators import dedup as D
 from ..operators.sketches import build_distinct_sketches
 from ..sources import rest
+from .dedup_stream import lsh_assign_round
 
 
 def curation_pipeline_stream(
@@ -174,20 +174,10 @@ def curation_pipeline_stream(
         delta = delta.localCheckpoint(eager=True)
         upserts = delta.filter(~F.col(removed_col))
 
-        # (2) batch-keyed idempotent outputs
-        grams = upserts.select(
-            id_col, F.explode(D.word_ngrams(text_col, 3)).alias("g")
-        )
-        sigs = D.minhash_signatures(grams, id_col, "g", num_hashes=num_hashes)
-        # explicit existence probes (r7 ADVICE item 2): a read failure on
-        # EXISTING state fails the round (token unmoved, replayed on
-        # restart) instead of silently restarting from empty state
-        if sinks.snapshot_exists(spark, dedup_state_path):
-            dstate = sinks.read_snapshot(spark, dedup_state_path)
-        else:
-            dstate = None
-        assigns, new_dstate = D.lsh_incremental_assign(
-            sigs, dstate, id_col, num_hashes=num_hashes, bands=bands
+        # (2) batch-keyed idempotent outputs; a read failure on EXISTING
+        # dedup state fails the round (token unmoved, replayed on restart)
+        assigns, new_dstate = lsh_assign_round(
+            spark, upserts, dedup_state_path, id_col, text_col, num_hashes, bands, "md5"
         )
         assigns = assigns.localCheckpoint(eager=True)  # 2 consumers: write + index gate
         assigns.write.mode("overwrite").parquet(f"{assign_dir}/batch_id={batch_id}")

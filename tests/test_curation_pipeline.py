@@ -72,8 +72,8 @@ def _paths(tmp_path):
 
 def _sigs(spark, docs: dict[int, str]):
     df = spark.createDataFrame(sorted(docs.items()), SCHEMA)
-    grams = df.select("doc_id", F.explode(D.word_ngrams("text", 3)).alias("g"))
-    return D.minhash_signatures(grams, "doc_id", "g", num_hashes=8)
+    sets = df.select("doc_id", D.word_ngrams("text", 3).alias("g"))
+    return D.minhash_signatures(sets, "doc_id", "g", num_hashes=8)
 
 
 def _batch_twin_assigns(spark):

@@ -230,3 +230,102 @@ def test_load_spread_rekeys_a_replaced_file(spark, tmp_path):
     want = list(range(100, 160))
     assert sorted(r["id"] for r in load(spark, root, "docs").collect()) == want
     assert sorted(r["id"] for r in load_spread(spark, root, "docs", "id").collect()) == want
+
+
+def test_same_size_same_mtime_replacement_is_a_new_input(spark, tmp_path):
+    """A documents.parquet replaced by a file of the same size with its
+    old mtime_ns restored is still a new input: moved in with os.replace
+    it has a new inode, rewritten in place it has a new ctime.  load_spread
+    returns the new rows and prefix_index_root rotates in both cases."""
+    import io
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from msgraphdatapipelines_spark.queries import load_spread
+    from msgraphdatapipelines_spark.queries.dedup import prefix_index_root
+
+    root, path = str(tmp_path), tmp_path / "documents.parquet"
+
+    def parquet_bytes(text: str) -> bytes:
+        buf = io.BytesIO()
+        table = pa.table({"doc_id": [1, 2, 3], "text": [text] * 3})
+        pq.write_table(table, buf, compression="none")
+        return buf.getvalue()
+
+    def texts() -> set:
+        return {r["text"] for r in load_spread(spark, root, "documents", "doc_id").collect()}
+
+    path.write_bytes(parquet_bytes("aaaa"))
+    assert texts() == {"aaaa"}
+    old = os.stat(path)
+    r1 = prefix_index_root(root, 3, 0.5)
+
+    (tmp_path / "next.parquet").write_bytes(parquet_bytes("bbbb"))
+    os.replace(tmp_path / "next.parquet", path)
+    os.utime(path, ns=(old.st_atime_ns, old.st_mtime_ns))
+    moved = os.stat(path)
+    assert (moved.st_size, moved.st_mtime_ns) == (old.st_size, old.st_mtime_ns)
+    assert texts() == {"bbbb"}
+    r2 = prefix_index_root(root, 3, 0.5)
+    assert r2 != r1
+
+    time.sleep(0.05)  # file timestamps tick at the kernel's coarse clock
+    with open(path, "r+b") as fh:  # same inode, same size
+        fh.write(parquet_bytes("cccc"))
+    os.utime(path, ns=(old.st_atime_ns, old.st_mtime_ns))
+    rewritten = os.stat(path)
+    assert rewritten.st_ino == moved.st_ino
+    assert (rewritten.st_size, rewritten.st_mtime_ns) == (old.st_size, old.st_mtime_ns)
+    assert texts() == {"cccc"}
+    assert prefix_index_root(root, 3, 0.5) != r2
+
+
+def test_bounded_memo_fifo_and_thread_safe():
+    """cache.BoundedMemo, the one in-process memo: FIFO eviction at
+    capacity, a None build is not cached, forget(predicate) drops matches;
+    threads hammering get_or_build and forget with a short switch interval
+    never push it past capacity and never raise."""
+    import sys
+    import threading
+
+    from msgraphdatapipelines_spark.cache import BoundedMemo
+
+    memo = BoundedMemo(3)
+    for k in range(5):
+        assert memo.get_or_build(k, lambda k=k: k * 10) == k * 10
+    assert list(memo) == [2, 3, 4] and memo.get_or_build(4, lambda: -1) == 40
+    builds = []
+    for _ in range(2):
+        assert memo.get_or_build("missing", lambda: builds.append(1)) is None
+    assert len(builds) == 2 and "missing" not in memo
+    memo.forget(lambda k: k % 2 == 0)
+    assert list(memo) == [3]
+
+    shared, errors, over = BoundedMemo(4), [], []
+
+    def worker(seed: int) -> None:
+        try:
+            for i in range(3000):
+                shared.get_or_build((seed, i % 9), lambda: i)
+                if i % 97 == 0:
+                    shared.forget(lambda k: k[0] == seed)
+                if len(shared) > 4:
+                    over.append(len(shared))
+        except Exception as e:  # noqa: BLE001 — collected and asserted below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == [] and over == []

@@ -38,10 +38,10 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
     docs = spark.createDataFrame(
         [(1, base), (2, near), (3, far)], "doc_id long, text string"
     )
-    grams = docs.select("doc_id", F.explode(D.word_ngrams("text", 3)).alias("g"))
-    sigs = D.minhash_signatures(grams, "doc_id", "g")
+    sets = docs.select("doc_id", D.word_ngrams("text", 3).alias("g"))
+    sigs = D.minhash_signatures(sets, "doc_id", "g")
     pairs = D.lsh_candidate_pairs(sigs, "doc_id")
-    verified = D.jaccard_verify(grams, pairs, "doc_id", "g", threshold=0.5).collect()
+    verified = D.jaccard_verify(sets, pairs, "doc_id", "g", threshold=0.5).collect()
     assert [(r["id_a"], r["id_b"]) for r in verified] == [(1, 2)]
     assert verified[0]["jaccard"] > 0.5
 
@@ -359,8 +359,8 @@ def test_lsh_candidate_pairs_cap_truncates_deterministically(spark):
     docs = spark.createDataFrame(
         [(i, "the same text repeated " * 3) for i in range(1, 7)], "doc_id long, text string"
     )
-    grams = docs.select("doc_id", F.explode(D.word_ngrams("text", 3)).alias("g"))
-    sigs = D.minhash_signatures(grams, "doc_id", "g", num_hashes=8)
+    sets = docs.select("doc_id", D.word_ngrams("text", 3).alias("g"))
+    sigs = D.minhash_signatures(sets, "doc_id", "g", num_hashes=8)
     uncapped = D.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=4)
     assert uncapped.count() == 15  # 6-clique: C(6,2) pairs
     capped = D.lsh_candidate_pairs(
@@ -535,8 +535,8 @@ def test_lsh_clusters_equal_pair_graph_closure(spark, sf_dir):
     same components as the closure of the full candidate-pair graph —
     the equivalence that makes it the production path."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    grams = docs.select("doc_id", F.explode(D.word_ngrams("text", 3)).alias("g"))
-    sigs = D.minhash_signatures(grams, "doc_id", "g", num_hashes=8, hash_fn="md5")
+    sets = docs.select("doc_id", D.word_ngrams("text", 3).alias("g"))
+    sigs = D.minhash_signatures(sets, "doc_id", "g", num_hashes=8, hash_fn="md5")
 
     star = {
         r["doc_id"]: r["component"]
@@ -556,8 +556,8 @@ def test_lsh_clusters_refine_representatives(spark, sf_dir):
     """Closure can only merge further than the single-step representative
     pass: every doc's component id <= its single-step rep_id."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    grams = docs.select("doc_id", F.explode(D.word_ngrams("text", 3)).alias("g"))
-    sigs = D.minhash_signatures(grams, "doc_id", "g", num_hashes=8, hash_fn="md5")
+    sets = docs.select("doc_id", D.word_ngrams("text", 3).alias("g"))
+    sigs = D.minhash_signatures(sets, "doc_id", "g", num_hashes=8, hash_fn="md5")
     comp = {
         r["doc_id"]: r["component"]
         for r in D.lsh_dedup_clusters(sigs, "doc_id").collect()
@@ -630,8 +630,8 @@ def test_lsh_incremental_matches_batch_representatives(spark, sf_dir):
     """Feeding the whole corpus as ONE batch must reproduce the one-shot
     representative pass exactly (same single-step contract)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    grams = docs.select("doc_id", F.explode(D.word_ngrams("text", 3)).alias("g"))
-    sigs = D.minhash_signatures(grams, "doc_id", "g", num_hashes=8, hash_fn="md5")
+    sets = docs.select("doc_id", D.word_ngrams("text", 3).alias("g"))
+    sigs = D.minhash_signatures(sets, "doc_id", "g", num_hashes=8, hash_fn="md5")
     one_shot = {
         r["doc_id"]: r["rep_id"]
         for r in D.lsh_dedup_representatives(sigs, "doc_id").collect()
@@ -3287,32 +3287,42 @@ def test_load_spread_floors_scan_parallelism(spark, sf_dir):
     assert df.count() == load(spark, sf_dir, "documents").count()
 
 
-def test_array_native_minhash_equals_exploded_path(spark, sf_dir):
-    """r16 OPT pin: the array-native LSH pipeline (signatures via
-    array_min(transform(...)), verify via size(array_intersect)) is
-    BIT-IDENTICAL to the exploded-gram reference path — word_ngrams
-    returns the distinct gram set, so min-over-rows == array_min and the
-    equi-join intersection count == array_intersect size.  Guards the
-    exact-equality claim the r16 optimization rests on."""
-    from pyspark.sql import functions as F
+def test_minhash_and_jaccard_verify_match_python_reference(spark, sf_dir):
+    """MinHash signatures and the Jaccard verify against a test-local
+    Python reference — the md5 minimum per doc and seed, and set Jaccard
+    (pairs sharing a gram, J >= 0.5, 6 places) — on the fixture corpus
+    plus adversarial docs: null text, "", a one-token doc, three
+    identical docs and a doc that repeats one token."""
+    import hashlib
 
-    from msgraphdatapipelines_spark.operators import dedup as D
     from msgraphdatapipelines_spark.queries import load
 
-    docs = load(spark, sf_dir, "documents")
-    docsets = docs.select("doc_id", D.word_ngrams("text", 3).alias("_garr"))
-    grams = docs.select("doc_id", F.explode(D.word_ngrams("text", 3)).alias("g"))
+    odd = [(-1, None), (-2, ""), (-3, "solo"), (-7, "spam " * 9)]
+    odd += [(-6 + i, "same text said three times") for i in range(3)]
+    adversarial = spark.createDataFrame(odd, "doc_id long, text string")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text").unionByName(adversarial)
+    sets = docs.select("doc_id", D.word_ngrams("text", 3).alias("g"))
+    sigs = D.minhash_signatures(sets, "doc_id", "g", 8, "md5")
+    cand = D.lsh_candidate_pairs(sigs, "doc_id", num_hashes=8, bands=4)
+    got = sorted(map(tuple, D.jaccard_verify(sets, cand, "doc_id", "g", 0.5).collect()))
 
-    sig_a = D.minhash_signatures_arrays(docsets, "doc_id", "_garr", 8, "md5")
-    sig_e = D.minhash_signatures(grams, "doc_id", "g", 8, "md5")
-    assert sorted(map(tuple, sig_a.collect())) == sorted(map(tuple, sig_e.collect()))
+    # reference: a null gram (null text) is no gram, as in SQL
+    grams = {r["doc_id"]: {g for g in r["g"] or [] if g is not None} for r in sets.collect()}
 
-    cand = D.lsh_candidate_pairs(sig_e, "doc_id", num_hashes=8, bands=4)
-    ver_a = D.jaccard_verify_arrays(docsets, cand, "doc_id", "_garr", 0.5)
-    ver_e = D.jaccard_verify(grams, cand, "doc_id", "g", 0.5)
-    rows_a = sorted(map(tuple, ver_a.collect()))
-    assert rows_a == sorted(map(tuple, ver_e.collect()))
-    assert len(rows_a) > 0  # non-vacuous on the fixture corpus
+    def md5_min(gs, s):
+        return min((hashlib.md5(f"{s}|{g}".encode()).hexdigest() for g in gs), default=None)
+
+    want_sigs = sorted((d, *(md5_min(gs, s) for s in range(8))) for d, gs in grams.items())
+    want = []
+    for r in cand.collect():
+        a, b = grams[r["id_a"]], grams[r["id_b"]]
+        if len(a & b) > 0 and len(a & b) / len(a | b) >= 0.5:
+            want.append((r["id_a"], r["id_b"], round(len(a & b) / len(a | b), 6)))
+    assert sorted(map(tuple, sigs.collect())) == want_sigs
+    assert [p[:2] for p in got] == [p[:2] for p in sorted(want)]
+    assert [p[2] for p in got] == pytest.approx([p[2] for p in sorted(want)], abs=1e-6)
+    assert len(got) > 3  # non-vacuous: fixture pairs beyond the identical triple
+    assert {(-6, -5), (-6, -4), (-5, -4)} <= {p[:2] for p in got}
 
 
 def test_contamination_lanes_agree(spark):

@@ -286,56 +286,66 @@ def test_dedup_within_watermark_re_emits_after_eviction(spark, tmp_path):
     assert {1, 4} <= set(eids)      # first occurrence + post-eviction re-emit
 
 
+_DEDUP_SCHEMA = "doc_id long, text string"
+_BASE = "the quick brown fox jumps over the lazy dog again and again " * 5
+_NEAR = _BASE.replace("lazy", "sleepy")
+_FAR = "completely different content about spark engines and parquet files " * 5
+
+
+def _stage_docs(spark, tmp_path, i: int, rows) -> None:
+    """Stage one parquet file of ``rows`` into ``tmp_path/docs`` as the
+    i-th batch.  FileStreamSource orders batches by modification time —
+    pin distinct mtimes or the stage files race and batch order flips."""
+    import os
+    import shutil
+    import time as _time
+
+    docs_dir = tmp_path / "docs"
+    docs_dir.mkdir(exist_ok=True)
+    stage = tmp_path / f"stage{i}"
+    spark.createDataFrame(rows, _DEDUP_SCHEMA).coalesce(1).write.parquet(str(stage))
+    now = _time.time()
+    for f in stage.glob("*.parquet"):
+        dst = docs_dir / f"batch{i}_{f.name}"
+        shutil.copy(f, dst)
+        os.utime(dst, (now + 60 * i, now + 60 * i))
+
+
+def _start_dedup_stream(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    from msgraphdatapipelines_spark.streaming.dedup_stream import dedup_assign_stream
+
+    schema = T.StructType(
+        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    )
+    return dedup_assign_stream(
+        spark, str(tmp_path / "docs"), schema, str(tmp_path / "state"),
+        str(tmp_path / "assignments"), str(tmp_path / "ckpt"),
+    )
+
+
 def test_dedup_assign_stream_two_batches(spark, tmp_path):
     """r6 streaming incremental dedup: two staged document files arrive as
     separate micro-batches; the final assignment set must equal running
     lsh_incremental_assign twice by hand, and cross-batch near-dups must
     collapse into the FIRST batch's representative without reprocessing
     batch 1."""
+    from msgraphdatapipelines_spark import sinks
     from msgraphdatapipelines_spark.operators import dedup as D
-    from msgraphdatapipelines_spark.streaming.dedup_stream import dedup_assign_stream
-    from pyspark.sql import types as T
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
+    _stage_docs(spark, tmp_path, 0, [(1, _BASE), (2, _FAR)])
+    _stage_docs(
+        spark, tmp_path, 1,
+        [(10, _NEAR), (11, "yet another unrelated corpus about streaming state " * 8)],
     )
-    base = "the quick brown fox jumps over the lazy dog again and again " * 5
-    near = base.replace("lazy", "sleepy")
-    far = "completely different content about spark engines and parquet files " * 5
-    b1 = [(1, base), (2, far)]
-    b2 = [(10, near), (11, "yet another unrelated corpus about streaming state " * 8)]
-
-    docs_dir = tmp_path / "docs"
-    docs_dir.mkdir()
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "stage1")
-    )
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "stage2")
-    )
-    import os
-    import shutil
-    import time as _time
-
-    # FileStreamSource orders batches by modification time — pin distinct
-    # mtimes or the two stage files race and batch order flips
-    now = _time.time()
-    for i, stage in enumerate(("stage1", "stage2")):
-        for f in (tmp_path / stage).glob("*.parquet"):
-            dst = docs_dir / f"batch{i}_{f.name}"
-            shutil.copy(f, dst)
-            os.utime(dst, (now + 60 * i, now + 60 * i))
-
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "assignments")
-    q = dedup_assign_stream(
-        spark, str(docs_dir), schema, state, out, str(tmp_path / "ckpt")
-    )
+    q = _start_dedup_stream(spark, tmp_path)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
 
+    out = str(tmp_path / "assignments")
     got = {
         r["doc_id"]: r
         for r in spark.read.option("basePath", out).parquet(out).collect()
@@ -348,13 +358,46 @@ def test_dedup_assign_stream_two_batches(spark, tmp_path):
     assert got[11]["rep_id"] == 11 and got[11]["is_new_cluster"]
     # state survived: a third assignment against it still maps near to 1
     sigs3 = D.minhash_signatures(
-        spark.createDataFrame([(30, base)], schema).select(
-            "doc_id", F.explode(D.word_ngrams("text", 3)).alias("g")
+        spark.createDataFrame([(30, _BASE)], _DEDUP_SCHEMA).select(
+            "doc_id", D.word_ngrams("text", 3).alias("g")
         ),
         "doc_id", "g", num_hashes=8, hash_fn="xxhash64",
     )
-    a3, _ = D.lsh_incremental_assign(sigs3, spark.read.parquet(state), "doc_id")
+    state = sinks.read_snapshot(spark, str(tmp_path / "state"))
+    a3, _ = D.lsh_incremental_assign(sigs3, state, "doc_id")
     assert a3.collect()[0]["rep_id"] == 1
+
+
+def test_dedup_assign_stream_fails_loudly_on_unreadable_state(spark, tmp_path):
+    """Bucket state that exists but cannot be read fails the batch: the
+    query errors and the batch commits no assignments.  It must never
+    restart clustering from empty state, where doc 10 would silently
+    found its own cluster instead of joining doc 1's."""
+    import os
+
+    _stage_docs(spark, tmp_path, 0, [(1, _BASE), (2, _FAR)])
+    q = _start_dedup_stream(spark, tmp_path)
+    try:
+        q.processAllAvailable()
+        data = [
+            os.path.join(d, f)
+            for d, _, files in os.walk(tmp_path / "state")
+            for f in files
+            if f.startswith("part-")
+        ]
+        assert data, "batch 1 must have published bucket state"
+        for f in data:
+            with open(f, "wb") as fh:
+                fh.write(b"this is not a parquet file")
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+        _stage_docs(spark, tmp_path, 1, [(10, _NEAR)])
+        with pytest.raises(Exception):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert not (tmp_path / "assignments" / "batch_id=1" / "_SUCCESS").exists()
 
 
 def test_interval_join_left_outer_emits_nulls_at_watermark(spark, tmp_path):

@@ -1,11 +1,11 @@
-"""Stage-level profiler for declared queries (guide §1: measure first).
+"""Per-query layer profile over the benchmark's event-log parser.
 
 Runs each named query (warm-up + 1 timed run, noop sink) with the Spark
-event log enabled, then parses the event log and prints, per query run,
-the stages sorted by executor-time contribution: stage id, name (first
-line), task count, total task time, max task time, shuffle read/write
-bytes, and input bytes.  This substitutes for the UI (disabled in this
-sandbox) when deciding WHERE a query's wall goes.
+event log on, then prints for the timed run the ``spark.*`` layer metrics
+of ``perfbench.tracing.EventLog.window`` (the names the benchmark
+reports) and per-stage rows aggregated from ``EventLog.tasks``, sorted by
+task time.  This substitutes for the UI when deciding WHERE a query's
+wall goes.
 
 Usage:
     python tools/profile_query.py <query> [query ...]
@@ -14,24 +14,26 @@ Usage:
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import tempfile
 import time
+from collections import defaultdict
 from pathlib import Path
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from msgraphdatapipelines_spark.queries import DEMOTED, REGISTRY, _ensure_loaded  # noqa: E402
 from msgraphdatapipelines_spark.session import get_spark  # noqa: E402
+from perfbench.tracing import EventLog  # noqa: E402
+
+STAGE_SUMS = ("input", "shuffle_read", "shuffle_write", "spill")
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     _ensure_loaded()
     rows = {**REGISTRY, **DEMOTED}
-    names = sys.argv[1:]
     evdir = tempfile.mkdtemp(prefix="spark-events-")
     spark = get_spark(
         "profile",
@@ -39,121 +41,47 @@ def main() -> None:
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": f"file://{evdir}",
             "spark.eventLog.compress": "false",
+            # EventLog.from_dir reads one plain file, not a rolling dir
+            "spark.eventLog.rolling.enabled": "false",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    cores = spark.sparkContext.defaultParallelism
 
-    walls: dict[str, float] = {}
     windows: dict[str, tuple[float, float]] = {}
-    for name in names:
-        q = rows[name]
+    for name in sys.argv[1:]:
+        fn = rows[name].fn
         # warm-up run: artifact builds, plan compile, code cache
-        spark.sparkContext.setJobDescription(f"warm:{name}")
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        spark.sparkContext.setJobDescription(f"timed:{name}")
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         w0 = time.time() * 1e3
-        t0 = time.monotonic()
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        walls[name] = time.monotonic() - t0
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         windows[name] = (w0, time.time() * 1e3)
-        spark.sparkContext.setJobDescription(None)
-    app_id = spark.sparkContext.applicationId
     spark.stop()
 
-    # ---- parse the event log (Spark 4 rolling v2 layout: a dir holding
-    # zstd-compressed events_N_<appId> part files) ----
-    def _lines():
-        root = Path(evdir)
-        cand = list(root.glob(f"*{app_id}*"))
-        target = cand[0]
-        parts = (
-            sorted(target.glob(f"events_*_{app_id}*")) if target.is_dir() else [target]
-        )
-        for p in parts:
-            yield from open(p)
-
-    log = evdir
-    jobs: dict[int, dict] = {}  # job id -> {desc, stages: [ids], t0, t1}
-    stages: dict[int, dict] = {}
-
-    def _blank() -> dict:
-        return {
-            "name": "?",
-            "tasks": 0,
-            "task_time": 0.0,
-            "max_task": 0.0,
-            "run": 0.0,
-            "gc": 0.0,
-            "deser": 0.0,
-            "sr": 0,
-            "sw": 0,
-            "input": 0,
-            "wall": 0.0,
-        }
-    for line in _lines():
-            ev = json.loads(line)
-            k = ev.get("Event")
-            if k == "SparkListenerJobStart":
-                desc = ev.get("Properties", {}).get("spark.job.description", "")
-                jobs[ev["Job ID"]] = {
-                    "desc": desc,
-                    "stages": [s["Stage ID"] for s in ev["Stage Infos"]],
-                    "t0": ev["Submission Time"],
-                }
-            elif k == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
-            elif k == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                st = stages.setdefault(sid, _blank())
-                st["name"] = si["Stage Name"].split("\n")[0][:90]
-                st["tasks"] = si["Number of Tasks"]
-                st["wall"] = (
-                    si.get("Completion Time", 0) - si.get("Submission Time", 0)
-                ) / 1e3
-            elif k == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                st = stages.setdefault(sid, _blank())
-                ti = ev.get("Task Info", {})
-                dur = (ti.get("Finish Time", 0) - ti.get("Launch Time", 0)) / 1e3
-                st["task_time"] += dur
-                st["max_task"] = max(st["max_task"], dur)
-                m = ev.get("Task Metrics") or {}
-                st["run"] += m.get("Executor Run Time", 0) / 1e3
-                st["gc"] += m.get("JVM GC Time", 0) / 1e3
-                st["deser"] += m.get("Executor Deserialize Time", 0) / 1e3
-                st["sr"] += (m.get("Shuffle Read Metrics") or {}).get("Remote Bytes Read", 0) + (
-                    m.get("Shuffle Read Metrics") or {}
-                ).get("Local Bytes Read", 0)
-                st["sw"] += (m.get("Shuffle Write Metrics") or {}).get(
-                    "Shuffle Bytes Written", 0
-                )
-                st["input"] += (m.get("Input Metrics") or {}).get("Bytes Read", 0)
-
-    for name in names:
-        print(f"\n=== {name}  wall={walls[name]:.3f}s ===")
-        w0, w1 = windows[name]
-        # attribute by time window: streaming micro-batch jobs run on their
-        # own threads and lose the thread-local description
-        q_jobs = [j for j in jobs.values() if w0 - 50 <= j["t0"] <= w1 + 50]
-        gap_prev = None
-        for j in sorted(q_jobs, key=lambda j: j["t0"]):
-            jw = (j.get("t1", j["t0"]) - j["t0"]) / 1e3
-            gap = "" if gap_prev is None else f"  (+{(j['t0'] - gap_prev) / 1e3:.3f}s gap)"
-            gap_prev = j.get("t1", j["t0"])
-            print(f"  job wall={jw:7.3f}s{gap}")
-            for sid in sorted(j["stages"]):
-                s = stages.get(sid)
-                if not s or s["task_time"] == 0 and s["tasks"] == 0:
-                    continue
-                print(
-                    f"    stage {sid:4d} wall={s['wall']:6.3f}s tasks={s['tasks']:3d} "
-                    f"tasktime={s['task_time']:7.2f}s run={s['run']:6.2f}s gc={s['gc']:5.2f}s "
-                    f"deser={s['deser']:5.2f}s max={s['max_task']:6.3f}s "
-                    f"in={s['input']>>20}MB sr={s['sr']>>20}MB sw={s['sw']>>20}MB  {s['name']}"
-                )
-    print(f"\nevent log: {log}")
+    log = EventLog.from_dir(Path(evdir))
+    for name, (w0, w1) in windows.items():
+        print(f"\n=== {name}  wall={(w1 - w0) / 1e3:.3f}s ===")
+        for k, v in log.window(w0, w1, cores).items():
+            print(f"  {k:<26} {v:.3f}" if isinstance(v, float) else f"  {k:<26} {v}")
+        jobs = {j["id"] for j in log.jobs.values() if w0 <= j["start"] <= w1}
+        stages: dict[int, dict] = defaultdict(lambda: defaultdict(float))
+        for t in log.tasks:
+            if log.stage_job.get(t["stage"]) in jobs:
+                s, dur = stages[t["stage"]], (t["finish"] - t["launch"]) / 1e3
+                s["tasks"] += 1
+                s["task_s"] += dur
+                s["max_s"] = max(s["max_s"], dur)
+                s["cpu_s"] += t["cpu_ns"] / 1e9
+                s["gc_s"] += t["gc_ms"] / 1e3
+                for k in STAGE_SUMS:
+                    s[k] += t[k]
+        for sid, s in sorted(stages.items(), key=lambda kv: -kv[1]["task_s"]):
+            print(
+                f"    stage {sid:4d} tasks={int(s['tasks']):3d} tasktime={s['task_s']:7.2f}s "
+                f"max={s['max_s']:6.3f}s cpu={s['cpu_s']:6.2f}s gc={s['gc_s']:5.2f}s "
+                + " ".join(f"{k}={int(s[k]) >> 10}KB" for k in STAGE_SUMS)
+            )
+    print(f"\nevent log: {evdir}")
 
 
 if __name__ == "__main__":
