@@ -124,21 +124,25 @@ class BoundedMemo(Mapping):
 
 
 def _input_signature(spark: SparkSession, inputs: list[str]) -> str:
-    """(path, size, mtime) of every LEAF file under every input, through
-    the recursive Hadoop FS listing — object-store-safe (directory
-    entries on S3A/ABFS are synthetic with mtime 0, so directory mtimes
-    carry no information; only leaf-file identities do) and
-    nesting-safe (a file rewritten two partition levels deep changes
-    its own (len, mtime), which a one-level listing would miss).
-
-    This stays on the Hadoop listing rather than :func:`file_identity`
-    because result-cache inputs may be remote, and a Hadoop
-    ``FileStatus`` carries no inode or ctime."""
+    """The identity of every LEAF file under every input.  An input on
+    the local filesystem (``file:``, or no scheme with a local default
+    FS) keys on :func:`file_identity`, whose inode and ctime make a
+    same-size replacement with its mtime restored a new input.  Any
+    other input keys on (path, size, mtime) through the recursive Hadoop
+    FS listing — object-store-safe (directory entries on S3A/ABFS are
+    synthetic with mtime 0, so only leaf-file identities carry
+    information) and nesting-safe (a file rewritten two partition levels
+    deep changes its own (len, mtime)); a Hadoop ``FileStatus`` carries
+    no inode or ctime."""
     from .sinks import _fs_for
 
     parts = []
     for path in sorted(inputs):
-        fs, p, _ = _fs_for(spark, path)
+        fs, hp = _fs_for(spark, path)
+        p = hp(path)
+        if fs.getUri().getScheme() == "file":
+            parts.append(f"{path}::{file_identity(p.toUri().getPath())}")
+            continue
         stats = []
         if fs.getFileStatus(p).isDirectory():
             it = fs.listFiles(p, True)  # recursive: every leaf file
@@ -185,8 +189,8 @@ def _canon_input(spark: SparkSession, p: str) -> str:
     from .sinks import _fs_for
 
     try:
-        fs, hp, _ = _fs_for(spark, p)
-        return fs.makeQualified(hp).toString()
+        fs, hp = _fs_for(spark, p)
+        return fs.makeQualified(hp(p)).toString()
     except Exception:  # noqa: BLE001 — unparseable recorded path
         return os.path.abspath(p)
 
@@ -206,16 +210,17 @@ def serve_cached(
     contains the ``msgdp_rc_`` path and none of the source tables).  The
     rename-committed marker makes a torn write invisible: no marker, no
     hit, rebuild."""
-    from .sinks import _fs_for, _hpath
-
+    import json
     import uuid
+
+    from .genstore import commit_file
+    from .sinks import _fs_for
 
     fp = plan_fingerprint(spark, df, inputs)
     root = result_cache_root(fp, base_dir)
     marker = os.path.join(root, "_rc_ready")
     data = os.path.join(root, "data")
-    fs, _, jvm = _fs_for(spark, root)
-    hpath = _hpath(jvm)
+    fs, hpath = _fs_for(spark, root)
     if not fs.exists(hpath(marker)):
         # Concurrent-builder safety: never write into the final `data`
         # directory.  Each builder materializes under a private
@@ -240,30 +245,12 @@ def serve_cached(
         # so result_cache_forget can target every entry derived from an
         # erased table immediately — without this, erased content sits
         # inside stranded entries until the TTL sweep (the fingerprint
-        # is a hash; nothing else records what an entry was built from)
+        # is a hash; nothing else records what an entry was built from).
+        # A racer commits the same bytes, so either copy is correct.
+        meta = {"inputs": sorted(_canon_input(spark, p) for p in inputs)}
         meta_p = os.path.join(root, "_rc_meta.json")
-        if not fs.exists(hpath(meta_p)):
-            import json
-
-            mtmp = hpath(f"{meta_p}.{uuid.uuid4().hex[:12]}.tmp")
-            out = fs.create(mtmp, True)
-            out.write(
-                bytearray(
-                    json.dumps(
-                        {"inputs": sorted(_canon_input(spark, p) for p in inputs)}
-                    ).encode("utf-8")
-                )
-            )
-            out.close()
-            if not fs.rename(mtmp, hpath(meta_p)) and fs.exists(mtmp):
-                fs.delete(mtmp, False)
-        if not fs.exists(hpath(marker)):
-            tmp = hpath(f"{marker}.{uuid.uuid4().hex[:12]}.tmp")
-            out = fs.create(tmp, True)
-            out.write(bytearray(fp.encode()))
-            out.close()
-            if not fs.rename(tmp, hpath(marker)) and fs.exists(tmp):
-                fs.delete(tmp, False)
+        commit_file(fs, hpath, meta_p, json.dumps(meta).encode())
+        commit_file(fs, hpath, marker, fp.encode())
     return spark.read.parquet(data)
 
 
@@ -299,7 +286,8 @@ def result_cache_forget(
     steady state this function exists to reach)."""
     import json
 
-    from .sinks import _fs_for, _hpath
+    from .genstore import read_file
+    from .sinks import _fs_for
 
     base = base_dir or tempfile.gettempdir()
     # canonicalize BOTH sides through makeQualified (r16, ADVICE): an
@@ -307,8 +295,8 @@ def result_cache_forget(
     # (file:/… vs plain, relative vs absolute) must still match — a
     # missed erasure here is a compliance failure, not a cache miss
     target = _canon_input(spark, input_path)
-    fs, bp, jvm = _fs_for(spark, base)
-    hpath = _hpath(jvm)
+    fs, hp = _fs_for(spark, base)
+    bp = hp(base)
     removed, kept = [], []
     if not fs.exists(bp):
         return {"removed": removed, "kept": kept}
@@ -317,14 +305,10 @@ def result_cache_forget(
         if not (st.isDirectory() and name.startswith("msgdp_rc_")):
             continue
         root = os.path.join(base, name)
-        meta_p = hpath(os.path.join(root, "_rc_meta.json"))
+        raw = read_file(fs, hp, os.path.join(root, "_rc_meta.json"))
         matches = delete_unknown
-        if fs.exists(meta_p):
-            stream = fs.open(meta_p)
-            try:
-                meta = json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-            finally:
-                stream.close()
+        if raw is not None:
+            meta = json.loads(raw)
             matches = any(
                 q == target or q.startswith(target.rstrip("/") + "/")
                 for q in (

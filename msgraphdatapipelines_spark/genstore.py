@@ -64,11 +64,29 @@ the audit has one place to look):
   present or absent, and a miss just recomputes — per-entry atomicity
   is the whole requirement.
 
+The tiny-file primitives live here too, and every package module
+outside ``sources/rest.py`` uses them instead of its own
+``create``/``rename``/``readAllBytes``:
+
+- :func:`put_file` — create, write, close; for files inside a stage a
+  later rename commits (the snapshot claim sentinel ``_PUB_*``, the
+  ``_schema.json`` sidecar, the zonemap swap sentinel, the lexicon
+  stage ``meta.json``);
+- :func:`commit_file` — ``put_file`` to a hidden uuid tmp, then one
+  rename (``replace=True`` deletes the old file first); markers,
+  pointers and JSON sidecars (``_commit``, ``_compacting.*``,
+  ``_LATEST.v{N}``, ``_rc_meta.json``, ``models*.json``, ``_MODELS``);
+- :func:`read_file` — one ``open``, None when the file is absent;
+- :func:`build_once` — the "no marker: build, then commit the marker"
+  gate of every build-once rehearsal artifact and standing layout.
+
 All FS access goes through the Hadoop FileSystem API handles the caller
-provides (``sinks._fs_for``), so a root may be an object-store prefix —
-with the documented caveat that ``rename``-as-commit needs a store with
-atomic rename (HDFS/ABFS-hier/local); on S3-style stores the marker
-create is still atomic but stage renames are copies.
+provides (``sinks._fs_for`` returns ``(fs, Path class)``), so a root
+may be an object-store prefix — with the documented caveat that
+``rename``-as-commit needs a store with atomic rename
+(HDFS/ABFS-hier/local); on S3-style stores the marker create is still
+atomic but stage renames are copies.  Lease functions read
+``LEASE_TTL_S`` at call time unless given ``ttl_s``.
 """
 
 from __future__ import annotations
@@ -83,14 +101,63 @@ GEN_RE = re.compile(r"^gen-(\d{6})-[0-9a-f]+$")
 LEASE_TTL_S = 600.0
 
 
-def marker_commit(fs, hpath, path: str) -> None:
-    """Create a marker file via tmp-write + rename (atomic on every FS
-    the repo targets; parents auto-created by Hadoop create())."""
-    tmp = hpath(f"{path}.tmp.{uuid.uuid4().hex[:6]}")
-    out = fs.create(tmp, True)
-    out.write(bytearray(b"ready"))
-    out.close()
-    fs.rename(tmp, hpath(path))
+def put_file(fs, hp, path: str, data: bytes) -> None:
+    """Write ``data`` as the file ``path`` (overwriting).  Not atomic on
+    its own: for files inside a stage that a later rename commits."""
+    out = fs.create(hp(path), True)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
+def commit_file(fs, hp, path: str, data: bytes = b"ready", replace: bool = False) -> bool:
+    """Publish ``data`` as ``path`` by writing a hidden uuid tmp beside
+    it and renaming it into place (atomic on every FS the repo targets;
+    parents auto-created).  ``replace`` deletes an existing ``path``
+    first, so the last writer wins; without it an existing ``path``
+    wins (HDFS and the local FS refuse the rename).  The tmp is deleted
+    whenever the rename did not land.  Returns whether it landed."""
+    parent, name = path.rsplit("/", 1)
+    tmp = f"{parent}/.{name}.tmp.{uuid.uuid4().hex[:6]}"
+    put_file(fs, hp, tmp, data)
+    if replace:
+        fs.delete(hp(path), False)
+    landed = fs.rename(hp(tmp), hp(path))
+    if not landed:
+        fs.delete(hp(tmp), False)
+    return landed
+
+
+def read_file(fs, hp, path: str) -> bytes | None:
+    """The bytes of ``path`` in one ``open``, or None when it does not
+    exist."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        stream = fs.open(hp(path))
+    except Py4JJavaError as e:
+        if "FileNotFoundException" in str(e):
+            return None
+        raise
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
+def build_once(spark, marker: str, build) -> None:
+    """Run ``build()`` unless ``marker`` exists, then commit ``marker``.
+    A hit costs one ``exists``.  ``build`` must be safe to repeat: two
+    racing first touches both build, and a crash before the commit
+    rebuilds on the next call."""
+    from .sinks import _fs_for
+
+    fs, hp = _fs_for(spark, marker)
+    if fs.exists(hp(marker)):
+        return
+    build()
+    commit_file(fs, hp, marker)
 
 
 def committed_gens(fs, hpath, root: str) -> list[str]:
@@ -131,9 +198,13 @@ def gen_folded_bids(fs, hpath, gen: str) -> list[str]:
     return sorted(st.getPath().getName() for st in fs.listStatus(man))
 
 
-def live_leases(fs, hpath, root: str, ttl_s: float = LEASE_TTL_S) -> list[str]:
+def live_leases(fs, hpath, root: str, ttl_s: float | None = None) -> list[str]:
     """Compaction lease files younger than the TTL (stale ones — a
-    crashed compactor — are ignored, so appends never wedge)."""
+    crashed compactor — are ignored, so appends never wedge).  Every
+    lease function defaults ``ttl_s`` to ``LEASE_TTL_S`` read at call
+    time, so one assignment changes the TTL for every store."""
+    if ttl_s is None:
+        ttl_s = LEASE_TTL_S
     if not fs.exists(hpath(root)):
         return []
     out = []
@@ -146,13 +217,15 @@ def live_leases(fs, hpath, root: str, ttl_s: float = LEASE_TTL_S) -> list[str]:
 
 
 def wait_leases_clear(
-    fs, hpath, root: str, timeout_s: float | None = None, ttl_s: float = LEASE_TTL_S
+    fs, hpath, root: str, timeout_s: float | None = None, ttl_s: float | None = None
 ) -> None:
     """Block until no live compaction lease remains.  The default bound
     is the lease TTL plus slack: a legitimate long compact (the 100×
     fold runs minutes) must not make waiting appenders raise spuriously,
     and a crashed compactor's lease goes stale at the TTL anyway — so
     waiting longer than TTL+slack can never be necessary."""
+    if ttl_s is None:
+        ttl_s = LEASE_TTL_S
     if timeout_s is None:
         timeout_s = ttl_s + 60.0
     t0 = time.time()
@@ -163,7 +236,7 @@ def wait_leases_clear(
 
 
 @contextmanager
-def compaction_lease(fs, hpath, root: str, ttl_s: float = LEASE_TTL_S):
+def compaction_lease(fs, hpath, root: str, ttl_s: float | None = None):
     """Acquire the store's compaction lease for the duration of a
     rebuild, heartbeat-renewed so a LIVE compactor can legitimately
     outlive the TTL (the 100× fold runs minutes) while a CRASHED one
@@ -195,12 +268,14 @@ def compaction_lease(fs, hpath, root: str, ttl_s: float = LEASE_TTL_S):
     it)."""
     import random
 
+    if ttl_s is None:
+        ttl_s = LEASE_TTL_S
     lease = None
     for attempt in range(3):
         if live_leases(fs, hpath, root, ttl_s=ttl_s):
             raise RuntimeError(f"compact already in progress under {root}")
         cand = f"{root}/_compacting.{uuid.uuid4().hex[:8]}"
-        marker_commit(fs, hpath, cand)
+        commit_file(fs, hpath, cand)
         mine = cand.rsplit("/", 1)[1]
         others = [nm for nm in live_leases(fs, hpath, root, ttl_s=ttl_s) if nm != mine]
         if not others:
@@ -241,5 +316,5 @@ def commit_generation(fs, hpath, root: str, stage: str, gen_name: str) -> str:
     if not fs.rename(hpath(stage), hpath(gen)):
         fs.delete(hpath(stage), True)
         raise OSError(f"could not publish staged generation onto {gen}")
-    marker_commit(fs, hpath, f"{gen}/_commit")
+    commit_file(fs, hpath, f"{gen}/_commit")
     return gen

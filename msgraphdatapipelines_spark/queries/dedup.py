@@ -740,15 +740,14 @@ def _lower_gram_rows(docs: DataFrame, n: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Generational publish protocol for the standing prefix-gram index (r12).
 #
-# r11 shipped the index with direct mode("overwrite") table writes before the
-# _ready marker (build) and three sequential per-table renames (compact) —
+# r11 shipped the index with direct mode("overwrite") table writes before a
+# ready marker (build) and three sequential per-table renames (compact) —
 # both let a crash or a concurrent writer expose a NEW-order vocab over
 # OLD-order sets/prefixes, silently breaking the prefix-filter
 # zero-false-negative guarantee.  r12 makes every transition one atomic
 # commit:
 #
 #   root/
-#     _ready                    # back-compat "index exists" signal
 #     gen-000042-<uid>/         # one GENERATION = one immutable vocab order
 #       _commit                 #   live iff this marker exists (single rename)
 #       vocab/ sets/ prefixes/  #   base tables, written staged then renamed
@@ -765,39 +764,17 @@ def _lower_gram_rows(docs: DataFrame, n: int) -> DataFrame:
 # close the append-vs-compact race in both directions.
 # ---------------------------------------------------------------------------
 
-# r13 (r12 VERDICT item 3): the protocol primitives moved to the shared
+# r13 (r12 VERDICT item 3): the protocol primitives live in the shared
 # ``genstore`` module — ONE commit discipline for every standing store
 # (prefix-gram index here, the BM25 lexicon, the ANN rebalance path).
-# These thin wrappers keep this module's historical names AND read
-# ``_LEASE_TTL_S`` at call time so tests can monkeypatch the TTL.
 from .. import genstore as _gs
-
-_GEN_RE = _gs.GEN_RE
-_LEASE_TTL_S = _gs.LEASE_TTL_S
-
-
-def _marker_commit(fs, hpath, path: str) -> None:
-    _gs.marker_commit(fs, hpath, path)
-
-
-def _committed_gens(fs, hpath, root: str) -> list[str]:
-    return _gs.committed_gens(fs, hpath, root)
 
 
 def prefix_index_current_gen(spark: SparkSession, root: str) -> str | None:
     """Path of the live (max committed) generation, or None pre-build."""
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    return _gs.current_gen(fs, sinks._hpath(jvm), root)
-
-
-def _live_leases(fs, hpath, root: str) -> list[str]:
-    return _gs.live_leases(fs, hpath, root, ttl_s=_LEASE_TTL_S)
-
-
-def _wait_leases_clear(fs, hpath, root: str, timeout_s: float | None = None) -> None:
-    _gs.wait_leases_clear(fs, hpath, root, timeout_s=timeout_s, ttl_s=_LEASE_TTL_S)
+    return _gs.current_gen(*sinks._fs_for(spark, root), root)
 
 
 def _write_gen_tables(spark: SparkSession, grams: DataFrame, threshold: float, stage: str) -> None:
@@ -828,20 +805,17 @@ def prefix_index_build(
 
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    gens = _committed_gens(fs, hpath, root)
-    if not gens:
+    fs, hpath = sinks._fs_for(spark, root)
+    if not _gs.committed_gens(fs, hpath, root):
         stage = f"{root}/stage.{uuid.uuid4().hex[:8]}"
         _write_gen_tables(spark, _lower_gram_rows(docs, n), threshold, stage)
         fs.mkdirs(hpath(f"{stage}/_folded"))
-        if _committed_gens(fs, hpath, root):
+        if _gs.committed_gens(fs, hpath, root):
             fs.delete(hpath(stage), True)  # race loser: discard staging
         else:
             gen = f"{root}/gen-000000-{uuid.uuid4().hex[:8]}"
             fs.rename(hpath(stage), hpath(gen))
-            _marker_commit(fs, hpath, f"{gen}/_commit")
-        _marker_commit(fs, hpath, f"{root}/_ready")
+            _gs.commit_file(fs, hpath, f"{gen}/_commit")
     return prefix_index_current_gen(spark, root)
 
 
@@ -951,15 +925,14 @@ def prefix_index_append(
 
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     bid = bid or uuid.uuid4().hex[:12]
     for _ in range(6):
         gen = prefix_index_current_gen(spark, root)
         if gen is None:
             raise FileNotFoundError(f"append before build: no generation at {root}")
         _publish_batch(spark, fs, hpath, root, gen, docs, n, threshold, bid)
-        _wait_leases_clear(fs, hpath, root)
+        _gs.wait_leases_clear(fs, hpath, root)
         if prefix_index_current_gen(spark, root) == gen:
             return bid
         # a compact committed while we were publishing: loop and republish
@@ -1087,13 +1060,9 @@ def _ensure_incremental_prefix_index(
     through prefix_index_append (frozen vocab order).  ONE end-to-end
     marker commits build+append together, so a torn state can never
     serve a half-appended index (and a re-run can never double-append)."""
-    from .. import sinks
-
     root = prefix_index_root(sf_dir, 3, 0.5, variant="inc")
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    marker = f"{root}/_inc_ready"
-    if not fs.exists(hpath(marker)):
+
+    def _build() -> None:
         docs = load(spark, sf_dir, "documents")
         cut = docs.selectExpr(
             f"percentile_approx(doc_id, {split_frac}, 10000) AS c"
@@ -1106,7 +1075,8 @@ def _ensure_incremental_prefix_index(
         # attempt resumes instead of restarting
         prefix_index_build(spark, root, base, n=3, threshold=0.5)
         prefix_index_append(spark, root, rest, n=3, threshold=0.5, bid="inc0")
-        _marker_commit(fs, hpath, marker)
+
+    _gs.build_once(spark, f"{root}/_inc_ready", _build)
     return root
 
 
@@ -1176,8 +1146,7 @@ def _read_forgotten_docs(spark: SparkSession, root: str) -> DataFrame | None:
     nothing was ever forgotten."""
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     if not fs.exists(hpath(f"{root}/_forgotten")):
         return None
     return spark.read.option("recursiveFileLookup", "true").parquet(
@@ -1254,19 +1223,18 @@ def prefix_index_compact(
 
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     # lease + heartbeat discipline via the shared protocol module (r13):
     # a LIVE compact renews the lease mtime every TTL/4 (a long fold must
     # not release waiting appenders into the lost-batch window); a
     # CRASHED compactor stops renewing and goes stale at the TTL.
-    with _gs.compaction_lease(fs, hpath, root, ttl_s=_LEASE_TTL_S):
-        gens = _committed_gens(fs, hpath, root)
+    with _gs.compaction_lease(fs, hpath, root):
+        gens = _gs.committed_gens(fs, hpath, root)
         if not gens:
             raise FileNotFoundError(f"compact before build: no generation at {root}")
         gen_name = gens[-1]
         gen = f"{root}/{gen_name}"
-        seq = int(_GEN_RE.match(gen_name).group(1))
+        seq = int(_gs.GEN_RE.match(gen_name).group(1))
 
         def _batch_bids() -> list[str]:
             return sorted(
@@ -1312,7 +1280,7 @@ def prefix_index_compact(
         _write_gen_tables(spark, grams, threshold, stage)
         fs.mkdirs(hpath(f"{stage}/_folded"))
         for b in sorted(set(batches) | set(prev_folded)):
-            _marker_commit(fs, hpath, f"{stage}/_folded/{b}")
+            _gs.commit_file(fs, hpath, f"{stage}/_folded/{b}")
         # straggler fence: fully-published batches that appeared since the
         # initial listing fold into the NEW generation as batch dirs
         # (same bid — replay stays idempotent), re-sorted under the new
@@ -1341,10 +1309,10 @@ def prefix_index_compact(
             _test_hook_before_commit()
         new_gen = f"{root}/gen-{seq + 1:06d}-{uuid.uuid4().hex[:8]}"
         fs.rename(hpath(stage), hpath(new_gen))
-        _marker_commit(fs, hpath, f"{new_gen}/_commit")
+        _gs.commit_file(fs, hpath, f"{new_gen}/_commit")
         # GC: keep the live + previous generations (a reader that resolved
         # the old generation just before commit still has its files)
-        for g in _committed_gens(fs, hpath, root)[:-2]:
+        for g in _gs.committed_gens(fs, hpath, root)[:-2]:
             fs.delete(hpath(f"{root}/{g}"), True)
         return {"docs": int(n_docs), "batches_folded": len(batches)}
 
@@ -1433,13 +1401,9 @@ def _ensure_compacted_prefix_index(spark: SparkSession, sf_dir: str) -> str:
     compact tests pin protocol mechanics; this row pins the MATH —
     re-deriving sets/prefixes from stored gram arrays under the new
     frozen order loses nothing)."""
-    from .. import sinks
-
     root = prefix_index_root(sf_dir, 3, 0.5, variant="inccompact")
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    marker = f"{root}/_cmp_ready"
-    if not fs.exists(hpath(marker)):
+
+    def _build() -> None:
         docs = load(spark, sf_dir, "documents")
         cut = docs.selectExpr(
             "percentile_approx(doc_id, 0.8, 10000) AS c"
@@ -1449,7 +1413,8 @@ def _ensure_compacted_prefix_index(spark: SparkSession, sf_dir: str) -> str:
             spark, root, docs.filter(F.col("doc_id") > cut), bid="cmp0"
         )
         prefix_index_compact(spark, root)
-        _marker_commit(fs, hpath, marker)
+
+    _gs.build_once(spark, f"{root}/_cmp_ready", _build)
     return root
 
 
@@ -1508,8 +1473,7 @@ def read_prefix_index_bucketed(
     gen = prefix_index_current_gen(spark, root)
     if gen is None:
         raise FileNotFoundError(f"no committed prefix-gram generation under {root}")
-    fs, _, jvm = sinks._fs_for(spark, gen)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, gen)
     bids = sorted(
         st.getPath().getName()
         for st in fs.listStatus(hpath(f"{gen}/prefixes"))
@@ -1541,13 +1505,9 @@ def _ensure_forgotten_prefix_index(spark: SparkSession, sf_dir: str) -> str:
     which uses % 100 == 0).  The quadratic oracle over the REMAINING
     corpus is the proof the erased docs are gone from the artifact, not
     merely filtered at read time."""
-    from .. import sinks
-
     root = prefix_index_root(sf_dir, 3, 0.5, variant="forgotten")
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    marker = f"{root}/_fgt_ready"
-    if not fs.exists(hpath(marker)):
+
+    def _build() -> None:
         docs = load(spark, sf_dir, "documents")
         prefix_index_build(spark, root, docs)
         ids = [
@@ -1557,7 +1517,8 @@ def _ensure_forgotten_prefix_index(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         ]
         prefix_index_forget(spark, root, ids)
-        _marker_commit(fs, hpath, marker)
+
+    _gs.build_once(spark, f"{root}/_fgt_ready", _build)
     return root
 
 

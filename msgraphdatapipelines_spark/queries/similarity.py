@@ -1212,30 +1212,6 @@ def ensure_standing_index(
     return sinks.read_snapshot(spark, snap, version=version), cents, models["codebooks"]
 
 
-def _read_json_fs(fs, hpath, path: str) -> dict:
-    import json
-
-    stream = fs.open(hpath(path))
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode("ascii"))
-    finally:
-        stream.close()
-
-
-def _write_json_atomic(fs, hpath, path: str, obj: dict) -> None:
-    import json
-    import uuid
-
-    tmp = hpath(f"{path}.tmp.{uuid.uuid4().hex[:6]}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(obj).encode("ascii")))
-    finally:
-        out.close()
-    fs.delete(hpath(path), False)
-    fs.rename(tmp, hpath(path))
-
-
 # SERVE-PLANNING CACHE (r16, r15 VERDICT item 3): in a serving posture
 # (many queries against one artifact version) every serve call used to
 # re-pay the model-sized planning walls — the models JSON parse, the
@@ -1301,17 +1277,19 @@ def _load_models_for(spark: SparkSession, root: str, version: int) -> dict:
     ``models.v{version}.json`` when a rebalance published it, else the
     initial build's ``models.json`` (the v1 layout).  Cached per
     (session, root, version) — callers must treat the dict as frozen."""
+    import json
+
+    from .. import genstore as _gs
     from .. import sinks
 
     st = _plan_cache_state(spark, root, version)
     if "models" not in st:
-        fs, _, jvm = sinks._fs_for(spark, root)
-        hpath = sinks._hpath(jvm)
-        p = f"{root}/models.v{version}.json"
-        if fs.exists(hpath(p)):
-            st["models"] = _read_json_fs(fs, hpath, p)
+        fs, hpath = sinks._fs_for(spark, root)
+        raw = _gs.read_file(fs, hpath, f"{root}/models.v{version}.json")
+        if raw is not None:
+            st["models"] = json.loads(raw)
         else:
-            boot = _read_json_fs(fs, hpath, f"{root}/models.json")
+            boot = json.loads(_gs.read_file(fs, hpath, f"{root}/models.json"))
             if version <= 1:
                 # the v1 initial-build layout never grows a versioned
                 # file — safe to pin
@@ -1358,8 +1336,7 @@ def ann_index_forget(spark: SparkSession, root: str, ids: list) -> int:
         resolve_batches_models,
     )
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     with _gs.compaction_lease(fs, hpath, root):
         recover_batches(spark, root)
         ids_df = spark.createDataFrame([(int(i),) for i in ids], "cid: long")
@@ -1383,7 +1360,7 @@ def ann_index_forget(spark: SparkSession, root: str, ids: list) -> int:
             ],
         )
         next_bid = (
-            max(sinks._list_numbered_dirs(spark, f"{root}/batches", "batch_id=") or [-1])
+            max(sinks._list_numbered_dirs(fs, hpath, f"{root}/batches", "batch_id=") or [-1])
             + 1
         )
         tomb.write.mode("overwrite").parquet(f"{root}/batches/batch_id={next_bid}")
@@ -1504,21 +1481,20 @@ def ann_rebalance_if_skewed(
     Returns the stats dict (occupancy before, and after when retrained).
     Serve-equality and recall-restoration are pinned in
     tests/test_similarity.py::test_ann_rebalance_*."""
+    import json
     import math
     import uuid
 
     from .. import genstore as _gs
     from .. import sinks
     from ..streaming.ann_stream import (
-        _write_json_path_atomic,
         compact_ann_index,
         read_ann_index,
         recover_batches,
         write_batches_models,
     )
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     recover_batches(spark, root)
     # r15 (ADVICE): capture the batch-dir listing at ENTRY — the
     # earliest instant this function can vouch the caller's corpus
@@ -1780,12 +1756,8 @@ def ann_rebalance_if_skewed(
         # leave `batches` TORN (partial copy) rather than merely absent,
         # and recover_batches uses the staged manifest to detect and
         # complete the swap (see its docstring for the posture).
-        _write_json_path_atomic(
-            fs,
-            hpath,
-            f"{stage}/_SWAP_MANIFEST",
-            {"files": sinks._rel_files(fs, hpath, stage)},
-        )
+        manifest = {"files": sinks._rel_files(fs, hpath, stage)}
+        _gs.commit_file(fs, hpath, f"{stage}/_SWAP_MANIFEST", json.dumps(manifest).encode())
         old = f"{root}/batches.old.{uuid.uuid4().hex[:8]}"
         fs.rename(hpath(f"{root}/batches"), hpath(old))
         if not fs.rename(hpath(stage), hpath(f"{root}/batches")) and not fs.exists(
@@ -2496,8 +2468,7 @@ def _load_label_lists(
     from .. import sinks
 
     root = standing_index_root(sf_dir)
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     if version is None:
         version = sinks._read_latest_version(spark, f"{root}/snapshot")
     # v1 = the initial build's unversioned layout; rebalances publish
@@ -2538,8 +2509,7 @@ def _load_range_lists(
     from .. import sinks
 
     root = standing_index_root(sf_dir)
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     if version is None:
         version = sinks._read_latest_version(spark, f"{root}/snapshot")
     st = _plan_cache_state(spark, root, version)
@@ -2732,13 +2702,11 @@ def _ensure_forgotten_ann_index(spark: SparkSession, sf_dir: str) -> str:
     ensure on a variant root, then ``ann_index_forget`` the
     deterministic set ``vec_id % 50 == 25`` (disjoint from the
     vec_id < 20 query set), under one end-to-end marker."""
-    from .. import sinks
+    from .. import genstore as _gs
 
     root = standing_index_root(sf_dir, variant="forgotten")
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    marker = f"{root}/_fgt_ready"
-    if not fs.exists(hpath(marker)):
+
+    def _build() -> None:
         emb = load(spark, sf_dir, "embeddings")
         ensure_standing_index(spark, sf_dir, emb, variant="forgotten")
         ids = [
@@ -2748,9 +2716,8 @@ def _ensure_forgotten_ann_index(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         ]
         ann_index_forget(spark, root, ids)
-        from .. import genstore as _gs
 
-        _gs.marker_commit(fs, hpath, marker)
+    _gs.build_once(spark, f"{root}/_fgt_ready", _build)
     return root
 
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from .. import streaming as ST
 from ..cache import standing_root
+from ..genstore import build_once
 from . import load_events, register
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -385,7 +386,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_sentineled_events(sf_dir: str) -> str:
+def _ensure_sentineled_events(spark: SparkSession, sf_dir: str) -> str:
     """Build-at-most-once copy of events.parquet plus a far-future
     SENTINEL file (late r10): typed heartbeat events a year+ past the
     data.  The sentinels are the watermark punctuation pattern every
@@ -405,8 +406,8 @@ def _ensure_sentineled_events(sf_dir: str) -> str:
 
     src = os.path.join(sf_dir, "events.parquet")
     root = standing_root("sent", sf_dir, ("events.parquet",), "v2")
-    marker = os.path.join(root, "_ready")
-    if not os.path.exists(marker):
+
+    def _build() -> None:
         os.makedirs(root, exist_ok=True)
         shutil.copyfile(src, os.path.join(root, "a_events.parquet"))
         import datetime as _dt
@@ -441,10 +442,8 @@ def _ensure_sentineled_events(sf_dir: str) -> str:
             }
         )
         pq.write_table(sent, os.path.join(root, "b_sentinel.parquet"))
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write("ok")
-        os.replace(tmp, marker)
+
+    build_once(spark, os.path.join(root, "_ready"), _build)
     return root
 
 
@@ -482,7 +481,7 @@ def stream_stream_interval_left_join(spark: SparkSession, sf_dir: str) -> DataFr
     from . import _harden
 
     _harden(spark)
-    root = _ensure_sentineled_events(sf_dir)
+    root = _ensure_sentineled_events(spark, sf_dir)
     purchases = (
         ST.read_events_stream(spark, root, glob="*.parquet")
         .filter(F.col("event_type") == "purchase")

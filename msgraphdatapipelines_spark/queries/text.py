@@ -12,6 +12,8 @@ run, over one scan of ``documents``.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,12 +22,6 @@ from ..operators import text as X
 from . import load, load_spread, register
 from .similarity import _cos as _vec_cos
 from .similarity import _norm_pos as _vec_norm_pos
-
-# lexicon lease TTL, read at call time so the `-m race` lane's SIGKILL
-# test can monkeypatch the stale transition (r15; mirrors dedup._LEASE_TTL_S)
-from .. import genstore as _genstore_mod
-
-_LEASE_TTL_S = _genstore_mod.LEASE_TTL_S
 
 _WS = "list_filter(string_split(text, ' '), w -> w <> '')"
 _ALL_MARKERS = ", ".join(
@@ -1447,7 +1443,8 @@ def _lex_batch_ids(spark: SparkSession, root: str, table: str = "tf") -> list[in
     layer as the snapshot sinks)."""
     from .. import sinks
 
-    return sinks._list_numbered_dirs(spark, f"{root}/batches/{table}", "batch_id=")
+    path = f"{root}/batches/{table}"
+    return sinks._list_numbered_dirs(*sinks._fs_for(spark, path), path, "batch_id=")
 
 
 def lexicon_append_batch(
@@ -1473,8 +1470,7 @@ def lexicon_append_batch(
 
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     existing = _lex_batch_ids(spark, root)
     k = bid if bid is not None else ((existing[-1] + 1) if existing else 0)
     dst_tf = hpath(f"{root}/batches/tf/batch_id={k}")
@@ -1509,16 +1505,6 @@ def _lex_full_bids(spark: SparkSession, root: str) -> list[int]:
     )
 
 
-def _lex_read_meta(fs, hpath, gen: str) -> dict:
-    import json
-
-    stream = fs.open(hpath(f"{gen}/meta.json"))
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode("ascii"))
-    finally:
-        stream.close()
-
-
 def lexicon_compact(
     spark: SparkSession, root: str, _test_hook_before_commit=None
 ) -> dict:
@@ -1542,14 +1528,11 @@ def lexicon_compact(
     stay idempotent against it.  The ``_compacting`` lease serializes
     rebuilds (heartbeat-renewed; stale leases from crashed compactors
     are ignored)."""
-    import json
-
     from .. import genstore as _gs
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    with _gs.compaction_lease(fs, hpath, root, ttl_s=_LEASE_TTL_S):
+    fs, hpath = sinks._fs_for(spark, root)
+    with _gs.compaction_lease(fs, hpath, root):
         bids = _lex_full_bids(spark, root)
         if not bids:
             raise FileNotFoundError(f"compact before append: no batches at {root}")
@@ -1575,7 +1558,8 @@ def lexicon_compact(
             and {str(b) for b in bids} == folded_bids
             and set(fdirs) == folded_fg
         ):
-            return _lex_read_meta(fs, hpath, live)  # nothing new: no-op
+            # nothing new: no-op
+            return json.loads(_gs.read_file(fs, hpath, f"{live}/meta.json"))
         tf = spark.read.parquet(*[f"{root}/batches/tf/batch_id={b}" for b in bids])
         dl = spark.read.parquet(*[f"{root}/batches/dl/batch_id={b}" for b in bids])
         if fdirs:
@@ -1604,16 +1588,13 @@ def lexicon_compact(
         )
         agg = dl.agg(F.count(F.lit(1)), F.sum("dl")).collect()[0]
         meta = {"n_docs": int(agg[0]), "sum_dl": int(agg[1]), "n_batches": len(bids)}
-        out = fs.create(hpath(f"{stage}/meta.json"), True)
-        try:
-            out.write(bytearray(json.dumps(meta).encode("ascii")))
-        finally:
-            out.close()
+        meta_b = json.dumps(meta).encode("ascii")
+        _gs.put_file(fs, hpath, f"{stage}/meta.json", meta_b)
         fs.mkdirs(hpath(f"{stage}/_folded"))
         for b in bids:
-            _gs.marker_commit(fs, hpath, f"{stage}/_folded/{b}")
+            _gs.commit_file(fs, hpath, f"{stage}/_folded/{b}")
         for n in fdirs:
-            _gs.marker_commit(fs, hpath, f"{stage}/_folded/_fg_{n}")
+            _gs.commit_file(fs, hpath, f"{stage}/_folded/_fg_{n}")
         if _test_hook_before_commit is not None:
             # the `-m race` lane's SIGKILL window (r15): fully staged,
             # commit marker not yet written
@@ -1628,14 +1609,7 @@ def lexicon_compact(
         # non-authoritative convenience copy at the root: build-once
         # observability (tests witness its mtime) and ad-hoc inspection;
         # readers resolve the GENERATION's meta, never this file
-        tmp = hpath(f"{root}/meta.json.tmp.{uuid.uuid4().hex[:6]}")
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(json.dumps(meta).encode("ascii")))
-        finally:
-            out.close()
-        fs.delete(hpath(f"{root}/meta.json"), False)
-        fs.rename(tmp, hpath(f"{root}/meta.json"))
+        _gs.commit_file(fs, hpath, f"{root}/meta.json", meta_b, replace=True)
         return meta
 
 
@@ -1669,8 +1643,7 @@ def read_lexicon(spark: SparkSession, root: str):
     from .. import genstore as _gs
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     gen = _gs.current_gen(fs, hpath, root)
     if gen is None:
         raise FileNotFoundError(f"no committed lexicon generation under {root}")
@@ -1678,7 +1651,7 @@ def read_lexicon(spark: SparkSession, root: str):
         spark.read.parquet(f"{gen}/postings"),
         spark.read.parquet(f"{gen}/docstats"),
         spark.read.parquet(f"{gen}/termstats"),
-        _lex_read_meta(fs, hpath, gen),
+        json.loads(_gs.read_file(fs, hpath, f"{gen}/meta.json")),
     )
 
 
@@ -1694,8 +1667,7 @@ def ensure_standing_lexicon(spark: SparkSession, sf_dir: str, docs: DataFrame | 
     from .. import sinks
 
     root = lexicon_root(sf_dir)
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     if _gs.current_gen(fs, hpath, root) is None:
         if docs is None:
             docs = load_spread(spark, sf_dir, "documents", "doc_id")
@@ -1760,14 +1732,13 @@ def _bm25_from_lexicon(
     from .. import genstore as _gs
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     gen = _gs.current_gen(fs, hpath, root)
     if gen is None:
         raise FileNotFoundError(f"no committed lexicon generation under {root}")
     dl = spark.read.parquet(f"{gen}/docstats")
     dfreq = spark.read.parquet(f"{gen}/termstats")
-    meta = _lex_read_meta(fs, hpath, gen)
+    meta = json.loads(_gs.read_file(fs, hpath, f"{gen}/meta.json"))
     n_docs, sum_dl = meta["n_docs"], meta["sum_dl"]
     terms = [r["tok"] for r in qt.select("tok").distinct().limit(isin_pushdown_cap + 1).collect()]
     if len(terms) <= isin_pushdown_cap:
@@ -1846,13 +1817,10 @@ def _ensure_forgotten_lexicon(spark: SparkSession, sf_dir: str) -> str:
     compact, then ``lexicon_forget`` the deterministic set
     ``doc_id % 50 == 25`` (disjoint from the % 100 == 0 probe docs)."""
     from .. import genstore as _gs
-    from .. import sinks
 
     root = lexicon_root(sf_dir, variant="forgotten")
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    marker = f"{root}/_fgt_ready"
-    if not fs.exists(hpath(marker)):
+
+    def _build() -> None:
         docs = load_spread(spark, sf_dir, "documents", "doc_id")
         lexicon_append_batch(spark, root, docs, bid=0)
         lexicon_compact(spark, root)
@@ -1863,7 +1831,8 @@ def _ensure_forgotten_lexicon(spark: SparkSession, sf_dir: str) -> str:
             .collect()
         ]
         lexicon_forget(spark, root, ids)
-        _gs.marker_commit(fs, hpath, marker)
+
+    _gs.build_once(spark, f"{root}/_fgt_ready", _build)
     return root
 
 
@@ -1941,8 +1910,7 @@ def hybrid_search_rrf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_root = standing_index_root(sf_dir)
     version = sinks._read_latest_version(spark, f"{ann_root}/snapshot")
     lroot = lexicon_root(sf_dir)
-    fs, _, jvm = sinks._fs_for(spark, lroot)
-    gen = _gs.current_gen(fs, sinks._hpath(jvm), lroot)
+    gen = _gs.current_gen(*sinks._fs_for(spark, lroot), lroot)
 
     def _build():
         docs = load(spark, sf_dir, "documents")

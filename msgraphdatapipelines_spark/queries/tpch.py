@@ -1011,9 +1011,8 @@ def drop_colocated_facts(spark: SparkSession, sf_dir: str, num_buckets: int = 8)
     t_o, t_l, root = _colocated_names(sf_dir, num_buckets)
     spark.sql(f"DROP TABLE IF EXISTS {t_o}")
     spark.sql(f"DROP TABLE IF EXISTS {t_l}")
-    fs, p, _ = sinks._fs_for(spark, root)
-    if fs.exists(p):
-        fs.delete(p, True)
+    fs, hp = sinks._fs_for(spark, root)
+    fs.delete(hp(root), True)
 
 
 @register(

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cache import standing_root
+from ..genstore import build_once
 from . import load, register
 
 _T0 = "2024-01-01 00:00:00"
@@ -350,21 +351,17 @@ def ensure_standing_layout(spark: SparkSession, sf_dir: str) -> str:
     its table format.  Keyed on the source parquet's file identity
     (``cache.standing_root``, the standing-artifact discipline); ``_zm_ready`` marker
     written last via atomic rename is the commit point."""
-    import os
-
     from .. import sinks
     from . import load_events
 
     root = standing_root("zm", sf_dir, ("events.parquet",), "v1")
-    marker = f"{root}/_zm_ready"
-    if not os.path.exists(marker):
+
+    def _build() -> None:
         ev = load_events(spark, sf_dir)
         sinks.write_zordered(ev, f"{root}/events", ["value", "user_id"], num_files=16)
         sinks.build_zonemap(spark, f"{root}/events", ["value", "user_id"])
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write("ok")
-        os.replace(tmp, marker)
+
+    build_once(spark, f"{root}/_zm_ready", _build)
     return f"{root}/events"
 
 
@@ -446,24 +443,19 @@ def ensure_bloom_layout(spark: SparkSession, sf_dir: str) -> str:
     discipline as :func:`ensure_standing_layout`: keyed on the source
     fingerprint, ``_bloom_ready`` marker committed last by atomic
     rename."""
-    import os
-
     from .. import sinks
-    from . import load
 
     root = standing_root("bloom", sf_dir, ("orders.parquet",), "v1")
-    marker = f"{root}/_bloom_ready"
-    if not os.path.exists(marker):
+
+    def _build() -> None:
         o = load(spark, sf_dir, "orders")
         # random 16-way shard: worst case for min/max, the Bloom case
         o.repartition(16).write.mode("overwrite").parquet(f"{root}/orders")
         sinks.build_bloom_manifest(
             spark, f"{root}/orders", ["o_orderkey"], bits=1 << 17, k=4
         )
-        tmp = f"{marker}.tmp"
-        with open(tmp, "w") as fh:
-            fh.write("ok")
-        os.replace(tmp, marker)
+
+    build_once(spark, f"{root}/_bloom_ready", _build)
     return f"{root}/orders"
 
 

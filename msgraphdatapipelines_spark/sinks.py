@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cache import BoundedMemo
+from .genstore import commit_file, put_file, read_file
 
 LOAD_STAMP = "timeGenerated"
 LOAD_DATE = "loadDate"
@@ -188,9 +189,8 @@ def expire_old_partitions(
     Mirrors `DATEDIFF(day, timeGenerated, GetDate()) > @MaxInventoryAge`
     (`Prepare-SQLDatabase.sql:110`) at partition granularity.
     """
-    sc = spark.sparkContext
-    hpath = _hpath(sc._jvm)(path)  # noqa: SLF001 — py4j bridge
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, hp = _fs_for(spark, path)
+    hpath = hp(path)
     if not fs.exists(hpath):
         return []
     today = (now or _dt.datetime.now(_dt.timezone.utc)).date()
@@ -460,10 +460,9 @@ def ensure_bucketed_table(
     bucketed layout exists for was silently lost."""
     import uuid
 
-    fs, _, jvm = _fs_for(spark, path)
-    hpath = _hpath(jvm)
-    marker = f"{path}/_bucketed_ready"
-    if not fs.exists(hpath(marker)):
+    from .genstore import build_once
+
+    def _build() -> None:
         stage = f"{path}.stage.{uuid.uuid4().hex[:12]}"
         tmp_name = f"{table}_stage_{uuid.uuid4().hex[:8]}"
         w = build().write.mode("overwrite").bucketBy(num_buckets, bucket_col)
@@ -471,15 +470,11 @@ def ensure_bucketed_table(
             w = w.sortBy(sort_col)
         w.option("path", stage).saveAsTable(tmp_name, format="parquet")
         spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # external: files stay
-        if fs.exists(hpath(path)) or not fs.rename(hpath(stage), hpath(path)):
-            fs.delete(hpath(stage), True)  # lost the race; winner's files serve
-        if not fs.exists(hpath(marker)):
-            tmpm = hpath(f"{marker}.{uuid.uuid4().hex[:8]}.tmp")
-            out = fs.create(tmpm, True)
-            out.write(bytearray(b"ready"))
-            out.close()
-            if not fs.rename(tmpm, hpath(marker)) and fs.exists(tmpm):
-                fs.delete(tmpm, False)
+        fs, hp = _fs_for(spark, path)
+        if fs.exists(hp(path)) or not fs.rename(hp(stage), hp(path)):
+            fs.delete(hp(stage), True)  # lost the race; winner's files serve
+
+    build_once(spark, f"{path}/_bucketed_ready", _build)
     if not spark.catalog.tableExists(table):
         ddl = spark.read.parquet(path)._jdf.schema().toDDL()  # noqa: SLF001
         spark.sql(
@@ -638,11 +633,8 @@ def compact_parquet(
 
     Returns ``{"in_files", "in_bytes", "out_files"}``.
     """
-    jvm = spark.sparkContext._jvm
-    hp = _hpath(jvm)
-    jsc = spark.sparkContext._jsc
+    fs, hp = _fs_for(spark, path)
     hpath = hp(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
     in_files = in_bytes = 0
     it = fs.listFiles(hpath, True)
     base_uri = hpath.toUri().getPath()
@@ -659,10 +651,9 @@ def compact_parquet(
     n_out = max(1, -(-in_bytes // target_file_bytes))  # ceil
     df = spark.read.parquet(path)
     df.repartition(n_out).write.mode("overwrite").parquet(out_path)
-    opath = hp(out_path)
-    ofs = opath.getFileSystem(jsc.hadoopConfiguration())
+    ofs, ohp = _fs_for(spark, out_path)
     out_files = 0
-    oit = ofs.listFiles(opath, True)
+    oit = ofs.listFiles(ohp(out_path), True)
     while oit.hasNext():
         f = oit.next()
         name = f.getPath().getName()
@@ -671,18 +662,15 @@ def compact_parquet(
     return {"in_files": in_files, "in_bytes": in_bytes, "out_files": out_files}
 
 
-def _hpath(jvm):
-    """The Hadoop ``Path`` class in one py4j round trip.  The attribute
-    walk ``jvm.org.apache.hadoop.fs.Path`` costs five reflection calls,
-    four of them failed class loads (``org``, ``org.apache``, …) that
-    scan the whole classpath before py4j falls back to a package."""
-    return getattr(jvm, "org.apache.hadoop.fs.Path")
-
-
 def _fs_for(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    p = _hpath(jvm)(path)
-    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p, jvm
+    """``(fs, hp)``: the Hadoop FileSystem serving ``path`` and the
+    ``Path`` class every caller builds its paths with.  The class is
+    fetched in one py4j round trip: the attribute walk
+    ``jvm.org.apache.hadoop.fs.Path`` costs five reflection calls, four
+    of them failed class loads (``org``, ``org.apache``, …) that scan
+    the whole classpath before py4j falls back to a package."""
+    hp = getattr(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")
+    return hp(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hp
 
 
 def _normalize_file_uri(uri: str) -> str:
@@ -700,9 +688,9 @@ def _normalize_file_uri(uri: str) -> str:
     return u
 
 
-def _list_numbered_dirs(spark: SparkSession, root: str, prefix: str) -> list[int]:
+def _list_numbered_dirs(fs, hp, root: str, prefix: str) -> list[int]:
     """Sorted numeric suffixes of ``{prefix}N`` subdirectories of ``root``."""
-    fs, p, _ = _fs_for(spark, root)
+    p = hp(root)
     if not fs.exists(p):
         return []
     out = []
@@ -719,7 +707,7 @@ def _list_numbered_dirs(spark: SparkSession, root: str, prefix: str) -> list[int
 def snapshot_versions(spark: SparkSession, root: str) -> list[int]:
     """Sorted list of snapshot versions present under ``root`` (``v=N``
     directories)."""
-    return _list_numbered_dirs(spark, root, "v=")
+    return _list_numbered_dirs(*_fs_for(spark, root), root, "v=")
 
 
 def write_snapshot(
@@ -801,11 +789,10 @@ def write_snapshot(
     uid = uuid.uuid4().hex[:8]
     stage_name = f"v.stage.{uid}"
     stage = f"{root}/{stage_name}"
-    fs, _, jvm = _fs_for(spark, root)
-    hp = _hpath(jvm)
+    fs, hp = _fs_for(spark, root)
     out = df if zonemap_cols or bloom_cols else _right_sized(df)
     out.write.mode("overwrite").parquet(stage)
-    _write_schema(fs, hp, stage, df.schema)
+    put_file(fs, hp, f"{stage}/{SCHEMA_FILE}", df.schema.json().encode("utf-8"))
     # manifests are built INSIDE the staged dir and travel with the
     # claim-rename; recorded paths relocate, which the pruned readers'
     # table-relative identity (_table_suffix) already resolves
@@ -813,8 +800,8 @@ def write_snapshot(
         build_zonemap(spark, stage, zonemap_cols)
     if bloom_cols:
         build_bloom_manifest(spark, stage, bloom_cols)
-    new_v, versions = _claim_publish(spark, root, stage, stage_name, uid)
-    _flip_latest(spark, root, new_v)
+    new_v, versions = _claim_publish(fs, hp, root, stage, stage_name, uid)
+    _flip_latest(fs, hp, root, new_v)
     if keep_last is not None:
         for v in versions[:-keep_last]:
             fs.delete(hp(f"{root}/v={v}"), True)
@@ -831,36 +818,19 @@ def _right_sized(df: DataFrame) -> DataFrame:
     return df.coalesce(min(max(1, -(-est // TARGET_FILE_BYTES)), 2**31 - 1))
 
 
-def _write_schema(fs, hp, vdir: str, schema) -> None:
-    """Write ``schema`` as the version directory's ``_schema.json``."""
-    out = fs.create(hp(f"{vdir}/{SCHEMA_FILE}"), True)
-    out.write(bytearray(schema.json().encode("utf-8")))
-    out.close()
-
-
-def _read_schema(spark: SparkSession, vdir: str):
+def _read_schema(fs, hp, vdir: str):
     """The version's ``_schema.json`` as a ``StructType``, or None for a
     version published without one."""
     import json
 
-    from py4j.protocol import Py4JJavaError
     from pyspark.sql.types import StructType
 
-    fs, p, _ = _fs_for(spark, f"{vdir}/{SCHEMA_FILE}")
-    try:
-        stream = fs.open(p)
-    except Py4JJavaError as e:
-        if "FileNotFoundException" in str(e):
-            return None
-        raise
-    try:
-        return StructType.fromJson(json.loads(bytes(stream.readAllBytes())))
-    finally:
-        stream.close()
+    raw = read_file(fs, hp, f"{vdir}/{SCHEMA_FILE}")
+    return None if raw is None else StructType.fromJson(json.loads(raw))
 
 
 def _claim_publish(
-    spark: SparkSession, root: str, stage: str, stage_name: str, uid: str
+    fs, hp, root: str, stage: str, stage_name: str, uid: str
 ) -> tuple[int, list[int]]:
     """The CLAIM-RENAME version publish shared by every snapshot writer
     (r15: factored out of write_snapshot so compact_snapshot retires the
@@ -884,13 +854,9 @@ def _claim_publish(
     (copy-"rename" onto an existing dir merges contents instead of
     nesting — two racers could interleave into one dir); on copy-rename
     stores run a single publisher per root."""
-    fs, _, jvm = _fs_for(spark, root)
-    hp = _hpath(jvm)
     manifest = _rel_files(fs, hp, stage)
-    out = fs.create(hp(f"{stage}/_PUB_{uid}"), True)
-    out.write(bytearray("\n".join(manifest).encode("utf-8")))
-    out.close()
-    versions = snapshot_versions(spark, root)
+    put_file(fs, hp, f"{stage}/_PUB_{uid}", "\n".join(manifest).encode("utf-8"))
+    versions = _list_numbered_dirs(fs, hp, root, "v=")
     new_v = (versions[-1] + 1) if versions else 1
     err_streak = 0
     while True:
@@ -985,14 +951,14 @@ def _rel_files(fs, hp, base: str, tolerant: bool = False) -> list[str]:
 _LATEST_MARKER_RE = None  # compiled lazily (module import stays light)
 
 
-def _latest_markers(fs, jvm, root: str) -> list[int]:
+def _latest_markers(fs, hp, root: str) -> list[int]:
     """Versions named by ``_LATEST.v{N}`` marker files under ``root``."""
     global _LATEST_MARKER_RE
     if _LATEST_MARKER_RE is None:
         import re
 
         _LATEST_MARKER_RE = re.compile(r"^_LATEST\.v(\d+)$")
-    p = _hpath(jvm)(root)
+    p = hp(root)
     if not fs.exists(p):
         return []
     out = []
@@ -1003,13 +969,13 @@ def _latest_markers(fs, jvm, root: str) -> list[int]:
     return sorted(out)
 
 
-def _resolve_latest(fs, jvm, root: str) -> int | None:
+def _resolve_latest(fs, hp, root: str) -> int | None:
     """The committed pointer: the max ``_LATEST.v{N}`` marker, or None."""
-    marks = _latest_markers(fs, jvm, root)
+    marks = _latest_markers(fs, hp, root)
     return marks[-1] if marks else None
 
 
-def _flip_latest(spark: SparkSession, root: str, new_v: int) -> None:
+def _flip_latest(fs, hp, root: str, new_v: int) -> None:
     """Commit the pointer at ``v=new_v`` — CAS-style (late r14, retiring
     the r13 replace-in-place design AND the r14 retry loop's residue):
 
@@ -1027,19 +993,11 @@ def _flip_latest(spark: SparkSession, root: str, new_v: int) -> None:
 
     A crash before (1)'s rename leaves the previous pointer fully live;
     a crash after it IS the commit."""
-    fs, _, jvm = _fs_for(spark, root)
-    hp = _hpath(jvm)
-    import uuid
-
     marker = f"{root}/_LATEST.v{new_v}"
-    tmp = hp(f"{root}/_LATESTtmp.{uuid.uuid4().hex[:6]}")
-    out = fs.create(tmp, True)
-    out.write(str(new_v).encode("ascii"))
-    out.close()
-    if not fs.rename(tmp, hp(marker)) and not fs.exists(hp(marker)):
-        fs.delete(tmp, False)
+    landed = commit_file(fs, hp, marker, str(new_v).encode("ascii"))
+    if not landed and not fs.exists(hp(marker)):
         raise OSError(f"could not commit pointer marker {marker}")
-    for v in _latest_markers(fs, jvm, root)[:-2]:
+    for v in _latest_markers(fs, hp, root)[:-2]:
         try:
             fs.delete(hp(f"{root}/_LATEST.v{v}"), False)
         except Exception:  # noqa: BLE001 — GC is advisory
@@ -1083,10 +1041,10 @@ def compact_snapshot(
 
     Returns ``compact_parquet``'s stats plus ``{"from_version", "version"}``.
     """
-    versions = snapshot_versions(spark, root)
-    if not versions:
+    fs, hp = _fs_for(spark, root)
+    if not _list_numbered_dirs(fs, hp, root, "v="):
         raise ValueError(f"no snapshot versions under {root}")
-    cur_v = _read_latest_version(spark, root)
+    cur_v = _committed_version(fs, hp, root)
     # r15: compaction publishes through the SAME claim-rename protocol
     # as write_snapshot (this was the last direct-to-``v=N`` writer) —
     # the compacted rewrite stages under a uid dir, so a crashed
@@ -1099,8 +1057,8 @@ def compact_snapshot(
     stage_name = f"v.stage.{uid}"
     stage = f"{root}/{stage_name}"
     stats = compact_parquet(spark, f"{root}/v={cur_v}", stage, target_file_bytes)
-    fs, _, jvm = _fs_for(spark, root)
-    _write_schema(fs, _hpath(jvm), stage, read_snapshot(spark, root, cur_v).schema)
+    schema = read_snapshot(spark, root, cur_v).schema
+    put_file(fs, hp, f"{stage}/{SCHEMA_FILE}", schema.json().encode("utf-8"))
     # manifests refreshed at commit (r10): compaction changes the file set,
     # so zone maps AND Bloom filters must be rebuilt on the NEW version
     # before the flip — this is also how a Bloom table streaming-appended
@@ -1110,8 +1068,8 @@ def compact_snapshot(
         build_zonemap(spark, stage, zonemap_cols)
     if bloom_cols:
         build_bloom_manifest(spark, stage, bloom_cols)
-    new_v, _ = _claim_publish(spark, root, stage, stage_name, uid)
-    _flip_latest(spark, root, new_v)
+    new_v, _ = _claim_publish(fs, hp, root, stage, stage_name, uid)
+    _flip_latest(fs, hp, root, new_v)
     return {**stats, "from_version": cur_v, "version": new_v}
 
 
@@ -1126,10 +1084,11 @@ def read_snapshot(spark: SparkSession, root: str, version: int | None = None) ->
     the read submits no Spark job; a version without the sidecar falls
     back to parquet schema inference.  Either way the columns come back
     nullable, as Spark's file sources return them."""
+    fs, hp = _fs_for(spark, root)
     if version is None:
-        version = _read_latest_version(spark, root)
+        version = _committed_version(fs, hp, root)
     vdir = f"{root}/v={version}"
-    schema = _read_schema(spark, vdir)
+    schema = _read_schema(fs, hp, vdir)
     return (spark.read if schema is None else spark.read.schema(schema)).parquet(vdir)
 
 
@@ -1170,8 +1129,8 @@ def read_snapshot_bloom_pruned(
     if version is None:
         version = _read_latest_version(spark, root)
     vdir = f"{root}/v={version}"
-    fs, _, jvm = _fs_for(spark, vdir)
-    if not fs.exists(_hpath(jvm)(f"{vdir}/_bloom_{col}")):
+    fs, hp = _fs_for(spark, vdir)
+    if not fs.exists(hp(f"{vdir}/_bloom_{col}")):
         return read_snapshot(spark, root, version).filter(F.col(col) == value)
     return scan_bloom_pruned(spark, vdir, col, value)
 
@@ -1179,8 +1138,12 @@ def read_snapshot_bloom_pruned(
 def _read_latest_version(spark: SparkSession, root: str) -> int:
     """The committed version at ``root``; ``FileNotFoundError`` when no
     pointer marker exists (``v=N`` dirs without one never committed)."""
-    fs, _, jvm = _fs_for(spark, root)
-    got = _resolve_latest(fs, jvm, root)
+    return _committed_version(*_fs_for(spark, root), root)
+
+
+def _committed_version(fs, hp, root: str) -> int:
+    """:func:`_read_latest_version` on an already-resolved ``(fs, hp)``."""
+    got = _resolve_latest(fs, hp, root)
     if got is None:
         raise FileNotFoundError(
             f"no committed snapshot (no _LATEST.v* marker) under {root}"
@@ -1230,10 +1193,9 @@ def vacuum_snapshots(
     """
     import time as _time
 
-    fs, _, jvm = _fs_for(spark, root)
-    hp = _hpath(jvm)
-    versions = snapshot_versions(spark, root)
-    cur = _read_latest_version(spark, root) if versions else None
+    fs, hp = _fs_for(spark, root)
+    versions = _list_numbered_dirs(fs, hp, root, "v=")
+    cur = _committed_version(fs, hp, root) if versions else None
     removed_stages: list[str] = []
     now_ms = None
     if fs.exists(hp(root)):
@@ -1281,8 +1243,7 @@ def snapshot_exists(spark: SparkSession, root: str) -> bool:
     directory without one is a crashed, never-committed first write:
     bootstrapping over it is safe and ``write_snapshot`` will pick the
     next free version)."""
-    fs, _, jvm = _fs_for(spark, root)
-    return _resolve_latest(fs, jvm, root) is not None
+    return _resolve_latest(*_fs_for(spark, root), root) is not None
 
 
 STANDING_ARTIFACT_PREFIXES = (
@@ -1335,7 +1296,8 @@ def vacuum_standing_artifacts(
 
     base = base_dir or tempfile.gettempdir()
     keep = {os.path.normpath(r) for r in keep_roots}
-    fs, bp, jvm = _fs_for(spark, base)
+    fs, hp = _fs_for(spark, base)
+    bp = hp(base)
     removed, kept = [], []
     if not fs.exists(bp):
         return {"removed": removed, "kept": kept}
@@ -1409,14 +1371,13 @@ def scd2_store_begin_round(spark: SparkSession, root: str, schema) -> tuple[Data
     round 1.
     """
     cur_root = f"{root}/current"
-    fs, _, jvm = _fs_for(spark, root)
-    hp = _hpath(jvm)
-    ptr = _resolve_latest(fs, jvm, cur_root)
+    fs, hp = _fs_for(spark, root)
+    ptr = _resolve_latest(fs, hp, cur_root)
     if ptr is not None:
-        for v in _list_numbered_dirs(spark, cur_root, "v="):
+        for v in _list_numbered_dirs(fs, hp, cur_root, "v="):
             if v > ptr:
                 fs.delete(hp(f"{cur_root}/v={v}"), True)
-        for r in _list_numbered_dirs(spark, f"{root}/closed", "r="):
+        for r in _list_numbered_dirs(fs, hp, f"{root}/closed", "r="):
             if r > ptr:
                 fs.delete(hp(f"{root}/closed/r={r}"), True)
         return read_snapshot(spark, cur_root, ptr), ptr + 1
@@ -1443,12 +1404,12 @@ def scd2_store_commit_round(
     n_closed = closed_inc.count()
     closed_inc.write.mode("overwrite").parquet(f"{root}/closed/r={new_v}")
     new_cur.write.mode("overwrite").parquet(f"{cur_root}/v={new_v}")
-    _flip_latest(spark, cur_root, new_v)
+    fs, hp = _fs_for(spark, root)
+    _flip_latest(fs, hp, cur_root, new_v)
     if keep_last is not None:
-        fs, _, jvm = _fs_for(spark, root)
-        for v in snapshot_versions(spark, cur_root)[:-keep_last]:
+        for v in _list_numbered_dirs(fs, hp, cur_root, "v=")[:-keep_last]:
             if v != new_v:
-                fs.delete(_hpath(jvm)(f"{cur_root}/v={v}"), True)
+                fs.delete(hp(f"{cur_root}/v={v}"), True)
     return {"version": new_v, "closed_rows_written": n_closed}
 
 
@@ -1459,9 +1420,10 @@ def read_scd2_history(spark: SparkSession, root: str, schema=None) -> DataFrame:
     (a round that closed nothing writes a zero-row directory).  A store
     with no committed ``current/`` pointer raises ``FileNotFoundError``."""
     cur_root = f"{root}/current"
-    ptr = _read_latest_version(spark, cur_root)
+    fs, hp = _fs_for(spark, root)
+    ptr = _committed_version(fs, hp, cur_root)
     cur = read_snapshot(spark, cur_root, ptr)
-    rounds = [r for r in _list_numbered_dirs(spark, f"{root}/closed", "r=") if r <= ptr]
+    rounds = [r for r in _list_numbered_dirs(fs, hp, f"{root}/closed", "r=") if r <= ptr]
     if not rounds:
         return cur
     reader = spark.read
@@ -1514,10 +1476,10 @@ def forget_keys(
     n_after = read_snapshot(spark, root).count()
     erased = []
     if erase_history:
-        fs, _, jvm = _fs_for(spark, root)
-        for v in snapshot_versions(spark, root):
+        fs, hp = _fs_for(spark, root)
+        for v in _list_numbered_dirs(fs, hp, root, "v="):
             if v != new_v:
-                fs.delete(_hpath(jvm)(f"{root}/v={v}"), True)
+                fs.delete(hp(f"{root}/v={v}"), True)
                 erased.append(v)
     # r16: an erasure must also drop retained planning state — cached
     # zonemap manifests under this root carry per-file min/max of the
@@ -1562,8 +1524,7 @@ def scd2_forget_keys(
     "rewritten_rounds"}``.
     """
     cur_root = f"{root}/current"
-    fs, _, jvm = _fs_for(spark, root)
-    hp = _hpath(jvm)
+    fs, hp = _fs_for(spark, root)
     pk = F.broadcast(keys_df.select(*key_cols).distinct())
 
     # recovery: complete any crashed previous forget's tmp swaps
@@ -1592,7 +1553,7 @@ def scd2_forget_keys(
     # scrub every closed increment that holds a forgotten key
     reader_schema = _scd2_meta_schema(schema) if schema is not None else cur.schema
     rewritten = []
-    for r in _list_numbered_dirs(spark, closed_root, "r="):
+    for r in _list_numbered_dirs(fs, hp, closed_root, "r="):
         inc_path = f"{closed_root}/r={r}"
         inc = spark.read.schema(reader_schema).parquet(inc_path)
         if inc.join(pk, key_cols, "left_semi").limit(1).count() == 0:
@@ -1729,9 +1690,9 @@ def refresh_zonemap(spark: SparkSession, path: str, cols: list[str]) -> dict:
             _time.sleep(0.05)
 
     known = {_table_suffix(path, r["file"]) for r in old.select("file").collect()}
-    fs, p, jvm = _fs_for(spark, path)
+    fs, hp = _fs_for(spark, path)
     new_files = []
-    stack = [p]
+    stack = [hp(path)]
     while stack:
         d = stack.pop()
         for st in fs.listStatus(d):
@@ -1770,10 +1731,7 @@ def refresh_zonemap(spark: SparkSession, path: str, cols: list[str]) -> dict:
         stage_name = f"_zonemap.stage.{uid}"
         zm_stage = f"{path}/{stage_name}"
         merged.coalesce(1).write.mode("overwrite").parquet(zm_stage)
-        hp = _hpath(jvm)
-        sent = fs.create(hp(f"{zm_stage}/_SWAP_{uid}"), True)
-        sent.write(b"1")
-        sent.close()
+        put_file(fs, hp, f"{zm_stage}/_SWAP_{uid}", b"1")
         aside = f"{zm_path}.old.{uid}"
         if fs.exists(hp(zm_path)):
             fs.rename(hp(zm_path), hp(aside))
@@ -1823,8 +1781,7 @@ def _restore_zonemap_aside(spark: SparkSession, path: str) -> bool:
     state — so any choice is correct; last-uid is just deterministic)
     and delete the rest.  Returns True iff a manifest was restored."""
     zm_path = f"{path}/_zonemap"
-    fs, _, jvm = _fs_for(spark, path)
-    hp = _hpath(jvm)
+    fs, hp = _fs_for(spark, path)
     if fs.exists(hp(zm_path)):
         return False
     asides = sorted(
@@ -1941,8 +1898,8 @@ def _zonemap_rows_cached(spark: SparkSession, vdir: str) -> list | None:
     aside-restore may bring it back)."""
 
     def build():
-        fs, _, jvm = _fs_for(spark, vdir)
-        if not fs.exists(_hpath(jvm)(f"{vdir}/_zonemap")):
+        fs, hp = _fs_for(spark, vdir)
+        if not fs.exists(hp(f"{vdir}/_zonemap")):
             return None
         return [r.asDict() for r in spark.read.parquet(f"{vdir}/_zonemap").collect()]
 
@@ -1983,8 +1940,8 @@ def scan_pruned(
         # optimization, never a requirement, so fall back to a full
         # filtered scan exactly like read_snapshot_pruned_in does
         # rather than raising.
-        fs, _, jvm = _fs_for(spark, path)
-        if not fs.exists(_hpath(jvm)(f"{path}/_zonemap")):
+        fs, hp = _fs_for(spark, path)
+        if not fs.exists(hp(f"{path}/_zonemap")):
             if not _restore_zonemap_aside(spark, path):
                 _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
                 return base.filter(F.col(col).between(lo, hi))
@@ -2050,8 +2007,8 @@ def scan_pruned_in(
         # r15 (ADVICE): same missing-manifest fallback as scan_pruned —
         # a crashed refresher must degrade pruned reads to full scans,
         # not break them.
-        fs, _, jvm = _fs_for(spark, path)
-        if not fs.exists(_hpath(jvm)(f"{path}/_zonemap")):
+        fs, hp = _fs_for(spark, path)
+        if not fs.exists(hp(f"{path}/_zonemap")):
             if not _restore_zonemap_aside(spark, path):
                 _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
                 return base.filter(F.col(col).isin(vals))
@@ -2091,7 +2048,7 @@ def read_snapshot_pruned_in(
     rows = _zonemap_rows_cached(spark, vdir)  # immutable version dir
     if rows is None:
         vals = sorted(set(values))
-        return spark.read.parquet(vdir).filter(
+        return read_snapshot(spark, root, version).filter(
             F.col(col).isin(vals) if vals else F.lit(False)
         )
     return scan_pruned_in(spark, vdir, col, values, _manifest_rows=rows)
@@ -2171,8 +2128,7 @@ def build_bloom_manifest(
     Returns {col: word_row_count}."""
     df = spark.read.parquet(path)
     out = {}
-    fs, _, jvm = _fs_for(spark, path)
-    hp = _hpath(jvm)
+    fs, hp = _fs_for(spark, path)
     for c in cols:
         root = f"{path}/_bloom_{c}"
         # a REBUILD retires refresh deltas (r14): stale words_delta_*
@@ -2198,10 +2154,10 @@ def _bloom_words_df(spark: SparkSession, root: str) -> DataFrame:
     lane's bloom mode caught exactly that).  Duplicate (file, word_idx)
     rows across dirs stay probe-safe — any row with the probed bit set
     counts."""
-    fs, p, jvm = _fs_for(spark, root)
+    fs, hp = _fs_for(spark, root)
     paths = [
         st.getPath().toString()
-        for st in fs.listStatus(p)
+        for st in fs.listStatus(hp(root))
         if st.isDirectory() and (
             st.getPath().getName() == "words"
             or st.getPath().getName().startswith("words_delta_")
@@ -2237,7 +2193,8 @@ def refresh_bloom_manifest(spark: SparkSession, path: str, col: str) -> dict:
         _normalize_file_uri(r["file"])
         for r in words.select("file").distinct().collect()
     }
-    fs, p, _ = _fs_for(spark, path)
+    fs, hp = _fs_for(spark, path)
+    p = hp(path)
     base_n = _normalize_file_uri(fs.makeQualified(p).toString()).rstrip("/")
     new_files = []
     it = fs.listFiles(p, True)  # recursive: nested partition dirs included
@@ -2320,8 +2277,8 @@ def scan_bloom_pruned(spark: SparkSession, path: str, col: str, value) -> DataFr
     # for this column must degrade to a full filtered scan, not raise —
     # pruning is an optimization, never a requirement (matches
     # scan_pruned/scan_pruned_in and read_snapshot_bloom_pruned).
-    fs, _, jvm = _fs_for(spark, path)
-    if not fs.exists(_hpath(jvm)(f"{path}/_bloom_{col}/meta")):
+    fs, hp = _fs_for(spark, path)
+    if not fs.exists(hp(f"{path}/_bloom_{col}/meta")):
         _warn_stale(
             StaleManifestError(f"no _bloom_{col} manifest under {path}")
         )

@@ -126,12 +126,11 @@ def _hadoop_fence(throttle_dir: str):
         spark = SparkSession.getActiveSession()
         if spark is None:
             return None
-        from ..sinks import _hpath
+        from ..sinks import _fs_for
 
-        hp = _hpath(spark._jvm)
-        p = hp(f"{throttle_dir.rstrip('/')}/retry_after_fence")
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        return fs, hp, p
+        path = f"{throttle_dir.rstrip('/')}/retry_after_fence"
+        fs, hp = _fs_for(spark, path)
+        return fs, hp, hp(path)
     except Exception:  # noqa: BLE001 — no gateway in this process
         return None
 
@@ -555,25 +554,6 @@ def _apply_client_side(
     if select:
         df = df.select(*_select_with_expand(select, expand, df.columns))
     return df
-
-
-def fetch_delta_pages(
-    first_url: str,
-    fetcher: Callable[[str], str] = file_fetcher,
-    retry: RetryPolicy | None = None,
-    sleeper: Callable[[float], None] = time.sleep,
-    max_pages: int = 100_000,
-) -> tuple[list[str], str | None]:
-    """Walk a delta-query cursor chain: like ``fetch_pages`` but the final
-    page carries ``@odata.deltaLink`` — the resume token for the NEXT sync
-    round — instead of a nextLink.  Returns (page bodies, delta link)."""
-    pages: list[str] = []
-    delta_link: str | None = None
-    walk = _walk_pages(first_url, fetcher, retry, sleeper)
-    for body, doc in itertools.islice(walk, max_pages):
-        pages.append(body)
-        delta_link = doc.get(DELTA_LINK, delta_link)
-    return pages, delta_link
 
 
 def load_delta_state(state_path: str) -> str | None:

@@ -102,9 +102,9 @@ def suggest_state_partitions(
 
     from ..sinks import _fs_for
 
-    fs, p, _ = _fs_for(spark, directory)
+    fs, hp = _fs_for(spark, directory)
     total = 0
-    for st in fs.listStatus(p):
+    for st in fs.listStatus(hp(directory)):
         name = st.getPath().getName()
         if st.isFile() and fnmatch.fnmatch(name, glob):
             total += st.getLen()

@@ -26,6 +26,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..genstore import commit_file, read_file
 from ..operators import similarity as S
 
 
@@ -84,53 +85,14 @@ def init_ann_stream_root(
     automated rebalance can republish ``models.v{N}.json`` behind the
     snapshot pointer without the stream ever holding stale models."""
     import json
-    import uuid
 
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    final = hpath(f"{root}/models.json")
-    if fs.exists(final):
-        return
-    tmp = hpath(f"{root}/models.json.tmp.{uuid.uuid4().hex[:6]}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps({"centroids": centroids, "codebooks": codebooks}).encode(
-                    "ascii"
-                )
-            )
-        )
-    finally:
-        out.close()
-    if not fs.rename(tmp, final):
-        fs.delete(tmp, False)  # racer bootstrapped first
-
-
-def _read_json_path(fs, hpath, path: str) -> dict:
-    import json
-
-    stream = fs.open(hpath(path))
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode("ascii"))
-    finally:
-        stream.close()
-
-
-def _write_json_path_atomic(fs, hpath, path: str, obj: dict) -> None:
-    import json
-    import uuid
-
-    tmp = hpath(f"{path}.tmp.{uuid.uuid4().hex[:6]}")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(json.dumps(obj).encode("ascii")))
-    finally:
-        out.close()
-    fs.delete(hpath(path), False)
-    fs.rename(tmp, hpath(path))
+    fs, hp = sinks._fs_for(spark, root)
+    final = f"{root}/models.json"
+    if not fs.exists(hp(final)):
+        models = {"centroids": centroids, "codebooks": codebooks}
+        commit_file(fs, hp, final, json.dumps(models).encode("ascii"))
 
 
 def write_batches_models(spark: SparkSession, batches_dir: str, models: dict) -> None:
@@ -141,11 +103,12 @@ def write_batches_models(spark: SparkSession, batches_dir: str, models: dict) ->
     self-describing — an appender can always encode consistently with
     the rows already there, no matter which commit-window instant it
     observes."""
+    import json
+
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, batches_dir)
-    hpath = sinks._hpath(jvm)
-    _write_json_path_atomic(fs, hpath, f"{batches_dir}/_MODELS", models)
+    fs, hp = sinks._fs_for(spark, batches_dir)
+    commit_file(fs, hp, f"{batches_dir}/_MODELS", json.dumps(models).encode(), replace=True)
 
 
 def resolve_batches_models(spark: SparkSession, root: str) -> dict:
@@ -163,14 +126,17 @@ def resolve_batches_models(spark: SparkSession, root: str) -> dict:
     itself, every append is consistent with its dir in EVERY crash
     window; the worst a mid-commit crash can do is lose the retrain
     (the occupancy monitor re-triggers it), never correctness."""
+    import json
+
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
-    stamp = f"{root}/batches/_MODELS"
-    if fs.exists(hpath(stamp)):
-        return _read_json_path(fs, hpath, stamp)
-    return _read_json_path(fs, hpath, f"{root}/models.json")
+    fs, hp = sinks._fs_for(spark, root)
+    raw = read_file(fs, hp, f"{root}/batches/_MODELS")
+    if raw is None:
+        raw = read_file(fs, hp, f"{root}/models.json")
+    if raw is None:
+        raise FileNotFoundError(f"no _MODELS stamp or models.json under {root}")
+    return json.loads(raw)
 
 
 def recover_batches(spark: SparkSession, root: str) -> bool:
@@ -200,10 +166,11 @@ def recover_batches(spark: SparkSession, root: str) -> bool:
     running concurrently with a swap that crashes on a copy-rename
     store can land in the aside-moved dir and be swept, not salvaged —
     run single-writer rebalances on copy-rename stores."""
+    import json
+
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = sinks._hpath(jvm)
+    fs, hpath = sinks._fs_for(spark, root)
     dst = hpath(f"{root}/batches")
     if not fs.exists(hpath(root)):
         return False
@@ -216,10 +183,10 @@ def recover_batches(spark: SparkSession, root: str) -> bool:
         return False
     newest = max(stages, key=lambda st: st.getModificationTime())
     if fs.exists(dst):
-        mpath = f"{newest.getPath().toString()}/_SWAP_MANIFEST"
-        if not fs.exists(hpath(mpath)):
+        raw = read_file(fs, hpath, f"{newest.getPath().toString()}/_SWAP_MANIFEST")
+        if raw is None:
             return False  # pre-commit stage debris beside intact batches
-        manifest = _read_json_path(fs, hpath, mpath)["files"]
+        manifest = json.loads(raw)["files"]
         have = set(sinks._rel_files(fs, hpath, f"{root}/batches", tolerant=True))
         if all(f in have for f in manifest):
             # swap completed; the surviving stage copy is debris
@@ -353,24 +320,22 @@ def compact_ann_index(
     ``models.v{V}.json`` — and, with ``versioned_label_lists``,
     ``label_lists.v{V}`` — BEFORE the ``_LATEST`` flip, then verifies
     the published version and re-keys defensively on mismatch."""
+    import json
     import uuid
 
     from pyspark.sql import functions as F
 
     from .. import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, snapshot_root)
-    hpath = sinks._hpath(jvm)
-    stamp = f"{index_dir}/_MODELS"
-    if models_root is None and fs.exists(hpath(stamp)):
+    fs, hpath = sinks._fs_for(spark, snapshot_root)
+    raw = read_file(fs, hpath, f"{index_dir}/_MODELS")
+    if models_root is None and raw is not None:
         models_root = snapshot_root.rstrip("/").rsplit("/", 1)[0]
-    models = None
-    if models_root is not None:
-        models = (
-            _read_json_path(fs, hpath, stamp)
-            if fs.exists(hpath(stamp))
-            else _read_json_path(fs, hpath, f"{models_root}/models.json")
-        )
+    if models_root is not None and raw is None:
+        raw = read_file(fs, hpath, f"{models_root}/models.json")
+        if raw is None:
+            raise FileNotFoundError(f"no _MODELS stamp or models.json under {models_root}")
+    models = None if models_root is None else json.loads(raw)
     new_v = (sinks.snapshot_versions(spark, snapshot_root) or [0])[-1] + 1
     if versioned_label_lists:
         if models_root is None:
@@ -391,7 +356,8 @@ def compact_ann_index(
         fs.delete(hpath(old), True)
         wrote_labels = True
     if models is not None:
-        _write_json_path_atomic(fs, hpath, f"{models_root}/models.v{new_v}.json", models)
+        models_b = json.dumps(models).encode()
+        commit_file(fs, hpath, f"{models_root}/models.v{new_v}.json", models_b, replace=True)
     if cluster_col is not None and cluster_col in view.columns:
         view = (
             view.repartitionByRange(cluster_files, F.col(cluster_col))
@@ -406,8 +372,8 @@ def compact_ann_index(
         # publisher outside it — re-key the paired files to the version
         # that actually went live
         if models is not None:
-            _write_json_path_atomic(
-                fs, hpath, f"{models_root}/models.v{pub_v}.json", models
+            commit_file(
+                fs, hpath, f"{models_root}/models.v{pub_v}.json", models_b, replace=True
             )
         if versioned_label_lists and wrote_labels:
             dst = f"{models_root}/label_lists.v{pub_v}"

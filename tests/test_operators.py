@@ -2658,8 +2658,7 @@ def test_prefix_index_compact_folds_straggler_batch(spark, tmp_path):
     QD, docs, base, rest, root = _prefix_fixture(spark, tmp_path, "pytest-straggler")
     from msgraphdatapipelines_spark import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, root)
 
     def publish_straggler():
         # models an appender that completed its publish but has not run
@@ -2704,11 +2703,11 @@ def test_prefix_index_compact_crash_before_commit_leaves_old_gen_live(spark, tmp
 
     with pytest.raises(RuntimeError, match="injected crash"):
         QD.prefix_index_compact(spark, root, _test_hook_before_commit=boom)
+    from msgraphdatapipelines_spark import genstore as _gs
     from msgraphdatapipelines_spark import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    assert QD._live_leases(fs, hpath, root) == [], "crashed compact left its lease"
+    fs, hpath = sinks._fs_for(spark, root)
+    assert _gs.live_leases(fs, hpath, root) == [], "crashed compact left its lease"
     assert QD.prefix_index_current_gen(spark, root) == gen_before
     mid = _ppj_key(
         D.set_similarity_join_from_tables(*QD.read_prefix_index(spark, root), "doc_id", 0.5)
@@ -2759,26 +2758,26 @@ def test_prefix_index_concurrent_builders_commit_one_consistent_gen(spark, tmp_p
 
 def test_prefix_index_stale_lease_is_ignored_and_gc_keeps_two_gens(spark, tmp_path):
     """r12 protocol edges: (a) a lease file older than the TTL (a crashed
-    compactor) must not wedge appends — _wait_leases_clear returns
+    compactor) must not wedge appends — wait_leases_clear returns
     immediately; (b) repeated compaction keeps only the live + previous
     generations (readers that resolved just before a commit still have
     their files; older generations are swept)."""
     import os
     import time
 
+    from msgraphdatapipelines_spark import genstore as _gs
     from msgraphdatapipelines_spark import sinks
     from msgraphdatapipelines_spark.queries import dedup as QD
 
     QD2, docs, base, rest, root = _prefix_fixture(spark, tmp_path, "pytest-ttl")
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, root)
 
     # stale lease: mtime pushed past the TTL
     stale = f"{root}/_compacting.deadbeef"
-    QD._marker_commit(fs, hpath, stale)
-    os.utime(stale, (time.time() - 2 * QD._LEASE_TTL_S,) * 2)
+    _gs.commit_file(fs, hpath, stale)
+    os.utime(stale, (time.time() - 2 * _gs.LEASE_TTL_S,) * 2)
     t0 = time.monotonic()
-    QD._wait_leases_clear(fs, hpath, root, timeout_s=5)
+    _gs.wait_leases_clear(fs, hpath, root, timeout_s=5)
     assert time.monotonic() - t0 < 2, "stale lease wedged the waiter"
     # and appends proceed under it
     QD.prefix_index_append(spark, root, rest, bid="ttl1")
@@ -2812,23 +2811,23 @@ def test_compact_lease_heartbeat_outlives_ttl(spark, tmp_path, monkeypatch):
     a hook past it, and assert the lease is still live from inside."""
     import time
 
+    from msgraphdatapipelines_spark import genstore as _gs
     from msgraphdatapipelines_spark import sinks
     from msgraphdatapipelines_spark.queries import dedup as QD
 
     QD2, docs, base, rest, root = _prefix_fixture(spark, tmp_path, "pytest-hb")
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    monkeypatch.setattr(QD, "_LEASE_TTL_S", 2.0)
+    fs, hpath = sinks._fs_for(spark, root)
+    monkeypatch.setattr(_gs, "LEASE_TTL_S", 2.0)
     seen = {}
 
     def hold_past_ttl():
         time.sleep(5.0)  # 2.5× the shrunken TTL
-        seen["live"] = QD._live_leases(fs, hpath, root)
+        seen["live"] = _gs.live_leases(fs, hpath, root)
 
     stats = QD.prefix_index_compact(spark, root, _test_hook_after_list=hold_past_ttl)
     assert stats["docs"] > 0
     assert seen["live"], "lease went stale mid-compact despite the heartbeat"
-    assert QD._live_leases(fs, hpath, root) == [], "lease not released after commit"
+    assert _gs.live_leases(fs, hpath, root) == [], "lease not released after commit"
 
 
 @pytest.mark.heavy
@@ -2928,8 +2927,7 @@ def test_compaction_lease_two_phase_yields_to_probe_window_racer(spark, tmp_path
     from msgraphdatapipelines_spark import sinks
 
     root = str(tmp_path / "store")
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, root)
     fs.mkdirs(hpath(root))
 
     real_live = _gs.live_leases
@@ -2943,7 +2941,7 @@ def test_compaction_lease_two_phase_yields_to_probe_window_racer(spark, tmp_path
             return []
         return real_live(fs_, hpath_, root_, ttl_s=ttl_s)
 
-    _gs.marker_commit(fs, hpath, racer)  # the racer wins the window
+    _gs.commit_file(fs, hpath, racer)  # the racer wins the window
     orig = _gs.live_leases
     _gs.live_leases = interleaved
     try:
@@ -3018,14 +3016,13 @@ def test_genstore_commit_on_copy_rename_fs(spark, tmp_path):
     the marker is written strictly AFTER the stage copy completes), the
     half-copied dir must be invisible to committed_gens/current_gen,
     and a clean re-run must yield exactly one NEW committed generation.
-    Separately: marker_commit's own copy+delete crash window leaves the
+    Separately: commit_file's own copy+delete crash window leaves the
     marker COMMITTED (dest created before source delete) with only tmp
     debris — commit-or-nothing holds in every window."""
     from msgraphdatapipelines_spark import genstore as _gs
     from msgraphdatapipelines_spark import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, str(tmp_path))
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, str(tmp_path))
     root = str(tmp_path / "store")
     fs.mkdirs(hpath(root))
 
@@ -3069,7 +3066,7 @@ def test_genstore_commit_on_copy_rename_fs(spark, tmp_path):
     )
     assert names == ["a.parquet", "b.parquet", "d.parquet"]
 
-    # 3. marker_commit on copy-rename with a crash BETWEEN copy and
+    # 3. commit_file on copy-rename with a crash BETWEEN copy and
     #    delete: the marker is already committed (dest-first), tmp
     #    debris only — simulate by failing the delete
     class _NoDeleteFS(_CopyRenameFS):
@@ -3078,7 +3075,7 @@ def test_genstore_commit_on_copy_rename_fs(spark, tmp_path):
 
     nd = _NoDeleteFS(fs, hpath)
     with pytest.raises(OSError, match="before tmp delete"):
-        _gs.marker_commit(nd, hpath, f"{root}/{gname2}/_extra_marker")
+        _gs.commit_file(nd, hpath, f"{root}/{gname2}/_extra_marker")
     assert fs.exists(hpath(f"{root}/{gname2}/_extra_marker")), (
         "marker must be committed before the source delete"
     )
@@ -3104,15 +3101,14 @@ def test_write_snapshot_claim_on_copy_rename_fs(spark, tmp_path, monkeypatch):
     loser detection needs real rename semantics)."""
     from msgraphdatapipelines_spark import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, str(tmp_path))
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, str(tmp_path))
     root = str(tmp_path / "snap")
     real_fs_for = sinks._fs_for
 
     def with_proxy(proxy):
         def patched(spark_, path_):
-            _, p, j = real_fs_for(spark_, path_)
-            return proxy, p, j
+            _, hp = real_fs_for(spark_, path_)
+            return proxy, hp
 
         return patched
 
@@ -3120,7 +3116,7 @@ def test_write_snapshot_claim_on_copy_rename_fs(spark, tmp_path, monkeypatch):
     # single-publisher on copy-rename semantics: publish + serve + flip
     # (the marker flip is itself a copy+delete: dest-first, so a crash
     # between the two leaves the marker COMMITTED — same argument as
-    # genstore.marker_commit)
+    # genstore.commit_file)
     monkeypatch.setattr(sinks, "_fs_for", with_proxy(_CopyRenameFS(fs, hpath)))
     assert sinks.write_snapshot(df, root) == 1
     assert sinks.write_snapshot(df, root) == 2
@@ -3179,14 +3175,13 @@ def test_lexicon_generation_commit_on_copy_rename_fs(spark, tmp_path, monkeypatc
     root = QT.lexicon_root(sf, variant="cr_posture")
     QT.lexicon_append_batch(spark, root, docs.filter(F.col("doc_id") < 150), bid=0)
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, root)
     real_fs_for = sinks._fs_for
 
     def with_proxy(proxy):
         def patched(spark_, path_):
-            _, p, j = real_fs_for(spark_, path_)
-            return proxy, p, j
+            _, hp = real_fs_for(spark_, path_)
+            return proxy, hp
 
         return patched
 
@@ -3223,7 +3218,7 @@ def test_lexicon_generation_commit_on_copy_rename_fs(spark, tmp_path, monkeypatc
     )
 
     # the crashed compactor's lease is orphaned — stale it out, re-run
-    monkeypatch.setattr(QT, "_LEASE_TTL_S", 0.5)
+    monkeypatch.setattr(_gs, "LEASE_TTL_S", 0.5)
     import time as _time
 
     _time.sleep(0.8)
@@ -3392,8 +3387,7 @@ def test_lexicon_postings_zonemap_prunes_files(spark, sf_dir, tmp_path):
     from msgraphdatapipelines_spark import genstore as _gs
     from msgraphdatapipelines_spark import sinks
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    gen = _gs.current_gen(fs, jvm.org.apache.hadoop.fs.Path, root)
+    gen = _gs.current_gen(*sinks._fs_for(spark, root), root)
     n_files = len(sinks._zonemap_rows_cached(spark, f"{gen}/postings"))
     assert n_files > 1, "layout did not produce multiple postings files"
 

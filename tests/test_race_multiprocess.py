@@ -566,14 +566,13 @@ def test_sigkill_mid_compact_old_generation_stays_live(tmp_path, spark, monkeypa
     assert _served() == before and len(before) > 0
     # (c) the orphaned lease blocks a sibling compactor (documented TTL
     # behavior: live_leases at the default TTL still counts it)
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
-    assert len(QD._live_leases(fs, hpath, root)) == 1
+    fs, hpath = sinks._fs_for(spark, root)
+    assert len(_gs.live_leases(fs, hpath, root)) == 1
     with pytest.raises(RuntimeError, match="compact already in progress"):
         QD.prefix_index_compact(spark, root)
     # the SIGKILL'd process renews nothing: shrink the TTL and the lease
     # is stale — the re-run folds the pending batch cleanly
-    monkeypatch.setattr(QD, "_LEASE_TTL_S", 0.5)
+    monkeypatch.setattr(_gs, "LEASE_TTL_S", 0.5)
     _time.sleep(0.8)
     stats = QD.prefix_index_compact(spark, root)
     assert stats["batches_folded"] == 1
@@ -828,8 +827,7 @@ def test_sigkill_mid_compact_lexicon_old_generation_stays_live(
         spark, str(sf), docs=docs.filter(F.col("doc_id") < 150)
     )
     QT.lexicon_append_batch(spark, root, docs.filter(F.col("doc_id") >= 150), bid=1)
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, root)
     gen_before = _gs.current_gen(fs, hpath, root)
     meta_before = QT.read_lexicon(spark, root)[3]
     postings_before = sorted(
@@ -869,12 +867,12 @@ def test_sigkill_mid_compact_lexicon_old_generation_stays_live(
         == postings_before
     )
     # (b) the orphaned lease blocks a sibling compactor until the TTL
-    assert len(_gs.live_leases(fs, hpath, root, ttl_s=QT._LEASE_TTL_S)) == 1
+    assert len(_gs.live_leases(fs, hpath, root)) == 1
     with pytest.raises(RuntimeError, match="compact already in progress"):
         QT.lexicon_compact(spark, root)
     # (c) no renewals from the dead process: shrink the TTL, lease goes
     # stale, the re-run folds the pending batch into ONE new generation
-    monkeypatch.setattr(QT, "_LEASE_TTL_S", 0.5)
+    monkeypatch.setattr(_gs, "LEASE_TTL_S", 0.5)
     _time.sleep(0.8)
     meta = QT.lexicon_compact(spark, root)
     assert meta["n_batches"] == 2

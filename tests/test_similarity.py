@@ -1359,8 +1359,7 @@ def test_ann_rebalance_crash_before_commit_keeps_old_serving(spark, sf_dir, tmp_
     assert len(stage_debris) == 1, "crash must leave only unreferenced stage debris"
     from msgraphdatapipelines_spark import genstore as _gs
 
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, root)
     assert _gs.live_leases(fs, hpath, root) == [], "crashed rebalance left its lease"
 
     # the re-run sweeps the debris and completes normally
@@ -1417,8 +1416,7 @@ def test_ann_rebalance_crash_windows_never_mix_quantizers(spark, sf_dir, tmp_pat
 
     # window (b): the mid-swap crash — batches renamed aside, stage not
     # yet renamed in.  recover_batches completes the swap.
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, root)
     fs.rename(hpath(f"{root}/batches"), hpath(f"{root}/batches.old.simcrash"))
     assert recover_batches(spark, root) is True
     assert os.path.exists(f"{root}/batches/_MODELS")
@@ -1870,14 +1868,13 @@ def test_ann_swap_protocol_on_copy_rename_fs(spark, sf_dir, tmp_path, monkeypatc
     from tests.test_operators import _CopyRenameFS
 
     my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
-    fs, _, jvm = sinks._fs_for(spark, root)
-    hpath = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = sinks._fs_for(spark, root)
     real_fs_for = sinks._fs_for
 
     def with_proxy(proxy):
         def patched(spark_, path_):
-            _, p, j = real_fs_for(spark_, path_)
-            return proxy, p, j
+            _, hp = real_fs_for(spark_, path_)
+            return proxy, hp
 
         return patched
 
