@@ -18,14 +18,16 @@ Correctness is structural, not temporal:
   — changes the plan text and therefore the key.  Expression IDs
   (``#123``) are session-assigned noise and are stripped before
   hashing.
-- The fingerprint also hashes every input file's (name, size, mtime)
-  from the Hadoop listing (see :func:`_input_signature`).  Touching an input
-  changes the key, so a stale entry is never SERVED; it is merely
-  stranded, and the ``msgdp_rc_`` prefix is registered with
+- The fingerprint also hashes the identity of every input file (see
+  :func:`_input_signature`): :func:`file_identity` for a local input,
+  (name, size, mtime) from the Hadoop listing for a remote one.
+  Touching an input changes the key, so a stale entry is never SERVED;
+  it is merely stranded, and the ``msgdp_rc_`` prefix is registered with
   :func:`~msgraphdatapipelines_spark.sinks.vacuum_standing_artifacts`
   so the GC sweeps it.
-- Publication is crash-safe in the house style: materialize under the
-  final ``data`` directory, then commit with an atomically-renamed
+- Publication is crash-safe in the house style: materialize under a
+  private ``data.<uuid>`` stage, publish it as ``data`` with
+  ``genstore.commit_dir`` (first writer wins), then commit the
   ``_rc_ready`` marker; a reader that sees no marker rebuilds.
 
 Scale: a hit reads the (result-sized) artifact — zero corpus-sized
@@ -213,7 +215,7 @@ def serve_cached(
     import json
     import uuid
 
-    from .genstore import commit_file
+    from .genstore import commit_dir, commit_file
     from .sinks import _fs_for
 
     fp = plan_fingerprint(spark, df, inputs)
@@ -222,31 +224,14 @@ def serve_cached(
     data = os.path.join(root, "data")
     fs, hpath = _fs_for(spark, root)
     if not fs.exists(hpath(marker)):
-        # Concurrent-builder safety: never write into the final `data`
-        # directory.  Each builder materializes under a private
-        # data.<uuid> staging dir, then RENAMES it to `data` — rename is
-        # atomic per directory entry, so a reader that already saw the
-        # marker can never observe a half-overwritten artifact.  Exactly
-        # one racer's rename lands; losers see rename fail (or `data`
-        # already present), delete their staging copy, and fall through
-        # to the hit path.
+        # never write into `data` itself: a reader that already saw the
+        # marker must not observe a racer's half-overwritten artifact
         staging = f"{data}.{uuid.uuid4().hex[:12]}"
         df.write.mode("overwrite").parquet(staging)
-        if fs.exists(hpath(data)) or not fs.rename(hpath(staging), hpath(data)):
-            fs.delete(hpath(staging), True)  # lost the race: another builder won
-        # Hadoop rename() with an existing dst DIRECTORY nests src inside
-        # it instead of failing (HDFS semantics) — if a racer slipped
-        # between our exists-check and rename, evict the stray child so
-        # the winner's artifact stays byte-identical.
-        stray = hpath(os.path.join(data, os.path.basename(staging)))
-        if fs.exists(stray):
-            fs.delete(stray, True)
-        # entry provenance (r15): the input paths travel WITH the entry
-        # so result_cache_forget can target every entry derived from an
-        # erased table immediately — without this, erased content sits
-        # inside stranded entries until the TTL sweep (the fingerprint
-        # is a hash; nothing else records what an entry was built from).
-        # A racer commits the same bytes, so either copy is correct.
+        commit_dir(fs, hpath, staging, data)
+        # entry provenance: the fingerprint is a hash, so only this
+        # record lets result_cache_forget find the entries an erased
+        # input fed (a racer commits the same bytes)
         meta = {"inputs": sorted(_canon_input(spark, p) for p in inputs)}
         meta_p = os.path.join(root, "_rc_meta.json")
         commit_file(fs, hpath, meta_p, json.dumps(meta).encode())

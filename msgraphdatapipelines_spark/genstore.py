@@ -59,14 +59,14 @@ the audit has one place to look):
   per-batch idempotent overwrites of independent cell tables; merge
   happens at read time (union of sketches ≡ sketch of union), so there
   is no multi-table consistency to protect.
-- **result cache** (``cache.serve_cached``): single-file staged-rename
-  entries keyed by plan+snapshot fingerprint; an entry is either fully
-  present or absent, and a miss just recomputes — per-entry atomicity
-  is the whole requirement.
+- **result cache** (``cache.serve_cached``): per plan+inputs
+  fingerprint, a ``data`` directory (:func:`commit_dir`) committed by
+  the ``_rc_ready`` marker; an entry is either fully present or absent,
+  and a miss just recomputes — per-entry atomicity is the whole need.
 
-The tiny-file primitives live here too, and every package module
-outside ``sources/rest.py`` uses them instead of its own
-``create``/``rename``/``readAllBytes``:
+The tiny-file and directory-commit primitives live here too; every
+package module outside ``sources/rest.py`` uses them instead of its own
+``create``/``readAllBytes`` and first-writer-wins ``rename``:
 
 - :func:`put_file` — create, write, close; for files inside a stage a
   later rename commits (the snapshot claim sentinel ``_PUB_*``, the
@@ -76,6 +76,9 @@ outside ``sources/rest.py`` uses them instead of its own
   rename (``replace=True`` deletes the old file first); markers,
   pointers and JSON sidecars (``_commit``, ``_compacting.*``,
   ``_LATEST.v{N}``, ``_rc_meta.json``, ``models*.json``, ``_MODELS``);
+- :func:`commit_dir` — one first-writer-wins rename of a staged
+  directory (result-cache ``data``, batch halves, ANN summaries, the
+  bucketed store, every generation via :func:`commit_generation`);
 - :func:`read_file` — one ``open``, None when the file is absent;
 - :func:`build_once` — the "no marker: build, then commit the marker"
   gate of every build-once rehearsal artifact and standing layout.
@@ -127,6 +130,24 @@ def commit_file(fs, hp, path: str, data: bytes = b"ready", replace: bool = False
     if not landed:
         fs.delete(hp(tmp), False)
     return landed
+
+
+def commit_dir(fs, hp, stage: str, dst: str) -> bool:
+    """Publish the staged directory ``stage`` as ``dst`` by one rename
+    that runs only when ``dst`` is absent (first writer wins); returns
+    whether ours landed and deletes ``stage`` when it did not.  Hadoop's
+    rename onto a directory a racer just published nests ``stage``
+    inside it, where a recursive read counts it twice: that copy is
+    deleted.  A ``rename`` exception propagates with its debris kept."""
+    landed = not fs.exists(hp(dst)) and fs.rename(hp(stage), hp(dst))
+    if not landed:
+        fs.delete(hp(stage), True)
+        return False
+    nested = hp(f"{dst}/{stage.rsplit('/', 1)[-1]}")
+    if fs.exists(nested):
+        fs.delete(nested, True)
+        return False
+    return True
 
 
 def read_file(fs, hp, path: str) -> bytes | None:
@@ -308,13 +329,16 @@ def compaction_lease(fs, hpath, root: str, ttl_s: float | None = None):
 
 def commit_generation(fs, hpath, root: str, stage: str, gen_name: str) -> str:
     """Publish a fully-staged directory as a committed generation: one
-    directory rename + one ``_commit`` marker.  Returns the generation
-    path.  The caller owns losing gracefully: if the rename fails (a
-    racer took the name — impossible with uid suffixes — or the FS
-    denies it), the staging dir is deleted and the error propagates."""
+    :func:`commit_dir` onto ``root/gen_name``, the ``_commit`` marker,
+    then GC of all but the two newest committed generations (a reader
+    that resolved the previous one just before the commit still has its
+    files).  Returns the generation path.  When the rename did not land
+    (the FS denied it; uid-suffixed names never collide) nothing is
+    committed and ``OSError`` is raised."""
     gen = f"{root}/{gen_name}"
-    if not fs.rename(hpath(stage), hpath(gen)):
-        fs.delete(hpath(stage), True)
+    if not commit_dir(fs, hpath, stage, gen):
         raise OSError(f"could not publish staged generation onto {gen}")
     commit_file(fs, hpath, f"{gen}/_commit")
+    for g in committed_gens(fs, hpath, root)[:-2]:
+        fs.delete(hpath(f"{root}/{g}"), True)
     return gen

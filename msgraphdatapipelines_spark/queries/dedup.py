@@ -795,10 +795,10 @@ def _write_gen_tables(spark: SparkSession, grams: DataFrame, threshold: float, s
 def prefix_index_build(
     spark: SparkSession, root: str, docs: DataFrame, n: int = 3, threshold: float = 0.5
 ) -> str:
-    """Staged, atomically-committed base build (the cache.serve_cached
-    staging discipline): tables are written under a uuid staging root,
-    renamed into a gen-000000 directory, and committed by the ``_commit``
-    marker — two concurrent builders each commit an identical generation
+    """Staged, atomically-committed base build: tables are written under
+    a uuid staging root and published as a gen-000000 directory by
+    ``genstore.commit_generation`` (``OSError`` when the rename does not
+    land) — two concurrent builders each commit an identical generation
     and the max name wins deterministically; neither can interleave
     overwrites into the other's tables.  Returns the live gen path."""
     import uuid
@@ -813,9 +813,9 @@ def prefix_index_build(
         if _gs.committed_gens(fs, hpath, root):
             fs.delete(hpath(stage), True)  # race loser: discard staging
         else:
-            gen = f"{root}/gen-000000-{uuid.uuid4().hex[:8]}"
-            fs.rename(hpath(stage), hpath(gen))
-            _gs.commit_file(fs, hpath, f"{gen}/_commit")
+            _gs.commit_generation(
+                fs, hpath, root, stage, f"gen-000000-{uuid.uuid4().hex[:8]}"
+            )
     return prefix_index_current_gen(spark, root)
 
 
@@ -861,18 +861,18 @@ def _publish_batch(
     bid: str,
 ) -> None:
     """The publish step of prefix_index_append in isolation: stage the
-    batch's tables under ``gen``'s frozen vocab and rename them into the
-    batch subdirs (exists-wins, so replays/racers no-op).  No lease wait,
-    no generation re-check — callers (and the compact race tests, which
-    use this to model an appender paused before its post-check) own
-    those."""
+    batch's tables under ``gen``'s frozen vocab and publish them as the
+    batch subdirs (``genstore.commit_dir``: replays/racers no-op).  No
+    lease wait, no generation re-check — callers (and the compact race
+    tests, which use this to model an appender paused before its
+    post-check) own those."""
     import uuid
 
-    dst_sets = hpath(f"{gen}/sets/batch_{bid}")
-    dst_pref = hpath(f"{gen}/prefixes/batch_{bid}")
+    dst_sets = f"{gen}/sets/batch_{bid}"
+    dst_pref = f"{gen}/prefixes/batch_{bid}"
     if fs.exists(hpath(f"{gen}/_folded/{bid}")):
         return  # compacted into this generation's base already
-    if fs.exists(dst_sets) and fs.exists(dst_pref):
+    if fs.exists(hpath(dst_sets)) and fs.exists(hpath(dst_pref)):
         return  # replay of a fully-published batch
     vocab = spark.read.parquet(f"{gen}/vocab")
     sets, prefixes = D.set_similarity_prefix_tables(
@@ -883,10 +883,9 @@ def _publish_batch(
     prefixes.repartition(F.col("__pg")).sortWithinPartitions("__pg").write.parquet(
         f"{stage}/prefixes"
     )
-    if fs.exists(dst_sets) or not fs.rename(hpath(f"{stage}/sets"), dst_sets):
-        pass  # racer/replayer already published this half
-    if fs.exists(dst_pref) or not fs.rename(hpath(f"{stage}/prefixes"), dst_pref):
-        pass
+    # per half, the first writer wins (a racer or an earlier replay)
+    _gs.commit_dir(fs, hpath, f"{stage}/sets", dst_sets)
+    _gs.commit_dir(fs, hpath, f"{stage}/prefixes", dst_pref)
     fs.delete(hpath(stage), True)
 
 
@@ -1198,13 +1197,13 @@ def prefix_index_compact(
     re-tokenization; the sets table already holds every doc's gram
     multiset — with the batch subdirectories folded into the base.
 
-    r12 protocol (closes the r11 ADVICE hazards):
+    Protocol:
 
     - The new tables stage under a uuid root and become live via ONE
-      directory rename + ONE ``_commit`` marker rename — never three
-      sequential per-table swaps, so no reader or crash can observe a
-      new-order vocab over old-order prefixes, and concurrent readers
-      keep the previous generation (generations are immutable).
+      ``genstore.commit_generation`` (directory rename + ``_commit``
+      marker), so no reader or crash can observe a new-order vocab over
+      old-order prefixes, and concurrent readers keep the previous
+      generation (generations are immutable).
     - Folded batch ids are recorded in the new generation's ``_folded``
       manifest (carrying forward the old generation's), so a streaming
       checkpoint REPLAY of an already-folded micro-batch is a no-op
@@ -1307,13 +1306,9 @@ def prefix_index_compact(
             )
         if _test_hook_before_commit is not None:
             _test_hook_before_commit()
-        new_gen = f"{root}/gen-{seq + 1:06d}-{uuid.uuid4().hex[:8]}"
-        fs.rename(hpath(stage), hpath(new_gen))
-        _gs.commit_file(fs, hpath, f"{new_gen}/_commit")
-        # GC: keep the live + previous generations (a reader that resolved
-        # the old generation just before commit still has its files)
-        for g in _gs.committed_gens(fs, hpath, root)[:-2]:
-            fs.delete(hpath(f"{root}/{g}"), True)
+        _gs.commit_generation(
+            fs, hpath, root, stage, f"gen-{seq + 1:06d}-{uuid.uuid4().hex[:8]}"
+        )
         return {"docs": int(n_docs), "batches_folded": len(batches)}
 
 def _canonical_by_quality_oracle(threshold: float = 0.5) -> str:

@@ -2463,8 +2463,6 @@ def _load_label_lists(
     index-sized agg, the same work compact would have done) and
     republishes staged at the version-exact path, rather than ever
     falling back across versions."""
-    import uuid
-
     from .. import sinks
 
     root = standing_index_root(sf_dir)
@@ -2482,17 +2480,29 @@ def _load_label_lists(
     path = (
         f"{root}/label_lists" if version == 1 else f"{root}/label_lists.v{version}"
     )
-    if not fs.exists(hpath(path)):
-        ll = (
-            sinks.read_snapshot(spark, f"{root}/snapshot", version=version)
-            .groupBy("label", "cent")
-            .agg(F.count("*").alias("n"))
-        )
-        stage = f"{path}.stage.{uuid.uuid4().hex[:8]}"
-        ll.write.parquet(stage)
-        if fs.exists(hpath(path)) or not fs.rename(hpath(stage), hpath(path)):
-            fs.delete(hpath(stage), True)  # racer recovered first
+    _ensure_summary(
+        fs,
+        hpath,
+        path,
+        lambda: sinks.read_snapshot(spark, f"{root}/snapshot", version=version)
+        .groupBy("label", "cent")
+        .agg(F.count("*").alias("n")),
+    )
     return spark.read.parquet(path)
+
+
+def _ensure_summary(fs, hpath, path: str, derive) -> None:
+    """Derive-if-missing: when ``path`` is absent, stage ``derive()``
+    beside it and publish it (a racer that recovered first wins)."""
+    import uuid
+
+    from .. import genstore
+
+    if fs.exists(hpath(path)):
+        return
+    stage = f"{path}.stage.{uuid.uuid4().hex[:8]}"
+    derive().write.parquet(stage)
+    genstore.commit_dir(fs, hpath, stage, path)
 
 
 def _load_range_lists(
@@ -2504,8 +2514,6 @@ def _load_range_lists(
     and the same derive-if-missing recovery: one index-sized agg over the
     RESOLVED snapshot, republished staged, never a cross-version
     fallback (a retrained index has a different cent space)."""
-    import uuid
-
     from .. import sinks
 
     root = standing_index_root(sf_dir)
@@ -2520,27 +2528,21 @@ def _load_range_lists(
         df_local = spark.createDataFrame(
             [tuple(d.values()) for d in st["range_rows"]], st["range_schema"]
         )
-        if not fs.exists(hpath(path)):
-            # repair-on-read survives the cache (label-loader symmetry)
-            stage = f"{path}.stage.{uuid.uuid4().hex[:8]}"
-            df_local.coalesce(1).write.parquet(stage)
-            if fs.exists(hpath(path)) or not fs.rename(hpath(stage), hpath(path)):
-                fs.delete(hpath(stage), True)  # racer repaired first
+        # repair-on-read survives the cache (label-loader symmetry)
+        _ensure_summary(fs, hpath, path, lambda: df_local.coalesce(1))
         return df_local
-    if not fs.exists(hpath(path)):
-        rl = (
-            sinks.read_snapshot(spark, f"{root}/snapshot", version=version)
-            .groupBy("cent")
-            .agg(
-                F.min("cid").alias("min_id"),
-                F.max("cid").alias("max_id"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-        stage = f"{path}.stage.{uuid.uuid4().hex[:8]}"
-        rl.write.parquet(stage)
-        if fs.exists(hpath(path)) or not fs.rename(hpath(stage), hpath(path)):
-            fs.delete(hpath(stage), True)  # racer recovered first
+    _ensure_summary(
+        fs,
+        hpath,
+        path,
+        lambda: sinks.read_snapshot(spark, f"{root}/snapshot", version=version)
+        .groupBy("cent")
+        .agg(
+            F.min("cid").alias("min_id"),
+            F.max("cid").alias("max_id"),
+            F.count(F.lit(1)).alias("n"),
+        ),
+    )
     df = spark.read.parquet(path)
     st["range_rows"] = [r.asDict() for r in df.collect()]
     st["range_schema"] = df.schema

@@ -1459,23 +1459,23 @@ def lexicon_append_batch(
     ``bid`` (r13) names the batch deterministically (e.g. the streaming
     micro-batch id), making the append IDEMPOTENT under checkpoint
     replay: a fully-published batch id no-ops.  Both tables stage under
-    one uuid dir and rename into place half-by-half (exists-wins) — a
-    crash between the renames leaves a HALF-published batch that
+    one uuid dir and publish half-by-half (``genstore.commit_dir``) — a
+    crash between the halves leaves a HALF-published batch that
     ``lexicon_compact`` skips (full pairs only) and a same-bid re-append
-    completes; the torn-directory window of the old direct
-    ``mode("overwrite")`` writes is gone.  Append-only corpus contract:
+    completes.  Append-only corpus contract:
     a re-ingested doc_id is the caller's upsert problem (route through
     the SCD sinks), not the lexicon's."""
     import uuid
 
+    from .. import genstore as _gs
     from .. import sinks
 
     fs, hpath = sinks._fs_for(spark, root)
     existing = _lex_batch_ids(spark, root)
     k = bid if bid is not None else ((existing[-1] + 1) if existing else 0)
-    dst_tf = hpath(f"{root}/batches/tf/batch_id={k}")
-    dst_dl = hpath(f"{root}/batches/dl/batch_id={k}")
-    if fs.exists(dst_tf) and fs.exists(dst_dl):
+    dst_tf = f"{root}/batches/tf/batch_id={k}"
+    dst_dl = f"{root}/batches/dl/batch_id={k}"
+    if fs.exists(hpath(dst_tf)) and fs.exists(hpath(dst_dl)):
         return k  # replay of a fully-published batch
     ws = F.filter(F.split("text", " "), lambda w: w != "")
     toks = docs.select("doc_id", F.explode(ws).alias("tok"))
@@ -1488,10 +1488,9 @@ def lexicon_append_batch(
     )
     fs.mkdirs(hpath(f"{root}/batches/tf"))
     fs.mkdirs(hpath(f"{root}/batches/dl"))
-    if fs.exists(dst_tf) or not fs.rename(hpath(f"{stage}/tf"), dst_tf):
-        pass  # racer/replayer already published this half
-    if fs.exists(dst_dl) or not fs.rename(hpath(f"{stage}/dl"), dst_dl):
-        pass
+    # per half, the first writer wins (a racer or an earlier replay)
+    _gs.commit_dir(fs, hpath, f"{stage}/tf", dst_tf)
+    _gs.commit_dir(fs, hpath, f"{stage}/dl", dst_dl)
     fs.delete(hpath(stage), True)
     return k
 
@@ -1515,11 +1514,10 @@ def lexicon_compact(
     sorted within partitions (probe ``tok IN`` pushdown skips row groups
     — the parquet analog of reading only the queried postings lists),
     docstats, termstats and the exact-integer meta {n_docs, sum_dl,
-    n_batches} all staged under one uuid dir and committed by ONE
-    ``_commit`` marker rename.  A crash anywhere mid-compact leaves the
-    previous generation fully live; a reader can never observe postings
-    and meta from different rebuilds (the torn-commit window the old
-    three-snapshot-flips-then-meta sequence left open).
+    n_batches} all staged under one uuid dir and committed by
+    ``genstore.commit_generation``.  A crash anywhere mid-compact leaves
+    the previous generation fully live; a reader can never observe
+    postings and meta from different rebuilds.
 
     The generation's ``_folded`` manifest records the folded batch ids:
     a compact whose visible batch set equals the live generation's
@@ -1602,10 +1600,6 @@ def lexicon_compact(
         _gs.commit_generation(
             fs, hpath, root, stage, _gs.next_gen_name(fs, hpath, root)
         )
-        # GC: keep live + previous generations (a reader that resolved the
-        # old generation just before commit still has its files)
-        for g in _gs.committed_gens(fs, hpath, root)[:-2]:
-            fs.delete(hpath(f"{root}/{g}"), True)
         # non-authoritative convenience copy at the root: build-once
         # observability (tests witness its mtime) and ad-hoc inspection;
         # readers resolve the GENERATION's meta, never this file

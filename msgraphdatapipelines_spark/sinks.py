@@ -446,21 +446,17 @@ def ensure_bucketed_table(
     build,
     sort_col: str | None = None,
 ) -> None:
-    """Race-safe build-at-most-once BUCKETED store (r11): the data under
-    ``path`` is built ONCE (staged under a session-unique dir, renamed
-    into place, committed with a ``_bucketed_ready`` marker) and every
-    session — including the loser of a concurrent-build race —
-    REGISTERS the existing files instead of rewriting them (``CREATE
-    TABLE … CLUSTERED BY … LOCATION``; Spark derives bucket ids from the
-    saveAsTable file-name convention, which the rename preserves).
-
-    This fixes two defects of the naive rebuild-per-session flow: a
-    concurrent session could overwrite files another session was mid-scan
-    on (FileNotFoundException), and the cross-session amortization the
-    bucketed layout exists for was silently lost."""
+    """Race-safe build-at-most-once BUCKETED store: the data under
+    ``path`` is built ONCE (staged under a session-unique dir, published
+    by ``genstore.commit_dir``, committed with a ``_bucketed_ready``
+    marker) and every session — including the loser of a concurrent-build
+    race — REGISTERS the existing files instead of rewriting them, so no
+    session overwrites files another is scanning (``CREATE TABLE …
+    CLUSTERED BY … LOCATION``; Spark derives bucket ids from the
+    saveAsTable file-name convention, which the rename preserves)."""
     import uuid
 
-    from .genstore import build_once
+    from .genstore import build_once, commit_dir
 
     def _build() -> None:
         stage = f"{path}.stage.{uuid.uuid4().hex[:12]}"
@@ -470,9 +466,7 @@ def ensure_bucketed_table(
             w = w.sortBy(sort_col)
         w.option("path", stage).saveAsTable(tmp_name, format="parquet")
         spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")  # external: files stay
-        fs, hp = _fs_for(spark, path)
-        if fs.exists(hp(path)) or not fs.rename(hp(stage), hp(path)):
-            fs.delete(hp(stage), True)  # lost the race; winner's files serve
+        commit_dir(*_fs_for(spark, path), stage, path)  # on a loss the winner serves
 
     build_once(spark, f"{path}/_bucketed_ready", _build)
     if not spark.catalog.tableExists(table):

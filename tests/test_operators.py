@@ -3087,6 +3087,126 @@ def test_genstore_commit_on_copy_rename_fs(spark, tmp_path):
     assert len(tmps) == 1  # harmless debris, never mistaken for a marker
 
 
+class _LateWinnerFS:
+    """Hadoop-FS proxy for a first-writer-wins race lost late: ``exists``
+    answers False for ``dst``, where a winner's directory already
+    stands, until a rename onto ``dst`` is attempted (the winner's
+    rename landed between our check and ours).  The real rename then
+    moves the stage INSIDE the winner's directory."""
+
+    def __init__(self, fs, dst):
+        self._fs = fs
+        self._dst = dst
+        self.renamed = False
+
+    def exists(self, path):
+        if not self.renamed and str(path) == self._dst:
+            return False
+        return self._fs.exists(path)
+
+    def rename(self, src, dst):
+        self.renamed = self.renamed or str(dst) == self._dst
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def test_commit_dir_first_writer_wins_and_evicts_a_nested_copy(spark, tmp_path):
+    """genstore.commit_dir: ours lands onto an absent dst; a plain loss
+    deletes the stage; a loss whose rename Hadoop nested inside the
+    winner's dst evicts the nested copy, so dst holds only the winner's
+    files."""
+    import os
+
+    from msgraphdatapipelines_spark import genstore as _gs
+    from msgraphdatapipelines_spark import sinks
+
+    fs, hpath = sinks._fs_for(spark, str(tmp_path))
+
+    def stage(name: str) -> str:
+        d = str(tmp_path / name)
+        _gs.put_file(fs, hpath, f"{d}/{name}.parquet", name.encode())
+        return d
+
+    def files(d: str) -> list[str]:
+        return sorted(n for n in os.listdir(d) if not n.startswith("."))
+
+    dst = str(tmp_path / "data")
+    assert _gs.commit_dir(fs, hpath, stage("winner"), dst)
+    assert files(dst) == ["winner.parquet"]
+    assert not _gs.commit_dir(fs, hpath, stage("plain_loser"), dst)
+    assert not os.path.exists(tmp_path / "plain_loser")
+    late = _LateWinnerFS(fs, dst)
+    assert not _gs.commit_dir(late, hpath, stage("late_loser"), dst)
+    assert late.renamed, "the proxy must have let the rename run"
+    assert files(dst) == ["winner.parquet"], "nested loser copy left in dst"
+    assert not os.path.exists(tmp_path / "late_loser")
+
+
+def test_publish_batch_lost_late_adds_no_rows(spark, tmp_path):
+    """A prefix-index batch publish that loses the race after its exists
+    check must not leave its copy nested under the winner's
+    ``sets/batch_<bid>``: read_prefix_index reads ``sets`` recursively,
+    so a nested copy would count the batch twice."""
+    import os
+
+    from msgraphdatapipelines_spark import sinks
+
+    QD, docs, base, rest, root = _prefix_fixture(spark, tmp_path, "pytest-nest")
+    fs, hpath = sinks._fs_for(spark, root)
+    gen = QD.prefix_index_current_gen(spark, root)
+    QD._publish_batch(spark, fs, hpath, root, gen, rest, 3, 0.5, "b1")
+    n_clean = QD.read_prefix_index(spark, root)[0].count()
+    late = _LateWinnerFS(fs, f"{gen}/sets/batch_b1")
+    QD._publish_batch(spark, late, hpath, root, gen, rest, 3, 0.5, "b1")
+    assert late.renamed, "the proxy must have let the rename run"
+    assert QD.read_prefix_index(spark, root)[0].count() == n_clean
+    assert [d for d in os.listdir(root) if d.startswith("stage.")] == []
+
+
+def test_prefix_index_build_raises_when_the_generation_rename_fails(
+    spark, tmp_path, monkeypatch
+):
+    """When the stage's rename onto ``gen-*`` does not land, the build
+    raises OSError and commits nothing: a ``_commit`` marker written
+    after a failed rename would create an empty live generation that
+    every later build takes as built."""
+    from msgraphdatapipelines_spark import genstore as _gs
+    from msgraphdatapipelines_spark import sinks
+    from msgraphdatapipelines_spark.queries import dedup as QD
+
+    class _NoGenRenameFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            if _gs.GEN_RE.match(dst.getName()):
+                return False
+            return self._fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real_fs_for = sinks._fs_for
+
+    def patched(spark_, path_):
+        fs_, hp_ = real_fs_for(spark_, path_)
+        return _NoGenRenameFS(fs_), hp_
+
+    monkeypatch.setattr(sinks, "_fs_for", patched)
+    root = str(tmp_path / "pidx")
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox sleeps")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(OSError, match="could not publish"):
+        QD.prefix_index_build(spark, root, docs)
+    fs, hpath = real_fs_for(spark, root)
+    assert _gs.committed_gens(fs, hpath, root) == []
+    assert [st.getPath().getName() for st in fs.listStatus(hpath(root))] == []
+
+
 def test_write_snapshot_claim_on_copy_rename_fs(spark, tmp_path, monkeypatch):
     """r15 (r14 VERDICT item 4): the snapshot claim protocol on an
     S3-style copy-rename store.  The claim sentinel copies FIRST in name

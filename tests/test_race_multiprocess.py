@@ -242,7 +242,8 @@ def test_race_two_processes_rebalance(tmp_path, monkeypatch, spark):
 
 def test_race_two_processes_result_cache(tmp_path):
     """cache.serve_cached: both processes must serve the identical
-    artifact, with exactly one data dir and no staging copies."""
+    artifact, with exactly one data dir, no staging copies, and no
+    loser's copy nested inside ``data``."""
     sf = tmp_path / "sf"
     sf.mkdir()
     shutil.copyfile(
@@ -256,6 +257,9 @@ def test_race_two_processes_result_cache(tmp_path):
     assert "_rc_ready" in inside and "data" in inside, inside
     staging = [d for d in inside if d.startswith("data.")]
     assert staging == [], f"race left staging copies: {staging}"
+    data = os.listdir(os.path.join(root, "data"))
+    nested = [d for d in data if d.startswith("data.")]
+    assert nested == [], f"race left a copy nested in data: {nested}"
 
 
 def test_race_two_processes_snapshot_publish(tmp_path, spark):
