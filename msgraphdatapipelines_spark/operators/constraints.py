@@ -18,7 +18,7 @@ small dimension parents still broadcast, a data-sized parent (documents ←
 chunks, the first FK an LLM-pipeline user writes) gets a shuffle join
 instead of an unbounded broadcast; ``True`` forces the hint (caller
 vouches the parent is model-sized), ``False`` forces shuffle-hash.  Feed
-the decision from a standing CM sketch via
+the decision from CM sketches of the key columns via
 ``operators.sketches.choose_join_strategy`` — a never-underestimating
 row-count verdict with NO scan of either table at planning time.
 The report is rows of ``(constraint, kind, passed, n_violations)`` — the

@@ -21,7 +21,7 @@ import hashlib
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -166,71 +166,6 @@ def extract_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
             )
 
     return df.mapInPandas(batches, FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-    ]
-)
-
-
-def resize_image(
-    df: DataFrame, width: int = 224, height: int = 224, backend: str = "auto"
-) -> DataFrame:
-    """Resize media payloads to a target box via Arrow-batched
-    ``mapInPandas`` — the preprocessing step in front of any vision encoder.
-
-    ``backend='pillow'`` really decodes, resizes (bilinear), and re-encodes
-    as PNG; ``'fake'`` emits a payload of ``width * height // 64`` bytes
-    from an sha256 hash chain over (payload digest | target box | counter)
-    — deterministic, value-checkable cross-engine; ``'auto'`` picks pillow
-    when importable.  The Spark contract is identical either way:
-    payload-in → payload-out inside the Arrow batch, blobs never leave the
-    executors, output schema keeps the media identity + new dimensions.
-    """
-
-    def fake_resize(payload: bytes) -> bytes:
-        src = hashlib.sha256(bytes(payload)).hexdigest()
-        n = width * height // 64
-        out = bytearray()
-        i = 0
-        while len(out) < n:
-            out.extend(hashlib.sha256(f"{src}|{width}x{height}|{i}".encode()).digest())
-            i += 1
-        return bytes(out[:n])
-
-    if _resolve_backend(backend) == "pillow":  # pragma: no cover - no Pillow wheel
-        import io
-
-        from PIL import Image
-
-        def do_resize(payload: bytes) -> bytes:
-            img = Image.open(io.BytesIO(bytes(payload)))
-            buf = io.BytesIO()
-            img.resize((width, height)).save(buf, format="PNG")
-            return buf.getvalue()
-
-    else:
-        do_resize = fake_resize
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "payload": pdf["payload"].map(do_resize),
-                    "width": pd.Series([width] * len(pdf), dtype="int64"),
-                    "height": pd.Series([height] * len(pdf), dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(batches, RESIZED_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -410,119 +345,6 @@ def phash_near_dup_pairs(
             "hamming",
             F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).cast("long"),
         )
-        .filter(F.col("hamming") <= tau)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
-# --- late r10: wide (multi-word) perceptual hash — the web-scale path ------
-
-WIDE_PHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("phash", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def perceptual_dhash_wide(
-    df: DataFrame, rows: int = 16, cols: int = 9, word_bits: int = 32
-) -> DataFrame:
-    """dHash over a larger thumbnail grid, emitted as an ARRAY of
-    ``word_bits``-bit words — the scale variant of
-    :func:`perceptual_dhash`.
-
-    Why wide: pigeonhole banding needs ``n_bands ≥ tau + 1`` AND bands
-    wide enough to stay selective (``band_bits ≈ log2(corpus / target
-    bucket)``).  A 63-bit hash cannot give both at web scale; 16×9 →
-    128 bits carved into 16 bands of 8 bits keeps radius-15 exact
-    recall with 256-value bands.  Same block-mean thumbnail stub, same
-    Arrow batch shape; each word stays far below 2^63 so every engine
-    reads it as a plain signed long."""
-    import numpy as np
-
-    nseg = rows * cols
-    ncols = cols - 1
-    nbits = rows * ncols
-    nwords = (nbits + word_bits - 1) // word_bits
-
-    def ph(payload: bytes) -> list[int]:
-        b = np.frombuffer(bytes(payload), dtype=np.uint8)
-        n = len(b)
-        if n == 0:
-            return [0] * nwords
-        seg = (np.arange(n, dtype=np.int64) * nseg) // n
-        sums = np.bincount(seg, weights=b, minlength=nseg)
-        cnts = np.bincount(seg, minlength=nseg)
-        pix = (sums // np.maximum(cnts, 1)).astype(np.int64)
-        g = pix.reshape(rows, cols)
-        bits = (g[:, 1:] > g[:, :-1]).astype(np.int64).ravel()
-        words = []
-        for w in range(nwords):
-            chunk = bits[w * word_bits : (w + 1) * word_bits]
-            words.append(int((chunk << np.arange(len(chunk), dtype=np.int64)).sum()))
-        return words
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "phash": pdf["payload"].map(ph)}
-            )
-
-    return df.mapInPandas(batches, WIDE_PHASH_SCHEMA)
-
-
-def phash_wide_near_dup_pairs(
-    hashed: DataFrame,
-    tau: int = 15,
-    band_bits: int = 8,
-    word_bits: int = 32,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs over the multi-word hash: bands are carved
-    ``band_bits`` at a time from each word (``band_id = word_idx ·
-    bands_per_word + sub_band``), so the band set partitions ALL hash
-    bits and the pigeonhole guarantee holds for ``tau ≤ n_bands − 1``.
-    Verification sums ``bit_count(xor)`` across the word arrays with
-    one zip_with/aggregate expression — no UDF in the verify path."""
-    spw = word_bits // band_bits  # sub-bands per word
-    mask = (1 << band_bits) - 1
-    b = (
-        hashed.select("media_id", "phash", F.posexplode("phash").alias("w", "word"))
-        .select(
-            "media_id",
-            "phash",
-            "w",
-            "word",
-            F.explode(F.array(*[F.lit(s) for s in range(spw)])).alias("s"),
-        )
-        .select(
-            "media_id",
-            "phash",
-            (F.col("w") * spw + F.col("s")).alias("band_id"),
-            F.expr(f"shiftright(word, {band_bits} * s) & {mask}").alias("band"),
-        )
-    )
-    if max_bucket is not None:
-        sizes = b.groupBy("band_id", "band").agg(F.count(F.lit(1)).alias("_bn"))
-        b = b.join(
-            F.broadcast(sizes.filter(F.col("_bn") <= max_bucket)), ["band_id", "band"]
-        ).drop("_bn")
-    a1 = b.select(
-        F.col("media_id").alias("id_a"), F.col("phash").alias("ha"), "band_id", "band"
-    )
-    a2 = b.select(
-        F.col("media_id").alias("id_b"), F.col("phash").alias("hb"), "band_id", "band"
-    )
-    ham = F.expr(
-        "aggregate(zip_with(ha, hb, (x, y) -> bit_count(x ^ y)), 0L, (acc, d) -> acc + d)"
-    ).cast("long")
-    return (
-        a1.join(a2, ["band_id", "band"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
-        .distinct()
-        .withColumn("hamming", ham)
         .filter(F.col("hamming") <= tau)
         .select("id_a", "id_b", "hamming")
     )

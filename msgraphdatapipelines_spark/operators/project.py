@@ -45,31 +45,3 @@ def exclude(df: DataFrame, *columns: str) -> DataFrame:
     """P4 — client-side column exclusion (`Select-Object -ExcludeProperty`,
     `Invoke…ps1:233-238`)."""
     return df.drop(*columns)
-
-
-def pseudonymize_keys(df: DataFrame, cols: list[str], salt: str) -> DataFrame:
-    """Consistent key pseudonymization: replace identifier columns with
-    ``md5(salt || value)`` tokens — the GDPR-style companion of the PII
-    content scrub (operators.text.pii_scrub handles free text; this
-    handles the KEYS the reference ships to the warehouse — device ids,
-    user principal names — `Invoke-GraphDataPipelineToAzureSQLDatabase.
-    ps1:288-307` copies them verbatim).
-
-    Properties that make it a data-engineering operator rather than a
-    `withColumn` one-liner:
-
-    - CONSISTENT: the same (salt, value) maps to the same token in every
-      table and every run — joins, group-bys, and count-distincts keep
-      working on the pseudonymized warehouse (pytest-pinned);
-    - keyed: without the salt the token is not invertible by rainbow
-      tables over small id domains; rotating the salt re-keys the whole
-      warehouse (re-run = re-keyed, no state);
-    - NULL-preserving: NULL ids stay NULL (not a shared token that would
-      fuse all anonymous rows into one join partner);
-    - a pure narrow map — zero shuffles at any scale.
-    """
-    out = df
-    for c in cols:
-        tok = F.md5(F.concat(F.lit(salt), F.col(c).cast("string")))
-        out = out.withColumn(c, F.when(F.col(c).isNull(), None).otherwise(tok))
-    return out

@@ -489,12 +489,6 @@ def lsh_topk(
 # ---------------------------------------------------------------- r6: product quantization
 
 
-def _normalize(v: Column) -> Column:
-    """Unit-normalize an array<double> (caller guarantees non-zero norm)."""
-    n = F.sqrt(seq_dot(v, v))
-    return F.transform(v, lambda x: x / n)
-
-
 def pq_codebooks(
     corpus: DataFrame,
     id_c: str,

@@ -60,72 +60,14 @@ def merge_distinct_sketches(
     )
 
 
-def build_quantile_sketches(
-    df: DataFrame,
-    part_cols: list[str],
-    value_col: str,
-    k: int = 2048,
-) -> DataFrame:
-    """One KLL quantile sketch row per ``part_cols`` group over a DOUBLE
-    ``value_col`` — the percentile counterpart of
-    :func:`build_distinct_sketches` (same rollup-table pattern: persist the
-    increment's sketch, never rescan).  ``k=2048`` ≈ 0.6% normalized rank
-    error.  Output: ``part_cols…, qsketch binary, n_rows``.
-    """
-    return df.groupBy(*part_cols).agg(
-        F.kll_sketch_agg_double(F.col(value_col).cast("double"), F.lit(k)).alias("qsketch"),
-        F.count(value_col).alias("n_rows"),
-    )
-
-
-def merge_quantile_sketches(
-    sketches: DataFrame,
-    group_cols: list[str],
-    quantiles: list[float],
-) -> DataFrame:
-    """Merge KLL sketch rows down to ``group_cols`` and estimate
-    ``quantiles``.
-
-    Spark exposes KLL merge as a BINARY function (no union aggregate), so
-    the rows fold: ``sort_array(collect_list(sketch))`` → ``aggregate``
-    with ``kll_sketch_merge_double`` — O(increments) per group, which is
-    rollup-table cardinality (days × dims), never data.  The sort fixes
-    the fold order so re-runs merge identically.  Unlike HLL, a merged
-    KLL is only rank-error-equivalent (not register-identical) to the
-    direct sketch — pin estimates against exact ranks, not binary
-    equality.  Output: ``group_cols…, q_estimates array<double>, n_rows``.
-    """
-    return (
-        sketches.groupBy(*group_cols)
-        .agg(
-            F.sort_array(F.collect_list("qsketch")).alias("_sks"),
-            F.sum("n_rows").alias("n_rows"),
-        )
-        .select(
-            *group_cols,
-            F.kll_sketch_get_quantile_double(
-                F.aggregate(
-                    F.slice("_sks", 2, 2_000_000_000),
-                    F.element_at("_sks", 1),
-                    lambda a, x: F.kll_sketch_merge_double(a, x),
-                ),
-                F.array(*[F.lit(float(q)) for q in quantiles]),
-            ).alias("q_estimates"),
-            "n_rows",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Count-min sketch (r8): mergeable frequency estimation / heavy hitters.
-# Unlike the binary HLL/KLL states above, the CM table is PLAIN ROWS
+# Unlike the binary HLL state above, the CM table is PLAIN ROWS
 # ((depth, bucket, cnt) cells), so it is exactly replayable in the DuckDB
 # oracle: buckets are the first 2 hex chars of md5(depth || '|' || key)
 # (256 buckets/row — the md5-seeded determinism the MinHash rows use), and
 # merging is integer cell addition — order-free, union-of-sketches ≡
 # sketch-of-union, appendable forever without drift.
-
-CM_WIDTH = 256  # fixed by the 2-hex-char bucket id
 
 
 def _cm_bucket(key, depth: int):
@@ -249,9 +191,10 @@ def choose_join_strategy(
 ) -> dict:
     """Sketch-driven join pre-flight (r9) — the consumer that turns
     ``cm_join_size_estimate``'s sound verdicts into an actual plan
-    decision.  Inputs are the standing CM cell tables of the two join
-    sides' KEY columns (the reusable rollup artifacts); NO scan of either
-    data table happens at planning time — two model-sized aggs only.
+    decision.  Inputs are the CM cell tables of the two join sides' KEY
+    columns (``build_cm_sketch``; mergeable, so a deployment can keep them
+    as rollup artifacts); the verdict itself scans neither data table —
+    two model-sized aggs only.
 
     Returns ``{'broadcast_parent', 'parent_rows_est', 'child_rows_est',
     'join_size_est', 'skew_warning'}``:
@@ -282,42 +225,3 @@ def choose_join_strategy(
         "join_size_est": join_est,
         "skew_warning": join_est > blowup_factor * (child_rows + parent_rows),
     }
-
-
-def sketch_store_root(sf_dir: str, table: str, key: str) -> str:
-    """Deterministic standing-CM-sketch location for (corpus table, key
-    column): fingerprint-keyed like the ANN index / lexicon roots, so a
-    regenerated table can never serve stale counts.  Prefix msgdp_cm_ is
-    registered with sinks.vacuum_standing_artifacts."""
-    from ..cache import standing_root
-
-    return standing_root("cm", sf_dir, (f"{table}.parquet",), table, key, "v1")
-
-
-def ensure_standing_sketch(
-    spark,
-    sf_dir: str,
-    table: str,
-    key: str,
-    df: DataFrame | None = None,
-) -> DataFrame:
-    """Build-at-most-once STANDING CM cell table for one (table, key
-    column) — the planning-side artifact ``choose_join_strategy`` /
-    ``pipelines.preflight_fk_constraints`` consume, so a join verdict at
-    load time costs a snapshot resolve + two model-sized aggs instead of
-    scanning either join side.  First touch scans the table once (ONE
-    map-combinable agg, O(4·256) output rows); afterwards every call is a
-    pointer resolve.  Incremental growth: CM cells are integer-add
-    mergeable — append increments with ``build_cm_sketch`` on the delta
-    and ``merge_cm_sketches``, republished via ``sinks.write_snapshot``
-    (same discipline as the lexicon compact)."""
-    from .. import sinks
-
-    root = sketch_store_root(sf_dir, table, key)
-    snap = f"{root}/cells"
-    if not sinks.snapshot_exists(spark, snap):
-        if df is None:
-            df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-        cells = build_cm_sketch(df.na.drop(subset=[key]), [], key)
-        sinks.write_snapshot(cells, snap)
-    return sinks.read_snapshot(spark, snap)

@@ -31,8 +31,8 @@ class Pipeline:
     valid rows reach the sink, and any ``foreign_key`` whose
     ``broadcast_parent`` policy is undecided (None) is first resolved by
     the sketch-driven join pre-flight (:func:`preflight_fk_constraints`),
-    so the FK probe's join strategy is chosen from standing CM sketches,
-    never by a manual flag."""
+    so the FK probe's join strategy is chosen from CM sketches of the
+    key columns, never by a manual flag."""
 
     name: str
     source: Callable[[SparkSession], DataFrame]

@@ -234,30 +234,6 @@ def array_set_ops_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def array_set_counts_relational(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale-path twin of ``array_set_ops_per_order`` — identical output,
-    pure codegen, no per-group array buffers.
-
-    The array-native row is the charter's per-row set-algebra demo, but its
-    ``collect_set`` buffers run in ObjectHashAggregate (object-based, falls
-    back to sort-based aggregation under memory pressure) — the r6 100×
-    sweep's 42× ratio is that buffer cost, not the shuffle.  A 100 TB job
-    wanting only the COUNTS should compute them relationally: one distinct
-    over (order, part) folding the two membership flags with max(), then one
-    count agg — both map-side combinable HashAggregates over fixed-width
-    rows, two key shuffles total and nothing object-sized in memory.
-    """
-    li = load(spark, sf_dir, "lineitem")
-    membership = li.groupBy("l_orderkey", "l_partkey").agg(
-        F.max((F.col("l_linenumber") <= 3).cast("int")).alias("in_early"),
-        F.max((F.col("l_linenumber") > 3).cast("int")).alias("in_late"),
-    )
-    return membership.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_union"),
-        F.sum((F.col("in_early") * F.col("in_late")).cast("long")).alias("n_common"),
-    )
-
-
 @register(
     "deterministic_sample",
     demoted=True,  # md5-prefix sampling also inside corpus_curation + contamination split

@@ -1224,10 +1224,10 @@ def hybrid_search_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def heavy_hitters_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch heavy hitters (r8): per-source CM cell tables over
     the corpus token stream (the mergeable frequency-rollup increment —
-    the CM counterpart of the HLL/KLL rollups), merged by exact integer
+    the CM counterpart of the HLL rollups), merged by exact integer
     cell addition, then point estimates for the 20 most frequent tokens
     checked against exact counts.  The sketch is md5-bucketed plain rows,
-    so — unlike binary HLL/KLL state — the ENTIRE estimate replays
+    so — unlike binary HLL state — the ENTIRE estimate replays
     bit-identically in the DuckDB oracle: cm_est is value-matched, not
     tolerance-boxed, and the never-underestimates guarantee rides along
     as an asserted column.

@@ -1001,20 +1001,6 @@ def _colocated_names(sf_dir: str, num_buckets: int) -> tuple[str, str, str]:
     return f"orders_bkt_{key}", f"lineitem_bkt_{key}", root
 
 
-def drop_colocated_facts(spark: SparkSession, sf_dir: str, num_buckets: int = 8) -> None:
-    """Tear the standing bucketed store down COMPLETELY — catalog entries
-    AND files (a bare DROP TABLE on the external store leaves the files,
-    so the next ensure would re-register mutated data).  For tests and
-    explicit store resets."""
-    from .. import sinks
-
-    t_o, t_l, root = _colocated_names(sf_dir, num_buckets)
-    spark.sql(f"DROP TABLE IF EXISTS {t_o}")
-    spark.sql(f"DROP TABLE IF EXISTS {t_l}")
-    fs, hp = sinks._fs_for(spark, root)
-    fs.delete(hp(root), True)
-
-
 @register(
     "q12_colocated_bucketed",
     demoted=True,  # value twin of q12_priority_shipping through the bucketed path
@@ -1055,29 +1041,6 @@ def q12_colocated_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_linestatus")
     )
-
-
-def append_colocated_facts(
-    spark: SparkSession,
-    orders_batch: DataFrame,
-    lineitem_batch: DataFrame,
-    t_o: str,
-    t_l: str,
-    num_buckets: int = 8,
-) -> None:
-    """O(delta) maintenance for the co-bucketed warehouse: append a
-    batch THROUGH the bucketed writer — the writer must RE-DECLARE the
-    bucket spec (Spark validates it against the table's and rejects an
-    unbucketed append, which would silently break the zero-exchange
-    property) and hashes only the new rows into their buckets.  The
-    same append-then-serve discipline as the zone-map/Bloom/lexicon
-    layers, here for the fact tables themselves."""
-    orders_batch.write.mode("append").format("parquet").bucketBy(
-        num_buckets, "o_orderkey"
-    ).saveAsTable(t_o)
-    lineitem_batch.write.mode("append").format("parquet").bucketBy(
-        num_buckets, "l_orderkey"
-    ).saveAsTable(t_l)
 
 
 # --- late r10: two more parser-surface shapes -------------------------------

@@ -177,34 +177,3 @@ def grouped_mad_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mad_within_1pct"
         ),
     )
-
-
-def chunk_text_udtf(spark: SparkSession, docs: DataFrame, size: int = 200, stride: int = 150) -> DataFrame:
-    """Python UDTF surface (r8): the same overlapping-chunk semantics as
-    the codegen ``operators.text.chunk_text``, expressed as a
-    user-defined TABLE function consumed through a SQL LATERAL join —
-    the table-valued escape hatch for logic a Column expression cannot
-    state (per-row fan-out with imperative control flow).  Row-at-a-time
-    Python: the pytest twin pins output EQUALITY with the codegen
-    operator, which remains the hot-path choice (the UDF-ladder
-    discipline: built-in > pandas UDF > UDTF > RDD)."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_id int, chunk string")
-    class ChunkText:
-        def eval(self, text: str):
-            text = text or ""
-            i = idx = 0
-            while True:
-                yield idx, text[i : i + size]
-                idx += 1
-                i += stride
-                if i >= len(text):
-                    break
-
-    spark.udtf.register("chunk_text_udtf", ChunkText)
-    docs.createOrReplaceTempView("v_chunk_docs")
-    return spark.sql(
-        "SELECT doc_id, c.chunk_id, c.chunk "
-        "FROM v_chunk_docs, LATERAL chunk_text_udtf(text) c"
-    )

@@ -212,17 +212,3 @@ AUDIT_EVENT_TARGET = T.StructType(
 
 # events.props JSON payload (FIXTURES.md §A) for from_json (S3).
 EVENT_PROPS = T.StructType([T.StructField("k", T.LongType())])
-
-# Flagship pipeline target: latest event per user, conformed + stamped
-# (the reference's signature computation — argmax T2 + project P5 + cast T6
-# — transplanted to the events fixture; SURVEY.md §7 Phase 0).
-LATEST_EVENT_TARGET = T.StructType(
-    [
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("k", T.LongType()),
-    ]
-)

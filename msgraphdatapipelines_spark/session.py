@@ -109,29 +109,3 @@ def scale_conf(
         "spark.sql.shuffle.partitions": str(parts),
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(target_partition_bytes),
     }
-
-
-def runtime_filter_conf(
-    creation_side_threshold: str = "50MB",
-    application_side_min_scan: str = "0",
-) -> dict[str, str]:
-    """Runtime bloom-filter join pruning (r10) — the shuffle-join analog
-    of broadcast-side dynamic pruning: when one join side carries a
-    selective filter, Catalyst injects a ``bloom_filter_agg`` subquery on
-    that side and a might-contain probe on the OTHER side's scan, so fact
-    rows that cannot match are dropped BEFORE the shuffle.  At 100 TB
-    this turns "shuffle the whole fact table, then join-drop 95%" into
-    "shuffle the ~5% that might match" — the single biggest lever on
-    selective-dim shuffle joins that AQE alone does not pull.
-
-    Spark enables the feature by default but gates it on size thresholds
-    tuned for clusters; this returns the conf dict that makes the gate
-    reflect a deployment's real sizes (pass to ``get_spark(extra_conf=…)``
-    or apply per-session).  The plan pin lives in
-    tests/test_plans.py::test_runtime_bloom_filter_prunes_fact_shuffle.
-    """
-    return {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": creation_side_threshold,
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": application_side_min_scan,
-    }

@@ -260,7 +260,6 @@ def apply_scd2(
     valid_from: str = "valid_from",
     valid_to: str = "valid_to",
     current_flag: str = "is_current",
-    removed_col: str | None = None,
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension apply — the keyed-history
     generalization of ``upsert_snapshot`` (SCD1) and the reference's
@@ -285,20 +284,9 @@ def apply_scd2(
     emits 0/1/2 output rows — no second pass over the join, no window.
     With the warehouse bucketed on the key (L6 analog) the current
     slice's shuffle disappears exactly as in ``upsert_snapshot``.
-
-    ``removed_col`` (r7, optional): name of a boolean tombstone column on
-    ``updates`` (the delta-query ``@removed`` marker,
-    ``sources.rest.read_odata_delta``).  A tombstone CLOSES the key's
-    current row at the effective time without opening a new version — the
-    SCD2 delete; a tombstone for an unknown key is a no-op.  Rides the
-    same single join.
     """
     meta = {valid_from, valid_to, current_flag}
-    attrs = [
-        c
-        for c in updates.columns
-        if c not in set(keys) | {effective_col} | ({removed_col} if removed_col else set())
-    ]
+    attrs = [c for c in updates.columns if c not in set(keys) | {effective_col}]
     cur = history.filter(F.col(current_flag))
     closed = history.filter(~F.col(current_flag))
 
@@ -306,22 +294,16 @@ def apply_scd2(
         *keys,
         *[F.col(a).alias(f"__u_{a}") for a in attrs],
         F.col(effective_col).alias("__u_eff"),
-        *(
-            [F.coalesce(F.col(removed_col), F.lit(False)).alias("__u_rm")]
-            if removed_col
-            else [F.lit(False).alias("__u_rm")]
-        ),
     )
     j = cur.join(upd, keys, "full_outer")
 
     c_exists = F.col(valid_from).isNotNull()  # current rows always carry valid_from
     u_exists = F.col("__u_eff").isNotNull()
-    rm = F.coalesce(F.col("__u_rm"), F.lit(False))
     diff = F.lit(False)
     for a in attrs:
         diff = diff | ~F.col(a).eqNullSafe(F.col(f"__u_{a}"))
-    closing = u_exists & c_exists & (diff | rm)
-    opening = u_exists & ~rm & (~c_exists | diff)
+    closing = u_exists & c_exists & diff
+    opening = u_exists & (~c_exists | diff)
 
     vt_t = dict(cur.dtypes).get(valid_to, "timestamp")
     row_t = F.struct(
@@ -1244,7 +1226,6 @@ STANDING_ARTIFACT_PREFIXES = (
     "msgdp_ivfpq_",
     "msgdp_lex_",
     "msgdp_zm_",
-    "msgdp_cm_",
     "msgdp_bloom_",  # late r10: Bloom-manifest layouts
     "msgdp_rc_",  # late r10: plan-fingerprint result cache
     "msgdp_bkt_",  # late r10: co-bucketed fact warehouse
@@ -1314,121 +1295,6 @@ def vacuum_standing_artifacts(
     return {"removed": removed, "kept": kept}
 
 
-# --- Partitioned SCD2 store (r9): O(current + delta) sync rounds -------------
-#
-# `apply_scd2` already keeps closed history rows untouched in its OUTPUT —
-# but a store that holds the whole history in one versioned table still
-# REWRITES them every round (r8 layout: read full history, write full
-# history).  At a 100 TB dimension history with hourly deltas that
-# O(history) I/O dominates everything.  The partitioned store lets closed
-# rows stay on disk untouched:
-#
-#   {root}/current/v=N/...   — snapshot-versioned CURRENT slice (small:
-#                              one row per live key), atomic pointer flip
-#   {root}/closed/r=N/...    — append-only per-round increments of rows
-#                              CLOSED in round N; never rewritten
-#
-# A round reads O(current), joins O(delta), writes O(current + closed_Δ).
-# Commit protocol (same token-last discipline as the sync streams):
-#   1. vacuum orphans (any v>pointer / r>pointer from a crashed round) —
-#      makes the replayed round's version number deterministic;
-#   2. write closed/r=new_v (the round's newly-closed rows);
-#   3. write current/v=new_v and FLIP the pointer — the commit point:
-#      a closed increment is visible to readers only when r <= pointer,
-#      so a crash between 2 and 3 leaves an invisible orphan that the
-#      next round's vacuum removes and the replay rewrites identically.
-# Replay after a FULL commit (crash before the caller saved its resume
-# token) re-applies the same delta to the already-updated current slice:
-# no attribute diff, no tombstone to re-close → the new round closes
-# nothing and republishes an identical current slice — idempotent.
-
-
-def _scd2_meta_schema(schema):
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        list(schema.fields)
-        + [
-            T.StructField("valid_from", T.TimestampType()),
-            T.StructField("valid_to", T.TimestampType()),
-            T.StructField("is_current", T.BooleanType()),
-        ]
-    )
-
-
-def scd2_store_begin_round(spark: SparkSession, root: str, schema) -> tuple[DataFrame, int]:
-    """Open an SCD2 round on the partitioned store: vacuum crash orphans
-    and return ``(current_slice, new_version)``.  ``schema`` is the
-    ATTRIBUTE schema (keys + tracked columns, no validity metadata) —
-    used for the empty bootstrap frame and the explicit-schema closed
-    reads.  A store without a committed ``current/`` pointer starts at
-    round 1.
-    """
-    cur_root = f"{root}/current"
-    fs, hp = _fs_for(spark, root)
-    ptr = _resolve_latest(fs, hp, cur_root)
-    if ptr is not None:
-        for v in _list_numbered_dirs(fs, hp, cur_root, "v="):
-            if v > ptr:
-                fs.delete(hp(f"{cur_root}/v={v}"), True)
-        for r in _list_numbered_dirs(fs, hp, f"{root}/closed", "r="):
-            if r > ptr:
-                fs.delete(hp(f"{root}/closed/r={r}"), True)
-        return read_snapshot(spark, cur_root, ptr), ptr + 1
-    return spark.createDataFrame([], _scd2_meta_schema(schema)), 1
-
-
-def scd2_store_commit_round(
-    spark: SparkSession,
-    root: str,
-    merged: DataFrame,
-    new_v: int,
-    keep_last: int | None = None,
-) -> dict:
-    """Publish one round's ``apply_scd2`` output (computed against the
-    CURRENT slice only): newly-closed rows append as ``closed/r=new_v``,
-    the new current slice becomes ``current/v=new_v``, pointer flips last
-    (the commit point — see the layout comment above).  ``keep_last``
-    expires old CURRENT versions only; closed increments are the
-    permanent history and are never rewritten.  Returns write stats."""
-    merged = merged.localCheckpoint(eager=True)  # two consumers, one compute
-    cur_root = f"{root}/current"
-    closed_inc = merged.filter(~F.col("is_current"))
-    new_cur = merged.filter(F.col("is_current"))
-    n_closed = closed_inc.count()
-    closed_inc.write.mode("overwrite").parquet(f"{root}/closed/r={new_v}")
-    new_cur.write.mode("overwrite").parquet(f"{cur_root}/v={new_v}")
-    fs, hp = _fs_for(spark, root)
-    _flip_latest(fs, hp, cur_root, new_v)
-    if keep_last is not None:
-        for v in _list_numbered_dirs(fs, hp, cur_root, "v=")[:-keep_last]:
-            if v != new_v:
-                fs.delete(hp(f"{cur_root}/v={v}"), True)
-    return {"version": new_v, "closed_rows_written": n_closed}
-
-
-def read_scd2_history(spark: SparkSession, root: str, schema=None) -> DataFrame:
-    """Full validity-interval history from an SCD2 store: the current
-    slice ∪ the committed closed increments (``r <=`` pointer).
-    ``schema`` (attribute schema) makes empty closed increments readable
-    (a round that closed nothing writes a zero-row directory).  A store
-    with no committed ``current/`` pointer raises ``FileNotFoundError``."""
-    cur_root = f"{root}/current"
-    fs, hp = _fs_for(spark, root)
-    ptr = _committed_version(fs, hp, cur_root)
-    cur = read_snapshot(spark, cur_root, ptr)
-    rounds = [r for r in _list_numbered_dirs(fs, hp, f"{root}/closed", "r=") if r <= ptr]
-    if not rounds:
-        return cur
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(_scd2_meta_schema(schema))
-    else:
-        reader = reader.schema(cur.schema)
-    closed = reader.parquet(*[f"{root}/closed/r={r}" for r in rounds])
-    return cur.unionByName(closed)
-
-
 def forget_keys(
     spark: SparkSession,
     root: str,
@@ -1483,84 +1349,6 @@ def forget_keys(
         "version": new_v,
         "rows_removed": int(n_before - n_after),
         "erased_versions": erased,
-    }
-
-
-def scd2_forget_keys(
-    spark: SparkSession,
-    root: str,
-    key_cols: list[str],
-    keys_df: DataFrame,
-    schema=None,
-) -> dict:
-    """Right-to-erasure across the partitioned SCD2 store (r10): the
-    forgotten keys' CURRENT rows and ALL their closed history rows
-    disappear; every other row and every round number is untouched.
-
-    Closed increments are immutable by the store's contract — legal
-    erasure is the documented exception.  Each committed ``closed/r=N``
-    increment holding a forgotten key is rewritten MINUS those keys
-    under the SAME round number (round arithmetic, replay and
-    ``read_scd2_history`` are unaffected) via a tmp-dir swap:
-
-        1. write ``closed/.forget_tmp_r=N`` (the scrubbed increment)
-        2. delete ``closed/r=N``
-        3. rename tmp → ``closed/r=N``
-
-    A crash at any step is recoverable: before scrubbing, any orphan tmp
-    whose final directory is MISSING is renamed into place (completes a
-    step-2/3 crash); an orphan tmp whose final still exists is discarded
-    (step-1 crash).  Dotted tmp names are invisible to the round lister.
-    The current slice republishes as a new version and older current
-    versions are erased (they hold the forgotten keys' last rows).
-
-    Returns ``{"current_version", "rows_removed_current",
-    "rewritten_rounds"}``.
-    """
-    cur_root = f"{root}/current"
-    fs, hp = _fs_for(spark, root)
-    pk = F.broadcast(keys_df.select(*key_cols).distinct())
-
-    # recovery: complete any crashed previous forget's tmp swaps
-    closed_root = f"{root}/closed"
-    cp = hp(closed_root)
-    if fs.exists(cp):
-        for st in fs.listStatus(cp):
-            name = st.getPath().getName()
-            if name.startswith(".forget_tmp_r="):
-                final = hp(f"{closed_root}/{name[len('.forget_tmp_'):]}")
-                if fs.exists(final):
-                    fs.delete(st.getPath(), True)  # step-1 crash: discard
-                else:
-                    fs.rename(st.getPath(), final)  # step-2/3 crash: complete
-
-    # scrub the current slice (new version, erase older current versions)
-    cur = read_snapshot(spark, cur_root)
-    n_before = cur.count()
-    kept = cur.join(pk, key_cols, "left_anti")
-    new_v = write_snapshot(kept, cur_root)
-    n_after = read_snapshot(spark, cur_root).count()
-    for v in snapshot_versions(spark, cur_root):
-        if v != new_v:
-            fs.delete(hp(f"{cur_root}/v={v}"), True)
-
-    # scrub every closed increment that holds a forgotten key
-    reader_schema = _scd2_meta_schema(schema) if schema is not None else cur.schema
-    rewritten = []
-    for r in _list_numbered_dirs(fs, hp, closed_root, "r="):
-        inc_path = f"{closed_root}/r={r}"
-        inc = spark.read.schema(reader_schema).parquet(inc_path)
-        if inc.join(pk, key_cols, "left_semi").limit(1).count() == 0:
-            continue
-        tmp = f"{closed_root}/.forget_tmp_r={r}"
-        inc.join(pk, key_cols, "left_anti").write.mode("overwrite").parquet(tmp)
-        fs.delete(hp(inc_path), True)
-        fs.rename(hp(tmp), hp(inc_path))
-        rewritten.append(r)
-    return {
-        "current_version": new_v,
-        "rows_removed_current": int(n_before - n_after),
-        "rewritten_rounds": rewritten,
     }
 
 

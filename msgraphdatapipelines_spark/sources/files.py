@@ -41,56 +41,3 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
-
-
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Raw binary-file scan (`binaryFile` format): one row per file with
-    (path, modificationTime, length, content binary) — the ingest edge of
-    the multimodal family (operators/multimodal consumes the opaque
-    ``content`` column via Arrow mapInPandas).  Files are read
-    executor-side, split-parallel across files; blobs never transit the
-    driver.  At 100 TB prefer consolidating small files into parquet with
-    a binary column first (this reader is the tool that does it) — the
-    parquet layout gets column pruning and row-group parallelism the raw
-    files can't."""
-    r = spark.read.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    return r.load(path)
-
-
-def read_parquet_evolved(
-    spark: SparkSession, path: str, schema: T.StructType | None = None
-) -> DataFrame:
-    """Parquet scan across files written under an EVOLVING schema — the
-    incremental-warehouse reality (the reference reloads whole snapshots,
-    so a column added to the Graph payload silently changes its table;
-    an append/delta warehouse instead accumulates files with different
-    footers).
-
-    Two supported postures:
-
-    - ``schema=None`` → ``mergeSchema``: Spark unions the footers of ALL
-      files (added columns appear, NULL where absent).  The merge is a
-      file-listing + footer read per file — at 100 TB that is a real
-      metadata pass — and it does NOT widen types: the same column written
-      int in one file and long in another fails with CANNOT_MERGE_SCHEMAS
-      (pytest-pinned).  Column ADDITION is the only evolution this posture
-      absorbs.
-    - explicit ``schema`` → each file is read through the DECLARED schema:
-      missing columns arrive NULL, extra columns are pruned at the scan,
-      no footer-merge pass happens, and the vectorized reader DOES widen
-      per-file types up to the declaration (int→long pytest-pinned) — so
-      a widened warehouse stays readable by declaring the wide type.
-      This is the P5 declared-schema contract applied to the warehouse
-      itself, and the 100 TB default.
-
-    Incompatible changes (string→int) fail per-file at read time under
-    either posture, which is the correct failure surface — a warehouse
-    with conflicting types needs a migration, not a silent cast.
-    """
-    if schema is None:
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    return spark.read.schema(schema).parquet(path)

@@ -813,7 +813,6 @@ def _split_keyword(s: str, kw: str) -> list[str]:
 
 
 _OPS = {"eq": "==", "ne": "!=", "gt": ">", "ge": ">=", "lt": "<", "le": "<="}
-_STR_FNS = ("startswith", "endswith", "contains")
 
 
 def _parse_literal(raw: str):

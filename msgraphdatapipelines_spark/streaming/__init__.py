@@ -47,19 +47,6 @@ def skip_no_data_batches(spark: SparkSession):
     finally:
         spark.conf.set(key, prev)
 
-# Legacy shape of events.parquet: ts as TIMESTAMP(NANOS) → LongType under
-# nanosAsLong (kept for fixtures that still write ns timestamps).
-EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
 
 def suggest_state_partitions(
     spark: SparkSession,

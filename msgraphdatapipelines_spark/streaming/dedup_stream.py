@@ -1,35 +1,26 @@
-"""Continuous corpus dedup — incremental LSH assignment driven by a
-document stream.
+"""The stream dedup round — incremental LSH assignment of one batch of
+newly-arrived documents against persisted bucket state.
 
 The batch operator (``operators.dedup.lsh_incremental_assign``) dedups a
-new batch against the persisted bucket→representative state; this module
-runs that flow continuously: each micro-batch of newly-arrived documents
-is assigned against the state and the state is folded forward — the
-incremental-crawl pipeline (corpus grows batch by batch, old documents
-are never reprocessed) as one long-running stream.  ``lsh_assign_round``
-is the one dedup round both this stream and
-``streaming.curation.curation_pipeline_stream`` run.
+new batch against the persisted bucket→representative state;
+``lsh_assign_round`` wraps it with the signature step and the state
+read, so ``streaming.curation.curation_pipeline_stream`` runs it once per
+micro-batch: the corpus grows batch by batch and old documents are never
+reprocessed.
 
-Crash safety mirrors ``delta_sync_stream``'s commit ordering: per-batch
-assignment output is written to a batch-id-keyed directory (OVERWRITE —
-idempotent under replay), and only then is the updated state published
-as a new snapshot version behind an atomic pointer flip, so a crash
-mid-publish keeps the previous complete state.  A crash before the flip
-replays the batch from the same source offset against the same state.
-A crash after the flip but before the stream's own commit replays it
-against the folded state: ``rep_id`` stays the same (min-fold), and only
-``is_new_cluster`` can flip true→false (the curation stream's note).
-A state that exists but cannot be read fails the batch loudly; it never
-restarts clustering from empty state.  All heavy work is ordinary batch
-Spark inside ``foreachBatch`` — the operator's 100 TB notes (one
-bucket-keyed join, state O(buckets), no pairs) apply unchanged.
+The state lives in a snapshot store (``sinks.write_snapshot``): the
+caller writes its per-batch outputs first and publishes the folded state
+as a new version behind the atomic pointer flip last, so a crash
+mid-publish keeps the previous complete state and a replayed batch
+reassigns against it.  A state that exists but cannot be read fails the
+round loudly; it never restarts clustering from empty state.  The
+operator's 100 TB notes (one bucket-keyed join, state O(buckets), no
+pairs) apply unchanged.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from .. import sinks
 from ..operators import dedup as D
@@ -61,44 +52,3 @@ def lsh_assign_round(
         else None
     )
     return D.lsh_incremental_assign(sigs, state, id_col, num_hashes=num_hashes, bands=bands)
-
-
-def dedup_assign_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    schema: T.StructType,
-    state_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 4,
-    hash_fn: str = "xxhash64",
-) -> StreamingQuery:
-    """Start the dedup stream over a document file stream.
-
-    ``docs_dir`` is watched as a parquet file stream
-    (``maxFilesPerTrigger=1`` — one arriving file = one batch).  Each
-    batch: ``lsh_assign_round`` against the snapshot store at
-    ``state_path`` → assignments to ``{out_dir}/batch_id=N/`` → updated
-    state published as the store's next version (``keep_last=2``).
-    """
-
-    def assign(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        assigns, new_state = lsh_assign_round(
-            spark, batch_df, state_path, id_col, text_col, num_hashes, bands, hash_fn
-        )
-        assigns.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
-        sinks.write_snapshot(new_state, state_path, keep_last=2)
-
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_dir)
-        .writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(assign)
-        .start()
-    )

@@ -124,73 +124,6 @@ def test_sql_surface_views_and_query(spark, sf_dir):
     assert ts_type.startswith("timestamp")  # µs timestamp (tz or ntz), not raw nanos long
 
 
-def test_read_binary_files_feeds_multimodal(spark, tmp_path):
-    """r6: binaryFile ingest — blobs arrive as an opaque binary column and
-    flow straight into the multimodal metadata operator."""
-    from msgraphdatapipelines_spark.operators import multimodal as M
-    from msgraphdatapipelines_spark.sources import files as FS
-
-    blobs = {"a.bin": b"\x89PNG\r\n" + b"x" * 100, "b.bin": b"RIFFxxxxWAVE" + b"y" * 50}
-    for name, data in blobs.items():
-        (tmp_path / name).write_bytes(data)
-    df = FS.read_binary_files(spark, str(tmp_path), glob="*.bin")
-    rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
-    assert set(rows) == set(blobs)
-    assert bytes(rows["a.bin"]["content"]) == blobs["a.bin"]
-    assert rows["b.bin"]["length"] == len(blobs["b.bin"])
-    # bridge into the media-record contract and decode (fake backend)
-    media = df.select(
-        F.xxhash64("path").alias("media_id"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.col("content").alias("payload"),
-    )
-    meta = {r["n_bytes"] for r in M.decode_image_meta(media, backend="fake").collect()}
-    assert meta == {len(b) for b in blobs.values()}
-
-
-def test_read_parquet_evolved_schemas(spark, tmp_path):
-    """Schema-evolution read postures: mergeSchema unions evolving footers
-    (added column NULL where absent) but refuses type changes; the
-    explicit-schema form reads every file through the declared contract —
-    missing column NULL, extra column pruned, per-file int→long widened —
-    with no footer-merge pass."""
-    import pytest as _pytest
-    from pyspark.sql import types as T
-
-    d = tmp_path / "evolved"
-    spark.createDataFrame([(1, "a1")], "id int, a string").write.parquet(f"{d}/f1")
-    spark.createDataFrame(
-        [(2, "a2", 7.5)], "id int, a string, b double"
-    ).write.parquet(f"{d}/f2")
-    path = f"{d}/f*"
-
-    merged = files.read_parquet_evolved(spark, path)
-    rows = {r["id"]: (r["a"], r["b"]) for r in merged.collect()}
-    assert rows == {1: ("a1", None), 2: ("a2", 7.5)}
-
-    # mergeSchema does NOT widen: an int/long conflict on the same column fails
-    spark.createDataFrame([(2**40, "a3", 1.0)], "id long, a string, b double").write.parquet(
-        f"{d}/f3"
-    )
-    with _pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
-        files.read_parquet_evolved(spark, path).collect()
-
-    # the explicit-schema posture reads ALL three files: old int files widen
-    # to the declared long, missing b arrives NULL, undeclared a is pruned,
-    # never-written c arrives NULL
-    declared = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("b", T.DoubleType()),
-            T.StructField("c", T.StringType()),
-        ]
-    )
-    strict = files.read_parquet_evolved(spark, path, schema=declared)
-    got = {r["id"]: (r["b"], r["c"]) for r in strict.collect()}
-    assert got == {1: (None, None), 2: (7.5, None), 2**40: (1.0, None)}
-    assert "a" not in strict.columns
-
-
 def test_scale_conf_arithmetic():
     """r8 session.scale_conf: partition counts scale with input size,
     scan slices shrink under small executors, and the 100 TB point lands

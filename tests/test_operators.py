@@ -91,7 +91,7 @@ def test_lang_id_first_wins_ties(spark):
         [("the cat and the dog",), ("el que la de los",), ("zzz qqq",), ("la de el le et",)],
         "text string",
     )
-    got = [r[0] for r in df.select(X.lang_id("text")).collect()]
+    got = [r[0] for r in df.select(X.lang_id_from_scores(X.lang_scores("text"))).collect()]
     assert got[0] == "en"
     assert got[1] == "es"
     assert got[2] == "und"
@@ -256,22 +256,6 @@ def test_corpus_curation_invariants(spark, sf_dir):
         assert hashlib.md5(str(r["doc_id"]).encode()).hexdigest()[0] < "8"
 
 
-def test_multimodal_resize_contract(spark):
-    docs = spark.createDataFrame(
-        [(1, "payload one"), (2, "payload two")], "doc_id long, text string"
-    )
-    media = M.wrap_text_as_media(docs, "doc_id", "text")
-    out = {r["media_id"]: r for r in M.resize_image(media, 224, 224).collect()}
-    assert set(out) == {1, 2}
-    for r in out.values():
-        assert r["width"] == 224 and r["height"] == 224
-        assert len(r["payload"]) == 224 * 224 // 64
-    # deterministic: same input -> same resized bytes
-    again = {r["media_id"]: r for r in M.resize_image(media, 224, 224).collect()}
-    assert bytes(out[1]["payload"]) == bytes(again[1]["payload"])
-    assert bytes(out[1]["payload"]) != bytes(out[2]["payload"])
-
-
 def test_tfidf_top_terms_golden(spark):
     docs = spark.createDataFrame(
         [
@@ -382,8 +366,7 @@ def test_lsh_candidate_pairs_cap_truncates_deterministically(spark):
 def test_media_backend_contract(spark, backend):
     """r4 VERDICT item 8: the SAME contract assertions run over the fake
     and the Pillow backend (pillow leg skips cleanly without the wheel):
-    identical output schemas, positive dimensions, non-empty resized
-    payload, and determinism across runs."""
+    identical output schemas and positive dimensions."""
     if backend == "pillow" and not M.pillow_available():
         pytest.skip("Pillow not installed in this container")
     if backend == "pillow":
@@ -408,19 +391,6 @@ def test_media_backend_contract(spark, backend):
     if backend == "pillow":
         assert (row["width"], row["height"]) == (320, 200)  # real header parse
 
-    resized = M.resize_image(media, 64, 48, backend=backend)
-    assert resized.schema == M.RESIZED_SCHEMA
-    r1 = resized.collect()[0]
-    assert (r1["width"], r1["height"]) == (64, 48) and len(r1["payload"]) > 0
-    r2 = M.resize_image(media, 64, 48, backend=backend).collect()[0]
-    assert bytes(r1["payload"]) == bytes(r2["payload"])  # deterministic
-    if backend == "pillow":
-        import io
-
-        from PIL import Image
-
-        assert Image.open(io.BytesIO(bytes(r1["payload"]))).size == (64, 48)
-
 
 def test_media_backend_resolution_errors(spark):
     """Explicit pillow without the wheel raises (no silent downgrade to
@@ -430,7 +400,7 @@ def test_media_backend_resolution_errors(spark):
         with pytest.raises(ImportError, match="pillow"):
             M.decode_image_meta(media, backend="pillow")
     with pytest.raises(ValueError, match="unknown media backend"):
-        M.resize_image(media, backend="nope")
+        M.decode_image_meta(media, backend="nope")
 
 
 # ---------------------------------------------------------------- r6: exact clustering
@@ -698,22 +668,6 @@ def test_unigram_logprob_semantics(spark, sf_dir):
     assert scores[0] < scores[-1]  # the filter actually separates docs
 
 
-def test_array_set_counts_relational_equals_array_native(spark, sf_dir):
-    """The scale-path relational twin (two codegen HashAggregates, no
-    collect_set buffers) must reproduce the array-native registry row
-    exactly — same contract as the dedup family's production/audit split."""
-    from msgraphdatapipelines_spark.queries.relational2 import (
-        array_set_counts_relational,
-        array_set_ops_per_order,
-    )
-
-    nat = {r["l_orderkey"]: (r["n_union"], r["n_common"])
-           for r in array_set_ops_per_order(spark, sf_dir).collect()}
-    rel = {r["l_orderkey"]: (r["n_union"], r["n_common"])
-           for r in array_set_counts_relational(spark, sf_dir).collect()}
-    assert nat == rel and len(nat) > 0
-
-
 def test_strip_frequent_segments_semantics_and_plan(spark):
     """Boilerplate segments (≥min_docs distinct docs) are dropped, doc order
     is preserved, pure-boilerplate docs come back empty (not NULL), and the
@@ -938,56 +892,6 @@ def test_check_constraints_counts_planted_violations(spark):
     assert rep["fk_cust"]["n_violations"] == 1 and not rep["fk_cust"]["passed"]
 
 
-def test_quantile_sketch_rollup_within_rank_error(spark, sf_dir):
-    """KLL rollup contract: per-day increment sketches merged per group
-    estimate quantiles within the k=2048 rank-error band of the exact
-    values; the sorted fold makes re-merges deterministic."""
-    from msgraphdatapipelines_spark.operators.sketches import (
-        build_quantile_sketches,
-        merge_quantile_sketches,
-    )
-    from msgraphdatapipelines_spark.queries import load_events
-
-    ev = load_events(spark, sf_dir).withColumn("day", F.to_date("ts"))
-    inc = build_quantile_sketches(ev, ["event_type", "day"], "value")
-    qs = [0.5, 0.9]
-    merged = merge_quantile_sketches(inc, ["event_type"], qs)
-    m = {r["event_type"]: r["q_estimates"] for r in merged.collect()}
-    m2 = {r["event_type"]: r["q_estimates"] for r in merged.collect()}
-    assert m == m2  # deterministic re-merge
-    vals = {}
-    for r in ev.select("event_type", F.col("value").cast("double").alias("v")).collect():
-        vals.setdefault(r["event_type"], []).append(r["v"])
-    for et, ests in m.items():
-        xs = sorted(vals[et])
-        for q, est in zip(qs, ests):
-            # rank of the estimate must be within ~1.5% of the target rank
-            import bisect
-
-            rank = bisect.bisect_right(xs, est) / len(xs)
-            assert abs(rank - q) <= 0.015 + 2.0 / len(xs), (et, q, est, rank)
-
-
-def test_pseudonymize_keys_preserves_joins_and_nulls(spark):
-    """Same salt+value -> same token across tables (joins survive);
-    different salt re-keys; NULLs stay NULL."""
-    from msgraphdatapipelines_spark.operators.project import pseudonymize_keys
-
-    orders = spark.createDataFrame(
-        [(1, 10), (2, 20), (3, None)], "oid long, cust long"
-    )
-    cust = spark.createDataFrame([(10, "x"), (20, "y")], "cust long, name string")
-    po = pseudonymize_keys(orders, ["cust"], salt="s1")
-    pc = pseudonymize_keys(cust, ["cust"], salt="s1")
-    joined = po.join(pc, "cust")
-    assert joined.count() == 2  # joinability preserved
-    assert po.filter(F.col("cust").isNull()).count() == 1  # NULL stays NULL
-    tok1 = {r["oid"]: r["cust"] for r in po.collect()}
-    tok2 = {r["oid"]: r["cust"] for r in pseudonymize_keys(orders, ["cust"], "s2").collect()}
-    assert tok1[1] != tok2[1] and tok1[1] is not None  # salt rotation re-keys
-    assert all(v is None or len(v) == 32 for v in tok1.values())
-
-
 def test_shuffle_deterministic_is_a_permutation(spark):
     """Positions are exactly 1..n; a re-run reproduces the identical order;
     a different seed yields a different permutation (epoch re-shuffle)."""
@@ -1015,73 +919,6 @@ def test_shuffle_deterministic_is_a_permutation(spark):
         for r in shuffle_deterministic(df, "k", seed=1, num_buckets=32).collect()
     }
     assert wide == rows
-
-
-def test_udtf_split_sentences_matches_declarative_twin(spark, sf_dir):
-    """The Spark-4 UDTF rung of the custom-operator ladder: lateral
-    split_sentences(text) emits the same rows as the posexplode Column
-    twin — proving the table-function boundary works; the Column form
-    remains the production path where expressible."""
-    from pyspark.sql import functions as F
-
-    from msgraphdatapipelines_spark.functions.tablefuncs import register_table_functions
-
-    register_table_functions(spark)
-    # fixture docs carry no sentence punctuation (fanout 1); the crafted
-    # rows exercise real variable fanout incl. empty-after-split and NULL
-    crafted = spark.createDataFrame(
-        [
-            (90001, "One. Two here!  Three, yes?   "),
-            (90002, "No terminal punctuation means one sentence"),
-            (90003, None),
-        ],
-        "doc_id long, text string",
-    )
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-        .limit(50)
-        .unionByName(crafted)
-    )
-    docs.createOrReplaceTempView("udtf_docs")
-    got = {
-        (r["doc_id"], r["sent_id"], r["sentence"], r["n_tokens"])
-        for r in spark.sql(
-            "SELECT d.doc_id, s.sent_id, s.sentence, s.n_tokens "
-            "FROM udtf_docs d, LATERAL split_sentences(d.text) s"
-        ).collect()
-    }
-    twin = (
-        docs.select(
-            "doc_id",
-            F.posexplode(F.split(F.trim(F.col("text")), r"(?<=[.!?])\s+")).alias("pos", "p"),
-        )
-        .select("doc_id", F.trim(F.col("p")).alias("p"), "pos")
-        .filter(F.col("p") != "")
-        .withColumn(
-            "sent_id",
-            F.row_number().over(
-                __import__("pyspark.sql.window", fromlist=["Window"]).Window.partitionBy(
-                    "doc_id"
-                ).orderBy("pos")
-            ),
-        )
-        .select(
-            "doc_id",
-            "sent_id",
-            F.col("p").alias("sentence"),
-            F.size(F.split(F.col("p"), r"\s+")).alias("n_tokens"),
-        )
-    )
-    want = {
-        (r["doc_id"], r["sent_id"], r["sentence"], r["n_tokens"]) for r in twin.collect()
-    }
-    assert got == want
-    # count derives from the declarative twin (r6 ADVICE: the previous
-    # literal 54 assumed every fixture doc holds exactly one sentence —
-    # a fixture regeneration hazard); only crafted rows stay literal
-    assert len(got) == len(want) > 0
-    assert (90001, 3, "Three, yes?", 2) in got
 
 
 def test_nb_classifier_crafted_semantics(spark):
@@ -1783,25 +1620,6 @@ def test_transitive_reachability_randomized_equals_python_bfs(spark):
         assert got == want, f"case {case}"
 
 
-def test_chunk_text_udtf_equals_codegen_operator(spark, sf_dir):
-    """r8 UDTF surface: the Python table function's overlapping chunks
-    equal the codegen chunk_text operator row-for-row on the documents
-    fixture (including the empty-doc one-empty-chunk contract)."""
-    from msgraphdatapipelines_spark.operators import text as X
-    from msgraphdatapipelines_spark.queries.udfs import chunk_text_udtf
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
-    native = {
-        (r["doc_id"], r["chunk_idx"], r["chunk_text"])
-        for r in X.chunk_text(docs, "doc_id", "text", size=200, stride=150).collect()
-    }
-    via_udtf = {
-        (r["doc_id"], r["chunk_id"], r["chunk"])
-        for r in chunk_text_udtf(spark, docs, size=200, stride=150).collect()
-    }
-    assert via_udtf == native and len(native) > 120
-
-
 def test_hard_negatives_semantics(spark):
     """r8 hard_negatives: positives are excluded, survivors rank by score
     with id tiebreak, k truncates, a query whose candidates are all
@@ -2206,41 +2024,6 @@ def test_vacuum_standing_artifacts_collects_stale_roots(spark, tmp_path):
     assert any(p.endswith("msgdp_lex_fresh333") for p in out3["removed"])
 
 
-def test_standing_sketch_store_serves_join_verdicts(spark, sf_dir):
-    """r10: the standing CM sketch store builds once per (table, key,
-    fingerprint) and serves choose_join_strategy verdicts identical to
-    freshly-built sketches — the FK pre-flight's planning artifact."""
-    import os
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators.sketches import (
-        build_cm_sketch,
-        choose_join_strategy,
-        ensure_standing_sketch,
-        sketch_store_root,
-    )
-
-    child = ensure_standing_sketch(spark, sf_dir, "orders", "o_custkey")
-    parent = ensure_standing_sketch(spark, sf_dir, "customer", "c_custkey")
-    cells = f"{sketch_store_root(sf_dir, 'orders', 'o_custkey')}/cells"
-    v = sinks._read_latest_version(spark, cells)
-    mt = os.path.getmtime(f"{cells}/_LATEST.v{v}")
-    child2 = ensure_standing_sketch(spark, sf_dir, "orders", "o_custkey")
-    assert sinks._read_latest_version(spark, cells) == v
-    assert os.path.getmtime(f"{cells}/_LATEST.v{v}") == mt  # served, not rebuilt
-
-    served = choose_join_strategy(child2, parent)
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    fresh = choose_join_strategy(
-        build_cm_sketch(o.na.drop(subset=["o_custkey"]), [], "o_custkey"),
-        build_cm_sketch(c.na.drop(subset=["c_custkey"]), [], "c_custkey"),
-    )
-    assert served == fresh
-    assert served["broadcast_parent"] is True
-    assert served["child_rows_est"] == o.count()
-
-
 # --- late r10: perceptual dHash near-dup -----------------------------------
 
 
@@ -2320,174 +2103,6 @@ def test_phash_max_bucket_caps_candidate_generation(spark):
     full = M.phash_near_dup_pairs(hashed, tau=62).count()
     assert M.phash_near_dup_pairs(hashed, tau=62, max_bucket=0).count() == 0
     assert M.phash_near_dup_pairs(hashed, tau=62, max_bucket=10**6).count() == full
-
-
-def test_phash_wide_exact_recall_and_band_selectivity(spark):
-    """late r10 wide hash: 128 bits in 32-bit words, 16 bands of 8 bits —
-    banded pairs must equal brute force for tau ≤ 15 (pigeonhole across
-    words), and on a random corpus the 8-bit bands must actually be
-    selective (bounded candidate work — the reason the wide hash exists)."""
-    import itertools
-    import random
-
-    rng = random.Random(11)
-    words = ["alpha", "beta", "gamma", "delta", "omega", "sigma", "kappa", "zeta"]
-    rows = [(i, " ".join(rng.choice(words) for _ in range(80))) for i in range(60)]
-    for i in range(60, 70):  # same-length near pairs
-        t = rows[i - 60][1]
-        mid = len(t) // 2
-        rows.append((i, t[:mid] + "Q" + t[mid + 1:]))
-    hashed = M.perceptual_dhash_wide(_media_df(spark, rows))
-    h = {r["media_id"]: tuple(r["phash"]) for r in hashed.collect()}
-    assert all(len(v) == 4 and all(x >= 0 for x in v) for v in h.values())
-
-    def dist(a, b):
-        return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
-
-    tau = 15
-    brute = {
-        (a, b)
-        for a, b in itertools.combinations(sorted(h), 2)
-        if dist(h[a], h[b]) <= tau
-    }
-    got = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in M.phash_wide_near_dup_pairs(hashed, tau=tau).collect()
-    }
-    assert {(a, b) for a, b, _ in got} == brute and brute
-    for a, b, d in got:
-        assert d == dist(h[a], h[b])
-    # selectivity: on payloads with UNCORRELATED block statistics (random
-    # printable bytes — the analog of diverse real images), 8-bit bands
-    # must prune most of the all-pairs space; word-soup corpora stay
-    # correlated, which is exactly what the max_bucket knob is for
-    rnd = [
-        (i, "".join(chr(rng.randrange(33, 127)) for _ in range(400)))
-        for i in range(120)
-    ]
-    rnd_hashed = M.perceptual_dhash_wide(_media_df(spark, rnd))
-    n = len(rnd)
-    cand = M.phash_wide_near_dup_pairs(rnd_hashed, tau=10**9).count()
-    assert cand < n * (n - 1) // 2 / 2, (cand, n)
-
-
-# --- late r10: BPE train/apply equivalence audit ---------------------------
-
-
-def _ref_bpe_train(texts, num_merges):
-    """Pure-Python reference (Sennrich et al. 2016 pseudo-code): word
-    frequency table, best adjacent pair per round (count desc, pair
-    lexicographic tie-break), sequential left-to-right replacement."""
-    from collections import Counter
-
-    vocab = Counter()
-    for t in texts:
-        for w in t.lower().split():
-            vocab[tuple(list(w) + ["</w>"])] += 1
-    merges = []
-    for _ in range(num_merges):
-        pairs = Counter()
-        for syms, cnt in vocab.items():
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] += cnt
-        if not pairs:
-            break
-        best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < 2:
-            break
-        (a, b) = best[0]
-        merges.append((a, b))
-        new_vocab = Counter()
-        for syms, cnt in vocab.items():
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            new_vocab[tuple(out)] += cnt
-        vocab = new_vocab
-    return merges, vocab
-
-
-def _ref_bpe_encode(text, merges):
-    toks = []
-    for w in text.lower().split():
-        syms = list(w) + ["</w>"]
-        for a, b in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        toks.extend(syms)
-    return toks
-
-
-@pytest.mark.heavy
-def test_bpe_train_matches_reference_and_is_deterministic(spark):
-    """The distributed trainer must reproduce the reference merge
-    SEQUENCE exactly (same counts, same tie-breaks) and be run-to-run
-    deterministic."""
-    texts = [r["text"] for r in
-             spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-             .filter(F.col("doc_id") < 40).select("text").collect()]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    want, _ = _ref_bpe_train(texts, 30)
-    got = X.bpe_train(df, num_merges=30)
-    assert got == want
-    assert X.bpe_train(df, num_merges=30) == got
-
-
-def test_bpe_apply_matches_sequential_reference(spark):
-    """The greedy lowest-rank application (the hot-path algorithm) must
-    tokenize identically to sequential in-order merge replacement — the
-    classic equivalence both public implementations rely on — and OOV
-    words must decompose toward characters, never fail."""
-    texts = [r["text"] for r in
-             spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-             .filter(F.col("doc_id") < 40).select("text").collect()]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    merges = X.bpe_train(df, num_merges=30)
-    enc = {
-        r["doc_id"]: (r["tokens"], r["n_tokens"])
-        for r in X.bpe_apply(df, merges).collect()
-    }
-    for i, t in enumerate(texts):
-        want = _ref_bpe_encode(t, merges)
-        assert enc[i][0] == want and enc[i][1] == len(want)
-    # OOV: characters survive
-    oov = spark.createDataFrame([(99, "zzqqxx unseenword")], "doc_id long, text string")
-    toks = X.bpe_apply(oov, merges).collect()[0]["tokens"]
-    assert toks and all(tok for tok in toks)
-    joined = "".join(toks).replace("</w>", " ").strip()
-    assert joined == "zzqqxx unseenword"
-
-
-def test_phash_wide_max_bucket_under_cap_equality(spark):
-    """r11 (r10 VERDICT item 1): on a corpus where every (band_id, band)
-    bucket is under the cap, the capped wide-hash join returns EXACTLY
-    the uncapped result (the cap only ever excludes, and only oversized
-    buckets); cap=0 kills all candidates."""
-    rows = [(i, f"wide doc {i} body " * 25) for i in range(24)]
-    hashed = M.perceptual_dhash_wide(_media_df(spark, rows))
-    key = lambda df: sorted(  # noqa: E731
-        (r["id_a"], r["id_b"], r["hamming"]) for r in df.collect()
-    )
-    full = key(M.phash_wide_near_dup_pairs(hashed, tau=15))
-    capped = key(M.phash_wide_near_dup_pairs(hashed, tau=15, max_bucket=10**6))
-    assert capped == full
-    assert M.phash_wide_near_dup_pairs(hashed, tau=15, max_bucket=0).count() == 0
 
 
 def test_prefix_index_frozen_order_append_equals_rebuild(spark, tmp_path):
@@ -3346,35 +2961,6 @@ def test_lexicon_generation_commit_on_copy_rename_fs(spark, tmp_path, monkeypatc
     assert meta2["n_batches"] == 2 and meta2["n_docs"] == docs.count()
     gen2 = _gs.current_gen(fs, hpath, root)
     assert gen2 != gen1 and fs.exists(hpath(f"{gen2}/_commit"))
-
-
-@pytest.mark.heavy
-def test_bpe_train_batched_equals_sequential_with_fewer_rounds(spark):
-    """r16 (r15 VERDICT item 9, the bpe_train watch-item): the batched
-    trainer takes a provably-sequential-equal PREFIX of the sorted pair
-    list per round — disjoint-symbol members only, stopping before any
-    candidate a newly-created pair could outrank (bounds from the
-    existing pair table).  Pins: identical merge sequence to the
-    max_batch=1 classic loop (and therefore to the pure-Python
-    reference via the neighboring test), with measurably fewer driver
-    round-trips — the 32k-merge production-vocab path stops costing one
-    Spark job per merge."""
-    texts = [r["text"] for r in
-             spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-             .filter(F.col("doc_id") < 80).select("text").collect()]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    seq_stats: dict = {}
-    bat_stats: dict = {}
-    seq = X.bpe_train(df, num_merges=40, max_batch=1, _stats=seq_stats)
-    bat = X.bpe_train(df, num_merges=40, max_batch=16, _stats=bat_stats)
-    assert bat == seq, "batched trainer diverged from the sequential sequence"
-    assert seq_stats["rounds"] == len(seq)
-    assert bat_stats["merges"] == len(seq)
-    assert bat_stats["rounds"] < seq_stats["rounds"], (
-        f"no round-trip reduction: {bat_stats} vs {seq_stats}"
-    )
 
 
 def test_load_spread_floors_scan_parallelism(spark, sf_dir):

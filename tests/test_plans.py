@@ -570,51 +570,6 @@ def test_q11_scalar_subquery_evaluates_once(spark, sf_dir):
     assert len(rows) >= 1  # threshold selects a non-empty brand set
 
 
-def test_runtime_bloom_filter_prunes_fact_shuffle(spark, sf_dir):
-    """r10 engine posture: with a selective filter on the dim side of a
-    SHUFFLE join, Catalyst injects a bloom_filter_agg subquery on the dim
-    and probes it on the fact side BEFORE the exchange — the 100 TB lever
-    that shuffles only might-match fact rows.  Pinned under
-    session.runtime_filter_conf's thresholds with broadcast disabled
-    (broadcast joins already prune via their own hash relation)."""
-    from pyspark.sql import functions as F
-
-    from msgraphdatapipelines_spark.session import runtime_filter_conf
-
-    saved = {"spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold")}
-    for k in runtime_filter_conf():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:  # noqa: BLE001
-            saved[k] = None
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        for k, v in runtime_filter_conf().items():
-            spark.conf.set(k, v)
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        j = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderpriority")
-            .count()
-        )
-        p = plans.physical_plan(j)
-        assert "bloom_filter_agg" in p
-        # and the result is unaffected by the injected filter
-        (row,) = j.collect()
-        expect = (
-            li.join(o.hint("merge"), li.l_orderkey == o.o_orderkey).count()
-        )
-        assert row["count"] == expect
-    finally:
-        for k, v in saved.items():
-            if v is not None:
-                spark.conf.set(k, v)
-
-
 def test_bucketed_tables_join_with_zero_exchange(spark, sf_dir, tmp_path):
     """r10 (closes a docstring claim that predated its test): two tables
     bucketed on the same key and count join WITHOUT any Exchange — the
@@ -768,53 +723,6 @@ def test_q12_colocated_bucketed_joins_without_fact_shuffle(spark, sf_dir):
         assert "SortMergeJoin" in p
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_colocated_append_preserves_zero_exchange_join(spark, sf_dir):
-    """late r10: appending through the bucketed writer must keep the
-    fact-fact join exchange-free AND make the new rows visible — growth
-    does not cost the amortized shuffle back."""
-    from pyspark.sql import functions as FF
-
-    from msgraphdatapipelines_spark.queries import tpch
-
-    t_o, t_l = tpch.ensure_colocated_facts(spark, sf_dir)
-    base = spark.table(t_o).count()
-    picked = spark.read.parquet(f"{sf_dir}/orders.parquet").orderBy("o_orderkey").limit(7)
-    o_new = picked.withColumn("o_orderkey", FF.col("o_orderkey") + 10_000_000)
-    l_new = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        .join(
-            picked.select(FF.col("o_orderkey").alias("l_orderkey")),
-            "l_orderkey",
-            "left_semi",
-        )
-        .withColumn("l_orderkey", FF.col("l_orderkey") + 10_000_000)
-    )
-    tpch.append_colocated_facts(spark, o_new, l_new, t_o, t_l)
-    try:
-        assert spark.table(t_o).count() == base + 7
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-            j = spark.table(t_o).join(
-                spark.table(t_l),
-                spark.table(t_o).o_orderkey == spark.table(t_l).l_orderkey,
-            )
-            p = plans.physical_plan(j)
-            assert "hashpartitioning(o_orderkey" not in p
-            assert "hashpartitioning(l_orderkey" not in p
-            # appended keys participate in the join
-            assert (
-                j.filter(FF.col("o_orderkey") >= 10_000_000).count() > 0
-            )
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        # restore for other tests: the store persists across sessions now,
-        # so drop catalog entries AND files (a bare DROP TABLE would leave
-        # the appended rows to be re-registered by the next ensure)
-        tpch.drop_colocated_facts(spark, sf_dir)
 
 
 def test_filtered_ann_scores_via_equi_join_on_predicate(spark, sf_dir):

@@ -578,108 +578,6 @@ def test_429_honors_retry_after_hint():
     assert sleeps == [7.5, 30.0, 300.0]
 
 
-def test_scd2_sync_stream_builds_full_history(spark, delta_pages, tmp_path):
-    """Continuous SCD2 (r7): the delta sync stream folding through
-    apply_scd2 leaves a full validity-interval history — the deleted key's
-    interval closes without reopening, the updated key chains two
-    versions, untouched and inserted keys carry one current row each."""
-    import datetime as dt
-
-    from msgraphdatapipelines_spark.streaming.delta import scd2_sync_stream
-
-    first, _second = delta_pages
-    tick_dir = tmp_path / "ticks"
-    tick_dir.mkdir()
-    (tick_dir / "t0.txt").write_text("round0")
-    (tick_dir / "t1.txt").write_text("round1")
-    state = str(tmp_path / "delta.state")
-    history = str(tmp_path / "history")
-    t = {0: dt.datetime(2024, 1, 1), 1: dt.datetime(2024, 6, 1)}
-    q = scd2_sync_stream(
-        spark, str(tick_dir), first, SCHEMA, state, history, ["id"],
-        effective_for_round=lambda b: t[b],
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    from msgraphdatapipelines_spark import sinks
-
-    rows = sorted(
-        sinks.read_scd2_history(spark, history).collect(),
-        key=lambda r: (r["id"], r["valid_from"]),
-    )
-    got = [
-        (r["id"], r["osVersion"], r["valid_from"], r["valid_to"], r["is_current"])
-        for r in rows
-    ]
-    assert got == [
-        ("a", "10.0", t[0], t[1], False),   # tombstone closed, never reopened
-        ("b", "14.1", t[0], t[1], False),   # v1 closed at the update round
-        ("b", "15.0", t[1], None, True),    # v2 current
-        ("c", "11.0", t[0], None, True),    # untouched
-        ("d", "6.5", t[1], None, True),     # inserted in round 2
-    ]
-
-
-def test_scd2_sync_stream_failed_round_preserves_history(
-    spark, delta_pages, tmp_path
-):
-    """r8 (r7 ADVICE item 2): a round that fails AFTER a history exists
-    must leave the previous history fully intact and the token unmoved —
-    previously a mode('overwrite') of the sole copy plus a bare `except`
-    could silently restart from an EMPTY history.  Round 1 commits; round
-    2's fetch blows up mid-walk; the history must still be round 1's."""
-    import datetime as dt
-
-    import pyspark.errors
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.streaming.delta import scd2_sync_stream
-
-    first, _second = delta_pages
-    tick_dir = tmp_path / "ticks"
-    tick_dir.mkdir()
-    (tick_dir / "t0.txt").write_text("round0")
-    state = str(tmp_path / "delta.state")
-    history = str(tmp_path / "history")
-    t = {0: dt.datetime(2024, 1, 1), 1: dt.datetime(2024, 6, 1)}
-
-    rounds = {"n": 0}
-
-    def flaky_fetcher(url: str) -> str:
-        if rounds["n"] >= 1:
-            raise RuntimeError("network down in round 2")
-        return rest.file_fetcher(url)
-
-    q = scd2_sync_stream(
-        spark, str(tick_dir), first, SCHEMA, state, history, ["id"],
-        fetcher=flaky_fetcher, effective_for_round=lambda b: t[b],
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    token_after_r1 = rest.load_delta_state(state)
-    assert token_after_r1 is not None
-    rounds["n"] = 1
-    (tick_dir / "t1.txt").write_text("round1")
-    q = scd2_sync_stream(
-        spark, str(tick_dir), first, SCHEMA, state, history, ["id"],
-        fetcher=flaky_fetcher, effective_for_round=lambda b: t[1],
-    )
-    try:
-        with pytest.raises(pyspark.errors.exceptions.base.PySparkException):
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    # token did not advance; history is exactly round 1's (3 current rows)
-    assert rest.load_delta_state(state) == token_after_r1
-    rows = sinks.read_scd2_history(spark, history).collect()
-    assert sorted(r["id"] for r in rows) == ["a", "b", "c"]
-    assert all(r["is_current"] for r in rows)
-
-
 # --- r11 (r10 VERDICT item 9): page-range planner -----------------------------
 
 

@@ -573,87 +573,6 @@ def test_refresh_agg_incremental_rounds_equal_rebuild(spark):
     assert {(r["k"], r["n"], r["s"]) for r in agg.collect()} == want2
 
 
-def test_scd2_partitioned_store_round_and_replay(spark, tmp_path):
-    """r9 (VERDICT item 3): the partitioned SCD2 store writes
-    O(current + delta) per round — closed increments are written once and
-    never rewritten (file listing + mtimes pinned across later rounds),
-    each round's increment holds exactly the rows closed that round, and
-    a replayed round (crash before the caller's token save) closes
-    nothing and leaves the interval table unchanged."""
-    import datetime as dt
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark import sinks
-
-    schema = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("val", T.StringType())]
-    )
-    root = str(tmp_path / "hist")
-    t1, t2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 6, 1)
-
-    def updates(rows, eff):
-        return spark.createDataFrame(rows, schema).select(
-            "id", "val",
-            F.lit(eff).cast("timestamp").alias("effective_ts"),
-            F.lit(False).alias("_removed"),
-        )
-
-    # round 1: initial load of a, b
-    cur, v = sinks.scd2_store_begin_round(spark, root, schema)
-    assert v == 1 and cur.count() == 0
-    merged = sinks.apply_scd2(cur, updates([("a", "1"), ("b", "1")], t1),
-                              ["id"], removed_col="_removed")
-    stats = sinks.scd2_store_commit_round(spark, root, merged, v)
-    assert stats["closed_rows_written"] == 0
-
-    def snap_files(d):
-        return {
-            f: os.path.getmtime(os.path.join(d, f))
-            for f in os.listdir(d) if not f.startswith(".")
-        }
-
-    r1_files = snap_files(f"{root}/closed/r=1")
-
-    # round 2: b changes — exactly one row closes, r=1 untouched
-    cur, v = sinks.scd2_store_begin_round(spark, root, schema)
-    assert v == 2
-    assert cur.count() == 2  # the CURRENT slice only, not full history
-    merged = sinks.apply_scd2(cur, updates([("b", "2")], t2),
-                              ["id"], removed_col="_removed")
-    stats = sinks.scd2_store_commit_round(spark, root, merged, v)
-    assert stats["closed_rows_written"] == 1
-    assert snap_files(f"{root}/closed/r=1") == r1_files  # never rewritten
-
-    hist = sinks.read_scd2_history(spark, root, schema)
-    got = sorted(
-        (r["id"], r["val"], r["valid_to"] is None, r["is_current"])
-        for r in hist.collect()
-    )
-    assert got == [
-        ("a", "1", True, True),
-        ("b", "1", False, False),
-        ("b", "2", True, True),
-    ]
-
-    # replay of round 2 (crash before the caller saved its resume token):
-    # same updates against the already-updated current slice → closes
-    # nothing, interval table unchanged
-    cur, v = sinks.scd2_store_begin_round(spark, root, schema)
-    assert v == 3
-    merged = sinks.apply_scd2(cur, updates([("b", "2")], t2),
-                              ["id"], removed_col="_removed")
-    stats = sinks.scd2_store_commit_round(spark, root, merged, v)
-    assert stats["closed_rows_written"] == 0
-    hist2 = sinks.read_scd2_history(spark, root, schema)
-    assert sorted(
-        (r["id"], r["val"], r["valid_to"] is None, r["is_current"])
-        for r in hist2.collect()
-    ) == got
-
-
 def test_zonemap_prunes_files_and_preserves_semantics(spark, sf_dir, tmp_path):
     """r9 zonemap: a Z-ordered layout + manifest prunes the file list for
     a narrow range predicate (strictly fewer files opened than written),
@@ -786,64 +705,6 @@ def test_forget_keys_erases_current_and_history(spark, tmp_path):
     # pruned read still works on the scrubbed, re-manifested version
     pruned = sinks.read_snapshot_pruned(spark, root, "value", 2.0, 2.0)
     assert pruned.count() == cur.filter(F.col("value") == 2.0).count()
-
-
-def test_scd2_forget_keys_scrubs_history_preserves_rounds(spark, tmp_path):
-    """r10 GDPR erasure on the partitioned SCD2 store: the forgotten
-    key's current row AND closed history rows disappear; other keys'
-    rows (current and closed) are untouched; round numbering survives
-    so later rounds commit normally; a planted crash-orphan tmp dir is
-    recovered on entry."""
-    import datetime as dt
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark import sinks
-
-    schema = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("val", T.StringType())]
-    )
-    root = str(tmp_path / "hist")
-    t1, t2, t3 = (dt.datetime(2024, m, 1) for m in (1, 6, 9))
-
-    def updates(rows, eff):
-        return spark.createDataFrame(rows, schema).select(
-            "id", "val",
-            F.lit(eff).cast("timestamp").alias("effective_ts"),
-            F.lit(False).alias("_removed"),
-        )
-
-    for eff, rows in ((t1, [("a", "1"), ("b", "1")]),
-                      (t2, [("a", "2"), ("b", "2")]),
-                      (t3, [("b", "3")])):
-        cur, v = sinks.scd2_store_begin_round(spark, root, schema)
-        merged = sinks.apply_scd2(cur, updates(rows, eff), ["id"], removed_col="_removed")
-        sinks.scd2_store_commit_round(spark, root, merged, v)
-
-    # plant a step-1 crash orphan (final round dir still exists)
-    os.makedirs(f"{root}/closed/.forget_tmp_r=2", exist_ok=True)
-
-    keys = spark.createDataFrame([("a",)], "id: string")
-    out = sinks.scd2_forget_keys(spark, root, ["id"], keys, schema=schema)
-    assert out["rows_removed_current"] == 1
-    assert out["rewritten_rounds"] == [2]  # only r=2 held a's closed row
-    assert not os.path.exists(f"{root}/closed/.forget_tmp_r=2")
-
-    hist = sinks.read_scd2_history(spark, root, schema)
-    rows = sorted((r["id"], r["val"], r["is_current"]) for r in hist.collect())
-    assert rows == [("b", "1", False), ("b", "2", False), ("b", "3", True)]
-    # only the scrubbed current version remains (history erased)
-    assert len(sinks.snapshot_versions(spark, f"{root}/current")) == 1
-
-    # the store still runs rounds after erasure
-    cur, v = sinks.scd2_store_begin_round(spark, root, schema)
-    merged = sinks.apply_scd2(cur, updates([("c", "1")], t3), ["id"], removed_col="_removed")
-    sinks.scd2_store_commit_round(spark, root, merged, v)
-    hist2 = sinks.read_scd2_history(spark, root, schema)
-    assert hist2.filter(F.col("id") == "c").count() == 1
-    assert hist2.filter(F.col("id") == "a").count() == 0
 
 
 def test_zonemap_incremental_append_and_refresh_recovery(spark, tmp_path):
@@ -1318,18 +1179,13 @@ def test_result_cache_misses_after_gdpr_erasure(spark, tmp_path):
     """r12 (r11 VERDICT item 8): the result cache keys on recursive
     leaf-file signatures, so a GDPR erasure REWRITE of the underlying
     store must invalidate cached results naturally — re-serving the same
-    query after forget_keys (snapshot store) or scd2_forget_keys (SCD2
-    history store) is a MISS returning the scrubbed answer; a cache hit
-    here would resurrect forgotten rows, defeating the erasure."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
+    query after forget_keys is a MISS returning the scrubbed answer; a
+    cache hit here would resurrect forgotten rows, defeating the
+    erasure."""
     from msgraphdatapipelines_spark import cache, sinks
 
     base = str(tmp_path)
 
-    # --- snapshot store -------------------------------------------------
     snap = str(tmp_path / "snap")
     sinks.write_snapshot(
         spark.createDataFrame([(i, f"u{i}") for i in range(50)], "id long, user string"),
@@ -1348,42 +1204,6 @@ def test_result_cache_misses_after_gdpr_erasure(spark, tmp_path):
     fp2 = cache.plan_fingerprint(spark, q_snap(), [snap])
     assert fp2 != fp1, "erasure did not rotate the snapshot cache fingerprint"
     assert cache.serve_cached(spark, q_snap(), [snap], base_dir=base).collect()[0]["n"] == 48
-
-    # --- SCD2 history store ----------------------------------------------
-    schema = T.StructType(
-        [T.StructField("id", T.StringType()), T.StructField("val", T.StringType())]
-    )
-    hist = str(tmp_path / "hist")
-    t1, t2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 6, 1)
-    for eff, rows in ((t1, [("a", "1"), ("b", "1")]), (t2, [("a", "2"), ("b", "2")])):
-        cur, v = sinks.scd2_store_begin_round(spark, hist, schema)
-        upd = spark.createDataFrame(rows, schema).select(
-            "id", "val",
-            F.lit(eff).cast("timestamp").alias("effective_ts"),
-            F.lit(False).alias("_removed"),
-        )
-        merged = sinks.apply_scd2(cur, upd, ["id"], removed_col="_removed")
-        sinks.scd2_store_commit_round(spark, hist, merged, v)
-
-    def q_hist():
-        return (
-            sinks.read_scd2_history(spark, hist, schema)
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("versions"))
-        )
-
-    hfp1 = cache.plan_fingerprint(spark, q_hist(), [hist])
-    first = {(r["id"], r["versions"]) for r in
-             cache.serve_cached(spark, q_hist(), [hist], base_dir=base).collect()}
-    assert first == {("a", 2), ("b", 2)}
-    sinks.scd2_forget_keys(
-        spark, hist, ["id"], spark.createDataFrame([("a",)], "id string"), schema=schema
-    )
-    hfp2 = cache.plan_fingerprint(spark, q_hist(), [hist])
-    assert hfp2 != hfp1, "erasure did not rotate the SCD2 cache fingerprint"
-    fresh = {(r["id"], r["versions"]) for r in
-             cache.serve_cached(spark, q_hist(), [hist], base_dir=base).collect()}
-    assert fresh == {("b", 2)}, f"cache served resurrected rows: {fresh}"
 
 
 def test_scan_pruned_in_set_membership(spark, tmp_path):

@@ -292,112 +292,71 @@ _NEAR = _BASE.replace("lazy", "sleepy")
 _FAR = "completely different content about spark engines and parquet files " * 5
 
 
-def _stage_docs(spark, tmp_path, i: int, rows) -> None:
-    """Stage one parquet file of ``rows`` into ``tmp_path/docs`` as the
-    i-th batch.  FileStreamSource orders batches by modification time —
-    pin distinct mtimes or the stage files race and batch order flips."""
-    import os
-    import shutil
-    import time as _time
+def _assign_round(spark, tmp_path, rows):
+    """One ``lsh_assign_round`` over ``rows`` against the bucket state at
+    ``tmp_path/state``; returns ``(assignments, updated_state)``."""
+    from msgraphdatapipelines_spark.streaming.dedup_stream import lsh_assign_round
 
-    docs_dir = tmp_path / "docs"
-    docs_dir.mkdir(exist_ok=True)
-    stage = tmp_path / f"stage{i}"
-    spark.createDataFrame(rows, _DEDUP_SCHEMA).coalesce(1).write.parquet(str(stage))
-    now = _time.time()
-    for f in stage.glob("*.parquet"):
-        dst = docs_dir / f"batch{i}_{f.name}"
-        shutil.copy(f, dst)
-        os.utime(dst, (now + 60 * i, now + 60 * i))
-
-
-def _start_dedup_stream(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark.streaming.dedup_stream import dedup_assign_stream
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
-    )
-    return dedup_assign_stream(
-        spark, str(tmp_path / "docs"), schema, str(tmp_path / "state"),
-        str(tmp_path / "assignments"), str(tmp_path / "ckpt"),
+    docs = spark.createDataFrame(rows, _DEDUP_SCHEMA)
+    return lsh_assign_round(
+        spark, docs, str(tmp_path / "state"), "doc_id", "text", 8, 4, "xxhash64"
     )
 
 
-def test_dedup_assign_stream_two_batches(spark, tmp_path):
-    """r6 streaming incremental dedup: two staged document files arrive as
-    separate micro-batches; the final assignment set must equal running
-    lsh_incremental_assign twice by hand, and cross-batch near-dups must
-    collapse into the FIRST batch's representative without reprocessing
-    batch 1."""
+def test_lsh_assign_round_two_rounds_share_state(spark, tmp_path):
+    """r6 incremental dedup: two rounds with the state published between
+    them (outputs first, state last, as the curation stream runs it);
+    cross-round near-dups collapse into the FIRST round's representative
+    without reprocessing round 1."""
     from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators import dedup as D
 
-    _stage_docs(spark, tmp_path, 0, [(1, _BASE), (2, _FAR)])
-    _stage_docs(
-        spark, tmp_path, 1,
+    state = str(tmp_path / "state")
+    got = {}
+    for rows in (
+        [(1, _BASE), (2, _FAR)],
         [(10, _NEAR), (11, "yet another unrelated corpus about streaming state " * 8)],
-    )
-    q = _start_dedup_stream(spark, tmp_path)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ):
+        assigns, new_state = _assign_round(spark, tmp_path, rows)
+        got.update({r["doc_id"]: r for r in assigns.collect()})
+        sinks.write_snapshot(new_state, state, keep_last=2)
 
-    out = str(tmp_path / "assignments")
-    got = {
-        r["doc_id"]: r
-        for r in spark.read.option("basePath", out).parquet(out).collect()
-    }
     assert set(got) == {1, 2, 10, 11}
-    # batch-1 docs found their own clusters
+    # round-1 docs found their own clusters
     assert got[1]["rep_id"] == 1 and got[2]["rep_id"] == 2
-    # near-dup of doc 1 arriving in batch 2 collapsed into doc 1's cluster
+    # near-dup of doc 1 arriving in round 2 collapsed into doc 1's cluster
     assert got[10]["rep_id"] == 1 and not got[10]["is_new_cluster"]
     assert got[11]["rep_id"] == 11 and got[11]["is_new_cluster"]
-    # state survived: a third assignment against it still maps near to 1
-    sigs3 = D.minhash_signatures(
-        spark.createDataFrame([(30, _BASE)], _DEDUP_SCHEMA).select(
-            "doc_id", D.word_ngrams("text", 3).alias("g")
-        ),
-        "doc_id", "g", num_hashes=8, hash_fn="xxhash64",
-    )
-    state = sinks.read_snapshot(spark, str(tmp_path / "state"))
-    a3, _ = D.lsh_incremental_assign(sigs3, state, "doc_id")
+    # state survived: a third round against it still maps near to 1
+    a3, _ = _assign_round(spark, tmp_path, [(30, _BASE)])
     assert a3.collect()[0]["rep_id"] == 1
 
 
-def test_dedup_assign_stream_fails_loudly_on_unreadable_state(spark, tmp_path):
-    """Bucket state that exists but cannot be read fails the batch: the
-    query errors and the batch commits no assignments.  It must never
-    restart clustering from empty state, where doc 10 would silently
-    found its own cluster instead of joining doc 1's."""
+def test_lsh_assign_round_fails_loudly_on_unreadable_state(spark, tmp_path):
+    """Bucket state that exists but cannot be read fails the round.  It
+    must never restart clustering from empty state, where doc 10 would
+    silently found its own cluster instead of joining doc 1's.  Every
+    file of the published version is garbled, schema sidecar included,
+    so the read fails while the round is planned as well as when it
+    runs."""
     import os
 
-    _stage_docs(spark, tmp_path, 0, [(1, _BASE), (2, _FAR)])
-    q = _start_dedup_stream(spark, tmp_path)
-    try:
-        q.processAllAvailable()
-        data = [
-            os.path.join(d, f)
-            for d, _, files in os.walk(tmp_path / "state")
-            for f in files
-            if f.startswith("part-")
-        ]
-        assert data, "batch 1 must have published bucket state"
-        for f in data:
-            with open(f, "wb") as fh:
-                fh.write(b"this is not a parquet file")
-            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
-        _stage_docs(spark, tmp_path, 1, [(10, _NEAR)])
-        with pytest.raises(Exception):
-            q.processAllAvailable()
-    finally:
-        q.stop()
-    assert not (tmp_path / "assignments" / "batch_id=1" / "_SUCCESS").exists()
+    from msgraphdatapipelines_spark import sinks
+
+    _, state = _assign_round(spark, tmp_path, [(1, _BASE), (2, _FAR)])
+    sinks.write_snapshot(state, str(tmp_path / "state"), keep_last=2)
+    garbled = []
+    for d, _, files in os.walk(tmp_path / "state"):
+        for f in files:
+            if f.startswith("part-") or f == "_schema.json":
+                with open(os.path.join(d, f), "wb") as fh:
+                    fh.write(b"this is not a parquet file")
+                garbled.append(f)
+            elif f.endswith(".crc"):
+                os.remove(os.path.join(d, f))
+    assert "_schema.json" in garbled and len(garbled) > 1, garbled
+    with pytest.raises(Exception):
+        assigns, _ = _assign_round(spark, tmp_path, [(10, _NEAR)])
+        assigns.collect()
 
 
 def test_interval_join_left_outer_emits_nulls_at_watermark(spark, tmp_path):
@@ -446,82 +405,6 @@ def test_interval_join_left_outer_emits_nulls_at_watermark(spark, tmp_path):
     assert rows[1]["c_eid"] == 3          # matched pair emitted normally
     assert 2 in rows                      # unmatched left row DID emit...
     assert rows[2]["c_eid"] is None       # ...with a NULL right side
-
-
-def test_sketch_rollup_stream_matches_batch_answer(spark, tmp_path):
-    """Streaming sketch rollup: two staged event files arrive as separate
-    micro-batches appending sketch rows; the merged rollup estimate equals
-    the one-shot batch sketch over the union (merge identity), and
-    replaying a batch id overwrites instead of double-counting."""
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark.operators.sketches import (
-        build_distinct_sketches,
-        merge_distinct_sketches,
-    )
-    from msgraphdatapipelines_spark.streaming.sketch_stream import sketch_rollup_stream
-
-    schema = T.StructType(
-        [T.StructField("event_type", T.StringType()), T.StructField("user_id", T.LongType())]
-    )
-    b1 = [("click", i % 50) for i in range(500)] + [("view", i % 30) for i in range(300)]
-    b2 = [("click", 40 + i % 60) for i in range(400)] + [("view", i % 10) for i in range(100)]
-
-    ev_dir = tmp_path / "ev"
-    ev_dir.mkdir()
-    import os
-    import shutil
-    import time as _time
-
-    now = _time.time()
-    for i, batch in enumerate((b1, b2)):
-        stage = tmp_path / f"stage{i}"
-        spark.createDataFrame(batch, schema).coalesce(1).write.mode("overwrite").parquet(
-            str(stage)
-        )
-        for f in stage.glob("*.parquet"):
-            dst = ev_dir / f"batch{i}_{f.name}"
-            shutil.copy(f, dst)
-            os.utime(dst, (now + 60 * i, now + 60 * i))
-
-    rollup = str(tmp_path / "rollup")
-    q = sketch_rollup_stream(
-        spark, str(ev_dir), schema, rollup, str(tmp_path / "ckpt"),
-        part_cols=["event_type"], value_col="user_id",
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rolled = spark.read.option("basePath", rollup).parquet(rollup)
-    assert {r["batch_id"] for r in rolled.select("batch_id").distinct().collect()} == {0, 1}
-    merged = {
-        r["event_type"]: (r["distinct_estimate"], r["n_rows"])
-        for r in merge_distinct_sketches(rolled, ["event_type"]).collect()
-    }
-    union = spark.createDataFrame(b1 + b2, schema)
-    direct = {
-        r["event_type"]: (r["distinct_estimate"], r["n_rows"])
-        for r in merge_distinct_sketches(
-            build_distinct_sketches(union, ["event_type"], "user_id"), ["event_type"]
-        ).collect()
-    }
-    assert merged == direct  # merge identity across the stream boundary
-    # exact at this cardinality: click = |0..99| = 100, view = |0..29| = 30
-    assert merged["click"][0] == 100 and merged["view"][0] == 30
-    # replay idempotence: re-writing batch 0's rows must not double-count
-    inc0 = build_distinct_sketches(
-        spark.createDataFrame(b1, schema), ["event_type"], "user_id"
-    )
-    inc0.write.mode("overwrite").parquet(f"{rollup}/batch_id=0")
-    again = {
-        r["event_type"]: (r["distinct_estimate"], r["n_rows"])
-        for r in merge_distinct_sketches(
-            spark.read.option("basePath", rollup).parquet(rollup), ["event_type"]
-        ).collect()
-    }
-    assert again == merged
 
 
 def test_stream_static_enrich_stateless_two_batches(spark, tmp_path):
@@ -876,138 +759,6 @@ def test_cm_rollup_stream_merge_equals_batch_twin(spark, tmp_path):
     est = {r["k"]: r["cm_est"] for r in cm_estimate(merged, keys, "k").collect()}
     # true counts: k0-k3 appear 29×, k4-k6 28× (200 rows, i % 7)
     assert all(est[f"k{i}"] >= (29 if i < 4 else 28) for i in range(7))
-
-
-def test_bloom_table_stream_keeps_point_lookups_fresh(spark, tmp_path):
-    """late r10: the streaming Bloom sink — each arriving file appends to
-    the table and O(delta)-refreshes the manifest, so a point lookup for
-    a key that arrived mid-stream finds it without any full-table
-    rescan; keys never ingested still prune to (at most false-positive)
-    empty reads."""
-    from pyspark.sql import types as TY
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.streaming import bloom_stream as BS
-
-    schema = TY.StructType(
-        [TY.StructField("k", TY.LongType()), TY.StructField("v", TY.StringType())]
-    )
-    src = tmp_path / "bloom_src"
-    src.mkdir()
-    table = str(tmp_path / "bloom_table")
-    ck = str(tmp_path / "bloom_ck")
-
-    # initial load + manifest
-    spark.createDataFrame([(i, f"base{i}") for i in range(100)], schema).coalesce(
-        2
-    ).write.parquet(table)
-    sinks.build_bloom_manifest(spark, table, ["k"], bits=1 << 14, k=4)
-
-    def feed(name, rows):
-        pd.DataFrame({"k": [r[0] for r in rows], "v": [r[1] for r in rows]}).to_parquet(
-            str(src / name)
-        )
-
-    q = BS.bloom_table_stream(spark, str(src), schema, table, ck, "k")
-    try:
-        feed("f1.parquet", [(1001, "a"), (1002, "b")])
-        q.processAllAvailable()
-        feed("f2.parquet", [(2001, "c")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    for key, want in [(5, 1), (1001, 1), (1002, 1), (2001, 1), (9999, 0)]:
-        got = sinks.scan_bloom_pruned(spark, table, "k", key).count()
-        assert got == want, (key, got, want)
-    # the streamed keys are served by a PRUNED read: fewer files than the table holds
-    import glob as _g
-
-    n_files = len([f for f in _g.glob(f"{table}/*.parquet")])
-    cand = sinks.bloom_candidate_files(spark, table, "k", 2001)
-    assert 1 <= len(cand) < n_files
-
-
-def test_prefix_index_stream_ingest_equals_batch_build(spark, tmp_path):
-    """r11: streaming ingest into the standing prefix-gram index — docs
-    arriving as two micro-batches must leave the served exact-recall join
-    equal to the direct full-corpus operator, and a REPLAYED batch (same
-    deterministic bid) must be a no-op (no duplicate pairs)."""
-    import os
-    import shutil
-    import time as _time
-
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark.operators import dedup as D
-    from msgraphdatapipelines_spark.queries import dedup as QD
-    from msgraphdatapipelines_spark.queries import load
-    from msgraphdatapipelines_spark.streaming.prefix_stream import prefix_index_stream
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copyfile(
-        "/root/testdata/sf0.001/documents.parquet", str(sf / "documents.parquet")
-    )
-    docs = load(spark, str(sf), "documents")
-    base = docs.filter(F.col("doc_id") < 100)
-    rest1 = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 200))
-    rest2 = docs.filter(F.col("doc_id") >= 200)
-
-    # base build at a variant root (frozen vocab = base corpus)
-    root = QD.prefix_index_root(str(sf), 3, 0.5, variant="pytest-stream")
-    QD.prefix_index_build(spark, root, base)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ]
-    )
-    docs_dir = tmp_path / "arrivals"
-    docs_dir.mkdir()
-    now = _time.time()
-    for i, batch in enumerate((rest1, rest2)):
-        stage = tmp_path / f"stage{i}"
-        batch.select(*[f.name for f in schema.fields]).coalesce(1).write.parquet(
-            str(stage)
-        )
-        for f in stage.glob("*.parquet"):
-            dst = docs_dir / f"b{i}_{f.name}"
-            shutil.copy(f, dst)
-            os.utime(dst, (now + 60 * i, now + 60 * i))
-
-    q = prefix_index_stream(
-        spark, str(docs_dir), schema, root, str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    key = lambda df: sorted(  # noqa: E731
-        (r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()
-    )
-    s2, p2 = QD.read_prefix_index(spark, root)
-    streamed = key(D.set_similarity_join_from_tables(s2, p2, "doc_id", 0.5))
-    all_grams = docs.select(
-        "doc_id", F.explode(D.word_ngrams(F.lower(F.col("text")), 3)).alias("g")
-    )
-    direct = key(D.set_similarity_join(all_grams, "doc_id", "g", 0.5))
-    assert streamed == direct and len(direct) > 0
-    # two batch dirs landed
-    gen = QD.prefix_index_current_gen(spark, root)
-    batches = sorted(
-        d for d in os.listdir(f"{gen}/sets") if d.startswith("batch_")
-    )
-    assert batches == ["batch_b0", "batch_b1"]
-    # replay of batch 0 (same deterministic bid) is a no-op
-    QD.prefix_index_append(spark, root, rest1, bid="b0")
-    s3, p3 = QD.read_prefix_index(spark, root)
-    assert key(D.set_similarity_join_from_tables(s3, p3, "doc_id", 0.5)) == direct
 
 
 @pytest.mark.heavy
