@@ -37,28 +37,21 @@ discipline is shared):
   origin, r12),
 - the BM25 lexicon (``queries.text`` — migrated r13 from its older
   meta.json-commit discipline),
-- the standing IVF+PQ ANN index's REBALANCE path
-  (``queries.similarity.ann_rebalance_if_skewed`` — r13: the lease
-  fences retrains; the snapshot ``_LATEST`` pointer stays the read-side
-  commit, with models/label_lists versioned per snapshot version so one
-  pointer flip commits all three).
+- the standing IVF+PQ ANN index's erasure path
+  (``queries.similarity.ann_index_forget``: the lease fences compacts;
+  the snapshot ``_LATEST`` pointer stays the read-side commit, with
+  models/label_lists versioned per snapshot version so one pointer flip
+  commits all three).
 
 Stores that deliberately KEEP a simpler discipline (documented here so
 the audit has one place to look):
 
 - **Bloom / zonemap manifests** (``sinks``): they live INSIDE a
-  committed snapshot version (built before the pointer commit) or
-  refresh with their own lighter race-safe moves (r14: the zonemap
-  refresh claim-swaps a staged COMPLETE manifest; the Bloom refresh
-  writes unique ``words_delta_*`` dirs whose duplicates are probe-safe
-  by construction — both raced two-process in the ``-m race`` lane); a
-  stale manifest degrades to a louder full scan (``StaleManifestError``
-  fallback), never a wrong answer — the full generation machinery would
-  still add nothing but moving parts.
-- **CM-sketch rollups** (``streaming.ann_stream.cm_rollup_stream``):
-  per-batch idempotent overwrites of independent cell tables; merge
-  happens at read time (union of sketches ≡ sketch of union), so there
-  is no multi-table consistency to protect.
+  committed snapshot version (built before the pointer commit) or are
+  rebuilt whole beside the table they index; a stale manifest degrades
+  to a louder full scan (``StaleManifestError`` fallback), never a wrong
+  answer — the full generation machinery would add nothing but moving
+  parts.
 - **result cache** (``cache.serve_cached``): per plan+inputs
   fingerprint, a ``data`` directory (:func:`commit_dir`) committed by
   the ``_rc_ready`` marker; an entry is either fully present or absent,
@@ -70,12 +63,12 @@ package module outside ``sources/rest.py`` uses them instead of its own
 
 - :func:`put_file` — create, write, close; for files inside a stage a
   later rename commits (the snapshot claim sentinel ``_PUB_*``, the
-  ``_schema.json`` sidecar, the zonemap swap sentinel, the lexicon
+  ``_schema.json`` sidecar, the lexicon
   stage ``meta.json``);
 - :func:`commit_file` — ``put_file`` to a hidden uuid tmp, then one
   rename (``replace=True`` deletes the old file first); markers,
   pointers and JSON sidecars (``_commit``, ``_compacting.*``,
-  ``_LATEST.v{N}``, ``_rc_meta.json``, ``models*.json``, ``_MODELS``);
+  ``_LATEST.v{N}``, ``_rc_meta.json``, ``models*.json``);
 - :func:`commit_dir` — one first-writer-wins rename of a staged
   directory (result-cache ``data``, batch halves, ANN summaries, the
   bucketed store, every generation via :func:`commit_generation`);
@@ -281,7 +274,7 @@ def compaction_lease(fs, hpath, root: str, ttl_s: float | None = None):
     finished after it, so B's re-list (which happens after B's create)
     runs after A's create and MUST see A's still-held lease, so B backs
     off.  The only cost is that near-simultaneous racers may BOTH yield
-    — safe for every caller (compaction/rebalance callers already treat
+    — safe for every caller (compaction callers already treat
     "in progress" as retry-next-round); a short jittered re-probe turns
     the both-yield case into one winner when the other racer is gone,
     while a REAL holder still raises immediately.  Requires only

@@ -426,74 +426,6 @@ def lsh_dedup_clusters(
     )
 
 
-def lsh_incremental_assign(
-    new_signatures: DataFrame,
-    bucket_reps: DataFrame | None,
-    id_col: str,
-    num_hashes: int = 8,
-    bands: int = 4,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental near-dup assignment — dedup a NEW batch against the
-    persisted cluster state of everything seen so far, without touching
-    old documents (the incremental-crawl flow: the corpus grows batch by
-    batch and re-clustering from scratch at every refresh is the thing
-    that doesn't scale).
-
-    State is the ``(band, bh, rep_id)`` bucket→representative table — the
-    natural reusable artifact of the LSH representative pass (≤ corpus
-    band-rows, shrinks to #distinct buckets).  A new doc collapses into
-    the minimum existing representative over its buckets; docs hitting no
-    known bucket cluster among THEMSELVES via the single-step bucket-min
-    rule (same contract as ``lsh_dedup_representatives``).
-
-    Returns ``(assignments, updated_bucket_reps)``:
-    - assignments: (id, rep_id, is_new_cluster) for the new batch only;
-    - updated_bucket_reps: the merged state to persist for the next batch
-      (old reps win over new ids on shared buckets — min-id total order
-      stays stable across batches as long as ids are monotone).
-
-    Scale shape per batch: one band explode (narrow), one left equi-join
-    against state keyed on the bucket, two min-aggregations — all keyed
-    on bucket or id, no pairs, state O(buckets).  ``bucket_reps=None``
-    bootstraps from an empty state (first batch).
-    """
-    exploded = _band_explode(new_signatures, id_col, num_hashes, bands)
-    if bucket_reps is None:
-        spark = new_signatures.sparkSession
-        bucket_reps = spark.createDataFrame(
-            [], "band int, bh string, rep_id long"
-        )
-    joined = exploded.join(bucket_reps, ["band", "bh"], "left")
-    # min over existing reps (nulls ignored); fall back to in-batch
-    # bucket-min for docs with no known bucket
-    batch_min = exploded.groupBy("band", "bh").agg(F.min(id_col).alias("_bmin"))
-    with_batch = joined.join(batch_min, ["band", "bh"])
-    per_doc = with_batch.groupBy(id_col).agg(
-        F.min("rep_id").alias("_known"), F.min("_bmin").alias("_batch")
-    )
-    assignments = per_doc.select(
-        id_col,
-        F.coalesce(F.col("_known"), F.col("_batch")).alias("rep_id"),
-        F.col("_known").isNull().alias("is_new_cluster"),
-    )
-    # state update: each bucket's rep = min(existing rep, min assigned rep
-    # of this batch's members) — old reps always ≤ new ids under monotone
-    # id assignment, so existing cluster identities never change
-    new_bucket_reps = (
-        exploded.join(
-            assignments.select(id_col, F.col("rep_id").alias("_arep")), id_col
-        )
-        .groupBy("band", "bh")
-        .agg(F.min("_arep").alias("rep_id"))
-    )
-    updated = (
-        bucket_reps.unionByName(new_bucket_reps)
-        .groupBy("band", "bh")
-        .agg(F.min("rep_id").alias("rep_id"))
-    )
-    return assignments, updated
-
-
 def simhash_bits(token_col: Column | str, num_bits: int = 16) -> list[Column]:
     """Per-token ±1 contributions for each SimHash bit.
 
@@ -538,82 +470,6 @@ _CEIL_EPS = 1e-9  # subtracted before every ceil of a τ·size product: when
 
 def _eps_ceil(col):
     return F.ceil(col - F.lit(_CEIL_EPS))
-
-
-def set_similarity_candidates_prefix(
-    grams: DataFrame,
-    id_col: str,
-    gram_col: str,
-    threshold: float,
-    max_df: int | None = None,
-) -> DataFrame:
-    """LOSS-LESS candidate pairs for Jaccard ≥ ``threshold`` via prefix
-    filtering with the PPJoin positional bound (AllPairs/PPJoin family) —
-    the exact-recall alternative to the probabilistic LSH band block.
-
-    Every gram set is sorted under ONE global total order — ascending
-    document frequency, ties by gram text (rarest-first, the order that
-    minimizes candidates) — and only its PREFIX of length
-    ``|s| − ⌈τ·|s|⌉ + 1`` is exploded for the equi-join.  Prefix-filter
-    theorem: for any pair with J ≥ τ the symmetric length bound
-    ``|b| ≥ τ·|a|`` forces a required overlap ≥ ⌈τ·|a|⌉, so ≥ 1 common
-    gram must fall inside BOTH prefixes — no true pair is lost (the
-    DuckDB oracle for the wrapping query is the QUADRATIC exact join;
-    equality proves zero false negatives at fixture scale).
-
-    Positional filter (PPJoin): each prefix row carries its 1-based
-    position; a joined occurrence at (pa, pb) can contribute at most
-    ``1 + min(|a|−pa, |b|−pb)`` total overlap, and a true pair needs
-    ``α = ⌈τ/(1+τ)·(|a|+|b|)⌉`` — occurrences below the bound are pruned
-    BEFORE the pair distinct.  A true pair's FIRST shared prefix gram
-    always satisfies the bound, so pruning stays loss-less.
-
-    Plan (100 TB shape): one gram-frequency hash agg; one hash join
-    attaching (df, gram) sort keys to gram rows; one per-id agg building
-    the sorted array; posexplode ≤ prefix-length rows per set; ONE self
-    equi-join keyed on the prefix gram; pair distinct.  No global window,
-    no rank assignment — the (frequency, gram) TUPLE is the order, so the
-    vocabulary never funnels through one partition.
-
-    CORPUS CAVEAT (measured, PERF.md r7): candidate count follows the
-    frequency of the grams that land in prefixes.  On natural corpora
-    vocabulary grows with the data (Heaps' law) and prefixes stay rare;
-    on a CLOSED-vocabulary corpus (templated synthetic text) every gram's
-    frequency grows linearly with n and the filter degenerates toward
-    quadratic — word-BIGRAMS over this fixture kept 44% of all pairs,
-    TRIGRAMS 2.5%.  Shingle size is the lever: pick n so the shingle
-    vocabulary outgrows the corpus, or use the LSH rows when approximate
-    recall is acceptable.
-
-    ``max_df`` (r8, r7 VERDICT item 7) caps that degeneration WITHOUT
-    giving up exact recall: prefix occurrences of grams with document
-    frequency > ``max_df`` are split out of the self equi-join (whose
-    output on a fat gram is df² shuffle rows) and handled per fat gram by
-    an exact within-group pass (``applyInPandas`` keyed on the gram: the
-    same length + positional bounds evaluated vectorized inside the
-    group, emitting only surviving pairs — the quadratic work still
-    happens, it is inherent to exact recall on a degenerate corpus, but
-    it runs group-local and never materializes the df² candidate rows
-    through a shuffle).  Both paths union before the pair-distinct, so
-    the loss-lessness proof (quadratic-oracle equality) is preserved;
-    ``max_df=None`` keeps the single-join plan.
-
-    All ceil'd τ-products subtract ``_CEIL_EPS`` first — exact-integer
-    products otherwise round UP in IEEE and violate the zero-false-
-    negative guarantee (r7 ADVICE item 3).
-
-    r11 plan note: the core now runs NARROW (see
-    ``set_similarity_candidate_ids``) — prefix rows and the pair-distinct
-    shuffle carry only (id, size, position, gram); the sorted gram
-    ARRAYS live in a doc-count-sized side table, joined onto the pruned,
-    deduplicated pairs only by the verify (``jaccard_verify``).  At τ=0.5 the old shape
-    pushed every document's full array through ~|s|/2 prefix rows AND
-    the pair shuffle — O(|s|²/2) bytes per document; the narrow shape is
-    O(|s|) both places.  This is also what makes the prefix tables
-    PERSISTABLE as a standing artifact (queries.dedup.ensure_prefix_gram_index).
-    """
-    _, prefixes = set_similarity_prefix_tables(grams, id_col, gram_col, threshold)
-    return set_similarity_candidate_ids(prefixes, id_col, threshold, max_df=max_df)
 
 
 def set_similarity_prefix_tables(
@@ -786,7 +642,7 @@ def set_similarity_join(
 ) -> DataFrame:
     """Exact set-similarity self-join: all pairs with Jaccard ≥ threshold,
     with EXACT recall — prefix-filter + positional-bound candidates
-    (loss-less, see ``set_similarity_candidates_prefix``), then
+    (loss-less), then
     ``jaccard_verify``: both sorted gram arrays attach to the narrow
     candidate pairs and the intersection is one codegen
     ``array_intersect`` per pair — no pair⋈grams re-join (the r7

@@ -6,7 +6,8 @@ The reference's pipelines are full-refresh snapshots
 was added, deleted, changed — is the question its consumers answer by hand
 with T-SQL EXCEPT queries.  Here it is an engine operator, and composed
 with the snapshot-versioned tables (`sinks.write_snapshot`) it yields
-time-travel CDC: ``diff_snapshots(root, v1, v2)``.
+time-travel CDC: ``table_diff`` over ``sinks.read_snapshot`` at two
+versions.
 
 Scale: ONE full-outer hash join on the key (both sides shuffle on the
 key — at 100 TB co-locate by bucketing both versions on the key, r6's
@@ -17,7 +18,7 @@ Python, no collect.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -67,16 +68,3 @@ def table_diff(base: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
         )
     )
 
-
-def diff_snapshots(
-    spark: SparkSession, root: str, v_old: int, v_new: int, keys: list[str]
-) -> DataFrame:
-    """Time-travel CDC over a snapshot-versioned table (`sinks.write_snapshot`
-    layout): the keyed diff between two committed versions."""
-    from ..sinks import read_snapshot
-
-    return table_diff(
-        read_snapshot(spark, root, version=v_old),
-        read_snapshot(spark, root, version=v_new),
-        keys,
-    )

@@ -15,7 +15,7 @@ a per-split scan and a full-data shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

@@ -27,40 +27,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def fuzzy_join_blocked(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    max_dist: int = 2,
-    prefix: int = 4,
-    len_band: int = 2,
-) -> DataFrame:
-    """Join ``left`` and ``right`` rows whose strings are within
-    ``max_dist`` edits, blocking on a shared ``prefix``-char key and a
-    ``len_band`` length band.  Adds a ``dist`` column (int).
-
-    Plan: ONE equi-join on the prefix key (hash join; broadcast when one
-    side is small), the length band and the levenshtein verify evaluated
-    as codegen'd post-conditions on same-block pairs only.
-
-    ``prefix`` defaults to 4 — the documented production posture (module
-    docstring: 2 chars ≈ 10³ blocks is too skewed at 100 TB; 4 chars
-    restores balance, asserted by the block-size-distribution pytest).
-    The recall trade steepens with it: any edit inside the first 4 chars
-    now changes the block — callers needing that recall use
-    ``fuzzy_join_qgram``, which has no positional blind spot."""
-    lc, rc = F.col(left_col), F.col(right_col)
-    cond = (
-        (F.substring(lc, 1, prefix) == F.substring(rc, 1, prefix))
-        & (F.abs(F.length(lc) - F.length(rc)) <= len_band)
-        & (F.levenshtein(lc, rc) <= max_dist)
-    )
-    return left.join(right, cond).withColumn(
-        "dist", F.levenshtein(lc, rc).cast("int")
-    )
-
-
 def fuzzy_join_qgram(
     left: DataFrame,
     right: DataFrame,
@@ -87,7 +53,7 @@ def fuzzy_join_qgram(
     Row-identity contract (r7 ADVICE item 4): candidates dedup on
     ``monotonically_increasing_id`` stamped per side BEFORE the gram
     explode, so legitimately duplicated input rows keep their output
-    multiplicity (matches ``fuzzy_join_blocked`` on the same input) and
+    multiplicity and
     overlapping left/right column names cannot make the dedup ambiguous.
     ``left`` and ``right`` must not share column names (the joined output
     would be ambiguous in ANY join) — validated up front.

@@ -228,8 +228,8 @@ def kmeans_centroids(
     use_table = assign == "table" or (assign == "auto" and k > 64)
     cv = F.col(vec_c).cast("array<double>")
     if seed_vectors is not None:
-        # caller-supplied init (r13): the automated rebalance seeds
-        # proportionally to CURRENT list occupancy — lowest-id-global
+        # caller-supplied init (r13): a retrain can seed proportionally
+        # to CURRENT list occupancy — lowest-id-global
         # seeding would seat every seed in the historical corpus and
         # Lloyd could never split a drifted clump, however many lists
         # it overflows.  Still deterministic: the caller derives seeds
@@ -624,26 +624,6 @@ def pq_encode(
     return norm.select("cid", F.array(*code_s).alias("code"))
 
 
-def pq_reconstruct_expr(code: Column, codebooks: list[list[list[float]]]) -> Column:
-    """Decode a PQ ``code`` (array<int>, one codeword index per
-    subspace) back to its reconstructed (approximately unit-norm)
-    vector: the concatenation of the selected codeword per subspace —
-    the standard IVF-PQ reconstruction (FAISS ``reconstruct``).  Used by
-    the rebalance's lost-append salvage (r15, ADVICE): appended batches
-    store only ``(cid, cent, code)``, so re-assigning a row to a
-    RETRAINED coarse quantizer has to start from the reconstruction —
-    its nearest available stand-in for the original vector (PQ is
-    lossy; the assignment differs from the raw vector's only within
-    quantization error, and ADC scoring stays exact either way because
-    the code itself is carried verbatim).  Pure literal expression,
-    same size class as the ADC LUT: ks·dim doubles."""
-    parts = []
-    for s, book in enumerate(codebooks):
-        lit = F.array(*[F.array(*[F.lit(float(x)) for x in cw]) for cw in book])
-        parts.append(F.element_at(lit, code[s] + F.lit(1)))
-    return F.flatten(F.array(*parts))
-
-
 def pq_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -809,10 +789,10 @@ def _probe_cent_frame(
     """``(qid, cent[, lut])`` — one row per (query, probed coarse list),
     from a prepared ``(qid, _v, _n)`` query frame.  THE single definition
     of which lists a query batch probes: ``ivf_pq_topk``'s candidate join
-    and :func:`probed_cent_values`' pushdown set both come from here, so
-    a pruned artifact scan can never miss a list the join would have
-    probed (divergence would be silent recall loss, not an error — the
-    join on ``cent`` simply finds no rows for the missing list).
+    and the served path's pushdown set both come from here, so a pruned
+    artifact scan can never miss a list the join would have probed
+    (divergence would be silent recall loss, not an error — the join on
+    ``cent`` simply finds no rows for the missing list).
 
     ≤64 centroids: the flat-literal probe expression (r10) — the
     oracle-replayable graded configuration.  Above: the broadcast
@@ -845,42 +825,6 @@ def _probe_cent_frame(
     out = qp.withColumn("cent", F.explode(F.transform(probed, lambda s: s["cent"])))
     cols = ["qid", "cent"] + ([payload.alias("lut")] if payload is not None else [])
     return out.select(*cols)
-
-
-def probed_cent_values(
-    queries: DataFrame,
-    id_q: str,
-    vec_q: str,
-    centroids: list[tuple[int, list[float]]],
-    nprobe: int,
-) -> list[int]:
-    """The DISTINCT coarse lists a query batch will probe, collected as a
-    sorted int list — PLANNING-sized state (≤ min(|Q|·nprobe, n_centroids)
-    values; the same class as the centroid/codebook collects), costing one
-    query-batch-sized job.
-
-    This is the probe-list-pushdown handle (late r12): a standing IVF+PQ
-    artifact published clustered by ``cent`` with a zone-map manifest
-    (``compact_ann_index(cluster_col="cent")``) is then read through
-    ``sinks.read_snapshot_pruned_in(snapshot, "cent", probed_cent_values
-    (...))`` — only the files holding probed lists open, instead of the
-    broadcast join scanning the whole artifact to drop ~(1 − nprobe/k) of
-    it.  Computed by the SAME :func:`_probe_cent_frame` expression the
-    join probes with, so pushdown and probe cannot disagree."""
-    usable = [
-        (cid, cvec, math.sqrt(sum(x * x for x in cvec))) for cid, cvec in centroids
-    ]
-    usable = [t for t in usable if t[2] > 0]
-    if not usable:
-        raise ValueError("probed_cent_values: no non-zero-norm centroids")
-    qv = F.col(vec_q).cast("array<double>")
-    qn = (
-        queries.select(F.col(id_q).alias("qid"), qv.alias("_v"))
-        .withColumn("_n", F.sqrt(seq_dot(F.col("_v"), F.col("_v"))))
-        .filter(F.col("_n") > 0)
-    )
-    frame = _probe_cent_frame(qn, usable, nprobe)
-    return sorted(r["cent"] for r in frame.select("cent").distinct().collect())
 
 
 def ivf_pq_topk(
@@ -943,8 +887,7 @@ def ivf_pq_topk(
 
     cv = F.col(vec_c).cast("array<double>")
     # corpus index: (cid, cent, code) — ONE narrow map; at scale this is
-    # the persisted artifact, maintained incrementally with
-    # ivf_incremental_append and passed in via ``index=`` (r7); rebuilt
+    # the persisted artifact, passed in via ``index=`` (r7); rebuilt
     # only when the models retrain
     indexed = index
     if indexed is None and index_pruner is None:
@@ -1341,8 +1284,8 @@ def ivf_pq_index(
     for a corpus
     under FIXED trained models — exactly the artifact ``ivf_pq_topk``
     builds inline (similarity.py:733-741), factored out so it can be
-    written once and APPENDED to incrementally (``ivf_incremental_append``)
-    instead of rebuilt per refresh.
+    written once and APPENDED to incrementally instead of rebuilt per
+    refresh.
 
     Assignment is cosine-nearest centroid — the same scoring
     ``ivf_pq_topk`` probes with, so probe lists and index lists agree.
@@ -1399,34 +1342,6 @@ def ivf_pq_index(
         ).drop("_uv")
     enc = pq_encode(c.select("cid", F.col("_cv").alias("v")), "cid", "v", codebooks, dim=dim)
     return c.select("cid", "cent", *meta_cols).join(enc, "cid")
-
-
-def ivf_incremental_append(
-    new_vectors: DataFrame,
-    index: DataFrame | None,
-    id_c: str,
-    vec_c: str,
-    centroids: list[tuple[int, list[float]]],
-    codebooks: list[list[list[float]]],
-    dim: int = 64,
-    meta_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Incremental ANN index maintenance — the similarity-side twin of
-    ``dedup.lsh_incremental_assign``: a NEW vector batch is encoded under
-    the FIXED trained models and appended to the persisted ``(cid, cent,
-    code)`` index; previously-indexed vectors are never touched (at
-    billion scale the append is a partition add, not a rebuild).
-
-    The documented operational contract: assignments stay valid exactly
-    as long as the quantizers do — monitor per-list counts (one groupBy
-    on this frame) and retrain + REBUILD when new batches drift off the
-    trained distribution (the published IVF re-balancing trade).
-    ``index=None`` bootstraps an empty index (first batch).
-    """
-    fresh = ivf_pq_index(
-        new_vectors, id_c, vec_c, centroids, codebooks, dim=dim, meta_cols=meta_cols
-    )
-    return fresh if index is None else index.unionByName(fresh)
 
 
 def hard_negatives(

@@ -766,7 +766,7 @@ def _lower_gram_rows(docs: DataFrame, n: int) -> DataFrame:
 
 # r13 (r12 VERDICT item 3): the protocol primitives live in the shared
 # ``genstore`` module — ONE commit discipline for every standing store
-# (prefix-gram index here, the BM25 lexicon, the ANN rebalance path).
+# (prefix-gram index here, the BM25 lexicon, the ANN erasure path).
 from .. import genstore as _gs
 
 

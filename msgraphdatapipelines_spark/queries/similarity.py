@@ -1104,8 +1104,8 @@ def ensure_standing_index(
     ``indexed_candidates`` then probes the pre-existing artifact (the
     steady-state serving shape a deployment runs).  First touch builds:
     models → ``models.json``, encoded rows → ``batches/batch_id=0``
-    (ann_index_stream's grow-only layout, so the streaming appender can
-    keep extending it), then ``compact_ann_index`` publishes the resolved
+    (the grow-only batch layout erasure appends tombstones to), then
+    ``compact_ann_index`` publishes the resolved
     view with the atomic pointer flip as the commit marker — a crash
     mid-build leaves no pointer and the next call rebuilds.
 
@@ -1200,12 +1200,11 @@ def ensure_standing_index(
                         shutil.rmtree(stage, ignore_errors=True)  # racer won retry
                 if aside is not None:
                     shutil.rmtree(aside, ignore_errors=True)
-    # r13 (rebalance support): resolve the snapshot version ONCE and load
-    # the VERSION-MATCHED models — a rebalance publishes models.v{N}.json
-    # + label_lists.v{N} + snapshot v=N behind one _LATEST flip, so a
-    # reader that resolved version N can never pair new centroids with an
-    # old snapshot (or vice versa).  models.json is the v1 (initial
-    # build) layout; versioned files only exist once a rebalance ran.
+    # r13: resolve the snapshot version ONCE and load the VERSION-MATCHED
+    # models — a compact publishes models.v{N}.json + label_lists.v{N} +
+    # snapshot v=N behind one _LATEST flip, so a reader that resolved
+    # version N reads the models paired with it.  models.json is the v1
+    # (initial build) layout; versioned files exist once a forget ran.
     version = sinks._read_latest_version(spark, snap)
     models = _load_models_for(spark, root, version)
     cents = [(int(c), v) for c, v in models["centroids"]]
@@ -1221,7 +1220,7 @@ def ensure_standing_index(
 # ever creates new version dirs behind the ``_LATEST`` flip, never
 # rewrites one.  So they cache safely keyed by (session, root, resolved
 # version) — the pointer itself is still re-resolved on every query
-# (the coherence point: a rebalance/compact/forget publishing a new
+# (the coherence point: a compact/forget publishing a new
 # version changes the resolved version, which changes the key, which is
 # the invalidation).  ``ann_index_forget`` additionally purges the
 # root's entries outright (erasure posture: drop even never-again-
@@ -1248,9 +1247,9 @@ def _memo_serve_plan(spark, root: str, version: int, tag: str, build):
     exactly what this memo does.  EXECUTION still happens on every call
     (the cached object is an unexecuted DataFrame; each action re-runs
     the full scan→probe→rerank DAG — nothing about results is cached).
-    Version-keyed ⇒ a pointer flip builds fresh; ``ann_index_forget`` /
-    rebalance purge via :func:`plan_cache_invalidate` like every other
-    planning entry."""
+    Version-keyed ⇒ a pointer flip builds fresh; ``ann_index_forget``
+    purges via :func:`plan_cache_invalidate` like every other planning
+    entry."""
     st = _plan_cache_state(spark, root, version)
     df = st.get(tag)
     if df is None:
@@ -1260,8 +1259,8 @@ def _memo_serve_plan(spark, root: str, version: int, tag: str, build):
 
 def plan_cache_invalidate(root: str) -> None:
     """Drop every cached planning entry for ``root``, all versions.
-    Called by the writers that change what future resolves should see
-    (forget, rebalance) — version-keying already prevents stale serves,
+    Called by the writer that changes what future resolves should see
+    (forget) — version-keying already prevents stale serves,
     so this is about promptly releasing erased/obsolete planning state,
     not correctness.  Also drops the sinks-level zonemap-manifest
     entries under the root (the same erasure posture: a version-keyed
@@ -1274,7 +1273,7 @@ def plan_cache_invalidate(root: str) -> None:
 
 def _load_models_for(spark: SparkSession, root: str, version: int) -> dict:
     """The (centroids, codebooks) trained for snapshot ``version``:
-    ``models.v{version}.json`` when a rebalance published it, else the
+    ``models.v{version}.json`` when a compact published it, else the
     initial build's ``models.json`` (the v1 layout).  Cached per
     (session, root, version) — callers must treat the dict as frozen."""
     import json
@@ -1309,13 +1308,10 @@ def ann_index_forget(spark: SparkSession, root: str, ids: list) -> int:
     ``dedup.prefix_index_forget``): tombstones + immediate fold, under
     the store's compaction lease.
 
-    1. ids are recorded durably under ``{root}/_forgotten`` (the
-       rebalance anti-joins its retrain corpus against this manifest, so
-       a later retrain from a caller-held frame cannot resurrect them);
-    2. a tombstone batch (``cent = -1`` marker rows — the layout
-       ``read_ann_index`` already resolves for streamed deletions) is
-       appended under the next batch id;
-    3. ``compact_ann_index`` republishes the snapshot WITHOUT the docs
+    1. a tombstone batch (``cent = -1`` marker rows — the layout
+       ``read_ann_index`` already resolves) is appended under the next
+       batch id;
+    2. ``compact_ann_index`` republishes the snapshot WITHOUT the docs
        behind the ``_LATEST`` flip, carrying the models forward paired
        to the version it ACTUALLY publishes (r14, ADVICE: the pairing —
        and the versioned label-steering summary — is compact-owned now,
@@ -1326,23 +1322,13 @@ def ann_index_forget(spark: SparkSession, root: str, ids: list) -> int:
 
     Returns the published snapshot version.  Once it returns, no
     version-resolved reader can serve the erased vectors."""
-    import uuid
-
     from .. import genstore as _gs
     from .. import sinks
-    from ..streaming.ann_stream import (
-        compact_ann_index,
-        recover_batches,
-        resolve_batches_models,
-    )
+    from ..streaming.ann_stream import compact_ann_index, resolve_batches_models
 
     fs, hpath = sinks._fs_for(spark, root)
     with _gs.compaction_lease(fs, hpath, root):
-        recover_batches(spark, root)
         ids_df = spark.createDataFrame([(int(i),) for i in ids], "cid: long")
-        ids_df.coalesce(1).write.parquet(
-            f"{root}/_forgotten/ids_{uuid.uuid4().hex[:8]}"
-        )
         snap = f"{root}/snapshot"
         # tombstone batch, schema-aligned with the existing batch rows
         existing = spark.read.option("recursiveFileLookup", "true").parquet(
@@ -1364,9 +1350,8 @@ def ann_index_forget(spark: SparkSession, root: str, ids: list) -> int:
             + 1
         )
         tomb.write.mode("overwrite").parquet(f"{root}/batches/batch_id={next_bid}")
-        # the models the batches rows are actually encoded under (the
-        # dir's _MODELS stamp post-rebalance, else the bootstrap) size
-        # the clustering; compact_ann_index itself carries them forward
+        # the models the batches rows are encoded under size the
+        # clustering; compact_ann_index itself carries them forward
         # paired to the published version (r14)
         kc = len(resolve_batches_models(spark, root)["centroids"])
         has_label = "label" in existing.columns
@@ -1385,642 +1370,6 @@ def ann_index_forget(spark: SparkSession, root: str, ids: list) -> int:
         # carries per-list id bounds derived from erased rows)
         plan_cache_invalidate(root)
         return pub_v
-
-
-def ann_rebalance_if_skewed(
-    spark: SparkSession,
-    root: str,
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    meta_cols: tuple[str, ...] = ("label",),
-    max_share_ratio: float = 4.0,
-    n_centroids: int | None = None,
-    dim: int = DIM,
-    _test_hook_before_commit=None,
-    _test_hook_before_swap=None,
-    _test_hook_after_sweep=None,
-) -> dict:
-    """AUTOMATED IVF rebalance (r13, r12 VERDICT item 2): the action the
-    ``ann_index_list_stats`` occupancy monitor and
-    ``ivf_incremental_append``'s prose contract ("retrain + rebuild when
-    appended batches drift off the trained distribution") prescribed but
-    nothing triggered — at 100 TB with drifting ingest, skewed lists
-    silently degrade recall-per-nprobe until a human reads the dashboard.
-
-    Trigger: one artifact-sized aggregation over the resolved batch view
-    (never the corpus) — when the fullest list holds more than
-    ``max_share_ratio`` × the uniform share (n/k), the coarse quantizer
-    no longer reflects the data and probes concentrate.  Below the
-    threshold this is a pure monitor call: stats dict, no writes.
-
-    CALLER CONTRACT for ``vectors`` (r16, ADVICE): the frame must cover
-    every batch present in ``{root}/batches`` at the moment of THIS
-    call — build it (e.g. via ``read_ann_index`` + decode, or the
-    upstream corpus the appends came from) immediately before invoking.
-    Two safety nets close the destroy-a-lost-append windows anyway:
-    batch dirs that appear AFTER the entry capture are folded verbatim
-    into the new generation (name-diff salvage, r15), and any live cid
-    present in the OLD generation's resolved view but absent from the
-    new one and the erasure manifest is re-assigned and folded back
-    (cid-diff salvage, r16), and a cid the old generation last saw as a
-    TOMBSTONE that the stale frame resurrected gets its deletion
-    re-issued above the new generation (tombstone carry-forward, r16) —
-    so a stale frame costs at most a stale ENCODING for cids it carried
-    old values for, never a lost row and never an undeleted delete.
-
-    Retrain + republish (under the shared ``genstore`` compaction lease,
-    so rebalances serialize and appenders using the same discipline can
-    fence):
-
-    1. retrain centroids on the CURRENT vectors with k ∝ √n (the
-       module's standing scale rule); PQ codebooks are kept — subspace
-       quantization is independent of the coarse partition, so re-coding
-       vectors would buy nothing and cost a corpus pass,
-    2. re-assign + encode every vector under the new centroids into a
-       STAGED batches dir stamped with its own ``_MODELS`` file (r14:
-       the dir is self-describing — see
-       ``ann_stream.resolve_batches_models``),
-    3. ``compact_ann_index`` publishes — FROM THE STAGE, before any
-       batches swap — snapshot ``v=V`` clustered by the new list ids
-       with its zonemap manifest, plus ``models.v{V}.json`` and the
-       versioned label-steering summary ``label_lists.v{V}``, all keyed
-       to the version the compact ACTUALLY publishes (r14, ADVICE: the
-       r13 code precomputed ``_LATEST + 1``, which orphan ``v=`` crash
-       debris could desynchronize from ``write_snapshot``'s
-       ``max(v=) + 1`` — readers then paired the retrained snapshot with
-       the bootstrap quantizer, silently wrong).  Everything becomes
-       visible through the single ``_LATEST`` pointer flip,
-    4. only THEN the grow-only batches dir is swapped for the stage
-       (rename-aside + rename-in) so future appends/compactions build on
-       the retrained assignment, and the old dir is deleted.
-
-    Crash analysis (r14, ADVICE: the r13 swap-before-commit order left a
-    window with NO batches dir and a window where appends mixed two
-    quantizers in one dir):
-
-    - before the ``_LATEST`` flip: version N keeps serving; debris = the
-      stage dir + possibly ``models.v{V}.json`` / ``label_lists.v{V}``
-      for a version never published — harmless, because the NEXT publish
-      at V overwrites both with correctly-paired content (the pairing is
-      compact-owned now), and the next rebalance sweeps stage/old debris
-      under the lease;
-    - after the flip, before the swap: serving is the retrained triple
-      (consistent); appends still land in the OLD batches dir and encode
-      under ITS ``_MODELS``/bootstrap stamp — self-consistent.  The next
-      compact of that dir republishes the old assignment with ITS models
-      paired: the retrain is LOST (the occupancy monitor re-triggers
-      it), correctness never;
-    - between the two swap renames: no batches dir — every entry point
-      calls ``ann_stream.recover_batches`` which renames the newest
-      stage into place (the stage is the committed state here, since the
-      swap only runs post-flip);
-    - after the swap, before the old-dir delete: unreferenced debris,
-      swept by the next rebalance.
-
-    Returns the stats dict (occupancy before, and after when retrained).
-    Serve-equality and recall-restoration are pinned in
-    tests/test_similarity.py::test_ann_rebalance_*."""
-    import json
-    import math
-    import uuid
-
-    from .. import genstore as _gs
-    from .. import sinks
-    from ..streaming.ann_stream import (
-        compact_ann_index,
-        read_ann_index,
-        recover_batches,
-        write_batches_models,
-    )
-
-    fs, hpath = sinks._fs_for(spark, root)
-    recover_batches(spark, root)
-    # r15 (ADVICE): capture the batch-dir listing at ENTRY — the
-    # earliest instant this function can vouch the caller's corpus
-    # frame covers.  Appenders never wait on the compaction lease, so
-    # any batch_id dir that appears AFTER this set is concurrent ingest
-    # the retrained stage cannot contain; the swap's old-dir delete
-    # must salvage those instead of silently destroying them.
-    captured_batches: set[str] = set()
-    if fs.exists(hpath(f"{root}/batches")):
-        captured_batches = {
-            st.getPath().getName()
-            for st in fs.listStatus(hpath(f"{root}/batches"))
-            if st.getPath().getName().startswith("batch_id=")
-        }
-    if fs.exists(hpath(f"{root}/_forgotten")):
-        # erasure manifest (ann_index_forget): a retrain re-encodes from
-        # the caller-held corpus frame, which may still carry erased
-        # docs — anti-join so a rebalance can never resurrect them
-        # explicit schema: a forget's manifest write may be IN FLIGHT
-        # (dir exists, only _temporary inside) — inference would throw
-        fg = (
-            spark.read.schema("cid long")
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{root}/_forgotten")
-        )
-        vectors = vectors.join(
-            F.broadcast(fg.select(F.col("cid").alias(id_col))), id_col, "left_anti"
-        )
-    view = read_ann_index(spark, f"{root}/batches")
-    row = (
-        view.groupBy("cent")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.sum("n").alias("total"),
-            F.count(F.lit(1)).alias("k"),
-        )
-        .collect()[0]
-    )
-    if row["total"] is None or int(row["total"]) == 0:
-        # empty index (no batches yet / all tombstoned): nothing to
-        # monitor, nothing to retrain
-        return {"n_vectors": 0, "lists": 0, "max_list_rows": 0,
-                "max_share_ratio": 0.0, "retrained": False}
-    n_total, k_cur, mx = int(row["total"]), int(row["k"]), int(row["mx"])
-    share = mx * k_cur / n_total  # 1.0 == perfectly uniform occupancy
-    out = {
-        "n_vectors": n_total,
-        "lists": k_cur,
-        "max_list_rows": mx,
-        "max_share_ratio": round(share, 3),
-        "retrained": False,
-    }
-    if share <= max_share_ratio:
-        return out
-    # THRASH GUARD: when the live models already came from a rebalance
-    # (a versioned models file exists for the current snapshot version)
-    # at the SAME target k, retraining again would run a full corpus
-    # pass to produce an equivalent quantizer — the residual skew is
-    # data-intrinsic (e.g. one dense sub-cluster per list), not model
-    # staleness, and a per-round caller would otherwise retrain forever.
-    # Continued heavy drift re-enables the retrain by itself: n grows,
-    # so the √n target k pulls ahead of the current k.  An explicit
-    # ``n_centroids`` overrides the guard.
-    kc_target = (
-        n_centroids if n_centroids is not None else max(2, round(math.sqrt(n_total)))
-    )
-    snap0 = f"{root}/snapshot"
-    v0 = (
-        sinks._read_latest_version(spark, snap0)
-        if sinks.snapshot_exists(spark, snap0)
-        else 0
-    )
-    # the guard keys on the models' PROVENANCE, not mere existence of a
-    # versioned file (r14): erasure/compaction now copy models forward
-    # to every published version, so a bootstrap quantizer that happens
-    # to sit at the target k must still retrain — only a file a
-    # rebalance actually trained (``retrained`` flag) proves the
-    # residual skew is data-intrinsic
-    if (
-        n_centroids is None
-        and v0 >= 1
-        and fs.exists(hpath(f"{root}/models.v{v0}.json"))
-        and (_m0 := _load_models_for(spark, root, v0)).get("retrained")
-        and len(_m0["centroids"]) == kc_target
-    ):
-        out["skipped"] = "already rebalanced at the target k; residual skew is data-intrinsic"
-        return out
-    # MONITOR semantics under contention: a second driver's rebalance
-    # (or an in-flight forget/compact) holding the lease means the work
-    # is being done — skip with a reason instead of crashing the caller
-    # (a per-round stream check or a fleet-wide cron must never die on
-    # a sibling's lease; erasure keeps its raise — a forget that didn't
-    # commit must be retried, not shrugged off).
-    try:
-        lease_cm = _gs.compaction_lease(fs, hpath, root)
-        lease_cm.__enter__()
-    except RuntimeError as e:
-        if "compact already in progress" in str(e):
-            out["skipped"] = "another rebalance/compact holds the lease"
-            return out
-        raise
-    try:
-        snap = f"{root}/snapshot"
-        # debris sweep (r14): under the lease no rebalance is in flight,
-        # so any stage/old dir is a crashed sibling's leftovers — a
-        # mid-swap crash is completed first (recover), the rest deleted
-        recover_batches(spark, root)
-        for st in fs.listStatus(hpath(root)):
-            nm = st.getPath().getName()
-            if st.isDirectory() and (
-                nm.startswith("batches.stage.")
-                or nm.startswith("batches.old.")
-                # r15: the label/range steering-summary swaps leave
-                # `.old.{uid}` / `.stage.{uid}` dirs when a publisher
-                # crashed between its renames — readers recover via
-                # derive-if-missing, but nothing swept the debris
-                or (
-                    (nm.startswith("label_lists") or nm.startswith("range_lists"))
-                    and (".old." in nm or ".stage." in nm)
-                )
-            ):
-                fs.delete(st.getPath(), True)
-        if _test_hook_after_sweep is not None:
-            # the mid-retrain window the r16 stamp protects: debris
-            # swept, our own stage not yet written — a crash here shows
-            # (batches + models.v{N}.json + NO debris) to the resolver
-            _test_hook_after_sweep()
-        # r16 (exposed by the rebalance-vs-erasure race mode): the
-        # entry-time `_forgotten` anti-join reads the manifest listing
-        # BEFORE the lease — a forget that commits between our entry and
-        # our lease acquisition is invisible to it (and a lazy frame
-        # created at entry pins its file listing), so the retrain would
-        # re-encode freshly-erased rows into the published snapshot.
-        # Re-apply the anti-join HERE, under the lease, from a fresh
-        # read: after this point no forget can commit until we release.
-        if fs.exists(hpath(f"{root}/_forgotten")):
-            vectors = vectors.join(
-                F.broadcast(
-                    spark.read.schema("cid long")
-                    .option("recursiveFileLookup", "true")
-                    .parquet(f"{root}/_forgotten")
-                    .select(F.col("cid").alias(id_col))
-                ),
-                id_col,
-                "left_anti",
-            )
-        # version 0 = stream-owned root that has never compacted to a
-        # snapshot (init_ann_stream_root bootstrap): models come from
-        # the bootstrap models.json and the retrain publishes v=1
-        version = (
-            sinks._read_latest_version(spark, snap)
-            if sinks.snapshot_exists(spark, snap)
-            else 0
-        )
-        kc = n_centroids if n_centroids is not None else max(2, round(math.sqrt(n_total)))
-        # re-check the thrash guard UNDER the lease: a racing rebalance
-        # may have committed between the pre-lease check and acquiring
-        # the lease (TOCTOU) — retraining again at the same target k
-        # would just burn a corpus pass on an equivalent quantizer
-        if (
-            n_centroids is None
-            and version >= 1
-            and fs.exists(hpath(f"{root}/models.v{version}.json"))
-            and (_m1 := _load_models_for(spark, root, version)).get("retrained")
-            and len(_m1["centroids"]) == kc
-        ):
-            out["skipped"] = "a racing rebalance already published the target k"
-            return out
-        # occupancy-proportional seeding: pick the kc rows with the
-        # smallest within-list rank FRACTION (rank-1)/list_size — each
-        # list contributes seeds ∝ its occupancy, so the overfull list
-        # gets enough of them for one Lloyd pass to actually split it
-        # (lowest-id-global seeding seats every seed in the historical
-        # corpus and leaves a drifted clump as one fat list forever).
-        # Rank order within a list is md5(cid) — a DETERMINISTIC
-        # pseudo-random draw; plain cid order would bias every seed into
-        # the list's oldest members (exactly the pre-drift rows, since
-        # appends carry higher ids) and the drift mass would again be
-        # seedless and unsplittable.
-        from pyspark.sql import Window
-
-        wn = Window.partitionBy("cent").orderBy(
-            F.md5(F.col("cid").cast("string")), "cid"
-        )
-        lc = view.groupBy("cent").agg(F.count(F.lit(1)).alias("_ln"))
-        seed_ids = [
-            r["cid"]
-            for r in view.select("cid", "cent")
-            .withColumn("_rn", F.row_number().over(wn))
-            .join(F.broadcast(lc), "cent")
-            .withColumn("_frac", (F.col("_rn") - 1) / F.col("_ln"))
-            .orderBy("_frac", "cid")
-            .limit(kc)
-            .collect()
-        ]
-        by_id = {
-            r["_i"]: [float(x) for x in r["_v"]]
-            for r in vectors.select(
-                F.col(id_col).alias("_i"),
-                F.col(vec_col).cast("array<double>").alias("_v"),
-            )
-            .filter(F.col(id_col).isin(seed_ids))
-            .collect()
-        }
-        seeds = [by_id[i] for i in seed_ids if i in by_id]
-        if len(seeds) < kc:
-            # index rows absent from the handed corpus (caller passed a
-            # subset): top up deterministically from the lowest-id rows
-            have = set(seed_ids) & set(by_id)
-            extra = (
-                vectors.select(
-                    F.col(id_col).alias("_i"),
-                    F.col(vec_col).cast("array<double>").alias("_v"),
-                )
-                .filter(~F.col("_i").isin(list(have)))
-                .orderBy("_i")
-                .limit(kc - len(seeds))
-                .collect()
-            )
-            seeds += [[float(x) for x in r["_v"]] for r in extra]
-        cents = S.kmeans_centroids(
-            vectors, id_col, vec_col, k=kc, iters=1, dim=dim, exact_mean=True,
-            seed_vectors=seeds,
-        )
-        books = _load_models_for(spark, root, version)["codebooks"]
-        keep = [mc for mc in meta_cols if mc in vectors.columns]
-        stage = f"{root}/batches.stage.{uuid.uuid4().hex[:8]}"
-        S.ivf_pq_index(
-            vectors, id_col, vec_col, cents, books, dim=dim, meta_cols=tuple(keep)
-        ).write.parquet(f"{stage}/batch_id=0")
-        # the stage is self-describing (r14): its _MODELS stamp travels
-        # with the dir through swap/recovery, so appenders always encode
-        # consistently with the rows around them; `retrained` marks the
-        # provenance the thrash guard keys on
-        write_batches_models(
-            spark, stage,
-            {"centroids": cents, "codebooks": books, "retrained": True},
-        )
-        if _test_hook_before_commit is not None:
-            _test_hook_before_commit()
-        # COMMIT: compact FROM THE STAGE — snapshot v=V, models.v{V},
-        # label_lists.v{V} all keyed to the actually-published version
-        # and visible through the one _LATEST flip (r14, ADVICE)
-        pub_v = compact_ann_index(
-            spark,
-            stage,
-            snap,
-            models_root=root,
-            versioned_label_lists=bool(keep),
-            cluster_files=max(8, kc // 4),
-        )
-        if _test_hook_before_swap is not None:
-            _test_hook_before_swap()
-        # post-commit swap: appends from here on build on the retrained
-        # assignment; every crash window is repaired or absorbed (see
-        # docstring crash analysis).  The _SWAP_MANIFEST sentinel (r16)
-        # marks the swap's start: on copy-rename stores a crash can
-        # leave `batches` TORN (partial copy) rather than merely absent,
-        # and recover_batches uses the staged manifest to detect and
-        # complete the swap (see its docstring for the posture).
-        manifest = {"files": sinks._rel_files(fs, hpath, stage)}
-        _gs.commit_file(fs, hpath, f"{stage}/_SWAP_MANIFEST", json.dumps(manifest).encode())
-        old = f"{root}/batches.old.{uuid.uuid4().hex[:8]}"
-        fs.rename(hpath(f"{root}/batches"), hpath(old))
-        if not fs.rename(hpath(stage), hpath(f"{root}/batches")) and not fs.exists(
-            hpath(f"{root}/batches")
-        ):
-            raise OSError(f"could not swap retrained batches into {root}")
-        # r15: an appender's job commit can CREATE a fresh batches dir
-        # inside the two-rename window (well-behaved appenders call
-        # recover_batches first, but encode time separates that check
-        # from the write) — Hadoop then NESTS our stage inside it and
-        # reads would hit a torn layout.  Detect via the missing
-        # top-level _MODELS stamp and un-nest: we hold the lease, so
-        # the only racer class is appenders adding batch_id dirs whose
-        # ids are disjoint from the stage's batch_id=0.
-        stage_base = stage.rsplit("/", 1)[1]
-        nested_stage = f"{root}/batches/{stage_base}"
-        if not fs.exists(hpath(f"{root}/batches/_MODELS")) and fs.exists(
-            hpath(nested_stage)
-        ):
-            for st in fs.listStatus(hpath(nested_stage)):
-                nm = st.getPath().getName()
-                tgt = f"{root}/batches/{nm}"
-                if fs.exists(hpath(tgt)) and nm.startswith("batch_id="):
-                    mx = max(
-                        int(s.getPath().getName().split("=", 1)[1])
-                        for s in fs.listStatus(hpath(f"{root}/batches"))
-                        if s.getPath().getName().startswith("batch_id=")
-                    )
-                    tgt = f"{root}/batches/batch_id={mx + 1}"
-                fs.rename(st.getPath(), hpath(tgt))
-            fs.delete(hpath(nested_stage), True)
-        # LOST-APPEND SALVAGE (r15, ADVICE): diff old's batch dirs
-        # against the entry capture; unseen dirs are cross-process
-        # appends the retrained stage does not contain — fold each into
-        # the new generation before the delete.  The PQ code travels
-        # VERBATIM (codebooks survive a rebalance — subspace
-        # quantization is independent of the coarse partition); only
-        # `cent` is re-assigned, from the PQ reconstruction (the raw
-        # vector is gone; the reconstruction is its quantized stand-in,
-        # so the re-assignment differs from the raw vector's only
-        # within quantization error — a recall nuance, never a wrong
-        # distance, since ADC scores the untouched code).  Original
-        # batch_ids are kept (stream ids are monotonic and > the
-        # stage's 0, preserving last-write-wins order); tombstones
-        # (cent < 0) pass through untouched.
-        def _fold_reassign(live_df, meta):
-            # PQ code travels VERBATIM; only `cent` is re-assigned from
-            # the PQ reconstruction (the raw vector is gone; the
-            # reconstruction is its quantized stand-in, so the
-            # re-assignment differs from the raw vector's only within
-            # quantization error — a recall nuance, never a wrong
-            # distance, since ADC scores the untouched code).  Meta
-            # types are cast to the retrained stage's exactly (the
-            # appender matched the OLD dir's types; a widening drift
-            # like int→long across batch dirs breaks parquet reads
-            # whose inferred schema lands on the narrow side).
-            recon = live_df.select(
-                "cid",
-                S.pq_reconstruct_expr(F.col("code"), books).alias("_recon"),
-                "code",
-                *[F.col(mc) for mc in meta],
-            )
-            assigned = (
-                S.ivf_pq_index(
-                    recon.drop("code"), "cid", "_recon", cents, books,
-                    dim=dim, meta_cols=meta,
-                )
-                .drop("code")
-                .join(recon.select("cid", "code"), "cid")
-                .select("cid", "cent", "code", *meta)
-            )
-            return assigned.select(
-                "cid",
-                "cent",
-                "code",
-                *[
-                    F.col(mc).cast(vectors.schema[mc].dataType).alias(mc)
-                    if mc in vectors.columns
-                    else F.col(mc)
-                    for mc in meta
-                ],
-            )
-
-        def _next_batch_target() -> str:
-            mx = max(
-                (
-                    int(st.getPath().getName().split("=", 1)[1])
-                    for st in fs.listStatus(hpath(f"{root}/batches"))
-                    if st.getPath().getName().startswith("batch_id=")
-                ),
-                default=0,
-            )
-            return f"batch_id={mx + 1}"
-
-        salvaged = 0
-        if fs.exists(hpath(old)):
-            lost = sorted(
-                st.getPath().getName()
-                for st in fs.listStatus(hpath(old))
-                if st.getPath().getName().startswith("batch_id=")
-                and st.getPath().getName() not in captured_batches
-            )
-            for name in lost:
-                bdf = spark.read.parquet(f"{old}/{name}")
-                meta = tuple(
-                    c for c in bdf.columns if c not in ("cid", "cent", "code")
-                )
-                out_df = _fold_reassign(
-                    bdf.filter(F.col("cent") >= 0), meta
-                ).unionByName(
-                    # tombstones (cent < 0) pass through untouched —
-                    # cast like the live rows so the union stays aligned
-                    bdf.filter(F.col("cent") < 0).select(
-                        "cid",
-                        "cent",
-                        "code",
-                        *[
-                            F.col(mc).cast(vectors.schema[mc].dataType).alias(mc)
-                            if mc in vectors.columns
-                            else F.col(mc)
-                            for mc in meta
-                        ],
-                    )
-                )
-                target = name
-                if fs.exists(hpath(f"{root}/batches/{target}")):
-                    target = _next_batch_target()
-                out_df.write.mode("overwrite").parquet(
-                    f"{root}/batches/{target}"
-                )
-                salvaged += 1
-            # CID-DIFF SALVAGE (r16, ADVICE): the entry capture vouches
-            # only for batches that appeared AFTER it — a batch committed
-            # between the caller building `vectors` and this invocation
-            # is in captured_batches yet absent from the retrained
-            # stage, and the name-diff alone would destroy it.  Close
-            # the window at cid granularity: any LIVE cid in the old
-            # generation's resolved view absent from BOTH the new
-            # batches dir and the erasure manifest is a lost append —
-            # fold those rows back through the same re-assignment.
-            # Cost: one cid anti-join over two frames the rebalance
-            # already scanned, marginal next to the retrain's k-means
-            # passes; erased cids stay excluded (never resurrected).
-            import functools
-
-            from pyspark.sql import Window as _Win
-
-            # per-batch reads with per-column casts to the retrained
-            # stage's meta types: one whole-dir read would trip on the
-            # appender-era dtype drift across batch dirs (e.g. int vs
-            # long label footers) that the fold's cast exists to absorb
-            keep_meta = [mc for mc in meta_cols if mc in vectors.columns]
-            parts = []
-            for st in fs.listStatus(hpath(old)):
-                nm = st.getPath().getName()
-                if not nm.startswith("batch_id="):
-                    continue
-                b = spark.read.parquet(f"{old}/{nm}")
-                parts.append(
-                    b.select(
-                        "cid",
-                        "cent",
-                        "code",
-                        *[
-                            F.col(mc).cast(vectors.schema[mc].dataType).alias(mc)
-                            if mc in b.columns
-                            else F.lit(None)
-                            .cast(vectors.schema[mc].dataType)
-                            .alias(mc)
-                            for mc in keep_meta
-                        ],
-                        F.lit(int(nm.split("=", 1)[1])).alias("batch_id"),
-                    )
-                )
-            if parts:
-                new_view_cids = read_ann_index(
-                    spark, f"{root}/batches"
-                ).select("cid")
-                old_ranked = (
-                    functools.reduce(lambda a, c: a.unionByName(c), parts)
-                    .withColumn(
-                        "__rn",
-                        F.row_number().over(
-                            _Win.partitionBy("cid").orderBy(F.desc("batch_id"))
-                        ),
-                    )
-                    .filter(F.col("__rn") == 1)
-                )
-                lost_rows = (
-                    old_ranked.filter(F.col("cent") >= 0)
-                    .drop("__rn", "batch_id")
-                    .join(new_view_cids, "cid", "left_anti")
-                )
-                if fs.exists(hpath(f"{root}/_forgotten")):
-                    lost_rows = lost_rows.join(
-                        F.broadcast(
-                            spark.read.schema("cid long")
-                            .option("recursiveFileLookup", "true")
-                            .parquet(f"{root}/_forgotten")
-                            .select("cid")
-                        ),
-                        "cid",
-                        "left_anti",
-                    )
-                lost_n = lost_rows.count()
-                if lost_n:
-                    _fold_reassign(lost_rows, tuple(keep_meta)).write.mode(
-                        "overwrite"
-                    ).parquet(f"{root}/batches/{_next_batch_target()}")
-                    out["salvaged_rows"] = lost_n
-                # DELETION CARRY-FORWARD (r16): the mirror hazard — a
-                # cid whose LATEST old-generation record is a tombstone,
-                # which the caller's stale frame still carried ALIVE
-                # into the retrained stage.  Re-issue the tombstone with
-                # a batch id above everything in the new generation so
-                # last-write-wins keeps the deletion (a delete committed
-                # to the index must survive a rebalance regardless of
-                # caller staleness).
-                tomb_cids = (
-                    old_ranked.filter(F.col("cent") < 0)
-                    .select("cid")
-                    .join(new_view_cids, "cid", "left_semi")
-                )
-                tomb_n = tomb_cids.count()
-                if tomb_n:
-                    tomb_cids.select(
-                        "cid",
-                        F.lit(-1).alias("cent"),
-                        F.array().cast("array<int>").alias("code"),
-                        *[
-                            F.lit(None)
-                            .cast(vectors.schema[mc].dataType)
-                            .alias(mc)
-                            for mc in keep_meta
-                        ],
-                    ).write.mode("overwrite").parquet(
-                        f"{root}/batches/{_next_batch_target()}"
-                    )
-                    out["tombstones_carried"] = tomb_n
-        fs.delete(hpath(old), True)
-        if salvaged:
-            out["salvaged_batches"] = salvaged
-        # r16: drop cached serve-planning state — the retrain changed
-        # the cent space; new resolves miss anyway (new version), old
-        # versions' cached summaries are obsolete and can be released
-        plan_cache_invalidate(root)
-        after = (
-            sinks.read_snapshot(spark, snap, version=pub_v)
-            .groupBy("cent")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("mx"), F.count(F.lit(1)).alias("k"))
-            .collect()[0]
-        )
-        out.update(
-            retrained=True,
-            version=pub_v,
-            lists_after=int(after["k"]),
-            max_list_rows_after=int(after["mx"]),
-            max_share_ratio_after=round(int(after["mx"]) * int(after["k"]) / n_total, 3),
-        )
-        return out
-    finally:
-        lease_cm.__exit__(None, None, None)
 
 
 def indexed_candidates(
@@ -2042,8 +1391,7 @@ def indexed_candidates(
     the per-query cost tracks nprobe · mean-list-size PQ lookups (+
     ``rerank`` exact cosines), NOT corpus size, and the corpus-sized work
     (assign + encode) happens once at index-build time and is maintained
-    incrementally (``ivf_incremental_append`` / ``ann_index_stream``,
-    compacted by ``compact_ann_index``), not per query."""
+    by compaction (``compact_ann_index``), not per query."""
     if sf_dir is None:
         raise ValueError(
             "indexed_candidates serves from the standing artifact — pass "
@@ -2277,8 +1625,8 @@ def indexed_candidates_pruned(
     root = standing_index_root(sf_dir)
     snap = f"{root}/snapshot"
     # resolve the version ONCE and pin models + pruned read to it — a
-    # rebalance flipping the pointer between the two resolves could
-    # otherwise pair new models with an old snapshot slice (r13)
+    # publish flipping the pointer between the two resolves could
+    # otherwise pair one version's models with another's slice (r13)
     version = sinks._read_latest_version(spark, snap)
     models = _load_models_for(spark, root, version)
     cents = [(int(c), v) for c, v in models["centroids"]]
@@ -2339,12 +1687,12 @@ def ann_topk_served_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_index_list_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-list occupancy monitor for the standing IVF+PQ index (late
-    r12) — the operational loop ``ivf_incremental_append``'s contract
-    prescribes in prose ("monitor per-list counts, retrain + rebuild when
-    appended batches drift off the trained distribution"), as an
-    oracle-checked query: one ARTIFACT-sized aggregation over the
-    compacted snapshot (never the corpus) yielding each list's row count
-    and corpus share in ppm.  At scale this is the rebalance dashboard a
+    r12) — the operational loop an IVF index needs ("monitor per-list
+    counts, retrain + rebuild when appended batches drift off the
+    trained distribution"), as an oracle-checked query: one
+    ARTIFACT-sized aggregation over the compacted snapshot (never the
+    corpus) yielding each list's row count
+    and corpus share in ppm.  At scale this is the retrain dashboard a
     vector store keeps: skewed shares mean probe cost concentrates
     (nprobe lists no longer ≈ nprobe/k of the corpus) and the coarse
     quantizer wants retraining.  The oracle replays the corpus→list
@@ -2454,7 +1802,7 @@ def _load_label_lists(
     spark: SparkSession, sf_dir: str, version: int | None = None
 ) -> DataFrame:
     """The persisted (label, cent, n) probe-steering summary for snapshot
-    ``version`` — version-exact since r13 (rebalance publishes
+    ``version`` — version-exact since r13 (a forget's compact publishes
     ``label_lists.v{N}`` with snapshot ``v=N``; the unversioned path is
     the v1 initial-build layout).  A WRONG-version summary is worse than
     a missing one: after a retrain the cent id space changes entirely, so
@@ -2469,7 +1817,7 @@ def _load_label_lists(
     fs, hpath = sinks._fs_for(spark, root)
     if version is None:
         version = sinks._read_latest_version(spark, f"{root}/snapshot")
-    # v1 = the initial build's unversioned layout; rebalances publish
+    # v1 = the initial build's unversioned layout; later compacts publish
     # version-suffixed summaries alongside their snapshot versions.
     # NOT cached (r16, measured): the label summary feeds a per-query
     # groupBy -> broadcast, and serving it from a cached-rows
@@ -2510,7 +1858,7 @@ def _load_range_lists(
 ) -> DataFrame:
     """The persisted per-list (cent, min_id, max_id, n) id-zonemap for
     RANGE-filtered search — the numeric sibling of ``_load_label_lists``,
-    same version-exact discipline (v1 unversioned, rebalances versioned)
+    same version-exact discipline (v1 unversioned, later versions versioned)
     and the same derive-if-missing recovery: one index-sized agg over the
     RESOLVED snapshot, republished staged, never a cross-version
     fallback (a retrained index has a different cent space)."""
@@ -2814,7 +2162,7 @@ def ann_filtered_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = standing_index_root(sf_dir)
     snap = f"{root}/snapshot"
     # one version resolve pins models + label steering + pruned read to a
-    # single consistent generation of the artifact (r13, rebalance-safe)
+    # single consistent generation of the artifact (r13)
     version = sinks._read_latest_version(spark, snap)
 
     def _build():

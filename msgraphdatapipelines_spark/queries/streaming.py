@@ -10,13 +10,13 @@ batch mode (identical semantics, SQL-expressible).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import streaming as ST
 from ..cache import standing_root
 from ..genstore import build_once
-from . import load_events, register
+from . import register
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 

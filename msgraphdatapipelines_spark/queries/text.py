@@ -1178,7 +1178,7 @@ def hybrid_search_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     This closes the retrieval loop: at 100 TB the per-query vector cost
     tracks nprobe · mean-list-size (+ rerank exact cosines), NOT corpus
     size — the corpus-sized assign/encode work happens once at index
-    build and is appended incrementally (``ivf_incremental_append``)."""
+    build."""
     from .similarity import indexed_candidates
 
     docs = load(spark, sf_dir, "documents")
@@ -1452,7 +1452,7 @@ def lexicon_append_batch(
 ) -> int:
     """Append a NEW-document batch to the lexicon's grow-only store (r9;
     r13 staged-pair publish): per-batch tf and dl increments land under
-    ``batches/{tf,dl}/batch_id=K`` — the ann_index_stream layout, so
+    ``batches/{tf,dl}/batch_id=K`` — the standing ANN index's layout, so
     ingestion never rewrites existing postings.  Batches become servable
     at the next ``lexicon_compact``.
 

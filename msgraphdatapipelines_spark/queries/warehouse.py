@@ -182,7 +182,7 @@ def table_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     The second state is derived IN-ENGINE deterministically (delete keys
     %97, reprice finished orders %5, add %101 clones shifted +1e8) so the
     oracle replays it exactly; composed with snapshot versions this is
-    ``diff_snapshots`` — time-travel CDC (pytest).  Output projects the
+    time-travel CDC.  Output projects the
     price pair; at 100 TB bucket both versions on the key and the
     exchange vanishes (module docstring)."""
     from ..operators.diff import table_diff

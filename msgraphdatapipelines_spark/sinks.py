@@ -649,21 +649,6 @@ def _fs_for(spark: SparkSession, path: str):
     return hp(path).getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hp
 
 
-def _normalize_file_uri(uri: str) -> str:
-    """Canonical file identity for manifest diffing: strip the scheme
-    and collapse the authority slashes, so ``file:///a/b``,
-    ``file:/a/b`` and ``/a/b`` — the three spellings Spark's
-    ``input_file_name()`` and Hadoop's ``Path.toString()`` emit for one
-    file — compare equal.  URL-unquote because ``input_file_name()``
-    percent-encodes (e.g. ``=`` in partition dirs)."""
-    import re
-    from urllib.parse import unquote
-
-    u = unquote(uri)
-    u = re.sub(r"^[A-Za-z][A-Za-z0-9+.-]*:/+", "/", u)
-    return u
-
-
 def _list_numbered_dirs(fs, hp, root: str, prefix: str) -> list[int]:
     """Sorted numeric suffixes of ``{prefix}N`` subdirectories of ``root``."""
     p = hp(root)
@@ -691,7 +676,6 @@ def write_snapshot(
     root: str,
     keep_last: int | None = None,
     zonemap_cols: list[str] | None = None,
-    bloom_cols: list[str] | None = None,
 ) -> int:
     """Versioned full refresh — the reference's drop-and-reload
     (`Invoke-GraphDataPipelineToAzureSQLDatabase.ps1` truncate+insert;
@@ -734,23 +718,17 @@ def write_snapshot(
     min/max manifest (:func:`build_zonemap`) on the new version directory
     BEFORE the pointer flip — the manifest is part of the committed
     version, so every pointer-visible snapshot can serve
-    :func:`read_snapshot_pruned` file skipping; a crash between manifest
-    and flip leaves an orphan version exactly as before.
-
-    ``bloom_cols`` (late r10): likewise, per-file Bloom manifests
-    (:func:`build_bloom_manifest`) are built on the new version before
-    the flip, so committed snapshots serve
-    :func:`read_snapshot_bloom_pruned` equality skipping on columns the
-    layout is not clustered by.
+    :func:`read_snapshot_pruned_in` file skipping; a crash between
+    manifest and flip leaves an orphan version exactly as before.
 
     FILE SIZING: the frame is coalesced to ``ceil(estimated bytes /
     TARGET_FILE_BYTES)`` partitions (128 MiB), the estimate being the
     optimized plan's ``sizeInBytes``, so a small entity publishes one
     data file instead of one per upstream partition.  Two exceptions
-    keep the caller's partitioning: ``zonemap_cols`` / ``bloom_cols``
-    (their manifests index file boundaries, so the layout is the
-    caller's choice), and a frame the optimizer cannot size (estimate
-    ≥ ``spark.sql.defaultSizeInBytes``, e.g. an RDD-backed frame).
+    keep the caller's partitioning: ``zonemap_cols`` (its manifest
+    indexes file boundaries, so the layout is the caller's choice), and
+    a frame the optimizer cannot size (estimate ≥
+    ``spark.sql.defaultSizeInBytes``, e.g. an RDD-backed frame).
 
     SCHEMA SIDECAR: the frame's ``schema.json()`` is written to the
     hidden ``_schema.json`` in the stage before the claim, so it is part
@@ -766,16 +744,14 @@ def write_snapshot(
     stage_name = f"v.stage.{uid}"
     stage = f"{root}/{stage_name}"
     fs, hp = _fs_for(spark, root)
-    out = df if zonemap_cols or bloom_cols else _right_sized(df)
+    out = df if zonemap_cols else _right_sized(df)
     out.write.mode("overwrite").parquet(stage)
     put_file(fs, hp, f"{stage}/{SCHEMA_FILE}", df.schema.json().encode("utf-8"))
-    # manifests are built INSIDE the staged dir and travel with the
+    # the manifest is built INSIDE the staged dir and travels with the
     # claim-rename; recorded paths relocate, which the pruned readers'
     # table-relative identity (_table_suffix) already resolves
     if zonemap_cols:
         build_zonemap(spark, stage, zonemap_cols)
-    if bloom_cols:
-        build_bloom_manifest(spark, stage, bloom_cols)
     new_v, versions = _claim_publish(fs, hp, root, stage, stage_name, uid)
     _flip_latest(fs, hp, root, new_v)
     if keep_last is not None:
@@ -984,8 +960,6 @@ def compact_snapshot(
     spark: SparkSession,
     root: str,
     target_file_bytes: int = TARGET_FILE_BYTES,
-    zonemap_cols: list[str] | None = None,
-    bloom_cols: list[str] | None = None,
 ) -> dict:
     """Transactional small-file compaction for a snapshot-versioned table
     (r6 VERDICT item 4, closing What's-missing #3): ``compact_parquet``
@@ -1035,15 +1009,6 @@ def compact_snapshot(
     stats = compact_parquet(spark, f"{root}/v={cur_v}", stage, target_file_bytes)
     schema = read_snapshot(spark, root, cur_v).schema
     put_file(fs, hp, f"{stage}/{SCHEMA_FILE}", schema.json().encode("utf-8"))
-    # manifests refreshed at commit (r10): compaction changes the file set,
-    # so zone maps AND Bloom filters must be rebuilt on the NEW version
-    # before the flip — this is also how a Bloom table streaming-appended
-    # into many small files gets its periodic rewrite: compaction rebuilds
-    # the per-file filters over the merged files as part of the same commit
-    if zonemap_cols:
-        build_zonemap(spark, stage, zonemap_cols)
-    if bloom_cols:
-        build_bloom_manifest(spark, stage, bloom_cols)
     new_v, _ = _claim_publish(fs, hp, root, stage, stage_name, uid)
     _flip_latest(fs, hp, root, new_v)
     return {**stats, "from_version": cur_v, "version": new_v}
@@ -1066,49 +1031,6 @@ def read_snapshot(spark: SparkSession, root: str, version: int | None = None) ->
     vdir = f"{root}/v={version}"
     schema = _read_schema(fs, hp, vdir)
     return (spark.read if schema is None else spark.read.schema(schema)).parquet(vdir)
-
-
-def read_snapshot_pruned(
-    spark: SparkSession, root: str, col: str, lo, hi, version: int | None = None
-) -> DataFrame:
-    """Range scan of a snapshot-versioned table THROUGH its committed
-    zone-map manifest (r10, r9 VERDICT item 9 — file pruning as the
-    warehouse default, not a side demo): resolve the pointer
-    (or an explicit ``version``), then :func:`scan_pruned` the version
-    directory — only files whose [min, max] overlaps [lo, hi] are opened,
-    with the residual filter preserving exact semantics.  Requires the
-    version to have been published with ``write_snapshot(...,
-    zonemap_cols=[col, …])`` / ``compact_snapshot(..., zonemap_cols=…)``;
-    falls back to a plain filtered read when no manifest exists (pruning
-    is an optimization, never a requirement)."""
-    if version is None:
-        version = _read_latest_version(spark, root)
-    vdir = f"{root}/v={version}"
-    rows = _zonemap_rows_cached(spark, vdir)  # immutable version dir
-    if rows is None:
-        return read_snapshot(spark, root, version).filter(F.col(col).between(lo, hi))
-    return scan_pruned(spark, vdir, col, lo, hi, _manifest_rows=rows)
-
-
-def read_snapshot_bloom_pruned(
-    spark: SparkSession, root: str, col: str, value, version: int | None = None
-) -> DataFrame:
-    """Point lookup on a snapshot-versioned table THROUGH its committed
-    Bloom manifest (late r10): resolve the pointer, then
-    :func:`scan_bloom_pruned` the version directory — only
-    Bloom-candidate files open, residual equality filter preserves exact
-    semantics.  Requires publication with ``bloom_cols=[col, …]``; falls
-    back to a plain filtered read when no manifest exists.  Because
-    :func:`compact_snapshot` rebuilds the filters as part of its commit,
-    a streaming-appended Bloom table's small files and their stale
-    manifests are retired TOGETHER at each maintenance window."""
-    if version is None:
-        version = _read_latest_version(spark, root)
-    vdir = f"{root}/v={version}"
-    fs, hp = _fs_for(spark, vdir)
-    if not fs.exists(hp(f"{vdir}/_bloom_{col}")):
-        return read_snapshot(spark, root, version).filter(F.col(col) == value)
-    return scan_bloom_pruned(spark, vdir, col, value)
 
 
 def _read_latest_version(spark: SparkSession, root: str) -> int:
@@ -1300,7 +1222,6 @@ def forget_keys(
     root: str,
     key_cols: list[str],
     keys_df: DataFrame,
-    zonemap_cols: list[str] | None = None,
     erase_history: bool = True,
 ) -> dict:
     """Right-to-erasure (GDPR art. 17) for a snapshot-versioned table
@@ -1332,7 +1253,7 @@ def forget_keys(
     pk = F.broadcast(keys_df.select(*key_cols).distinct())
     kept = cur.join(pk, key_cols, "left_anti")
     n_before = cur.count()
-    new_v = write_snapshot(kept, root, zonemap_cols=zonemap_cols)
+    new_v = write_snapshot(kept, root)
     n_after = read_snapshot(spark, root).count()
     erased = []
     if erase_history:
@@ -1360,10 +1281,10 @@ def refresh_agg_incremental(
     build_agg,
 ) -> DataFrame:
     """Incrementally maintain a materialized aggregate under keyed deltas
-    (r8): the aggregate-table consumer of ``apply_delta`` /
-    ``delta_sync_stream`` rounds.  ``build_agg(df) -> DataFrame`` is the
-    aggregation keyed by ``group_keys``; instead of re-aggregating the
-    whole snapshot each round, only the groups the round TOUCHED
+    (r8): the aggregate-table consumer of ``apply_delta`` rounds.
+    ``build_agg(df) -> DataFrame`` is the aggregation keyed by
+    ``group_keys``; instead of re-aggregating the whole snapshot each
+    round, only the groups the round TOUCHED
     (upserted or tombstoned keys — project them to their group keys)
     recompute from the new snapshot, and the aggregate table is patched:
 
@@ -1413,183 +1334,6 @@ def build_zonemap(spark: SparkSession, path: str, cols: list[str]) -> int:
     zm = df.groupBy(F.input_file_name().alias("file")).agg(*aggs)
     zm.coalesce(1).write.mode("overwrite").parquet(f"{path}/_zonemap")
     return spark.read.parquet(f"{path}/_zonemap").count()
-
-
-def refresh_zonemap(spark: SparkSession, path: str, cols: list[str]) -> dict:
-    """Incremental zone-map maintenance (r10): bring ``path/_zonemap`` up
-    to date by scanning ONLY the data files the manifest does not know
-    yet — the O(delta) manifest refresh a streaming/append sink needs
-    (``build_zonemap`` rescans the whole table; at 100 TB that defeats
-    the point of appending).
-
-    New files are found by a RECURSIVE Hadoop FS listing (late r12:
-    partitioned layouts keep data in ``col=val`` subdirectories a
-    top-level listing never sees — appends there previously stayed
-    pruned-invisible FOREVER, not just until the next refresh) diffed
-    against the manifest by table-relative identity
-    (:func:`_table_suffix` — same-named part files in different
-    partition dirs are distinct; a relocated table still matches); their
-    stats aggregate from an EXPLICIT file-list read — by construction no
-    already-manifested file is opened.  The refreshed manifest
-    republishes as one overwrite of the model-sized ``_zonemap`` table.
-
-    This is also the CRASH RECOVERY for ``append_zonemap``: data files
-    appended before a crash that never reached the manifest are exactly
-    "files the manifest does not know" — re-running the refresh heals
-    the gap (until then they are invisible to ``scan_pruned`` but
-    visible to plain reads; pruned reads are never WRONG, only stale).
-
-    Returns ``{"new_files": [...], "manifest_rows": N}``.
-    """
-    from pyspark.sql import functions as F
-
-    zm_path = f"{path}/_zonemap"
-    # pin the manifest EAGERLY (r14): a concurrent refresher's staged
-    # swap relocates the manifest files mid-plan otherwise (its aside
-    # rename turns our lazily-listed absolute paths into dangling ones);
-    # the manifest is model-sized, so the checkpoint is planning-cost.
-    # Retry the initial read across a racer's aside→rename-in instant.
-    import time as _time
-
-    for attempt in range(10):
-        try:
-            old = spark.read.parquet(zm_path).localCheckpoint(eager=True)
-            break
-        except Exception:  # noqa: BLE001 — racer mid-swap
-            if attempt == 9:
-                # r15 (ADVICE): a refresher KILLED between its aside
-                # rename and its rename-in leaves NO manifest and (until
-                # now) nothing ever restored it — every later refresh
-                # raised here forever.  If an orphaned aside exists,
-                # restore the newest one and continue; both aside and
-                # live manifest are complete-by-construction, so either
-                # is a correct (possibly stale) base for this refresh.
-                restored = _restore_zonemap_aside(spark, path)
-                if restored:
-                    old = spark.read.parquet(zm_path).localCheckpoint(eager=True)
-                    break
-                raise
-            _time.sleep(0.05)
-
-    known = {_table_suffix(path, r["file"]) for r in old.select("file").collect()}
-    fs, hp = _fs_for(spark, path)
-    new_files = []
-    stack = [hp(path)]
-    while stack:
-        d = stack.pop()
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            if name.startswith(("_", ".")):
-                continue
-            if st.isDirectory():
-                stack.append(st.getPath())
-            elif st.isFile() and _table_suffix(
-                path, st.getPath().toString()
-            ) not in known:
-                new_files.append(st.getPath().toString())
-    if new_files:
-        aggs = [F.count(F.lit(1)).alias("n_rows")]
-        for c in cols:
-            aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-        fresh = (
-            spark.read.option("basePath", path)  # recover partition cols
-            .schema(spark.read.parquet(path).schema)
-            .parquet(*new_files)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(*aggs)
-        )
-        merged = old.unionByName(fresh).localCheckpoint(eager=True)
-        # staged swap (r14, the `-m race` lane's zonemap mode): the r13
-        # in-place overwrite let two concurrent refreshers interleave
-        # delete-and-write inside the live manifest dir — a torn manifest
-        # makes pruned scans silently incomplete, the one outcome the
-        # layer forbids.  Now each refresher stages its COMPLETE merged
-        # manifest and claim-renames it in; the loser detects Hadoop's
-        # nest-into-existing-dir through its sentinel and discards its
-        # copy (both merges are complete — either winning is correct).
-        import uuid
-
-        uid = uuid.uuid4().hex[:8]
-        stage_name = f"_zonemap.stage.{uid}"
-        zm_stage = f"{path}/{stage_name}"
-        merged.coalesce(1).write.mode("overwrite").parquet(zm_stage)
-        put_file(fs, hp, f"{zm_stage}/_SWAP_{uid}", b"1")
-        aside = f"{zm_path}.old.{uid}"
-        if fs.exists(hp(zm_path)):
-            fs.rename(hp(zm_path), hp(aside))
-        try:
-            fs.rename(hp(zm_stage), hp(zm_path))
-        except Exception:  # noqa: BLE001 — resolved via the sentinel below
-            pass
-        if not fs.exists(hp(f"{zm_path}/_SWAP_{uid}")):
-            nested = f"{zm_path}/{stage_name}"
-            if fs.exists(hp(f"{nested}/_SWAP_{uid}")):
-                fs.delete(hp(nested), True)  # racer's complete manifest stands
-            elif fs.exists(hp(zm_stage)):
-                fs.delete(hp(zm_stage), True)
-        if fs.exists(hp(aside)):
-            if fs.exists(hp(zm_path)):
-                fs.delete(hp(aside), True)
-            else:
-                # r15 (ADVICE): our rename-in failed AND no racer's
-                # manifest stands — deleting the aside here was the
-                # unrecoverable branch (no _zonemap left at all).
-                # Restore the aside: stale-but-complete beats absent.
-                fs.rename(hp(aside), hp(zm_path))
-    # the read-back can catch a CONCURRENT refresher inside its
-    # aside→rename-in instant (manifest momentarily absent) — retry
-    # briefly; pruned READS are shielded separately by their own
-    # exists-check fallback to a full filtered scan
-    import time as _time
-
-    for attempt in range(10):
-        try:
-            n = spark.read.parquet(zm_path).count()
-            break
-        except Exception:  # noqa: BLE001 — racer mid-swap
-            if attempt == 9:
-                raise
-            _time.sleep(0.05)
-    return {"new_files": new_files, "manifest_rows": n}
-
-
-def _restore_zonemap_aside(spark: SparkSession, path: str) -> bool:
-    """Crash recovery for :func:`refresh_zonemap`'s staged swap (r15,
-    ADVICE): a refresher killed between its aside rename
-    (``_zonemap`` → ``_zonemap.old.{uid}``) and its rename-in leaves no
-    live manifest.  If ``_zonemap`` is absent but one or more asides
-    exist, rename the lexicographically-last aside back into place
-    (every aside is a complete manifest — the swap never stages partial
-    state — so any choice is correct; last-uid is just deterministic)
-    and delete the rest.  Returns True iff a manifest was restored."""
-    zm_path = f"{path}/_zonemap"
-    fs, hp = _fs_for(spark, path)
-    if fs.exists(hp(zm_path)):
-        return False
-    asides = sorted(
-        st.getPath().toString()
-        for st in fs.listStatus(hp(path))
-        if st.getPath().getName().startswith("_zonemap.old.")
-    )
-    if not asides:
-        return False
-    if not fs.rename(hp(asides[-1]), hp(zm_path)):
-        return False
-    for a in asides[:-1]:
-        fs.delete(hp(a), True)
-    return True
-
-
-def append_zonemap(
-    spark: SparkSession, path: str, df: DataFrame, cols: list[str]
-) -> dict:
-    """Append a batch to a zone-mapped layout: write the new data files
-    (plain parquet append — old files untouched) then ``refresh_zonemap``
-    scans ONLY the new files into the manifest.  A crash between the two
-    steps leaves the appended files pruned-invisible until the next
-    refresh (see refresh_zonemap's recovery note)."""
-    df.write.mode("append").parquet(path)
-    return refresh_zonemap(spark, path, cols)
 
 
 def _table_suffix(table_path: str, p: str) -> str:
@@ -1664,7 +1408,7 @@ def _current_paths(base: DataFrame, files: list[str], path: str) -> list[str]:
 # manifest collect in scan_pruned/scan_pruned_in is one Spark-job
 # round-trip per pruned read.  A SNAPSHOT version dir's manifest is
 # immutable (the claim-rename publish only ever creates new v= dirs),
-# so read_snapshot_pruned/_pruned_in cache the collected rows keyed by
+# so read_snapshot_pruned_in caches the collected rows keyed by
 # (session, version dir) and run the interval test driver-side on
 # repeats.  ONLY version dirs go through the cache — plain warehouse
 # paths (bucketed tables, streaming dirs) rewrite their manifests in
@@ -1676,8 +1420,7 @@ _ZM_CACHE = BoundedMemo(32)
 
 def _zonemap_rows_cached(spark: SparkSession, vdir: str) -> list | None:
     """Collected `_zonemap` rows for an IMMUTABLE version dir, cached;
-    None when the dir carries no manifest (not cached — a later
-    aside-restore may bring it back)."""
+    None when the dir carries no manifest."""
 
     def build():
         fs, hp = _fs_for(spark, vdir)
@@ -1717,16 +1460,13 @@ def scan_pruned(
             if r[f"max_{col}"] >= lo and r[f"min_{col}"] <= hi
         ]
     else:
-        # r15 (ADVICE): a crashed refresher can leave the table with NO
-        # live manifest (see _restore_zonemap_aside) — pruning is an
-        # optimization, never a requirement, so fall back to a full
-        # filtered scan exactly like read_snapshot_pruned_in does
-        # rather than raising.
+        # a table with no manifest serves a full filtered scan —
+        # pruning is an optimization, never a requirement (the same
+        # fallback read_snapshot_pruned_in takes)
         fs, hp = _fs_for(spark, path)
         if not fs.exists(hp(f"{path}/_zonemap")):
-            if not _restore_zonemap_aside(spark, path):
-                _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
-                return base.filter(F.col(col).between(lo, hi))
+            _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
+            return base.filter(F.col(col).between(lo, hi))
         zm = spark.read.parquet(f"{path}/_zonemap")
         files = [
             r["file"]
@@ -1786,14 +1526,11 @@ def scan_pruned_in(
             if any(r[f"min_{col}"] <= v <= r[f"max_{col}"] for v in vals)
         ]
     else:
-        # r15 (ADVICE): same missing-manifest fallback as scan_pruned —
-        # a crashed refresher must degrade pruned reads to full scans,
-        # not break them.
+        # same missing-manifest fallback as scan_pruned
         fs, hp = _fs_for(spark, path)
         if not fs.exists(hp(f"{path}/_zonemap")):
-            if not _restore_zonemap_aside(spark, path):
-                _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
-                return base.filter(F.col(col).isin(vals))
+            _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
+            return base.filter(F.col(col).isin(vals))
         zm = spark.read.parquet(f"{path}/_zonemap")
         cond = None
         for v in vals:
@@ -1819,8 +1556,7 @@ def read_snapshot_pruned_in(
     spark: SparkSession, root: str, col: str, values, version: int | None = None
 ) -> DataFrame:
     """IN-set scan of a snapshot-versioned table through its committed
-    zone-map manifest — :func:`read_snapshot_pruned`'s set-membership
-    sibling (see :func:`scan_pruned_in`).  Falls back to a plain
+    zone-map manifest (see :func:`scan_pruned_in`).  Falls back to a plain
     ``isin``-filtered read when the version carries no manifest (pruning
     is an optimization, never a requirement — an artifact compacted
     before the layout carried zonemaps still serves correctly)."""
@@ -1910,94 +1646,13 @@ def build_bloom_manifest(
     Returns {col: word_row_count}."""
     df = spark.read.parquet(path)
     out = {}
-    fs, hp = _fs_for(spark, path)
     for c in cols:
         root = f"{path}/_bloom_{c}"
-        # a REBUILD retires refresh deltas (r14): stale words_delta_*
-        # dirs describe the pre-rebuild file set — leaving them would
-        # resurrect retired files as candidates (loud StaleManifestError
-        # fallback, never wrong, but pointless scans)
-        if fs.exists(hp(root)):
-            for st in fs.listStatus(hp(root)):
-                if st.getPath().getName().startswith("words_delta_"):
-                    fs.delete(st.getPath(), True)
         _bloom_words(df, c, bits, k).write.mode("overwrite").parquet(f"{root}/words")
         meta = spark.createDataFrame([(int(bits), int(k))], "bits long, k int")
         meta.coalesce(1).write.mode("overwrite").parquet(f"{root}/meta")
-        out[c] = _bloom_words_df(spark, root).count()
+        out[c] = spark.read.parquet(f"{root}/words").count()
     return out
-
-
-def _bloom_words_df(spark: SparkSession, root: str) -> DataFrame:
-    """The manifest's FULL word table: the base ``words`` dir plus every
-    ``words_delta_*`` refresh dir (r14 — refreshers write UNIQUE delta
-    dirs because two concurrent Spark append jobs into one directory
-    collide on the shared ``_temporary`` committer staging; the race
-    lane's bloom mode caught exactly that).  Duplicate (file, word_idx)
-    rows across dirs stay probe-safe — any row with the probed bit set
-    counts."""
-    fs, hp = _fs_for(spark, root)
-    paths = [
-        st.getPath().toString()
-        for st in fs.listStatus(hp(root))
-        if st.isDirectory() and (
-            st.getPath().getName() == "words"
-            or st.getPath().getName().startswith("words_delta_")
-        )
-    ]
-    return spark.read.parquet(*paths)
-
-
-def refresh_bloom_manifest(spark: SparkSession, path: str, col: str) -> dict:
-    """O(delta) Bloom maintenance: scan ONLY data files the manifest does
-    not know yet (Hadoop-FS listing diffed against the manifest's file
-    names) and APPEND their word rows — the manifest is append-only
-    (duplicate (file, word_idx) rows are probe-safe), so unlike the
-    zonemap no rewrite happens.  Each refresh writes its delta into a
-    UNIQUE ``words_delta_{uid}`` dir (r14): two concurrent Spark append
-    jobs into one directory collide on the shared ``_temporary``
-    committer staging — with unique dirs, racing refreshers at worst
-    double-append the same fresh words, which probes tolerate.
-    Crash semantics mirror ``refresh_zonemap``: files appended before a
-    crash are pruned-invisible until the next refresh, never wrong.
-
-    File identity is the FULL normalized path (scheme stripped, slashes
-    collapsed), never the basename — partitioned layouts legitimately
-    repeat basenames (``part-00000`` under every partition dir), and the
-    listing recurses so files in nested partition subdirectories join
-    the manifest too."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    root = f"{path}/_bloom_{col}"
-    meta = spark.read.parquet(f"{root}/meta").first()
-    words = _bloom_words_df(spark, root)
-    known = {
-        _normalize_file_uri(r["file"])
-        for r in words.select("file").distinct().collect()
-    }
-    fs, hp = _fs_for(spark, path)
-    p = hp(path)
-    base_n = _normalize_file_uri(fs.makeQualified(p).toString()).rstrip("/")
-    new_files = []
-    it = fs.listFiles(p, True)  # recursive: nested partition dirs included
-    while it.hasNext():
-        st = it.next()
-        full = st.getPath().toString()
-        full_n = _normalize_file_uri(full)
-        # skip files under hidden dirs (_bloom_*, _zonemap, .staging, …)
-        rel = full_n[len(base_n):].lstrip("/")
-        if any(seg.startswith(("_", ".")) for seg in rel.split("/")):
-            continue
-        if full_n not in known:
-            new_files.append(full)
-    if new_files:
-        import uuid
-
-        fresh = spark.read.schema(spark.read.parquet(path).schema).parquet(*new_files)
-        _bloom_words(fresh, col, meta["bits"], meta["k"]).write.mode(
-            "overwrite"
-        ).parquet(f"{root}/words_delta_{uuid.uuid4().hex[:8]}")
-    return {"new_files": new_files}
 
 
 def bloom_candidate_files(spark: SparkSession, path: str, col: str, value) -> list[str]:
@@ -2034,7 +1689,7 @@ def bloom_candidate_files(spark: SparkSession, path: str, col: str, value) -> li
             mask -= 1 << 64
         probes.append((i, pos // 64, mask))
     probe_df = spark.createDataFrame(probes, "pos_idx int, word_idx long, mask long")
-    words = _bloom_words_df(spark, root)
+    words = spark.read.parquet(f"{root}/words")
     cand = (
         words.join(F.broadcast(probe_df), "word_idx")
         .filter(F.col("word").bitwiseAND(F.col("mask")) != 0)
@@ -2058,7 +1713,7 @@ def scan_bloom_pruned(spark: SparkSession, path: str, col: str, value) -> DataFr
     # r15 (zonemap-symmetry): a table without a committed Bloom manifest
     # for this column must degrade to a full filtered scan, not raise —
     # pruning is an optimization, never a requirement (matches
-    # scan_pruned/scan_pruned_in and read_snapshot_bloom_pruned).
+    # scan_pruned/scan_pruned_in).
     fs, hp = _fs_for(spark, path)
     if not fs.exists(hp(f"{path}/_bloom_{col}/meta")):
         _warn_stale(

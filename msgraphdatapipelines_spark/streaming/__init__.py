@@ -319,8 +319,6 @@ def enrich_with_static(
     a slowly-changing dim needs a re-listing source (a table format or a
     JDBC dim, whose per-batch re-execution re-reads) or a query restart;
     per-batch re-execution alone does not imply per-batch re-listing.
-    ``enrich_stream_refreshed_dim`` below closes that gap in-engine: a
-    foreachBatch wrapper that RE-LOADS the dim per micro-batch.
 
     ``broadcast_dim=True`` hints the dim side: each micro-batch plans a
     BroadcastHashJoin, so the stream side never shuffles — at 100 TB/day
@@ -333,52 +331,3 @@ def enrich_with_static(
     d = F.broadcast(dim) if broadcast_dim else dim
     return stream.join(d, on, how)
 
-
-def enrich_stream_refreshed_dim(
-    stream: DataFrame,
-    dim_loader,
-    on,
-    out_dir: str,
-    checkpoint_dir: str,
-    how: str = "inner",
-    broadcast_dim: bool = True,
-):
-    """Stream-static enrichment against a SLOWLY-CHANGING dimension (r6
-    VERDICT item 5): ``enrich_with_static``'s caveat is that a file-source
-    dim's listing freezes at plan time, so dim updates published mid-query
-    are invisible.  This wrapper runs the join inside ``foreachBatch`` and
-    calls ``dim_loader(spark)`` PER MICRO-BATCH — each batch plans a fresh
-    dim scan (fresh file listing, fresh snapshot-pointer resolution), so a
-    dim row updated between batches is reflected in the next batch's
-    output.
-
-    ``dim_loader`` is any ``SparkSession -> DataFrame`` — typically
-    ``lambda s: s.read.parquet(dim_path)`` or ``lambda s:
-    sinks.read_snapshot(s, dim_root)`` (the snapshot reader re-resolves
-    ``_LATEST`` per call, giving atomically-published dim updates).
-
-    Output: ``{out_dir}/batch_id=N`` parquet per batch, OVERWRITE — the
-    same idempotent-under-replay contract as the other foreachBatch
-    streams here.  CAVEAT vs those: replay determinism additionally
-    requires the dim not to change between crash and replay (an
-    unavoidable property of any refreshed-dim design — pin the dim via
-    ``read_snapshot(version=...)`` in ``dim_loader`` if exact replay
-    matters more than freshness).  Join shape per batch is identical to
-    ``enrich_with_static`` (stateless broadcast probe, stream side never
-    shuffles).
-
-    Returns the started ``StreamingQuery``.
-    """
-
-    def _one_batch(batch_df, batch_id: int) -> None:
-        dim = dim_loader(batch_df.sparkSession)
-        d = F.broadcast(dim) if broadcast_dim else dim
-        batch_df.join(d, on, how).write.mode("overwrite").parquet(
-            f"{out_dir}/batch_id={batch_id}"
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )

@@ -75,30 +75,6 @@ def main() -> None:
         p = sorted(tuple(r) for r in postings.collect())
         fp = hashlib.md5(str((p, meta)).encode()).hexdigest()
         print("RESULT", meta["n_docs"], meta["sum_dl"], fp)
-    elif mode == "rebalance":
-        # shared root pre-built + drift-skewed by the parent; two
-        # barriered rebalances race — the lease serializes them, the
-        # loser SKIPS (monitor semantics) or the thrash guard stops a
-        # late second retrain; exactly one new version publishes
-        from pyspark.sql import functions as F
-
-        from msgraphdatapipelines_spark import sinks
-        from msgraphdatapipelines_spark.queries.similarity import (
-            ann_rebalance_if_skewed,
-            standing_index_root,
-        )
-
-        emb = spark.read.parquet(f"{shared}/embeddings.parquet").select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("embedding"),
-            F.col("label").cast("long").alias("label"),
-        )
-        drift = spark.read.parquet(f"{shared}/drift.parquet")
-        root = standing_index_root(shared)
-        stats = ann_rebalance_if_skewed(spark, root, emb.unionByName(drift))
-        version = sinks._read_latest_version(spark, f"{root}/snapshot")
-        n = sinks.read_snapshot(spark, f"{root}/snapshot", version=version).count()
-        print("RESULT", version, n, stats.get("retrained"), "skipped" in stats or None)
     elif mode == "snapshot":
         # r14 (r13 VERDICT item 4): two publishers write_snapshot the
         # SAME content onto one shared root — the claim-rename loop must
@@ -149,55 +125,6 @@ def main() -> None:
                 outs.append(sinks.compact_snapshot(spark, root)["version"])
                 time.sleep(0.2)
             print("RESULT compacted", *outs)
-    elif mode == "zonemap":
-        # r14 (r13 VERDICT item 4): two refreshers race refresh_zonemap
-        # on one shared zone-mapped table (parent pre-appended files the
-        # manifest does not know) — the staged claim-swap must leave ONE
-        # complete manifest covering every data file, zero debris
-        import os as _os
-        import tempfile
-
-        from msgraphdatapipelines_spark import sinks
-
-        table = _os.path.join(tempfile.gettempdir(), "race_zonemap_table")
-        sinks.refresh_zonemap(spark, table, ["o_orderkey"])
-        # the sibling's staged swap can relocate the manifest files
-        # between THIS read's listing and its tasks opening them — the
-        # same transient the engine-side reads retry; the converged
-        # content (both merges are complete and identical) is what the
-        # RESULT compares
-        rows = None
-        for attempt in range(10):
-            try:
-                zm = spark.read.parquet(f"{table}/_zonemap")
-                rows = sorted(
-                    sinks._table_suffix(table, r["file"])
-                    for r in zm.select("file").collect()
-                )
-                break
-            except Exception:
-                if attempt == 9:
-                    raise
-                time.sleep(0.1)
-        print("RESULT", len(rows), hashlib.md5(str(rows).encode()).hexdigest())
-    elif mode == "bloom":
-        # r14: two refreshers race the APPEND-ONLY Bloom manifest — the
-        # design tolerates duplicate (file, word_idx) rows (bit_or at
-        # probe time), so both racers may append the same fresh words;
-        # the RESULT is the probe verdict, which must stay exact
-        import os as _os
-        import tempfile
-
-        from msgraphdatapipelines_spark import sinks
-
-        table = _os.path.join(tempfile.gettempdir(), "race_bloom_table")
-        sinks.refresh_bloom_manifest(spark, table, "o_orderkey")
-        cands = sinks.bloom_candidate_files(spark, table, "o_orderkey", 7)
-        got = sorted(
-            tuple(r)
-            for r in sinks.scan_bloom_pruned(spark, table, "o_orderkey", 7).collect()
-        )
-        print("RESULT", len(cands) > 0, hashlib.md5(str(got).encode()).hexdigest())
     elif mode == "erasure":
         # r14: GDPR erasure racing a live append on one shared standing
         # index — the 100 TB deployment shape (continuous ingest never
@@ -220,209 +147,12 @@ def main() -> None:
         else:
             out = QD.prefix_index_forget(spark, root, [7])
             print("RESULT forgot", out["forgotten"])
-    elif mode == "rebalance_append":
-        # r15 (the ADVICE lost-append window, cross-process): a LIVE
-        # appender (5 batches, models re-resolved per batch exactly as
-        # the streaming round does) racing one automated rebalance on a
-        # shared skewed root.  Appenders never wait on the lease, so
-        # some batches can land inside the rebalance's doomed old dir —
-        # the entry-capture diff + salvage must fold every one into the
-        # retrained generation; none may be destroyed.
-        from pyspark.sql import functions as F
-
-        from msgraphdatapipelines_spark import sinks
-        from msgraphdatapipelines_spark.operators import similarity as S
-        from msgraphdatapipelines_spark.queries.similarity import (
-            ann_rebalance_if_skewed,
-            standing_index_root,
-        )
-        from msgraphdatapipelines_spark.streaming.ann_stream import (
-            current_ann_models,
-        )
-
-        root = standing_index_root(shared)
-        if pid == "0":
-            for b in range(5):
-                _, cents, books = current_ann_models(spark, root)
-                late = spark.createDataFrame(
-                    [
-                        (
-                            910000 + b * 1000 + i,
-                            [
-                                float((b * 31 + i * 7 + j) % 13) / 13.0
-                                for j in range(64)
-                            ],
-                            4,
-                        )
-                        for i in range(40)
-                    ],
-                    "vec_id long, embedding array<double>, label long",
-                )
-                base = spark.read.option("recursiveFileLookup", "true").parquet(
-                    f"{root}/batches"
-                )
-                late = late.withColumn(
-                    "label", late["label"].cast(base.schema["label"].dataType)
-                )
-                S.ivf_pq_index(
-                    late, "vec_id", "embedding", cents, books, dim=64,
-                    meta_cols=("label",),
-                ).write.mode("overwrite").parquet(
-                    f"{root}/batches/batch_id={901 + b}"
-                )
-                time.sleep(0.3)
-            print("RESULT appended 5")
-        else:
-            emb = spark.read.parquet(f"{shared}/embeddings.parquet").select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-                F.col("label").cast("long").alias("label"),
-            )
-            drift = spark.read.parquet(f"{shared}/drift.parquet")
-            stats = ann_rebalance_if_skewed(spark, root, emb.unionByName(drift))
-            print(
-                "RESULT rebalanced",
-                stats.get("retrained"),
-                stats.get("salvaged_batches", 0),
-            )
-    elif mode == "tri_race":
-        # r16 (18th mode, r16 SURVEY lever taken early): THREE
-        # processes on one shared skewed root — a live appender (never
-        # takes the lease, lands batches at ANY instant), a GDPR forget
-        # and an automated rebalance (these two serialize on the lease).
-        # The exposed machinery: the r16 cid-diff salvage and tombstone
-        # carry-forward folding under real interleaving, with the
-        # `_forgotten` anti-join read FRESH under the lease — appends
-        # survive every window, erased ids survive none.
-        from pyspark.sql import functions as F
-
-        from msgraphdatapipelines_spark.operators import similarity as S
-        from msgraphdatapipelines_spark.queries.similarity import (
-            ann_index_forget,
-            ann_rebalance_if_skewed,
-            standing_index_root,
-        )
-        from msgraphdatapipelines_spark.streaming.ann_stream import (
-            current_ann_models,
-        )
-
-        root = standing_index_root(shared)
-        if pid == "0":
-            for b in range(5):
-                _, cents, books = current_ann_models(spark, root)
-                late = spark.createDataFrame(
-                    [
-                        (
-                            920000 + b * 1000 + i,
-                            [
-                                float((b * 29 + i * 11 + j) % 17) / 17.0
-                                for j in range(64)
-                            ],
-                            5,
-                        )
-                        for i in range(40)
-                    ],
-                    "vec_id long, embedding array<double>, label long",
-                )
-                base = spark.read.option("recursiveFileLookup", "true").parquet(
-                    f"{root}/batches"
-                )
-                late = late.withColumn(
-                    "label", late["label"].cast(base.schema["label"].dataType)
-                )
-                S.ivf_pq_index(
-                    late, "vec_id", "embedding", cents, books, dim=64,
-                    meta_cols=("label",),
-                ).write.mode("overwrite").parquet(
-                    f"{root}/batches/batch_id={911 + b}"
-                )
-                time.sleep(0.3)
-            print("RESULT appended 5")
-        elif pid == "1":
-            v = None
-            for _attempt in range(240):
-                try:
-                    v = ann_index_forget(spark, root, [7, 103, 100005])
-                    break
-                except RuntimeError as e:
-                    if "compact already in progress" not in str(e):
-                        raise
-                    time.sleep(0.25)
-            if v is None:
-                raise SystemExit("forget never acquired the lease")
-            print("RESULT forgot", v)
-        else:
-            emb = spark.read.parquet(f"{shared}/embeddings.parquet").select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-                F.col("label").cast("long").alias("label"),
-            )
-            drift = spark.read.parquet(f"{shared}/drift.parquet")
-            stats = None
-            for _attempt in range(240):
-                stats = ann_rebalance_if_skewed(
-                    spark, root, emb.unionByName(drift)
-                )
-                if "skipped" not in stats:
-                    break
-                time.sleep(0.25)
-            print("RESULT rebalanced", stats.get("retrained"))
-    elif mode == "rebalance_erasure":
-        # r16 (r15 VERDICT item 4): GDPR erasure racing the automated
-        # rebalance on a shared skewed root — the 17th matrix mode.
-        # Both writers serialize on the compaction lease, so the races
-        # are the lease-retry interleavings PLUS the stale-frame window:
-        # the rebalance's caller-held corpus frame still CONTAINS the
-        # erased vectors (built before the forget committed), and the
-        # retrain's `_forgotten` anti-join AND the r16 cid-diff salvage
-        # must keep them out of the retrained generation in either
-        # commit order — the salvage fold must never resurrect a row
-        # whose erasure landed between entry capture and swap.
-        from pyspark.sql import functions as F
-
-        from msgraphdatapipelines_spark.queries.similarity import (
-            ann_index_forget,
-            ann_rebalance_if_skewed,
-            standing_index_root,
-        )
-
-        root = standing_index_root(shared)
-        if pid == "0":
-            v = None
-            for _attempt in range(240):
-                try:
-                    v = ann_index_forget(spark, root, [7, 103, 100005])
-                    break
-                except RuntimeError as e:
-                    if "compact already in progress" not in str(e):
-                        raise
-                    time.sleep(0.25)
-            if v is None:
-                raise SystemExit("forget never acquired the lease")
-            print("RESULT forgot", v)
-        else:
-            emb = spark.read.parquet(f"{shared}/embeddings.parquet").select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("embedding"),
-                F.col("label").cast("long").alias("label"),
-            )
-            drift = spark.read.parquet(f"{shared}/drift.parquet")
-            stats = None
-            for _attempt in range(240):
-                stats = ann_rebalance_if_skewed(
-                    spark, root, emb.unionByName(drift)
-                )
-                if "skipped" not in stats:
-                    break
-                time.sleep(0.25)
-            print("RESULT rebalanced", stats.get("retrained"))
     elif mode == "ann_erasure":
         # r15 (r14 VERDICT item 2): GDPR erasure racing a live append on
         # the shared STANDING IVF+PQ index — the moving-parts-heavy
         # member of the erasure family (models carry-forward across
-        # erasure versions + `_forgotten` manifest + compact interplay).
-        # pid 0 appends a fresh batch encoded under the dir's own models
-        # (what ann_index_stream does); pid 1 forgets doc 7.  Both must
+        # erasure versions + compact interplay).  pid 0 appends a fresh
+        # batch encoded under the dir's own models; pid 1 forgets doc 7.  Both must
         # succeed in EITHER interleaving; the parent asserts convergence.
         from msgraphdatapipelines_spark.operators import similarity as S
         from msgraphdatapipelines_spark.queries.similarity import (
@@ -430,12 +160,14 @@ def main() -> None:
             standing_index_root,
         )
         from msgraphdatapipelines_spark.streaming.ann_stream import (
-            current_ann_models,
+            resolve_batches_models,
         )
 
         root = standing_index_root(shared)
         if pid == "0":
-            _, cents, books = current_ann_models(spark, root)
+            models = resolve_batches_models(spark, root)
+            cents = [(int(c), v) for c, v in models["centroids"]]
+            books = models["codebooks"]
             late = spark.createDataFrame(
                 [
                     (

@@ -15,7 +15,8 @@ hazard fails, and a stale waiver fails.
 The same module holds the reachability guard: every top-level package
 definition must be reached from the engine's own callers (tools,
 perfbench, bench.py, the driver entry, registered queries, import-time
-code) or carry a recorded reason in ``KEEP``.
+code) or carry a recorded reason in ``KEEP``; and no package module
+imports a name at module level that it never uses.
 """
 
 from __future__ import annotations
@@ -74,10 +75,11 @@ PKG = ROOT / "msgraphdatapipelines_spark"
 
 # "module:name" -> why a definition that no root reaches stays.  A reason is
 # a SURVEY.md §2 op id, a maintenance API, an observability direction, the
-# reference a test compares against, or "pending: direction 4" (ROADMAP:
-# decided by the next deletion round).  Everything these reach hangs off
+# reference a test compares against, or package metadata; a reason that
+# defers the decision ("pending") fails.  Everything these reach hangs off
 # them; an entry that another root already reaches is stale.
 KEEP: dict[str, str] = {
+    ":__version__": "package metadata",
     "sources.rest:TokenProvider": "S6 auth token acquisition",
     "sources.rest:http_fetcher": "S1/S4 live GET with the 429 signal",
     "sources.rest:read_odata": "S1/S2 paged OData scan with P1-P3 query options",
@@ -107,21 +109,6 @@ KEEP: dict[str, str] = {
     "queries.similarity:_indexed_models": "test reference: the IVF test's model source",
     "operators.dedup:set_similarity_join": "test reference: unserved twin of the prefix-index serve",
     "operators.multimodal:MEDIA_SCHEMA": "test reference: media frame contract of decode_image_meta",
-    "operators.dedup:set_similarity_candidates_prefix": "pending: direction 4",
-    "operators.diff:diff_snapshots": "pending: direction 4",
-    "operators.fuzzy:fuzzy_join_blocked": "pending: direction 4",
-    "operators.similarity:ivf_incremental_append": "pending: direction 4",
-    "operators.similarity:probed_cent_values": "pending: direction 4",
-    "sinks:append_zonemap": "pending: direction 4",
-    "sinks:read_snapshot_pruned": "pending: direction 4",
-    "sinks:read_snapshot_bloom_pruned": "pending: direction 4",
-    "sinks:refresh_bloom_manifest": "pending: direction 4",
-    "sources.rest:read_odata_page_stream": "pending: direction 4",
-    "streaming:enrich_stream_refreshed_dim": "pending: direction 4",
-    "streaming.ann_stream:ann_index_stream": "pending: direction 4",
-    "streaming.ann_stream:cm_rollup_stream": "pending: direction 4",
-    "streaming.curation:curation_pipeline_stream": "pending: direction 4",
-    "streaming.delta:delta_sync_stream": "pending: direction 4",
 }
 
 
@@ -136,76 +123,162 @@ def _docstrings(tree: ast.AST) -> set[int]:
     }
 
 
-def _refs(node: ast.AST, docs: set[int]) -> set[str]:
-    """Names ``node`` can reach: Name ids, Attribute attrs, import aliases
-    and identifier-valued string constants outside ``docs``."""
-    out: set[str] = set()
+def _refs(node: ast.AST, docs: set[int]) -> set[tuple[str, ...]]:
+    """References in ``node``: ``("n", id)`` for a Name, ``("a", base, attr)``
+    for ``base.attr`` on a Name, ``("s", text)`` for any other attribute and
+    for identifier-valued string constants outside ``docs``.  Imports bind
+    names (``_bindings``); they reference nothing."""
+    out: set[tuple[str, ...]] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
-            out.add(n.id)
+            out.add(("n", n.id))
         elif isinstance(n, ast.Attribute):
-            out.add(n.attr)
-        elif isinstance(n, ast.alias):
-            out.update(n.name.split("."))
+            base = n.value
+            out.add(("a", base.id, n.attr) if isinstance(base, ast.Name) else ("s", n.attr))
         elif (
             isinstance(n, ast.Constant)
             and isinstance(n.value, str)
             and n.value.isidentifier()
             and id(n) not in docs
         ):
-            out.add(n.value)
+            out.add(("s", n.value))
     return out
 
 
-def _package_defs() -> tuple[dict[str, tuple[int, set[str]]], set[str]]:
-    """``("module:name" -> (lines, refs))`` for every top-level definition,
-    plus the names that import-time code and registered queries reach."""
-    defs: dict[str, tuple[int, set[str]]] = {}
-    roots: set[str] = set()
-    for path in sorted(PKG.rglob("*.py")):
-        parts = path.relative_to(PKG).with_suffix("").parts
-        mod = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+def _module_of(path: Path) -> tuple[str, bool]:
+    parts = path.relative_to(PKG).with_suffix("").parts
+    is_pkg = parts[-1] == "__init__"
+    return ".".join(parts[:-1] if is_pkg else parts), is_pkg
+
+
+def _bindings(tree: ast.AST, mod: str | None, is_pkg: bool, modules: set[str]) -> dict:
+    """alias -> targets of every import in ``tree`` (function-local ones
+    too): ``("mod", m)`` for a package module, ``("name", m, n)`` for a name
+    in one, ``("ext",)`` for anything outside the package."""
+    binds: dict[str, set[tuple[str, ...]]] = {}
+
+    def pkg_mod(dotted: str) -> str | None:
+        if dotted == PKG.name:
+            return ""
+        return dotted[len(PKG.name) + 1 :] if dotted.startswith(PKG.name + ".") else None
+
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                name = a.asname or a.name.split(".")[0]  # ``import a.b`` binds ``a``
+                m = pkg_mod(a.name if a.asname else name)
+                binds.setdefault(name, set()).add(("mod", m) if m is not None else ("ext",))
+        elif isinstance(n, ast.ImportFrom):
+            if n.level and mod is not None:
+                base = mod.split(".") if mod else []
+                if not is_pkg:
+                    base = base[:-1]
+                base = base[: len(base) - (n.level - 1)]
+                src = ".".join(base + ([n.module] if n.module else []))
+            else:
+                src = pkg_mod(n.module or "")
+            for a in n.names:
+                name = a.asname or a.name
+                if src is None:
+                    target = ("ext",)
+                else:
+                    sub = f"{src}.{a.name}" if src else a.name
+                    target = ("mod", sub) if sub in modules else ("name", src, a.name)
+                binds.setdefault(name, set()).add(target)
+    return binds
+
+
+def _package_graph() -> tuple[dict[str, int], dict[str, set[str]], set[str]]:
+    """``("module:name" -> lines)`` for every top-level definition, each
+    definition's outgoing edges, and the definitions that import-time code,
+    registered queries and the engine's callers reach.  A reference
+    resolves through its module's own definitions and imports first and
+    falls back to every definition of that bare name only when neither
+    binds it."""
+    paths = sorted(PKG.rglob("*.py"))
+    modules = {_module_of(p)[0] for p in paths}
+    lines: dict[str, int] = {}
+    refs: dict[str, tuple[str, set]] = {}
+    scopes: list[tuple[str | None, set]] = []  # (module, refs) that are roots
+    binds: dict[str | None, dict] = {}
+    for path in paths:
+        mod, is_pkg = _module_of(path)
         tree = ast.parse(path.read_text(encoding="utf-8"))
         docs = _docstrings(tree)
+        binds[mod] = _bindings(tree, mod, is_pkg, modules)
         for st in tree.body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 names, start = [st.name], min([st.lineno] + [d.lineno for d in st.decorator_list])
                 for d in st.decorator_list:  # decorators run at import
-                    roots |= _refs(d, docs)
+                    scopes.append((mod, _refs(d, docs)))
                     if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register":
-                        roots.add(st.name)
+                        scopes.append((mod, {("n", st.name)}))
                 body = [n for n in ast.iter_child_nodes(st) if n not in st.decorator_list]
             elif isinstance(st, (ast.Assign, ast.AnnAssign)) and st.value is not None:
                 targets = st.targets if isinstance(st, ast.Assign) else [st.target]
                 names = [t.id for t in targets if isinstance(t, ast.Name)]
                 start, body = st.lineno, [st.value]
+            elif isinstance(st, (ast.Import, ast.ImportFrom)):
+                continue  # binds names; makes none of them a root
             else:
                 names = []
             if not names:
-                roots |= _refs(st, docs)
+                scopes.append((mod, _refs(st, docs)))
                 continue
-            refs = set().union(*(_refs(n, docs) for n in body))
+            r = set().union(*(_refs(n, docs) for n in body))
             for name in names:
-                defs[f"{mod}:{name}"] = (st.end_lineno - start + 1, refs)
+                lines[f"{mod}:{name}"] = st.end_lineno - start + 1
+                refs[f"{mod}:{name}"] = (mod, r)
     callers = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
     callers += sorted((ROOT / "tools").glob("*.py"))
     callers += [p for p in sorted((ROOT / "perfbench").rglob("*.py")) if "tests" not in p.parts]
-    for path in callers:
+    for i, path in enumerate(callers):
         tree = ast.parse(path.read_text(encoding="utf-8"))
-        roots |= _refs(tree, _docstrings(tree))
-    return defs, roots
+        binds[f"<{i}>"] = _bindings(tree, None, False, modules)
+        scopes.append((f"<{i}>", _refs(tree, _docstrings(tree))))
 
-
-def _closure(defs: dict[str, tuple[int, set[str]]], names: set[str]) -> set[str]:
     by_name: dict[str, set[str]] = {}
-    for key, (_, refs) in defs.items():
-        by_name.setdefault(key.split(":")[1], set()).update(refs)
-    reached, todo = set(), list(names)
+    for key in lines:
+        by_name.setdefault(key.split(":")[1], set()).add(key)
+
+    def name_in(mod: str, name: str, seen: frozenset = frozenset()) -> set[str] | None:
+        """Definitions ``name`` means inside ``mod``; None when unbound."""
+        if f"{mod}:{name}" in lines:
+            return {f"{mod}:{name}"}
+        if name not in binds.get(mod, {}) or (mod, name) in seen:
+            return None
+        out: set[str] = set()
+        for t in binds[mod][name]:
+            if t[0] == "name" and t[1] in binds:
+                out |= name_in(t[1], t[2], seen | {(mod, name)}) or set()
+        return out
+
+    def resolve(mod: str, ref: tuple[str, ...]) -> set[str]:
+        if ref[0] == "n":
+            got = name_in(mod, ref[1])
+            return by_name.get(ref[1], set()) if got is None else got
+        if ref[0] == "a" and ref[1] in binds.get(mod, {}):
+            out: set[str] = set()
+            for t in binds[mod][ref[1]]:
+                if t[0] == "mod":
+                    out |= name_in(t[1], ref[2]) or set()
+                elif t[0] == "name":  # a class or object: unknown member
+                    out |= by_name.get(ref[2], set())
+            return out
+        return by_name.get(ref[-1], set())
+
+    edges = {k: set().union(*(resolve(m, r) for r in rs)) for k, (m, rs) in refs.items()}
+    roots = set().union(*(resolve(m, r) for m, rs in scopes for r in rs))
+    return lines, edges, roots
+
+
+def _closure(edges: dict[str, set[str]], keys: set[str]) -> set[str]:
+    reached, todo = set(), list(keys)
     while todo:
-        n = todo.pop()
-        if n not in reached:
-            reached.add(n)
-            todo.extend(by_name.get(n, ()))
+        k = todo.pop()
+        if k not in reached:
+            reached.add(k)
+            todo.extend(edges.get(k, ()))
     return reached
 
 
@@ -213,22 +286,40 @@ def _closure(defs: dict[str, tuple[int, set[str]]], names: set[str]) -> set[str]
 def test_no_unreached_package_definitions():
     """Every top-level package definition is reached from a root, or has a
     ``KEEP`` reason.  A KEEP entry that no longer exists, or that the other
-    roots reach anyway, fails as stale (the lint_waivers rule)."""
-    defs, roots = _package_defs()
-    name = lambda key: key.split(":")[1]  # noqa: E731
-    reached = _closure(defs, roots | {name(k) for k in KEEP})
-    unreached = sorted(k for k in defs if name(k) not in reached)
-    missing = sorted(k for k in KEEP if k not in defs)
+    roots reach anyway, fails as stale (the lint_waivers rule), and so does
+    one whose reason defers the decision ("pending")."""
+    lines, edges, roots = _package_graph()
+    reached = _closure(edges, roots | set(KEEP))
+    unreached = sorted(k for k in lines if k not in reached)
+    missing = sorted(k for k in KEEP if k not in lines)
     redundant = sorted(
-        k
-        for k in KEEP
-        if k in defs and name(k) in _closure(defs, roots | {name(o) for o in KEEP if o != k})
+        k for k in KEEP if k in lines and k in _closure(edges, roots | (set(KEEP) - {k}))
     )
-    report = [f"  {k} ({defs[k][0]} lines)" for k in unreached]
+    pending = sorted(k for k, why in KEEP.items() if why.startswith("pending"))
+    report = [f"  {k} ({lines[k]} lines)" for k in unreached]
     assert not unreached, (
-        f"{len(unreached)} definitions ({sum(defs[k][0] for k in unreached)} lines) "
+        f"{len(unreached)} definitions ({sum(lines[k] for k in unreached)} lines) "
         "are reached by no query, pipeline, tool or benchmark; delete them or "
         "give each a KEEP reason:\n" + "\n".join(report)
     )
     assert not missing, f"stale KEEP entries (definition gone): {missing}"
     assert not redundant, f"stale KEEP entries (another root reaches them): {redundant}"
+    assert not pending, f"KEEP entries with no lasting reason: {pending}"
+
+
+@pytest.mark.quick
+def test_no_unused_module_imports():
+    """Every name a package module imports at module level is used in
+    that module (``__future__`` imports aside)."""
+    unused = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for st in tree.body:
+            if isinstance(st, ast.ImportFrom) and st.module == "__future__":
+                continue
+            if isinstance(st, (ast.Import, ast.ImportFrom)):
+                names = [a.asname or a.name.split(".")[0] for a in st.names]
+                where = f"{path.relative_to(ROOT)}:{st.lineno}"
+                unused += [f"{where} {n}" for n in names if n not in used]
+    assert not unused, "unused module-level imports:\n  " + "\n  ".join(unused)

@@ -565,52 +565,6 @@ def test_repetition_signals_hand_values(spark):
     assert out[2]["d2"] == 0.0 and out[2]["d3"] == 0.0
 
 
-def test_lsh_incremental_assign_two_batches(spark):
-    """Batch 1 bootstraps clusters; batch 2's near-dups (same signatures)
-    collapse into batch-1 reps WITHOUT reprocessing batch 1; genuinely new
-    content founds a new cluster; state stays min-id stable."""
-    schema = "doc_id long, mh0 string, mh1 string, mh2 string, mh3 string"
-    b1 = spark.createDataFrame(
-        [(10, "a", "a", "b", "b"), (11, "a", "a", "b", "b"), (12, "x", "x", "y", "y")],
-        schema,
-    )
-    a1, state1 = D.lsh_incremental_assign(b1, None, "doc_id", num_hashes=4, bands=2)
-    got1 = {r["doc_id"]: r for r in a1.collect()}
-    assert got1[10]["rep_id"] == 10 and got1[10]["is_new_cluster"]
-    assert got1[11]["rep_id"] == 10 and got1[11]["is_new_cluster"]  # in-batch collapse
-    assert got1[12]["rep_id"] == 12
-
-    b2 = spark.createDataFrame(
-        [(20, "a", "a", "b", "b"),   # dup of cluster 10
-         (21, "p", "p", "q", "q"),   # brand new
-         (22, "p", "p", "q", "q")],  # in-batch dup of 21
-        schema,
-    )
-    a2, state2 = D.lsh_incremental_assign(b2, state1, "doc_id", num_hashes=4, bands=2)
-    got2 = {r["doc_id"]: r for r in a2.collect()}
-    assert got2[20]["rep_id"] == 10 and not got2[20]["is_new_cluster"]
-    assert got2[21]["rep_id"] == 21 and got2[21]["is_new_cluster"]
-    assert got2[22]["rep_id"] == 21
-    # state keeps old cluster identity and registers the new one
-    reps = {r["rep_id"] for r in state2.collect()}
-    assert 10 in reps and 21 in reps and 20 not in reps
-
-
-def test_lsh_incremental_matches_batch_representatives(spark, sf_dir):
-    """Feeding the whole corpus as ONE batch must reproduce the one-shot
-    representative pass exactly (same single-step contract)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sets = docs.select("doc_id", D.word_ngrams("text", 3).alias("g"))
-    sigs = D.minhash_signatures(sets, "doc_id", "g", num_hashes=8, hash_fn="md5")
-    one_shot = {
-        r["doc_id"]: r["rep_id"]
-        for r in D.lsh_dedup_representatives(sigs, "doc_id").collect()
-    }
-    incr, _ = D.lsh_incremental_assign(sigs, None, "doc_id")
-    got = {r["doc_id"]: r["rep_id"] for r in incr.collect()}
-    assert got == one_shot
-
-
 def test_connected_components_matches_union_find_property(spark):
     """Property check: on a batch of pseudo-random graphs (dense, sparse,
     chains, self-loops, multi-edges), the distributed min-label fixpoint
@@ -1015,13 +969,10 @@ def test_pagerank_damping_conservation_and_early_stop(spark):
 
 
 def test_fuzzy_qgram_covers_prefix_blind_spot(spark):
-    """fuzzy_join_qgram (r7): finds every match the prefix block finds AND
-    the typo-in-the-first-characters matches the prefix block provably
-    misses; exact distances agree with the verify stage."""
-    from msgraphdatapipelines_spark.operators.fuzzy import (
-        fuzzy_join_blocked,
-        fuzzy_join_qgram,
-    )
+    """fuzzy_join_qgram (r7): finds the mid-string match a prefix block
+    finds AND the typo-in-the-first-characters match a prefix block
+    provably misses (the two probes share no leading 2-gram with it)."""
+    from msgraphdatapipelines_spark.operators.fuzzy import fuzzy_join_qgram
 
     cat = spark.createDataFrame(
         [("cold widget",), ("warm widget",), ("hot rod",)], "name string"
@@ -1030,42 +981,30 @@ def test_fuzzy_qgram_covers_prefix_blind_spot(spark):
         [("cod widget",), ("xold widget",)],  # deletion at pos 3 / typo at pos 1
         "probe string",
     )
-    # prefix=2 explicitly: the r8 production default is 4 (skew posture),
-    # this test pins the prefix-block SEMANTICS at the permissive setting
-    pref = {
-        (r["probe"], r["name"])
-        for r in fuzzy_join_blocked(probes, cat, "probe", "name", prefix=2).collect()
-    }
     qg = {
         (r["probe"], r["name"])
         for r in fuzzy_join_qgram(probes, cat, "probe", "name").collect()
     }
-    assert ("cod widget", "cold widget") in pref
-    assert ("xold widget", "cold widget") not in pref  # prefix blind spot
-    assert pref <= qg  # q-gram is a superset block
-    assert ("xold widget", "cold widget") in qg  # blind spot covered
+    assert ("cod widget", "cold widget") in qg
+    assert ("xold widget", "cold widget") in qg  # prefix blind spot covered
 
 
 def test_fuzzy_qgram_multiplicity_and_name_collision(spark):
     """r8 (r7 ADVICE item 4): fuzzy_join_qgram dedups candidates on
-    per-side row ids — duplicated input rows keep their multiplicity
-    (matching fuzzy_join_blocked on the same input), and shared left/right
+    per-side row ids — duplicated input rows keep their multiplicity,
+    and shared left/right
     column names raise a clear error instead of an ambiguous-column
     failure deep in the plan."""
     import pytest as _pytest
 
-    from msgraphdatapipelines_spark.operators.fuzzy import (
-        fuzzy_join_blocked,
-        fuzzy_join_qgram,
-    )
+    from msgraphdatapipelines_spark.operators.fuzzy import fuzzy_join_qgram
 
     cat = spark.createDataFrame([("cold widget",)], "name string")
     probes = spark.createDataFrame(
         [("cold widget",), ("cold widget",)], "probe string"  # duplicated row
     )
     qg = fuzzy_join_qgram(probes, cat, "probe", "name").collect()
-    bl = fuzzy_join_blocked(probes, cat, "probe", "name").collect()
-    assert len(qg) == len(bl) == 2  # multiplicity preserved
+    assert len(qg) == 2  # multiplicity preserved
     with _pytest.raises(ValueError, match="share column names"):
         fuzzy_join_qgram(probes, probes, "probe", "probe")
 
@@ -1102,11 +1041,10 @@ def test_fuzzy_prefix4_block_distribution(spark, sf_dir):
 
 
 def test_set_similarity_prefix_lossless_and_edges(spark):
-    """Prefix-filter set-similarity join (r7): candidates are a SUPERSET of
-    all true pairs (loss-less), the verify stage prunes to exact Jaccard,
-    and the length filter / threshold edges behave: identical sets → 1.0,
-    a sub-threshold pair is dropped, disjoint sets never pair, and a
-    big-vs-small size mismatch is pruned by the symmetric length bound."""
+    """Prefix-filter set-similarity join (r7): every true pair is found
+    (loss-less) with its exact Jaccard, and the length filter / threshold
+    edges behave: identical sets → 1.0, a sub-threshold pair is dropped,
+    disjoint sets never pair."""
     from pyspark.sql import functions as F
 
     from msgraphdatapipelines_spark.operators import dedup as D
@@ -1129,16 +1067,6 @@ def test_set_similarity_prefix_lossless_and_edges(spark):
     assert set(got) == {(1, 2), (1, 3), (2, 3)}
     assert got[(1, 3)] == 1.0
     assert abs(got[(1, 2)] - 0.6) < 1e-9 and abs(got[(2, 3)] - 0.6) < 1e-9
-    # candidates alone (pre-verify) must contain every true pair — and the
-    # (1,5) size-mismatch pair must already be pruned by the length filter
-    # (8 > 4/0.5 is false... 8 == 4/0.5 so it survives the length bound but
-    # dies in verify; (4, x) pairs share no gram so never materialize)
-    cands = {
-        (r["id_a"], r["id_b"])
-        for r in D.set_similarity_candidates_prefix(grams, "id", "g", 0.5).collect()
-    }
-    assert {(1, 2), (1, 3), (2, 3)} <= cands
-    assert not any(4 in p for p in cands)
 
 
 def test_set_similarity_exact_integer_threshold_boundary(spark):
@@ -1199,18 +1127,6 @@ def test_set_similarity_max_df_fat_gram_fallback_lossless(spark):
     assert capped == uncapped
     # the trio pairs (J=3/5) exist and are only reachable through fat grams
     assert {(0, 1), (0, 2), (1, 2), (3, 4), (3, 5), (4, 5)} == set(uncapped)
-    # candidate layer equality too (the loss-lessness proof surface)
-    cand_un = {
-        (r["id_a"], r["id_b"])
-        for r in D.set_similarity_candidates_prefix(grams, "id", "g", 0.5).collect()
-    }
-    cand_cap = {
-        (r["id_a"], r["id_b"])
-        for r in D.set_similarity_candidates_prefix(
-            grams, "id", "g", 0.5, max_df=2
-        ).collect()
-    }
-    assert cand_cap == cand_un
 
 
 def test_setsim_max_df_env_cap_on_equals_off(spark, sf_dir, monkeypatch):
@@ -3073,7 +2989,7 @@ def test_lexicon_postings_zonemap_prunes_files(spark, sf_dir, tmp_path):
     to one file (pruning is then a structural no-op), so this test forces
     a multi-file layout by disabling partition coalescing for the
     compact."""
-    import re
+    import os
 
     from pyspark.sql import functions as F
 
@@ -3103,13 +3019,12 @@ def test_lexicon_postings_zonemap_prunes_files(spark, sf_dir, tmp_path):
         F.explode(F.array_distinct(F.slice(ws, 1, 2))).alias("tok"),
     )
     pruned = qtmod._bm25_from_lexicon(spark, root, qt, k=10)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    counts = [
-        int(m.group(1))
-        for m in re.finditer(r"InMemoryFileIndex\((\d+) paths\)\[[^\]]*postings", plan)
-    ]
-    assert counts and min(counts) < n_files, (
-        f"postings scan not pruned: {counts} of {n_files} files"
+    # the files the serve opens under this generation's postings (from the
+    # scan's own file list, not the plan string Spark truncates)
+    anchor = f"/{os.path.basename(gen.rstrip('/'))}/postings/"
+    opened = [f for f in pruned.inputFiles() if anchor in f]
+    assert 0 < len(opened) < n_files, (
+        f"postings scan not pruned: {len(opened)} of {n_files} files"
     )
     # pruning is I/O elision, never a semantic change
     full = qtmod._bm25_from_lexicon(

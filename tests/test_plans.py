@@ -313,27 +313,6 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_fuzzy_join_blocks_as_equi_join_not_cartesian(spark, sf_dir):
-    """fuzzy_join_blocked (r7): Catalyst must EXTRACT the prefix equality
-    into a hash-join key — the length band and levenshtein verify run as
-    post-conditions on same-block pairs — never a cartesian product."""
-    from pyspark.sql import functions as F
-
-    from msgraphdatapipelines_spark.operators.fuzzy import fuzzy_join_blocked
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    probes = part.select(F.col("p_name").alias("probe")).distinct()
-    cat = part.select(F.col("p_name").alias("matched")).distinct()
-    plan = (
-        fuzzy_join_blocked(probes, cat, "probe", "matched")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "HashJoin" in plan or "SortMergeJoin" in plan
-
-
 def test_plan_metrics_capture_after_action(spark, sf_dir):
     """plan_metrics/metrics_summary (r7): after an action, the executed
     (post-AQE) tree exposes per-node SQLMetrics — scan rows, shuffle

