@@ -22,18 +22,9 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from msgraphdatapipelines_spark.queries import DEMOTED, REGISTRY, _ensure_loaded
-from msgraphdatapipelines_spark.session import get_spark, scale_conf
+from msgraphdatapipelines_spark.session import get_spark
 
 RUNS = int(os.environ.get("BENCH_RUNS", "3"))
-
-
-def _input_bytes(sf_dir: str) -> int:
-    """On-disk bytes of the warehouse parquet — the input-size argument
-    scale_conf sizes partitions/scans from."""
-    total = 0
-    for root, _, files in os.walk(sf_dir):
-        total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-    return total
 
 
 def host_control_s() -> float:
@@ -86,15 +77,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     _ensure_loaded()
-    # SPARK_GRAFT_SCALE_CONF=1 (r9, r8 VERDICT item 5): derive the session
-    # conf from the measured input size via session.scale_conf instead of
-    # the fixed local defaults — the A/B knob the sweep protocol records
-    extra = None
-    if os.environ.get("SPARK_GRAFT_SCALE_CONF"):
-        extra = scale_conf(_input_bytes(sf_dir))
-        print(f"# scale_conf({_input_bytes(sf_dir)}): {extra}", file=sys.stderr)
     control = host_control_s()
-    spark = get_spark("bench", extra_conf=extra)
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     # optional filters for ad-hoc runs (e.g. scaling sweeps that exclude the

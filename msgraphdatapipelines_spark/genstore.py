@@ -82,7 +82,7 @@ may be an object-store prefix — with the documented caveat that
 ``rename``-as-commit needs a store with atomic rename
 (HDFS/ABFS-hier/local); on S3-style stores the marker create is still
 atomic but stage renames are copies.  Lease functions read
-``LEASE_TTL_S`` at call time unless given ``ttl_s``.
+``LEASE_TTL_S`` at call time.
 """
 
 from __future__ import annotations
@@ -212,13 +212,12 @@ def gen_folded_bids(fs, hpath, gen: str) -> list[str]:
     return sorted(st.getPath().getName() for st in fs.listStatus(man))
 
 
-def live_leases(fs, hpath, root: str, ttl_s: float | None = None) -> list[str]:
+def live_leases(fs, hpath, root: str) -> list[str]:
     """Compaction lease files younger than the TTL (stale ones — a
     crashed compactor — are ignored, so appends never wedge).  Every
-    lease function defaults ``ttl_s`` to ``LEASE_TTL_S`` read at call
-    time, so one assignment changes the TTL for every store."""
-    if ttl_s is None:
-        ttl_s = LEASE_TTL_S
+    lease function reads ``LEASE_TTL_S`` at call time, so one assignment
+    changes the TTL for every store."""
+    ttl_s = LEASE_TTL_S
     if not fs.exists(hpath(root)):
         return []
     out = []
@@ -230,27 +229,22 @@ def live_leases(fs, hpath, root: str, ttl_s: float | None = None) -> list[str]:
     return out
 
 
-def wait_leases_clear(
-    fs, hpath, root: str, timeout_s: float | None = None, ttl_s: float | None = None
-) -> None:
-    """Block until no live compaction lease remains.  The default bound
-    is the lease TTL plus slack: a legitimate long compact (the 100×
+def wait_leases_clear(fs, hpath, root: str) -> None:
+    """Block until no live compaction lease remains.  The bound is the
+    lease TTL plus slack: a legitimate long compact (the 100×
     fold runs minutes) must not make waiting appenders raise spuriously,
     and a crashed compactor's lease goes stale at the TTL anyway — so
     waiting longer than TTL+slack can never be necessary."""
-    if ttl_s is None:
-        ttl_s = LEASE_TTL_S
-    if timeout_s is None:
-        timeout_s = ttl_s + 60.0
+    timeout_s = LEASE_TTL_S + 60.0
     t0 = time.time()
-    while live_leases(fs, hpath, root, ttl_s=ttl_s):
+    while live_leases(fs, hpath, root):
         if time.time() - t0 > timeout_s:
             raise TimeoutError(f"compaction lease on {root} held > {timeout_s}s")
         time.sleep(0.2)
 
 
 @contextmanager
-def compaction_lease(fs, hpath, root: str, ttl_s: float | None = None):
+def compaction_lease(fs, hpath, root: str):
     """Acquire the store's compaction lease for the duration of a
     rebuild, heartbeat-renewed so a LIVE compactor can legitimately
     outlive the TTL (the 100× fold runs minutes) while a CRASHED one
@@ -282,16 +276,15 @@ def compaction_lease(fs, hpath, root: str, ttl_s: float | None = None):
     it)."""
     import random
 
-    if ttl_s is None:
-        ttl_s = LEASE_TTL_S
+    ttl_s = LEASE_TTL_S
     lease = None
     for attempt in range(3):
-        if live_leases(fs, hpath, root, ttl_s=ttl_s):
+        if live_leases(fs, hpath, root):
             raise RuntimeError(f"compact already in progress under {root}")
         cand = f"{root}/_compacting.{uuid.uuid4().hex[:8]}"
         commit_file(fs, hpath, cand)
         mine = cand.rsplit("/", 1)[1]
-        others = [nm for nm in live_leases(fs, hpath, root, ttl_s=ttl_s) if nm != mine]
+        others = [nm for nm in live_leases(fs, hpath, root) if nm != mine]
         if not others:
             lease = cand
             break

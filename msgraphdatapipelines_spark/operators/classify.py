@@ -53,7 +53,6 @@ def nb_train(
     toks: DataFrame,
     label_col: str,
     buckets: int = 4096,
-    tok_col: str = "h",
 ) -> tuple[DataFrame, DataFrame]:
     """Train from an exploded (doc_id, label, hashed-token) frame.
 
@@ -61,7 +60,7 @@ def nb_train(
     (label, n_docs, n_toks) and the ≤ k·buckets feature-count table
     (label, h, c).  One hash shuffle each; both map-side combinable.
     """
-    counts = toks.groupBy(label_col, tok_col).agg(F.count(F.lit(1)).alias("c"))
+    counts = toks.groupBy(label_col, "h").agg(F.count(F.lit(1)).alias("c"))
     class_stats = toks.groupBy(label_col).agg(
         F.count_distinct("doc_id").alias("n_docs"),
         F.count(F.lit(1)).alias("n_toks"),
@@ -76,8 +75,6 @@ def nb_score(
     counts: DataFrame,
     label_col: str,
     buckets: int = 4096,
-    id_col: str = "doc_id",
-    tok_col: str = "h",
 ) -> DataFrame:
     """Score every document against every class and keep the argmax.
 
@@ -91,19 +88,19 @@ def nb_score(
     class rollup and a k-rows-per-id argmax window (WindowGroupLimit-size
     state).  Nothing collects; the model never leaves the cluster.
     """
-    n_tok = doc_toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_tokens"))
-    base = docs.select(id_col).join(n_tok, id_col, "left").fillna(0, ["n_tokens"])
+    n_tok = doc_toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tokens"))
+    base = docs.select("doc_id").join(n_tok, "doc_id", "left").fillna(0, ["n_tokens"])
 
     matched = (
-        doc_toks.join(counts, tok_col)
-        .groupBy(id_col, label_col)
+        doc_toks.join(counts, "h")
+        .groupBy("doc_id", label_col)
         .agg(F.sum(_q(F.col("c") + 1)).alias("s"))
     )
     scored = (
         base.crossJoin(F.broadcast(class_stats))
-        .join(matched, [id_col, label_col], "left")
+        .join(matched, ["doc_id", label_col], "left")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.col(label_col).alias("pred"),
             (
@@ -115,7 +112,7 @@ def nb_score(
     )
     from pyspark.sql import Window
 
-    w = Window.partitionBy(id_col).orderBy(F.desc("score_q"), F.asc("pred"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score_q"), F.asc("pred"))
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

@@ -152,10 +152,9 @@ def check_constraints(df: DataFrame, constraints: list[Constraint]) -> DataFrame
 def quarantine(
     df: DataFrame,
     constraints: list[Constraint],
-    reason_col: str = "_violations",
 ) -> tuple[DataFrame, DataFrame]:
     """Row-level dead-letter split (r8): ``(valid, invalid)`` where
-    ``invalid`` carries a ``reason_col`` array naming every constraint
+    ``invalid`` carries a ``_violations`` array naming every constraint
     each row breaks — the quarantine pattern an ingestion pipeline runs
     instead of failing the whole load (the engine-side generalization of
     the reference's per-entity error skip, S5, to per-ROW granularity).
@@ -196,7 +195,7 @@ def quarantine(
         else:
             raise ValueError(f"quarantine: unsupported constraint kind {c.kind!r}")
     reasons = F.filter(F.array(*flags), lambda x: x.isNotNull())
-    marked = marked.select(*df.columns, reasons.alias(reason_col))
-    valid = marked.filter(F.size(reason_col) == 0).drop(reason_col)
-    invalid = marked.filter(F.size(reason_col) > 0)
+    marked = marked.select(*df.columns, reasons.alias("_violations"))
+    valid = marked.filter(F.size("_violations") == 0).drop("_violations")
+    invalid = marked.filter(F.size("_violations") > 0)
     return valid, invalid

@@ -173,7 +173,6 @@ def lsh_candidate_pairs(
     id_col: str,
     num_hashes: int = 8,
     bands: int = 4,
-    max_pairs_per_doc: int | None = None,
 ) -> DataFrame:
     """LSH banding: docs sharing any band of their signature become a
     candidate pair (id_a < id_b, distinct).
@@ -185,22 +184,11 @@ def lsh_candidate_pairs(
     m-member near-dup cluster — that is the pair formulation's intrinsic
     output size, not a blocking failure.  For mass-duplication corpora use
     ``lsh_dedup_representatives``, which never materializes pairs.
-
-    ``max_pairs_per_doc`` (r4 VERDICT item 5) is the audit-mode guard for
-    that regime: each ``id_a`` keeps only its ``max_pairs_per_doc``
-    LOWEST-id partners (deterministic truncation — rank by ``id_b`` within
-    ``id_a``), bounding the output and the downstream Jaccard-verify
-    fan-out to Θ(n·cap) instead of Θ(m²) per cluster.  Spark 4 plans the
-    rank filter as WindowGroupLimit — a per-partition top-cap heap BEFORE
-    the window shuffle, so the bound applies map-side too.  The cap drops
-    real candidates in clusters larger than the cap (by construction);
-    audit sampling tolerates that, full dedup should use the
-    representative pass instead.
     """
     exploded = _band_explode(signatures, id_col, num_hashes, bands)
     a = exploded.alias("a")
     b = exploded.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col(f"a.band") == F.col(f"b.band"))
@@ -210,16 +198,6 @@ def lsh_candidate_pairs(
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
-    if max_pairs_per_doc is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("id_a").orderBy("id_b")
-        pairs = (
-            pairs.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_pairs_per_doc)
-            .drop("_rn")
-        )
-    return pairs
 
 
 def lsh_dedup_representatives(
@@ -257,13 +235,13 @@ def lsh_dedup_representatives(
     )
 
 
+CC_MAX_ITERS = 25  # closure rounds before connected_components gives up
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iters: int = 25,
     checkpoint: str = "local",
 ) -> DataFrame:
     """EXACT transitive closure of a near-dup pair graph: (id, component)
@@ -300,7 +278,8 @@ def connected_components(
     choice for multi-hour 100 TB jobs.
     Pathological long-chain graphs (diameter ≫ rounds) would want the
     large-star/small-star variant (doubles label reach per round); near-dup
-    graphs never need it, so ``max_iters`` exhaustion raises instead.
+    graphs never need it, so exhausting ``CC_MAX_ITERS`` rounds raises
+    instead.
     Skew: a giant cluster makes its representative a hot join key (every
     member's edge row carries it) — the per-round join is a plain
     sort-merge/hash equi-join, so AQE's skew-join split
@@ -320,11 +299,11 @@ def connected_components(
         return df.checkpoint(eager=True)
 
     labels = nodes.select(F.col(id_col).alias("_id"), F.col(id_col).alias("_comp"))
-    e = edges.select(F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst"))
+    e = edges.select(F.col("id_a").alias("_src"), F.col("id_b").alias("_dst"))
     sym = _pin(
         e.unionAll(e.select(F.col("_dst").alias("_src"), F.col("_src").alias("_dst")))
     )  # edges are re-read every round
-    for it in range(max_iters):
+    for it in range(CC_MAX_ITERS):
         # r17 OPT: round 1's edge⋈label join is an IDENTITY — labels start
         # as self (_comp == _id == _src), so the propagated rows are just
         # the edge list re-keyed.  Unrolling it removes one join (and its
@@ -370,7 +349,7 @@ def connected_components(
                 F.col("_id").alias(id_col), F.col("_comp").alias("component")
             )
     raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds — "
+        f"connected_components did not converge in {CC_MAX_ITERS} rounds — "
         "graph diameter exceeds the near-dup regime this propagation targets; "
         "use a large-star/small-star formulation for long-chain graphs"
     )
@@ -381,7 +360,6 @@ def lsh_dedup_clusters(
     id_col: str,
     num_hashes: int = 8,
     bands: int = 4,
-    max_iters: int = 25,
     checkpoint: str = "local",
 ) -> DataFrame:
     """EXACT transitive-closure clustering over the LSH bucket graph — the
@@ -418,9 +396,7 @@ def lsh_dedup_clusters(
         .distinct()
     )
     nodes = sigs.select(id_col)
-    comp = connected_components(
-        nodes, edges, id_col=id_col, max_iters=max_iters, checkpoint=checkpoint
-    )
+    comp = connected_components(nodes, edges, id_col=id_col, checkpoint=checkpoint)
     return comp.select(
         id_col, "component", (F.col(id_col) == F.col("component")).alias("kept")
     )

@@ -73,9 +73,7 @@ def argmax_in_array(
     return df
 
 
-def array_first_field(
-    df: DataFrame, array_col: str, field: str, new_col: str, drop_source: bool = True
-) -> DataFrame:
+def array_first_field(df: DataFrame, array_col: str, field: str, new_col: str) -> DataFrame:
     """T4 — array member projection to a scalar.
 
     PowerShell's ``$resources.displayName`` member-enumeration lands in a
@@ -84,29 +82,24 @@ def array_first_field(
     engine's documented decision is *first element*.
     """
     df = df.withColumn(new_col, F.try_element_at(F.col(array_col).getField(field), F.lit(1)))
-    return df.drop(array_col) if drop_source else df
+    return df.drop(array_col)
 
 
 def explode_array(
     df: DataFrame,
     array_col: str,
     keep: list[str] | None = None,
-    outer: bool = False,
-    element_name: str | None = None,
 ) -> DataFrame:
-    """Relational flatten — one output row per array element (§2.5).
-
-    ``outer=True`` keeps rows whose array is NULL/empty (element NULL),
-    which is what retention-style audits need.  The element column is named
-    ``element_name`` when given; otherwise a single plural 's' is stripped
-    ('items'→'item') — but never a trailing 'ss' ('address' stays intact;
-    the old rstrip mangled every trailing s: 'buses'→'bu').
+    """Relational flatten — one output row per array element (§2.5); rows
+    whose array is NULL or empty drop out.  The element column strips a
+    single plural 's' ('items'→'item') — but never a trailing 'ss'
+    ('address' stays intact; the old rstrip mangled every trailing s:
+    'buses'→'bu').
     """
-    ex = F.explode_outer(array_col) if outer else F.explode(array_col)
     cols = [F.col(c) for c in (keep or [c for c in df.columns if c != array_col])]
-    element = element_name or (
+    element = (
         array_col.removesuffix("s")
         if array_col.endswith("s") and not array_col.endswith("ss")
         else array_col
     )
-    return df.select(*cols, ex.alias(element or array_col))
+    return df.select(*cols, F.explode(array_col).alias(element))

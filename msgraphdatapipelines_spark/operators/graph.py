@@ -41,60 +41,44 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000_000
+DAMPING = 0.85
 
 
-def pagerank(
-    edges: DataFrame,
-    iters: int = 3,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "w",
-    checkpoint_every: int | None = None,
-    tol: float | None = None,
-) -> DataFrame:
-    """Weighted PageRank over an (src, dst, weight) edge list; returns
+def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
+    """Weighted PageRank over an (src, dst, w) edge list; returns
     (node, r_q) with ranks as scale-1e12 fixed-point BIGINTs summing to
     ~SCALE.  See module docstring for the recurrence and scale shape.
 
-    Teleport mass is ``(1 - damping)`` — mass conservation
-    (teleport + damping = 1) holds for ANY damping, not just 0.85
-    (r7 ADVICE item 1).
-
-    ``tol``: optional L1 convergence threshold as a FRACTION of total mass
-    (e.g. ``1e-6`` stops when Σ|r' − r| ≤ 1e-6·SCALE).  The delta rides
-    the same per-round frame as the rank update (old ranks join into the
-    update select, |r'−r| summed over the just-materialized blocks — the
-    connected_components changed-flag discipline, one job per round plus a
-    cheap scan; no second join job).  ``tol=None`` (default) runs exactly
-    ``iters`` rounds — the fixed-trajectory mode the generated oracle
-    replays.  With ``tol`` set, ``iters`` becomes the round CAP."""
+    Teleport mass is ``(1 - DAMPING)`` — mass conservation
+    (teleport + damping = 1) holds by construction (r7 ADVICE item 1).
+    Runs exactly ``iters`` rounds — the fixed trajectory the generated
+    oracle replays."""
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .union(edges.select(F.col(dst).alias("node")))
+        edges.select(F.col("src").alias("node"))
+        .union(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
-    outw = edges.groupBy(src).agg(F.sum(weight).alias("__ow"))
+    outw = edges.groupBy("src").agg(F.sum("w").alias("__ow"))
     # pre-join out-weights once; the loop never re-aggregates them
-    ew = edges.join(outw, src).select(
-        F.col(src).alias("node"), F.col(dst).alias("__dst"), F.col(weight).alias("__w"), "__ow"
+    ew = edges.join(outw, "src").select(
+        F.col("src").alias("node"), F.col("dst").alias("__dst"), F.col("w").alias("__w"), "__ow"
     )
-    out_nodes = outw.select(F.col(src).alias("node"))
+    out_nodes = outw.select(F.col("src").alias("node"))
 
     ranks = nodes.crossJoin(F.broadcast(nn)).select(
         "node", F.expr("CAST(1000000000000 div n AS BIGINT)").alias("r_q")
     )
-    # teleport + damping = 1 for ANY damping (r7 ADVICE item 1); the same
-    # Python double (1 - damping) is rendered into the generated oracle, so
-    # the two engines floor the identical IEEE product.
-    tele = F.floor((F.lit(1.0 - damping) * F.lit(SCALE)) / F.col("n")).cast("long")
+    # teleport + damping = 1 (r7 ADVICE item 1); the same Python double
+    # (1 - DAMPING) is rendered into the generated oracle, so the two
+    # engines floor the identical IEEE product.
+    tele = F.floor((F.lit(1.0 - DAMPING) * F.lit(SCALE)) / F.col("n")).cast("long")
     new_r = (
         tele
-        + F.floor((F.lit(damping) * F.col("dq")) / F.col("n")).cast("long")
+        + F.floor((F.lit(DAMPING) * F.col("dq")) / F.col("n")).cast("long")
         + F.coalesce(F.col("in_q"), F.lit(0))
     )
-    for i in range(iters):
+    for _ in range(iters):
         dang = (
             ranks.join(out_nodes, "node", "left_anti")
             .agg(F.coalesce(F.sum("r_q"), F.lit(0)).alias("dq"))
@@ -103,7 +87,7 @@ def pagerank(
             ew.join(ranks, "node")
             .select(
                 F.col("__dst").alias("node"),
-                F.floor((F.lit(damping) * F.col("r_q") * F.col("__w")) / F.col("__ow"))
+                F.floor((F.lit(DAMPING) * F.col("r_q") * F.col("__w")) / F.col("__ow"))
                 .cast("long")
                 .alias("c_q"),
             )
@@ -111,38 +95,22 @@ def pagerank(
             .agg(F.sum("c_q").alias("in_q"))
         )
         # `ranks` already carries the full node universe (seeded from
-        # `nodes`, preserved by every update), so the update builds on it
-        # directly — the old rank rides the same frame and the L1 delta
-        # needs no second join (connected_components discipline).
-        updated = (
-            ranks.select("node", F.col("r_q").alias("__prev_q"))
+        # `nodes`, preserved by every update), so the update builds on it.
+        ranks = (
+            ranks.select("node")
             .join(incoming, "node", "left")
             .crossJoin(F.broadcast(dang))
             .crossJoin(F.broadcast(nn))
-            .select(
-                "node",
-                new_r.alias("r_q"),
-                F.abs(new_r - F.col("__prev_q")).alias("__d_q"),
-            )
+            .select("node", new_r.alias("r_q"))
         )
-        if tol is not None:
-            updated = updated.localCheckpoint(eager=True)
-            ranks = updated.select("node", "r_q")
-            row = updated.agg(F.sum("__d_q").alias("d")).first()
-            if (row["d"] or 0) <= tol * SCALE:
-                return ranks
-        else:
-            ranks = updated.select("node", "r_q")
-            if checkpoint_every and (i + 1) % checkpoint_every == 0:
-                ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
-def pagerank_oracle_sql(edges_sql: str, iters: int = 3, damping: float = 0.85) -> str:
+def pagerank_oracle_sql(edges_sql: str, iters: int = 3) -> str:
     """Generate the DuckDB twin of :func:`pagerank` — the SAME integer
     recurrence unrolled as a CTE chain, so the Spark loop and the oracle
     cannot drift (one definition of the math, two renderings)."""
-    d = damping
+    d = DAMPING
     parts = [
         f"WITH edges AS ({edges_sql})",
         "nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)",
@@ -181,8 +149,6 @@ def pagerank_oracle_sql(edges_sql: str, iters: int = 3, damping: float = 0.85) -
 
 def transitive_reachability(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_depth: int = 8,
     checkpoint: str = "local",
 ) -> DataFrame:
@@ -222,7 +188,7 @@ def transitive_reachability(
         return df.checkpoint(eager=True)
 
     e = (
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+        edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
         .filter(F.col("_s") != F.col("_d"))
         .distinct()
     )
@@ -260,7 +226,7 @@ def transitive_reachability(
     return _closure()
 
 
-def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Global triangle census of an undirected graph (late r10): one row
     (n_vertices, n_edges, n_wedges, n_triangles, clustering_coeff).
 
@@ -280,7 +246,7 @@ def triangle_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     the arboricity — the count is identical, so this operator keeps the
     simpler canonical form and documents the degree-ordered swap as the
     skew escape hatch."""
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
+    a, b = F.least(F.col("src"), F.col("dst")), F.greatest(F.col("src"), F.col("dst"))
     e = (
         edges.select(a.alias("a"), b.alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -322,27 +288,16 @@ def cooccurrence_edges(
     df: DataFrame,
     group_col: str,
     item_col: str,
-    max_items_per_group: int | None = None,
 ) -> DataFrame:
     """Distinct co-occurrence edges (a < b) between items sharing a group
     (late r10) — the edge-derivation step in front of
-    :func:`triangle_stats` / clustering analyses, with its quadratic
-    hazard made a FIRST-CLASS knob: per-group pair fan-out is
-    (distinct items choose 2), so one hub group (a part every supplier
+    :func:`triangle_stats` / clustering analyses.  Per-group pair fan-out
+    is (distinct items choose 2), so one hub group (a part every supplier
     ships, a token every document contains) inflates the join toward
-    quadratic.  ``max_items_per_group`` excludes groups above the cap
-    BEFORE pairing — the set-similarity ``max_df`` discipline: a capped
-    hub contributes no edges (callers audit the excluded groups by
-    re-running the distinct count), keeping the derivation
-    Θ(Σ capped-group²) by construction."""
+    quadratic."""
     pairs_in = df.select(
         F.col(group_col).alias("g"), F.col(item_col).alias("i")
     ).distinct()
-    if max_items_per_group is not None:
-        sizes = pairs_in.groupBy("g").agg(F.count(F.lit(1)).alias("_gn"))
-        pairs_in = pairs_in.join(
-            F.broadcast(sizes.filter(F.col("_gn") <= max_items_per_group)), "g"
-        ).drop("_gn")
     b = pairs_in.select(F.col("g").alias("g2"), F.col("i").alias("i2"))
     return (
         pairs_in.join(b, (pairs_in.g == b.g2) & (pairs_in.i < b.i2))

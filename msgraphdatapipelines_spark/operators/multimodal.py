@@ -147,7 +147,7 @@ def decode_image_meta(df: DataFrame, backend: str = "auto") -> DataFrame:
     return df.mapInPandas(batches, IMAGE_META_SCHEMA)
 
 
-def extract_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Deterministic payload 'embedding' via Arrow-batched mapInPandas.
 
     STUB feature fn (bytes of sha256 → [0,1) doubles); the batch shape,
@@ -157,7 +157,7 @@ def extract_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
 
     def feat(payload: bytes) -> list[float]:
         d = hashlib.sha256(bytes(payload)).digest()
-        return [d[i] / 255.0 for i in range(dim)]
+        return [d[i] / 255.0 for i in range(FEATURE_DIM)]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -308,7 +308,6 @@ def phash_near_dup_pairs(
     tau: int = 8,
     n_bands: int = 9,
     band_bits: int = 7,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Exact-recall near-dup pairs: (id_a, id_b, hamming ≤ tau).
 
@@ -316,20 +315,11 @@ def phash_near_dup_pairs(
     ``tau ≤ n_bands − 1``); each candidate verifies with one
     ``bit_count(xor)`` — no payload access after hashing.
 
-    SCALE CAVEAT, first-class like set-similarity's ``max_df``: on
-    structured corpora the hash bits are NOT uniform (text blocks share
-    statistics), so a band value can bucket a large fraction of the
-    corpus and the self-join inflates toward quadratic.  ``max_bucket``
-    caps the per-(j, band) bucket size: oversized buckets are EXCLUDED
-    from candidate generation (recall on them must come from another
-    band — or the caller audits them via :func:`phash_band_buckets`),
-    keeping the join Θ(Σ capped-bucket²) by construction."""
+    SCALE CAVEAT: on structured corpora the hash bits are NOT uniform
+    (text blocks share statistics), so a band value can bucket a large
+    fraction of the corpus and the self-join inflates toward quadratic;
+    :func:`phash_band_buckets` shows the bucket sizes."""
     b = phash_band_buckets(hashed, n_bands, band_bits)
-    if max_bucket is not None:
-        sizes = b.groupBy("j", "band").agg(F.count(F.lit(1)).alias("_bn"))
-        b = b.join(
-            F.broadcast(sizes.filter(F.col("_bn") <= max_bucket)), ["j", "band"]
-        ).drop("_bn")
     a1 = b.select(
         F.col("media_id").alias("id_a"), F.col("phash").alias("ha"), "j", "band"
     )

@@ -34,8 +34,6 @@ def running_total(
     order_by: str,
     value_col: str,
     name: str = "running",
-    num_buckets: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Inclusive running SUM of ``value_col`` over the global ``order_by``
     ordering, without a single-partition window.
@@ -47,8 +45,8 @@ def running_total(
     order in the running sum (any total order extending the key order).
     Use a unique numeric key (id, epoch micros) for full determinism.
 
-    ``materialize=True`` pins the input once (eager ``localCheckpoint``)
-    so the min/max job and the final plan read one materialization
+    The input is pinned once (eager ``localCheckpoint``) so the min/max job
+    and the final plan read one materialization
     instead of re-executing the upstream plan — same single-scan contract
     (and the same executor-loss caveat) as ``sinks.with_surrogate_key``.
     """
@@ -61,8 +59,8 @@ def running_total(
             "Map the key to a number first (e.g. epoch micros, xxhash64)."
         )
     bucketc, sumc, offc = "__rt_bucket", "__rt_sum", "__rt_off"
-    src = df.localCheckpoint(eager=True) if materialize else df
-    n = num_buckets or src.sparkSession.sparkContext.defaultParallelism
+    src = df.localCheckpoint(eager=True)
+    n = src.sparkSession.sparkContext.defaultParallelism
     oc = F.col(order_by).cast("double")
     lo, hi, total = src.agg(F.min(oc), F.max(oc), F.count(F.lit(1))).first()
     if not total:
@@ -97,8 +95,6 @@ def pack_into_bins(
     order_by: str,
     tokens_col: str,
     budget: int,
-    bin_col: str = "bin_id",
-    running_col: str = "running_tokens",
 ) -> DataFrame:
     """Greedy token-budget packing in ``order_by`` order: document d goes to
     bin ``floor(exclusive_prefix_sum(tokens) / budget)`` — the streaming
@@ -106,10 +102,10 @@ def pack_into_bins(
     standard training-data packing contract; oversized documents still get
     a bin).  Integer arithmetic throughout — deterministic and
     oracle-reproducible."""
-    run = running_total(df, order_by, tokens_col, name=running_col)
-    excl = F.col(running_col) - F.col(tokens_col)
+    run = running_total(df, order_by, tokens_col, name="running_tokens")
+    excl = F.col("running_tokens") - F.col(tokens_col)
     # exact integer floor-div: (x - x % b) / b divides an exact multiple, so
     # the double quotient is the integer itself (a plain x/b double division
     # can round k + (b-1)/b up to k+1 once prefix sums pass ~2^40)
     b = F.lit(int(budget))
-    return run.withColumn(bin_col, ((excl - (excl % b)) / b).cast("long"))
+    return run.withColumn("bin_id", ((excl - (excl % b)) / b).cast("long"))

@@ -114,9 +114,6 @@ def point_in_time_join(
     fact_key: str,
     hist_key: str,
     ts_col: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    how: str = "left",
 ) -> DataFrame:
     """Join each fact row to the dimension VERSION valid at its event
     time (r8): the consumer of ``sinks.apply_scd2`` histories — "what did
@@ -134,7 +131,7 @@ def point_in_time_join(
     (bounded by update cadence and ``keep_last``-style retention), never
     data-sized, so no time-bucketing is needed (unlike event-to-event
     range joins, where ``bucketed_interval_join`` bounds the fan-out).
-    ``how='left'`` keeps facts predating the key's first version (NULL
+    Left semantics: facts predating the key's first version (NULL
     dimension columns) — silently dropping them would bias any
     aggregation over the result.
     """
@@ -142,12 +139,10 @@ def point_in_time_join(
         F.col(hist_key).alias(fact_key),
         *[c for c in history.columns if c != hist_key],
     )
-    in_window = (F.col(valid_from) <= F.col(ts_col)) & (
-        F.col(valid_to).isNull() | (F.col(ts_col) < F.col(valid_to))
+    in_window = (F.col("valid_from") <= F.col(ts_col)) & (
+        F.col("valid_to").isNull() | (F.col(ts_col) < F.col("valid_to"))
     )
-    if how == "inner":
-        return facts.join(h, fact_key).filter(in_window)
-    # left: stable row id per fact (duplicate fact rows keep multiplicity,
+    # stable row id per fact (duplicate fact rows keep multiplicity,
     # no all-columns anti-join fragility — the bucketed_interval_join trick)
     l0 = facts.withColumn("__fid", F.monotonically_increasing_id())
     matched = l0.join(h, fact_key).filter(in_window)

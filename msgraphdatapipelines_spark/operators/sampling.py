@@ -170,7 +170,6 @@ def shuffle_deterministic(
     id_col: str,
     seed: int = 0,
     num_buckets: int | None = None,
-    name: str = "shuffle_pos",
 ) -> DataFrame:
     """Deterministic global training-order shuffle: assign every row a
     dense position ``1..n`` in a pseudo-random order that is a pure
@@ -196,10 +195,10 @@ def shuffle_deterministic(
     probe branch; since bucket and u are pure functions of the data this
     double-execution is recompute-safe (pin upstream yourself if its scan
     is nondeterministic or expensive — see ``with_surrogate_key``'s
-    ``materialize`` discussion in sinks.py).
+    ``localCheckpoint`` caveat in sinks.py).
 
-    Training consumers then ``repartitionByRange(name)`` +
-    ``sortWithinPartitions(name)`` at write time to lay files out in
+    Training consumers then ``repartitionByRange("shuffle_pos")`` +
+    ``sortWithinPartitions("shuffle_pos")`` at write time to lay files out in
     shuffle order, or range-read ``[lo, hi)`` position slices for
     curriculum windows.
 
@@ -217,7 +216,7 @@ def shuffle_deterministic(
     offsets can disagree with the probe rows and the inner join then
     drops or mis-positions rows SILENTLY rather than failing — pin the
     upstream (localCheckpoint / write-out) before calling, exactly as
-    ``with_surrogate_key``'s materialize discussion prescribes.
+    ``with_surrogate_key`` does.
     """
     n = num_buckets or df.sparkSession.sparkContext.defaultParallelism
     from pyspark.sql import Window
@@ -238,7 +237,7 @@ def shuffle_deterministic(
     w = Window.partitionBy(bucketc).orderBy(u.asc(), h.asc(), F.col(id_col).asc())
     return (
         keyed.join(F.broadcast(offsets), bucketc)
-        .withColumn(name, (F.col(offc) + F.row_number().over(w)).cast("long"))
+        .withColumn("shuffle_pos", (F.col(offc) + F.row_number().over(w)).cast("long"))
         .drop(bucketc, offc)
     )
 
@@ -292,7 +291,7 @@ def split_by_group_sql(
     return "CASE " + " ".join(arms) + f" ELSE '{splits[-1][0]}' END"
 
 
-def leakage_check(df: DataFrame, key_col: str, split_col: str = "split") -> DataFrame:
+def leakage_check(df: DataFrame, key_col: str) -> DataFrame:
     """Cross-split leakage audit: one row — (n_keys, n_leaked) where
     n_leaked counts keys observed in MORE THAN ONE split.  Zero by
     construction when the split came from :func:`split_by_group`; the
@@ -301,7 +300,7 @@ def leakage_check(df: DataFrame, key_col: str, split_col: str = "split") -> Data
     does NOT hold by construction.  One (key)-keyed count-distinct agg +
     one global agg — map-combinable, no row explosion."""
     per_key = df.groupBy(key_col).agg(
-        F.countDistinct(split_col).alias("__n_splits")
+        F.countDistinct("split").alias("__n_splits")
     )
     return per_key.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -315,11 +314,10 @@ def weighted_sample_without_replacement(
     weight_col: str,
     k: int,
     strata: list[str] | None = None,
-    seed: str = "",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement (r8): the
-    Efraimidis–Spirakis A-ES scheme — each row draws u = md5_uniform(id:
-    seed) and ranks by u^(1/w); the top-``k`` per stratum is a weighted
+    Efraimidis–Spirakis A-ES scheme — each row draws u = md5_uniform(id:)
+    and ranks by u^(1/w); the top-``k`` per stratum is a weighted
     sample without replacement (inclusion ∝ weight, exactly k rows).
     The weighted counterpart of ``stratified_take_exact``: upweight
     high-quality documents in a training mix while keeping the draw
@@ -342,7 +340,7 @@ def weighted_sample_without_replacement(
     from pyspark.sql import Window
 
     u = F.greatest(
-        md5_uniform(F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}"))),
+        md5_uniform(F.concat(F.col(id_col).cast("string"), F.lit(":"))),
         F.lit(2.0 ** -33),
     )
     w = F.col(weight_col).cast("double")
@@ -357,12 +355,10 @@ def weighted_sample_without_replacement(
     )
 
 
-def weighted_sample_sql(
-    id_expr: str, weight_expr: str, seed: str = ""
-) -> str:
+def weighted_sample_sql(id_expr: str, weight_expr: str) -> str:
     """DuckDB twin of the A-ES rank key: floor(ln(u)/w · 1e9), with the
     same ≥ 2^-33 clamp as the engine (ln(0) raises in DuckDB)."""
-    u = md5_uniform_sql(f"CAST({id_expr} AS VARCHAR) || ':{seed}'")
+    u = md5_uniform_sql(f"CAST({id_expr} AS VARCHAR) || ':'")
     return (
         f"CAST(floor(ln(greatest({u}, {2.0 ** -33!r}))"
         f" / CAST({weight_expr} AS DOUBLE) * 1e9) AS BIGINT)"

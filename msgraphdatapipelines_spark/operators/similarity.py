@@ -188,8 +188,6 @@ def kmeans_centroids(
     iters: int = 3,
     dim: int = 64,
     exact_mean: bool = False,
-    assign: str = "auto",
-    seed_vectors: list[list[float]] | None = None,
 ) -> list[tuple[int, list[float]]]:
     """Distributed Lloyd k-means over an embedding column — the coarse
     quantizer trainer for ``ivf_topk`` (pass the result as its
@@ -215,36 +213,22 @@ def kmeans_centroids(
     cheaper, and the ~1-ulp partial-order wobble doesn't matter when the
     centroids stay engine-side.
 
-    ``assign`` selects the per-iteration assignment plan (see
-    ``assign_nearest_centroid``): 'auto' (default) inlines centroid
-    literals up to k=64 and switches to the broadcast centroid-table path
-    above — large-k training (k∝n at 100 TB) would otherwise hit the same
+    The per-iteration assignment plan (see ``assign_nearest_centroid``)
+    inlines centroid literals up to k=64 and switches to the broadcast
+    centroid-table path above — large-k training (k∝n at 100 TB) would otherwise hit the same
     Θ(k·dim) expression-tree compilation wall the r6 sweep measured.
 
     The returned ids are 0..k-1 (centroid index), not corpus ids.
     """
-    if assign not in ("auto", "literal", "table"):
-        raise ValueError(f"assign must be auto|literal|table, got {assign!r}")
-    use_table = assign == "table" or (assign == "auto" and k > 64)
+    use_table = k > 64
     cv = F.col(vec_c).cast("array<double>")
-    if seed_vectors is not None:
-        # caller-supplied init (r13): a retrain can seed proportionally
-        # to CURRENT list occupancy — lowest-id-global
-        # seeding would seat every seed in the historical corpus and
-        # Lloyd could never split a drifted clump, however many lists
-        # it overflows.  Still deterministic: the caller derives seeds
-        # deterministically from the artifact.
-        seed = [[float(x) for x in v] for v in seed_vectors]
-        if len(seed) != k:
-            raise ValueError(f"k={k} centroids requested but {len(seed)} seeds given")
-    else:
-        seed = [
-            [float(x) for x in r["_v"]]
-            for r in corpus.select(F.col(id_c).alias("_id"), cv.alias("_v"))
-            .orderBy("_id")
-            .limit(k)
-            .collect()
-        ]
+    seed = [
+        [float(x) for x in r["_v"]]
+        for r in corpus.select(F.col(id_c).alias("_id"), cv.alias("_v"))
+        .orderBy("_id")
+        .limit(k)
+        .collect()
+    ]
     if len(seed) < k:
         raise ValueError(f"k={k} centroids requested but corpus has only {len(seed)} rows")
     if dim != len(seed[0]):
@@ -496,7 +480,6 @@ def pq_codebooks(
     m: int = 8,
     ks: int = 16,
     dim: int = 64,
-    iters: int = 0,
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks: ``m`` subspaces × ``ks`` codewords
     of ``dim/m`` doubles each — MODEL STATE (m·ks·dim/m = dim·ks values),
@@ -505,11 +488,7 @@ def pq_codebooks(
 
     Seeding is deterministic and oracle-expressible: the ``ks`` lowest-id
     non-zero-norm corpus vectors, unit-normalized, sliced into subvectors
-    (codebook[s][j] = subvector s of seed vector j).  ``iters`` Lloyd
-    rounds refine each subspace's codebook: ONE exploded assignment
-    (n·m rows, argmin over the subspace's inline codewords) + ONE hash
-    aggregation per round computes all m subspace means simultaneously —
-    not m separate trainings.  Empty cells keep their seed codeword.
+    (codebook[s][j] = subvector s of seed vector j).
     """
     dsub = dim // m
     if dsub * m != dim:
@@ -526,62 +505,10 @@ def pq_codebooks(
     )
     if len(seeds) < ks:
         raise ValueError(f"ks={ks} codewords requested but corpus has {len(seeds)} usable rows")
-    books = [
+    return [
         [[float(x) for x in r["_u"][s * dsub : (s + 1) * dsub]] for r in seeds]
         for s in range(m)
     ]
-    for _ in range(iters):
-        # exploded training: one narrow map assigns every (vector, subspace)
-        # to its codeword, one shuffle aggregates all m×ks cell means
-        norm = corpus.select(v.alias("_v")).withColumn(
-            "_n", F.sqrt(seq_dot(F.col("_v"), F.col("_v")))
-        ).filter(F.col("_n") > 0).select(
-            F.transform(F.col("_v"), lambda x: x / F.col("_n")).alias("_u")
-        )
-        subs = norm.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.slice(F.col("_u"), s * dsub + 1, dsub).alias("sub"),
-                    )
-                    for s in range(m)
-                ])
-            ).alias("e")
-        ).select(F.col("e.s").alias("s"), F.col("e.sub").alias("sub"))
-        assigned = subs.withColumn(
-            "j", _pq_assign_expr(F.col("s"), F.col("sub"), books)
-        )
-        cells = assigned.groupBy("s", "j").agg(
-            *[F.avg(F.col("sub")[i]).alias(f"m{i}") for i in range(dsub)]
-        ).collect()
-        new = {(r["s"], r["j"]): [r[f"m{i}"] for i in range(dsub)] for r in cells}
-        books = [
-            [new.get((s, j), books[s][j]) for j in range(ks)] for s in range(m)
-        ]
-    return books
-
-
-def _pq_assign_expr(s_col: Column, sub: Column, books: list[list[list[float]]]) -> Column:
-    """Codeword index (argmin squared-L2, tie → lowest j) of subvector
-    ``sub`` in subspace ``s_col`` — pure inline expression over the literal
-    codebooks, no join."""
-    per_space = []
-    for s, book in enumerate(books):
-        entries = []
-        for j, cw in enumerate(book):
-            arr = F.array(*[F.lit(x) for x in cw])
-            d2 = F.aggregate(
-                F.zip_with(sub, arr, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            entries.append(F.struct(d2.alias("d2"), F.lit(j).alias("j")))
-        per_space.append(F.sort_array(F.array(*entries))[0]["j"])
-    out = per_space[-1]
-    for s in range(len(books) - 2, -1, -1):
-        out = F.when(s_col == s, per_space[s]).otherwise(out)
-    return out
 
 
 def pq_encode(
@@ -835,10 +762,7 @@ def ivf_pq_topk(
     vec_q: str,
     vec_c: str,
     k: int = 5,
-    n_centroids: int = 8,
     nprobe: int = 2,
-    m: int = 8,
-    ks: int = 16,
     dim: int = 64,
     centroids: list[tuple[int, list[float]]] | None = None,
     codebooks: list[list[list[float]]] | None = None,
@@ -848,8 +772,8 @@ def ivf_pq_topk(
 ) -> DataFrame:
     """IVF + PQ — the composed billion-scale ANN shape: the coarse
     quantizer (IVF centroids) restricts each query to its ``nprobe``
-    nearest inverted lists (~nprobe/n_centroids of the corpus), and within
-    those lists candidates are scored from their ``m``-byte PQ codes via
+    nearest inverted lists (~nprobe/#centroids of the corpus), and within
+    those lists candidates are scored from their m-byte PQ codes via
     the query's lookup table — so the hot path touches neither the full
     corpus nor any full vector: candidate set pruned by IVF, per-candidate
     cost collapsed by PQ.  Both models are literal state (centroids
@@ -857,6 +781,8 @@ def ivf_pq_topk(
     are one narrow map, the probe join is the same broadcast equi-join as
     ``ivf_topk``, and ``rerank=R`` optionally re-scores the top R with
     exact cosine (two-stage pipeline, same contract as ``pq_topk``).
+    Without ``centroids`` the 8 lowest-id non-zero corpus vectors seed the
+    lists; without ``codebooks``, :func:`pq_codebooks`' defaults apply.
 
     At 100 TB this is the layout you would persist: parquet of
     (cent, code) — a ~32× smaller, pruned, scannable index.
@@ -870,11 +796,11 @@ def ivf_pq_topk(
             .withColumn("_cn", F.sqrt(seq_dot(F.col("_cvec"), F.col("_cvec"))))
             .filter(F.col("_cn") > 0)
             .orderBy("_cid")
-            .limit(n_centroids)
+            .limit(8)
             .collect()
         ]
     if codebooks is None:
-        codebooks = pq_codebooks(corpus, id_c, vec_c, m=m, ks=ks, dim=dim)
+        codebooks = pq_codebooks(corpus, id_c, vec_c, dim=dim)
     m = len(codebooks)
     ks = len(codebooks[0])
     dsub = dim // m
@@ -960,8 +886,6 @@ def ivf_pq_topk(
 def recall_at_k(
     approx: DataFrame,
     exact: DataFrame,
-    qid: str = "qid",
-    cid: str = "cid",
 ) -> DataFrame:
     """Recall@k as a first-class queryable metric (r6 VERDICT item 7) —
     the number every ANN deployment tunes planes/nprobe/m against,
@@ -981,8 +905,8 @@ def recall_at_k(
     exact baseline knows but the index returned nothing for still appear
     (n_hit = 0) — silently dropping them would inflate recall.
     """
-    e = exact.select(F.col(qid).alias("qid"), F.col(cid).alias("cid"))
-    a = approx.select(F.col(qid).alias("qid"), F.col(cid).alias("cid"))
+    e = exact.select("qid", "cid")
+    a = approx.select("qid", "cid")
     hit = e.join(a, ["qid", "cid"], "left_semi").groupBy("qid").agg(
         F.count("*").alias("n_hit")
     )
@@ -1003,8 +927,6 @@ def assign_nearest_centroid(
     id_c: str,
     vec_c: str,
     centroids: list[tuple[int, list[float]]],
-    assign: str = "auto",
-    literal_max_k: int = 64,
 ) -> DataFrame:
     """Nearest-centroid (squared-L2, ties to lowest centroid id) cluster
     assignment — the quantizer-apply step shared by SemDeDup and any
@@ -1014,13 +936,13 @@ def assign_nearest_centroid(
     Two physically different plans with IDENTICAL semantics
     (pytest-pinned equivalence, tests/test_similarity.py):
 
-    - ``assign='literal'`` — k per-centroid struct expressions inlined as
+    - literal, up to 64 centroids — k per-centroid struct expressions inlined as
       literals and argmin'd with ``sort_array(...)[0]`` (the
       ivf_topk/kmeans trick).  Zero joins and fastest at small k, but the
       expression TREE is Θ(k·dim): measured fine to k≈64, k=256
       destabilized the driver during Catalyst compilation (PERF.md
       late-r6) — the tree, not the data, is the bottleneck.
-    - ``assign='table'`` — centroids ship as BROADCAST DATA: one 1-row
+    - table, above 64 centroids — centroids ship as BROADCAST DATA: one 1-row
       frame holding ``array<struct<ci,vec>>``, cross-joined (broadcast —
       a narrow 1-row fan-in, not a cartesian hazard), scored with ONE
       constant-size higher-order expression (``transform`` computing d2
@@ -1028,14 +950,8 @@ def assign_nearest_centroid(
       lexicographic on (d2, ci), the same tie-break).  Expression size is
       O(1) in k; k×dim doubles ride the broadcast.  This is the path that
       honors SemDeDup's k∝n contract at 100 TB (k in the thousands).
-
-    ``assign='auto'`` (default) picks literal for ``len(centroids) <=
-    literal_max_k`` (cheapest, oracle-reproducible in plain SQL) and
-    table above it.
     """
-    if assign not in ("auto", "literal", "table"):
-        raise ValueError(f"assign must be auto|literal|table, got {assign!r}")
-    use_table = assign == "table" or (assign == "auto" and len(centroids) > literal_max_k)
+    use_table = len(centroids) > 64
     v = F.col(vec_c).cast("array<double>")
     base = corpus.select(
         F.col(id_c).alias("_id"),
@@ -1097,8 +1013,6 @@ def semantic_dedup(
     vec_c: str,
     centroids: list[tuple[int, list[float]]],
     tau: float = 0.95,
-    materialize: bool = True,
-    assign: str = "auto",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the embedding
     space with a (pre-trained) k-means quantizer, then drop every document
@@ -1108,8 +1022,7 @@ def semantic_dedup(
 
     Spark shape:
     - cluster assignment is ``assign_nearest_centroid`` (see its docstring):
-      ``assign='auto'`` (default) uses the inline-literal narrow map up to
-      64 centroids and the BROADCAST CENTROID-TABLE path above it — the
+      the inline-literal narrow map up to 64 centroids and the BROADCAST CENTROID-TABLE path above it — the
       table path's expression is O(1) in k, so the operator's own k∝n
       contract (below) is now satisfiable at any k (k=256 on the 100×
       corpus completes where the literal path destabilized the driver —
@@ -1128,7 +1041,7 @@ def semantic_dedup(
     ANSI-mode DIVIDE_BY_ZERO error and the `NaN >= tau` trap (the divisor
     nullifs to NULL, whose comparison is never true).
 
-    ``materialize=True`` (default) pins the assigned frame with an eager
+    The assigned frame is pinned with an eager
     ``localCheckpoint`` so its three consumers (both self-join sides + the
     final fold-back) read ONE materialization instead of re-running the
     k×dim assignment map per branch — the r5 ivf lesson; same
@@ -1137,9 +1050,9 @@ def semantic_dedup(
 
     Output: one row per input — ``(id_c, cluster_id, kept)``.
     """
-    assigned = assign_nearest_centroid(corpus, id_c, vec_c, centroids, assign=assign)
-    if materialize:
-        assigned = assigned.localCheckpoint(eager=True)
+    assigned = assign_nearest_centroid(corpus, id_c, vec_c, centroids).localCheckpoint(
+        eager=True
+    )
     a, b = assigned.alias("a"), assigned.alias("b")
     # ANSI-safe zero-norm guard: a 0 divisor must yield NULL (→ filter
     # false, vector keeps itself), not a DIVIDE_BY_ZERO error or a NaN
@@ -1348,9 +1261,6 @@ def hard_negatives(
     candidates: DataFrame,
     positives: DataFrame,
     k: int,
-    qid: str = "qid",
-    cid: str = "cid",
-    score: str = "score",
 ) -> DataFrame:
     """Hard-negative mining (r8): from a per-query CANDIDATE ranking
     (typically the ANN index's top-N — high-similarity, cheap), remove
@@ -1368,13 +1278,13 @@ def hard_negatives(
     corpus size at serve time."""
     from pyspark.sql import Window
 
-    pos = positives.select(F.col(qid).alias(qid), F.col(cid).alias(cid))
-    surv = candidates.join(F.broadcast(pos), [qid, cid], "left_anti")
-    w = Window.partitionBy(qid).orderBy(F.desc(score), F.asc(cid))
+    pos = positives.select("qid", "cid")
+    surv = candidates.join(F.broadcast(pos), ["qid", "cid"], "left_anti")
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
     return (
         surv.withColumn("neg_rank", F.row_number().over(w).cast("long"))
         .filter(F.col("neg_rank") <= k)
-        .select(qid, cid, F.round(F.col(score), 6).alias(score), "neg_rank")
+        .select("qid", "cid", F.round(F.col("score"), 6).alias("score"), "neg_rank")
     )
 
 
@@ -1450,7 +1360,6 @@ def range_filtered_ivf_pq_topk(
     codebooks: list[list[list[float]]] | None = None,
     rerank: int = 50,
     range_lists: DataFrame | list | None = None,
-    index: DataFrame | None = None,
     index_pruner=None,
     dim: int = 64,
 ) -> DataFrame:
@@ -1473,9 +1382,8 @@ def range_filtered_ivf_pq_topk(
     plain probe — correct either way, because membership is re-checked
     by the residual ``BETWEEN`` on the candidates.
 
-    Composition (same contract as the label path): ``index`` /
-    ``index_pruner`` hand in the standing artifact (pruner wins); the
-    residual range filter applies to the artifact rows BEFORE ADC
+    Composition (same contract as the label path): ``index_pruner``
+    hands in the standing artifact; the residual range filter applies to the artifact rows BEFORE ADC
     ranking and the exact rerank joins only in-range corpus vectors, so
     rank ≤ rerank counts in-range candidates only.  The kept-list
     collect is model-sized (≤ n_centroids rows) — no corpus-sized
@@ -1513,12 +1421,9 @@ def range_filtered_ivf_pq_topk(
             .filter(F.lit(False))
         )
     in_range = F.col("cid").between(F.lit(lo), F.lit(hi))
+    pruner = None
     if index_pruner is not None:
         pruner = lambda cents_: index_pruner(cents_).filter(in_range)  # noqa: E731
-        idx = None
-    else:
-        pruner = None
-        idx = index.filter(in_range) if index is not None else None
     return ivf_pq_topk(
         queries,
         corpus.filter(F.col(id_c).between(F.lit(lo), F.lit(hi))),
@@ -1531,7 +1436,6 @@ def range_filtered_ivf_pq_topk(
         centroids=cents_allowed,
         codebooks=codebooks,
         rerank=rerank,
-        index=idx,
         index_pruner=pruner,
         dim=dim,
     )

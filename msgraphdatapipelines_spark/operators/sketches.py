@@ -28,17 +28,16 @@ def build_distinct_sketches(
     df: DataFrame,
     part_cols: list[str],
     value_col: str,
-    lgk: int = 12,
 ) -> DataFrame:
     """One HLL sketch row per ``part_cols`` group over ``value_col``.
 
     One hash aggregation (map-side partials are sketches too — the
-    exchange moves O(groups · 2^lgk) bytes, never rows).  The result is
+    exchange moves O(groups · 2^12) bytes, never rows).  The result is
     the appendable rollup-table increment: ``part_cols…, sketch binary,
-    n_rows``.  ``lgk`` trades size for accuracy (2^12 registers ≈ ±1.6%).
+    n_rows``.  2^12 registers give ≈ ±1.6% accuracy.
     """
     return df.groupBy(*part_cols).agg(
-        F.hll_sketch_agg(F.col(value_col).cast("string"), F.lit(lgk)).alias("sketch"),
+        F.hll_sketch_agg(F.col(value_col).cast("string"), F.lit(12)).alias("sketch"),
         F.count("*").alias("n_rows"),
     )
 
@@ -46,7 +45,6 @@ def build_distinct_sketches(
 def merge_distinct_sketches(
     sketches: DataFrame,
     group_cols: list[str],
-    lgk: int = 12,
 ) -> DataFrame:
     """Merge sketch rows down to ``group_cols`` (drop the increment key):
     ``hll_union_agg`` + estimate.  Input is the (tiny) rollup table, so
@@ -80,19 +78,16 @@ def build_cm_sketch(
     part_cols: list[str],
     key_col: str,
     depth: int = 4,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """One CM cell table per ``part_cols`` group: (part…, depth, bucket,
-    cnt) with cnt = Σ weight of keys hashing to that cell.  ONE hash
+    cnt) with cnt = the number of rows whose key hashes to that cell.  ONE hash
     aggregation over a ``depth``-way exploded projection (d rows per
     input row, each a 2-char bucket id) — map-side combinable, output
     O(groups · depth · 256) rows regardless of input size.  The
     appendable increment of a frequency-rollup table (the
     build_distinct_sketches pattern, estimable for ANY key later)."""
-    w = F.lit(1).cast("long") if weight_col is None else F.col(weight_col).cast("long")
     cells = df.select(
         *part_cols,
-        w.alias("__w"),
         F.explode(
             F.array(*[
                 F.struct(
@@ -105,7 +100,7 @@ def build_cm_sketch(
     )
     return cells.groupBy(
         *part_cols, F.col("__c.depth").alias("depth"), F.col("__c.bucket").alias("bucket")
-    ).agg(F.sum("__w").alias("cnt"))
+    ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def merge_cm_sketches(sketches: DataFrame, group_cols: list[str]) -> DataFrame:
@@ -187,7 +182,6 @@ def choose_join_strategy(
     child_sketch: DataFrame,
     parent_sketch: DataFrame,
     broadcast_threshold_rows: int = 1_000_000,
-    blowup_factor: float = 4.0,
 ) -> dict:
     """Sketch-driven join pre-flight (r9) — the consumer that turns
     ``cm_join_size_estimate``'s sound verdicts into an actual plan
@@ -207,9 +201,8 @@ def choose_join_strategy(
       the maintained rollup is append-merged), a False verdict is sound:
       the engine never broadcasts a side the sketch says is data-sized.
     - ``join_size_est``: the never-underestimating inner product; with
-      ``skew_warning`` True when it exceeds ``blowup_factor ×
-      (child + parent)`` — the fan-out signature of a skewed/hot key,
-      where the caller should salt or pre-aggregate before joining.
+      ``skew_warning`` True when it exceeds ``4 × (child + parent)`` —
+      the fan-out signature of a skewed/hot key, where the caller should salt or pre-aggregate before joining.
 
     Feed the verdict straight into ``constraints.foreign_key(...,
     broadcast_parent=plan['broadcast_parent'])`` or any join hint site.
@@ -223,5 +216,5 @@ def choose_join_strategy(
         "parent_rows_est": parent_rows,
         "child_rows_est": child_rows,
         "join_size_est": join_est,
-        "skew_warning": join_est > blowup_factor * (child_rows + parent_rows),
+        "skew_warning": join_est > 4.0 * (child_rows + parent_rows),
     }

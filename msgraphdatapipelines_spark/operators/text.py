@@ -157,28 +157,14 @@ def fingerprint_exact(text: Column | str) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(t)), "\\s+", " "))
 
 
-def fingerprint_minhash1(text: Column | str, k: int = 5, hash_fn: str = "md5") -> Column:
-    """Content fingerprint robust to local edits: the minimum hash over the
-    document's character k-shingles (a 1-hash MinHash).  Docs sharing it are
-    near-dup candidates.
-
-    ``hash_fn`` (r2 VERDICT item 4, same switch as operators/dedup._hash_hex):
-    ``"md5"`` — hex string, cross-engine reproducible, the oracle-checked
-    default; ``"xxhash64"`` — JVM 64-bit hash as a bigint, the production
-    mode (one shingle hash per char position per doc is the scan's hot
-    loop, and xxhash64 is severalfold cheaper than md5's hex round-trip).
-    Both are deterministic; bucket equality agrees between modes only in
-    the sense that equal shingle sets ⇒ equal fingerprints (pinned in
-    tests/test_text.py).
+def fingerprint_minhash1(text: Column | str, k: int = 5) -> Column:
+    """Content fingerprint robust to local edits: the minimum md5 hex over
+    the document's character k-shingles (a 1-hash MinHash), cross-engine
+    reproducible.  Docs sharing it are near-dup candidates.
     """
     from ..functions import char_shingles
 
-    sh = char_shingles(text, k)
-    if hash_fn == "md5":
-        return F.array_min(F.transform(sh, lambda s: F.md5(s)))
-    if hash_fn == "xxhash64":
-        return F.array_min(F.transform(sh, lambda s: F.xxhash64(s)))
-    raise ValueError(f"unknown hash fn {hash_fn!r}")
+    return F.array_min(F.transform(char_shingles(text, k), lambda s: F.md5(s)))
 
 
 # Portable PII patterns: identical semantics under Java regex (Spark) and
@@ -387,8 +373,6 @@ def strip_frequent_segments(
     text_col: str = "text",
     width: int = 8,
     min_docs: int = 3,
-    max_frequent: int = 100_000,
-    rebuild: str = "auto",
 ) -> "DataFrame":  # noqa: F821
     """Corpus-wide boilerplate removal: drop every ``width``-token segment
     that occurs in ≥ ``min_docs`` DISTINCT documents, rebuild each document
@@ -404,25 +388,16 @@ def strip_frequent_segments(
        ``segment_windows``);
     2. ONE shuffle: explode → groupBy(segment) → count_distinct(doc) —
        map-side partial aggregation collapses each partition's repeats
-       before the exchange; the frequent set is bounded by ``max_frequent``
+       before the exchange; the frequent set is bounded at 100,000
        (highest-document-count segments first, lexicographic tiebreak →
        deterministic under truncation);
-    3. rebuild, two identical-output modes chosen by ``rebuild``:
-
-       - ``'array'``: fold the frequent set to ONE sorted broadcast array
-         and drop per row with ``filter(segs, s -> !array_contains(…))`` —
-         zero extra shuffle, but each segment pays an O(|frequent|) linear
-         probe (literal arrays have no hash lookup).  Right when the
-         frequent set is genuinely small (clean corpora, tight caps).
-       - ``'join'``: posexplode → broadcast HASH join against the frequent
-         table (O(1) probes) → re-aggregate per doc ordered by position.
-         One extra doc-keyed shuffle + a per-doc-bounded collect_list, but
-         rebuild cost is corpus-linear REGARDLESS of |frequent| — the 100×
-         sweep caught the array mode at 78k frequent segments × 6M probes
-         (duplication-heavy corpora make the frequent set corpus-sized; see
-         PERF.md r6).
-       - ``'auto'`` (default): ``'array'`` iff ``max_frequent ≤ 4096``
-         (the cap bounds the probe), else ``'join'``.
+    3. rebuild: posexplode → broadcast HASH join against the frequent
+       table (O(1) probes) → re-aggregate per doc ordered by position.
+       One extra doc-keyed shuffle + a per-doc-bounded collect_list, but
+       rebuild cost is corpus-linear REGARDLESS of |frequent| — the 100×
+       sweep caught a broadcast-array rebuild at 78k frequent segments ×
+       6M linear probes (duplication-heavy corpora make the frequent set
+       corpus-sized; see PERF.md r6).
 
     Output: ``id_col, clean_text, n_segments, n_dropped`` — one row per
     input document (documents that were pure boilerplate come back with an
@@ -431,8 +406,6 @@ def strip_frequent_segments(
     from pyspark.sql import DataFrame  # local import: module is else expr-only
 
     assert isinstance(df, DataFrame)
-    if rebuild == "auto":
-        rebuild = "array" if max_frequent <= 4096 else "join"
     ws = tokens(text_col)
     base = df.select(F.col(id_col), segment_windows(text_col, width=width, ws=ws).alias("segs"))
     frequent = (
@@ -441,23 +414,8 @@ def strip_frequent_segments(
         .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
         .where(F.col("n_docs") >= min_docs)
         .orderBy(F.col("n_docs").desc(), F.col("seg"))
-        .limit(max_frequent)
+        .limit(100_000)
     )
-    if rebuild == "array":
-        folded = frequent.agg(F.sort_array(F.collect_list("seg")).alias("freq_segs"))
-        joined = base.crossJoin(F.broadcast(folded))
-        clean = F.filter(
-            F.col("segs"),
-            lambda s: ~F.array_contains(F.coalesce(F.col("freq_segs"), F.array()), s),
-        )
-        return joined.select(
-            F.col(id_col),
-            F.array_join(clean, " ").alias("clean_text"),
-            F.size("segs").cast("long").alias("n_segments"),
-            (F.size("segs") - F.size(clean)).cast("long").alias("n_dropped"),
-        )
-    if rebuild != "join":
-        raise ValueError(f"rebuild must be 'auto'|'array'|'join', got {rebuild!r}")
     ex = base.select(
         F.col(id_col),
         F.size("segs").alias("_n_segs"),
@@ -482,16 +440,6 @@ def strip_frequent_segments(
 def gopher_rules(
     text: Column | str,
     ws: Column | None = None,
-    *,
-    min_tokens: int = 20,
-    max_tokens: int = 100_000,
-    min_mean_token_len: float = 3.0,
-    max_mean_token_len: float = 10.0,
-    max_digit_token_ratio: float = 0.2,
-    min_alpha_token_ratio: float = 0.8,
-    min_stopword_hits: int = 2,
-    max_top_token_ratio: float = 0.15,
-    max_dup_3gram_ratio: float = 0.5,
 ) -> dict[str, Column]:
     """Gopher/MassiveText-style quality RULE battery (r9): the keep/drop
     decision layer over the per-document signals — each published
@@ -515,15 +463,16 @@ def gopher_rules(
     n_alpha = F.size(F.filter(w, lambda x: x.rlike("[a-zA-Z]")))
     stop = F.array([F.lit(m) for ms in LANG_MARKERS.values() for m in ms])
     n_stop = F.size(F.filter(w, lambda x: F.array_contains(stop, x)))
+    # the rule table: Gopher's published thresholds
     rules = {
-        "pass_n_tokens": (n >= min_tokens) & (n <= max_tokens),
-        "pass_mean_token_len": (stats["mean_token_len"] >= min_mean_token_len)
-        & (stats["mean_token_len"] <= max_mean_token_len),
-        "pass_digit_ratio": stats["digit_token_ratio"] <= max_digit_token_ratio,
-        "pass_alpha_ratio": (n_alpha.cast("double") / nd) >= min_alpha_token_ratio,
-        "pass_stopwords": n_stop >= min_stopword_hits,
-        "pass_top_token": rep["top_token_ratio"] <= max_top_token_ratio,
-        "pass_dup_3gram": rep["dup_3gram_ratio"] <= max_dup_3gram_ratio,
+        "pass_n_tokens": (n >= 20) & (n <= 100_000),
+        "pass_mean_token_len": (stats["mean_token_len"] >= 3.0)
+        & (stats["mean_token_len"] <= 10.0),
+        "pass_digit_ratio": stats["digit_token_ratio"] <= 0.2,
+        "pass_alpha_ratio": (n_alpha.cast("double") / nd) >= 0.8,
+        "pass_stopwords": n_stop >= 2,
+        "pass_top_token": rep["top_token_ratio"] <= 0.15,
+        "pass_dup_3gram": rep["dup_3gram_ratio"] <= 0.5,
     }
     acc = None
     for c in rules.values():
@@ -710,7 +659,6 @@ def dsir_weights(
     is_target: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 256,
 ) -> "DataFrame":  # noqa: f821
     """DSIR-style importance weights (r9): per-document log-likelihood
     ratio between a TARGET token distribution (rows where ``is_target``)
@@ -727,17 +675,15 @@ def dsir_weights(
     per-doc sums are exact integer arithmetic and the final double is one
     division — bit-identical cross-engine.
 
-    Scale shape: ONE bucket-keyed shuffle builds the 2×``n_buckets``
-    count table (map-side combine; the table is O(buckets), broadcast
-    back), then one doc-keyed aggregation sums weights — no corpus-sized
-    state, no UDFs.  ``n_buckets`` fixed at 256 uses a 1-byte md5 prefix;
-    the hash-bucket collisions ARE the DSIR smoothing.
+    Scale shape: ONE bucket-keyed shuffle builds the 2×256 count table
+    (map-side combine; the table is O(buckets), broadcast back), then one
+    doc-keyed aggregation sums weights — no corpus-sized state, no UDFs.
+    The 256 buckets are a 1-byte md5 prefix; the hash-bucket collisions
+    ARE the DSIR smoothing.
     """
     from pyspark.sql import DataFrame
 
     assert isinstance(df, DataFrame)
-    if n_buckets != 256:
-        raise ValueError("n_buckets is pinned to 256 (1-byte md5 prefix)")
     Q = 1_000_000
     toks = df.select(
         F.col(id_col), is_target.alias("_t"), F.explode(tokens(text_col)).alias("tok")
@@ -755,7 +701,7 @@ def dsir_weights(
     )
     totals = counts.agg(
         (
-            _lnq(F.sum("c_raw") + n_buckets) - _lnq(F.sum("c_tgt") + n_buckets)
+            _lnq(F.sum("c_raw") + 256) - _lnq(F.sum("c_tgt") + 256)
         ).alias("cq")
     )
     scored = (

@@ -24,6 +24,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+MAX_STEPS = 100_000  # per-key spine guard
+
+
 def resample_ffill(
     observed: DataFrame,
     key_cols: list[str],
@@ -31,7 +34,6 @@ def resample_ffill(
     step: str,
     zero_cols: list[str] | None = None,
     ffill_cols: list[str] | None = None,
-    max_steps: int = 100_000,
 ) -> DataFrame:
     """Densify ``observed`` (one row per key×bucket actually present) onto a
     regular per-key spine from that key's min to max bucket at ``step``
@@ -40,7 +42,7 @@ def resample_ffill(
     the last non-null observation forward (gauges/balances).
 
     Raises at plan level (ANSI error) if any key's spine would exceed
-    ``max_steps`` — the documented guard against quadratic-ish blowup from
+    ``MAX_STEPS`` — the documented guard against quadratic-ish blowup from
     a step far finer than the data's span.
     """
     zero_cols = zero_cols or []
@@ -56,10 +58,10 @@ def resample_ffill(
         bounds.withColumn(
             "__chk",
             F.when(
-                n_steps > max_steps,
+                n_steps > MAX_STEPS,
                 F.raise_error(
                     F.format_string(
-                        f"resample_ffill: spine exceeds max_steps={max_steps} "
+                        f"resample_ffill: spine exceeds MAX_STEPS={MAX_STEPS} "
                         f"for step '{step}' (key range %s..%s)",
                         F.col("__lo").cast("string"),
                         F.col("__hi").cast("string"),

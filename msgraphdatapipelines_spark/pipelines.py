@@ -49,17 +49,14 @@ def preflight_fk_constraints(
     df: DataFrame,
     constraints: list,
     broadcast_threshold_rows: int = 1_000_000,
-    sketches: dict[str, tuple[DataFrame, DataFrame]] | None = None,
 ) -> tuple[list, dict]:
     """Sketch-driven FK join pre-flight (r10, r9 VERDICT item 6 — the
     production consumer of ``operators.sketches.choose_join_strategy``).
 
     Every ``foreign_key`` constraint whose ``broadcast_parent`` policy is
     UNDECIDED (``None``) gets a verdict before the load runs: the child
-    and parent key-column CM cell tables are looked up in ``sketches``
-    (``{constraint_name: (child_sketch, parent_sketch)}`` — the standing
-    rollup artifacts a deployment maintains incrementally) or built here
-    with one map-combinable agg per side, and
+    and parent key-column CM cell tables are built here with one
+    map-combinable agg per side, and
     ``choose_join_strategy``'s sound row-count verdict is written into
     the constraint: a dim-sized parent broadcasts, a data-sized parent
     takes the shuffle join.  Explicit True/False policies pass through
@@ -84,11 +81,8 @@ def preflight_fk_constraints(
             out.append(c)
             continue
         child_cols, parent, parent_cols, _ = c.spec
-        if sketches and c.name in sketches:
-            child_sk, parent_sk = sketches[c.name]
-        else:
-            child_sk = _key_sketch(df.na.drop(subset=child_cols), child_cols)
-            parent_sk = _key_sketch(parent, parent_cols)
+        child_sk = _key_sketch(df.na.drop(subset=child_cols), child_cols)
+        parent_sk = _key_sketch(parent, parent_cols)
         plan = choose_join_strategy(
             child_sk, parent_sk, broadcast_threshold_rows=broadcast_threshold_rows
         )

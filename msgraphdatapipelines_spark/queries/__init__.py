@@ -62,12 +62,8 @@ def _harden(spark: SparkSession) -> None:
     Runs ONCE per session (r17 OPT): every ``load`` call funnels through
     here, and the four conf.set py4j round-trips cost ~1 ms each — pure
     driver latency repeated hundreds of times per bench suite.  The pins
-    are static per process (two constants + two env-derived values), so a
-    per-session marker makes repeats free."""
-    from ..session import stream_checksum_conf
-
-    checksum = stream_checksum_conf()
-    mark = "_msgdp_hardened_" + checksum
+    are static constants, so a per-session marker makes repeats free."""
+    mark = "_msgdp_hardened"
     if getattr(spark, mark, False):
         return
     for k, v in (
@@ -80,7 +76,7 @@ def _harden(spark: SparkSession) -> None:
         # files at scale); measured 2× on the streaming rows' bench
         # medians.  Read at stream start, so setting it here covers
         # driver-handed sessions too.
-        ("spark.sql.streaming.checkpoint.fileChecksum.enabled", checksum),
+        ("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false"),
     ):
         try:
             spark.conf.set(k, v)

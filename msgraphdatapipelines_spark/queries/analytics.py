@@ -487,9 +487,8 @@ def triangle_census_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import cooccurrence_edges, triangle_stats
 
     li = load(spark, sf_dir, "lineitem")
-    # uncapped here (fixture-sized); at 100 TB pass max_items_per_group —
-    # the co-part hub cap that keeps the derivation off the quadratic
-    # cliff (PERF.md sweep #3 note)
+    # per-part pair fan-out is quadratic in a hub part's suppliers
+    # (PERF.md sweep #3 note)
     edges = cooccurrence_edges(li, "l_partkey", "l_suppkey")
     return triangle_stats(edges)
 
@@ -714,8 +713,8 @@ def drift_psi_order_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmv_frac(col: str, digits: int = 12) -> str:
-    """Fraction in [0,1) from the first ``digits`` hex chars of an md5
+def _kmv_frac(col: str) -> str:
+    """Fraction in [0,1) from the first 12 hex chars of an md5
     string — Horner form over instr('0123456789abcdef', …), which has
     the same signature and 1-based semantics in Spark SQL and DuckDB, so
     the ONE shared text yields bit-identical doubles."""
@@ -723,7 +722,7 @@ def _kmv_frac(col: str, digits: int = 12) -> str:
     # DECIMAL in both, with engine-specific precision rules — the q17
     # 5.0E0 discipline)
     expr = "0.0E0"
-    for i in range(digits, 0, -1):
+    for i in range(12, 0, -1):
         d = f"(instr('0123456789abcdef', substr({col}, {i}, 1)) - 1)"
         expr = f"(({d} + {expr}) / 16.0E0)"
     return expr

@@ -84,7 +84,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "n_tokens", "stopword_ratio", "n_copies", "fp_exact")
 
 
-def _mixture_oracle(target_total: int = 400) -> str:
+def _mixture_oracle() -> str:
     from ..operators.sampling import md5_uniform_sql
 
     return f"""
@@ -93,7 +93,7 @@ def _mixture_oracle(target_total: int = 400) -> str:
     rates AS (
         SELECT lang, n_domain,
                round(least(1.0,
-                           CAST({target_total} AS DOUBLE)
+                           CAST(400 AS DOUBLE)
                            * sqrt(CAST(n_domain AS DOUBLE)) / tw
                            / CAST(n_domain AS DOUBLE)), 6) AS rate
         FROM counts, tot
@@ -264,7 +264,7 @@ def groupwise_split_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _weighted_sample_oracle(k: int = 25) -> str:
+def _weighted_sample_oracle() -> str:
     from ..operators.sampling import weighted_sample_sql
 
     key = weighted_sample_sql("doc_id", "length(text)")
@@ -276,7 +276,7 @@ def _weighted_sample_oracle(k: int = 25) -> str:
                                   ORDER BY {key} DESC, doc_id) AS rn
         FROM documents
     )
-    WHERE rn <= {k}
+    WHERE rn <= 25
     """
 
 

@@ -196,12 +196,12 @@ def _lsh_verify_ctes(num_hashes: int = 8, bands: int = 4) -> str:
     )"""
 
 
-def _minhash_oracle(num_hashes: int = 8, bands: int = 4, threshold: float = 0.5) -> str:
+def _minhash_oracle() -> str:
     return f"""
-    WITH {_lsh_verify_ctes(num_hashes, bands)}
+    WITH {_lsh_verify_ctes(8, 4)}
     SELECT id_a, id_b, round(jaccard, 6) AS jaccard
     FROM verified
-    WHERE jaccard >= {threshold}
+    WHERE jaccard >= 0.5
     """
 
 
@@ -218,17 +218,17 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.jaccard_verify(docsets, cand, "doc_id", "_garr", threshold=0.5)
 
 
-def _minhash_representatives_oracle(num_hashes: int = 8, bands: int = 4) -> str:
-    rpb = num_hashes // bands
+def _minhash_representatives_oracle() -> str:
+    rpb = 2
     mh_exprs = ",\n           ".join(
-        f"min(md5('{s}|' || g)) AS mh{s}" for s in range(num_hashes)
+        f"min(md5('{s}|' || g)) AS mh{s}" for s in range(8)
     )
     band_selects = "\n        UNION ALL ".join(
         "SELECT doc_id, {b} AS band, md5({concat}) AS bh FROM sigs".format(
             b=b,
             concat=" || '|' || ".join(f"mh{b * rpb + r}" for r in range(rpb)),
         )
-        for b in range(bands)
+        for b in range(4)
     )
     return f"""
     WITH {_GRAMS_SQL},
@@ -273,7 +273,7 @@ def dedup_minhash_representatives(spark: SparkSession, sf_dir: str) -> DataFrame
     return D.lsh_dedup_representatives(sigs, "doc_id", num_hashes=8, bands=4)
 
 
-def _connected_components_oracle(threshold: float = 0.5) -> str:
+def _connected_components_oracle() -> str:
     """Transitive closure over the verified LSH pair graph via a recursive
     CTE: ``reach(id, lab)`` holds every (node, label-that-reaches-it) pair;
     the component id is the MIN reachable label (= min node id of the
@@ -281,9 +281,9 @@ def _connected_components_oracle(threshold: float = 0.5) -> str:
     return f"""
     WITH RECURSIVE {_lsh_verify_ctes()},
     edges AS (
-        SELECT id_a AS src, id_b AS dst FROM verified WHERE jaccard >= {threshold}
+        SELECT id_a AS src, id_b AS dst FROM verified WHERE jaccard >= 0.5
         UNION ALL
-        SELECT id_b AS src, id_a AS dst FROM verified WHERE jaccard >= {threshold}
+        SELECT id_b AS src, id_a AS dst FROM verified WHERE jaccard >= 0.5
     ),
     reach(id, lab) AS (
         SELECT doc_id, doc_id FROM documents
@@ -337,19 +337,19 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_clusters_oracle(num_hashes: int = 8, bands: int = 4) -> str:
+def _lsh_clusters_oracle() -> str:
     """Recursive closure over the STAR edges (doc ↔ bucket min) — the
     linear-edge production clustering path."""
-    rpb = num_hashes // bands
+    rpb = 2
     mh_exprs = ",\n           ".join(
-        f"min(md5('{s}|' || g)) AS mh{s}" for s in range(num_hashes)
+        f"min(md5('{s}|' || g)) AS mh{s}" for s in range(8)
     )
     band_selects = "\n        UNION ALL ".join(
         "SELECT doc_id, {b} AS band, md5({concat}) AS bh FROM sigs".format(
             b=b,
             concat=" || '|' || ".join(f"mh{b * rpb + r}" for r in range(rpb)),
         )
-        for b in range(bands)
+        for b in range(4)
     )
     return f"""
     WITH RECURSIVE {_GRAMS_SQL},
@@ -399,13 +399,13 @@ def dedup_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.lsh_dedup_clusters(sigs, "doc_id", num_hashes=8, bands=4)
 
 
-def _simhash_oracle(num_bits: int = 16) -> str:
+def _simhash_oracle() -> str:
     sums = ",\n           ".join(
         f"sum(CASE WHEN (strpos('0123456789abcdef', substr(md5(tok), {b + 1}, 1)) - 1) % 2 = 1"
         f" THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(num_bits)
+        for b in range(16)
     )
-    bits = ", ".join(f"CASE WHEN s{b} > 0 THEN '1' ELSE '0' END" for b in range(num_bits))
+    bits = ", ".join(f"CASE WHEN s{b} > 0 THEN '1' ELSE '0' END" for b in range(16))
     return f"""
     WITH toks AS (
         SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> w <> '')) AS tok
@@ -443,11 +443,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sigs.select("doc_id", "simhash", F.count("*").over(w).cast("long").alias("bucket_n"))
 
 
-def _emb_dot_sql(a: str, b: str, dim: int = 64) -> str:
+def _emb_dot_sql(a: str, b: str) -> str:
     """Left-associated inline double dot product — same IEEE accumulation
     order as operators.similarity.seq_dot."""
     return " + ".join(
-        f"(CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))" for i in range(1, dim + 1)
+        f"(CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE))" for i in range(1, 65)
     )
 
 
@@ -1051,11 +1051,9 @@ def set_similarity_join_docs_bigram_capped(spark: SparkSession, sf_dir: str) -> 
     sets, prefixes = read_prefix_index(spark, root)
     return D.set_similarity_join_from_tables(sets, prefixes, "doc_id", 0.5, max_df=25)
 
-def _ensure_incremental_prefix_index(
-    spark: SparkSession, sf_dir: str, split_frac: float = 0.8
-) -> str:
+def _ensure_incremental_prefix_index(spark: SparkSession, sf_dir: str) -> str:
     """The incremental-maintenance rehearsal artifact: build the prefix
-    index on the FIRST ~split_frac of documents, then append the rest
+    index on the FIRST ~80% of documents, then append the rest
     through prefix_index_append (frozen vocab order).  ONE end-to-end
     marker commits build+append together, so a torn state can never
     serve a half-appended index (and a re-run can never double-append)."""
@@ -1064,7 +1062,7 @@ def _ensure_incremental_prefix_index(
     def _build() -> None:
         docs = load(spark, sf_dir, "documents")
         cut = docs.selectExpr(
-            f"percentile_approx(doc_id, {split_frac}, 10000) AS c"
+            "percentile_approx(doc_id, 0.8, 10000) AS c"
         ).first()["c"]
         base = docs.filter(F.col("doc_id") <= cut)
         rest = docs.filter(F.col("doc_id") > cut)
@@ -1186,7 +1184,6 @@ def prefix_index_forget(spark: SparkSession, root: str, doc_ids: list) -> dict:
 def prefix_index_compact(
     spark: SparkSession,
     root: str,
-    threshold: float = 0.5,
     _test_hook_after_list=None,
     _test_hook_before_commit=None,
 ) -> dict:
@@ -1276,7 +1273,7 @@ def prefix_index_compact(
         grams = sets.select("doc_id", F.explode("__garr").alias("g"))
         n_docs = sets.count()
         stage = f"{root}/stage.compact.{uuid.uuid4().hex[:8]}"
-        _write_gen_tables(spark, grams, threshold, stage)
+        _write_gen_tables(spark, grams, 0.5, stage)
         fs.mkdirs(hpath(f"{stage}/_folded"))
         for b in sorted(set(batches) | set(prev_folded)):
             _gs.commit_file(fs, hpath, f"{stage}/_folded/{b}")
@@ -1298,7 +1295,7 @@ def prefix_index_compact(
                 bsets = bsets.join(F.broadcast(forgotten), "doc_id", "left_anti")
             bgrams = bsets.select("doc_id", F.explode("__garr").alias("g"))
             s2, p2 = D.set_similarity_prefix_tables(
-                bgrams, "doc_id", "g", threshold, vocab=new_vocab
+                bgrams, "doc_id", "g", 0.5, vocab=new_vocab
             )
             s2.write.parquet(f"{stage}/sets/batch_{b}")
             p2.repartition(F.col("__pg")).sortWithinPartitions("__pg").write.parquet(
@@ -1311,7 +1308,7 @@ def prefix_index_compact(
         )
         return {"docs": int(n_docs), "batches_folded": len(batches)}
 
-def _canonical_by_quality_oracle(threshold: float = 0.5) -> str:
+def _canonical_by_quality_oracle() -> str:
     """Clusters = the verified-pair closure (same CTE as the graded
     components row); the kept representative is the QUALITY argmax —
     exact-integer lexical-diversity score (distinct tokens, ties by
@@ -1319,9 +1316,9 @@ def _canonical_by_quality_oracle(threshold: float = 0.5) -> str:
     return f"""
     WITH RECURSIVE {_lsh_verify_ctes()},
     edges AS (
-        SELECT id_a AS src, id_b AS dst FROM verified WHERE jaccard >= {threshold}
+        SELECT id_a AS src, id_b AS dst FROM verified WHERE jaccard >= 0.5
         UNION ALL
-        SELECT id_b AS src, id_a AS dst FROM verified WHERE jaccard >= {threshold}
+        SELECT id_b AS src, id_a AS dst FROM verified WHERE jaccard >= 0.5
     ),
     reach(id, lab) AS (
         SELECT doc_id, doc_id FROM documents
@@ -1441,9 +1438,7 @@ def set_similarity_join_docs_compacted(spark: SparkSession, sf_dir: str) -> Data
     return D.set_similarity_join_from_tables(sets, prefixes, "doc_id", 0.5)
 
 
-def read_prefix_index_bucketed(
-    spark: SparkSession, root: str, num_buckets: int = 32
-) -> tuple[DataFrame, DataFrame]:
+def read_prefix_index_bucketed(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
     """(sets, prefixes) with the PREFIX side served from a BUCKETED
     standing table on the self-join key (r12, the PERF r12-addendum
     lever): the served join's only corpus-sized shuffle is the prefix
@@ -1474,7 +1469,7 @@ def read_prefix_index_bucketed(
         for st in fs.listStatus(hpath(f"{gen}/prefixes"))
         if st.isDirectory() and st.getPath().getName().startswith("batch_")
     )
-    sig = hashlib.md5(f"{gen}|{'|'.join(bids)}|b={num_buckets}".encode()).hexdigest()[:12]
+    sig = hashlib.md5(f"{gen}|{'|'.join(bids)}|b=32".encode()).hexdigest()[:12]
     path = f"{gen}/prefixes_bucketed_{sig}"
     table = f"msgdp_ppjb_{sig}"
     sinks.ensure_bucketed_table(
@@ -1482,7 +1477,7 @@ def read_prefix_index_bucketed(
         table,
         path,
         "__pg",
-        num_buckets,
+        32,
         build=lambda: spark.read.option("recursiveFileLookup", "true").parquet(
             f"{gen}/prefixes"
         ),

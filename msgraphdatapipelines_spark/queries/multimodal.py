@@ -198,9 +198,9 @@ def multimodal_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle rebuilds the IDENTICAL thumbnail from character codes
     (payloads are utf-8 of ASCII text, so byte = code point), so the
     Python-UDF hash path is value-checked cross-engine bit for bit.
-    At 100 TB the production knob is ``max_bucket`` (pytest-pinned):
-    structured corpora cluster band values, and the cap keeps the
-    candidate join Θ(Σ bucket²) instead of quadratic."""
+    At 100 TB structured corpora cluster band values, which inflates the
+    candidate join toward quadratic (``phash_band_buckets`` shows the
+    bucket sizes)."""
     docs = load(spark, sf_dir, "documents")
     media = M.wrap_text_as_media(docs, "doc_id", "text")
     hashed = M.perceptual_dhash(media)

@@ -18,8 +18,8 @@ from ..schemas import EVENT_PROPS
 from . import load, load_events, load_spread, register
 
 # exact-sum helper: cast to decimal, sum (exact), cast back to double
-def _dsum(col, scale=2):
-    return F.sum(F.col(col).cast(f"decimal(18,{scale})")).cast("double")
+def _dsum(col):
+    return F.sum(F.col(col).cast("decimal(18,2)")).cast("double")
 
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss"

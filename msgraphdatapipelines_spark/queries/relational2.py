@@ -707,9 +707,7 @@ def _mad_stats(ev: DataFrame, mode: str) -> DataFrame:
     WHERE abs((e.value - s.med) / (1.4826 * s.mad)) > 3
     """,
 )
-def outlier_events_mad(
-    spark: SparkSession, sf_dir: str, mode: str = "exact"
-) -> DataFrame:
+def outlier_events_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-group outlier detection (r7): flag events whose value
     sits more than 3 robust z-units from its event-type median, with the
     MAD (×1.4826, the normal-consistency constant) as the scale — the
@@ -718,14 +716,12 @@ def outlier_events_mad(
 
     Shape: two percentile aggregations (median, then MAD over
     deviations) + one broadcast join of the per-type stats back onto the
-    fact rows — the stats table is |event_type|-sized.  ``mode`` selects
-    exact ``percentile`` (oracle-replayable, O(group) memory) vs
-    ``approx_percentile`` (bounded memory — the 100 TB default; see
-    ``_mad_stats``); the approx mode's error band is pinned by the
-    ``outlier_events_mad_approx`` demoted row.  The flagging join is
-    identical in both modes."""
+    fact rows — the stats table is |event_type|-sized.  The stats are
+    exact ``percentile`` (oracle-replayable, O(group) memory); the
+    ``approx_percentile`` lane of ``_mad_stats`` (bounded memory) is
+    pinned by the ``outlier_events_mad_approx`` demoted row."""
     ev = load_events(spark, sf_dir)
-    stats = _mad_stats(ev, mode)
+    stats = _mad_stats(ev, "exact")
     z = (F.col("value") - F.col("med")) / (F.lit(1.4826) * F.col("mad"))
     return (
         ev.join(F.broadcast(stats), "event_type")

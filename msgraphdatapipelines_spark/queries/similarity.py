@@ -272,11 +272,11 @@ def ann_kmeans_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _probe_buckets_sql(bexpr: str, num_planes: int = 8) -> str:
+def _probe_buckets_sql(bexpr: str) -> str:
     """The bucket + every 1-bit flip, as a SQL list — mirrors
     operators.similarity.flip_bit_buckets."""
     variants = [bexpr]
-    for p in range(num_planes):
+    for p in range(8):
         flip = f"(CASE substr({bexpr}, {p + 1}, 1) WHEN '1' THEN '0' ELSE '1' END)"
         variants.append(f"substr({bexpr}, 1, {p}) || {flip} || substr({bexpr}, {p + 2})")
     return "[" + ", ".join(variants) + "]"
@@ -423,14 +423,14 @@ def _pq_ctes(m: int = 8, ks: int = 16) -> str:
     )"""
 
 
-def _pq_oracle(m: int = 8, ks: int = 16, k: int = 5) -> str:
+def _pq_oracle() -> str:
     return f"""
-    WITH {_pq_ctes(m, ks)}
+    WITH {_pq_ctes(8, 16)}
     SELECT qid, cid, round(score, 6) AS score, CAST(rn AS BIGINT) AS rank
     FROM (SELECT *, row_number() OVER (PARTITION BY qid
                                        ORDER BY score DESC, cid) AS rn
           FROM pq_scored)
-    WHERE rn <= {k}
+    WHERE rn <= 5
     """
 
 
@@ -441,9 +441,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codeword indices per vector (~32× smaller than raw float32), queries
     precompute an m×ks lookup table, and a candidate's approximate cosine
     is m computed-index lookups — no per-pair vector math.  Seed codebooks
-    here (deterministic, SQL-replayable); production trains them with
-    pq_codebooks(iters=N) and adds exact rerank (recall ladder in
-    tests/test_similarity.py).  Demoted-oracle row: the pipeline is fully
+    (deterministic, SQL-replayable); exact rerank is the recall ladder in
+    tests/test_similarity.py.  Demoted-oracle row: the pipeline is fully
     SQL-expressible but redundant with the driver-graded ANN family."""
     emb = load(spark, sf_dir, "embeddings")
     return S.pq_topk(
@@ -627,7 +626,7 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _mmr_oracle(n: int = 16, k: int = 4) -> str:
+def _mmr_oracle() -> str:
     """Generated DuckDB twin of operators.similarity.mmr_rerank — the same
     greedy recurrence unrolled (one definition of each round's math,
     rendered for both engines; the pagerank_oracle_sql discipline)."""
@@ -643,11 +642,11 @@ def _mmr_oracle(n: int = 16, k: int = 4) -> str:
                    row_number() OVER (PARTITION BY qid
                                       ORDER BY {_cos('qv', 'cv')} DESC, cid) AS rn
             FROM q JOIN c ON qid <> cid) t
-        WHERE rn <= {n}
+        WHERE rn <= 16
     )""",
         "cur1 AS MATERIALIZED (SELECT qid, cid, score, cv, 0.0 AS red FROM cands)",
     ]
-    for t in range(1, k + 1):
+    for t in range(1, 5):
         parts.append(
             f"""r{t} AS MATERIALIZED (
         SELECT *, {mmr} AS mmr,
@@ -656,7 +655,7 @@ def _mmr_oracle(n: int = 16, k: int = 4) -> str:
     )"""
         )
         parts.append(f"p{t} AS (SELECT qid, cid, score, mmr, cv FROM r{t} WHERE rn = 1)")
-        if t < k:
+        if t < 4:
             parts.append(
                 f"""cur{t + 1} AS MATERIALIZED (
         SELECT r.qid, r.cid, r.score, r.cv,
@@ -668,7 +667,7 @@ def _mmr_oracle(n: int = 16, k: int = 4) -> str:
     final = "\n    UNION ALL ".join(
         f"SELECT qid, cid, CAST({t} AS BIGINT) AS rank, round(score, 6) AS score,"
         f" round(mmr, 6) AS mmr FROM p{t}"
-        for t in range(1, k + 1)
+        for t in range(1, 5)
     )
     return ",\n    ".join(parts) + "\n    " + final
 
@@ -838,8 +837,8 @@ def ann_srp_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M, _PQ_KS = 8, 16
 
 
-def _adc_score_sql(m: int = _PQ_M, ks: int = _PQ_KS) -> str:
-    return " + ".join(f"l.lut[{s}*{ks} + e.code[{s + 1}] + 1]" for s in range(m))
+def _adc_score_sql() -> str:
+    return " + ".join(f"l.lut[{s}*{_PQ_KS} + e.code[{s + 1}] + 1]" for s in range(_PQ_M))
 
 
 def _ivf_pq_common_ctes() -> str:
@@ -910,12 +909,12 @@ def _ivf_pq_common_ctes() -> str:
 
 
 def _ivf_pq_indexed_ctes(
-    k: int, nprobe: int = NPROBE, rerank: int = 50, corpus_pred: str = ""
+    k: int, corpus_pred: str = ""
 ) -> str:
     """DuckDB replay of the index-backed retrieval path, ending in CTE
     ``ivfpq`` = (qid, cid, score, rank): the shared prefix
-    (``_ivf_pq_common_ctes``) → per-query nprobe probe → ADC scoring of
-    probed lists only → exact cosine rerank of the top-``rerank`` pool →
+    (``_ivf_pq_common_ctes``) → per-query NPROBE probe → ADC scoring of
+    probed lists only → exact cosine rerank of the top-50 pool →
     top-``k``.
 
     ``corpus_pred`` (r13, the erasure replay): an extra predicate on the
@@ -932,7 +931,7 @@ def _ivf_pq_indexed_ctes(
                        ORDER BY {_cos('q.embedding', 'cvec')} DESC, trained_nz.cent) AS rn
             FROM embeddings q CROSS JOIN trained_nz
             WHERE q.vec_id < {N_QUERIES} AND {_norm_pos('q.embedding')}) t
-        WHERE rn <= {nprobe}
+        WHERE rn <= {NPROBE}
     ),
     pq_probe_scored AS MATERIALIZED (
         SELECT l.qid, a.cid, {score} AS score
@@ -948,7 +947,7 @@ def _ivf_pq_indexed_ctes(
                    row_number() OVER (PARTITION BY qid
                                       ORDER BY score DESC, cid) AS rn
             FROM pq_probe_scored) t
-        WHERE rn <= {rerank}
+        WHERE rn <= 50
     ),
     ivfpq AS MATERIALIZED (
         SELECT qid, cid, score, CAST(rn AS BIGINT) AS rank FROM (
@@ -965,7 +964,6 @@ def _ivf_pq_indexed_ctes(
 def _ivf_pq_filtered_ctes(
     k: int,
     nprobe: int = NPROBE,
-    rerank: int = 50,
     min_candidates: int = 0,
     lo: int | None = None,
     hi: int | None = None,
@@ -974,7 +972,7 @@ def _ivf_pq_filtered_ctes(
     ``ivfpq_f``: shared prefix → model-sized (label, cent) list summary →
     per-query probe of the nprobe nearest centroids WHOSE LIST CONTAINS
     THE QUERY'S LABEL → ADC scoring restricted to same-label rows of the
-    probed lists → exact cosine rerank of the pooled top-``rerank`` →
+    probed lists → exact cosine rerank of the pooled top-50 →
     top-``k``.  Mirrors ``operators.similarity.filtered_ivf_pq_topk``
     term by term (probe tie-break (cos DESC, cent), ADC accumulation
     order, rerank (score DESC, cid)).
@@ -1045,7 +1043,7 @@ def _ivf_pq_filtered_ctes(
                    row_number() OVER (PARTITION BY qid
                                       ORDER BY score DESC, cid) AS rn
             FROM pq_scored_f) t
-        WHERE rn <= {rerank}
+        WHERE rn <= 50
     ),
     ivfpq_f AS MATERIALIZED (
         SELECT qid, cid, score, CAST(rn AS BIGINT) AS rank FROM (
@@ -1070,9 +1068,7 @@ def _indexed_models(emb: DataFrame):
     return cents, books
 
 
-def standing_index_root(
-    sf_dir: str, n_centroids: int = N_CENTROIDS, variant: str = "full"
-) -> str:
+def standing_index_root(sf_dir: str, variant: str = "full") -> str:
     """Deterministic on-disk location of the standing IVF+PQ artifact for
     a corpus: keyed by corpus identity (``cache.standing_root`` over
     ``embeddings.parquet``) and every model parameter, so a corpus or
@@ -1081,7 +1077,7 @@ def standing_index_root(
     (e.g. the erasure row) from the shared serving artifact."""
     return standing_root(
         "ivfpq", sf_dir, ("embeddings.parquet",),
-        n_centroids, _PQ_M, _PQ_KS, DIM, variant, "v3",
+        N_CENTROIDS, _PQ_M, _PQ_KS, DIM, variant, "v3",
     )
 
 
@@ -1089,7 +1085,6 @@ def ensure_standing_index(
     spark: SparkSession,
     sf_dir: str,
     emb: DataFrame | None = None,
-    n_centroids: int | None = None,
     variant: str = "full",
 ):
     """The STANDING compacted IVF+PQ artifact (r9, r8 VERDICT item 1):
@@ -1126,11 +1121,9 @@ def ensure_standing_index(
 
     if emb is None:
         emb = load(spark, sf_dir, "embeddings")
-    # the module's prescribed scale knob: n_centroids ~ sqrt(n) keeps list
-    # size ~sqrt(n) so probes touch a vanishing corpus fraction; the fixed
-    # N_CENTROIDS default is the oracle-replayable graded configuration
-    kc = n_centroids if n_centroids is not None else N_CENTROIDS
-    root = standing_index_root(sf_dir, kc, variant=variant)
+    # N_CENTROIDS is the oracle-replayable graded configuration; at scale
+    # ~sqrt(n) lists keep probes touching a vanishing corpus fraction
+    root = standing_index_root(sf_dir, variant=variant)
     snap = f"{root}/snapshot"
     if not sinks.snapshot_exists(spark, snap):
         import os
@@ -1138,7 +1131,7 @@ def ensure_standing_index(
         import uuid
 
         cents = S.kmeans_centroids(
-            emb, "vec_id", "embedding", k=kc, iters=1, dim=DIM, exact_mean=True
+            emb, "vec_id", "embedding", k=N_CENTROIDS, iters=1, dim=DIM, exact_mean=True
         )
         books = S.pq_codebooks(emb, "vec_id", "embedding", m=_PQ_M, ks=_PQ_KS, dim=DIM)
         stage = f"{root}.stage.{uuid.uuid4().hex[:8]}"
@@ -1166,7 +1159,7 @@ def ensure_standing_index(
             f"{stage}/batches",
             f"{stage}/snapshot",
             label_lists_path=f"{stage}/label_lists",
-            cluster_files=max(8, kc // 4),
+            cluster_files=max(8, N_CENTROIDS // 4),
         )
         try:
             os.rename(stage, root)  # one-shot publish; racer-won root → OSError
@@ -1376,8 +1369,6 @@ def indexed_candidates(
     spark: SparkSession,
     emb: DataFrame,
     k: int,
-    nprobe: int = NPROBE,
-    rerank: int = 50,
     sf_dir: str | None = None,
 ) -> DataFrame:
     """Top-``k`` neighbors per query (vec_id < N_QUERIES) served FROM THE
@@ -1385,11 +1376,11 @@ def indexed_candidates(
     code) artifact (``ensure_standing_index`` — built at most once per
     corpus, NOT rebuilt per query; r9 closes the r8 tempdir-rebuild
     finding) and probe THAT frame via ``ivf_pq_topk(index=…)`` with
-    exact rerank on the pooled top-``rerank`` candidates.
+    exact rerank on the pooled top-50 candidates.
 
     This is the retrieval architecture a 100 TB deployment actually runs:
-    the per-query cost tracks nprobe · mean-list-size PQ lookups (+
-    ``rerank`` exact cosines), NOT corpus size, and the corpus-sized work
+    the per-query cost tracks NPROBE · mean-list-size PQ lookups (+ 50
+    exact cosines), NOT corpus size, and the corpus-sized work
     (assign + encode) happens once at index-build time and is maintained
     by compaction (``compact_ann_index``), not per query."""
     if sf_dir is None:
@@ -1406,23 +1397,23 @@ def indexed_candidates(
         "embedding",
         "embedding",
         k=k,
-        nprobe=nprobe,
+        nprobe=NPROBE,
         centroids=cents,
         codebooks=books,
-        rerank=rerank,
+        rerank=50,
         index=persisted,
         dim=DIM,
     )
 
 
-def _mmr_indexed_oracle(n: int = 16, k: int = 4) -> str:
+def _mmr_indexed_oracle() -> str:
     """Generated DuckDB twin of ann_mmr_rerank_indexed: candidates come
     from the replayed INDEX probe (``_ivf_pq_indexed_ctes``) instead of a
     brute-force scan; the MMR recurrence is unchanged (same rendering as
     ``_mmr_oracle``)."""
     mmr = "(0.5 * score - 0.5 * red)"
     parts = [
-        f"WITH {_ivf_pq_indexed_ctes(k=n)}",
+        f"WITH {_ivf_pq_indexed_ctes(k=16)}",
         f"""cands AS MATERIALIZED (
         SELECT i.qid, i.cid, {_cos('q.embedding', 'e.embedding')} AS score, e.embedding AS cv
         FROM ivfpq i
@@ -1431,7 +1422,7 @@ def _mmr_indexed_oracle(n: int = 16, k: int = 4) -> str:
     )""",
         "cur1 AS MATERIALIZED (SELECT qid, cid, score, cv, 0.0 AS red FROM cands)",
     ]
-    for t in range(1, k + 1):
+    for t in range(1, 5):
         parts.append(
             f"""r{t} AS MATERIALIZED (
         SELECT *, {mmr} AS mmr,
@@ -1440,7 +1431,7 @@ def _mmr_indexed_oracle(n: int = 16, k: int = 4) -> str:
     )"""
         )
         parts.append(f"p{t} AS (SELECT qid, cid, score, mmr, cv FROM r{t} WHERE rn = 1)")
-        if t < k:
+        if t < 4:
             parts.append(
                 f"""cur{t + 1} AS MATERIALIZED (
         SELECT r.qid, r.cid, r.score, r.cv,
@@ -1452,7 +1443,7 @@ def _mmr_indexed_oracle(n: int = 16, k: int = 4) -> str:
     final = "\n    UNION ALL ".join(
         f"SELECT qid, cid, CAST({t} AS BIGINT) AS rank, round(score, 6) AS score,"
         f" round(mmr, 6) AS mmr FROM p{t}"
-        for t in range(1, k + 1)
+        for t in range(1, 5)
     )
     return ",\n    ".join(parts) + "\n    " + final
 
@@ -1492,7 +1483,7 @@ def ann_mmr_rerank_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.mmr_rerank(cands, k=4, lam=0.5)
 
 
-def _hard_negative_oracle(n_pos: int = 3, k: int = 5) -> str:
+def _hard_negative_oracle() -> str:
     return f"""
     WITH {_ivf_pq_indexed_ctes(k=16)},
     q AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qv FROM embeddings
@@ -1510,7 +1501,7 @@ def _hard_negative_oracle(n_pos: int = 3, k: int = 5) -> str:
                    row_number() OVER (PARTITION BY qid
                                       ORDER BY {_cos('qv', 'cv')} DESC, cid) AS rn
             FROM q JOIN c ON qid <> cid) t
-        WHERE rn <= {n_pos}
+        WHERE rn <= 3
     )
     SELECT i.qid, i.cid, round(i.score, 6) AS score, CAST(nr AS BIGINT) AS neg_rank
     FROM (
@@ -1521,7 +1512,7 @@ def _hard_negative_oracle(n_pos: int = 3, k: int = 5) -> str:
         LEFT JOIN pos p ON p.qid = i.qid AND p.cid = i.cid
         WHERE p.qid IS NULL
     ) i
-    WHERE nr <= {k}
+    WHERE nr <= 5
     """
 
 
@@ -1595,8 +1586,6 @@ def indexed_candidates_pruned(
     spark: SparkSession,
     emb: DataFrame,
     k: int,
-    nprobe: int = NPROBE,
-    rerank: int = 50,
     sf_dir: str | None = None,
 ) -> DataFrame:
     """``indexed_candidates`` with PROBE-LIST PUSHDOWN (late r12): the
@@ -1609,7 +1598,7 @@ def indexed_candidates_pruned(
     The candidate join already restricts to probed lists, so results are
     IDENTICAL to the unpruned serve — what changes is I/O: the plain path
     scans the whole artifact and lets the broadcast join drop
-    ~(1 − nprobe/n_centroids) of it; this path never reads those bytes.
+    ~(1 − NPROBE/N_CENTROIDS) of it; this path never reads those bytes.
     At 100 TB with √n lists that is the difference between "scan the
     index" and "read the probed slice" per query batch — the contiguous-
     inverted-list access pattern FAISS/Milvus serve from, expressed as
@@ -1638,10 +1627,10 @@ def indexed_candidates_pruned(
         "embedding",
         "embedding",
         k=k,
-        nprobe=nprobe,
+        nprobe=NPROBE,
         centroids=cents,
         codebooks=models["codebooks"],
-        rerank=rerank,
+        rerank=50,
         index_pruner=lambda cents_: sinks.read_snapshot_pruned_in(
             spark, snap, "cent", cents_, version=version
         ),
@@ -1924,12 +1913,12 @@ def _load_range_rows(
 RANGE_LO, RANGE_HI = 100, 400
 
 
-def _ivf_pq_range_ctes(k: int, nprobe: int, lo: int, hi: int, rerank: int = 50) -> str:
+def _ivf_pq_range_ctes(k: int, nprobe: int, lo: int, hi: int) -> str:
     """DuckDB replay of the RANGE-filtered serve path (r13), ending in
     CTE ``ivfpq_r``: shared prefix → per-list (min, max) id zonemap →
     per-query probe of the nprobe nearest centroids whose interval
     OVERLAPS [lo, hi] → ADC scoring of probed lists' IN-RANGE rows →
-    exact cosine rerank of the pooled top-``rerank`` → top-``k``.
+    exact cosine rerank of the pooled top-50 → top-``k``.
     Mirrors ``operators.similarity.range_filtered_ivf_pq_topk`` term by
     term (probe tie-break (cos DESC, cent), residual BETWEEN before ADC
     ranking, rerank (score DESC, cid))."""
@@ -1966,7 +1955,7 @@ def _ivf_pq_range_ctes(k: int, nprobe: int, lo: int, hi: int, rerank: int = 50) 
                    row_number() OVER (PARTITION BY qid
                                       ORDER BY score DESC, cid) AS rn
             FROM pq_scored_r) t
-        WHERE rn <= {rerank}
+        WHERE rn <= 50
     ),
     ivfpq_r AS MATERIALIZED (
         SELECT qid, cid, score, CAST(rn AS BIGINT) AS rank FROM (

@@ -458,9 +458,9 @@ def strip_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     public corpus pipelines — CCNet §4.1, Lee et al. 2022 — over token
     windows since this corpus has no line structure): drop every 4-token
     segment occurring in ≥3 distinct documents, rebuild documents in
-    order.  One segment-hash shuffle + an O(max_frequent) broadcast; the
-    rebuild is per-row codegen (operators.text.strip_frequent_segments —
-    scale notes there)."""
+    order.  One segment-hash shuffle, a broadcast hash join of the
+    frequent set and a doc-keyed re-aggregation
+    (operators.text.strip_frequent_segments — scale notes there)."""
     docs = load_spread(spark, sf_dir, "documents", "doc_id")
     return X.strip_frequent_segments(
         docs, id_col="doc_id", text_col="text", width=_BL_W, min_docs=_BL_MIN_DOCS
@@ -581,21 +581,10 @@ def nb_langid_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def bm25_contrib(
-    docs: DataFrame, qt: DataFrame, max_df: int | None = None
-) -> DataFrame:
+def bm25_contrib(docs: DataFrame, qt: DataFrame) -> DataFrame:
     """Per-(query, doc, term) BM25 contributions for probe terms ``qt``
-    (q_id, tok) — the joined-postings stage, factored so the df-cap bound
-    is pytest-observable (r7 VERDICT item 3).
-
-    ``max_df`` is the stop-term cap: probe terms whose document frequency
-    exceeds it are dropped BEFORE the postings join — the df annotation
-    rides the (small) probe side (``dfreq ⋈ broadcast(qt)``), so a
-    stop-word probe term can never pull a corpus-sized postings list
-    through the join: every surviving term contributes ≤ max_df posting
-    rows.  This is pruning, not a different join shape — the WAND-style
-    alternative (impact-ordered early termination) bounds the same term
-    the same way."""
+    (q_id, tok) — the joined-postings stage.  The df annotation rides the
+    (small) probe side (``dfreq ⋈ broadcast(qt)``)."""
     ws = F.filter(F.split("text", " "), lambda w: w != "")
     toks = docs.select("doc_id", F.explode(ws).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
@@ -605,11 +594,8 @@ def bm25_contrib(
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    # df annotates the PROBE side (broadcast): idf needs it anyway, and
-    # with max_df set the fat terms die here — before any postings join
+    # df annotates the PROBE side (broadcast): idf needs it
     qt2 = dfreq.join(F.broadcast(qt), "tok")
-    if max_df is not None:
-        qt2 = qt2.filter(F.col("df") <= max_df)
     idf = F.log(1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     tf_term = (F.col("tf") * 2.2) / (
         F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl").cast("double") / F.col("avgdl"))
@@ -626,16 +612,14 @@ def bm25_contrib(
     )
 
 
-def bm25_topk(
-    docs: DataFrame, qt: DataFrame, k: int = 10, max_df: int | None = None
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, qt: DataFrame, k: int = 10) -> DataFrame:
     """Top-``k`` BM25 results per probe query — contributions summed per
     (q_id, doc_id), rank-filter window (WindowGroupLimit heap)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("q_id").orderBy(F.desc("score_q"), F.asc("doc_id"))
     return (
-        bm25_contrib(docs, qt, max_df=max_df)
+        bm25_contrib(docs, qt)
         .groupBy("q_id", "doc_id")
         .agg(F.sum("c_q").alias("score_q"))
         .withColumn("rank", F.row_number().over(w))
@@ -696,10 +680,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus per query; a probe set growing WITH the corpus would be the
     quadratic trap, measured and rejected in the r7 100× sweep) with
     Okapi BM25 (k1=1.2, b=0.75, query-tf ignored) and keep the top 10
-    per query.  Fat posting lists: ``bm25_topk(max_df=…)`` (r8) drops
-    stop-terms above a df cap on the probe side before the postings join
-    — the bound is pytest-pinned; this row runs uncapped so the oracle
-    covers the full scoring.
+    per query.
 
     Scale shape: tf/dl/df are single hash aggs over the exploded corpus
     (the reusable inverted-statistics artifact); the probe terms BROADCAST
@@ -851,9 +832,7 @@ def _logprob_cuts(mnl: DataFrame, mode: str) -> DataFrame:
     FROM mnl m CROSS JOIN cuts c
     """,
 )
-def quality_buckets_logprob(
-    spark: SparkSession, sf_dir: str, mode: str = "exact"
-) -> DataFrame:
+def quality_buckets_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail perplexity bucketing (r7): the keep/drop
     decision layer over text_unigram_logprob's LM scores — documents are
     assigned to tertile buckets by mean negative log-prob (head = most
@@ -861,14 +840,14 @@ def quality_buckets_logprob(
 
     Scale shape: NO global sort/ntile — tertile cutoffs come from ONE
     percentile aggregation, broadcast onto the scored docs for a
-    comparison-only bucket assignment.  ``mode`` selects exact
-    ``percentile`` (oracle-replayable) vs ``approx_percentile`` (bounded
-    memory, the 100 TB default — see ``_logprob_cuts``; error band pinned
-    by the ``quality_buckets_logprob_approx`` demoted row).  Cutoffs and
+    comparison-only bucket assignment.  The cutoffs are exact
+    ``percentile`` (oracle-replayable); the ``approx_percentile`` lane of
+    ``_logprob_cuts`` (bounded memory) is pinned by the
+    ``quality_buckets_logprob_approx`` demoted row.  Cutoffs and
     scores are both rounded to 6 places before comparison, so bucket
     edges replay identically cross-engine."""
     mnl = text_unigram_logprob(spark, sf_dir).select("doc_id", "mean_neg_logprob")
-    cuts = _logprob_cuts(mnl, mode)
+    cuts = _logprob_cuts(mnl, "exact")
     return mnl.crossJoin(F.broadcast(cuts)).select(
         "doc_id",
         "mean_neg_logprob",
@@ -1649,7 +1628,7 @@ def read_lexicon(spark: SparkSession, root: str):
     )
 
 
-def ensure_standing_lexicon(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None):
+def ensure_standing_lexicon(spark: SparkSession, sf_dir: str):
     """Build-at-most-once standing lexicon for a warehouse corpus:
     first touch ingests the whole ``documents`` table as batch 0 and
     compacts; afterwards every call is a pure generation resolve
@@ -1663,8 +1642,7 @@ def ensure_standing_lexicon(spark: SparkSession, sf_dir: str, docs: DataFrame | 
     root = lexicon_root(sf_dir)
     fs, hpath = sinks._fs_for(spark, root)
     if _gs.current_gen(fs, hpath, root) is None:
-        if docs is None:
-            docs = load_spread(spark, sf_dir, "documents", "doc_id")
+        docs = load_spread(spark, sf_dir, "documents", "doc_id")
         lexicon_append_batch(spark, root, docs, bid=0)  # bid 0: replay no-op
         try:
             lexicon_compact(spark, root)
@@ -1686,29 +1664,22 @@ def bm25_topk_served(
     sf_dir: str,
     qt: DataFrame,
     k: int = 10,
-    max_df: int | None = None,
-    isin_pushdown_cap: int = 1024,
 ) -> DataFrame:
     """BM25 top-``k`` served FROM THE STANDING LEXICON: no corpus scan, no
     tf/dl/df recomputation — the probe joins the persisted postings.
 
-    When the distinct probe-term set is small (≤ ``isin_pushdown_cap`` —
+    When the distinct probe-term set is small (≤ ``_ISIN_PUSHDOWN_CAP`` —
     bounded model-side state, like the ANN centroid collect), it is
     collected and pushed as ``tok IN (…)`` into the postings SCAN, so the
     term-partitioned, term-sorted parquet skips every row group holding
     unqueried terms — the 100 TB shape where serve I/O tracks the probed
     postings lists, not the corpus.  Larger probe sets fall back to the
-    plain broadcast join (still postings-bounded after the shuffle-free
-    probe-side df cap)."""
+    plain broadcast join."""
     ensure_standing_lexicon(spark, sf_dir)
-    return _bm25_from_lexicon(
-        spark,
-        lexicon_root(sf_dir),
-        qt,
-        k=k,
-        max_df=max_df,
-        isin_pushdown_cap=isin_pushdown_cap,
-    )
+    return _bm25_from_lexicon(spark, lexicon_root(sf_dir), qt, k=k)
+
+
+_ISIN_PUSHDOWN_CAP = 1024  # probe terms pushed into the postings scan
 
 
 def _bm25_from_lexicon(
@@ -1716,8 +1687,6 @@ def _bm25_from_lexicon(
     root: str,
     qt: DataFrame,
     k: int = 10,
-    max_df: int | None = None,
-    isin_pushdown_cap: int = 1024,
 ) -> DataFrame:
     """Scoring core over an explicit lexicon root (factored so the
     incremental-maintenance tests can serve from roots they appended)."""
@@ -1734,8 +1703,9 @@ def _bm25_from_lexicon(
     dfreq = spark.read.parquet(f"{gen}/termstats")
     meta = json.loads(_gs.read_file(fs, hpath, f"{gen}/meta.json"))
     n_docs, sum_dl = meta["n_docs"], meta["sum_dl"]
-    terms = [r["tok"] for r in qt.select("tok").distinct().limit(isin_pushdown_cap + 1).collect()]
-    if len(terms) <= isin_pushdown_cap:
+    cap = _ISIN_PUSHDOWN_CAP
+    terms = [r["tok"] for r in qt.select("tok").distinct().limit(cap + 1).collect()]
+    if len(terms) <= cap:
         # r17 OPT (r16 VERDICT item 8): serve through the generation's
         # committed zonemap — only postings FILES whose [min, max] token
         # range intersects the probe set are opened (the range-partitioned
@@ -1756,8 +1726,6 @@ def _bm25_from_lexicon(
     else:
         postings = spark.read.parquet(f"{gen}/postings")
     qt2 = dfreq.join(F.broadcast(qt), "tok")
-    if max_df is not None:
-        qt2 = qt2.filter(F.col("df") <= max_df)
     avgdl = F.lit(sum_dl).cast("double") / F.lit(n_docs)
     idf = F.log(1 + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
     tf_term = (F.col("tf") * 2.2) / (

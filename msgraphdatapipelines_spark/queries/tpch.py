@@ -958,9 +958,7 @@ def q20_dominant_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- late r10: the co-bucketed fact warehouse path --------------------------
 
 
-def ensure_colocated_facts(
-    spark: SparkSession, sf_dir: str, num_buckets: int = 8
-) -> tuple[str, str]:
+def ensure_colocated_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build-at-most-once CO-BUCKETED orders+lineitem tables on the join
     key (late r10): the write-once/shuffle-never amortization for the
     fact-fact join — at 100 TB the orders⋈lineitem shuffle is THE
@@ -978,13 +976,13 @@ def ensure_colocated_facts(
     from under a concurrent session's scan."""
     from .. import sinks
 
-    t_o, t_l, root = _colocated_names(sf_dir, num_buckets)
+    t_o, t_l, root = _colocated_names(sf_dir, 8)
     sinks.ensure_bucketed_table(
-        spark, t_o, f"{root}/orders", "o_orderkey", num_buckets,
+        spark, t_o, f"{root}/orders", "o_orderkey", 8,
         lambda: load(spark, sf_dir, "orders"),
     )
     sinks.ensure_bucketed_table(
-        spark, t_l, f"{root}/lineitem", "l_orderkey", num_buckets,
+        spark, t_l, f"{root}/lineitem", "l_orderkey", 8,
         lambda: load(spark, sf_dir, "lineitem"),
     )
     return t_o, t_l

@@ -18,12 +18,6 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def stream_checksum_conf() -> str:
-    """``spark.sql.streaming.checkpoint.fileChecksum.enabled``: off unless
-    ``SPARK_GRAFT_STREAM_CHECKSUM`` is set (why: see :func:`get_spark`)."""
-    return "true" if os.environ.get("SPARK_GRAFT_STREAM_CHECKSUM") else "false"
-
-
 def get_spark(
     app_name: str = "msgraphdatapipelines-spark",
     cpus: int | None = None,
@@ -61,8 +55,8 @@ def get_spark(
         # sf0.1: median-of-3 4.06 s → 2.05 s with it off (steady state
         # 1.9 → 1.5 s).  Corruption detection for checkpoint files falls
         # back to the filesystem's own integrity (local-FS CRC / object
-        # store etags); set SPARK_GRAFT_STREAM_CHECKSUM=1 to re-enable.
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", stream_checksum_conf())
+        # store etags).
+        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     )
     if SparkSession.getActiveSession() is None:
         b = b.master(f"local[{n}]")
@@ -70,42 +64,3 @@ def get_spark(
         b = b.config(k, v)
     return b.getOrCreate()
 
-
-def scale_conf(
-    input_bytes: int,
-    executor_mem_bytes: int = 8 << 30,
-    task_mem_fraction: float = 0.125,
-    target_partition_bytes: int = 128 << 20,
-    min_partitions: int = 200,
-) -> dict[str, str]:
-    """Spill-aware conf sizing for a target input size (r8) — the
-    arithmetic the 100 TB prompt demands, as CODE instead of a rule of
-    thumb:
-
-    - ``spark.sql.files.maxPartitionBytes``: capped so one scan task's
-      decompressed slice (~3× the on-disk bytes for parquet) fits the
-      per-task memory share ``executor_mem · task_mem_fraction``
-      (default: 8 GiB executor, 8 concurrent tasks → 1 GiB/task →
-      ≤ ~341 MiB slices; the 128 MiB default survives unless the cap is
-      SMALLER);
-    - ``spark.sql.shuffle.partitions``: input_bytes /
-      target_partition_bytes, floored at ``min_partitions`` — the HIGH
-      INITIAL value AQE coalesces DOWN from at runtime (coalescing is
-      cheap, splitting is not, so err high: 100 TB / 128 MiB ≈ 800k is
-      intentionally large and AQE merges what the real reduce sizes
-      allow);
-    - ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: the
-      target_partition_bytes itself, so AQE's coalescing aims at the
-      same post-shuffle size the static sizing assumed.
-
-    Returns a conf dict for ``get_spark(extra_conf=…)``.  Pure
-    arithmetic — unit-tested, no session required.
-    """
-    per_task = int(executor_mem_bytes * task_mem_fraction)
-    max_part = min(target_partition_bytes, max(per_task // 3, 8 << 20))
-    parts = max(min_partitions, -(-input_bytes // target_partition_bytes))
-    return {
-        "spark.sql.files.maxPartitionBytes": str(max_part),
-        "spark.sql.shuffle.partitions": str(parts),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(target_partition_bytes),
-    }

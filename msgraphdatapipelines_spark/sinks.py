@@ -47,8 +47,6 @@ def with_surrogate_key(
     name: str = "ClusterID",
     contiguous: bool = False,
     order_by: str | None = None,
-    num_buckets: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """L5 — surrogate key (reference: int IDENTITY(1,1),
     `Prepare-SQLDatabase.sql:8`).
@@ -72,8 +70,8 @@ def with_surrogate_key(
        driver collect, no extra job;
     3. ``ClusterID = offset[bucket] + row_number() within bucket``.
 
-    Total driver actions: the eager checkpoint (if ``materialize``) + one
-    min/max/count agg; everything else is one job at the consumer's action.
+    Total driver actions: the eager checkpoint + one min/max/count agg;
+    everything else is one job at the consumer's action.
     The only data-sized wide step is the per-bucket window's hash exchange —
     parallel across buckets, so the plan contains no ``Exchange
     SinglePartition`` and survives the 100 TB fact path (pinned in
@@ -82,35 +80,25 @@ def with_surrogate_key(
     collapses into few buckets (same failure shape the quantile form had
     with tie-skew) — pick a spread-out, high-cardinality ordering key.
 
-    ``materialize=True`` (default) pins the input once via an eager
-    ``localCheckpoint`` before the two consumers run (min/max agg, final
-    plan), so the upstream plan — scan, decode, filters — executes ONCE
+    The input is pinned once via an eager ``localCheckpoint`` before the
+    two consumers run (min/max agg, final plan), so the upstream plan — scan, decode, filters — executes ONCE
     (r4 VERDICT item 1), and both key modes become immune to recomputation
     nondeterminism (blocks are pinned; lineage is truncated).  CAUTION
     (r5 ADVICE): ``localCheckpoint`` is NOT fault-tolerant — pinned blocks
     live only on executors and lineage is truncated, so losing a single
     executor after the checkpoint makes the frame unrecoverable and fails
-    the job.  On long-running clusters keying a large fact table, prefer
-    reliable checkpointing (``sc.setCheckpointDir`` + ``df.checkpoint()``)
-    or ``persist(StorageLevel.MEMORY_AND_DISK_2)`` upstream and pass
-    ``materialize=False`` here.  Storage is executor memory-and-disk and is
-    reclaimed when the frame is garbage-collected.  Also set
-    ``materialize=False`` when the input is too large to pin relative to
-    re-scanning it (e.g. a raw 100 TB scan with cheap decode): the
-    two-phase shape is unchanged, the upstream plan just re-executes per
-    phase, and with ``order_by`` the bucket stays a pure function of the
-    data; the mono-id fallback then assumes a deterministic scan, same as
-    zipWithIndex.
+    the job.  Storage is executor memory-and-disk and is reclaimed when
+    the frame is garbage-collected.
     """
     if not contiguous:
         return df.withColumn(name, F.monotonically_increasing_id())
     from pyspark.sql import Window
 
-    src = df.localCheckpoint(eager=True) if materialize else df
+    src = df.localCheckpoint(eager=True)
     ordc, bucketc, cntc, offc = "__sk_ord", "__sk_bucket", "__sk_cnt", "__sk_off"
     if order_by is not None:
         # src-everywhere: every phase reads the pinned frame's session/state
-        n = num_buckets or src.sparkSession.sparkContext.defaultParallelism
+        n = src.sparkSession.sparkContext.defaultParallelism
         oc = F.col(order_by).cast("double")
         lo, hi, total = src.agg(F.min(oc), F.max(oc), F.count(F.lit(1))).first()
         if not total:
@@ -256,10 +244,6 @@ def apply_scd2(
     history: DataFrame,
     updates: DataFrame,
     keys: list[str],
-    effective_col: str = "effective_ts",
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    current_flag: str = "is_current",
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension apply — the keyed-history
     generalization of ``upsert_snapshot`` (SCD1) and the reference's
@@ -272,7 +256,7 @@ def apply_scd2(
 
     Contract: ``history`` carries the key columns, the attribute columns,
     and the three metadata columns; ``updates`` carries the keys, the same
-    attributes, and ``effective_col``.  Every non-key, non-metadata
+    attributes, and ``effective_ts``.  Every non-key, non-metadata
     attribute is change-tracked (pure SCD2; null-safe comparison).  At
     most ONE update per key per batch — collapse multi-update batches to
     the latest effective row first (``row_number`` over the key), or
@@ -285,19 +269,19 @@ def apply_scd2(
     With the warehouse bucketed on the key (L6 analog) the current
     slice's shuffle disappears exactly as in ``upsert_snapshot``.
     """
-    meta = {valid_from, valid_to, current_flag}
-    attrs = [c for c in updates.columns if c not in set(keys) | {effective_col}]
-    cur = history.filter(F.col(current_flag))
-    closed = history.filter(~F.col(current_flag))
+    meta = {"valid_from", "valid_to", "is_current"}
+    attrs = [c for c in updates.columns if c not in set(keys) | {"effective_ts"}]
+    cur = history.filter(F.col("is_current"))
+    closed = history.filter(~F.col("is_current"))
 
     upd = updates.select(
         *keys,
         *[F.col(a).alias(f"__u_{a}") for a in attrs],
-        F.col(effective_col).alias("__u_eff"),
+        F.col("effective_ts").alias("__u_eff"),
     )
     j = cur.join(upd, keys, "full_outer")
 
-    c_exists = F.col(valid_from).isNotNull()  # current rows always carry valid_from
+    c_exists = F.col("valid_from").isNotNull()  # current rows always carry valid_from
     u_exists = F.col("__u_eff").isNotNull()
     diff = F.lit(False)
     for a in attrs:
@@ -305,20 +289,20 @@ def apply_scd2(
     closing = u_exists & c_exists & diff
     opening = u_exists & (~c_exists | diff)
 
-    vt_t = dict(cur.dtypes).get(valid_to, "timestamp")
+    vt_t = dict(cur.dtypes).get("valid_to", "timestamp")
     row_t = F.struct(
         *[F.col(k).alias(k) for k in keys],
         *[F.col(a).alias(a) for a in attrs],
-        F.col(valid_from).alias(valid_from),
-        F.when(closing, F.col("__u_eff").cast(vt_t)).otherwise(F.col(valid_to)).alias(valid_to),
-        F.when(closing, F.lit(False)).otherwise(F.col(current_flag)).alias(current_flag),
+        F.col("valid_from").alias("valid_from"),
+        F.when(closing, F.col("__u_eff").cast(vt_t)).otherwise(F.col("valid_to")).alias("valid_to"),
+        F.when(closing, F.lit(False)).otherwise(F.col("is_current")).alias("is_current"),
     )
     row_u = F.struct(
         *[F.col(k).alias(k) for k in keys],
         *[F.col(f"__u_{a}").alias(a) for a in attrs],
-        F.col("__u_eff").alias(valid_from),
-        F.lit(None).cast(vt_t).alias(valid_to),
-        F.lit(True).alias(current_flag),
+        F.col("__u_eff").alias("valid_from"),
+        F.lit(None).cast(vt_t).alias("valid_to"),
+        F.lit(True).alias("is_current"),
     )
     emitted = (
         j.select(
@@ -334,7 +318,8 @@ def apply_scd2(
         )
         .select("__r.*")
     )
-    out_cols = [*keys, *[a for a in cur.columns if a not in set(keys) | meta], valid_from, valid_to, current_flag]
+    attrs_out = [a for a in cur.columns if a not in set(keys) | meta]
+    out_cols = [*keys, *attrs_out, "valid_from", "valid_to", "is_current"]
     return emitted.select(*out_cols).unionByName(closed.select(*out_cols))
 
 
@@ -517,9 +502,7 @@ def read_jdbc(
     return reader.load()
 
 
-def zorder_key(
-    df: DataFrame, cols: list[str], bits: int = 8
-) -> tuple[DataFrame, "Column"]:
+def zorder_key(df: DataFrame, cols: list[str]) -> tuple[DataFrame, "Column"]:
     """Z-order (Morton) interleave key for multi-column data skipping.
 
     Parquet min/max stats prune files only when the FILE LAYOUT clusters
@@ -532,7 +515,7 @@ def zorder_key(
 
     Bucket ranks come from one global min/max aggregation per call (same
     fixed-width trick as the surrogate key): rank = floor((x-lo)/(hi-lo) ·
-    2^bits), clamped to 2^bits−1.  NULLs rank 0.  The returned key column
+    2^8), clamped to 2^8−1.  NULLs rank 0.  The returned key column
     is ``interleave(rank_0, rank_1, …)`` — pure codegen (shift/or), no
     UDF.  Returns (df_with_ranks, key_column); writers order by the key.
     """
@@ -543,6 +526,7 @@ def zorder_key(
         aggs += [F.min(F.col(c).cast("double")).alias(f"_lo_{c}"),
                  F.max(F.col(c).cast("double")).alias(f"_hi_{c}")]
     bounds = df.agg(*aggs).collect()[0]  # 2·|cols| scalars — model state
+    bits = 8
     n = 1 << bits
     ranks = []
     for c in cols:
@@ -561,7 +545,7 @@ def zorder_key(
 
 
 def write_zordered(
-    df: DataFrame, path: str, cols: list[str], bits: int = 8, num_files: int | None = None
+    df: DataFrame, path: str, cols: list[str], num_files: int | None = None
 ) -> None:
     """Write parquet Z-ordered on ``cols``: range-partition on the Morton
     key (files = contiguous key ranges = small bounding boxes), sort
@@ -571,7 +555,7 @@ def write_zordered(
     warehouse table.  ``num_files`` caps output files (defaults to the
     current partition count).
     """
-    d, key = zorder_key(df, cols, bits)
+    d, key = zorder_key(df, cols)
     d = d.withColumn("_zkey", key)
     parts = num_files or d.rdd.getNumPartitions()
     (
@@ -1222,15 +1206,13 @@ def forget_keys(
     root: str,
     key_cols: list[str],
     keys_df: DataFrame,
-    erase_history: bool = True,
 ) -> dict:
     """Right-to-erasure (GDPR art. 17) for a snapshot-versioned table
     (r10): publish a new version equal to the current one MINUS the
     given keys (left-anti join — broadcastable: a deletion request list
-    is model-sized), then, with ``erase_history`` (the default — erasure
-    that leaves the rows readable via time travel is not erasure),
-    DELETE every older version directory so no ``read_snapshot(version=…)``
-    can resurrect them.  The pointer flips to the scrubbed version BEFORE
+    is model-sized), then DELETE every older version directory so no
+    ``read_snapshot(version=…)`` can resurrect them (erasure that leaves
+    the rows readable via time travel is not erasure).  The pointer flips to the scrubbed version BEFORE
     history is erased, so concurrent readers never lose their table;
     single-publisher window like every maintenance op here.
 
@@ -1256,12 +1238,11 @@ def forget_keys(
     new_v = write_snapshot(kept, root)
     n_after = read_snapshot(spark, root).count()
     erased = []
-    if erase_history:
-        fs, hp = _fs_for(spark, root)
-        for v in _list_numbered_dirs(fs, hp, root, "v="):
-            if v != new_v:
-                fs.delete(hp(f"{root}/v={v}"), True)
-                erased.append(v)
+    fs, hp = _fs_for(spark, root)
+    for v in _list_numbered_dirs(fs, hp, root, "v="):
+        if v != new_v:
+            fs.delete(hp(f"{root}/v={v}"), True)
+            erased.append(v)
     # r16: an erasure must also drop retained planning state — cached
     # zonemap manifests under this root carry per-file min/max of the
     # pre-erasure layout
@@ -1436,9 +1417,7 @@ def zonemap_cache_forget(root: str) -> None:
     _ZM_CACHE.forget(lambda k: k[1].startswith(root.rstrip("/")))
 
 
-def scan_pruned(
-    spark: SparkSession, path: str, col: str, lo, hi, _manifest_rows=None
-) -> DataFrame:
+def scan_pruned(spark: SparkSession, path: str, col: str, lo, hi) -> DataFrame:
     """Range scan through the zonemap: read ONLY files whose [min, max]
     interval overlaps [lo, hi], then apply the residual filter (identical
     results to a full-scan filter — pruning is I/O elision, never a
@@ -1452,30 +1431,20 @@ def scan_pruned(
     from pyspark.sql import functions as F
 
     base = spark.read.parquet(path)
-    if _manifest_rows is not None:
-        # cached rows (r16): interval test driver-side, no manifest job
-        files = [
-            r["file"]
-            for r in _manifest_rows
-            if r[f"max_{col}"] >= lo and r[f"min_{col}"] <= hi
-        ]
-    else:
-        # a table with no manifest serves a full filtered scan —
-        # pruning is an optimization, never a requirement (the same
-        # fallback read_snapshot_pruned_in takes)
-        fs, hp = _fs_for(spark, path)
-        if not fs.exists(hp(f"{path}/_zonemap")):
-            _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
-            return base.filter(F.col(col).between(lo, hi))
-        zm = spark.read.parquet(f"{path}/_zonemap")
-        files = [
-            r["file"]
-            for r in zm.filter(
-                (F.col(f"max_{col}") >= lo) & (F.col(f"min_{col}") <= hi)
-            )
-            .select("file")
-            .collect()
-        ]
+    # a table with no manifest serves a full filtered scan — pruning is
+    # an optimization, never a requirement (the same fallback
+    # read_snapshot_pruned_in takes)
+    fs, hp = _fs_for(spark, path)
+    if not fs.exists(hp(f"{path}/_zonemap")):
+        _warn_stale(StaleManifestError(f"no _zonemap manifest under {path}"))
+        return base.filter(F.col(col).between(lo, hi))
+    zm = spark.read.parquet(f"{path}/_zonemap")
+    files = [
+        r["file"]
+        for r in zm.filter((F.col(f"max_{col}") >= lo) & (F.col(f"min_{col}") <= hi))
+        .select("file")
+        .collect()
+    ]
     try:
         files = _current_paths(base, files, path)  # manifest paths may predate a rename
     except StaleManifestError as e:

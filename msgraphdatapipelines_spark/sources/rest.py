@@ -57,6 +57,11 @@ class ThrottledError(Exception):
         self.retry_after = retry_after
 
 
+MAX_RETRY_AFTER_S = 300.0  # cap a hostile/garbled Retry-After
+MAX_PAGES = 100_000  # cursor-walk bound (a cyclic nextLink must end)
+SPILL_PAGES = 64  # delta pages the driver holds before spilling
+
+
 @dataclass
 class RetryPolicy:
     """429/auth retry budget (`Invoke…ps1:8,95-117,138-148`).
@@ -68,14 +73,10 @@ class RetryPolicy:
     """
 
     max_retries: int = 5
-    sleep_s: float = 30.0
-    backoff: float = 1.0  # reference sleeps a constant 30 s; >1 = exponential
+    sleep_s: float = 30.0  # the reference sleeps a constant 30 s
     retry_on: tuple[type[Exception], ...] = (ThrottledError,)
 
-    max_retry_after_s: float = 300.0  # cap a hostile/garbled Retry-After
-
     def run(self, fn: Callable[[], str], sleeper: Callable[[float], None] = time.sleep) -> str:
-        delay = self.sleep_s
         for attempt in range(self.max_retries + 1):
             try:
                 return fn()
@@ -86,10 +87,9 @@ class RetryPolicy:
                 # one (Graph throttling contract); else the policy interval
                 hinted = getattr(e, "retry_after", None)
                 if hinted is not None:
-                    sleeper(min(float(hinted), self.max_retry_after_s))
+                    sleeper(min(float(hinted), MAX_RETRY_AFTER_S))
                 else:
-                    sleeper(delay)
-                    delay *= self.backoff
+                    sleeper(self.sleep_s)
         raise AssertionError("unreachable")
 
 
@@ -310,7 +310,7 @@ def fetch_with_shared_throttle(
         except ThrottledError as e:
             if e.retry_after is not None:
                 _fence_raise(
-                    throttle_dir, min(float(e.retry_after), retry.max_retry_after_s)
+                    throttle_dir, min(float(e.retry_after), MAX_RETRY_AFTER_S)
                 )
             raise
 
@@ -429,12 +429,11 @@ def fetch_pages(
     fetcher: Callable[[str], str] = file_fetcher,
     retry: RetryPolicy | None = None,
     sleeper: Callable[[float], None] = time.sleep,
-    max_pages: int = 100_000,
 ) -> list[str]:
     """Walk the ``@odata.nextLink`` cursor chain (S2), returning raw page
     bodies.  Sequential by protocol design; each body is small (one page)."""
     walk = _walk_pages(first_url, fetcher, retry, sleeper)
-    return [body for body, _ in itertools.islice(walk, max_pages)]
+    return [body for body, _ in itertools.islice(walk, MAX_PAGES)]
 
 
 def read_odata(
@@ -596,7 +595,6 @@ def read_odata_delta(
     retry: RetryPolicy | None = None,
     sleeper: Callable[[float], None] = time.sleep,
     removed_col: str = "_removed",
-    datasource_page_threshold: int = 64,
     spill_dir: str | None = None,
 ) -> tuple[DataFrame, str | None]:
     """Graph delta-query incremental ingest (S2 generalized; r4 VERDICT
@@ -621,8 +619,8 @@ def read_odata_delta(
     collection — the reference's whole-snapshot loop — and the
     ``@odata.deltaLink`` lives only on the last page, so the walk always
     runs to the end, fetching every page exactly ONCE.  The page
-    threshold is the only switch between lanes: up to
-    ``datasource_page_threshold`` pages the driver holds the bodies and
+    threshold is the only switch between lanes: up to ``SPILL_PAGES``
+    pages the driver holds the bodies and
     hands them to the JVM as a local relation (no Python worker, no
     shuffle; its exact size lets ``sinks.apply_delta`` broadcast the
     batch); past it, with ``spill_dir`` set (MUST be
@@ -651,7 +649,7 @@ def read_odata_delta(
         delta_link = doc.get(DELTA_LINK, delta_link)
         pages.append(body)
         # past the threshold: spill the held pages, then each later page
-        if spill_dir and (spilled or len(pages) > datasource_page_threshold):
+        if spill_dir and (spilled or len(pages) > SPILL_PAGES):
             for held in pages:
                 path = os.path.join(spill_dir, f"delta-page-{len(spilled)}.json")
                 with open(path, "w", encoding="utf-8") as f:

@@ -48,12 +48,12 @@ def skip_no_data_batches(spark: SparkSession):
         spark.conf.set(key, prev)
 
 
-def suggest_state_partitions(
-    spark: SparkSession,
-    directory: str,
-    glob: str = "*",
-    bytes_per_partition: int = 512 << 10,
-) -> int:
+STATE_PARTITION_BYTES = 512 << 10  # input bytes per state-store partition
+DEDUP_WATERMARK = "1 hour"  # dedup_within_watermark's eviction delay
+DRAIN_TIMEOUT_S = 600  # availableNow drain bound
+
+
+def suggest_state_partitions(spark: SparkSession, directory: str, glob: str = "*") -> int:
     """Input-size-derived state-store partition count (r16 OPT, guide §2:
     make partitioning scale-adaptive — derived from input size — rather
     than a constant tuned for either local mode or the cluster).
@@ -65,7 +65,7 @@ def suggest_state_partitions(
     local FS each file op is additionally a forked ``chmod``).  Sizing it
     from measured input bytes instead of inheriting the shuffle conf:
 
-        ceil(matched_bytes / bytes_per_partition), floor 1,
+        ceil(matched_bytes / STATE_PARTITION_BYTES), floor 1,
         cap min(spark.sql.shuffle.partitions, defaultParallelism)
 
     Measured at sf0.1 (2 MB events input, 32 cores): the inherited bound
@@ -99,20 +99,18 @@ def suggest_state_partitions(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         spark.sparkContext.defaultParallelism,
     )
-    return max(1, min(cap, -(-total // bytes_per_partition)))
+    return max(1, min(cap, -(-total // STATE_PARTITION_BYTES)))
 
 
 def read_events_stream(
     spark: SparkSession,
     directory: str,
     glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-source stream over events parquet with event-time ``ts``.
 
     The file source requires a *directory*; ``pathGlobFilter`` narrows it to
-    the events file(s).  ``max_files_per_trigger=1`` yields one micro-batch
-    per file — how the tests stage late-data sequences.
+    the events file(s).
 
     The stream schema is probed from the existing files (metadata-only batch
     read), because the physical ``ts`` encoding varies by fixture vintage:
@@ -123,10 +121,7 @@ def read_events_stream(
     compresses every event time 1000× and corrupts windows.
     """
     probe = spark.read.option("pathGlobFilter", glob).parquet(directory).schema
-    reader = spark.readStream.schema(probe).option("pathGlobFilter", glob)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(directory)
+    raw = spark.readStream.schema(probe).option("pathGlobFilter", glob).parquet(directory)
     ts_type = raw.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -221,25 +216,22 @@ def interval_join(
     return l.join(r, cond, how)
 
 
-def dedup_within_watermark(
-    events: DataFrame, keys: list[str], ts_col: str = "ts", watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming first-occurrence dedup with BOUNDED state:
+def dedup_within_watermark(events: DataFrame, keys: list[str]) -> DataFrame:
+    """Streaming first-occurrence dedup with BOUNDED state on ``ts``:
     ``dropDuplicatesWithinWatermark`` keeps one state entry per key and
     evicts it once the watermark passes the first-seen event time plus the
-    delay — the production contract for at-least-once sources (retries
+    ``DEDUP_WATERMARK`` delay — the production contract for at-least-once sources (retries
     land within the delay; a 'duplicate' older than the watermark is by
     then a new record).  Plain ``dropDuplicates(keys)`` on a stream would
     grow state forever (one entry per key, never evicted unless the event
     time is part of the key)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", DEDUP_WATERMARK).dropDuplicatesWithinWatermark(keys)
 
 
 def run_stream_to_memory(
     agg: DataFrame,
     output_mode: str = "append",
     available_now: bool = False,
-    drain_timeout_s: int = 600,
     state_partitions: int | None = None,
 ) -> tuple[DataFrame, str]:
     """Run a streaming aggregation to completion against a memory sink and
@@ -263,8 +255,8 @@ def run_stream_to_memory(
     at stream start from ``spark.sql.shuffle.partitions`` and, unlike a
     batch exchange, is NEVER AQE-coalesced — every micro-batch pays an
     open/commit per state partition forever.  A stream inheriting a
-    batch-oriented, input-size-derived conf (``session.scale_conf``'s
-    800k-at-100TB posture) would open that many state stores per
+    batch-oriented, input-size-derived conf (an 800k-partition 100 TB
+    posture) would open that many state stores per
     micro-batch: the r10 A/B measured 200-vs-32 partitions making the
     stateful rows 3-5× slower at sf0.1 while AQE kept every batch row
     flat.  Default (None) bounds the stream at
@@ -289,9 +281,9 @@ def run_stream_to_memory(
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         if available_now:
-            if not q.awaitTermination(drain_timeout_s):
+            if not q.awaitTermination(DRAIN_TIMEOUT_S):
                 raise TimeoutError(
-                    f"availableNow drain exceeded {drain_timeout_s}s for {name}"
+                    f"availableNow drain exceeded {DRAIN_TIMEOUT_S}s for {name}"
                 )
         else:
             q.processAllAvailable()
@@ -305,7 +297,6 @@ def enrich_with_static(
     dim: DataFrame,
     on,
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Stream-static enrichment join — the standard "decorate the event
     stream with a dimension table" step (the streaming analog of the
@@ -320,7 +311,7 @@ def enrich_with_static(
     JDBC dim, whose per-batch re-execution re-reads) or a query restart;
     per-batch re-execution alone does not imply per-batch re-listing.
 
-    ``broadcast_dim=True`` hints the dim side: each micro-batch plans a
+    The dim side is broadcast-hinted: each micro-batch plans a
     BroadcastHashJoin, so the stream side never shuffles — at 100 TB/day
     the per-batch cost is the dim scan (cache the dim or keep it compact)
     plus a narrow probe.  Only stream-side-preserving joins are legal
@@ -328,6 +319,5 @@ def enrich_with_static(
     left); a right/full outer against a static side would need the
     engine to re-emit history and is rejected by Spark itself.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return stream.join(d, on, how)
+    return stream.join(F.broadcast(dim), on, how)
 

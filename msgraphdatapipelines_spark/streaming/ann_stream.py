@@ -64,8 +64,6 @@ def compact_ann_index(
     index_dir: str,
     snapshot_root: str,
     label_lists_path: str | None = None,
-    label_col: str = "label",
-    cluster_col: str | None = "cent",
     cluster_files: int | None = None,
     models_root: str | None = None,
     versioned_label_lists: bool = False,
@@ -90,8 +88,8 @@ def compact_ann_index(
     pointer flips, so a reader never resolves a newer snapshot with an
     older summary.
 
-    ``cluster_col`` (late r12): the compacted view is range-repartitioned
-    and sorted by the coarse list id and published WITH a zone-map
+    Clustering (late r12): the compacted view is range-repartitioned
+    and sorted by the coarse list id ``cent`` and published WITH a zone-map
     manifest (``write_snapshot(zonemap_cols=…)``), so each file covers a
     narrow contiguous slice of lists — the contiguous-inverted-list
     layout every production ANN store keeps, here expressed as plain
@@ -139,9 +137,9 @@ def compact_ann_index(
 
     view = read_ann_index(spark, index_dir)
     wrote_labels = False
-    if label_lists_path is not None and label_col in view.columns:
+    if label_lists_path is not None and "label" in view.columns:
         stage = f"{label_lists_path}.stage.{uuid.uuid4().hex[:8]}"
-        view.groupBy(label_col, "cent").agg(F.count("*").alias("n")).write.parquet(
+        view.groupBy("label", "cent").agg(F.count("*").alias("n")).write.parquet(
             stage
         )
         old = f"{label_lists_path}.old.{uuid.uuid4().hex[:8]}"
@@ -153,13 +151,13 @@ def compact_ann_index(
     if models is not None:
         models_b = json.dumps(models).encode()
         commit_file(fs, hpath, f"{models_root}/models.v{new_v}.json", models_b, replace=True)
-    if cluster_col is not None and cluster_col in view.columns:
+    if "cent" in view.columns:
         view = (
-            view.repartitionByRange(cluster_files, F.col(cluster_col))
+            view.repartitionByRange(cluster_files, F.col("cent"))
             if cluster_files
-            else view.repartitionByRange(F.col(cluster_col))
-        ).sortWithinPartitions(cluster_col)
-        pub_v = sinks.write_snapshot(view, snapshot_root, zonemap_cols=[cluster_col])
+            else view.repartitionByRange(F.col("cent"))
+        ).sortWithinPartitions("cent")
+        pub_v = sinks.write_snapshot(view, snapshot_root, zonemap_cols=["cent"])
     else:
         pub_v = sinks.write_snapshot(view, snapshot_root)
     if pub_v != new_v:

@@ -150,22 +150,18 @@ def _first_seen_fn(
     state.setTimeoutTimestamp(max(min(t2) + FIRST_SEEN_TTL_MS, wm + 1))
 
 
-def first_seen_dedup(
-    events: DataFrame, watermark: str = "1 hour", n_buckets: int | None = None
-) -> DataFrame:
+def first_seen_dedup(events: DataFrame) -> DataFrame:
     """Apply the first-occurrence dedup state machine to a stream keyed by
     (user_id, event_type), with an event-time TTL bounding state size.
-    The watermark on ``ts`` drives both late-data semantics and timer
-    firing (EventTimeTimeout requires one).
+    The 1-hour watermark on ``ts`` drives both late-data semantics and
+    timer firing (EventTimeTimeout requires one).
 
-    ``n_buckets`` shards the state: the stream is grouped by
-    ``pmod(xxhash64(user_id, event_type), n_buckets)`` and each group runs
-    the per-key state machine vectorized over its shard (module docstring).
-    Default ``4 × defaultParallelism`` — scales with the cluster, keeps
-    every core busy, and amortizes the per-group Python cost over
-    keyspace/n_buckets keys.  A deployment that knows its keyspace should
-    pass it explicitly: per-bucket state is O(keys/n_buckets), so size
-    n_buckets to keep a bucket's array state at ~10⁴-10⁵ keys.  Per-key
+    The state is sharded: the stream is grouped by
+    ``pmod(xxhash64(user_id, event_type), n)`` with ``n = 4 ×
+    defaultParallelism`` and each group runs the per-key state machine
+    vectorized over its shard (module docstring) — scales with the
+    cluster, keeps every core busy, and amortizes the per-group Python
+    cost over keyspace/n keys; per-bucket state is O(keys/n).  Per-key
     EMISSIONS are bucket-count-independent (min is associative); only
     eviction coarsens: a key is pruned at the first bucket-timer firing at
     or after its own last-seen + TTL, instead of exactly at it.
@@ -174,17 +170,17 @@ def first_seen_dedup(
     boundary (guide §4: project before an opaque function).
 
     Watermark caveat for batch-equality drains (r2 ADVICE): events more
-    than ``watermark`` behind the advancing watermark are dropped BEFORE
+    than the watermark behind the advancing watermark are dropped BEFORE
     the state function sees them, so the streamed result equals the batch
     GROUP-BY-min only when the input arrives in one micro-batch (the
-    registered oracle drain: one file, availableNow) or when ``watermark``
+    registered oracle drain: one file, availableNow) or when the watermark
     is at least the input's event-time span.  A multi-batch, out-of-order
     replay with a narrow watermark can silently miss the true minimum
     event_id — that is correct streaming semantics (late data is late),
     not an engine bug, but oracle drains must account for it.
     """
-    n = n_buckets or 4 * events.sparkSession.sparkContext.defaultParallelism
-    keyed = events.withWatermark("ts", watermark).select(
+    n = 4 * events.sparkSession.sparkContext.defaultParallelism
+    keyed = events.withWatermark("ts", "1 hour").select(
         "user_id",
         "event_type",
         "event_id",

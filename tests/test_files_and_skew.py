@@ -124,23 +124,6 @@ def test_sql_surface_views_and_query(spark, sf_dir):
     assert ts_type.startswith("timestamp")  # µs timestamp (tz or ntz), not raw nanos long
 
 
-def test_scale_conf_arithmetic():
-    """r8 session.scale_conf: partition counts scale with input size,
-    scan slices shrink under small executors, and the 100 TB point lands
-    where the design notes claim (~800k initial shuffle partitions for
-    AQE to coalesce)."""
-    from msgraphdatapipelines_spark.session import scale_conf
-
-    c = scale_conf(100 << 40)  # 100 TB, 8 GiB executors
-    assert int(c["spark.sql.shuffle.partitions"]) == 819200
-    assert int(c["spark.sql.files.maxPartitionBytes"]) == 128 << 20  # cap not binding
-    small = scale_conf(100 << 40, executor_mem_bytes=2 << 30)  # starved executors
-    assert int(small["spark.sql.files.maxPartitionBytes"]) < (128 << 20)
-    tiny = scale_conf(1 << 30)
-    assert int(tiny["spark.sql.shuffle.partitions"]) == 200  # floor holds
-    assert int(c["spark.sql.adaptive.advisoryPartitionSizeInBytes"]) == 128 << 20
-
-
 def test_load_spread_rekeys_a_replaced_file(spark, tmp_path):
     """The load_spread memo keys on the file identity (size, mtime_ns) that
     load's scan memo keys on: after the parquet file is replaced, the

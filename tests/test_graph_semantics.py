@@ -188,10 +188,9 @@ def test_triangle_stats_crafted_graph(spark):
     assert row["clustering_coeff"] == round(12 / 15, 6)
 
 
-def test_cooccurrence_edges_cap_excludes_hub_groups(spark):
-    """late r10: the max_items_per_group cap — a hub group contributes
-    no edges when over the cap; under the cap the derivation equals the
-    uncapped one; duplicate memberships collapse first."""
+def test_cooccurrence_edges_collapse_duplicate_memberships(spark):
+    """late r10: every group contributes C(distinct items, 2) edges, and
+    duplicate memberships collapse first."""
     from msgraphdatapipelines_spark.operators.graph import cooccurrence_edges
 
     rows = (
@@ -202,12 +201,4 @@ def test_cooccurrence_edges_cap_excludes_hub_groups(spark):
     df = spark.createDataFrame(rows, "g string, i long")
     full = {tuple(r) for r in cooccurrence_edges(df, "g", "i").collect()}
     assert len(full) == 3 + 45  # C(3,2) + C(10,2)
-    capped = {
-        tuple(r)
-        for r in cooccurrence_edges(df, "g", "i", max_items_per_group=5).collect()
-    }
-    assert capped == {(1, 2), (1, 3), (2, 3)}  # hub gone, small intact
-    assert {
-        tuple(r)
-        for r in cooccurrence_edges(df, "g", "i", max_items_per_group=10).collect()
-    } == full
+    assert {(1, 2), (1, 3), (2, 3)} <= full

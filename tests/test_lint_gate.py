@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import ast
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 from lint_waivers import WAIVERS, check_lint
@@ -188,31 +189,26 @@ def _bindings(tree: ast.AST, mod: str | None, is_pkg: bool, modules: set[str]) -
     return binds
 
 
-def _package_graph() -> tuple[dict[str, int], dict[str, set[str]], set[str]]:
-    """``("module:name" -> lines)`` for every top-level definition, each
-    definition's outgoing edges, and the definitions that import-time code,
-    registered queries and the engine's callers reach.  A reference
-    resolves through its module's own definitions and imports first and
-    falls back to every definition of that bare name only when neither
-    binds it."""
-    paths = sorted(PKG.rglob("*.py"))
-    modules = {_module_of(p)[0] for p in paths}
-    lines: dict[str, int] = {}
-    refs: dict[str, tuple[str, set]] = {}
-    scopes: list[tuple[str | None, set]] = []  # (module, refs) that are roots
-    binds: dict[str | None, dict] = {}
-    for path in paths:
-        mod, is_pkg = _module_of(path)
-        tree = ast.parse(path.read_text(encoding="utf-8"))
+def _package_index(pkg: dict[str, tuple[bool, str]], callers: list[str]) -> SimpleNamespace:
+    """Parse the package (``module -> (is_pkg, source)``) and the engine's
+    callers, and bind their names.  ``resolve(scope, ref)`` maps a
+    ``_refs`` reference made in a module or caller scope (``"<i>"``) to the
+    top-level definitions it means: through the scope's own definitions and
+    imports first, and to every definition of that bare name only when
+    neither binds it."""
+    modules = set(pkg)
+    ix = SimpleNamespace(defs={}, lines={}, refs={}, scopes=[], binds={}, trees={})
+    for mod, (is_pkg, src) in sorted(pkg.items()):
+        tree = ix.trees[mod] = ast.parse(src)
         docs = _docstrings(tree)
-        binds[mod] = _bindings(tree, mod, is_pkg, modules)
+        ix.binds[mod] = _bindings(tree, mod, is_pkg, modules)
         for st in tree.body:
             if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 names, start = [st.name], min([st.lineno] + [d.lineno for d in st.decorator_list])
                 for d in st.decorator_list:  # decorators run at import
-                    scopes.append((mod, _refs(d, docs)))
+                    ix.scopes.append((mod, _refs(d, docs)))
                     if isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register":
-                        scopes.append((mod, {("n", st.name)}))
+                        ix.scopes.append((mod, {("n", st.name)}))
                 body = [n for n in ast.iter_child_nodes(st) if n not in st.decorator_list]
             elif isinstance(st, (ast.Assign, ast.AnnAssign)) and st.value is not None:
                 targets = st.targets if isinstance(st, ast.Assign) else [st.target]
@@ -223,33 +219,31 @@ def _package_graph() -> tuple[dict[str, int], dict[str, set[str]], set[str]]:
             else:
                 names = []
             if not names:
-                scopes.append((mod, _refs(st, docs)))
+                ix.scopes.append((mod, _refs(st, docs)))
                 continue
             r = set().union(*(_refs(n, docs) for n in body))
             for name in names:
-                lines[f"{mod}:{name}"] = st.end_lineno - start + 1
-                refs[f"{mod}:{name}"] = (mod, r)
-    callers = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
-    callers += sorted((ROOT / "tools").glob("*.py"))
-    callers += [p for p in sorted((ROOT / "perfbench").rglob("*.py")) if "tests" not in p.parts]
-    for i, path in enumerate(callers):
-        tree = ast.parse(path.read_text(encoding="utf-8"))
-        binds[f"<{i}>"] = _bindings(tree, None, False, modules)
-        scopes.append((f"<{i}>", _refs(tree, _docstrings(tree))))
+                ix.defs[f"{mod}:{name}"] = st
+                ix.lines[f"{mod}:{name}"] = st.end_lineno - start + 1
+                ix.refs[f"{mod}:{name}"] = (mod, r)
+    for i, src in enumerate(callers):
+        tree = ix.trees[f"<{i}>"] = ast.parse(src)
+        ix.binds[f"<{i}>"] = _bindings(tree, None, False, modules)
+        ix.scopes.append((f"<{i}>", _refs(tree, _docstrings(tree))))
 
     by_name: dict[str, set[str]] = {}
-    for key in lines:
+    for key in ix.lines:
         by_name.setdefault(key.split(":")[1], set()).add(key)
 
     def name_in(mod: str, name: str, seen: frozenset = frozenset()) -> set[str] | None:
         """Definitions ``name`` means inside ``mod``; None when unbound."""
-        if f"{mod}:{name}" in lines:
+        if f"{mod}:{name}" in ix.lines:
             return {f"{mod}:{name}"}
-        if name not in binds.get(mod, {}) or (mod, name) in seen:
+        if name not in ix.binds.get(mod, {}) or (mod, name) in seen:
             return None
         out: set[str] = set()
-        for t in binds[mod][name]:
-            if t[0] == "name" and t[1] in binds:
+        for t in ix.binds[mod][name]:
+            if t[0] == "name" and t[1] in ix.binds:
                 out |= name_in(t[1], t[2], seen | {(mod, name)}) or set()
         return out
 
@@ -257,9 +251,9 @@ def _package_graph() -> tuple[dict[str, int], dict[str, set[str]], set[str]]:
         if ref[0] == "n":
             got = name_in(mod, ref[1])
             return by_name.get(ref[1], set()) if got is None else got
-        if ref[0] == "a" and ref[1] in binds.get(mod, {}):
+        if ref[0] == "a" and ref[1] in ix.binds.get(mod, {}):
             out: set[str] = set()
-            for t in binds[mod][ref[1]]:
+            for t in ix.binds[mod][ref[1]]:
                 if t[0] == "mod":
                     out |= name_in(t[1], ref[2]) or set()
                 elif t[0] == "name":  # a class or object: unknown member
@@ -267,9 +261,31 @@ def _package_graph() -> tuple[dict[str, int], dict[str, set[str]], set[str]]:
             return out
         return by_name.get(ref[-1], set())
 
-    edges = {k: set().union(*(resolve(m, r) for r in rs)) for k, (m, rs) in refs.items()}
-    roots = set().union(*(resolve(m, r) for m, rs in scopes for r in rs))
-    return lines, edges, roots
+    ix.resolve = resolve
+    return ix
+
+
+def _engine_sources() -> tuple[dict[str, tuple[bool, str]], list[str]]:
+    """The package's modules and the engine's callers: ``tools/``,
+    ``perfbench/`` (not its tests), ``bench.py`` and ``__spark_entry__.py``."""
+    pkg = {}
+    for path in sorted(PKG.rglob("*.py")):
+        mod, is_pkg = _module_of(path)
+        pkg[mod] = (is_pkg, path.read_text(encoding="utf-8"))
+    callers = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    callers += sorted((ROOT / "tools").glob("*.py"))
+    callers += [p for p in sorted((ROOT / "perfbench").rglob("*.py")) if "tests" not in p.parts]
+    return pkg, [p.read_text(encoding="utf-8") for p in callers]
+
+
+def _package_graph() -> tuple[dict[str, int], dict[str, set[str]], set[str]]:
+    """``("module:name" -> lines)`` for every top-level definition, each
+    definition's outgoing edges, and the definitions that import-time code,
+    registered queries and the engine's callers reach."""
+    ix = _package_index(*_engine_sources())
+    edges = {k: set().union(*(ix.resolve(m, r) for r in rs)) for k, (m, rs) in ix.refs.items()}
+    roots = set().union(*(ix.resolve(m, r) for m, rs in ix.scopes for r in rs))
+    return ix.lines, edges, roots
 
 
 def _closure(edges: dict[str, set[str]], keys: set[str]) -> set[str]:
@@ -323,3 +339,158 @@ def test_no_unused_module_imports():
                 where = f"{path.relative_to(ROOT)}:{st.lineno}"
                 unused += [f"{where} {n}" for n in names if n not in used]
     assert not unused, "unused module-level imports:\n  " + "\n  ".join(unused)
+
+
+# --- option guard -----------------------------------------------------------
+
+# "module:func(param)" -> why a defaulted parameter that no engine caller
+# sets stays an option: a fake that tests inject, a deployment setting
+# (credentials, timeouts, paths) or a SURVEY.md §2 op id.  A reason that
+# defers the decision ("pending") fails, and so does an entry whose option
+# is gone or that a root already sets.
+KEEP_OPTIONS: dict[str, str] = {
+    "cache:serve_cached(base_dir)": "deployment setting: the result-cache directory",
+    "operators.dedup:lsh_dedup_clusters(checkpoint)": "deployment setting: 'reliable' pins survive executor loss",
+    "operators.graph:transitive_reachability(checkpoint)": "deployment setting: 'reliable' pins survive executor loss",
+    "operators.profile:profile_columns(exact_distinct)": "deployment setting: HLL counts where exact distinct counts cannot fit",
+    "operators.project:conform(strict)": "T7 input validation: the NOT NULL id of Prepare-SQLDatabase.sql:9",
+    "pipelines:Pipeline(constraints)": "input validation: the quarantine gate between transform and sink",
+    "pipelines:Pipeline(fk_broadcast_threshold_rows)": "deployment setting: sized to executor memory",
+    "queries.dedup:prefix_index_compact(_test_hook_after_list)": "fake: tests publish a straggler batch here",
+    "queries.dedup:prefix_index_compact(_test_hook_before_commit)": "fake: tests crash or stall the compact here",
+    "queries.text:lexicon_compact(_test_hook_before_commit)": "fake: tests stall the compact here",
+    "sinks:write_bucketed(path)": "L6 business-key layout: external table location",
+    "sinks:write_bucketed(sort_col)": "L6 business-key layout: sorted buckets",
+    "sources.files:write_csv(mode)": "L2/L3 file sink: truncate-and-load or append",
+    "sources.files:write_json(mode)": "L2/L3 file sink: truncate-and-load or append",
+    "sources.files:write_orc(mode)": "L2/L3 file sink: truncate-and-load or append",
+    "sources.rest:_fence_raise(now)": "fake: tests inject the clock",
+    "sources.rest:_fence_wait(now)": "fake: tests inject the clock",
+    "sources.rest:fetch_with_shared_throttle(fetcher)": "fake: tests inject the fetcher",
+    "sources.rest:fetch_with_shared_throttle(retry)": "fake: tests inject the retry budget",
+    "sources.rest:fetch_with_shared_throttle(sleeper)": "fake: tests inject the sleep clock",
+    "sources.rest:http_fetcher(timeout)": "deployment setting: HTTP timeout",
+    "sources.rest:http_fetcher(token)": "deployment setting: S6 bearer credential",
+    "sources.rest:read_odata(fetcher)": "deployment setting: S1 live GET (http_fetcher)",
+    "sources.rest:read_odata(retry)": "deployment setting: S4 retry budget",
+    "sources.rest:read_odata(sleeper)": "S4 retry clock",
+    "sources.rest:read_odata_delta(fetcher)": "fake: tests inject failing and remote fetchers",
+    "sources.rest:read_odata_delta(retry)": "deployment setting: S4 retry budget",
+    "sources.rest:read_odata_delta(sleeper)": "S4 retry clock",
+}
+
+
+def _is_dataclass(st: ast.AST) -> bool:
+    return isinstance(st, ast.ClassDef) and any(
+        getattr(d, "id", None) == "dataclass" or getattr(getattr(d, "func", None), "id", None) == "dataclass"
+        for d in st.decorator_list
+    )
+
+
+def _params(st: ast.AST) -> tuple[list[str], list[str], list[str]]:
+    """A function's or dataclass's parameters: positional order, every
+    name a keyword can pass, and the defaulted ones (the options)."""
+    if _is_dataclass(st):
+        fields = [f for f in st.body if isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)]
+        names = [f.target.id for f in fields]
+        return names, names, [f.target.id for f in fields if f.value is not None]
+    if not isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        return [], [], []
+    a = st.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    kw = [p.arg for p in a.args + a.kwonlyargs]
+    opts = pos[len(pos) - len(a.defaults) :]
+    opts += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return pos, kw, opts
+
+
+def _set_by(ix: SimpleNamespace, scope: str, tree: ast.AST) -> set[str]:
+    """Options that the calls in ``tree`` set: by keyword, by position, or
+    by forwarding ``*args``/``**kwargs``.  A call resolves by name through
+    ``scope``'s bindings, or as ``module.func`` through a module alias."""
+    out: set[str] = set()
+    for call in ast.walk(tree):
+        if not isinstance(call, ast.Call):
+            continue
+        f = call.func
+        if isinstance(f, ast.Name):
+            keys = ix.resolve(scope, ("n", f.id))
+        elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+            mods = [t for t in ix.binds.get(scope, {}).get(f.value.id, ()) if t[0] == "mod"]
+            keys = ix.resolve(scope, ("a", f.value.id, f.attr)) if mods else set()
+        else:
+            continue
+        for key in keys:
+            pos, kw, _ = _params(ix.defs[key])
+            passed: set[str] = set()
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    passed |= set(pos[i:])
+                    break
+                passed |= set(pos[i : i + 1])
+            for k in call.keywords:
+                passed |= set(kw) if k.arg is None else {k.arg}
+            out |= {f"{key}({p})" for p in passed}
+    return out
+
+
+def _option_census(
+    pkg: dict[str, tuple[bool, str]], callers: list[str], tests: list[str], keep: set[str]
+) -> tuple[set[str], set[str]]:
+    """Every option of the package, and those a root sets: a call from
+    package code or an engine caller, or a test call to a ``keep`` API."""
+    ix = _package_index(pkg, callers)
+    options = {f"{k}({p})" for k, st in ix.defs.items() for p in _params(st)[2]}
+    done = set().union(*(_set_by(ix, s, ix.trees[s]) for s in ix.trees))
+    modules = set(pkg)
+    for i, src in enumerate(tests):
+        tree = ast.parse(src)
+        ix.binds[f"<t{i}>"] = _bindings(tree, None, False, modules)
+        done |= {o for o in _set_by(ix, f"<t{i}>", tree) if o.split("(")[0] in keep}
+    return options, done & options
+
+
+@pytest.mark.quick
+def test_no_unset_options():
+    """Every defaulted parameter of a top-level package definition (and
+    every defaulted dataclass field) is set by some engine caller, or has a
+    ``KEEP_OPTIONS`` reason.  An option nothing sets is a constant: inline
+    it, with the branches only its other values selected."""
+    tests = [p.read_text(encoding="utf-8") for p in sorted((ROOT / "tests").glob("*.py"))]
+    options, done = _option_census(*_engine_sources(), tests, set(KEEP))
+    unset = sorted(options - done - set(KEEP_OPTIONS))
+    stale = sorted(k for k in KEEP_OPTIONS if k not in options or k in done)
+    pending = sorted(k for k, why in KEEP_OPTIONS.items() if why.startswith("pending"))
+    assert not unset, (
+        f"{len(unset)} options are set by no query, pipeline, tool or benchmark; "
+        "make each a constant or give it a KEEP_OPTIONS reason:\n  " + "\n  ".join(unset)
+    )
+    assert not stale, f"stale KEEP_OPTIONS entries (option gone or set by a root): {stale}"
+    assert not pending, f"KEEP_OPTIONS entries with no lasting reason: {pending}"
+
+
+_SNIPPET = '''
+def f(a, k=1, *, j=2):
+    return a
+'''
+
+
+@pytest.mark.quick
+@pytest.mark.parametrize(
+    "pkg_extra, caller, test, keep, expect",
+    [
+        ("", "from msgraphdatapipelines_spark.m import f\nf(0, k=3)", "", set(), {"k"}),
+        ("", "from msgraphdatapipelines_spark.m import f\nf(0, 3)", "", set(), {"k"}),
+        ("def g(*a, **kw):\n    return f(*a, **kw)\n", "", "", set(), {"k", "j"}),
+        ("", "from msgraphdatapipelines_spark import m as mm\nmm.f(0, j=1)", "", set(), {"j"}),
+        ("", "from msgraphdatapipelines_spark.m import f as ff\nff(0, j=1)", "", set(), {"j"}),
+        ("", "", "from msgraphdatapipelines_spark.m import f\nf(0, k=1)", set(), set()),
+        ("", "", "from msgraphdatapipelines_spark.m import f\nf(0, k=1)", {"m:f"}, {"k"}),
+    ],
+    ids=["keyword", "positional", "kwargs-forward", "module-alias", "import-alias", "test-only", "test-keep"],
+)
+def test_option_census_resolution(pkg_extra, caller, test, keep, expect):
+    pkg = {"": (True, ""), "m": (False, _SNIPPET + pkg_extra)}
+    options, done = _option_census(pkg, [caller], [test], keep)
+    assert options == {"m:f(k)", "m:f(j)"}
+    assert done == {f"m:f({p})" for p in expect}

@@ -364,7 +364,7 @@ def test_point_in_time_join_broadcasts_small_dim(spark, sf_dir):
             F.lit(None).cast("timestamp").alias("valid_to"),
         )
     )
-    df = point_in_time_join(ev, hist, "user_id", "c_custkey", "ts", how="inner")
+    df = point_in_time_join(ev, hist, "user_id", "c_custkey", "ts")
     assert plans.num_broadcasts(df) >= 1
 
 

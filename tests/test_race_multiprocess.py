@@ -551,7 +551,7 @@ def test_race_erasure_vs_append_lexicon_two_processes(tmp_path, spark, monkeypat
 
     from msgraphdatapipelines_spark.queries import load
     from msgraphdatapipelines_spark.queries.text import (
-        ensure_standing_lexicon,
+        lexicon_append_batch,
         lexicon_compact,
         lexicon_root,
         read_lexicon,
@@ -567,7 +567,8 @@ def test_race_erasure_vs_append_lexicon_two_processes(tmp_path, spark, monkeypat
     monkeypatch.setattr(tempfile, "tempdir", str(artdir))
     docs = load(spark, str(sf), "documents")
     root = lexicon_root(str(sf))
-    ensure_standing_lexicon(spark, str(sf), docs=docs.filter(F.col("doc_id") < 150))
+    lexicon_append_batch(spark, root, docs.filter(F.col("doc_id") < 150), bid=0)
+    lexicon_compact(spark, root)
 
     _race("lex_erasure", str(sf), tmp_path, expect_equal=False)
 
@@ -635,9 +636,8 @@ def test_sigkill_mid_compact_lexicon_old_generation_stays_live(
     monkeypatch.setattr(tempfile, "tempdir", str(artdir))
     docs = load(spark, str(sf), "documents")
     root = QT.lexicon_root(str(sf))
-    QT.ensure_standing_lexicon(
-        spark, str(sf), docs=docs.filter(F.col("doc_id") < 150)
-    )
+    QT.lexicon_append_batch(spark, root, docs.filter(F.col("doc_id") < 150), bid=0)
+    QT.lexicon_compact(spark, root)
     QT.lexicon_append_batch(spark, root, docs.filter(F.col("doc_id") >= 150), bid=1)
     fs, hpath = sinks._fs_for(spark, root)
     gen_before = _gs.current_gen(fs, hpath, root)

@@ -349,7 +349,7 @@ def test_delta_failed_read_does_not_advance_token(spark, delta_pages, tmp_path):
     assert link == second
 
 
-def test_delta_scale_path_single_fetch_with_spill_dir(spark, tmp_path):
+def test_delta_scale_path_single_fetch_with_spill_dir(spark, tmp_path, monkeypatch):
     """With a spill_dir, the >threshold delta sync fetches every page
     exactly ONCE: the deltaLink walk spills each body and the spilled
     files are read back on the JVM instead of re-walking the chain.  The
@@ -376,8 +376,9 @@ def test_delta_scale_path_single_fetch_with_spill_dir(spark, tmp_path):
 
     spill = tmp_path / "spill"
     spill.mkdir()
+    monkeypatch.setattr(rest, "SPILL_PAGES", 2)
     df, link = rest.read_odata_delta(
-        spark, base, SCHEMA, fetcher=fetch, datasource_page_threshold=2,
+        spark, base, SCHEMA, fetcher=fetch,
         spill_dir=str(spill),
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -420,7 +421,7 @@ DEVICE = T.StructType(
 )
 
 
-def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
+def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path, monkeypatch):
     """A page decodes the same way whichever lane of ``read_odata_delta``
     it lands on: the spilled-file scale lane (past the page threshold,
     ``spill_dir`` set), the driver lane, and a walk past the threshold
@@ -485,16 +486,14 @@ def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
 
     spill = tmp_path / "spill"
     spill.mkdir()
-    spilled, link = rest.read_odata_delta(
-        spark, str(paths[0]), DEVICE, datasource_page_threshold=2, spill_dir=str(spill)
-    )
+    monkeypatch.setattr(rest, "SPILL_PAGES", 2)
+    spilled, link = rest.read_odata_delta(spark, str(paths[0]), DEVICE, spill_dir=str(spill))
     plan = spilled._jdf.queryExecution().executedPlan().toString()
     assert "FileScan text" in plan and "BatchScan odata" not in plan
     assert rows(spilled) == expected and link == "tok-devices"
 
-    held, link2 = rest.read_odata_delta(
-        spark, str(paths[0]), DEVICE, datasource_page_threshold=100
-    )
+    monkeypatch.setattr(rest, "SPILL_PAGES", 100)
+    held, link2 = rest.read_odata_delta(spark, str(paths[0]), DEVICE)
     plan = held._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan and "Exchange" not in plan
     lineage = held._jdf.queryExecution().toRdd().toDebugString()
@@ -502,9 +501,8 @@ def test_delta_spill_lane_decodes_like_driver_lane(spark, tmp_path):
     assert rows(held) == expected and link2 == "tok-devices"
 
     # past the threshold with no spill_dir: the walk finishes on the driver
-    walked, link3 = rest.read_odata_delta(
-        spark, str(paths[0]), DEVICE, datasource_page_threshold=2
-    )
+    monkeypatch.setattr(rest, "SPILL_PAGES", 2)
+    walked, link3 = rest.read_odata_delta(spark, str(paths[0]), DEVICE)
     plan = walked._jdf.queryExecution().executedPlan().toString()
     assert "BatchScan odata" not in plan and "FileScan text" not in plan
     assert rows(walked) == expected and link3 == "tok-devices"
@@ -527,7 +525,7 @@ def test_429_honors_retry_after_hint():
             raise rest.ThrottledError("u", retry_after=9999.0)  # hostile → cap
         return "ok"
 
-    policy = rest.RetryPolicy(max_retries=5, sleep_s=30.0, max_retry_after_s=300.0)
+    policy = rest.RetryPolicy(max_retries=5, sleep_s=30.0)  # Retry-After capped at 300 s
     assert policy.run(flaky, sleeper=sleeps.append) == "ok"
     assert sleeps == [7.5, 30.0, 300.0]
 

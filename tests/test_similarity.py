@@ -45,7 +45,7 @@ def test_ann_recall_ladder(spark, sf_dir):
     lsh8 = _pairs(S.lsh_topk(*args, k=K, num_planes=8))
     lsh4 = _pairs(S.lsh_topk(*args, k=K, num_planes=4))
     multi8 = _pairs(S.lsh_topk(*args, k=K, num_planes=8, multi_probe=True))
-    ivf = _pairs(S.ivf_topk(*args, k=K, n_centroids=8, nprobe=2))
+    ivf = _pairs(S.ivf_topk(*args, k=K, nprobe=2))
 
     r_lsh8, r_lsh4 = _recall(lsh8, exact), _recall(lsh4, exact)
     r_multi8, r_ivf = _recall(multi8, exact), _recall(ivf, exact)
@@ -143,39 +143,6 @@ def test_pq_recall_ladder_and_compression(spark, sf_dir):
     assert all(0 <= j < 16 for j in row["code"])  # ks range
 
 
-def test_pq_training_reduces_quantization_error(spark, sf_dir):
-    """Lloyd rounds on the exploded subspace formulation must not increase
-    total quantization error (sum of d2 to the assigned codeword)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-    def qerr(books):
-        enc = S.pq_encode(emb, "vec_id", "embedding", books)
-        v = F.col("embedding").cast("array<double>")
-        norm = (
-            emb.select(F.col("vec_id").alias("cid"), v.alias("_v"))
-            .withColumn("_n", F.sqrt(S.seq_dot(F.col("_v"), F.col("_v"))))
-            .filter(F.col("_n") > 0)
-            .select("cid", F.transform(F.col("_v"), lambda x: x / F.col("_n")).alias("u"))
-        )
-        j = enc.join(norm, "cid")
-        err = F.lit(0.0)
-        for s in range(8):
-            sub = F.slice(F.col("u"), s * 8 + 1, 8)
-            # reconstruct: pick codeword by code[s] from inline books
-            cws = F.array(*[F.array(*[F.lit(x) for x in cw]) for cw in books[s]])
-            cw = F.element_at(cws, F.element_at(F.col("code"), s + 1) + 1)
-            err = err + F.aggregate(
-                F.zip_with(sub, cw, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        return j.agg(F.sum(err)).collect()[0][0]
-
-    seed_err = qerr(S.pq_codebooks(emb, "vec_id", "embedding", iters=0))
-    trained_err = qerr(S.pq_codebooks(emb, "vec_id", "embedding", iters=2))
-    assert trained_err <= seed_err * 1.0001
-
-
 @pytest.mark.heavy
 def test_ivf_pq_composed_prunes_and_recalls(spark, sf_dir):
     """r6 IVF+PQ: candidates come only from probed lists (⊆ the pure-ADC
@@ -195,12 +162,12 @@ def test_ivf_pq_composed_prunes_and_recalls(spark, sf_dir):
     trained = {"centroids": cents, "codebooks": books}
 
     exact = _pairs(S.brute_force_topk(*args, k=K))
-    composed = _pairs(S.ivf_pq_topk(*args, k=K, n_centroids=8, nprobe=2, **trained))
+    composed = _pairs(S.ivf_pq_topk(*args, k=K, nprobe=2, **trained))
     composed_rr = _pairs(
-        S.ivf_pq_topk(*args, k=K, n_centroids=8, nprobe=2, rerank=50, **trained)
+        S.ivf_pq_topk(*args, k=K, nprobe=2, rerank=50, **trained)
     )
     full_probe = _pairs(
-        S.ivf_pq_topk(*args, k=K, n_centroids=8, nprobe=8, rerank=50, **trained)
+        S.ivf_pq_topk(*args, k=K, nprobe=8, rerank=50, **trained)
     )
 
     # widening the probe set can only help (nprobe=8 == scan all lists ==
@@ -227,45 +194,48 @@ def test_assignment_literal_vs_table_equivalence(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = S.kmeans_centroids(emb, "vec_id", "embedding", k=8, iters=2)
 
-    lit = {
-        r["_id"]: r["cluster_id"]
-        for r in S.assign_nearest_centroid(
-            emb, "vec_id", "embedding", cents, assign="literal"
-        ).collect()
-    }
-    tab = {
-        r["_id"]: r["cluster_id"]
-        for r in S.assign_nearest_centroid(
-            emb, "vec_id", "embedding", cents, assign="table"
-        ).collect()
-    }
+    def assign(use_table):
+        got = _assign(emb, "vec_id", "embedding", cents, use_table).collect()
+        return {r["_id"]: r["cluster_id"] for r in got}
+
+    lit, tab = assign(False), assign(True)
     assert lit == tab and len(lit) == emb.count()
+
+
+def _assign(df, id_col, vec_col, cents, use_table):
+    """Nearest-centroid assignment on a chosen plan (the public operator
+    picks the table plan only above 64 centroids)."""
+    base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v"))
+    return S._with_nearest_centroid(base, "_v", cents, use_table, "cluster_id")
 
 
 def test_assignment_table_tie_breaks_to_lowest_ci(spark):
     """Duplicate centroids: both paths must pick the LOWEST centroid id."""
     df = spark.createDataFrame([(1, [1.0, 0.0])], "id long, v array<double>")
     cents = [(0, [5.0, 5.0]), (1, [1.0, 0.0]), (2, [1.0, 0.0])]
-    for mode in ("literal", "table"):
-        got = S.assign_nearest_centroid(df, "id", "v", cents, assign=mode).collect()
-        assert got[0]["cluster_id"] == 1, mode
+    for use_table in (False, True):
+        got = _assign(df, "id", "v", cents, use_table).collect()
+        assert got[0]["cluster_id"] == 1, use_table
 
 
-def test_semantic_dedup_table_assignment_same_result(spark, sf_dir):
-    """semantic_dedup(assign='table') ≡ semantic_dedup(assign='literal'):
+def test_semantic_dedup_table_assignment_same_result(spark, sf_dir, monkeypatch):
+    """semantic_dedup on the table assignment plan ≡ on the literal plan:
     identical (kept, cluster_id) per vector on the fixture corpus."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
     cents = S.kmeans_centroids(emb, "vec_id", "embedding", k=4, iters=1)
 
-    def snap(mode):
+    def snap():
         return {
             r["vec_id"]: (r["cluster_id"], r["kept"])
-            for r in S.semantic_dedup(
-                emb, "vec_id", "embedding", cents, tau=0.5, assign=mode
-            ).collect()
+            for r in S.semantic_dedup(emb, "vec_id", "embedding", cents, tau=0.5).collect()
         }
 
-    assert snap("literal") == snap("table")
+    literal = snap()  # 4 centroids: the literal plan
+    plan = S._with_nearest_centroid
+    monkeypatch.setattr(
+        S, "_with_nearest_centroid", lambda df, col, cs, _table, out: plan(df, col, cs, True, out)
+    )
+    assert snap() == literal
 
 
 @pytest.mark.heavy
@@ -301,8 +271,8 @@ def test_recall_at_k_operator_semantics_and_ladder(spark, sf_dir):
 
     # the composed IVF+PQ rung joins the ladder via the operator: widening
     # the probe set can only help
-    r2 = micro(S.ivf_pq_topk(*args, k=K, n_centroids=8, nprobe=2, rerank=50))
-    r8 = micro(S.ivf_pq_topk(*args, k=K, n_centroids=8, nprobe=8, rerank=50))
+    r2 = micro(S.ivf_pq_topk(*args, k=K, nprobe=2, rerank=50))
+    r8 = micro(S.ivf_pq_topk(*args, k=K, nprobe=8, rerank=50))
     assert r8 >= r2 > 0.0
 
 

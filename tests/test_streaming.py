@@ -252,7 +252,7 @@ def test_interval_join_matches_across_batches_then_evicts(spark, tmp_path):
     assert pairs == [(1, 2), (1, 3)]
 
 
-def test_dedup_within_watermark_re_emits_after_eviction(spark, tmp_path):
+def test_dedup_within_watermark_re_emits_after_eviction(spark, tmp_path, monkeypatch):
     """dropDuplicatesWithinWatermark contract: duplicates within the delay
     are dropped; once the watermark evicts the key's state, the same key
     seen again is a NEW record (re-emitted) — bounded state, by design."""
@@ -262,9 +262,9 @@ def test_dedup_within_watermark_re_emits_after_eviction(spark, tmp_path):
     _write_events(str(d / "a1.parquet"), [(1, base + "10:00:00", 1, "click")])
 
     ev = ST.read_events_stream(spark, str(d), glob="*.parquet")
+    monkeypatch.setattr(ST, "DEDUP_WATERMARK", "10 minutes")
     deduped = ST.dedup_within_watermark(
-        ev.select("user_id", "event_type", "ts", "event_id"),
-        ["user_id", "event_type"], watermark="10 minutes",
+        ev.select("user_id", "event_type", "ts", "event_id"), ["user_id", "event_type"]
     )
     q = (
         deduped.writeStream.outputMode("append").format("memory")
@@ -442,7 +442,7 @@ def test_compact_ann_index_snapshot_equals_view(spark, sf_dir, tmp_path):
     assert not any(c == 1 for c, _, _ in live)  # tombstone resolved away
 
 
-def test_suggest_state_partitions_scales_with_input(spark, sf_dir):
+def test_suggest_state_partitions_scales_with_input(spark, sf_dir, monkeypatch):
     """r16 OPT pin: the state-partition bound derives from measured input
     bytes — 1 partition per 512 KiB (per-partition state compute matters
     before commit overhead: the 32 MiB first cut serialized the
@@ -464,5 +464,5 @@ def test_suggest_state_partitions_scales_with_input(spark, sf_dir):
     sz = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     assert n == max(1, min(cap, -(-sz // (512 << 10))))
     # a big synthetic byte count saturates the cap
-    assert ST.suggest_state_partitions(spark, sf_dir, "*.parquet",
-                                       bytes_per_partition=1) == cap
+    monkeypatch.setattr(ST, "STATE_PARTITION_BYTES", 1)
+    assert ST.suggest_state_partitions(spark, sf_dir, "*.parquet") == cap
